@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -8,18 +9,19 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Squared-L2 distances of one (sub)vector against a DRIVER-SIDE
-  * codebook group, in one primitive loop — the [[CellSims]] sibling
-  * behind [[graft.llm.Quant]]'s PQ training/encode argmin
-  * (`dists[j] = Σ (vec[i] − c_j[i])²`, the same left-to-right fold as
-  * the `zip_with` subDist it replaces; QuantSpec pins parity).
+/** Squared-L2 distances of one (sub)vector against a codebook group of
+  * an executor-broadcast [[CellTable]], in one primitive loop: the
+  * [[CellSims]] sibling behind [[graft.llm.Quant]]'s PQ training and
+  * encode argmin (`dists[j] = Σ (vec[i] − c_j[i])²`, the same
+  * left-to-right fold as the `zip_with` subDist; CellKernelsSpec pins
+  * the parity).
   *
-  * Null semantics mirror the HOF path: null vector or null element →
-  * null; a centroid whose length mismatches → that entry null; a
-  * group id absent from the table → null.
+  * Null semantics: null vector or null element → null; a centroid whose
+  * length mismatches → that entry null; a group id absent from the
+  * table → null.
   */
 case class CellDists(left: Expression, right: Expression,
-                     table: Map[Int, IndexedSeq[(Int, IndexedSeq[Double])]])
+                     table: Broadcast[CellTable])
   extends BinaryExpression with CodegenFallback {
 
   private def elemType: DataType =
@@ -45,17 +47,13 @@ case class CellDists(left: Expression, right: Expression,
 
   override def nullable: Boolean = true
 
-  @transient private lazy val compiled
-      : Map[Int, (GenericArrayData, Array[Array[Double]])] =
-    table.map { case (g, entries) =>
-      g -> (new GenericArrayData(entries.map(_._1).toArray),
-        entries.map(_._2.toArray).toArray)
-    }
+  @transient private lazy val groups = table.value.groups
 
   override protected def nullSafeEval(vecAny: Any, grpAny: Any): Any = {
-    compiled.get(grpAny.asInstanceOf[Int]) match {
+    groups.get(grpAny.asInstanceOf[Int]) match {
       case None => null
-      case Some((cellsAd, cents)) =>
+      case Some(g) =>
+        val cents = g.cents
         val v = vecAny.asInstanceOf[ArrayData]
         val n = v.numElements()
         var i = 0
@@ -81,7 +79,7 @@ case class CellDists(left: Expression, right: Expression,
           }
           j += 1
         }
-        InternalRow(cellsAd, new GenericArrayData(dists))
+        InternalRow(g.cells, new GenericArrayData(dists))
     }
   }
 
@@ -96,8 +94,7 @@ object CellDists {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
   /** Column API. */
-  def dists(vec: Column, grp: Column,
-            table: Map[Int, IndexedSeq[(Int, IndexedSeq[Double])]]): Column =
+  def dists(vec: Column, grp: Column, table: Broadcast[CellTable]): Column =
     ColumnBridge.column(CellDists(
       ColumnBridge.expression(vec), ColumnBridge.expression(grp), table))
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -8,34 +9,32 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Cosine similarities of one vector against a DRIVER-SIDE centroid
-  * group, in one primitive loop — the per-row kernel behind the
-  * literal-quantizer assignment in [[graft.llm.Ivf]].
+/** Cosine similarities of one vector against a centroid group of an
+  * executor-broadcast [[CellTable]], in one primitive loop: the per-row
+  * kernel behind every centroid assignment in [[graft.llm.Ivf]].
   *
-  * `table` maps a group id (level-1 cell for the two-level leaf
-  * assign, 0 for a flat quantizer) to its entries
-  * `(cell, centroid, cn)`, cn being the centroid's precomputed
-  * l2 norm. For a row `(vec, grp)` the result is
-  * `struct(cells: array<int>, sims: array<double>)` where
-  * `sims[j] = Σ vec[i]·c_j[i] / (‖vec‖ · cn_j)` — every fold
-  * left-to-right in double exactly like the
-  * `aggregate(zip_with(...))` built-in formulation it replaces
-  * (IvfSpec determinism tests pin the parity), so the downstream
-  * round(sim, 9) + lowest-cell argmax sees bit-identical inputs.
+  * For a row `(vec, grp)` the result is
+  * `struct(cells: array<int>, sims: array<double>)` over the group's
+  * entries, where `sims[j] = Σ vec[i]·c_j[i] / (‖vec‖ · ‖c_j‖)`. Every
+  * fold runs left-to-right in double exactly like the
+  * `aggregate(zip_with(...))` built-in formulation
+  * ([[graft.llm.Ann.dot]]), so the downstream round(sim, 9) +
+  * lowest-cell argmax sees bit-identical inputs (CellKernelsSpec pins
+  * the parity against the broadcast-join argmax).
   *
-  * Null semantics mirror the HOF path: null vector or null element →
-  * null; a centroid whose length mismatches the vector → that entry's
-  * sim is null; a group id absent from the table → null.
+  * Null semantics: null vector or null element → null; a centroid whose
+  * length mismatches the vector → that entry's sim is null; a group id
+  * absent from the table → null.
   *
-  * Why an expression and not `aggregate` over a typedLit table: HOF
-  * lambdas evaluate interpreted per ELEMENT and re-evaluate embedded
-  * subtrees per reference — measured 13× slower than the broadcast-
-  * join assign it was meant to replace. This kernel is one compiled
-  * k·d loop per row; the argmax stays in (cheap, scalar) SQL so the
-  * round/tiebreak semantics are Spark's own, not a reimplementation.
+  * Why an expression and not `aggregate` over the centroids: HOF lambdas
+  * evaluate interpreted per ELEMENT and re-evaluate embedded subtrees
+  * per reference (measured 13× slower than a broadcast-join assign).
+  * This kernel is one compiled k·d loop per row; the argmax stays in
+  * (cheap, scalar) SQL so the round/tiebreak semantics are Spark's own.
+  * The plan carries only the broadcast handle.
   */
 case class CellSims(left: Expression, right: Expression,
-                    table: Map[Int, IndexedSeq[(Int, IndexedSeq[Double], Double)]])
+                    table: Broadcast[CellTable])
   extends BinaryExpression with CodegenFallback {
 
   private def elemType: DataType =
@@ -61,21 +60,14 @@ case class CellSims(left: Expression, right: Expression,
 
   override def nullable: Boolean = true
 
-  // eval-ready form: shared immutable cell-id ArrayData + primitive
-  // centroid arrays per group (the case-class field keeps IndexedSeq
-  // so equals/hashCode stay structural for plan canonicalization)
-  @transient private lazy val compiled
-      : Map[Int, (GenericArrayData, Array[Array[Double]], Array[Double])] =
-    table.map { case (g, entries) =>
-      g -> (new GenericArrayData(entries.map(_._1).toArray),
-        entries.map(_._2.toArray).toArray,
-        entries.map(_._3).toArray)
-    }
+  @transient private lazy val groups = table.value.groups
 
   override protected def nullSafeEval(vecAny: Any, grpAny: Any): Any = {
-    compiled.get(grpAny.asInstanceOf[Int]) match {
+    groups.get(grpAny.asInstanceOf[Int]) match {
       case None => null
-      case Some((cellsAd, cents, cns)) =>
+      case Some(g) =>
+        val cents = g.cents
+        val cns = g.norms
         val v = vecAny.asInstanceOf[ArrayData]
         val n = v.numElements()
         var i = 0
@@ -105,7 +97,7 @@ case class CellSims(left: Expression, right: Expression,
           }
           j += 1
         }
-        InternalRow(cellsAd, new GenericArrayData(sims))
+        InternalRow(g.cells, new GenericArrayData(sims))
     }
   }
 
@@ -120,8 +112,7 @@ object CellSims {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
   /** Column API. */
-  def sims(vec: Column, grp: Column,
-           table: Map[Int, IndexedSeq[(Int, IndexedSeq[Double], Double)]]): Column =
+  def sims(vec: Column, grp: Column, table: Broadcast[CellTable]): Column =
     ColumnBridge.column(CellSims(
       ColumnBridge.expression(vec), ColumnBridge.expression(grp), table))
 }

@@ -372,7 +372,10 @@ object Pipeline {
     ).toDF("log_id", "start_time", "end_time", "status", "process_type",
       "error_message", "records_processed"))
 
-    val res = RunResult(runId, work.count(),
+    // the left-semi/left-anti split partitions the work list exactly;
+    // counting `work` here instead would re-read it against the view
+    // the sync update just appended to, where no claimed file is Ready
+    val res = RunResult(runId, alreadyRows.length + todoRows.length,
       fileStatus.values.count(_._1 == "success"), nFailed,
       missing.length, recordsIngested, recordsQuarantined)
     work.unpersist()

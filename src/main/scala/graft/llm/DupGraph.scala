@@ -213,17 +213,30 @@ object DupGraph {
     * naive wedge join emits almost nothing because high-degree nodes
     * have tiny OUT-degree under degree orientation. Wedge total is
     * Σ d(d−1)/2 over raw degrees (exact integers).
+    *
+    * EAGER: the whole graph computation runs inside this call. The
+    * one-row result comes back as a local frame (no lineage, no cache
+    * entry), and the intermediates cached for the computation are
+    * released before returning.
     */
   def triangleStats(pairs: DataFrame, src: String = "id1",
                     dst: String = "id2"): DataFrame = {
+    val (out, cached) = trianglePlan(pairs, src, dst)
+    materialize(out, cached)
+  }
+
+  /** [[triangleStats]] before materialization: the lazy one-row frame
+    * and the intermediates it caches, which the caller must unpersist
+    * once the frame has run (PlanAuditSpec audits this plan).
+    */
+  private[graft] def trianglePlan(pairs: DataFrame, src: String,
+                                  dst: String): (DataFrame, Seq[DataFrame]) = {
     // cached: e0 is referenced SIX ways below (deg twice via the
     // union, withDeg, w1/w2 through fwd, the semi-join probe) and the
     // upstream pairs frame can be arbitrarily expensive (q_er_triangles
     // feeds the blocked-levenshtein cascade — uncached, its plan
     // re-expanded per reference to a 3,600-operator tree that both
     // re-planned and re-executed the cascade; r14 measure-first note).
-    // cache() keeps the frame recomputable (unlike localCheckpoint), so
-    // a post-release re-materialization still computes from source.
     val e0 = pairs
       .select(least(col(src), col(dst)).as("a"),
         greatest(col(src), col(dst)).as("b"))
@@ -256,19 +269,23 @@ object DupGraph {
       .agg(count(lit(1)).as("n_triangles"))
     val wtotal = deg.agg(
       sum(expr("d * (d - 1) div 2")).as("n_wedges"))
-    // one-row result: materialize eagerly and release the private
-    // intermediates before returning (the nearDupPairs lifecycle —
-    // r14 advice: a long-lived session calling this repeatedly would
-    // otherwise accumulate pinned e0/fwd storage it can never release)
     val out = tri.crossJoin(broadcast(wtotal))
       .select(col("n_triangles"), col("n_wedges"),
         when(col("n_wedges") > 0,
           round(col("n_triangles") * 3 / col("n_wedges"), 6))
           .otherwise(lit(0.0)).as("clustering"))
-      .cache()
-    out.count() // materialize: every consumer of e0/fwd has now run
-    e0.unpersist(); fwd.unpersist()
-    out
+    (out, Seq(e0, fwd))
+  }
+
+  /** Run a small result frame, release the intermediates cached for it,
+    * and return its rows as a local frame. A long-lived session calling
+    * the graph reports repeatedly then accumulates no storage: neither
+    * the pinned intermediates nor a cached result the caller would have
+    * to unpersist.
+    */
+  private def materialize(out: DataFrame, cached: Seq[DataFrame]): DataFrame = {
+    val rows = try out.collect() finally cached.foreach(_.unpersist())
+    out.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
   /** Integer-exact PageRank in micro-units (rank 1.0 ≡ 1,000,000).
@@ -527,6 +544,10 @@ object DupGraph {
     * engines. Cost: one degree aggregate, one neighbor-degree join
     * (equi, on the edge key), one |bins|-row summary; Σdeg arithmetic
     * stays in Longs.
+    *
+    * EAGER, like [[triangleStats]]: the profile is computed inside this
+    * call and returned as a local |bins|-row frame, with the cached
+    * intermediates already released.
     */
   def degreeProfile(edges: DataFrame, src: String = "src",
                     dst: String = "dst"): DataFrame = {
@@ -543,17 +564,12 @@ object DupGraph {
     val nbr = sym
       .join(deg.select(col("a").as("b"), col("deg").as("_dd")), Seq("b"))
       .groupBy("a").agg(sum("_dd").as("_nds"))
-    // bin-count-sized result: materialize eagerly and release the
-    // private caches before returning (same lifecycle as triangleStats)
     val out = deg.join(nbr, Seq("a"))
       .groupBy((length(bin(col("deg"))) - 1).cast("long").as("deg_bin"))
       .agg(count(lit(1)).cast("long").as("n_vertices"),
         min("deg").cast("long").as("deg_min"),
         max("deg").cast("long").as("deg_max"),
         expr("sum(_nds) div sum(deg)").cast("long").as("mean_nbr_deg"))
-      .cache()
-    out.count() // materialize: every consumer of sym/deg has now run
-    sym.unpersist(); deg.unpersist()
-    out
+    materialize(out, Seq(sym, deg))
   }
 }

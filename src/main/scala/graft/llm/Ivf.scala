@@ -1,6 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.{CellSims, CellTable}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) ANN index: a coarse k-means quantizer partitions
@@ -38,72 +40,22 @@ object Ivf {
 
   private val Quantum = 1000000.0 // centroid-mean quantization (1e-6)
 
-  /** Nearest centroid per vector: broadcast centroids (with their norms
-    * precomputed once), map-side similarity, then a partial/final
-    * max_by aggregate — no row_number window, so no sort and no extra
-    * shuffle beyond the groupBy itself.
-    */
-  private def assign(df: DataFrame, idCol: String, vecCol: String,
-                     centroids: DataFrame): DataFrame = {
-    val cents = broadcast(centroids
-      .withColumn("_cn", Ann.l2norm(col("centroid"))))
-    df.select(col(idCol), col(vecCol), Ann.l2norm(col(vecCol)).as("_vn"))
-      .join(cents)
-      .withColumn("_sim", round(
-        Ann.dot(col(vecCol), col("centroid")) / (col("_vn") * col("_cn")), 9))
-      .groupBy(col(idCol))
-      // argmax: highest _sim, ties to the lowest cell (negate for max_by)
-      .agg(max_by(col("cell"),
-        struct(col("_sim"), (-col("cell")).as("_nc"))).as("cell"))
-  }
-
-  /** Recompute centroids as the per-cell quantized mean vector:
-    * exact integer sums of floor(v·10⁶), one double division — the
-    * result is identical for any partitioning / aggregation order.
-    */
-  private def recompute(df: DataFrame, idCol: String, vecCol: String,
-                        assignments: DataFrame): DataFrame =
-    df.join(assignments, idCol)
-      .select(col("cell"), posexplode(col(vecCol)).as(Seq("i", "v")))
-      .groupBy("cell", "i")
-      .agg((sum(floor(col("v").cast("double") * lit(Quantum)).cast("long"))
-        .cast("double") / (lit(Quantum) * count(lit(1)))).as("m"))
-      .groupBy("cell")
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
-        x => x.getField("m")).as("centroid"))
-
   // -------------------------------------------------------------------
-  // Literal-quantizer assignment (r14 optimization): every Lloyd loop
-  // already materializes its centroids on the driver (lineage
-  // truncation), yet [[assign]] shipped them back as a DataFrame and
-  // paid a BroadcastNestedLoopJoin (k× row inflation) plus a groupBy-
-  // argmax Exchange PER PASS — at bench scale that was 2 extra stages
-  // and one extra corpus materialization per Lloyd iteration, and the
-  // fused recompute below also drops [[recompute]]'s join back onto
-  // the corpus (a third scan). The literal form computes the SAME
-  // argmax as ONE projection expression: fold over a typedLit centroid
-  // table, same Ann.dot fold, same round(sim, 9), ties to the lowest
-  // cell (the ascending fold keeps the first best — exactly max_by on
-  // (sim, -cell)), NaN ranking greatest like Spark's double ordering.
-  // Guarded by a plan-size budget: past ~2 MB of centroid doubles the
-  // table rides the task binary, so big quantizers (fitForCellSize at
-  // huge n) keep the broadcast-join path — same math, same results.
+  // Centroid assignment, one path for every quantizer size. Each Lloyd
+  // loop materializes its centroids on the driver anyway (lineage
+  // truncation), so they reach the executors as a broadcast
+  // [[CellTable]] and the argmax is ONE projection: a [[CellSims]]
+  // kernel (the Ann.dot fold, compiled) plus a scalar fold over
+  // round(sim, 9), ties to the lowest cell (the ascending fold keeps the
+  // first best — exactly max_by on (sim, -cell)), NaN ranking greatest
+  // like Spark's double ordering. No join, no argmax Exchange, and the
+  // plan carries only the broadcast handle, so the task binary stays
+  // the same size however large k·d grows. The fused Lloyd step below
+  // also needs no join back onto the corpus: each iteration is one
+  // corpus pass with one aggregation exchange.
   // -------------------------------------------------------------------
 
-  // ~2 MB of centroid doubles — shared with Quant's codebook paths so
-  // the literal-plan budget has exactly one definition (r14 advice)
-  private[llm] val LitDoubleBudget = 262144L
-
-  private def fitsLit(cents: Seq[(Int, Seq[Double])]): Boolean =
-    cents.iterator.map(_._2.size + 2L).sum <= LitDoubleBudget
-
-  /** Driver-side replica of [[Ann.l2norm]] — same left-to-right IEEE
-    * fold, so literal-path norms are bit-identical to the column form.
-    */
-  private def l2normHost(v: Seq[Double]): Double =
-    math.sqrt(v.foldLeft(0.0)((a, x) => a + x * x))
-
-  /** The shared argmax fold over a [[graft.functions.CellSims]] result
+  /** The shared argmax fold over a [[CellSims]] result
     * (`struct(cells, sims)` — the per-group similarities, computed in
     * one compiled loop): highest round(sim, 9), ties to the FIRST
     * (lowest-cell) entry; NaN sims adopt over non-NaN (Spark's double
@@ -131,68 +83,53 @@ object Ivf {
       acc => c(acc))
   }
 
-  private def litEntries(cents: Seq[(Int, Seq[Double])]): IndexedSeq[(Int, IndexedSeq[Double], Double)] =
-    cents.sortBy(_._1)
-      .map { case (c, arr) =>
-        val a = arr.toIndexedSeq
-        (c, a, l2normHost(a))
-      }.toIndexedSeq
+  /** A flat quantizer's table rows: every centroid in group 0. */
+  private def flat(cents: Seq[(Int, Seq[Double])]): Seq[(Int, Int, Seq[Double])] =
+    cents.map { case (cell, c) => (0, cell, c) }
 
-  private def flatTable(cents: Seq[(Int, Seq[Double])]): Map[Int, IndexedSeq[(Int, IndexedSeq[Double], Double)]] =
-    Map(0 -> litEntries(cents))
-
-  /** [[assign]] over a driver-side centroid table: a pure projection
-    * (CellSims kernel + scalar argmax fold — no join, no Exchange).
-    * Rows whose sims are all null are dropped. For k = 0 this mirrors
-    * the join path (inner join against an empty centroid table). For a
-    * NULL VECTOR the paths differ: the join path's max_by over
-    * struct(null _sim, -cell) still returns the LOWEST cell (struct
-    * itself non-null), where this path drops the row. Null vectors are
-    * an upstream data error — every registered corpus is non-null —
-    * so the drop stands; do not feed null vectors through either path
-    * and expect parity (r14 advice).
+  /** Nearest centroid per row: adds `cellCol`, the argmax over the
+    * centroid group `grp` of `table`, as an ATTRIBUTE (an expression in
+    * the same select as a downstream posexplode would land in the
+    * Project ABOVE the Generate and re-run the kernel once per exploded
+    * element). Rows with no argmax are dropped: a null vector, a null
+    * element, a group absent from the table, or an empty group.
     */
-  private def assignLit(df: DataFrame, idCol: String, vecCol: String,
-                        cents: Seq[(Int, Seq[Double])]): DataFrame =
-    df.withColumn("_cs",
-        graft.functions.CellSims.sims(col(vecCol), lit(0), flatTable(cents)))
-      .select(col(idCol), argmaxFold(col("_cs")).as("cell"))
-      .filter(col("cell").isNotNull)
+  private def labelCells(df: DataFrame, vecCol: String, grp: Column,
+                         table: Broadcast[CellTable],
+                         cellCol: String): DataFrame =
+    df.withColumn("_cs", CellSims.sims(col(vecCol), grp, table))
+      .withColumn(cellCol, argmaxFold(col("_cs")))
+      .filter(col(cellCol).isNotNull)
+      .drop("_cs")
 
-  /** One fused Lloyd sweep over a driver-side centroid table: assign
-    * (projection) + quantized-mean recompute in ONE corpus pass with a
-    * single aggregation exchange — returns the new centroid rows
-    * densely renumbered in cell order, exactly like
-    * `toCentroidDf(recompute(...).orderBy("cell").collect())`.
+  /** Per-cell quantized mean vectors (`cell`, `centroid`) of a labelled
+    * frame: exact integer sums of floor(v·10⁶), one double division —
+    * identical for any partitioning / aggregation order.
     */
-  private def lloydStepLit(df: DataFrame, vecCol: String,
-                           cents: Seq[(Int, Seq[Double])]): IndexedSeq[(Int, Seq[Double])] =
-    df.withColumn("_cs",
-        graft.functions.CellSims.sims(col(vecCol), lit(0), flatTable(cents)))
-      // cell becomes an ATTRIBUTE before the explode — an expression in
-      // the same select as posexplode lands in the Project ABOVE the
-      // Generate and re-runs the kernel once per exploded element
-      .withColumn("cell", argmaxFold(col("_cs")))
-      .filter(col("cell").isNotNull)
-      .select(col("cell"), posexplode(col(vecCol)).as(Seq("i", "v")))
-      .groupBy("cell", "i")
+  private def cellMeans(labelled: DataFrame, keys: Seq[String],
+                        vecCol: String): DataFrame =
+    labelled
+      .select(keys.map(col) :+ posexplode(col(vecCol)).as(Seq("i", "v")): _*)
+      .groupBy((keys :+ "i").map(col): _*)
       .agg((sum(floor(col("v").cast("double") * lit(Quantum)).cast("long"))
         .cast("double") / (lit(Quantum) * count(lit(1)))).as("m"))
-      .groupBy("cell")
+      .groupBy(keys.map(col): _*)
       .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
         x => x.getField("m")).as("centroid"))
-      .orderBy("cell").select("centroid")
-      .collect().toIndexedSeq.zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Double](0)) }
 
-  /** Train: deterministic seeding (an md5-strided sample — no global
-    * window/sort over the corpus, and portable to any engine with md5)
-    * then `iters` Lloyd iterations. Centroids are k·d doubles, so each
-    * iteration materializes them to the driver — this truncates the
-    * lineage (otherwise iteration i's plan re-executes every previous
-    * assign/recompute) and keeps the per-iteration cost at exactly one
-    * corpus pass.
+  /** One fused Lloyd sweep: assign (projection) + quantized-mean
+    * recompute in ONE corpus pass with a single aggregation exchange —
+    * returns the new centroid rows densely renumbered in cell order.
     */
+  private def lloydStep(df: DataFrame, vecCol: String,
+                        cents: Seq[(Int, Seq[Double])]): IndexedSeq[(Int, Seq[Double])] =
+    CellTable.scoped(df.sparkSession, flat(cents)) { table =>
+      cellMeans(labelCells(df, vecCol, lit(0), table, "cell"), Seq("cell"), vecCol)
+        .orderBy("cell").select("centroid")
+        .collect().toIndexedSeq.zipWithIndex
+        .map { case (r, i) => (i, r.getSeq[Double](0)) }
+    }
+
   /** [[fit]] with `k` sized FOR THE CORPUS instead of fixed: k =
     * max(4, n / targetCellSize). This is the scale knob that keeps
     * [[knnGraph]]/[[hardNegatives]] linear — their candidate volume is
@@ -209,17 +146,23 @@ object Ivf {
     fit(df, idCol, vecCol, k, iters)
   }
 
+  /** Train: deterministic seeding (an md5-strided sample — no global
+    * window/sort over the corpus, and portable to any engine with md5)
+    * then `iters` Lloyd iterations ([[fitCentroidRows]]), then one
+    * assignment pass over the corpus, cached as the index's
+    * `assignments`.
+    */
   def fit(df: DataFrame, idCol: String, vecCol: String,
           k: Int = 16, iters: Int = 2): Index = {
+    val spark = df.sparkSession
     val rows = fitCentroidRows(df, idCol, vecCol, k, iters)
-    val centroids = toCentroidDf(df.sparkSession, rows)
-    val asg =
-      if (fitsLit(rows)) assignLit(df, idCol, vecCol, rows)
-      else assign(df, idCol, vecCol, centroids)
-    Index(centroids, asg.cache())
+    val asg = labelCells(df, vecCol, lit(0),
+        CellTable.broadcast(spark, flat(rows)), "cell")
+      .select(col(idCol), col("cell"))
+    Index(toCentroidDf(spark, rows), asg.cache())
   }
 
-  private def toCentroidDf(spark: org.apache.spark.sql.SparkSession,
+  private def toCentroidDf(spark: SparkSession,
                            rows: Seq[(Int, Seq[Double])]): DataFrame = {
     import spark.implicits._
     rows.toDF("cell", "centroid")
@@ -229,9 +172,11 @@ object Ivf {
     * returning the driver-side centroid rows without assigning (or
     * caching) the corpus. [[fit]] layers the final assignment on top;
     * [[fitTwoLevel]] runs this on a bounded sample where a full-corpus
-    * assignment would be wasted work. Each iteration is ONE fused
-    * assign+recompute pass ([[lloydStepLit]]) when the quantizer fits
-    * the literal budget, else the join-based pair.
+    * assignment would be wasted work. Centroids are k·d doubles, so
+    * each iteration ([[lloydStep]]) materializes them to the driver:
+    * this truncates the lineage (otherwise iteration i's plan
+    * re-executes every previous one) and keeps the per-iteration cost
+    * at exactly one corpus pass.
     */
   private def fitCentroidRows(df: DataFrame, idCol: String, vecCol: String,
                               k: Int, iters: Int): IndexedSeq[(Int, Seq[Double])] = {
@@ -249,16 +194,7 @@ object Ivf {
 
     var it = 0
     while (it < iters) {
-      cents =
-        if (fitsLit(cents)) lloydStepLit(df, vecCol, cents)
-        else {
-          val centroids = toCentroidDf(df.sparkSession, cents)
-          val assignments = assign(df, idCol, vecCol, centroids)
-          recompute(df, idCol, vecCol, assignments)
-            .orderBy("cell").select("centroid")
-            .collect().toIndexedSeq.zipWithIndex
-            .map { case (r, i) => (i, r.getSeq[Double](0)) }
-        }
+      cents = lloydStep(df, vecCol, cents)
       it += 1
     }
     cents
@@ -333,25 +269,13 @@ object Ivf {
 
     val l1Rows = fitCentroidRows(sample, idCol, vecCol, k1, iters)
     val l1Cents = toCentroidDf(spark, l1Rows).withColumnRenamed("cell", "l1")
-    // sample → level-1 cell, fixed for the whole level-2 training —
-    // a pure projection under the literal budget (no join, no argmax
-    // Exchange), the broadcast-join [[assign]] otherwise.
+    val l1Table = CellTable.broadcast(spark, flat(l1Rows))
+    // sample → level-1 cell, fixed for the whole level-2 training;
     // every level-2 iteration re-reads the sample with its fixed l1
-    // label; cache it for the training loop, released before return
-    val sampleL1 =
-      (if (fitsLit(l1Rows))
-        sample.withColumn("_cs",
-            graft.functions.CellSims.sims(col(vecCol), lit(0), flatTable(l1Rows)))
-          .select(col(idCol),
-            transform(col(vecCol), x => x.cast("double")).as("_v"),
-            argmaxFold(col("_cs")).as("l1"))
-          .filter(col("l1").isNotNull)
-      else sample
-        .select(col(idCol),
-          transform(col(vecCol), x => x.cast("double")).as("_v"))
-        .join(assign(sample, idCol, vecCol,
-            l1Cents.withColumnRenamed("l1", "cell"))
-          .withColumnRenamed("cell", "l1"), idCol))
+    // label, so cache it for the training loop, released before return
+    val sampleL1 = labelCells(sample, vecCol, lit(0), l1Table, "l1")
+      .select(col(idCol),
+        transform(col(vecCol), x => x.cast("double")).as("_v"), col("l1"))
       .cache()
 
     // seeds: per level-1 cell, the k2 lowest-id sample members
@@ -365,39 +289,18 @@ object Ivf {
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
         .sortBy(t => (t._1, t._2))
 
-    // the per-l1 sub-quantizer as the CellSims group table: l1 → its
-    // (sub, centroid, cn) entries ascending — the kernel ranks only
-    // the OWN cell's k2 subs (same work as the join it replaces), same
-    // argmax rule (round(sim,9), ties to the lowest sub)
-    def subTable(rows: Seq[(Int, Int, Seq[Double])]): Map[Int, IndexedSeq[(Int, IndexedSeq[Double], Double)]] =
-      rows.groupBy(_._1).view.mapValues(rs =>
-        rs.sortBy(_._2).map { case (_, s, c) =>
-          val a = c.toIndexedSeq
-          (s, a, l2normHost(a))
-        }.toIndexedSeq).toMap
-
     var it = 0
     while (it < iters) {
-      // fused assign+recompute: quantized per-(l1, sub) means in one
-      // sample pass, then dead subs renumbered per cell (driver-side)
-      val recomputed = sampleL1
-        .withColumn("_cs",
-          graft.functions.CellSims.sims(col("_v"), col("l1"),
-            subTable(subRows)))
-        // attribute-before-explode, as in lloydStepLit
-        .withColumn("sub", argmaxFold(col("_cs")))
-        .filter(col("sub").isNotNull)
-        .select(col("l1"), col("sub"),
-          posexplode(col("_v")).as(Seq("i", "v")))
-        .groupBy("l1", "sub", "i")
-        .agg((sum(floor(col("v") * lit(Quantum)).cast("long"))
-          .cast("double") / (lit(Quantum) * count(lit(1)))).as("m"))
-        .groupBy("l1", "sub")
-        .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
-          x => x.getField("m")).as("centroid"))
-        .collect().toIndexedSeq
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-        .sortBy(t => (t._1, t._2))
+      // fused assign+recompute over the per-l1 sub-quantizer (group =
+      // l1, so the kernel ranks only the OWN cell's k2 subs): quantized
+      // per-(l1, sub) means in one sample pass, then dead subs
+      // renumbered per cell (driver-side)
+      val recomputed = CellTable.scoped(spark, subRows) { table =>
+        cellMeans(labelCells(sampleL1, "_v", col("l1"), table, "sub"),
+            Seq("l1", "sub"), "_v")
+          .collect().toIndexedSeq
+          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
+      }
       subRows = recomputed.groupBy(_._1).toIndexedSeq.sortBy(_._1).flatMap {
         case (l1, rows) => rows.sortBy(_._2).zipWithIndex
           .map { case ((_, _, c), s) => (l1, s, c) }
@@ -416,48 +319,16 @@ object Ivf {
       .map { case ((l1, _, c), cell) => (cell, l1, c) }
     val leafCents = leafHost.toDF("cell", "l1", "centroid")
 
-    // hierarchical corpus assign as one projection when the WHOLE leaf
-    // table fits the literal budget (it is driver-side either way)
-    val asg =
-      if (fitsLit(l1Rows) && fitsLit(leafHost.map(r => (r._1, r._3)))) {
-        val leafTable = leafHost.groupBy(_._2).view.mapValues(rs =>
-          rs.sortBy(_._1).map { case (cell, _, c) =>
-            val a = c.toIndexedSeq
-            (cell, a, l2normHost(a))
-          }.toIndexedSeq).toMap
-        df.withColumn("_cs1",
-            graft.functions.CellSims.sims(col(vecCol), lit(0),
-              flatTable(l1Rows)))
-          .withColumn("_l1", argmaxFold(col("_cs1")))
-          .withColumn("_cs2",
-            graft.functions.CellSims.sims(col(vecCol), col("_l1"), leafTable))
-          .select(col(idCol), argmaxFold(col("_cs2")).as("cell"))
-          .filter(col("cell").isNotNull)
-      } else assignTwoLevel(df, idCol, vecCol, l1Cents, leafCents)
+    // hierarchical corpus assign, two chained projections: nearest
+    // level-1 cell (k1 comparisons), then nearest leaf within it (group
+    // = l1, k2 comparisons, lowest-global-cell tiebreak)
+    val leafTable = CellTable.broadcast(spark,
+      leafHost.map { case (cell, l1, c) => (l1, cell, c) })
+    val asg = labelCells(labelCells(df, vecCol, lit(0), l1Table, "_l1"),
+        vecCol, col("_l1"), leafTable, "cell")
+      .select(col(idCol), col("cell"))
 
     Index2(l1Cents, leafCents, asg.cache())
-  }
-
-  /** Hierarchical assignment: nearest level-1 cell (k1 comparisons,
-    * the [[assign]] argmax rule), then nearest leaf within that cell
-    * (k2 comparisons, lowest-global-cell tiebreak).
-    */
-  private def assignTwoLevel(df: DataFrame, idCol: String, vecCol: String,
-                             l1Cents: DataFrame,
-                             leafCents: DataFrame): DataFrame = {
-    val a1 = assign(df, idCol, vecCol,
-        l1Cents.withColumnRenamed("l1", "cell"))
-      .withColumnRenamed("cell", "l1")
-    val leafB = broadcast(leafCents
-      .withColumn("_cn", Ann.l2norm(col("centroid"))))
-    df.select(col(idCol), col(vecCol), Ann.l2norm(col(vecCol)).as("_vn"))
-      .join(a1, idCol)
-      .join(leafB, "l1")
-      .withColumn("_sim", round(
-        Ann.dot(col(vecCol), col("centroid")) / (col("_vn") * col("_cn")), 9))
-      .groupBy(col(idCol))
-      .agg(max_by(col("cell"),
-        struct(col("_sim"), (-col("cell")).as("_nc"))).as("cell"))
   }
 
   /** [[knnGraph]] over a two-level index: probe nprobe1 level-1 cells
@@ -525,42 +396,28 @@ object Ivf {
   }
 
   /** Public face of the nearest-centroid assignment — (idCol, cell),
-    * one row per vector. The streaming ingest
-    * ([[graft.streaming.AnnIndexStream]]) labels each arriving vector
-    * with its cell through this; same argmax rule as training. A
-    * quantizer under the literal budget (it was about to be
-    * driver-collected for the broadcast anyway) rides the
-    * zero-shuffle [[assignLit]] projection.
+    * one row per vector, the same argmax rule as training. The
+    * centroids frame is collected to the driver and broadcast as the
+    * [[CellSims]] table; the assignment is one projection over `df`.
     */
   def assignCells(df: DataFrame, idCol: String, vecCol: String,
-                  centroids: DataFrame): DataFrame = {
-    val rows = collectCentroids(centroids)
-    if (fitsLit(rows)) assignLit(df, idCol, vecCol, rows)
-    else assign(df, idCol, vecCol, centroids)
-  }
-
-  private def collectCentroids(centroids: DataFrame): IndexedSeq[(Int, Seq[Double])] =
-    centroids
-      .select(col("cell").cast("int").as("cell"), col("centroid"))
-      .collect().toIndexedSeq
-      .map(r => (r.getInt(0), r.getSeq[Double](1)))
+                  centroids: DataFrame): DataFrame =
+    withCells(df, idCol, vecCol, centroids).select(col(idCol), col("cell"))
 
   /** [[assignCells]] keeping the vector column alongside —
-    * (idCol, vecCol, cell) in ONE projection pass under the literal
-    * budget (no join back onto the batch), the
-    * [[graft.streaming.AnnIndexStream.applyBatch]] ingest shape.
+    * (idCol, vecCol, cell) in ONE projection pass with no join back onto
+    * the batch: the [[graft.streaming.AnnIndexStream.applyBatch]]
+    * ingest shape.
     */
   private[graft] def withCells(df: DataFrame, idCol: String, vecCol: String,
                                centroids: DataFrame): DataFrame = {
-    val rows = collectCentroids(centroids)
-    if (fitsLit(rows))
-      df.withColumn("_cs",
-          graft.functions.CellSims.sims(col(vecCol), lit(0), flatTable(rows)))
-        .withColumn("cell", argmaxFold(col("_cs")))
-        .filter(col("cell").isNotNull)
-        .select(col(idCol), col(vecCol), col("cell"))
-    else df.select(col(idCol), col(vecCol))
-      .join(assign(df, idCol, vecCol, centroids), idCol)
+    val rows = centroids
+      .select(col("cell").cast("int").as("cell"), col("centroid"))
+      .collect().toIndexedSeq
+      .map(r => (r.getInt(0), r.getSeq[Double](1)))
+    labelCells(df, vecCol, lit(0),
+        CellTable.broadcast(df.sparkSession, flat(rows)), "cell")
+      .select(col(idCol), col(vecCol), col("cell"))
   }
 
   /** Search: probe the `nprobe` nearest cells per query (round(sim,9) +

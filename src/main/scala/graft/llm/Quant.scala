@@ -1,5 +1,7 @@
 package graft.llm
 
+import graft.functions.{CellDists, CellTable}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -88,25 +90,16 @@ object Quant {
         (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
       lit(0.0d), (acc, x) => acc + x), 9)
 
-  /** Nearest codebook cell per (vector, subspace): broadcast codebooks,
-    * min_by on (dist, cell) — ties to the smaller cell.
-    */
-  private def pqAssign(sf: DataFrame, idCol: String,
-                       codebooks: DataFrame): DataFrame =
-    sf.join(broadcast(codebooks), "sub")
-      .withColumn("_d", subDist(col("subvec"), col("centroid")))
-      .groupBy(col(idCol), col("sub"))
-      .agg(min_by(col("cell"), struct(col("_d"), col("cell"))).as("cell"))
-
   // -------------------------------------------------------------------
-  // Literal-codebook assignment (r14 optimization, the Ivf literal-
-  // quantizer recipe): codebooks are m·k rows and driver-side by
-  // contract, so the argmin is ONE projection — a CellDists kernel
-  // (compiled Σ(x−y)² loop, bit-identical to subDist's zip_with fold)
-  // plus a cheap scalar fold replicating min_by on (round(d,9), cell):
-  // lowest distance, ties to the lowest cell (ascending fold keeps the
-  // first best), NaN never beating a real distance, all-null → null —
-  // no broadcast join, no groupBy(id, sub) Exchange per training pass.
+  // Codebook assignment, the Ivf recipe: codebooks are m·k rows and
+  // driver-side by contract, so they reach the executors as a broadcast
+  // CellTable (group = subspace) and the argmin is ONE projection — a
+  // CellDists kernel (compiled Σ(x−y)² loop, bit-identical to subDist's
+  // zip_with fold) plus a cheap scalar fold replicating min_by on
+  // (round(d,9), cell): lowest distance, ties to the lowest cell (the
+  // ascending fold keeps the first best), NaN never beating a real
+  // distance, all-null → null. No join, no groupBy(id, sub) Exchange
+  // per training pass, and only the broadcast handle in the plan.
   // -------------------------------------------------------------------
 
   private def argminFold(cd: Column): Column = {
@@ -128,26 +121,14 @@ object Quant {
       acc => c(acc))
   }
 
-  /** The Ivf literal-plan budget applied to codebook rows — one shared
-    * constant (r14 advice), one size rule for every literal call site.
+  /** Nearest codebook cell per (vector, subspace) row of a [[subframe]]:
+    * adds `cell` as an ATTRIBUTE before any downstream explode (the
+    * Ivf.labelCells Generate-projection rule). A subvector with a null
+    * element has no argmin and gets no row, so its vector gets no code
+    * for that subspace.
     */
-  private def fitsLit(rows: Seq[(Int, Int, Seq[Double])]): Boolean =
-    rows.iterator.map(_._3.size + 2L).sum <= Ivf.LitDoubleBudget
-
-  private def codebookTable(rows: Seq[(Int, Int, Seq[Double])]): Map[Int, IndexedSeq[(Int, IndexedSeq[Double])]] =
-    rows.groupBy(_._1).view.mapValues(rs =>
-      rs.sortBy(_._2).map { case (_, cell, c) => (cell, c.toIndexedSeq) }
-        .toIndexedSeq).toMap
-
-  /** [[pqAssign]] over driver-side codebook rows: a pure projection.
-    * `cellCol` becomes an ATTRIBUTE before any downstream explode (the
-    * Ivf.lloydStepLit Generate-projection rule).
-    */
-  private def pqAssignLit(sf: DataFrame,
-                          rows: Seq[(Int, Int, Seq[Double])]): DataFrame =
-    sf.withColumn("_cd",
-        graft.functions.CellDists.dists(col("subvec"), col("sub"),
-          codebookTable(rows)))
+  private def nearestCodes(sf: DataFrame, table: Broadcast[CellTable]): DataFrame =
+    sf.withColumn("_cd", CellDists.dists(col("subvec"), col("sub"), table))
       .withColumn("cell", argminFold(col("_cd")))
       .filter(col("cell").isNotNull)
       .drop("_cd")
@@ -181,24 +162,17 @@ object Quant {
     val sf = subframe(df, idCol, vecCol, m, w)
     var it = 0
     while (it < iters) {
-      // fused literal assign + quantized-mean recompute: one corpus
-      // pass per iteration, one aggregation Exchange (was: broadcast
-      // join + argmin Exchange + join back + aggregate). The literal
-      // path is budget-guarded like every other call site (r14
-      // advice): an oversized m·k·w codebook would otherwise ride
-      // every task binary — the broadcast-join assign (re-joined to
-      // recover subvec) is the same math.
-      val assigned =
-        if (fitsLit(cents)) pqAssignLit(sf, cents)
-        else pqAssign(sf, idCol, cents.toDF("sub", "cell", "centroid"))
-          .join(sf, Seq(idCol, "sub"))
-      val rec = assigned
-        .select(col("sub"), col("cell"),
-          posexplode(col("subvec")).as(Seq("j", "v")))
-        .groupBy("sub", "cell", "j")
-        .agg((sum(floor(col("v").cast("double") * lit(1000000.0d)).cast("long"))
-          .cast("double") / (lit(1000000.0d) * count(lit(1)))).as("mn"))
-        .collect()
+      // fused assign + quantized-mean recompute: one corpus pass per
+      // iteration, one aggregation Exchange
+      val rec = CellTable.scoped(spark, cents) { table =>
+        nearestCodes(sf, table)
+          .select(col("sub"), col("cell"),
+            posexplode(col("subvec")).as(Seq("j", "v")))
+          .groupBy("sub", "cell", "j")
+          .agg((sum(floor(col("v").cast("double") * lit(1000000.0d)).cast("long"))
+            .cast("double") / (lit(1000000.0d) * count(lit(1)))).as("mn"))
+          .collect()
+      }
       cents = rec.groupBy(_.getInt(0)).toSeq.flatMap { case (s, rs) =>
         rs.groupBy(_.getInt(1)).toSeq.sortBy(_._1).zipWithIndex.map {
           case ((_, crs), denseCell) =>
@@ -211,11 +185,9 @@ object Quant {
     cents.toDF("sub", "cell", "centroid")
   }
 
-  /** Encode: each vector's m codebook cells, ordered by subspace.
-    * Codebooks are m·k rows (always broadcastable by contract), so the
-    * argmin runs on the literal path — collected once, one projection,
-    * one groupBy(id) Exchange; the join path stays as the fallback for
-    * an oversized table (same math either way).
+  /** Encode: each vector's m codebook cells, ordered by subspace. The
+    * codebooks are collected once and broadcast; the argmin is one
+    * projection, then one groupBy(id) Exchange.
     */
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
                codebooks: DataFrame, m: Int): DataFrame = {
@@ -226,11 +198,7 @@ object Quant {
     val rows = codebooks.select(col("sub"), col("cell"), col("centroid"))
       .collect().toIndexedSeq
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-    val assigned =
-      if (fitsLit(rows))
-        pqAssignLit(sf, rows).select(col(idCol), col("sub"), col("cell"))
-      else pqAssign(sf, idCol, codebooks)
-    assigned
+    nearestCodes(sf, CellTable.broadcast(df.sparkSession, rows))
       .groupBy(col(idCol))
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("cell")))),
         x => x.getField("cell")).as("codes"))

@@ -64,7 +64,7 @@ object AnnIndexStream {
     val dest = s"${dataDir(storeDir)}/ingest=$tag"
     if (Fs.exists(dest, conf)) return // re-delivered batch: directory IS the marker
     // one projection pass: (id, vec, cell) without joining the cells
-    // back onto the batch (Ivf.withCells — literal quantizer path)
+    // back onto the batch (Ivf.withCells — broadcast centroid table)
     val assigned = Ivf.withCells(batch, idCol, vecCol, centroids)
     val staging = s"$storeDir/.staging_$tag"
     // cluster by cell before the dynamic-partition write: without it

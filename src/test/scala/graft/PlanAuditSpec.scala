@@ -18,26 +18,50 @@ class PlanAuditSpec extends SparkSpec {
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  /** Physical-plan node names, walking INTO adaptive plans, query
-    * stages and cached relations. Node-level counting is immune to the
+  /** Physical-plan nodes of `df`'s FINAL plan, walking INTO adaptive
+    * plans, query stages and cached relations. The frame is run first:
+    * before execution an AdaptiveSparkPlanExec's executedPlan is the
+    * initial, pre-AQE plan. Node-level counting is immune to the
     * AdaptiveSparkPlan toString printing the same operator twice (once
     * under "== Final Plan ==", once under "== Initial Plan =="), which
-    * double-counts substring matches the moment a frame is cached
-    * (triangleStats eagerly materializes since the r15 storage-leak
-    * fix).
+    * double-counts substring matches.
     */
-  private def nodeNames(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+  private def planNodes(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    def walk(p: SparkPlan): Seq[String] =
-      p.nodeName +: (p match {
+    def walk(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p match {
         case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
         case q: QueryStageExec => walk(q.plan)
         case t: InMemoryTableScanExec => walk(t.relation.cachedPlan)
         case o => o.children.flatMap(walk)
       })
+    df.collect()
     walk(df.queryExecution.executedPlan)
+  }
+
+  private def nodeNames(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    planNodes(df).map(_.nodeName)
+
+  /** The one centroid-assignment path, pinned on its final plan: the
+    * `kernel` expression (cell_sims / cell_dists) is present, and there
+    * is no BroadcastNestedLoopJoin and no max_by/min_by argmax aggregate.
+    */
+  private def assertKernelAssign(df: org.apache.spark.sql.DataFrame,
+                                 kernel: String): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    val nodes = planNodes(df)
+    val names = nodes.map(_.nodeName)
+    val exprNames = nodes.flatMap(_.expressions.flatMap(_.collect {
+      case a: AggregateExpression => a.aggregateFunction.prettyName
+      case e => e.prettyName
+    }))
+    assert(exprNames.contains(kernel), names.mkString("\n"))
+    assert(!names.contains("BroadcastNestedLoopJoin"), names.mkString("\n"))
+    assert(!exprNames.exists(n => n == "max_by" || n == "min_by"),
+      exprNames.distinct.mkString(", "))
   }
 
   test("langId's documents scan prunes to (doc_id, text)") {
@@ -88,13 +112,33 @@ class PlanAuditSpec extends SparkSpec {
     // triangleStats: the wedge/closure joins must be equi; the ONE
     // nested-loop allowed is the broadcast single-row (count × wedges)
     // attach at the very end — the accepted 1-row-cross pattern
-    val tri = graft.llm.DupGraph.triangleStats(pairs)
-    val triNodes = nodeNames(tri)
-    assert(triNodes.count(_ == "BroadcastNestedLoopJoin") <= 1,
-      triNodes.mkString("\n"))
-    assert(!triNodes.contains("CartesianProduct"), triNodes.mkString("\n"))
-    val triPlan = planOf(tri)
-    assert(triPlan.contains("LeftSemi"), s"closure must be a semi join:\n$triPlan")
+    // (triangleStats returns collected rows; audit its lazy plan)
+    val (tri, cached) = graft.llm.DupGraph.trianglePlan(pairs, "id1", "id2")
+    try {
+      val triNodes = nodeNames(tri)
+      assert(triNodes.count(_ == "BroadcastNestedLoopJoin") <= 1,
+        triNodes.mkString("\n"))
+      assert(!triNodes.contains("CartesianProduct"), triNodes.mkString("\n"))
+      val triPlan = planOf(tri)
+      assert(triPlan.contains("LeftSemi"), s"closure must be a semi join:\n$triPlan")
+    } finally cached.foreach(_.unpersist())
+  }
+
+  test("Ivf.fit / Ivf.assignCells / Quant.pqEncode assign through the " +
+    "broadcast-table kernels: no nested-loop join, no argmax aggregate") {
+    // a scanned corpus: over an in-memory Seq the optimizer would fold
+    // the whole projection into a LocalTableScan
+    val emb = Tables(spark, sfDir).embeddings
+    val index = graft.llm.Ivf.fit(emb, "vec_id", "embedding", k = 4, iters = 1)
+    try {
+      assertKernelAssign(index.assignments, "cell_sims")
+      assertKernelAssign(graft.llm.Ivf.assignCells(emb, "vec_id", "embedding",
+        index.centroids), "cell_sims")
+    } finally index.unpersist()
+    val books = graft.llm.Quant.pqFit(emb, "vec_id", "embedding", m = 2, k = 4,
+      iters = 1)
+    assertKernelAssign(graft.llm.Quant.pqEncode(emb, "vec_id", "embedding",
+      books, m = 2), "cell_dists")
   }
 
   test("adaptive fuzzyPairs (band/margin/sub cascade) stays equi-join only") {

@@ -2,16 +2,16 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.llm.Ann
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Bit-parity pins for the r14 literal-quantizer kernels against the
-  * join-based formulations they replace inside Ivf/Quant/CurateStream.
+/** Bit-parity pins for the centroid-assignment kernels (fed a broadcast
+  * [[CellTable]], as in Ivf/Quant) against the join-based argmax and the
+  * HOF distance fold they are checked against, plus the broadcast set
+  * probe of CurateStream.
   */
 class CellKernelsSpec extends SparkSpec {
   import spark.implicits._
-
-  private def l2(v: Seq[Double]): Double =
-    math.sqrt(v.foldLeft(0.0)((a, x) => a + x * x))
 
   test("CellSims + round/argmax fold ≡ broadcast-join assign (max_by on " +
     "(round(sim,9), -cell)), including exact ties") {
@@ -23,19 +23,12 @@ class CellKernelsSpec extends SparkSpec {
       (i.toLong, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
     val df = vecs.toDF("id", "vec")
 
-    // reference: the join-based argmax exactly as Ivf.assign wrote it
-    val centsDf = cents.toDF("cell", "centroid")
-    val ref = df
-      .select(col("id"), col("vec"), Ann.l2norm(col("vec")).as("_vn"))
-      .join(broadcast(centsDf.withColumn("_cn", Ann.l2norm(col("centroid")))))
-      .withColumn("_sim", round(
-        Ann.dot(col("vec"), col("centroid")) / (col("_vn") * col("_cn")), 9))
-      .groupBy(col("id"))
-      .agg(max_by(col("cell"),
-        struct(col("_sim"), (-col("cell")).as("_nc"))).as("cell"))
+    val ref = CellKernelsSpec.joinAssign(df, "id", "vec",
+        cents.toDF("cell", "centroid"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
 
-    val table = Map(0 -> cents.map { case (i, c) => (i, c, l2(c)) })
+    val table = CellTable.broadcast(spark,
+      cents.map { case (cell, c) => (0, cell, c) })
     val cs = CellSims.sims(col("vec"), lit(0), table)
     // the same fold Ivf.argmaxFold uses (private there; shape replicated)
     val got = df.withColumn("_cs", cs)
@@ -59,7 +52,7 @@ class CellKernelsSpec extends SparkSpec {
   }
 
   test("CellSims null semantics: missing group → null; null vector → null") {
-    val table = Map(0 -> IndexedSeq((0, IndexedSeq(1.0, 0.0), 1.0)))
+    val table = CellTable.broadcast(spark, Seq((0, 0, Seq(1.0, 0.0))))
     val df = Seq((1L, Array(1.0f, 0.5f), 0), (2L, Array(1.0f, 0.5f), 9),
         (3L, null.asInstanceOf[Array[Float]], 0))
       .toDF("id", "vec", "grp")
@@ -75,7 +68,8 @@ class CellKernelsSpec extends SparkSpec {
       (i, IndexedSeq.fill(4)(rnd.nextDouble() * 2 - 1)))
     val df = (1 to 100).map(i =>
       (i.toLong, Array.fill(4)(rnd.nextFloat() * 2 - 1))).toDF("id", "vec")
-    val table = Map(0 -> cents.map { case (i, c) => (i, c) }.toIndexedSeq)
+    val table = CellTable.broadcast(spark,
+      cents.map { case (cell, c) => (0, cell, c) })
     val refCols = cents.map { case (i, c) =>
       aggregate(zip_with(col("vec"), typedLit(c),
           (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
@@ -114,4 +108,39 @@ class CellKernelsSpec extends SparkSpec {
     assert(got.map(t => t._1 -> t._2).toMap ===
       Map(1L -> Some(true), 2L -> Some(false), 3L -> Some(false), 4L -> None))
   }
+}
+
+object CellKernelsSpec {
+
+  /** The broadcast-join argmax the [[CellSims]] path is checked against:
+    * every (vector, centroid) pair, round(sim, 9), then max_by on
+    * (sim, -cell), so ties go to the lowest cell. With `on`, only pairs
+    * that agree on those columns meet (the two-level leaf rule: a
+    * vector ranks only its own level-1 cell's leaves).
+    */
+  def joinAssign(df: DataFrame, idCol: String, vecCol: String,
+                 cents: DataFrame, on: Seq[String] = Nil): DataFrame = {
+    val cs = broadcast(cents.withColumn("_cn", Ann.l2norm(col("centroid"))))
+    val vs = df.select(Seq(col(idCol), col(vecCol)) ++ on.map(col) :+
+      Ann.l2norm(col(vecCol)).as("_vn"): _*)
+    (if (on.isEmpty) vs.join(cs) else vs.join(cs, on))
+      .withColumn("_sim", round(
+        Ann.dot(col(vecCol), col("centroid")) / (col("_vn") * col("_cn")), 9))
+      .groupBy(col(idCol))
+      .agg(max_by(col("cell"),
+        struct(col("_sim"), (-col("cell")).as("_nc"))).as("cell"))
+  }
+
+  /** The broadcast-join argmin the [[CellDists]] PQ path is checked
+    * against: per (vector, subspace) row of `sf` (`sub`, `subvec`),
+    * round(Σ(x−c)², 9) against every codebook cell of that subspace,
+    * min_by on (dist, cell).
+    */
+  def joinCodes(sf: DataFrame, idCol: String, codebooks: DataFrame): DataFrame =
+    sf.join(broadcast(codebooks), "sub")
+      .withColumn("_d", round(aggregate(zip_with(col("subvec"), col("centroid"),
+          (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
+        lit(0.0d), (acc, x) => acc + x), 9))
+      .groupBy(col(idCol), col("sub"))
+      .agg(min_by(col("cell"), struct(col("_d"), col("cell"))).as("cell"))
 }

@@ -65,6 +65,7 @@ class PipelineSpec extends SparkSpec {
     seedSync(cfg, Seq(syncRow(1L, "FAC1", "patient_person_0_20250103141949.json")))
 
     val res = Pipeline.run(spark, cfg)
+    assert(res.filesSeen === 1)
     assert(res.filesIngested === 1 && res.filesFailed === 0)
     assert(res.recordsIngested === 2 && res.recordsQuarantined === 0)
 
@@ -92,7 +93,7 @@ class PipelineSpec extends SparkSpec {
     seedSync(cfg, Seq(syncRow(1L, "FAC1", "biometric_0_20250103141949.json")))
 
     val r1 = Pipeline.run(spark, cfg)
-    assert(r1.recordsIngested === 1)
+    assert(r1.filesSeen === 1 && r1.recordsIngested === 1)
     val stg1 = spark.read.parquet(s"${cfg.warehouseDir}/stg_biometric")
     assert(stg1.count() === 1)
     assert(!stg1.columns.contains("match_type")) // P1 exclusion
@@ -101,6 +102,8 @@ class PipelineSpec extends SparkSpec {
     // must skip the re-ingest (J5)
     seedSync(cfg, Seq(syncRow(1L, "FAC1", "biometric_0_20250103141949.json")))
     val r2 = Pipeline.run(spark, cfg)
+    // the re-queued file is in the work list, on its already-loaded side
+    assert(r2.filesSeen === 1 && r2.filesIngested === 0)
     assert(r2.recordsIngested === 0)
     assert(spark.read.parquet(s"${cfg.warehouseDir}/stg_biometric").count() === 1)
     // and the sync row is flipped to Ingested without a new log row
@@ -112,6 +115,7 @@ class PipelineSpec extends SparkSpec {
     val (cfg, _) = setup()
     seedSync(cfg, Seq(syncRow(7L, "FACX", "hiv_enrollment_0_20250101000000.json")))
     val res = Pipeline.run(spark, cfg)
+    assert(res.filesSeen === 1)
     assert(res.filesMissing === 1 && res.filesIngested === 0)
     val sync = cfg.logStore.latest("sync_file", Seq("id")).collect().head
     assert(sync.getAs[Int]("processed") === SyncState.MissingOrPast)

@@ -76,6 +76,25 @@ class QuantSpec extends SparkSpec {
       s"same-cluster members must outrank the far cluster: ${top.toSeq}")
   }
 
+  test("PQ: a subvector with a null element gets no code for its subspace") {
+    def v(xs: Double*): Seq[java.lang.Float] = xs.map(x => Float.box(x.toFloat))
+    val emb = Seq(
+      (0L, v(1, 0, 5, 5)), (2L, v(1.01, 0.01, 5.01, 5.02)),
+      (1L, v(-3, 4, -1, -2)), (10L, v(-3.01, 4.01, -1.02, -2.01)))
+      .toDF("vec_id", "embedding")
+    val books = Quant.pqFit(emb, "vec_id", "embedding", m = 2, k = 2, iters = 2)
+    val holes = Seq(
+      (20L, Seq[java.lang.Float](1.0f, 0.0f, null, 5.0f)), // sub 1 null
+      (21L, Seq[java.lang.Float](null, 0.0f, -1.0f, -2.0f))) // sub 0 null
+      .toDF("vec_id", "embedding")
+    val codes = Quant.pqEncode(emb.union(holes), "vec_id", "embedding",
+        books, m = 2)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toList).toMap
+    // the clean subspace still gets its nearest cell; the null one none
+    assert(codes(20L) === List(codes(0L).head))
+    assert(codes(21L) === List(codes(1L)(1)))
+  }
+
   test("residual IVFPQ: candidates from probed cells; self-residual distance is 0") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 5)
