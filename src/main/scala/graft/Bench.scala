@@ -1,21 +1,179 @@
 package graft
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, JsonEscape}
+import java.lang.management.{ManagementFactory, MemoryType}
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+import org.apache.spark.sql.graftbridge.ListenerBridge
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-/** Benchmark main: runs every registered query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
-  * A failing query reports {"err": "..."} instead of a fake timing
-  * (round-1 verdict: a swallowed Throwable must never look like a fast
-  * success).
+/** Benchmark main and the engine's one per-query profiler: runs every
+  * registered query against SPARK_GRAFT_SF_DIR (or the comma-separated
+  * SPARK_GRAFT_ONLY subset) and prints one JSON line with per-query
+  * seconds; `bench_full.json` carries the per-query detail.
+  *
+  * Each query is timed in [[Samples]] warm samples and reports their
+  * median, min and max. A sample is split into three phases: setup
+  * (the query closure runs — fixture closures run their store/stream
+  * construction jobs eagerly here), plan (the counted frame's physical
+  * plan is forced) and exec (`collect`). A [[PhaseListener]] counts the
+  * Spark jobs, stages, shuffle bytes and spill of each phase.
+  *
+  * A failing query reports {"err": "..."} instead of a timing: a
+  * swallowed Throwable must never look like a fast success.
   */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Warm samples per query; `sec` is their median. */
+  val Samples = 3
+
+  /** Thread-local property naming the phase a job belongs to. Unlike the
+    * job group, which every stream execution overwrites on its own
+    * thread, a local property follows the work onto the threads started
+    * from the tagged one (broadcasts, adaptive stages, stream
+    * executions, the ingest fan-out), so attribution is exact.
+    */
+  private val PhaseKey = "graft.bench.phase"
+
+  /** Spark work of one phase. `sites` counts jobs per innermost `graft.`
+    * frame of the job's call site, or of its SQL execution's call site
+    * when the job ran on one of Spark's threads ("?" when neither has
+    * one). `shuffleBytes` is shuffle write; `spillBytes` is spill to
+    * disk.
+    */
+  final case class Work(jobs: Int = 0, stages: Int = 0, shuffleBytes: Long = 0L,
+                        spillBytes: Long = 0L, sites: Map[String, Int] = Map.empty) {
+    def +(o: Work): Work = Work(jobs + o.jobs, stages + o.stages,
+      shuffleBytes + o.shuffleBytes, spillBytes + o.spillBytes,
+      (sites.keySet ++ o.sites.keySet).map(s =>
+        s -> (sites.getOrElse(s, 0) + o.sites.getOrElse(s, 0))).toMap)
+  }
+
+  /** One warm run of a query. `exec` work includes any job planning
+    * fires. `gcMs`/`peakMb` are this sample's GC time and the sum of
+    * per-pool heap peaks (an upper bound on the footprint): gc_ms ≈ sec
+    * marks a memory-starved JVM, not a slow operator.
+    */
+  final case class Sample(setupSec: Double, planSec: Double, execSec: Double,
+                          gcMs: Long, peakMb: Long, setup: Work, exec: Work) {
+    def querySec: Double = planSec + execSec
+    def sec: Double = setupSec + querySec
+  }
+
+  /** A query's profile: its samples, or the error that stopped them. */
+  final case class R(name: String, samples: Seq[Sample], err: Option[String]) {
+    lazy val median: Sample = samples.sortBy(_.sec).apply(samples.size / 2)
+    def sec: Double = median.sec
+  }
+
+  /** Sums the work of every job tagged with [[PhaseKey]], per tag. */
+  final class PhaseListener extends SparkListener {
+    private val work = mutable.HashMap.empty[String, Work]
+    private val stageTag = mutable.HashMap.empty[Int, String]
+    private val execSite = mutable.HashMap.empty[String, String]
+    private def graftFrame(callSite: String): Option[String] =
+      callSite.linesIterator.map(_.trim).find(_.startsWith("graft."))
+    private def tagOf(p: java.util.Properties): Option[String] =
+      Option(p).flatMap(p => Option(p.getProperty(PhaseKey)))
+    private def add(tag: String, w: Work): Unit =
+      work(tag) = work.getOrElse(tag, Work()) + w
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      tagOf(e.properties).foreach { t =>
+        val site = e.stageInfos.maxByOption(_.stageId).flatMap(s => graftFrame(s.details))
+          .orElse(Seq("spark.sql.execution.id", "spark.sql.execution.root.id")
+            .flatMap(k => Option(e.properties.getProperty(k))).flatMap(execSite.get).headOption)
+          .getOrElse("?")
+        add(t, Work(jobs = 1, sites = Map(site -> 1)))
+      }
+    }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
+      tagOf(e.properties).foreach { t =>
+        stageTag(e.stageInfo.stageId) = t
+        add(t, Work(stages = 1))
+      }
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      for (t <- stageTag.get(e.stageId); m <- Option(e.taskMetrics))
+        add(t, Work(shuffleBytes = m.shuffleWriteMetrics.bytesWritten,
+          spillBytes = m.diskBytesSpilled))
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized(stageTag.remove(e.stageInfo.stageId))
+    override def onOtherEvent(e: SparkListenerEvent): Unit = synchronized {
+      e match {
+        case s: SparkListenerSQLExecutionStart =>
+          graftFrame(s.details).foreach(execSite(s.executionId.toString) = _)
+        case s: SparkListenerSQLExecutionEnd => execSite.remove(s.executionId.toString)
+        case _ => ()
+      }
+    }
+
+    /** Removes and returns the work tagged `tag`; the caller drains the
+      * listener bus first.
+      */
+    def take(tag: String): Work = synchronized(work.remove(tag).getOrElse(Work()))
+  }
+
+  private val tags = new java.util.concurrent.atomic.AtomicLong
+  private val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala
+  private val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+    .filter(_.getType == MemoryType.HEAP)
+  private def gcNow(): Long = gcBeans.map(_.getCollectionTime).filter(_ >= 0).sum
+
+  /** Times `fn` in [[Samples]] warm samples on `spark`, whose listener
+    * bus carries `probe`. Stops at the first error. Cached storage is
+    * released after every sample, outside the timed region, so a timing
+    * does not depend on what ran before it.
+    */
+  def profile(spark: SparkSession, probe: PhaseListener, name: String,
+              sfDir: String, fn: Query): R = {
+    val sc = spark.sparkContext
+    def tagged[T](tag: String)(body: => T): T = {
+      sc.setLocalProperty(PhaseKey, tag)
+      try body finally sc.setLocalProperty(PhaseKey, null)
+    }
+    val runs = mutable.ArrayBuffer.empty[(String, Sample)]
+    var err: Option[String] = None
+    while (err.isEmpty && runs.size < Samples) {
+      val tag = s"$name#${tags.incrementAndGet()}"
+      heapPools.foreach(p => try p.resetPeakUsage() catch { case _: Throwable => () })
+      val g0 = gcNow()
+      val t0 = System.nanoTime()
+      try {
+        val frame = tagged(s"$tag/setup")(fn(spark, sfDir))
+        val t1 = System.nanoTime()
+        var t2 = t1
+        tagged(s"$tag/exec") {
+          val counted = frame.groupBy().count()
+          counted.queryExecution.executedPlan
+          t2 = System.nanoTime()
+          counted.collect()
+        }
+        val t3 = System.nanoTime()
+        val peakMb = heapPools.map(p =>
+          Option(p.getPeakUsage).map(_.getUsed).getOrElse(0L)).sum / (1024L * 1024L)
+        runs += tag -> Sample((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9,
+          gcNow() - g0, peakMb, Work(), Work())
+      } catch { case e: Throwable =>
+        err = Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(300))
+      }
+      GraftSession.releaseAll(spark)
+    }
+    ListenerBridge.drain(sc)
+    val samples = runs.toSeq.map { case (tag, s) =>
+      s.copy(setup = probe.take(s"$tag/setup"), exec = probe.take(s"$tag/exec"))
+    }
+    if (err.isDefined) R(name, Nil, err) else R(name, samples, None)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString).toInt
-    // optional comma-separated query filter — the isolation-reproduction
-    // knob BASELINE.md's adjudication procedure calls for (a flapping
-    // heavy query is re-measured alone, warm, before it is believed)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
@@ -23,65 +181,30 @@ object Bench {
       GraftSession.builder("graft-bench", s"local[$cpus]",
         shufflePartitions = math.max(cpus, 4)).getOrCreate())
 
-    def esc(s: String): String = graft.core.JsonEscape.escape(s)
-
     // untimed warm-up sweep: run EVERY query once AT THE TARGET SF
     // before timing anything. A query's first execution pays Janino
-    // codegen compilation + JIT warm-up — 1-3s per complex plan on a
-    // cold or contended JVM, and 8-17s for the heavyweights (measured:
-    // q_llm_curation_e2e 17.0s first touch, 1.1s steady at sf0.1) —
-    // and the warm-up must run at the TARGET volume, not sf0.001: AQE
-    // re-plans per runtime statistics, so the small-SF physical plan
-    // (all-broadcast) shares no generated code with the target-SF one.
-    // The r4 driver bench measured 5-15x the warm ledger numbers on
-    // unchanged code purely from first-touch cost; timings should
-    // measure the operator, not the compiler. A 100 TB run amortizes
-    // compilation to zero, so steady state is the honest proxy.
+    // codegen and JIT warm-up (measured: q_llm_curation_e2e 17.0 s first
+    // touch, 1.1 s steady at sf0.1), and it must run at the target
+    // volume: AQE re-plans per runtime statistics, so a small-SF plan
+    // shares no generated code with the target-SF one.
     queries.foreach { case (_, fn) =>
       try fn(spark, sfDir).count()
       catch { case _: Throwable => () }
       GraftSession.releaseAll(spark)
     }
+    val probe = new PhaseListener
+    spark.sparkContext.addSparkListener(probe)
+    val results = queries.map { case (n, fn) => profile(spark, probe, n, sfDir, fn) }
 
-    // self-diagnosis instrumentation: per-query GC time and peak heap
-    // (ManagementFactory beans) separate a plan regression from an
-    // environmentally degraded run — BENCH_r05 recorded 657.8s where the
-    // identical binary measured 109.2s warm, and nothing in the artifact
-    // could prove which side was at fault. gc_ms ≈ sec means the JVM was
-    // memory-starved, not the operator slow.
-    import scala.jdk.CollectionConverters._
-    val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-    val heapPools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
-      .asScala.filter(_.getType == java.lang.management.MemoryType.HEAP)
-    def gcNow(): Long = gcBeans.asScala.map(_.getCollectionTime).filter(_ >= 0).sum
-
-    // warm-ledger for outlier self-adjudication: the per-query warm
-    // seconds committed at the last round's close (bench_ledger.json).
-    // A query timing k× past its ledger entry is re-measured ONCE in
-    // the same process — BENCH_r08's q_stream_curation read 83.0s from
-    // a transient environmental stall (13.0/7.4s when re-run) and cost
-    // a judging cycle to clear; now the artifact carries both numbers
-    // and adjudicates itself. Only meaningful at the ledger's own SF.
-    // the ledger's numbers only adjudicate runs AT THEIR OWN SF — at a
-    // larger SF every legitimately-slower heavy would read as a 3×
-    // "outlier" and re-run, doubling the suite for nothing. Each ledger
-    // file's "_sf" key records its recording SF; Bench selects the
-    // FIRST candidate whose _sf matches the run's SF dir (explicit
-    // SPARK_GRAFT_LEDGER wins, then the committed per-SF ledgers), so
-    // an sf1.0 close-out self-adjudicates from bench_ledger_sf1.json
-    // while the driver's sf0.1 run keeps using bench_ledger.json.
-    // canonicalize both sides: a trailing slash or symlink must not
-    // silently disable adjudication (retries:0 would then read as
-    // "nothing was an outlier"); the env block reports ledger_used so
-    // the artifact itself says whether the guard was armed
+    // the warm ledger (bench_ledger*.json) is read only AT ITS OWN SF,
+    // picked by each file's "_sf" key (both sides canonicalized, so a
+    // trailing slash or symlink does not silently disarm it). Plain
+    // "<name>" entries are ledgered seconds, "setup:<name>" entries that
+    // run's setup_sec.
     def canon(p: String): String =
       try java.nio.file.Paths.get(p).toRealPath().toString
       catch { case _: Throwable =>
         java.nio.file.Paths.get(p).normalize().toString }
-    // the ledger file carries TWO keyspaces: plain "<name>" entries are
-    // the adjudicated per-query seconds (ledger_sec in bench_full.json)
-    // and "setup:<name>" entries are that run's setup_sec — the r12
-    // advice's coarse fixture-regression band reads the latter
     def readLedger(path: String): Option[Map[String, Double]] = {
       val txt =
         try new String(java.nio.file.Files.readAllBytes(
@@ -92,174 +215,25 @@ object Bench {
       else Some(""""([^"]+)":\s*([0-9.]+)""".r.findAllMatchIn(txt)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap)
     }
-    // An EXPLICIT SPARK_GRAFT_LEDGER is authoritative: if it is
-    // unreadable or its _sf mismatches the run, adjudication is OFF —
-    // falling through to the committed per-SF files would re-time
-    // queries against baselines the operator explicitly overrode, and
-    // retries:N would be indistinguishable from the intended ledger's
-    // verdict. The artifact names the file that actually armed the
-    // guard (ledger_file) so a boolean can't hide which one it was.
-    val ledgerPick: Option[(String, Map[String, Double])] =
-      sys.env.get("SPARK_GRAFT_LEDGER") match {
-        case Some(p) => readLedger(p).map(p -> _)
-        case None => Seq("bench_ledger.json", "bench_ledger_sf1.json")
-          .view.flatMap(p => readLedger(p).map(p -> _)).headOption
-      }
-    val ledgerAll: Map[String, Double] =
-      ledgerPick.map(_._2).getOrElse(Map.empty)
-    val ledger: Map[String, Double] =
-      ledgerAll.view.filterKeys(k => !k.startsWith("setup:")).toMap
-    val setupLedger: Map[String, Double] = ledgerAll.view
-      .collect { case (k, v) if k.startsWith("setup:") =>
-        k.stripPrefix("setup:") -> v }.toMap
-    val ledgerFile: Option[String] = ledgerPick.map(_._1)
-    val ledgerUsable = ledger.nonEmpty
-    // retry iff: first > max(3s floor, 3× ledger). The floor keeps
-    // sub-second noise (0.2s→0.9s) from triggering pointless re-runs.
-    def isOutlier(name: String, sec: Double): Boolean =
-      ledgerUsable && ledger.get(name).exists(w => sec > math.max(3.0, 3.0 * w))
+    val ledgerPick = Seq("bench_ledger.json", "bench_ledger_sf1.json")
+      .view.flatMap(p => readLedger(p).map(p -> _)).headOption
+    val ledgerAll = ledgerPick.map(_._2).getOrElse(Map.empty[String, Double])
+    val ledger = ledgerAll.view.filterKeys(k => !k.startsWith("setup:")).toMap
+    val setupLedger = ledgerAll.view
+      .collect { case (k, v) if k.startsWith("setup:") => k.stripPrefix("setup:") -> v }.toMap
 
-    // otherSec: the NON-adopted measurement of a retried outlier (the
-    // slower first run when the retry cleared it, or the retry when it
-    // did not) — the artifact always reports both sides.
-    // setupSec/querySec: the closure-evaluation vs returned-frame-count
-    // split (r11 verdict #5) — fixture-building closures run ~10
-    // sequential Spark jobs of store/stream construction EAGERLY before
-    // returning the measured frame; one total could not distinguish a
-    // fixture regression from a query regression.
-    case class R(name: String, sec: Double, setupSec: Double,
-                 querySec: Double, err: Option[String],
-                 gcMs: Long, peakMb: Long, otherSec: Option[Double])
-
-    // The adjudicated/ledgered seconds for a result: PER-ENTRY
-    // setup-dominance keying (r12 verdict #1 — the hardcoded 4-entry
-    // fixtureKeyed set left q_graph_bfs ledgering 14.97s of graph
-    // construction against an 0.085s traversal, blinding the outlier
-    // guard and breaking round-over-round comparison). When the
-    // closure's eager setup dominates (> 50% of total), the entry
-    // adjudicates and ledgers on query_sec — the measured operator;
-    // otherwise on total sec. The fixture side is NOT left unguarded:
-    // setup_sec has its own ledger keyspace and band (setupFlagged
-    // below), so a fixture regression still surfaces — it is just no
-    // longer conflated with the operator's number. A borderline entry
-    // (setup ≈ 50%) can flip keying between the ledger-recording run
-    // and an adjudicating run; the flip is bounded by 2× (below the 3×
-    // retry threshold) and self-corrects at the next refresh.
+    // the ledgered seconds of an entry: query_sec when the closure's
+    // eager setup dominates (> 50% of the total), else total sec, so a
+    // fixture-heavy entry ledgers its measured operator. The fixture
+    // side keeps its own band: setup_sec past max(3 s, 3× its ledgered
+    // weight) is flagged in the artifact.
     def metric(r: R): Double =
-      if (r.setupSec > 0.5 * r.sec) r.querySec else r.sec
+      if (r.median.setupSec > 0.5 * r.sec) r.median.querySec else r.sec
+    def setupFlagged(r: R): Boolean = r.err.isEmpty &&
+      setupLedger.get(r.name).exists(w => r.median.setupSec > math.max(3.0, 3.0 * w))
 
-    // the r12-advice fixture band: setup_sec materially past its
-    // ledgered weight (same 3s floor / 3× shape as the query guard) is
-    // FLAGGED in the artifact — not retried (the query metric, not the
-    // fixture, is the adjudicated number) but never invisible either
-    def setupFlagged(r: R): Boolean =
-      setupLedger.get(r.name)
-        .exists(w => r.setupSec > math.max(3.0, 3.0 * w))
-
-    // stable ordering for readable diffs between rounds; storage released
-    // between queries (outside the timed region) so each timing is
-    // independent of what the alphabetically-earlier queries left cached
-    def timeOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): R = {
-      heapPools.foreach(p => try p.resetPeakUsage()
-        catch { case _: Throwable => () })
-      val g0 = gcNow()
-      val t0 = System.nanoTime()
-      var tMid = t0
-      val outcome =
-        try {
-          val frame = fn(spark, sfDir)
-          tMid = System.nanoTime()
-          frame.count(); None
-        }
-        catch { case e: Throwable =>
-          if (tMid == t0) tMid = System.nanoTime() // died during setup
-          Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(300)) }
-      val tEnd = System.nanoTime()
-      val sec = (tEnd - t0) / 1e9
-      val setupSec = (tMid - t0) / 1e9
-      val querySec = (tEnd - tMid) / 1e9
-      val gcMs = gcNow() - g0
-      // NOTE: sum of per-POOL peaks (eden/survivor/old), which occur at
-      // different instants — an upper bound on the true simultaneous
-      // footprint, not a sampled heap high-water mark; read it as
-      // "memory pressure ceiling", good enough to separate a starved
-      // run (peak ~ max heap, gc_ms ~ wall) from a healthy one
-      val peakMb = heapPools.map(p =>
-        Option(p.getPeakUsage).map(_.getUsed).getOrElse(0L)).sum / (1024L * 1024L)
-      GraftSession.releaseAll(spark)
-      R(name, sec, setupSec, querySec, outcome, gcMs, peakMb, None)
-    }
-    // isolation settle before any retry timing: the r10 judge caught a
-    // retry that ran in the SAME contended window as its first sample
-    // and bought nothing (q_llm_cluster_best 18.5s kept, isolated re-run
-    // 2.67s). Storage is already released per timing; drain the JVM's
-    // deferred work (GC debt, finalizers) and give the OS scheduler a
-    // beat so the retry measures the operator, not the leftover storm.
-    def settle(): Unit = {
-      GraftSession.releaseAll(spark)
-      System.gc()
-      Thread.sleep(1500)
-    }
-    val firstPass = queries.map { case (name, fn) =>
-      val first = timeOnce(name, fn)
-      if (first.err.isEmpty && isOutlier(name, metric(first))) {
-        settle()
-        val retry = timeOnce(name, fn)
-        // adopt the better of the two — a genuine plan regression stays
-        // slow on retry and still reports; a transient stall clears.
-        // Adjudicated on the ledgered metric; rejected_sec reports the
-        // other attempt's value of the same metric.
-        if (retry.err.isEmpty && metric(retry) < metric(first))
-          retry.copy(otherSec = Some(metric(first)))
-        else first.copy(otherSec = Some(metric(retry)))
-      } else first
-    }
-
-    // SUITE-LEVEL self-adjudication: the per-query 3× threshold misses a
-    // UNIFORM stall — BENCH_r09's driver run had every heavy ~1.7-2× its
-    // ledger entry (real machine contention), nothing crossed 3×, and
-    // the 401s artifact still needed a judge re-run to clear. If the
-    // suite total over ledger-known queries exceeds 1.4× the ledger
-    // total, re-time the top-N by LEDGER weight (the queries that
-    // dominate the total) once each and adopt the better number — a
-    // contended run re-adjudicates itself, a genuine across-the-board
-    // regression stays slow on the retime and reports both totals.
-    val ledgerKnown = firstPass.filter(r => r.err.isEmpty && ledger.contains(r.name))
-    val ledgerTotal = ledgerKnown.map(r => ledger(r.name)).sum
-    val firstTotal = ledgerKnown.map(metric).sum
-    val suiteStalled = ledgerUsable && ledgerTotal > 0.0 &&
-      firstTotal > 1.4 * ledgerTotal
-    val queriesByName = queries.toMap
-    val results =
-      if (!suiteStalled) firstPass
-      else {
-        val topN = ledgerKnown.map(r => r.name -> ledger(r.name))
-          .sortBy(-_._2).take(10).map(_._1).toSet
-        firstPass.map { r =>
-          if (!topN(r.name)) r
-          else {
-            settle()
-            val retry = timeOnce(r.name, queriesByName(r.name))
-            if (retry.err.isEmpty && metric(retry) < metric(r))
-              retry.copy(otherSec = Some(metric(r)))
-            else r.copy(otherSec = r.otherSec.orElse(Some(metric(retry))))
-          }
-        }
-      }
+    def esc(s: String): String = JsonEscape.escape(s)
     def fmt(v: Double): String = f"$v%.3f"
-    // the adjudication record rides in BOTH the full file and stdout:
-    // a stalled run's artifact names itself environmental (ledger vs
-    // first-pass vs post-retime totals) instead of costing a judge
-    // re-run to clear
-    def suiteBlock(): String =
-      if (!ledgerUsable) ""
-      else {
-        val finalTotal = results
-          .filter(r => r.err.isEmpty && ledger.contains(r.name))
-          .map(metric).sum
-        s""","suite_retime":{"stalled":$suiteStalled,"ledger_total":${fmt(ledgerTotal)},"first_total":${fmt(firstTotal)},"final_total":${fmt(finalTotal)}}"""
-      }
     def line(rs: Seq[R]): String = {
       val qs = rs.map { r =>
         r.err match {
@@ -268,17 +242,14 @@ object Bench {
         }
       }.mkString("{", ",", "}")
       val total = results.filter(_.err.isEmpty).map(_.sec).sum
-      val nErr = results.count(_.err.nonEmpty)
-      val nRetry = results.count(_.otherSec.nonEmpty)
-      val nSetupFlags = results.count(setupFlagged)
-      s""""metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"errors":$nErr,"retries":$nRetry,"setup_flags":$nSetupFlags${suiteBlock()},"queries":$qs,"sf":"${esc(sfDir)}""""
+      s""""metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"errors":${results.count(_.err.nonEmpty)},"setup_flags":${results.count(setupFlagged)},"queries":$qs,"sf":"${esc(sfDir)}""""
     }
 
-    // environment snapshot + per-query gc/heap detail: lets a reader of
-    // bench_full.json alone attribute a slow run to contention (high
-    // load_avg, low free mem, gc_ms ≈ wall time) vs a real regression
+    // environment snapshot: lets a reader of bench_full.json alone tell
+    // contention (high load_avg, low free memory, gc_ms ≈ wall) from a
+    // real regression
     def envBlock(): String = {
-      val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      val os = ManagementFactory.getOperatingSystemMXBean
       val rt = Runtime.getRuntime
       val (freeMb, totalMb) = os match {
         case o: com.sun.management.OperatingSystemMXBean =>
@@ -286,54 +257,40 @@ object Bench {
             o.getTotalMemorySize / (1024L * 1024L))
         case _ => (-1L, -1L)
       }
-      s""""env":{"load_avg":${fmt(os.getSystemLoadAverage)},"cpus":${rt.availableProcessors},"jvm_max_heap_mb":${rt.maxMemory / (1024L * 1024L)},"sys_free_mem_mb":$freeMb,"sys_total_mem_mb":$totalMb,"total_gc_ms":${gcNow()},"ledger_used":$ledgerUsable,"ledger_file":${ledgerFile.map(f => s""""${esc(f)}"""").getOrElse("null")}}"""
+      s""""env":{"load_avg":${fmt(os.getSystemLoadAverage)},"cpus":${rt.availableProcessors},"jvm_max_heap_mb":${rt.maxMemory / (1024L * 1024L)},"sys_free_mem_mb":$freeMb,"sys_total_mem_mb":$totalMb,"total_gc_ms":${gcNow()},"ledger_used":${ledger.nonEmpty},"ledger_file":${ledgerPick.map(f => s""""${esc(f._1)}"""").getOrElse("null")}}"""
     }
-    // ledger_ratio per query (r10 verdict): the artifact names its own
-    // outliers — a reader sees every query's adopted-time / ledger-warm
-    // ratio without re-deriving it from two files (and without a judge
-    // QTime for the 2-3× band the retry threshold doesn't catch)
+    // per query: the median sample's phase split and Spark work, the
+    // sample spread, and the ratios against the ledger; ledger_sec is
+    // metric(), so a ledger refresh derives from this file alone
     def detailBlock(rs: Seq[R]): String =
       rs.map { r =>
-        val retryField = r.otherSec
-          .map(o => s""","rejected_sec":${fmt(o)}""").getOrElse("")
-        // ledger_ratio keys on the adjudicated metric (query_sec when
-        // setup dominates, total sec otherwise — the r13 per-entry
-        // keying; see COVERAGE.md ledger migration notes)
-        val ratioField = ledger.get(r.name)
-          .filter(_ > 0.0)
-          .map(w => s""","ledger_ratio":${fmt(metric(r) / w)}""")
-          .getOrElse("")
-        // the fixture band companion: this run's setup over the
-        // ledgered setup weight, plus the flag when it trips the
-        // 3s/3× band — the artifact names its own fixture regressions
-        val setupRatioField = setupLedger.get(r.name)
-          .filter(_ > 0.0)
-          .map(w => s""","setup_ratio":${fmt(r.setupSec / w)}""")
-          .getOrElse("")
-        val setupFlagField =
-          if (setupFlagged(r)) ""","setup_flagged":true""" else ""
-        // ledger_sec IS the adjudicated metric, recorded so the ledger
-        // refresh derives from the artifact alone — the keying rule
-        // has exactly one definition (metric() in this file), not a
-        // copy in a doc'd shell one-liner (r12 review finding)
-        s""""${esc(r.name)}":{"sec":${fmt(r.sec)},"setup_sec":${fmt(
-          r.setupSec)},"query_sec":${fmt(r.querySec)},"ledger_sec":${fmt(
-          metric(r))},"gc_ms":${r.gcMs
-          },"peak_heap_mb":${r.peakMb}$retryField$ratioField$setupRatioField$setupFlagField}"""
+        val body = r.err match {
+          case Some(err) => s""""err":"${esc(err)}""""
+          case None =>
+            val m = r.median
+            val work = m.setup + m.exec
+            val sites = work.sites.toSeq.sortBy { case (s, n) => (-n, s) }
+              .map { case (s, n) => s""""${esc(s)}":$n""" }.mkString("{", ",", "}")
+            val ratio = ledger.get(r.name).filter(_ > 0.0)
+              .map(w => s""","ledger_ratio":${fmt(metric(r) / w)}""").getOrElse("")
+            val setupRatio = setupLedger.get(r.name).filter(_ > 0.0)
+              .map(w => s""","setup_ratio":${fmt(m.setupSec / w)}""").getOrElse("")
+            val flag = if (setupFlagged(r)) ""","setup_flagged":true""" else ""
+            s""""sec":${fmt(r.sec)},"sec_min":${fmt(r.samples.map(_.sec).min)},"sec_max":${fmt(r.samples.map(_.sec).max)},"setup_sec":${fmt(m.setupSec)},"plan_sec":${fmt(m.planSec)},"query_sec":${fmt(m.querySec)},"ledger_sec":${fmt(metric(r))},"gc_ms":${m.gcMs},"peak_heap_mb":${m.peakMb},"setup_jobs":${m.setup.jobs},"exec_jobs":${m.exec.jobs},"stages":${work.stages},"shuffle_bytes":${work.shuffleBytes},"spill_bytes":${work.spillBytes},"job_sites":$sites$ratio$setupRatio$flag"""
+        }
+        s""""${esc(r.name)}":{$body}"""
       }.mkString("\"detail\":{", ",", "}")
 
-    // full per-query detail goes to a FILE (COVERAGE.md ledger source);
-    // stdout gets a HEADLINE subset only. The harness that consumes this
-    // output keeps a bounded tail of stdout, and the full 74-query map
-    // (~2.7 KB) overflows it — the JSON line must survive truncation
-    // from the FRONT, so it has to be short. ~20 headline queries cover
-    // every operator family plus the historically slow paths at well
-    // under 1 KB; `value` stays the total over ALL queries.
+    // full per-query detail goes to a FILE; stdout gets a HEADLINE subset
+    // only. The consuming harness keeps a bounded tail of stdout, so the
+    // line must survive truncation from the front: ~30 headline queries
+    // cover every operator family and the historically slow paths, and
+    // `value` stays the total over ALL queries.
     java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_full.json"),
       ("{" + line(results) + "," + detailBlock(results) + "," + envBlock() +
         "}\n").getBytes("UTF-8"))
-    val headline = Vector(
+    val headline = Set(
       "q_a4_group_count", "q_j1_selfjoin_heal", "q_w1_rownumber_dedup",
       "q_s16_staged_delete", "q_f7_mask_nested_json",
       "q_pipeline_ingest_e2e", "q_maint_requeue",
@@ -346,15 +303,9 @@ object Bench {
       "q_llm_simhash_near_dup", "q_llm_dup_ngrams", "q_llm_tfidf_keywords",
       "q_evt_asof_join", "q_evt_asof_native", "q_evt_range_join",
       "q_evt_seq_match")
-    val headlineSet = headline.toSet
-    // errored non-headline queries are surfaced too: an error must never
-    // be hidden by the headline filter
-    // retried outliers and setup-flagged fixtures surface on stdout too —
-    // the headline line is the driver's adjudication record
-    val shown = results.filter(r =>
-      headlineSet(r.name) || r.err.nonEmpty || r.otherSec.nonEmpty ||
-        setupFlagged(r))
-    println("{" + line(shown) + "}")
+    // an error or a setup flag is never hidden by the headline filter
+    println("{" + line(results.filter(r =>
+      headline(r.name) || r.err.nonEmpty || setupFlagged(r))) + "}")
     spark.stop()
   }
 }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * results are bit-identical (VecDotSpec parity).
   *
   * MEASURED against the builtin on the ANN |Q|·|C| scoring join at
-  * sf0.1 (graft.tools.DotBench, d=64): 0.27s native vs 0.21s HOF at
+  * sf0.1 (d=64, best of 3 warm reps): 0.27s native vs 0.21s HOF at
   * 400k pairs, parity within noise at 2M pairs. The broadcast-join row
   * machinery dominates at this dimensionality, so Ann.dot keeps the
   * builtin (same verdict as MinHashAgg vs n×min(md5)); this expression

@@ -108,17 +108,6 @@ object FacilityBatches {
             ok = false, Some(e.getMessage))
           FacilityOutcome(fac, ok = false, None, Option(e.getMessage))
       }
-    if (parallelism <= 1) claimed.map(runOne)
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(parallelism, claimed.size)))
-      try {
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(
-          Future.sequence(claimed.map(f => Future(runOne(f)))), Duration.Inf)
-      } finally pool.shutdown()
-    }
+    FanOut.run(claimed, parallelism)(runOne)
   }
 }

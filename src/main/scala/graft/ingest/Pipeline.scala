@@ -29,11 +29,15 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
+  /** The reference's work-list cap per run: LIMIT 50000 for the main
+    * loader (file_loader.py:255), LIMIT 20000 for DSD (dsd_loader.py:260).
+    */
+  private def batchCap(dsdMode: Boolean): Int = if (dsdMode) 20000 else 50000
+
   final case class Config(
       parentDir: String, // <parent>/<facility_id>/<decrypted file>
       warehouseDir: String, // staging-table parquet root
       logStore: LogStore,
-      batchCap: Int = 50000,
       watermark: String = "2025-01-01",
       dsdMode: Boolean = false,
       // partition staging tables by this column (normally stg_datim_id):
@@ -103,7 +107,7 @@ object Pipeline {
     // facility-scoped scans are uncapped like the reference's
     // (multithread_file_loader.py:250-260 has no LIMIT) — up to the
     // maxWorklist driver-memory guard; the overflow resumes next run
-    cfg.facilityId.fold(ordered.limit(cfg.batchCap))(_ =>
+    cfg.facilityId.fold(ordered.limit(batchCap(cfg.dsdMode)))(_ =>
       ordered.limit(cfg.maxWorklist))
   }
 
@@ -261,38 +265,25 @@ object Pipeline {
       (statuses, okCounts.valuesIterator.sum, badCounts.valuesIterator.sum)
     }
 
-    // submit entity jobs CONCURRENTLY: sequential submission leaves the
-    // cluster idle between small entities' stages
+    // submit entity jobs CONCURRENTLY (FanOut): sequential submission
+    // leaves the cluster idle between small entities' stages
     val outcomes: Seq[(Map[(String, String), (String, Long, String)], Long, Long)] =
-      if (byTable.isEmpty) Seq.empty
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(byTable.size, cfg.entityParallelism)))
-        try {
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          Await.result(
-            Future.sequence(byTable.toSeq.map { case (t, fs) =>
-              // one entity's failure must NOT abort the run: other
-              // entities may already have appended staging rows, and
-              // only the log/sync writes below make those appends
-              // idempotent for the rerun. The failed entity's files log
-              // as failed and re-ingest next run; if its own staging
-              // append partially landed before the crash, the W1
-              // latest-wins views + dedupStaging are the documented
-              // recovery — the same (smaller) window the reference's
-              // non-transactional to_sql→log sequence has per file.
-              Future(scala.util.Try(processEntity(t, fs)).recover {
-                case e: Throwable =>
-                  val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-                  (fs.map { case (_, fac, f, _, _) =>
-                    (f, fac) -> (("failed", 0L,
-                      s"entity job failed: $msg"))
-                  }.toMap, 0L, 0L)
-              }.get)
-            }), Duration.Inf)
-        } finally pool.shutdown()
+      FanOut.run(byTable.toSeq, cfg.entityParallelism) { case (t, fs) =>
+        // one entity's failure must NOT abort the run: other entities
+        // may already have appended staging rows, and only the log/sync
+        // writes below make those appends idempotent for the rerun. The
+        // failed entity's files log as failed and re-ingest next run; if
+        // its own staging append partially landed before the crash, the
+        // W1 latest-wins views + dedupStaging are the documented
+        // recovery — the same (smaller) window the reference's
+        // non-transactional to_sql→log sequence has per file.
+        scala.util.Try(processEntity(t, fs)).recover {
+          case e: Throwable =>
+            val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+            (fs.map { case (_, fac, f, _, _) =>
+              (f, fac) -> (("failed", 0L, s"entity job failed: $msg"))
+            }.toMap, 0L, 0L)
+        }.get
       }
     val fileStatus: Map[(String, String), (String, Long, String)] =
       outcomes.flatMap(_._1).toMap

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * Dot products run in double via zip_with/aggregate. A native
   * codegen'd alternative exists (graft.functions.VecDot, bit-identical —
   * VecDotSpec) and was MEASURED on the |Q|·|C| scoring join at sf0.1
-  * (graft.tools.DotBench): 0.21s HOF vs 0.27s native at 400k pairs,
+  * (d=64, best of 3 warm reps): 0.21s HOF vs 0.27s native at 400k pairs,
   * parity within noise at 2M pairs — the join machinery dominates at
   * d=64, so the builtin stays (same verdict as MinHashAgg vs min(md5)).
   */
@@ -30,11 +30,6 @@ object Ann {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
-
-  /** Native-expression formulation — same fold order and null semantics
-    * as [[dot]] (VecDotSpec asserts bit-parity); see the perf note above.
-    */
-  def dotNative(a: Column, b: Column): Column = graft.functions.VecDot.dot(a, b)
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 

@@ -130,22 +130,6 @@ object Ivf {
         .map { case (r, i) => (i, r.getSeq[Double](0)) }
     }
 
-  /** [[fit]] with `k` sized FOR THE CORPUS instead of fixed: k =
-    * max(4, n / targetCellSize). This is the scale knob that keeps
-    * [[knnGraph]]/[[hardNegatives]] linear — their candidate volume is
-    * ~nprobe·n²/k = nprobe·n·targetCellSize, so holding the CELL SIZE
-    * (not the cell count) constant holds per-vector work constant as
-    * the corpus grows. (Measured: a fixed k=16 at 10× corpus went 33×
-    * in wall-clock; cell-size-held fit stays ~linear — see the
-    * COVERAGE.md sf1.0 ledger.) Costs one count() over the corpus.
-    */
-  def fitForCellSize(df: DataFrame, idCol: String, vecCol: String,
-                     targetCellSize: Int = 128, iters: Int = 2): Index = {
-    require(targetCellSize >= 1, s"targetCellSize must be >= 1: $targetCellSize")
-    val k = math.max(4L, df.count() / targetCellSize).toInt
-    fit(df, idCol, vecCol, k, iters)
-  }
-
   /** Train: deterministic seeding (an md5-strided sample — no global
     * window/sort over the corpus, and portable to any engine with md5)
     * then `iters` Lloyd iterations ([[fitCentroidRows]]), then one
@@ -202,10 +186,10 @@ object Ivf {
 
   // -------------------------------------------------------------------
   // Two-level coarse quantizer (r13 verdict, Missing #2): the flat fit
-  // is quadratic twice over at fitForCellSize's corpus-sized k — Lloyd
-  // assign and probe both compare every vector against all k = n/cell
-  // centroids (n·k = n²/cellSize; measured: KnnScale killed at 900 s /
-  // 200k vectors). The standard IVF fix, both halves:
+  // is quadratic twice over at a corpus-sized k = n/cellSize — Lloyd
+  // assign and probe both compare every vector against all k centroids
+  // (n·k = n²/cellSize; measured: a flat fit at k = n/128 killed at
+  // 900 s on 200k vectors). The standard IVF fix, both halves:
   //  - SAMPLE-TRAINED Lloyd: centroids are fit on a bounded md5-stride
   //    sample (≤ sampleCap vectors), never the full corpus — training
   //    cost is sample-sized regardless of n;
@@ -614,7 +598,7 @@ object Ivf {
 
   /** Index-quality diagnostics: per cell, its population and the mean
     * member-to-centroid cosine — the skew/coherence report that decides
-    * whether a fit needs more cells ([[fitForCellSize]]) or more
+    * whether a fit needs more cells (k sized to the corpus) or more
     * iterations before serving traffic. Same broadcast-centroid shape
     * as EmbeddingOps.labelCohesion; round(,4) mean under the usual
     * contract.

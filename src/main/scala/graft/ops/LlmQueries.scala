@@ -3598,7 +3598,7 @@ object LlmQueries {
 
     // ---- IVF index diagnostics (Ivf.clusterStats): per-cell size and
     //      mean member-to-centroid cosine — the skew/coherence report
-    //      behind the fitForCellSize knob ----
+    //      behind the choice of k ----
     "q_ann_cluster_stats" -> Q(
       s"""WITH e AS MATERIALIZED (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
          |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
@@ -3745,8 +3745,8 @@ object LlmQueries {
     //      against all k centroids) and a √k-deep hierarchical
     //      assign/probe — the scale path the flat q_ann_knn_graph's
     //      fixed k=16 face cannot provide (its candidate volume is
-    //      n²/k; the flat fitForCellSize fix re-pays n·k in Lloyd
-    //      assign instead). Oracle replays the ENTIRE two-level fit,
+    //      n²/k; a flat fit with k sized to the corpus re-pays n·k in
+    //      Lloyd assign instead). Oracle replays the ENTIRE two-level fit,
     //      hierarchical assignment and probe in DuckDB. ----
     "q_ann_knn_graph_scaled" -> Q(
       s"""$ivf2FitCtes,

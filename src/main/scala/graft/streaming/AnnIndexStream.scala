@@ -178,8 +178,8 @@ object AnnIndexStream {
     * heavily-replayed id can't gravitationally drag centroids toward
     * itself. Single-writer, like [[compact]]; run on maintenance
     * cadence (recall drift is slow — hours/days, not batches). Size
-    * `k` for the corpus (the [[Ivf.fitForCellSize]] rule: cells of
-    * ~128 keep per-search work constant as the store grows).
+    * `k` for the corpus (k ≈ n/128: cells of ~128 keep per-search work
+    * constant as the store grows).
     */
   def refit(spark: SparkSession, storeDir: String, idCol: String,
             vecCol: String, k: Int = 16, iters: Int = 2): Option[DataFrame] = {

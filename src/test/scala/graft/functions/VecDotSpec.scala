@@ -15,7 +15,7 @@ class VecDotSpec extends SparkSpec {
     }
     val df = rows.toDF("id", "a", "b")
     val both = df.select(
-      Ann.dotNative(col("a"), col("b")).as("native"),
+      VecDot.dot(col("a"), col("b")).as("native"),
       Ann.dot(col("a"), col("b")).as("hof")).collect()
     both.foreach { r =>
       // identical fold order → identical doubles, not just close
@@ -30,21 +30,21 @@ class VecDotSpec extends SparkSpec {
       (2L, null.asInstanceOf[Array[Float]], Array(1.0f)),  // null array
       (3L, Array(1.0f, 2.0f), Array(1.0f))                 // length mismatch
     ).toDF("id", "a", "b")
-    val got = df.select(col("id"), Ann.dotNative(col("a"), col("b")).as("d"),
+    val got = df.select(col("id"), VecDot.dot(col("a"), col("b")).as("d"),
         Ann.dot(col("a"), col("b")).as("h"))
       .collect().map(r => (r.getLong(0), r.isNullAt(1), r.isNullAt(2))).toSet
     assert(got === Set((1L, false, false), (2L, true, true), (3L, true, true)))
     // null ELEMENT poisons the sum in both formulations
     val withNullElem = spark.sql(
       "SELECT array(1.0D, CAST(NULL AS DOUBLE), 3.0D) AS a, array(1.0D, 2.0D, 3.0D) AS b")
-    val r = withNullElem.select(Ann.dotNative(col("a"), col("b")).as("d"),
+    val r = withNullElem.select(VecDot.dot(col("a"), col("b")).as("d"),
       Ann.dot(col("a"), col("b")).as("h")).collect().head
     assert(r.isNullAt(0) && r.isNullAt(1))
   }
 
   test("empty arrays dot to 0.0; double arrays supported") {
     val r = spark.sql("SELECT array() AS a")
-      .select(Ann.dotNative(col("a").cast("array<double>"),
+      .select(VecDot.dot(col("a").cast("array<double>"),
         col("a").cast("array<double>")).as("d")).collect().head
     assert(r.getDouble(0) === 0.0)
   }
@@ -56,7 +56,7 @@ class VecDotSpec extends SparkSpec {
       .select(col("id"),
         array(col("id").cast("double"), lit(2.0)).as("a"),
         array(lit(3.0), col("id").cast("double")).as("b"))
-      .select(col("id"), Ann.dotNative(col("a"), col("b")).as("d"))
+      .select(col("id"), VecDot.dot(col("a"), col("b")).as("d"))
     // "*(n)" marks operators fused into WholeStageCodegen stage n; a
     // CodegenFallback expression would force its Project out of the
     // starred stage

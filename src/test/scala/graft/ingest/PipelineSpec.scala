@@ -335,5 +335,19 @@ class PipelineSpec extends SparkSpec {
     val dsd = Pipeline.worklist(sync, cfg.copy(dsdMode = true))
     assert(main.select("id").as[Long].collect().toSet === Set(1L))
     assert(dsd.select("id").as[Long].collect().toSet === Set(2L, 3L))
+
+    // per-run caps (O1): LIMIT 50000 main (file_loader.py:255), LIMIT
+    // 20000 DSD (dsd_loader.py:260); 20,001 Ready rows per family
+    import org.apache.spark.sql.functions._
+    val bulk = spark.range(2 * 20001L).select(
+      col("id"), lit("F").as("facility_id"),
+      concat(when(col("id") % 2 === 0, lit("patient_person_"))
+        .otherwise(lit("prep_clinic_")), col("id"), lit("_1.json"))
+        .as("decrypted_file_name"),
+      lit(SyncState.Ready).as("processed"),
+      lit(Timestamp.valueOf("2025-02-01 10:00:00")).as("modified_date"))
+      .withColumn("file_name", col("decrypted_file_name"))
+    assert(Pipeline.worklist(bulk, cfg).count() === 20001L)
+    assert(Pipeline.worklist(bulk, cfg.copy(dsdMode = true)).count() === 20000L)
   }
 }
