@@ -2,8 +2,9 @@ package graft.ingest
 
 import graft.logs.LogStore
 import graft.model.{FileName, SchemaRegistry, SyncState}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** End-to-end micro-batch ingestion (SURVEY §3.1-§3.3 re-expressed
   * Spark-first).
@@ -13,10 +14,13 @@ import org.apache.spark.sql.functions._
   *    `spark.read.json(paths*)` per staging table, provenance recovered
   *    from `input_file_name()`. Task count tracks bytes, not files.
   *  - 2 idempotency probes per file (file_loader.py:328-336,356-366) →
-  *    ONE broadcast semi/anti join per run (J5 re-planned).
+  *    ONE broadcast left join and ONE collect per run; the
+  *    already-loaded/to-do split happens on the driver (J5 re-planned).
   *  - facility thread pool (multi_file_ingestion_process.py:107-123) →
   *    native partition parallelism.
-  *  - `UPDATE sync_file/...` → append + latest-wins views (LogStore).
+  *  - `UPDATE sync_file/...` → append + latest-wins views (LogStore);
+  *    the new version rows are built on the driver from the collected
+  *    work-list rows, so the update reads no log history.
   *  - DSD quarantine: the reference's `_bad_dates` writer exists but its
   *    call is commented out (dsd_loader.py:553-604,668) — skipped records
   *    are silently dropped. We route them to the quarantine table in BOTH
@@ -90,6 +94,8 @@ object Pipeline {
 
   /** S3+P5+O1: the work-list scan. `dsdMode` selects the complementary
     * prefix predicate (dsd_loader.py:251-260 vs file_loader.py:247-255).
+    * Keeps every `sync_file` column: the run builds its sync_file version
+    * rows from these rows.
     */
   def worklist(syncFile: DataFrame, cfg: Config): DataFrame = {
     val prefixMatch = cfg.registry.dsdFamilies
@@ -100,33 +106,12 @@ object Pipeline {
         col("modified_date") >= lit(cfg.watermark).cast("timestamp") &&
         (if (cfg.dsdMode) prefixMatch else !prefixMatch))
     val scoped = cfg.facilityId.fold(base)(f => base.filter(col("facility_id") === f))
-    val ordered = scoped
-      .select("id", "facility_id", "file_name", "decrypted_file_name",
-        "modified_date")
-      .orderBy(col("modified_date").asc, col("file_name").asc)
+    val ordered = scoped.orderBy(col("modified_date").asc, col("file_name").asc)
     // facility-scoped scans are uncapped like the reference's
     // (multithread_file_loader.py:250-260 has no LIMIT) — up to the
     // maxWorklist driver-memory guard; the overflow resumes next run
     cfg.facilityId.fold(ordered.limit(batchCap(cfg.dsdMode)))(_ =>
       ordered.limit(cfg.maxWorklist))
-  }
-
-  /** J5 re-planned: one pass splits the work list into
-    * (alreadyLoaded, toProcess) against the success set of the ingestion
-    * log — broadcast both ways since the work list is capped.
-    */
-  def idempotencySplit(work: DataFrame, ingestionLog: DataFrame)
-      : (DataFrame, DataFrame) = {
-    val successes = ingestionLog
-      .filter(col("load_status_check") === "success")
-      .select("file_name", "facility_id").distinct()
-    val already = work.join(broadcast(successes),
-      work("decrypted_file_name") === successes("file_name") &&
-        work("facility_id") === successes("facility_id"), "left_semi")
-    val todo = work.join(broadcast(successes),
-      work("decrypted_file_name") === successes("file_name") &&
-        work("facility_id") === successes("facility_id"), "left_anti")
-    (already, todo)
   }
 
   def run(spark: SparkSession, cfg: Config): RunResult = {
@@ -140,20 +125,32 @@ object Pipeline {
     val ingestionLog = store.latestOrEmpty("file_ingestion_log",
       Seq("file_name", "facility_id", "load_start_time"), SchemaRegistry.fileIngestionLog)
 
-    val work = worklist(syncFile, cfg).cache()
-    val (already, todo) = idempotencySplit(work, ingestionLog)
-
+    // J5 re-planned: the work list left-joined to the broadcast success
+    // set of the ingestion log, collected once and split on the driver
+    // into already-loaded and to-do rows
+    val successes = ingestionLog
+      .filter(col("load_status_check") === "success")
+      .select(col("file_name").as("s_file"), col("facility_id").as("s_fac"))
+      .distinct()
+    val work = worklist(syncFile, cfg)
+    val workRows = work
+      .join(broadcast(successes),
+        col("decrypted_file_name") === col("s_file") && col("facility_id") === col("s_fac"),
+        "left")
+      .select(work.columns.map(col) :+ col("s_file").isNotNull.as("_done"): _*)
+      .collect()
     // already-succeeded files: just flip the sync flag (file_loader.py:406-410)
-    val alreadyRows = already.collect()
-    val todoRows = todo.collect()
+    val (alreadyRows, todoRows) = workRows.partition(_.getAs[Boolean]("_done"))
+    def fileKey(r: Row) =
+      (r.getAs[String]("decrypted_file_name"), r.getAs[String]("facility_id"))
 
     // locate files on disk; missing → state 3 (file_loader.py:274-278).
     // The existence probes run DISTRIBUTED (one task per path slice), not
     // as a serial driver loop: on an object store 50k sequential metadata
     // RPCs would stall the driver for minutes.
     val paths = todoRows.map { r =>
-      s"${cfg.parentDir}/${r.getAs[String]("facility_id")}/" +
-        r.getAs[String]("decrypted_file_name")
+      val (f, fac) = fileKey(r)
+      s"${cfg.parentDir}/$fac/$f"
     }
     val existsByPath: Map[String, Boolean] =
       if (paths.isEmpty) Map.empty
@@ -172,26 +169,21 @@ object Pipeline {
             }
           }.collect().toMap
       }
-    val located = todoRows.zip(paths).map { case (r, p) =>
-      (r.getAs[Long]("id"), r.getAs[String]("facility_id"),
-        r.getAs[String]("decrypted_file_name"), p, existsByPath(p))
-    }
-    val (present, missing) = located.partition(_._5)
+    val (present, missing) = todoRows.zip(paths).partition { case (_, p) => existsByPath(p) }
 
     // group per entity: ONE bulk read per staging table
-    val byTable = present.groupBy { case (_, _, f, _, _) => FileName.stagingTable(f) }
+    val byTable = present.groupBy { case (r, _) => FileName.stagingTable(fileKey(r)._1) }
 
     // one entity = one read→transform→write job; returns per-file status
     // + (ingested, quarantined) totals instead of mutating shared state
-    def processEntity(stagingTable: String,
-                      files: Array[(Long, String, String, String, Boolean)])
+    def processEntity(stagingTable: String, files: Array[(Row, String)])
         : (Map[(String, String), (String, Long, String)], Long, Long) = {
       // typed read when the registry carries a schema for this entity
       // (S1, skips the inference pass); inferred otherwise (the
       // reference's file-drives-columns behavior). PERMISSIVE corrupt
       // payloads surface as all-null rows once _corrupt_record drops,
       // so dropAllNull removes them like any empty record.
-      val paths = files.map(_._4).toSeq
+      val paths = files.map(_._2).toSeq
       val raw = cfg.registry.entitySchemas.get(stagingTable) match {
         case Some(schema) =>
           JsonSource.readEntityBatch(spark, schema, paths)
@@ -202,20 +194,6 @@ object Pipeline {
         Stages.emptyToNull(
           Stages.entityTransforms(stagingTable, cfg.registry)(
             Stages.dropAllNull(raw))), loadTime)
-      // cache the PARENT frame once: valid/bad are complementary filters
-      // of it, so caching them separately would scan the JSON twice (the
-      // multiLine read is the dominant cost of the whole entity job)
-      val withProvC = withProv.cache()
-      val (validC, badC) = Stages.dateSplit(withProvC, idCol = Some("id"))
-
-      // per-file counts via aggregation (not a driver loop over files);
-      // the first action materializes the cache, and the totals gate the
-      // writes — no separate existence-probe jobs.
-      val okCounts = validC.groupBy("stg_file_name", "stg_datim_id").count().collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      val badCounts = badC.groupBy("stg_file_name", "stg_datim_id").count().collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-
       // S8/S9 sink: parquet warehouse by default; JDBC escape hatch when
       // cfg.jdbcUrl is set (the reference's actual data plane)
       def writeOut(df: org.apache.spark.sql.DataFrame, table: String): Unit =
@@ -238,31 +216,49 @@ object Pipeline {
           case (None, None, _) =>
             df.write.mode("append").parquet(s"${cfg.warehouseDir}/$table")
         }
-      if (okCounts.valuesIterator.sum > 0) writeOut(validC, stagingTable)
-      if (badCounts.valuesIterator.sum > 0)
-        writeOut(badC, SchemaRegistry.quarantineTable(stagingTable))
 
-      val statuses = files.map { case (_, fac, f, _, _) =>
-        val ok = okCounts.getOrElse((f, fac), 0L)
-        val nBad = badCounts.getOrElse((f, fac), 0L)
-        // EITHER flavor logs the FILE failed when bad-date rows exist —
-        // main: file_loader.py:627-645; DSD: dsd_loader.py:666-682 (its
-        // clean-record path :684-687 only runs when nothing was skipped).
-        // The flavors differ in the error text and in that DSD skips
-        // records without quarantine blocking the valid rows (we quarantine
-        // in both modes — documented improvement).
-        val status =
-          if (ok + nBad == 0) ("failed", 0L, "empty file")
-          else if (nBad > 0 && cfg.dsdMode)
-            ("failed", ok,
-              s"Bad date records filtered out and $ok records successfully ingested")
-          else if (nBad > 0)
-            ("failed", ok, s"$nBad row(s) quarantined: invalid date values")
-          else ("success", ok, null: String)
-        (f, fac) -> status
-      }.toMap
-      withProvC.unpersist()
-      (statuses, okCounts.valuesIterator.sum, badCounts.valuesIterator.sum)
+      // cache the PARENT frame once: valid/bad are complementary filters
+      // of it, so caching them separately would scan the JSON twice (the
+      // multiLine read is the dominant cost of the whole entity job).
+      // Unpersisted on every exit: a failed entity job (e.g. a sink
+      // error) must not pin its cached frame for the session's lifetime.
+      val withProvC = withProv.cache()
+      try {
+        // per-file (valid, bad) counts in ONE aggregation (not a driver
+        // loop over files); it materializes the cache, and the totals
+        // gate the writes — no separate existence-probe jobs.
+        val ok = Stages.datesValid(withProvC)
+        val counts = withProvC.groupBy("stg_file_name", "stg_datim_id")
+          .agg(count_if(ok), count_if(!ok)).collect()
+          .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
+          .toMap
+        val nOk = counts.valuesIterator.map(_._1).sum
+        val nBad = counts.valuesIterator.map(_._2).sum
+        val (validC, badC) = Stages.dateSplit(withProvC, idCol = Some("id"))
+        if (nOk > 0) writeOut(validC, stagingTable)
+        if (nBad > 0) writeOut(badC, SchemaRegistry.quarantineTable(stagingTable))
+
+        val statuses = files.map { case (r, _) =>
+          val key = fileKey(r)
+          val (ok, bad) = counts.getOrElse(key, (0L, 0L))
+          // EITHER flavor logs the FILE failed when bad-date rows exist —
+          // main: file_loader.py:627-645; DSD: dsd_loader.py:666-682 (its
+          // clean-record path :684-687 only runs when nothing was
+          // skipped). The flavors differ in the error text and in that DSD
+          // skips records without quarantine blocking the valid rows (we
+          // quarantine in both modes — documented improvement).
+          val status =
+            if (ok + bad == 0) ("failed", 0L, "empty file")
+            else if (bad > 0 && cfg.dsdMode)
+              ("failed", ok,
+                s"Bad date records filtered out and $ok records successfully ingested")
+            else if (bad > 0)
+              ("failed", ok, s"$bad row(s) quarantined: invalid date values")
+            else ("success", ok, null: String)
+          key -> status
+        }.toMap
+        (statuses, nOk, nBad)
+      } finally withProvC.unpersist()
     }
 
     // submit entity jobs CONCURRENTLY (FanOut): sequential submission
@@ -280,8 +276,8 @@ object Pipeline {
         scala.util.Try(processEntity(t, fs)).recover {
           case e: Throwable =>
             val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-            (fs.map { case (_, fac, f, _, _) =>
-              (f, fac) -> (("failed", 0L, s"entity job failed: $msg"))
+            (fs.map { case (r, _) =>
+              fileKey(r) -> (("failed", 0L, s"entity job failed: $msg"))
             }.toMap, 0L, 0L)
         }.get
       }
@@ -316,43 +312,35 @@ object Pipeline {
         "datim_id", "batch_id", "file_name", "table_name", "load_time",
         "json_rec_count", "processed", "error_message"))
 
-    // sync_file state transitions as version appends (S11): join the
-    // capped update set (broadcast) against the current view, rewrite the
-    // touched columns, append new versions.
-    def syncUpdate(rows: Seq[(Long, String, String, Int, String)]): Unit =
-      if (rows.nonEmpty) {
-        val upd = rows.toDF("uid", "u_file", "u_fac", "u_state", "u_err")
-        val out = syncFile.join(broadcast(upd), syncFile("id") === col("uid"))
-          .withColumn("processed", col("u_state"))
-          .withColumn("ingest_start_time", lit(loadTime))
-          .withColumn("ingest_end_time", lit(endTime))
-          .withColumn("ingest_status_check",
-            when(col("u_state") === SyncState.Ingested, "success")
-              .when(col("u_state") === SyncState.Failed, "failed")
-              .otherwise(lit(null: String)))
-          .withColumn("ingest_error_message",
-            substring(col("u_err"), 0, 10000)) // file_loader.py:189
-          .drop("uid", "u_file", "u_fac", "u_state", "u_err")
-        store.update("sync_file", out)
-      }
-
-    val statusByKey = fileStatus
-    val todoUpdates = located.collect {
-      case (id, fac, f, _, true) =>
-        val (status, _, err) = statusByKey.getOrElse((f, fac), ("failed", 0L, "not processed"))
-        (id, f, fac,
-          if (status == "success") SyncState.Ingested else SyncState.Failed,
-          Option(err).orNull)
-    }.toSeq
-    val missingUpdates = missing.map { case (id, fac, f, _, _) =>
-      (id, f, fac, SyncState.MissingOrPast, "file missing: loaded in the past")
-    }.toSeq
-    val alreadyUpdates = alreadyRows.map { r =>
-      (r.getAs[Long]("id"), r.getAs[String]("decrypted_file_name"),
-        r.getAs[String]("facility_id"), SyncState.Ingested,
-        null: String)
-    }.toSeq
-    syncUpdate(todoUpdates ++ missingUpdates ++ alreadyUpdates)
+    // sync_file state transitions as version appends (S11): each touched
+    // file's work-list row (every sync_file column, as the view held it)
+    // with the touched columns rewritten, built on the driver — the work
+    // list is capped, and re-reading the view would re-run its window
+    // over the whole sync_file history.
+    def syncVersion(r: Row, state: Int, err: String): Row = {
+      val touched = Map[String, Any](
+        "processed" -> state,
+        "ingest_start_time" -> loadTime,
+        "ingest_end_time" -> endTime,
+        "ingest_status_check" -> (state match {
+          case SyncState.Ingested => "success"
+          case SyncState.Failed => "failed"
+          case _ => null
+        }),
+        "ingest_error_message" -> Option(err).map(Stages.truncateForSyncLog).orNull)
+      Row.fromSeq(syncFile.schema.fieldNames.toSeq.map(c => touched.getOrElse(c, r.getAs[Any](c))))
+    }
+    val todoVersions = present.map { case (r, _) =>
+      val (status, _, err) = fileStatus.getOrElse(fileKey(r), ("failed", 0L, "not processed"))
+      syncVersion(r, if (status == "success") SyncState.Ingested else SyncState.Failed, err)
+    }
+    val missingVersions = missing.map { case (r, _) =>
+      syncVersion(r, SyncState.MissingOrPast, "file missing: loaded in the past")
+    }
+    val alreadyVersions = alreadyRows.map(syncVersion(_, SyncState.Ingested, null))
+    val syncVersions = (todoVersions ++ missingVersions ++ alreadyVersions).toSeq
+    if (syncVersions.nonEmpty)
+      store.update("sync_file", spark.createDataFrame(syncVersions.asJava, syncFile.schema))
 
     // run-level pipeline log (file_ingestion_process.py:24-37)
     val nFailed = fileStatus.values.count(_._1 == "failed")
@@ -363,13 +351,12 @@ object Pipeline {
     ).toDF("log_id", "start_time", "end_time", "status", "process_type",
       "error_message", "records_processed"))
 
-    // the left-semi/left-anti split partitions the work list exactly;
-    // counting `work` here instead would re-read it against the view
-    // the sync update just appended to, where no claimed file is Ready
-    val res = RunResult(runId, alreadyRows.length + todoRows.length,
+    // the collected work list, not a recount of `work`: that would re-read
+    // it against the view the sync update just appended to, where no
+    // claimed file is Ready
+    val res = RunResult(runId, workRows.length,
       fileStatus.values.count(_._1 == "success"), nFailed,
       missing.length, recordsIngested, recordsQuarantined)
-    work.unpersist()
 
     // MVCC auto-compaction (r10 verdict task): the two logs every run
     // appends to — sync_file gets one version row per touched file per

@@ -121,6 +121,13 @@ object Stages {
     c.isNull || trim(c.cast(StringType)) === "" ||
       try_to_timestamp(c.cast(StringType)).isNotNull
 
+  /** The row-level predicate [[dateSplit]] splits on: every date column
+    * passes [[dateValid]] (true when the frame has none). Never null, so
+    * `count_if(p)` and `count_if(!p)` partition the rows.
+    */
+  def datesValid(df: DataFrame): Column =
+    dateColumns(df).map(c => dateValid(col(c))).reduceOption(_ && _).getOrElse(lit(true))
+
   /** Row-level valid/quarantine split over all date columns. Returns
     * (valid, quarantine) where quarantine rows carry an `error_message`
     * naming each offending column/value, shaped like the reference's
@@ -137,7 +144,7 @@ object Stages {
     val dcols = dateColumns(df)
     if (dcols.isEmpty) (df, df.limit(0).withColumn("error_message", lit(null: String)))
     else {
-      val allValid = dcols.map(c => dateValid(col(c))).reduce(_ && _)
+      val allValid = datesValid(df)
       val idExpr = idCol.filter(df.columns.contains)
         .map(c => col(c).cast(StringType)).getOrElse(lit("?"))
       val msg = concat_ws("; ", dcols.map { c =>

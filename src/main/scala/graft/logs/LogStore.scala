@@ -41,8 +41,8 @@ final case class LogStore(spark: SparkSession, dir: String) {
   /** One parquet file per append: control-plane appends are small by
     * contract (the reference's equivalent is row INSERTs into Postgres;
     * the data plane never goes through LogStore), but the rows often
-    * arrive through a shuffle — e.g. Pipeline's sync updates join
-    * against the [[latest]] window view — and writing them at shuffle
+    * arrive through a shuffle — e.g. Maintenance's sync requeue reads
+    * the [[latest]] window view — and writing them at shuffle
     * parallelism appends up to `shuffle.partitions` near-empty files
     * that every later [[history]]/[[latest]] read pays to list and open.
     * `coalesce(1)` collapses only the write stage (upstream stages keep
@@ -138,12 +138,11 @@ final case class LogStore(spark: SparkSession, dir: String) {
     val bytes = graft.core.Fs.dataFileStats(path(table), conf).bytes
     val nTarget =
       math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val current = latest(table, keys).cache()
-    current.count() // materialize before overwrite
-    current.withColumn("_version_ts", lit(LogStore.nextVersion()))
+    // written straight from the view: the overwrite target is the
+    // separate `_compacted` directory, so nothing reads what it replaces
+    latest(table, keys).withColumn("_version_ts", lit(LogStore.nextVersion()))
       .coalesce(nTarget)
       .write.mode("overwrite").parquet(path(table) + "_compacted")
-    current.unpersist()
     graft.core.Fs.swapInPlace(path(table), path(table) + "_compacted", conf)
   }
 

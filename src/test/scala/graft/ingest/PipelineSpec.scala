@@ -5,6 +5,7 @@ import graft.logs.LogStore
 import graft.model.{SchemaRegistry, SyncState}
 import java.nio.file.Files
 import java.sql.Timestamp
+import org.apache.spark.sql.graftbridge.CacheBridge
 
 /** Golden end-to-end tests of the ingestion micro-batch (FIXTURES.md §4
   * scenarios: happy path, idempotent re-run, missing file, bad dates,
@@ -12,6 +13,11 @@ import java.sql.Timestamp
   */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Spark jobs one two-entity micro-batch that compacts both logs may
+    * start (broadcasts and adaptive stages count as jobs).
+    */
+  private val PipelineJobBudget = 24
 
   private def writeFile(dir: java.io.File, name: String, content: String): Unit = {
     dir.mkdirs()
@@ -322,6 +328,113 @@ class PipelineSpec extends SparkSpec {
     assert(on.logStore.history("file_ingestion_log").count() ===
       off.logStore.latest("file_ingestion_log",
         Seq("file_name", "facility_id", "load_start_time")).count())
+  }
+
+  test("a failed entity job fails its files and releases its cached frame") {
+    val (cfg0, parent) = setup()
+    // a Derby database that does not exist (create=false): the staging
+    // append throws after the entity's frame is cached and counted
+    val cfg = cfg0.copy(
+      jdbcUrl = Some(s"jdbc:derby:memory:graft_absent_${System.nanoTime()};create=false"),
+      jdbcOptions = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver"))
+    writeFile(new java.io.File(parent, "FAC1"),
+      "biometric_0_20250103141949_decrypted.json",
+      """[{"id": 1, "uuid": "u1", "match_type": "m"}]""")
+    seedSync(cfg, Seq(syncRow(1L, "FAC1", "biometric_0_20250103141949.json")))
+
+    val before = CacheBridge.entries(spark)
+    val res = Pipeline.run(spark, cfg)
+    assert(res.filesFailed === 1 && res.recordsIngested === 0)
+    val log = cfg.logStore.history("file_ingestion_log").collect().head
+    assert(log.getAs[String]("error_message").startsWith("entity job failed"))
+    assert(CacheBridge.entries(spark) === before, "the failed entity's cached frame leaked")
+  }
+
+  test("sync_file version rows: every column for ingested, bad-date, missing " +
+      "and already-loaded files") {
+    import org.apache.spark.sql.Row
+    val (cfg, parent) = setup()
+    writeFile(new java.io.File(parent, "FAC1"),
+      "biometric_0_20250103141949_decrypted.json",
+      """[{"id": 1, "uuid": "u1", "match_type": "m"}]""")
+    writeFile(new java.io.File(parent, "FAC2"),
+      "hiv_enrollment_0_20250104000000_decrypted.json",
+      """[
+        |{"id": 1, "uuid": "u1", "enrollment_date": "2024-06-01"},
+        |{"id": 2, "uuid": "u2", "enrollment_date": "junk-date"}
+        |]""".stripMargin.replace("|", ""))
+    // ingested, bad-date failed, missing on disk, already loaded: each
+    // seeded row carries its own create/modified dates and counts
+    val specs = Seq(
+      (1L, "FAC1", "biometric_0_20250103141949.json"),
+      (2L, "FAC2", "hiv_enrollment_0_20250104000000.json"),
+      (3L, "FACX", "hiv_art_pharmacy_0_20250105000000.json"),
+      (4L, "FAC4", "patient_visit_0_20250106000000.json"))
+    val seeded = specs.map { case (id, fac, enc) =>
+      syncRow(id, fac, enc).copy(
+        _6 = Timestamp.valueOf(s"2025-01-0$id 08:00:00"),
+        _7 = Timestamp.valueOf(s"2025-02-0$id 09:00:00"),
+        _10 = s"ingest_$id", _11 = s"table_$id", _13 = Integer.valueOf(10 * id.toInt))
+    }
+    seedSync(cfg, seeded)
+    cfg.logStore.append("file_ingestion_log", Seq(
+      (Timestamp.valueOf("2025-01-01 00:00:00"), Timestamp.valueOf("2025-01-01 00:00:01"),
+        "success", "stg_patient_visit", "patient_visit_0_20250106000000_decrypted.json",
+        "FAC4", 5, null: String)).toDF(
+      "load_start_time", "load_end_time", "load_status_check", "table_name",
+      "file_name", "facility_id", "json_rec_count", "error_message"))
+
+    val res = Pipeline.run(spark, cfg)
+    assert(res.filesSeen === 4 && res.filesIngested === 1)
+    assert(res.filesFailed === 1 && res.filesMissing === 1)
+    val run = cfg.logStore.history("file_ingestion_pipeline_log").collect().head
+    val (start, end) = (run.getAs[Timestamp]("start_time"), run.getAs[Timestamp]("end_time"))
+    val outcome = Map(
+      1L -> (SyncState.Ingested, "success", null),
+      2L -> (SyncState.Failed, "failed", "1 row(s) quarantined: invalid date values"),
+      3L -> (SyncState.MissingOrPast, null, "file missing: loaded in the past"),
+      4L -> (SyncState.Ingested, "success", null))
+    val expected = seeded.map { s =>
+      val (state, check, err) = outcome(s._1)
+      Row(s._1, s._2, s._3, s._4, state, s._6, s._7, start, end, s._10, s._11,
+        check, s._13, err)
+    }
+    val written = cfg.logStore.history("sync_file")
+      .filter($"ingest_start_time".isNotNull).drop("_version_ts")
+    assert(written.orderBy("id").collect().toSeq === expected)
+    assert(cfg.logStore.latest("sync_file", Seq("id")).orderBy("id").collect().toSeq
+      === expected)
+  }
+
+  test("job budget: one two-entity micro-batch that compacts both logs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.ListenerBridge
+    val (cfg0, parent) = setup()
+    val cfg = cfg0.copy(logCompactMinFiles = 1)
+    writeFile(new java.io.File(parent, "FAC1"),
+      "biometric_0_20250103141949_decrypted.json",
+      """[{"id": 1, "uuid": "u1", "match_type": "m"}]""")
+    writeFile(new java.io.File(parent, "FAC1"),
+      "hiv_enrollment_0_20250104000000_decrypted.json",
+      """[{"id": 1, "uuid": "u1", "enrollment_date": "2024-06-01"}]""")
+    seedSync(cfg, Seq(
+      syncRow(1L, "FAC1", "biometric_0_20250103141949.json"),
+      syncRow(2L, "FAC1", "hiv_enrollment_0_20250104000000.json")))
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    ListenerBridge.drain(sc)
+    sc.addSparkListener(counter)
+    val res =
+      try { val r = Pipeline.run(spark, cfg); ListenerBridge.drain(sc); r }
+      finally sc.removeSparkListener(counter)
+    assert(res.filesIngested === 2)
+    assert(cfg.logStore.history("sync_file").count() === 2, "sync_file was compacted")
+    assert(jobs.get <= PipelineJobBudget,
+      s"${jobs.get} Spark jobs for one micro-batch (budget $PipelineJobBudget)")
   }
 
   test("worklist honors prefix split between main and DSD loaders (P5)") {
