@@ -66,8 +66,6 @@ case class CellSims(left: Expression, right: Expression,
     groups.get(grpAny.asInstanceOf[Int]) match {
       case None => null
       case Some(g) =>
-        val cents = g.cents
-        val cns = g.norms
         val v = vecAny.asInstanceOf[ArrayData]
         val n = v.numElements()
         var i = 0
@@ -79,25 +77,7 @@ case class CellSims(left: Expression, right: Expression,
           x(i) = if (isF) v.getFloat(i).toDouble else v.getDouble(i)
           i += 1
         }
-        var vnAcc = 0.0
-        i = 0
-        while (i < n) { vnAcc += x(i) * x(i); i += 1 }
-        val vn = math.sqrt(vnAcc)
-        val k = cents.length
-        val sims = new Array[Any](k)
-        var j = 0
-        while (j < k) {
-          val c = cents(j)
-          if (c.length != n) sims(j) = null
-          else {
-            var s = 0.0
-            var t = 0
-            while (t < n) { s += x(t) * c(t); t += 1 }
-            sims(j) = s / (vn * cns(j))
-          }
-          j += 1
-        }
-        InternalRow(g.cells, new GenericArrayData(sims))
+        InternalRow(g.cells, new GenericArrayData(g.sims(x)))
     }
   }
 

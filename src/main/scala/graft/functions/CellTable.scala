@@ -16,9 +16,14 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
   * deserializes once per executor. A plan literal would instead ride
   * every task binary and be deserialized once per task, so a quantizer
   * of any size takes this one path.
+  *
+  * A table built with [[CellTable.apply]] and never broadcast serves the
+  * driver-side assignment of a sample-trained quantizer
+  * ([[graft.llm.Ivf.fitTwoLevel]]); it runs the same [[CellTable.Group.sims]]
+  * loop as the kernel, so both sides see bit-identical similarities.
   */
 final class CellTable private (
-    private[functions] val groups: Map[Int, CellTable.Group])
+    private[graft] val groups: Map[Int, CellTable.Group])
   extends Serializable
 
 object CellTable {
@@ -26,26 +31,59 @@ object CellTable {
   /** One group: shared immutable cell-id ArrayData (every result row
     * reuses it), centroids, and their norms.
     */
-  private[functions] final class Group(
+  private[graft] final class Group(
       val cells: GenericArrayData,
       val cents: Array[Array[Double]],
-      val norms: Array[Double]) extends Serializable
+      val norms: Array[Double]) extends Serializable {
 
-  /** Broadcast a table given as `(group, cell, centroid)` rows. Each
-    * group's entries are sorted by cell id here, so the callers'
-    * ascending argmax/argmin folds keep the lowest cell on ties. Norms
-    * use the same left-to-right fold as [[graft.llm.Ann.l2norm]], so
-    * they are bit-identical to the column form.
+    /** Cosine similarity of `x` against each of the group's centroids, in
+      * cell order: `Σ x[i]·c[i] / (‖x‖ · ‖c‖)`, every fold left-to-right
+      * in double exactly like [[graft.llm.Ann.dot]] and
+      * [[graft.llm.Ann.l2norm]]. A centroid whose length differs from
+      * `x` gets a null entry.
+      */
+    def sims(x: Array[Double]): Array[Any] = {
+      val n = x.length
+      var vnAcc = 0.0
+      var i = 0
+      while (i < n) { vnAcc += x(i) * x(i); i += 1 }
+      val vn = math.sqrt(vnAcc)
+      val k = cents.length
+      val out = new Array[Any](k)
+      var j = 0
+      while (j < k) {
+        val c = cents(j)
+        if (c.length != n) out(j) = null
+        else {
+          var s = 0.0
+          var t = 0
+          while (t < n) { s += x(t) * c(t); t += 1 }
+          out(j) = s / (vn * norms(j))
+        }
+        j += 1
+      }
+      out
+    }
+  }
+
+  /** A table given as `(group, cell, centroid)` rows. Each group's
+    * entries are sorted by cell id here, so the callers' ascending
+    * argmax/argmin folds keep the lowest cell on ties. Norms use the
+    * same left-to-right fold as [[graft.llm.Ann.l2norm]], so they are
+    * bit-identical to the column form.
     */
+  def apply(rows: Seq[(Int, Int, Seq[Double])]): CellTable =
+    new CellTable(rows.groupBy(_._1).map { case (g, entries) =>
+      val sorted = entries.sortBy(_._2)
+      val cents = sorted.map(_._3.toArray).toArray
+      g -> new Group(new GenericArrayData(sorted.map(_._2).toArray), cents,
+        cents.map(c => math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x))))
+    })
+
+  /** Broadcast a table given as `(group, cell, centroid)` rows. */
   def broadcast(spark: SparkSession,
                 rows: Seq[(Int, Int, Seq[Double])]): Broadcast[CellTable] =
-    spark.sparkContext.broadcast(new CellTable(rows.groupBy(_._1).map {
-      case (g, entries) =>
-        val sorted = entries.sortBy(_._2)
-        val cents = sorted.map(_._3.toArray).toArray
-        g -> new Group(new GenericArrayData(sorted.map(_._2).toArray), cents,
-          cents.map(c => math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x))))
-    }))
+    spark.sparkContext.broadcast(apply(rows))
 
   /** [[broadcast]] for a frame that is collected inside `f` (a Lloyd
     * step): the table is destroyed as soon as `f` returns instead of

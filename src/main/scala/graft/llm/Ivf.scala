@@ -11,10 +11,13 @@ import org.apache.spark.sql.functions._
   * alternative to the hyperplane-LSH path in [[Ann]] — better when the
   * corpus has natural cluster structure, at the cost of a training pass.
   *
-  * Scale: training is `iters` passes of (broadcast k centroids → map-side
-  * nearest-cell assign → groupBy-cell average); search touches
-  * ~nprobe/k of the corpus. Centroids are dimension-sized (k·d doubles)
-  * — always broadcastable.
+  * Scale: the flat [[fit]] trains on the whole corpus, `iters` passes of
+  * (broadcast k centroids → map-side nearest-cell assign → groupBy-cell
+  * average). The two-level [[fitTwoLevel]] trains on a bounded md5-stride
+  * sample collected once to the driver (up to 2·sampleCap − 1 vectors)
+  * and runs every Lloyd sweep there; only its final assignment touches
+  * the corpus. Search touches ~nprobe/k of the corpus. Centroids are
+  * dimension-sized (k·d doubles) — always broadcastable.
   *
   * Fully deterministic, including across engines:
   *  - seeding filters on the first 4 hex digits of md5(id) (portable —
@@ -94,7 +97,7 @@ object Ivf {
     * element). Rows with no argmax are dropped: a null vector, a null
     * element, a group absent from the table, or an empty group.
     */
-  private def labelCells(df: DataFrame, vecCol: String, grp: Column,
+  private[llm] def labelCells(df: DataFrame, vecCol: String, grp: Column,
                          table: Broadcast[CellTable],
                          cellCol: String): DataFrame =
     df.withColumn("_cs", CellSims.sims(col(vecCol), grp, table))
@@ -106,7 +109,7 @@ object Ivf {
     * frame: exact integer sums of floor(v·10⁶), one double division —
     * identical for any partitioning / aggregation order.
     */
-  private def cellMeans(labelled: DataFrame, keys: Seq[String],
+  private[llm] def cellMeans(labelled: DataFrame, keys: Seq[String],
                         vecCol: String): DataFrame =
     labelled
       .select(keys.map(col) :+ posexplode(col(vecCol)).as(Seq("i", "v")): _*)
@@ -129,6 +132,12 @@ object Ivf {
         .collect().toIndexedSeq.zipWithIndex
         .map { case (r, i) => (i, r.getSeq[Double](0)) }
     }
+
+  /** The first four hex digits of md5(id) as an integer: the portable
+    * hash-stride key behind seeding and sampling.
+    */
+  private def hex4(id: Column): Column =
+    conv(substring(md5(id.cast("string")), 1, 4), 16, 10).cast("long")
 
   /** Train: deterministic seeding (an md5-strided sample — no global
     * window/sort over the corpus, and portable to any engine with md5)
@@ -155,8 +164,8 @@ object Ivf {
   /** The Lloyd training pass alone — seed + `iters` iterations —
     * returning the driver-side centroid rows without assigning (or
     * caching) the corpus. [[fit]] layers the final assignment on top;
-    * [[fitTwoLevel]] runs this on a bounded sample where a full-corpus
-    * assignment would be wasted work. Centroids are k·d doubles, so
+    * [[fitTwoLevel]] runs the same recipe on the driver over its
+    * collected sample. Centroids are k·d doubles, so
     * each iteration ([[lloydStep]]) materializes them to the driver:
     * this truncates the lineage (otherwise iteration i's plan
     * re-executes every previous one) and keeps the per-iteration cost
@@ -169,8 +178,7 @@ object Ivf {
     // (TakeOrderedAndProject — no global sort materialization)
     val stride = math.max(1L, n / math.max(1, 4 * k))
     var cents: IndexedSeq[(Int, Seq[Double])] = df
-      .filter(conv(substring(md5(col(idCol).cast("string")), 1, 4), 16, 10)
-        .cast("long") % stride === 0)
+      .filter(hex4(col(idCol)) % stride === 0)
       .orderBy(col(idCol)).limit(k)
       .select(transform(col(vecCol), x => x.cast("double")).as("centroid"))
       .collect().toIndexedSeq.zipWithIndex
@@ -190,9 +198,9 @@ object Ivf {
   // assign and probe both compare every vector against all k centroids
   // (n·k = n²/cellSize; measured: a flat fit at k = n/128 killed at
   // 900 s on 200k vectors). The standard IVF fix, both halves:
-  //  - SAMPLE-TRAINED Lloyd: centroids are fit on a bounded md5-stride
-  //    sample (≤ sampleCap vectors), never the full corpus — training
-  //    cost is sample-sized regardless of n;
+  //  - SAMPLE-TRAINED Lloyd: centroids are fit on the driver over a
+  //    bounded md5-stride sample (< 2·sampleCap vectors), never the full
+  //    corpus — training cost is sample-sized regardless of n;
   //  - TWO-LEVEL assign/probe: k1 ≈ √k top cells, each holding its own
   //    k2 ≈ k/k1 sub-quantizer. A vector finds its leaf cell in
   //    k1 + k2 ≈ 2√k comparisons instead of k; a query probes nprobe1
@@ -218,21 +226,25 @@ object Ivf {
 
   /** Train a two-level index sized for the corpus: leaf-cell count
     * k = max(4, n/targetCellSize) split as k1 = ⌈√k⌉ top cells ×
-    * k2 = ⌈k/k1⌉ sub-cells. Level 1 is the standard [[fit]] recipe on
-    * a hash-stride sample of ≤ sampleCap vectors; level 2 runs the
-    * same Lloyd rules per level-1 cell over the sample members (seeds:
-    * the k2 lowest-id members; assign: argmax over the OWN cell's
-    * sub-centroids, round(sim,9) + lowest-sub tiebreak; means:
-    * quantized integer sums; dead subs renumbered per cell). A level-1
-    * cell that ends up with no sample members keeps its level-1
-    * centroid as its sole leaf, so every corpus vector always finds a
-    * leaf. Only the bounded sample is ever compared against all
-    * sub-centroids during training; the corpus is touched exactly
-    * twice (level-1 assign, then leaf assign within the chosen cell).
+    * k2 = ⌈k/k1⌉ sub-cells. Level 1 is the [[fitCentroidRows]] recipe
+    * on a hash-stride sample; level 2 runs the same Lloyd rules per
+    * level-1 cell over the sample members (seeds: the k2 lowest-id
+    * members; assign: argmax over the OWN cell's sub-centroids,
+    * round(sim,9) + lowest-sub tiebreak; means: quantized integer sums;
+    * dead subs renumbered per cell). A level-1 cell that ends up with no
+    * sample members keeps its level-1 centroid as its sole leaf, so
+    * every corpus vector always finds a leaf.
     *
-    * Centroid frames are driver-materialized between iterations (k·d
-    * doubles — the lineage-truncation stance of [[fit]]); at extreme
-    * k, swap the collects for localCheckpoint.
+    * All of the training runs on the driver: the sample is collected
+    * once ([[collectSample]]) and every sweep is a loop over primitive
+    * arrays ([[hostLloydStep]]), so a fit costs a count, one sample
+    * collect and the final assignment, whatever `iters` is. The sample
+    * stride ss = max(1, n/sampleCap) rounds down, so the sample holds
+    * about n/ss ≤ 2·sampleCap − 1 vectors (md5 spreads the ids evenly),
+    * and the driver holds all of it while training: at the default
+    * 131,071 vectors, about 64 MB of doubles at d = 64. The corpus is
+    * touched by the final assignment alone: two chained projections
+    * (level-1 cell, then leaf within it), cached lazily.
     */
   def fitTwoLevel(df: DataFrame, idCol: String, vecCol: String,
                   targetCellSize: Int = 128, iters: Int = 2,
@@ -245,74 +257,163 @@ object Ivf {
     val k = math.max(4L, n / targetCellSize)
     val k1 = math.ceil(math.sqrt(k.toDouble)).toInt
     val k2 = ((k + k1 - 1) / k1).toInt
+    val sample = collectSample(df, idCol, vecCol, math.max(1L, n / sampleCap))
 
-    val ss = math.max(1L, n / sampleCap)
-    val sample = df.filter(
-      conv(substring(md5(col(idCol).cast("string")), 1, 4), 16, 10)
-        .cast("long") % ss === 0)
-
-    val l1Rows = fitCentroidRows(sample, idCol, vecCol, k1, iters)
-    val l1Cents = toCentroidDf(spark, l1Rows).withColumnRenamed("cell", "l1")
-    val l1Table = CellTable.broadcast(spark, flat(l1Rows))
-    // sample → level-1 cell, fixed for the whole level-2 training;
-    // every level-2 iteration re-reads the sample with its fixed l1
-    // label, so cache it for the training loop, released before return
-    val sampleL1 = labelCells(sample, vecCol, lit(0), l1Table, "l1")
-      .select(col(idCol),
-        transform(col(vecCol), x => x.cast("double")).as("_v"), col("l1"))
-      .cache()
-
-    // seeds: per level-1 cell, the k2 lowest-id sample members
-    val wseed = org.apache.spark.sql.expressions.Window
-      .partitionBy("l1").orderBy(col(idCol))
-    var subRows: IndexedSeq[(Int, Int, Seq[Double])] =
-      sampleL1.withColumn("_rn", row_number().over(wseed))
-        .filter(col("_rn") <= k2)
-        .select(col("l1"), (col("_rn") - 1).as("sub"), col("_v"))
-        .collect().toIndexedSeq
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-        .sortBy(t => (t._1, t._2))
-
+    // level 1, all in group 0: seeds are the k1 lowest-id rows on the
+    // sample's own 4-per-cell stride, as in fitCentroidRows
+    val stride = math.max(1L, sample.length / math.max(1, 4 * k1))
+    var l1Rows: IndexedSeq[(Int, Int, Seq[Double])] = sample.iterator
+      .filter(_._1 % stride == 0).take(k1).zipWithIndex
+      .map { case ((_, x), i) =>
+        require(x != null, s"fitTwoLevel: a seed $vecCol is null or holds a null")
+        (0, i, x.toSeq)
+      }.toIndexedSeq
+    val asL1 = sample.map { case (_, x) => (0, x) }
     var it = 0
-    while (it < iters) {
-      // fused assign+recompute over the per-l1 sub-quantizer (group =
-      // l1, so the kernel ranks only the OWN cell's k2 subs): quantized
-      // per-(l1, sub) means in one sample pass, then dead subs
-      // renumbered per cell (driver-side)
-      val recomputed = CellTable.scoped(spark, subRows) { table =>
-        cellMeans(labelCells(sampleL1, "_v", col("l1"), table, "sub"),
-            Seq("l1", "sub"), "_v")
-          .collect().toIndexedSeq
-          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-      }
-      subRows = recomputed.groupBy(_._1).toIndexedSeq.sortBy(_._1).flatMap {
-        case (l1, rows) => rows.sortBy(_._2).zipWithIndex
-          .map { case ((_, _, c), s) => (l1, s, c) }
-      }
-      it += 1
-    }
+    while (it < iters) { l1Rows = hostLloydStep(l1Rows, asL1); it += 1 }
+    val l1Table = CellTable(l1Rows)
 
-    sampleL1.unpersist()
+    // level 2: each sample member, in id order, grouped by its level-1
+    // cell; seeds are each cell's k2 lowest-id members
+    val members = sample.flatMap { case (_, x) =>
+      nearestCell(l1Table, 0, x).map(l1 => (l1, x))
+    }
+    var subRows: IndexedSeq[(Int, Int, Seq[Double])] =
+      members.groupBy(_._1).toIndexedSeq.sortBy(_._1).flatMap {
+        case (l1, ms) => ms.take(k2).zipWithIndex
+          .map { case ((_, x), sub) => (l1, sub, x.toSeq) }
+      }
+    it = 0
+    while (it < iters) { subRows = hostLloydStep(subRows, members); it += 1 }
+
     // fallback: a level-1 cell with no surviving subs keeps its own
     // centroid as the single leaf — total coverage for the full assign
     val covered = subRows.map(_._1).toSet
-    val leafRows = (subRows ++ l1Rows.filterNot(r => covered(r._1))
-        .map(r => (r._1, 0, r._2)))
+    val leafRows = (subRows ++ l1Rows.filterNot(r => covered(r._2))
+        .map { case (_, l1, c) => (l1, 0, c) })
       .sortBy(t => (t._1, t._2))
     val leafHost = leafRows.zipWithIndex
       .map { case ((l1, _, c), cell) => (cell, l1, c) }
-    val leafCents = leafHost.toDF("cell", "l1", "centroid")
 
     // hierarchical corpus assign, two chained projections: nearest
     // level-1 cell (k1 comparisons), then nearest leaf within it (group
     // = l1, k2 comparisons, lowest-global-cell tiebreak)
     val leafTable = CellTable.broadcast(spark,
       leafHost.map { case (cell, l1, c) => (l1, cell, c) })
-    val asg = labelCells(labelCells(df, vecCol, lit(0), l1Table, "_l1"),
+    val asg = labelCells(
+        labelCells(df, vecCol, lit(0), spark.sparkContext.broadcast(l1Table), "_l1"),
         vecCol, col("_l1"), leafTable, "cell")
       .select(col(idCol), col("cell"))
 
-    Index2(l1Cents, leafCents, asg.cache())
+    Index2(l1Rows.map { case (_, l1, c) => (l1, c) }.toDF("l1", "centroid"),
+      leafHost.toDF("cell", "l1", "centroid"), asg.cache())
+  }
+
+  // -------------------------------------------------------------------
+  // Driver-side training over a collected sample. Each piece mirrors a
+  // distributed one bit for bit, so a sample-trained quantizer equals
+  // the one the same Lloyd recipe would fit through Spark:
+  //  - hostVec is the vector as labelCells reads it (null vector or null
+  //    element: no argmax);
+  //  - nearestCell is argmaxFold over the same CellTable.Group.sims loop
+  //    the CellSims kernel runs;
+  //  - hostMeans is cellMeans: Σ floor(v·10⁶) as Long, one division.
+  // -------------------------------------------------------------------
+
+  /** A collected `array<double>` as the driver-side training holds it:
+    * null for a null vector or one with a null element, the rows
+    * [[labelCells]] drops.
+    */
+  private[llm] def hostVec(v: scala.collection.Seq[java.lang.Double]): Array[Double] =
+    if (v == null || v.contains(null)) null else v.iterator.map(_.doubleValue).toArray
+
+  /** The md5-stride sample of `df` — rows whose hex4 (the first four hex
+    * digits of md5(id) as an integer) is a multiple of `ss` — collected
+    * in id order as (hex4, vector). One exchange into a single sorted
+    * partition: the same ascending id order as orderBy, without its
+    * range-bounds sampling job.
+    */
+  private def collectSample(df: DataFrame, idCol: String, vecCol: String,
+                            ss: Long): IndexedSeq[(Long, Array[Double])] =
+    df.filter(hex4(col(idCol)) % ss === 0)
+      .repartition(1).sortWithinPartitions(col(idCol))
+      .select(hex4(col(idCol)), col(vecCol).cast("array<double>"))
+      .collect().toIndexedSeq
+      .map(r => (r.getLong(0), hostVec(r.getSeq[java.lang.Double](1))))
+
+  /** Spark's round(d, 9) for a double: HALF_UP on the decimal form of
+    * `d`; NaN and infinities pass through.
+    */
+  private[llm] def round9(d: Double): Double =
+    if (d.isNaN || d.isInfinite) d
+    else java.math.BigDecimal.valueOf(d)
+      .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** [[argmaxFold]] on the driver: over the group's sims in cell order,
+    * highest round(sim, 9), ties to the lowest cell, NaN greatest, null
+    * sims skipped. None where [[labelCells]] drops the row: a null
+    * vector, a group absent from the table, or no non-null sim.
+    */
+  private[llm] def nearestCell(table: CellTable, grp: Int,
+                               x: Array[Double]): Option[Int] =
+    if (x == null) None
+    else table.groups.get(grp).flatMap { g =>
+      val sims = g.sims(x)
+      var best = -1
+      var bestSim = 0.0
+      var j = 0
+      while (j < sims.length) {
+        if (sims(j) != null) {
+          val s = round9(sims(j).asInstanceOf[Double])
+          if (best < 0 || (if (s.isNaN) !bestSim.isNaN else s > bestSim)) {
+            best = j
+            bestSim = s
+          }
+        }
+        j += 1
+      }
+      if (best < 0) None else Some(g.cells.getInt(best))
+    }
+
+  /** [[cellMeans]] on the driver: per key, per position, Σ floor(v·10⁶)
+    * as Long over the members long enough to have that position,
+    * divided once by 10⁶·count. A key whose members are all empty
+    * vectors yields no row, as posexplode yields none.
+    */
+  private[llm] def hostMeans[K](labelled: Iterable[(K, Array[Double])]): Map[K, Seq[Double]] =
+    labelled.groupBy(_._1).flatMap { case (key, ms) =>
+      val len = ms.iterator.map(_._2.length).max
+      val sums = new Array[Long](len)
+      val cnts = new Array[Long](len)
+      ms.foreach { case (_, x) =>
+        var i = 0
+        while (i < x.length) {
+          sums(i) = Math.addExact(sums(i), math.floor(x(i) * Quantum).toLong)
+          cnts(i) += 1
+          i += 1
+        }
+      }
+      if (len == 0) None
+      else Some(key -> Array.tabulate(len)(i => sums(i).toDouble / (Quantum * cnts(i))).toSeq)
+    }
+
+  /** One Lloyd sweep on the driver over `(group, cell, centroid)` rows:
+    * each `(group, vector)` member takes its group's [[nearestCell]],
+    * each cell with members becomes their [[hostMeans]], and surviving
+    * cells are renumbered densely per group in cell order. With one
+    * group this is [[lloydStep]]; with the level-1 cells as groups it is
+    * the per-cell level-2 sweep.
+    */
+  private def hostLloydStep(cents: IndexedSeq[(Int, Int, Seq[Double])],
+                            members: IndexedSeq[(Int, Array[Double])]): IndexedSeq[(Int, Int, Seq[Double])] = {
+    val table = CellTable(cents)
+    val means = hostMeans(members.flatMap { case (g, x) =>
+      nearestCell(table, g, x).map(cell => ((g, cell), x))
+    })
+    means.toIndexedSeq.groupBy(_._1._1).toIndexedSeq.sortBy(_._1).flatMap {
+      case (g, rows) => rows.sortBy(_._1._2).zipWithIndex
+        .map { case ((_, m), sub) => (g, sub, m) }
+    }
   }
 
   /** [[knnGraph]] over a two-level index: probe nprobe1 level-1 cells

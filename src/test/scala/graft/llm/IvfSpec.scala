@@ -1,6 +1,8 @@
 package graft.llm
 
 import graft.SparkSpec
+import graft.functions.CellTable
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class IvfSpec extends SparkSpec {
@@ -211,5 +213,165 @@ class IvfSpec extends SparkSpec {
     // every emitted pair disagrees on label
     Ivf.hardNegatives(emb, index, "vec_id", "embedding", "label", 3, 2)
       .collect().foreach(r => assert(r.getInt(1) !== r.getInt(3)))
+  }
+
+  // ---- driver-side two-level training -------------------------------
+
+  private def bits(xs: Seq[Double]): Seq[Long] =
+    xs.map(java.lang.Double.doubleToRawLongBits)
+
+  /** Every frame of a two-level index, collected in key order, with the
+    * centroids as raw double bits.
+    */
+  private def snapshot(ix: Ivf.Index2) = (
+    ix.l1Centroids.schema, ix.centroids.schema, ix.assignments.schema,
+    ix.l1Centroids.orderBy("l1").collect().toSeq
+      .map(r => (r.getInt(0), bits(r.getSeq[Double](1)))),
+    ix.centroids.orderBy("cell").collect().toSeq
+      .map(r => (r.getInt(0), r.getInt(1), bits(r.getSeq[Double](2)))),
+    ix.assignments.orderBy(ix.assignments.columns.head).collect().toSeq)
+
+  private def assertSameFit(df: DataFrame, targetCellSize: Int,
+                            iters: Int = 2): Ivf.Index2 = {
+    val got = Ivf.fitTwoLevel(df, "vec_id", "embedding", targetCellSize, iters)
+    val ref = IvfTwoLevelReference.fitTwoLevel(df, "vec_id", "embedding",
+      targetCellSize, iters)
+    try assert(snapshot(got) === snapshot(ref))
+    finally got.unpersist()
+    ref
+  }
+
+  test("driver argmax ≡ labelCells on adversarial rows, round9 ≡ Spark " +
+    "round(·, 9)") {
+    // group 0: cell 1 is a hair off cell 4 (sims tie after round(·, 9),
+    // the raw sim of the LOWER cell is smaller), cell 2 duplicates cell 0
+    // (exact tie), cell 3 has the wrong length
+    val table = Seq(
+      (0, 0, Seq(0.5, -0.25, 0.75, 0.1)),
+      (0, 1, Seq(1.0, 1e-6, 0.0, 0.0)),
+      (0, 2, Seq(0.5, -0.25, 0.75, 0.1)),
+      (0, 3, Seq(1.0, 0.0, 0.0)),
+      (0, 4, Seq(1.0, 0.0, 0.0, 0.0)),
+      (0, 5, Seq(-0.3, 0.9, -0.1, 0.2)),
+      (1, 10, Seq(0.0, 1.0, 0.0, 0.0)),
+      (1, 11, Seq(0.0, -1.0, 0.5, 0.0)))
+    val rnd = new scala.util.Random(17)
+    val random = (1 to 200).map(i =>
+      (i.toLong, Seq.fill(4)(Float.box(rnd.nextFloat() * 2 - 1)), i % 2))
+    def f(xs: Float*): Seq[java.lang.Float] = xs.map(Float.box)
+    val adversarial = Seq(
+      (1001L, f(1, 0, 0, 0), 0),           // ties cell 4 after rounding
+      (1002L, f(0.5f, -0.25f, 0.75f, 0.1f), 0), // exact tie 0 vs 2
+      (1003L, f(0, 0, 0, 0), 0),           // zero vector: every sim NaN
+      (1004L, f(0, 0, 0, 0), 1),
+      (1005L, null.asInstanceOf[Seq[java.lang.Float]], 0), // null vector
+      (1006L, Seq[java.lang.Float](1f, null, 0f, 0f), 0), // null element
+      (1007L, f(1, 2, 3), 0),              // only cell 3 has its length
+      (1008L, f(1, 2, 3, 4, 5), 0),        // no centroid of its length
+      (1009L, f(1, 0, 0, 0), 9),           // group absent from the table
+      (1010L, f(Float.NaN, 1, 0, 0), 1))   // NaN element
+    val df = (random ++ adversarial).toDF("id", "vec", "grp")
+
+    val viaSpark = Ivf.labelCells(df, "vec", col("grp"),
+        CellTable.broadcast(spark, table), "cell")
+      .select("id", "cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val host = CellTable(table)
+    val viaHost = df.select(col("id"), col("grp"), col("vec").cast("array<double>"))
+      .collect().flatMap { r =>
+        Ivf.nearestCell(host, r.getInt(1), Ivf.hostVec(r.getSeq[java.lang.Double](2)))
+          .map(r.getLong(0) -> _)
+      }.toMap
+    assert(viaHost === viaSpark)
+    assert(viaHost(1001L) === 1 && viaHost(1002L) === 0 &&
+      viaHost(1003L) === 0 && viaHost(1004L) === 10 && viaHost(1007L) === 3)
+    assert(Seq(1005L, 1006L, 1008L, 1009L).forall(!viaHost.contains(_)))
+
+    val probes = Seq(0.1234567895, -0.1234567895, 5e-10, -5e-10, 4.9999e-10,
+        0.9999999995, -0.9999999995, 1.0, -0.0, 1e-300, 0.3333333335,
+        Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity) ++
+      Seq.fill(500)(rnd.nextDouble() * 2 - 1)
+    val rounded = probes.toDF("d").select(round(col("d"), 9)).collect()
+      .map(_.getDouble(0))
+    probes.zip(rounded).foreach { case (d, r) =>
+      assert(java.lang.Double.doubleToRawLongBits(Ivf.round9(d)) ===
+        java.lang.Double.doubleToRawLongBits(r), s"round($d, 9)")
+    }
+  }
+
+  test("driver means ≡ cellMeans: floor of negatives, a one-member cell, " +
+    "members of different lengths") {
+    val labelled = Seq(
+      (0, Seq(-1.0, -0.0000015, 0.25, 1e-7)),
+      (0, Seq(-0.5, 0.0000015, -0.25, -1e-7)),
+      (0, Seq(0.3, -0.7)),
+      (1, Seq(-0.123456789, 2.5, -3.0000001)),
+      (2, Seq.empty[Double]))
+    val viaSpark = Ivf.cellMeans(labelled.toDF("cell", "vec"), Seq("cell"), "vec")
+      .collect().map(r => r.getInt(0) -> bits(r.getSeq[Double](1))).toMap
+    val viaHost = Ivf.hostMeans(labelled.map { case (c, v) => (c, v.toArray) })
+      .map { case (c, m) => c -> bits(m) }
+    assert(viaHost === viaSpark)
+    assert(viaHost.keySet === Set(0, 1), "an all-empty cell yields no mean")
+  }
+
+  test("two-level fit ≡ the distributed reference on sf0.001 embeddings") {
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    assertSameFit(emb, targetCellSize = 8).unpersist()
+  }
+
+  test("two-level fit ≡ the distributed reference with a fallback leaf " +
+    "and a dead sub") {
+    // nine 2-d vectors (k = 9: k1 = 3 level-1 cells × k2 = 3 subs, one
+    // Lloyd sweep): level-1 cell 1 survives its sweep but keeps no
+    // sample member, so it becomes a fallback leaf; ids 0 and 8 are the
+    // same vector, so the sub seeded by the later one dies
+    val pts = Seq((1.879, 0.684), (2.782, 1.124), (-0.875, 0.485),
+      (-0.105, 2.998), (-0.572, 2.945), (0.191, 0.982), (-2.741, 1.22),
+      (-0.827, 2.884), (1.879, 0.684))
+    val emb = pts.zipWithIndex
+      .map { case ((x, y), i) => (i.toLong, Seq(x.toFloat, y.toFloat)) }
+      .toDF("vec_id", "embedding")
+    val ref = assertSameFit(emb, targetCellSize = 1, iters = 1)
+    try {
+      val leaves = ref.centroids.collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
+      val l1 = ref.l1Centroids.collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
+      val members = ref.assignments.join(ref.centroids, "cell")
+        .groupBy("l1").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val leavesPerL1 = leaves.groupBy(_._2).map { case (c, ls) => c -> ls.length }
+      assert(l1.size === 3)
+      assert(l1.keys.exists(c => !members.contains(c) && leavesPerL1(c) === 1 &&
+        leaves.exists(lf => lf._2 == c && lf._3 == l1(c))), "a fallback leaf")
+      assert(members.exists { case (c, m) => m >= 3 && leavesPerL1(c) < 3 },
+        "a dead sub")
+    } finally ref.unpersist()
+  }
+
+  test("two-level fit ≡ the distributed reference on an empty corpus") {
+    val emb = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+    val ref = assertSameFit(emb, targetCellSize = 8)
+    try assert(ref.centroids.isEmpty && ref.assignments.isEmpty)
+    finally ref.unpersist()
+  }
+
+  test("job budget: a two-level fit on sf0.001 starts at most 6 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.ListenerBridge
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    ListenerBridge.drain(sc)
+    sc.addSparkListener(counter)
+    val index =
+      try {
+        val ix = Ivf.fitTwoLevel(emb, "vec_id", "embedding", targetCellSize = 8)
+        ListenerBridge.drain(sc)
+        ix
+      } finally sc.removeSparkListener(counter)
+    index.unpersist()
+    assert(jobs.get <= 6, s"${jobs.get} Spark jobs for one two-level fit")
   }
 }
