@@ -26,61 +26,15 @@ object Temporal {
     * right row with `right.ts <= left.ts` within the same partition
     * keys (the trades-to-quotes join; here: each event to the most
     * recent prior state row). Left rows with no prior right row keep
-    * null payloads — ASOF LEFT semantics.
-    *
-    * Mechanism: tag both sides, union by name, ONE window per partition
-    * key ordered by (ts, side) with rows-unbounded-preceding, and
-    * `last(payload, ignoreNulls)` carries the newest right payload
-    * forward; left rows then filter out. Right-before-left on ts ties
-    * (side 0 < 1) makes the join inclusive, matching `l.ts >= r.ts`.
-    *
-    * Scale shape: one shuffle on the partition keys, then a linear
-    * within-partition scan — the same cost as ANY correct as-of
-    * (merge-join engines sort both sides the same way). No join
-    * explosion, no range predicate in a nested loop. Skewed keys
-    * (one user holding a day's events) are the sessionize hazard; cap
-    * or salt upstream the same way.
-    *
-    * Right rows must be unique per (partitionCols, tsCol) — pre-dedup
-    * with max_by/row_number (ties would otherwise resolve by window
-    * order, which is deterministic here but a needless contract).
-    * Payload columns must not collide with left column names.
-    *
-    * The payload travels as ONE struct, not per-column: right rows wrap
-    * `payloadCols` in a non-null struct (struct() is non-null even when
-    * every field is), so a single `last(ignoreNulls)` picks the latest
-    * right ROW atomically. Carrying columns independently would let a
-    * null payload VALUE back-fill from an older right row — and
-    * different columns from different rows — diverging from
-    * [[asofJoinNative]] and ASOF semantics.
+    * null payloads — ASOF LEFT semantics. The classic face of
+    * [[asofJoinDirected]] (backward, no tolerance); mechanism, scale
+    * shape and contracts are documented there.
     */
   def asofJoin(left: DataFrame, right: DataFrame,
                partitionCols: Seq[String], tsCol: String,
-               payloadCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types.StructType
-    val leftOnly = left.columns.filterNot(payloadCols.contains(_))
-    val payT = StructType(payloadCols.map(p => right.schema(p)))
-    val l = left.select(
-      leftOnly.map(col) :+
-        lit(null).cast(payT).as("_asof_pay") :+
-        lit(1).as("_side"): _*)
-    val r = right.select(
-      leftOnly.map(c =>
-        if (partitionCols.contains(c) || c == tsCol) col(c)
-        else lit(null).cast(left.schema(c).dataType).as(c)) :+
-        struct(payloadCols.map(col): _*).as("_asof_pay") :+
-        lit(0).as("_side"): _*)
-    val w = Window.partitionBy(partitionCols.map(col): _*)
-      .orderBy(col(tsCol).asc, col("_side").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = l.unionByName(r)
-      .withColumn("_asof_pay", last(col("_asof_pay"), ignoreNulls = true).over(w))
-      .filter(col("_side") === 1)
-    payloadCols.foldLeft(carried) { (d, p) =>
-      d.withColumn(p, col("_asof_pay")(p))
-    }
-      .drop("_asof_pay", "_side")
-  }
+               payloadCols: Seq[String]): DataFrame =
+    asofJoinDirected(left, right, partitionCols, tsCol, payloadCols,
+      AsofDirection.Backward, None)
 
   /** Cohort retention matrix: entities grouped by the week of their
     * FIRST event (the cohort), counted distinct per whole-week offset
@@ -259,65 +213,6 @@ object Temporal {
       .foldLeft(lit(1L))(_ + _)
     chained.withColumn("reached", reached)
       .withColumn("matched", col("reached") === lit(steps.size.toLong))
-  }
-
-  /** The custom-operator face of [[asofJoin]]: plans as the native
-    * [[graft.plans.AsofJoinExec]] merge scan instead of the
-    * union+window composition — same semantics (AsofJoinSpec asserts
-    * parity), but the scan holds ONE right row instead of a window
-    * frame and no union padding flows through the shuffle. Requires
-    * [[graft.plans.GraftExtensions]] on the session (the strategy must
-    * be registered or planning fails); same contracts as [[asofJoin]]
-    * (unique right (keys, ts), non-null keys).
-    */
-  def asofJoinNative(left: DataFrame, right: DataFrame,
-                     partitionCols: Seq[String], tsCol: String,
-                     payloadCols: Seq[String]): DataFrame =
-    // one-line delegate (Backward + no tolerance = classic as-of):
-    // the alias-isolation subtlety below must live in exactly ONE place
-    asofJoinNativeDirected(left, right, partitionCols, tsCol, payloadCols,
-      AsofDirection.Backward, None)
-
-  /** The custom-operator face of [[asofJoinDirected]]: the same
-    * AsofJoinExec merge scan, with direction and tolerance pushed into
-    * the operator (the forward candidate is the scan's lookahead row —
-    * no second pass, no union padding, no window buffer). Semantics
-    * match [[asofJoinDirected]] bit-for-bit; same contracts as
-    * [[asofJoin]] (unique right (keys, ts), non-null keys), and
-    * [[graft.plans.GraftExtensions]] must be on the session.
-    */
-  def asofJoinNativeDirected(left: DataFrame, right: DataFrame,
-                             partitionCols: Seq[String], tsCol: String,
-                             payloadCols: Seq[String],
-                             direction: AsofDirection,
-                             toleranceMicros: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.Alias
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
-    import org.apache.spark.sql.graftbridge.PlanBridge
-    val lp = PlanBridge.plan(left)
-    // isolate the right side behind a fresh alias projection: when both
-    // sides share lineage (the usual self-source case), re-analysis runs
-    // DeduplicateRelations, which re-ids the right subtree's attributes —
-    // references into the ORIGINAL right output would silently resolve
-    // to the left side and the right child would prune the key/ts
-    // columns away. The aliases' exprIds are ours and survive the
-    // rewrite (dedup rewrites their children, not their ids).
-    val rp0 = PlanBridge.plan(right)
-    val aliased = rp0.output.map(a => Alias(a, a.name)())
-    val rp = Project(aliased, rp0)
-    def attr(p: LogicalPlan, n: String) =
-      p.output.find(_.name == n).getOrElse(
-        throw new IllegalArgumentException(s"column $n not found"))
-    val dir = direction match {
-      case AsofDirection.Backward => "backward"
-      case AsofDirection.Forward  => "forward"
-      case AsofDirection.Nearest  => "nearest"
-    }
-    PlanBridge.ofRows(left.sparkSession,
-      graft.plans.AsofJoinPlan.resolved(lp, rp,
-        partitionCols.map(attr(lp, _)), partitionCols.map(attr(rp, _)),
-        attr(lp, tsCol), attr(rp, tsCol), payloadCols.map(attr(rp, _)),
-        dir, toleranceMicros))
   }
 
   /** Bounded range join as an EQUI join: pairs (left, right) sharing
@@ -830,14 +725,31 @@ object Temporal {
 
   /** Directional/toleranced as-of join — the pandas `merge_asof`
     * surface (`direction='backward'|'forward'|'nearest'`, `tolerance`)
-    * over the same one-shuffle mechanism as [[asofJoin]]: tag both
-    * sides, union by name, and carry right payloads across RANGE window
-    * frames on epoch-micros. Backward = `last(ignoreNulls)` over
+    * and the one as-of implementation ([[asofJoin]] is its backward,
+    * untoleranced face).
+    *
+    * Mechanism: tag both sides, union by name, ONE window partitioned
+    * by the keys and ordered by ts, and carry right payloads across
+    * RANGE frames. Backward = `last(ignoreNulls)` over
     * (unboundedPreceding, currentRow); forward = `first(ignoreNulls)`
     * over (currentRow, unboundedFollowing). RANGE frames (not ROWS)
     * make ts ties inclusive in BOTH directions under one ordering, so
     * the two windows share a single Exchange + Sort — nearest costs the
-    * same shuffle as either single direction.
+    * same shuffle as either single direction, and a single direction
+    * keeps only its own frame (unused window columns are pruned).
+    *
+    * The payload travels as ONE struct, not per-column: right rows wrap
+    * `payloadCols` in a non-null struct (struct() is non-null even when
+    * every field is), so a single `last`/`first(ignoreNulls)` picks one
+    * right ROW atomically. Carrying columns independently would let a
+    * null payload VALUE back-fill from an older right row — and
+    * different columns from different rows — diverging from ASOF
+    * semantics.
+    *
+    * Null timestamps follow SQL ASOF: a right row with a null ts never
+    * matches (it is dropped before the union — its null ts sorts first,
+    * so every backward frame of its key would reach it), and a left row
+    * with a null ts keeps null payloads.
     *
     * `toleranceMicros` (if set) nulls the payload when the matched
     * row's |Δts| exceeds it — left rows are kept (LEFT semantics), the
@@ -845,10 +757,16 @@ object Temporal {
     * tolerance gate and the nearest tie rule replay bit-for-bit in any
     * engine.
     *
-    * Contracts as [[asofJoin]]: right unique per (partitionCols, tsCol),
-    * non-null ts on both sides, payload names must not collide with
-    * left columns. Scale shape: one shuffle on the partition keys +
-    * linear in-partition scans; skewed keys are the sessionize hazard.
+    * Contracts: `tsCol` is a TIMESTAMP on both sides; right rows unique
+    * per (partitionCols, tsCol) — pre-dedup with max_by/row_number;
+    * payload names must not collide with left columns. An empty
+    * `partitionCols` is a global as-of join (one window partition).
+    * Scale shape: one shuffle on the partition keys
+    * + linear in-partition scans — the same cost as any correct as-of
+    * (merge-join engines sort both sides the same way), no join
+    * explosion, no range predicate in a nested loop. Skewed keys (one
+    * user holding a day's events) are the sessionize hazard; cap or
+    * salt upstream the same way.
     */
   def asofJoinDirected(left: DataFrame, right: DataFrame,
                        partitionCols: Seq[String], tsCol: String,
@@ -864,46 +782,44 @@ object Temporal {
         lit(null).cast(payT).as("_asof_pay") :+
         lit(null).cast("long").as("_asof_rts") :+
         lit(1).as("_side"): _*)
-    val r = right.select(
+    val r = right.filter(col(tsCol).isNotNull).select(
       leftOnly.map(c =>
         if (partitionCols.contains(c) || c == tsCol) col(c)
         else lit(null).cast(left.schema(c).dataType).as(c)) :+
         struct(payloadCols.map(col): _*).as("_asof_pay") :+
         unix_micros(col(tsCol)).as("_asof_rts") :+
         lit(0).as("_side"): _*)
-    // ONE materialized ordering attribute for both frames: inlining
-    // unix_micros(ts) in each frame's orderBy creates two equal-but-
-    // distinct sort expressions, and EnsureRequirements re-exchanges
-    // and re-sorts for the second Window (audited: 2 exchanges → 1)
+    // both frames order by the ts ATTRIBUTE itself: an inlined
+    // expression such as unix_micros(ts) in each frame's orderBy makes
+    // two equal-but-distinct sort expressions, and EnsureRequirements
+    // re-exchanges and re-sorts for the second Window
     val base = Window.partitionBy(partitionCols.map(col): _*)
-      .orderBy(col("_asof_ots"))
+      .orderBy(col(tsCol))
     val wb = base.rangeBetween(Window.unboundedPreceding, Window.currentRow)
     val wf = base.rangeBetween(Window.currentRow, Window.unboundedFollowing)
     val carried = l.unionByName(r)
-      .withColumn("_asof_ots", unix_micros(col(tsCol)))
-      .withColumn("_pb", last(col("_asof_pay"), ignoreNulls = true).over(wb))
-      .withColumn("_tb", last(col("_asof_rts"), ignoreNulls = true).over(wb))
-      .withColumn("_pf", first(col("_asof_pay"), ignoreNulls = true).over(wf))
-      .withColumn("_tf", first(col("_asof_rts"), ignoreNulls = true).over(wf))
+      .select(col("*"),
+        last(col("_asof_pay"), ignoreNulls = true).over(wb).as("_pb"),
+        last(col("_asof_rts"), ignoreNulls = true).over(wb).as("_tb"),
+        first(col("_asof_pay"), ignoreNulls = true).over(wf).as("_pf"),
+        first(col("_asof_rts"), ignoreNulls = true).over(wf).as("_tf"))
       .filter(col("_side") === 1)
-      .withColumn("_lts", unix_micros(col(tsCol)))
-      .withColumn("_db", col("_lts") - col("_tb"))
-      .withColumn("_df", col("_tf") - col("_lts"))
+    val lts = unix_micros(col(tsCol))
+    val (dBack, dFwd) = (lts - col("_tb"), col("_tf") - lts)
     val (pay, delta) = direction match {
-      case AsofDirection.Backward => (col("_pb"), col("_db"))
-      case AsofDirection.Forward  => (col("_pf"), col("_df"))
+      case AsofDirection.Backward => (col("_pb"), dBack)
+      case AsofDirection.Forward  => (col("_pf"), dFwd)
       case AsofDirection.Nearest  =>
-        val backWins = col("_pf").isNull || (col("_pb").isNotNull && col("_db") <= col("_df"))
+        val backWins = col("_pf").isNull || (col("_pb").isNotNull && dBack <= dFwd)
         (when(backWins, col("_pb")).otherwise(col("_pf")),
-          when(backWins, col("_db")).otherwise(col("_df")))
+          when(backWins, dBack).otherwise(dFwd))
     }
-    val gated = toleranceMicros.fold(pay)(t =>
-      when(delta <= lit(t), pay).otherwise(lit(null).cast(payT)))
-    val withPay = carried.withColumn("_asof_sel", gated)
-    payloadCols.foldLeft(withPay) { (d, p) =>
-      d.withColumn(p, col("_asof_sel")(p))
-    }.drop("_asof_pay", "_asof_rts", "_asof_sel", "_asof_ots", "_side",
-      "_pb", "_tb", "_pf", "_tf", "_lts", "_db", "_df")
+    // a null left ts sorts first: the backward frame holds only null-ts
+    // left rows, but the forward frame still reaches every right row
+    val matched = toleranceMicros.fold(col(tsCol).isNotNull)(t => delta <= lit(t))
+    carried.withColumn("_asof_sel", when(matched, pay))
+      .select(leftOnly.map(col) ++
+        payloadCols.map(p => col("_asof_sel")(p).as(p)): _*)
   }
 
   /** Classical additive seasonal decomposition of a per-entity daily

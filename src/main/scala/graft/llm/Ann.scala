@@ -17,12 +17,13 @@ import org.apache.spark.sql.functions._
   *    the 100 TB path: bucketing is a map-side pass + one bucket-keyed
   *    join, never all-pairs.
   *
-  * Dot products run in double via zip_with/aggregate. A native
-  * codegen'd alternative exists (graft.functions.VecDot, bit-identical —
-  * VecDotSpec) and was MEASURED on the |Q|·|C| scoring join at sf0.1
-  * (d=64, best of 3 warm reps): 0.21s HOF vs 0.27s native at 400k pairs,
-  * parity within noise at 2M pairs — the join machinery dominates at
-  * d=64, so the builtin stays (same verdict as MinHashAgg vs min(md5)).
+  * Dot products run in double via zip_with/aggregate ([[dot]]). A
+  * codegen'd dot-product expression was MEASURED against it on the
+  * |Q|·|C| scoring join at sf0.1 (d=64, best of 3 warm reps): 0.21s HOF
+  * vs 0.27s native at 400k pairs, parity within noise at 2M pairs — the
+  * join machinery dominates at d=64, so only the builtin is kept. The
+  * one native dot loop is CellTable.Group.sims, behind the centroid
+  * kernels.
   */
 object Ann {
 

@@ -46,29 +46,14 @@ object DedupOps {
     // set, so the dedup shuffle shingleSet pays is pure waste here —
     // one explode + one partial/final min-aggregate is the whole job.
     // The n independent min(md5) aggregates stay inside WholeStageCodegen;
-    // measured FASTER at sf0.1 (3.9s) than the custom one-pass
-    // TypedImperativeAggregate sketch (6.8s, [[minhashSignaturesNative]])
-    // because ObjectHashAggregate's interpreted per-row path costs more
-    // than the digest-reuse saves.
+    // measured FASTER at sf0.1 (3.9s) than a custom one-pass
+    // TypedImperativeAggregate sketch of all n minima (6.8s), because
+    // ObjectHashAggregate's interpreted per-row path costs more than
+    // the digest-reuse saves.
     val sets = TextAnalysis.explodeShingles(df, textCol, k, col(idCol))
     val aggs = (1 to numHashes).map(i =>
       min(md5(concat(lit(s"$i|"), col("s")))).as(s"mh$i"))
     sets.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Custom-Catalyst formulation of [[minhashSignatures]]: one
-    * TypedImperativeAggregate (graft.functions.MinHashAgg) computing all
-    * n permutation minima in a single byte buffer. Bit-identical output
-    * (DedupOpsSpec parity test); kept as the extension-point example and
-    * for aggregation-count-bound workloads — see the perf note above.
-    */
-  def minhashSignaturesNative(df: DataFrame, idCol: String, textCol: String,
-                              numHashes: Int = 8, k: Int = 3): DataFrame = {
-    val sets = TextAnalysis.explodeShingles(df, textCol, k, col(idCol))
-    val sig = sets.groupBy(col(idCol))
-      .agg(graft.functions.MinHashAgg.minhashSigs(col("s"), numHashes).as("sig"))
-    sig.select(col(idCol) +:
-      (1 to numHashes).map(i => col("sig")(i - 1).as(s"mh$i")): _*)
   }
 
   /** LSH banding: band b covers permutations [b*rows+1 .. (b+1)*rows];

@@ -284,8 +284,8 @@ object EmbeddingOps {
 
     // pass 2 (r14 optimization): the three scatter-cell families ride
     // ONE fused moment aggregate (graft.functions.CkaMomentsAgg — a
-    // per-row multiply-add loop over an exact integer Long buffer, the
-    // MinHashAgg precedent) instead of exploding dx·dy + dx²/2 + dy²/2
+    // per-row multiply-add loop over an exact integer Long buffer)
+    // instead of exploding dx·dy + dx²/2 + dy²/2
     // struct rows per vector through a decimal hash aggregate
     // (measured 10.5 s → sub-second at sf0.1, identical exact-integer
     // moments, centering in BigInteger ≡ the decimal(38,0) algebra,

@@ -242,9 +242,10 @@ object Ivf {
     * stride ss = max(1, n/sampleCap) rounds down, so the sample holds
     * about n/ss ≤ 2·sampleCap − 1 vectors (md5 spreads the ids evenly),
     * and the driver holds all of it while training: at the default
-    * 131,071 vectors, about 64 MB of doubles at d = 64. The corpus is
-    * touched by the final assignment alone: two chained projections
-    * (level-1 cell, then leaf within it), cached lazily.
+    * 131,071 vectors, about 64 MB of doubles at d = 64. A stride past
+    * the hex4 range (ss > 65,535) is refused ([[sampleStride]]). The
+    * corpus is touched by the final assignment alone: two chained
+    * projections (level-1 cell, then leaf within it), cached lazily.
     */
   def fitTwoLevel(df: DataFrame, idCol: String, vecCol: String,
                   targetCellSize: Int = 128, iters: Int = 2,
@@ -257,7 +258,7 @@ object Ivf {
     val k = math.max(4L, n / targetCellSize)
     val k1 = math.ceil(math.sqrt(k.toDouble)).toInt
     val k2 = ((k + k1 - 1) / k1).toInt
-    val sample = collectSample(df, idCol, vecCol, math.max(1L, n / sampleCap))
+    val sample = collectSample(df, idCol, vecCol, sampleStride(n, sampleCap))
 
     // level 1, all in group 0: seeds are the k1 lowest-id rows on the
     // sample's own 4-per-cell stride, as in fitCentroidRows
@@ -326,6 +327,19 @@ object Ivf {
     */
   private[llm] def hostVec(v: scala.collection.Seq[java.lang.Double]): Array[Double] =
     if (v == null || v.contains(null)) null else v.iterator.map(_.doubleValue).toArray
+
+  /** The sample stride ss = max(1, n/sampleCap) for an n-row corpus.
+    * hex4 has only 65,536 values, so past ss = 65,535 the stride would
+    * keep hex4 = 0 alone — about n/65,536 rows, no longer bounded by
+    * `sampleCap` — and the driver would collect them all; refuse that.
+    */
+  private[llm] def sampleStride(n: Long, sampleCap: Int): Long = {
+    val ss = math.max(1L, n / sampleCap)
+    require(ss <= 65535L,
+      s"fitTwoLevel: $n rows at sampleCap $sampleCap give sample stride " +
+        s"$ss > 65535, past the hex4 range; raise sampleCap to >= ${n / 65536 + 1}")
+    ss
+  }
 
   /** The md5-stride sample of `df` — rows whose hex4 (the first four hex
     * digits of md5(id) as an integer) is a multiple of `ss` — collected

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.core.Tables
+import graft.core.{Tables, Temporal}
+import graft.core.Temporal.AsofDirection.{Backward, Forward, Nearest}
 import graft.ingest.{JsonSource, Stages}
 import graft.model.FileName
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -29,6 +30,69 @@ import org.apache.spark.sql.types._
 object RelationalQueries {
 
   private def tb(s: SparkSession, dir: String) = Tables(s, dir)
+
+  // ---- the as-of faces: purchases matched to a user's views. Each
+  //      direction is one body and one DuckDB oracle shared by two
+  //      registered names; the q_evt_asof_native* names stay registered
+  //      so the query set and its oracles are unchanged. ----
+  private val asofBackwardSql =
+    """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
+      |           FROM events WHERE event_type = 'purchase'),
+      |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS vts, max(event_id) AS view_id
+      |      FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
+      |SELECT p.purchase_id, p.user_id, p.pts, v.view_id, v.vts
+      |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts >= v.vts
+      |ORDER BY p.purchase_id""".stripMargin
+  private val asofForwardSql =
+    """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
+      |           FROM events WHERE event_type = 'purchase'),
+      |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS vts, max(event_id) AS view_id
+      |      FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
+      |SELECT p.purchase_id, p.user_id, p.pts, v.view_id, v.vts
+      |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts <= v.vts
+      |ORDER BY p.purchase_id""".stripMargin
+  private val asofNearestSql =
+    """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
+      |           FROM events WHERE event_type = 'purchase'),
+      |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS vts, max(event_id) AS view_id
+      |      FROM events WHERE event_type = 'view' GROUP BY user_id, ts),
+      |b AS (SELECT p.purchase_id, v.view_id AS bid, v.vts AS bts
+      |      FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts >= v.vts),
+      |f AS (SELECT p.purchase_id, v.view_id AS fid, v.vts AS fts
+      |      FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts <= v.vts),
+      |sel AS (
+      |  SELECT p.purchase_id, p.user_id, p.pts,
+      |         CASE WHEN fts IS NULL OR (bts IS NOT NULL AND
+      |                epoch_us(p.pts) - epoch_us(bts) <= epoch_us(fts) - epoch_us(p.pts))
+      |              THEN bid ELSE fid END AS view_id,
+      |         CASE WHEN fts IS NULL OR (bts IS NOT NULL AND
+      |                epoch_us(p.pts) - epoch_us(bts) <= epoch_us(fts) - epoch_us(p.pts))
+      |              THEN bts ELSE fts END AS vts
+      |  FROM p JOIN b USING (purchase_id) JOIN f USING (purchase_id))
+      |SELECT purchase_id, user_id, pts,
+      |       CASE WHEN abs(epoch_us(vts) - epoch_us(pts)) <= 172800000000 THEN view_id END AS view_id,
+      |       CASE WHEN abs(epoch_us(vts) - epoch_us(pts)) <= 172800000000 THEN vts END AS vts
+      |FROM sel ORDER BY purchase_id""".stripMargin
+  /** The nearest faces' tolerance: 2 days, the oracle's literal. */
+  private val asofNearestToleranceUs = 172800000000L
+
+  private def asofPurchaseViews(direction: Temporal.AsofDirection,
+                                toleranceUs: Option[Long] = None)
+      : (SparkSession, String) => DataFrame = { (s, dir) =>
+    val ev = tb(s, dir).events
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
+    // unique right rows per (user, ts): keep the max event_id
+    val views = ev.filter(col("event_type") === "view")
+      .groupBy(col("user_id"), col("ts"))
+      .agg(max(col("event_id")).as("view_id"))
+      .withColumn("vts", col("ts"))
+    Temporal.asofJoinDirected(purchases, views,
+        Seq("user_id"), "ts", Seq("view_id", "vts"), direction, toleranceUs)
+      .select(col("purchase_id"), col("user_id"), col("ts").as("pts"),
+        col("view_id"), col("vts"))
+      .orderBy("purchase_id")
+  }
 
   val all: Map[String, Q] = Map(
 
@@ -622,58 +686,15 @@ object RelationalQueries {
           .orderBy("source")
     },
 
-    // ---- as-of join (Temporal.asofJoin): each purchase matched to the
+    // ---- as-of join (Temporal.asofJoin, the backward face of
+    //      asofJoinDirected): each purchase matched to the
     //      user's most recent view at-or-before purchase time. One
     //      shuffle on user_id, window scan — no nested-loop range join.
     //      DuckDB's native ASOF LEFT JOIN is the oracle. ----
-    "q_evt_asof_join" -> Q(
-      """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
-        |           FROM events WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS vts, max(event_id) AS view_id
-        |      FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
-        |SELECT p.purchase_id, p.user_id, p.pts, v.view_id, v.vts
-        |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts >= v.vts
-        |ORDER BY p.purchase_id""".stripMargin) { (s, dir) =>
-      val ev = tb(s, dir).events
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
-      // unique right rows per (user, ts): keep the max event_id
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("view_id"))
-        .withColumn("vts", col("ts"))
-      graft.core.Temporal.asofJoin(purchases, views,
-          Seq("user_id"), "ts", Seq("view_id", "vts"))
-        .select(col("purchase_id"), col("user_id"), col("ts").as("pts"),
-          col("view_id"), col("vts"))
-        .orderBy("purchase_id")
-    },
+    "q_evt_asof_join" -> Q(asofBackwardSql)(asofPurchaseViews(Backward)),
 
-    // ---- the same as-of join through the CUSTOM OPERATOR tier
-    //      (AsofJoinPlan → AsofJoinStrategy → AsofJoinExec merge scan,
-    //      registered via GraftExtensions) — identical oracle ----
-    "q_evt_asof_native" -> Q(
-      """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
-        |           FROM events WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS vts, max(event_id) AS view_id
-        |      FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
-        |SELECT p.purchase_id, p.user_id, p.pts, v.view_id, v.vts
-        |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts >= v.vts
-        |ORDER BY p.purchase_id""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s)
-      val ev = tb(s, dir).events
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("view_id"))
-        .withColumn("vts", col("ts"))
-      graft.core.Temporal.asofJoinNative(purchases, views,
-          Seq("user_id"), "ts", Seq("view_id", "vts"))
-        .select(col("purchase_id"), col("user_id"), col("ts").as("pts"),
-          col("view_id"), col("vts"))
-        .orderBy("purchase_id")
-    },
+    // ---- the same as-of join under a second registered name ----
+    "q_evt_asof_native" -> Q(asofBackwardSql)(asofPurchaseViews(Backward)),
 
     // ---- interval OVERLAP join (Temporal.intervalOverlapPairs):
     //      click-derived intervals × error-derived intervals per user,
@@ -761,139 +782,22 @@ object RelationalQueries {
     //      purchase to the EARLIEST view at-or-after it — the pandas
     //      merge_asof direction='forward' face; DuckDB's ASOF accepts
     //      the mirrored inequality natively. ----
-    "q_evt_asof_fwd" -> Q(
-      """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
-        |           FROM events WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS vts, max(event_id) AS view_id
-        |      FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
-        |SELECT p.purchase_id, p.user_id, p.pts, v.view_id, v.vts
-        |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts <= v.vts
-        |ORDER BY p.purchase_id""".stripMargin) { (s, dir) =>
-      val ev = tb(s, dir).events
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("view_id"))
-        .withColumn("vts", col("ts"))
-      graft.core.Temporal.asofJoinDirected(purchases, views,
-          Seq("user_id"), "ts", Seq("view_id", "vts"),
-          graft.core.Temporal.AsofDirection.Forward)
-        .select(col("purchase_id"), col("user_id"), col("ts").as("pts"),
-          col("view_id"), col("vts"))
-        .orderBy("purchase_id")
-    },
+    "q_evt_asof_fwd" -> Q(asofForwardSql)(asofPurchaseViews(Forward)),
 
-    // ---- the FORWARD as-of through the CUSTOM OPERATOR tier (the same
-    //      AsofJoinExec merge scan — the forward candidate is the
-    //      scan's lookahead row); identical oracle to q_evt_asof_fwd ----
-    "q_evt_asof_native_fwd" -> Q(
-      """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
-        |           FROM events WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS vts, max(event_id) AS view_id
-        |      FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
-        |SELECT p.purchase_id, p.user_id, p.pts, v.view_id, v.vts
-        |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts <= v.vts
-        |ORDER BY p.purchase_id""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s)
-      val ev = tb(s, dir).events
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("view_id"))
-        .withColumn("vts", col("ts"))
-      graft.core.Temporal.asofJoinNativeDirected(purchases, views,
-          Seq("user_id"), "ts", Seq("view_id", "vts"),
-          graft.core.Temporal.AsofDirection.Forward)
-        .select(col("purchase_id"), col("user_id"), col("ts").as("pts"),
-          col("view_id"), col("vts"))
-        .orderBy("purchase_id")
-    },
+    // ---- the FORWARD as-of under a second registered name ----
+    "q_evt_asof_native_fwd" -> Q(asofForwardSql)(asofPurchaseViews(Forward)),
 
-    // ---- NEAREST as-of with tolerance through the custom tier —
-    //      identical oracle to q_evt_asof_nearest ----
-    "q_evt_asof_native_nearest" -> Q(
-      """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
-        |           FROM events WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS vts, max(event_id) AS view_id
-        |      FROM events WHERE event_type = 'view' GROUP BY user_id, ts),
-        |b AS (SELECT p.purchase_id, v.view_id AS bid, v.vts AS bts
-        |      FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts >= v.vts),
-        |f AS (SELECT p.purchase_id, v.view_id AS fid, v.vts AS fts
-        |      FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts <= v.vts),
-        |sel AS (
-        |  SELECT p.purchase_id, p.user_id, p.pts,
-        |         CASE WHEN fts IS NULL OR (bts IS NOT NULL AND
-        |                epoch_us(p.pts) - epoch_us(bts) <= epoch_us(fts) - epoch_us(p.pts))
-        |              THEN bid ELSE fid END AS view_id,
-        |         CASE WHEN fts IS NULL OR (bts IS NOT NULL AND
-        |                epoch_us(p.pts) - epoch_us(bts) <= epoch_us(fts) - epoch_us(p.pts))
-        |              THEN bts ELSE fts END AS vts
-        |  FROM p JOIN b USING (purchase_id) JOIN f USING (purchase_id))
-        |SELECT purchase_id, user_id, pts,
-        |       CASE WHEN abs(epoch_us(vts) - epoch_us(pts)) <= 172800000000 THEN view_id END AS view_id,
-        |       CASE WHEN abs(epoch_us(vts) - epoch_us(pts)) <= 172800000000 THEN vts END AS vts
-        |FROM sel ORDER BY purchase_id""".stripMargin) { (s, dir) =>
-      graft.plans.GraftExtensions.register(s)
-      val ev = tb(s, dir).events
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("view_id"))
-        .withColumn("vts", col("ts"))
-      graft.core.Temporal.asofJoinNativeDirected(purchases, views,
-          Seq("user_id"), "ts", Seq("view_id", "vts"),
-          graft.core.Temporal.AsofDirection.Nearest,
-          toleranceMicros = Some(172800000000L))
-        .select(col("purchase_id"), col("user_id"), col("ts").as("pts"),
-          col("view_id"), col("vts"))
-        .orderBy("purchase_id")
-    },
+    // ---- the NEAREST as-of under a second registered name ----
+    "q_evt_asof_native_nearest" -> Q(asofNearestSql)(
+      asofPurchaseViews(Nearest, Some(asofNearestToleranceUs))),
 
     // ---- NEAREST as-of with tolerance (merge_asof direction='nearest',
     //      tolerance=2 days): closer of the backward/forward views, ties
     //      backward, match rejected past the tolerance. The oracle runs
     //      BOTH DuckDB ASOF directions and replays the exact integer-
     //      micros tie/tolerance rule. ----
-    "q_evt_asof_nearest" -> Q(
-      """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
-        |           FROM events WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS vts, max(event_id) AS view_id
-        |      FROM events WHERE event_type = 'view' GROUP BY user_id, ts),
-        |b AS (SELECT p.purchase_id, v.view_id AS bid, v.vts AS bts
-        |      FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts >= v.vts),
-        |f AS (SELECT p.purchase_id, v.view_id AS fid, v.vts AS fts
-        |      FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts <= v.vts),
-        |sel AS (
-        |  SELECT p.purchase_id, p.user_id, p.pts,
-        |         CASE WHEN fts IS NULL OR (bts IS NOT NULL AND
-        |                epoch_us(p.pts) - epoch_us(bts) <= epoch_us(fts) - epoch_us(p.pts))
-        |              THEN bid ELSE fid END AS view_id,
-        |         CASE WHEN fts IS NULL OR (bts IS NOT NULL AND
-        |                epoch_us(p.pts) - epoch_us(bts) <= epoch_us(fts) - epoch_us(p.pts))
-        |              THEN bts ELSE fts END AS vts
-        |  FROM p JOIN b USING (purchase_id) JOIN f USING (purchase_id))
-        |SELECT purchase_id, user_id, pts,
-        |       CASE WHEN abs(epoch_us(vts) - epoch_us(pts)) <= 172800000000 THEN view_id END AS view_id,
-        |       CASE WHEN abs(epoch_us(vts) - epoch_us(pts)) <= 172800000000 THEN vts END AS vts
-        |FROM sel ORDER BY purchase_id""".stripMargin) { (s, dir) =>
-      val ev = tb(s, dir).events
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("view_id"))
-        .withColumn("vts", col("ts"))
-      graft.core.Temporal.asofJoinDirected(purchases, views,
-          Seq("user_id"), "ts", Seq("view_id", "vts"),
-          graft.core.Temporal.AsofDirection.Nearest,
-          toleranceMicros = Some(172800000000L))
-        .select(col("purchase_id"), col("user_id"), col("ts").as("pts"),
-          col("view_id"), col("vts"))
-        .orderBy("purchase_id")
-    },
+    "q_evt_asof_nearest" -> Q(asofNearestSql)(
+      asofPurchaseViews(Nearest, Some(asofNearestToleranceUs))),
 
     // ---- bounded range join (Temporal.rangePairs): (click, error)
     //      pairs per user within 4 hours, binned into an EQUI join —

@@ -4,67 +4,37 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{VecDot, ZInterleave}
+import graft.functions.ZInterleave
 
-/** SparkSessionExtensions entry point for the graft engine — the
-  * extension-injection face of the custom-Catalyst layer, so SQL users
-  * (not just the Column API) reach the native expressions:
+/** SparkSessionExtensions entry point for the graft engine, so SQL
+  * users (not just the Column API) reach the native expressions:
   *
   * {{{
   * SparkSession.builder()
   *   .withExtensions(new GraftExtensions)          // programmatic, or
   *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
   * ...
-  * spark.sql("SELECT vec_dot(a.embedding, b.embedding) FROM ...")
+  * spark.sql("SELECT z_interleave(x, y) FROM ...")
   * }}}
   *
-  * What one config line lights up:
-  *  - `vec_dot(array<float|double>, array<float|double>) -> double` —
-  *    the codegen'd [[graft.functions.VecDot]] dot product (bit-parity
-  *    with the `aggregate(zip_with(..))` builtin formulation; see the
-  *    perf verdict in its scaladoc).
-  *  - `z_interleave(int-ish, int-ish) -> bigint` —
-  *    [[graft.functions.ZInterleave]], the Z-order curve key behind
-  *    ZOrder.cluster, usable from SQL for custom layouts.
-  *  - [[VecDotRewrite]] (optimizer rule) — rewrites the portable
-  *    `aggregate(zip_with(..))` dot-product idiom into VecDot, so
-  *    unchanged queries get the kernel when the extension is on.
-  *  - [[AsofJoinStrategy]] (planner strategy) — plans [[AsofJoinPlan]]
-  *    (Temporal.asofJoinNative's merge-scan as-of join).
-  *
-  * Kept deliberately thin: the engine's operators are declarative
-  * DataFrame plans that Catalyst already optimizes, so the extension
-  * surface is only what SQL genuinely can't express — scalar kernels,
-  * one rewrite, one custom operator. New injections belong here too,
-  * one `inject*` call each.
+  * It injects one function: `z_interleave(int-ish, int-ish) -> bigint`
+  * — [[graft.functions.ZInterleave]], the Z-order curve key behind
+  * ZOrder.cluster, usable from SQL for custom layouts. No optimizer
+  * rule and no planner strategy: the engine's operators are declarative
+  * DataFrame plans that Catalyst already optimizes, and query bodies
+  * never register this extension on their session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.vecDotDescriptor)
+  override def apply(ext: SparkSessionExtensions): Unit =
     ext.injectFunction(GraftExtensions.zInterleaveDescriptor)
-    ext.injectOptimizerRule(_ => VecDotRewrite)
-    ext.injectPlannerStrategy(_ => AsofJoinStrategy)
-  }
 }
 
 object GraftExtensions {
 
-  /** (name, info, builder) descriptor for `vec_dot`, shared by the
-    * extension and by [[register]].
-    */
-  val vecDotDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"vec_dot expects exactly 2 arguments, got ${args.length}")
-        VecDot(args.head, args(1))
-      })
-
   /** (name, info, builder) descriptor for `z_interleave` — the Morton
-    * z-order sort key ([[graft.functions.ZInterleave]]).
+    * z-order sort key ([[graft.functions.ZInterleave]]) — shared by the
+    * extension and by [[register]].
     */
   val zInterleaveDescriptor
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
@@ -76,21 +46,11 @@ object GraftExtensions {
         ZInterleave(args.head, args(1))
       })
 
-  /** Register the functions and the rewrite rule on an ALREADY-RUNNING
-    * session (tests, REPLs — extensions normally apply only at session
-    * build time; the rule goes through `experimental.extraOptimizations`,
-    * the runtime-injection point Spark provides for exactly this).
+  /** Register the function on an ALREADY-RUNNING session (tests, REPLs —
+    * extensions normally apply only at session build time).
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Seq(vecDotDescriptor, zInterleaveDescriptor).foreach {
-      case (id, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
-    if (!spark.experimental.extraOptimizations.contains(VecDotRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ VecDotRewrite
-    if (!spark.experimental.extraStrategies.contains(AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsofJoinStrategy
+    val (id, info, builder) = zInterleaveDescriptor
+    spark.sessionState.functionRegistry.registerFunction(id, info, builder)
   }
 }

@@ -1010,4 +1010,25 @@ class PlanAuditSpec extends SparkSpec {
       rm(dir)
     }
   }
+
+  test("q_evt_asof_native* bodies leave the session planner alone, equal their twins") {
+    // a query body that registers rules or strategies on the shared
+    // session would change how every later query in it is planned
+    def graftRules = (spark.experimental.extraOptimizations ++
+      spark.experimental.extraStrategies).map(_.getClass.getName)
+      .filter(_.startsWith("graft."))
+    val optimizations = spark.experimental.extraOptimizations
+    val strategies = spark.experimental.extraStrategies
+    Seq("q_evt_asof_native" -> "q_evt_asof_join",
+      "q_evt_asof_native_fwd" -> "q_evt_asof_fwd",
+      "q_evt_asof_native_nearest" -> "q_evt_asof_nearest").foreach {
+      case (face, twin) =>
+        val got = SparkEntry.queries(face)(spark, sfDir).collect().toSeq
+        assert(spark.experimental.extraOptimizations === optimizations, face)
+        assert(spark.experimental.extraStrategies === strategies, face)
+        assert(graftRules.isEmpty, s"$face: $graftRules")
+        val want = SparkEntry.queries(twin)(spark, sfDir).collect().toSeq
+        assert(got.nonEmpty && got === want, face)
+    }
+  }
 }

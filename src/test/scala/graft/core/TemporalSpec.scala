@@ -177,6 +177,37 @@ class TemporalSpec extends SparkSpec {
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
+  test("as-of null timestamps: right never matches, left gets null payload") {
+    import org.apache.spark.sql.DataFrame
+    import Temporal.AsofDirection.{Backward, Forward, Nearest}
+    val left = Seq(
+      (1L, 7L, Some(ts("2024-01-01 10:01:40"))),
+      (2L, 7L, None: Option[Timestamp]))
+      .toDF("l_id", "user_id", "ts")
+    val nullRow = (7L, None: Option[Timestamp], 1L)
+    val both = Seq(nullRow, (7L, Some(ts("2024-01-01 10:01:00")), 60L))
+      .toDF("user_id", "ts", "r_sec")
+    val nullOnly = Seq(nullRow).toDF("user_id", "ts", "r_sec")
+    // asofJoin and every direction × tolerance of asofJoinDirected
+    def faces(right: DataFrame): Seq[(String, DataFrame)] =
+      ("asofJoin", Temporal.asofJoin(left, right, Seq("user_id"), "ts", Seq("r_sec"))) +:
+        (for (d <- Seq(Backward, Forward, Nearest);
+              tol <- Seq(None, Some(3600L * 1000000))) yield
+          (s"$d tol=$tol", Temporal.asofJoinDirected(left, right,
+            Seq("user_id"), "ts", Seq("r_sec"), d, tol)))
+    def got(df: DataFrame) =
+      df.collect().map(r => r.getLong(0) ->
+        (if (r.isNullAt(3)) None else Some(r.getLong(3)))).toMap
+    faces(both).foreach { case (name, out) =>
+      // the 10:01:00 row precedes l_id 1: every face but forward matches it
+      val want = if (name.startsWith("Forward")) None else Some(60L)
+      assert(got(out) === Map(1L -> want, 2L -> None), name)
+    }
+    faces(nullOnly).foreach { case (name, out) =>
+      assert(got(out) === Map(1L -> None, 2L -> None), name)
+    }
+  }
+
   test("rangePairs emits each in-gap pair exactly once with exact gaps") {
     val clicks = Seq(
       (1L, 7L, ts("2024-01-01 10:00:00")),

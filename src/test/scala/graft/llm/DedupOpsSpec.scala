@@ -54,21 +54,6 @@ class DedupOpsSpec extends SparkSpec {
     }
   }
 
-  test("native MinHashAgg sketch matches the pure-builtin min(md5) formulation") {
-    val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val native = DedupOps.minhashSignaturesNative(real, "doc_id", "text")
-      .orderBy("doc_id").collect()
-    val expr = DedupOps.minhashSignatures(real, "doc_id", "text")
-      .orderBy("doc_id").collect()
-    assert(native.length === expr.length && native.nonEmpty)
-    native.zip(expr).foreach { case (a, b) =>
-      assert(a.getLong(0) === b.getLong(0))
-      (1 to 8).foreach(i =>
-        assert(a.getAs[String](s"mh$i") === b.getAs[String](s"mh$i"),
-          s"doc ${a.getLong(0)} mh$i"))
-    }
-  }
-
   test("embedding-cosine near-dup finds near-identical vectors, not orthogonal ones") {
     def v(xs: Double*): Seq[Float] = xs.map(_.toFloat)
     val emb = Seq(

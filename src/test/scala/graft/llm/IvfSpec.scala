@@ -374,4 +374,17 @@ class IvfSpec extends SparkSpec {
     index.unpersist()
     assert(jobs.get <= 6, s"${jobs.get} Spark jobs for one two-level fit")
   }
+
+  test("sample stride: max(1, n/sampleCap), refused past the hex4 range") {
+    assert(Ivf.sampleStride(0L, 65536) === 1L)
+    assert(Ivf.sampleStride(131071L, 65536) === 1L)
+    assert(Ivf.sampleStride(131072L, 65536) === 2L)
+    // the last n the default cap accepts: ss = 65,535 keeps hex4 ∈ {0, 65535}
+    val lastOk = 65536L * 65536L - 1L
+    assert(Ivf.sampleStride(lastOk, 65536) === 65535L)
+    val e = intercept[IllegalArgumentException](Ivf.sampleStride(lastOk + 1L, 65536))
+    assert(e.getMessage.contains("65536 > 65535"), e.getMessage)
+    // a larger cap brings the same corpus back inside the range
+    assert(Ivf.sampleStride(lastOk + 1L, 65537) === 65535L)
+  }
 }

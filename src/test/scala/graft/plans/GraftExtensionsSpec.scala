@@ -1,105 +1,11 @@
 package graft.plans
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class GraftExtensionsSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("vec_dot resolves in SQL and matches the HOF builtin formulation") {
-    GraftExtensions.register(spark)
-    val v = spark.sql(
-      "SELECT vec_dot(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D)) AS d")
-      .collect().head.getDouble(0)
-    assert(v === 32.0)
-
-    // parity against aggregate(zip_with(..)) on a real frame
-    val df = Seq(
-      (Array(1.0f, 2.0f), Array(3.0f, 4.0f)),
-      (Array(0.5f, -1.5f), Array(2.0f, 2.0f))).toDF("a", "b")
-    df.createOrReplaceTempView("vd_pairs")
-    val native = spark.sql("SELECT vec_dot(a, b) AS d FROM vd_pairs")
-      .collect().map(_.getDouble(0)).toSeq
-    val hof = df.select(
-      aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-        lit(0.0), (acc, x) => acc + x).as("d"))
-      .collect().map(_.getDouble(0)).toSeq
-    assert(native === hof)
-  }
-
-  test("vec_dot SQL null semantics: mismatched lengths and null arrays") {
-    GraftExtensions.register(spark)
-    val r = spark.sql(
-      """SELECT vec_dot(array(1.0D), array(1.0D, 2.0D)) AS mismatch,
-        |       vec_dot(CAST(NULL AS ARRAY<DOUBLE>), array(1.0D)) AS nullside
-        |""".stripMargin).collect().head
-    assert(r.isNullAt(0) && r.isNullAt(1))
-  }
-
-  // parquet-backed frame: a Seq-backed LocalRelation constant-folds away
-  // during optimization (ConvertToLocalRelation), leaving no Project to
-  // inspect for the rewrite
-  private def parquetDF(name: String,
-                        df: org.apache.spark.sql.DataFrame) = {
-    val dir = java.nio.file.Files.createTempDirectory(name).toString
-    df.write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir)
-  }
-
-  test("VecDotRewrite rewrites the aggregate(zip_with) idiom to vec_dot") {
-    GraftExtensions.register(spark)
-    val df = parquetDF("vdrw", Seq(
-      (1L, Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)),
-      (2L, Array(0.5f, 0.0f, -2.0f), Array(1.0f, 3.0f, 2.5f)))
-      .toDF("id", "a", "b"))
-    val q = df.orderBy("id")
-      .select(graft.llm.Ann.dot(col("a"), col("b")).as("d"))
-    // the optimized plan carries the native expression...
-    assert(q.queryExecution.optimizedPlan.toString.contains("vec_dot"))
-    // ...and the result is bit-identical to the unrewritten fold
-    val plain = Seq(32.0, -4.5)
-    assert(q.collect().map(_.getDouble(0)).toSeq === plain)
-  }
-
-  test("VecDotRewrite leaves mixed element types and non-dot folds alone") {
-    GraftExtensions.register(spark)
-    val df = parquetDF("vdrw2",
-      Seq((Array(1.0f, 2.0f), Array(3.0, 4.0), Array(5.0, 6.0)))
-        .toDF("f", "d1", "d2"))
-    // float × double: VecDot type-checks same-type only → no rewrite
-    val mixed = df.select(
-      aggregate(zip_with(col("f"), col("d1"), (x, y) => x * y),
-        lit(0.0), (acc, x) => acc + x).as("m"))
-    assert(!mixed.queryExecution.optimizedPlan.toString.contains("vec_dot"))
-    assert(mixed.collect().head.getDouble(0) === 11.0)
-    // a sum-of-sums fold (not a product) must not match
-    val sums = df.select(
-      aggregate(zip_with(col("d1"), col("d2"), (x, y) => x + y),
-        lit(0.0), (acc, x) => acc + x).as("s"))
-    assert(!sums.queryExecution.optimizedPlan.toString.contains("vec_dot"))
-    assert(sums.collect().head.getDouble(0) === 18.0)
-  }
-
-  test("VecDotRewrite skips bare float multiplies (float-precision fold)") {
-    GraftExtensions.register(spark)
-    val df = parquetDF("vdrw3",
-      Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f))).toDF("a", "b"))
-    // bare x*y over array<float> multiplies in FLOAT — each product
-    // rounds (or overflows to Inf) before the double fold, while VecDot
-    // widens both operands first: not bit-identical, must not fire
-    val bare = df.select(
-      aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-        lit(0.0), (acc, x) => acc + x).as("d"))
-    assert(!bare.queryExecution.optimizedPlan.toString.contains("vec_dot"))
-    assert(bare.collect().head.getDouble(0) === 11.0)
-    // the cast form (Ann.dot emits it) still rewrites on float arrays
-    val cast = df.select(graft.llm.Ann.dot(col("a"), col("b")).as("d"))
-    assert(cast.queryExecution.optimizedPlan.toString.contains("vec_dot"))
-    assert(cast.collect().head.getDouble(0) === 11.0)
-  }
 
   test("descriptor rejects wrong arity at build time") {
-    val (_, _, builder) = GraftExtensions.vecDotDescriptor
+    val (_, _, builder) = GraftExtensions.zInterleaveDescriptor
     intercept[IllegalArgumentException] {
       builder(Seq.empty)
     }
