@@ -78,31 +78,42 @@ object Fs {
       throw new java.io.IOException(s"rename $src -> $dst failed")
   }
 
-  /** Crash-safe in-place directory replacement: move `live` → `_old`
-    * (checked), move `compacted` → `live` (checked; on failure `_old`
-    * is restored so the live path never stays missing), then delete
-    * `_old` (checked). The swap protocol shared by LogStore.compact and
-    * Maintenance.compactStagingTable — all Hadoop FS, object-store
-    * portable.
-    *
-    * Entry guard: a STALE `_old` from a prior crash is resolved first —
-    * `FileSystem.rename` into an existing directory silently NESTS the
-    * source as a child (and returns true), so without the guard the
-    * "checked" rename would pass and a later restore could reinstate
-    * stale data as the live table. If `live` exists the stale `_old` is
-    * leftover from a completed-but-uncleaned swap → delete it; if
-    * `live` is missing the prior swap died in the window where only
-    * `_old` held the data → restore it before proceeding.
+  /** Resolve what a swap that died part-way left behind, before anyone
+    * reads or writes `live`. [[swapInPlace]] moves `live` → `_old`,
+    * then the new directory → `live`, then deletes `_old`:
+    *  - `live` missing, `_old` present: the process died between the two
+    *    renames and only `_old` holds the data → restore it. Without
+    *    this, the next writer sees "no state", writes its batch alone,
+    *    and the swap after that deletes `_old` as stale — all history
+    *    lost without an error;
+    *  - both present: the swap completed but `_old` was not removed →
+    *    delete it. `FileSystem.rename` into an existing directory
+    *    silently NESTS the source as a child (and returns true), so a
+    *    stale `_old` would turn the next swap's checked rename into a
+    *    silent nest.
+    * A no-op when no `_old` exists. Single-writer, like the swap.
     */
-  def swapInPlace(live: String, compacted: String, conf: Configuration): Unit = {
+  def recoverSwap(live: String, conf: Configuration): Unit = {
     val old = live + "_old"
     if (exists(old, conf)) {
       if (exists(live, conf)) {
         if (!delete(old, conf, recursive = true))
           throw new java.io.IOException(
             s"swap of $live: could not clear stale $old")
-      } else rename(old, live, conf) // prior crash mid-swap: recover first
+      } else rename(old, live, conf)
     }
+  }
+
+  /** Crash-safe in-place directory replacement: [[recoverSwap]] first,
+    * then move `live` → `_old` (checked), move `compacted` → `live`
+    * (checked; on failure `_old` is restored so the live path never
+    * stays missing), then delete `_old` (checked). A crash between the
+    * two renames is repaired by the next [[recoverSwap]] on the same
+    * path. All Hadoop FS, object-store portable.
+    */
+  def swapInPlace(live: String, compacted: String, conf: Configuration): Unit = {
+    val old = live + "_old"
+    recoverSwap(live, conf)
     rename(live, old, conf)
     try rename(compacted, live, conf)
     catch {
@@ -117,6 +128,13 @@ object Fs {
           "(next swap would treat it as stale)")
     ()
   }
+
+  /** Make `staging` the directory at `live`: [[swapInPlace]] when `live`
+    * exists, a checked [[rename]] when it does not (the first write).
+    */
+  def promote(staging: String, live: String, conf: Configuration): Unit =
+    if (exists(live, conf)) swapInPlace(live, staging, conf)
+    else rename(staging, live, conf)
 
   /** Write a small text marker (overwrite). Underscore-prefixed names
     * (`_graft_batch_id`) are invisible to Spark's parquet reader — the

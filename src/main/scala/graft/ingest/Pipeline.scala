@@ -38,6 +38,20 @@ object Pipeline {
     */
   private def batchCap(dsdMode: Boolean): Int = if (dsdMode) 20000 else 50000
 
+  /** Driver-memory guard on the facility-scoped (reference-uncapped)
+    * scan: the work list IS collect()ed for the run plan, and a
+    * mega-facility with millions of pending rows would otherwise OOM the
+    * driver. Files past the guard are untouched and picked up by the
+    * next run — the watermark/idempotency machinery makes every run a
+    * resumable prefix.
+    */
+  private val MaxWorklist = 500000
+
+  /** Concurrent per-entity read→transform→write jobs (the scheduler
+    * interleaves their stages so small entities don't serialize).
+    */
+  private val EntityParallelism = 8
+
   final case class Config(
       parentDir: String, // <parent>/<facility_id>/<decrypted file>
       warehouseDir: String, // staging-table parquet root
@@ -54,16 +68,6 @@ object Pipeline {
       // reference's facility scan has no LIMIT; the 50-row cap lives in
       // the claim-table seed (FacilityBatches.seedBatches).
       facilityId: Option[String] = None,
-      // driver-memory guard on the facility-scoped (reference-uncapped)
-      // scan: the work list IS collect()ed for the run plan, and a
-      // mega-facility with millions of pending rows would otherwise OOM
-      // the driver. Files past the guard are untouched and picked up by
-      // the next run — the watermark/idempotency machinery makes every
-      // run a resumable prefix.
-      maxWorklist: Int = 500000,
-      // concurrent per-entity read→transform→write jobs (the scheduler
-      // interleaves their stages so small entities don't serialize)
-      entityParallelism: Int = 8,
       // S8 JDBC variant (file_loader.py:639 `to_sql`): when set, staging
       // and quarantine appends go to JDBC tables at this url instead of
       // warehouse parquet. Escape hatch for parity with the reference's
@@ -78,9 +82,8 @@ object Pipeline {
       // (appends are coalesce(1), so that's ≈ appends since the last
       // compact). latest() views are invariant under the compact; asOf()
       // snapshots older than it are dropped (the VACUUM trade — raise
-      // minFiles for longer time travel). The common-case cost is one FS
-      // listing per log table, no Spark job.
-      autoCompactLogs: Boolean = true,
+      // minFiles for longer time travel; Int.MaxValue turns it off). The
+      // common-case cost is one FS listing per log table, no Spark job.
       logCompactMinFiles: Int = 64)
 
   final case class RunResult(
@@ -109,9 +112,9 @@ object Pipeline {
     val ordered = scoped.orderBy(col("modified_date").asc, col("file_name").asc)
     // facility-scoped scans are uncapped like the reference's
     // (multithread_file_loader.py:250-260 has no LIMIT) — up to the
-    // maxWorklist driver-memory guard; the overflow resumes next run
+    // MaxWorklist driver-memory guard; the overflow resumes next run
     cfg.facilityId.fold(ordered.limit(batchCap(cfg.dsdMode)))(_ =>
-      ordered.limit(cfg.maxWorklist))
+      ordered.limit(MaxWorklist))
   }
 
   def run(spark: SparkSession, cfg: Config): RunResult = {
@@ -264,7 +267,7 @@ object Pipeline {
     // submit entity jobs CONCURRENTLY (FanOut): sequential submission
     // leaves the cluster idle between small entities' stages
     val outcomes: Seq[(Map[(String, String), (String, Long, String)], Long, Long)] =
-      FanOut.run(byTable.toSeq, cfg.entityParallelism) { case (t, fs) =>
+      FanOut.run(byTable.toSeq, EntityParallelism) { case (t, fs) =>
         // one entity's failure must NOT abort the run: other entities
         // may already have appended staging rows, and only the log/sync
         // writes below make those appends idempotent for the rerun. The
@@ -368,13 +371,10 @@ object Pipeline {
     // view) still references them — executing such a plan after the
     // swap reads deleted files. The in-process writeLock serializes it
     // against nothing else here (single driver, end of run).
-    if (cfg.autoCompactLogs) {
-      store.compactIfNeeded("sync_file", Seq("id"), cfg.logCompactMinFiles)
-      store.compactIfNeeded("file_ingestion_log",
-        Seq("file_name", "facility_id", "load_start_time"),
-        cfg.logCompactMinFiles)
-      ()
-    }
+    store.compactIfNeeded("sync_file", Seq("id"), cfg.logCompactMinFiles)
+    store.compactIfNeeded("file_ingestion_log",
+      Seq("file_name", "facility_id", "load_start_time"),
+      cfg.logCompactMinFiles)
     res
   }
 }

@@ -50,14 +50,27 @@ final case class LogStore(spark: SparkSession, dir: String) {
     * the file count over a long history.
     */
   def append(table: String, rows: DataFrame): Long = writeLock.synchronized {
+    // a compact that died mid-swap left the rows in `<table>_old`:
+    // restore them before appending, or the next compact deletes them
+    graft.core.Fs.recoverSwap(path(table), spark.sparkContext.hadoopConfiguration)
     val v = LogStore.nextVersion()
     rows.coalesce(1).withColumn("_version_ts", lit(v))
       .write.mode("append").parquet(path(table))
     v
   }
 
-  def exists(table: String): Boolean =
-    graft.core.Fs.exists(path(table), spark.sparkContext.hadoopConfiguration)
+  /** True when the table has rows on disk. A missing directory may be a
+    * [[compact]] that died between its renames: under the write lock
+    * (never while a compact is mid-swap) [[graft.core.Fs.recoverSwap]]
+    * restores `<table>_old` first, so readers never see an empty log.
+    */
+  def exists(table: String): Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    graft.core.Fs.exists(path(table), conf) || writeLock.synchronized {
+      graft.core.Fs.recoverSwap(path(table), conf)
+      graft.core.Fs.exists(path(table), conf)
+    }
+  }
 
   /** Raw append history (all versions). */
   def history(table: String): DataFrame = spark.read.parquet(path(table))
@@ -123,7 +136,9 @@ final case class LogStore(spark: SparkSession, dir: String) {
     * window runs against HDFS/S3/file:// like every other
     * metadata-plane call, and a half-done swap can never pass
     * unnoticed (`Fs.rename` throws on the silent false
-    * `FileSystem.rename` would otherwise return).
+    * `FileSystem.rename` would otherwise return). A process that dies
+    * between the swap's renames is repaired by the next [[append]] or
+    * [[exists]].
     */
   def compact(table: String, keys: Seq[String],
               targetFileBytes: Long = 128L * 1024 * 1024): Unit =

@@ -41,11 +41,6 @@ object AnnIndexStream {
 
   private def dataDir(storeDir: String): String = s"$storeDir/data"
 
-  private def tagOf(queryId: String, batchId: Long): String = {
-    val qid = if (queryId.isEmpty) "q" else queryId
-    s"${qid}_$batchId"
-  }
-
   /** Assign one batch of vectors to cells and append it to the store
     * as its own `ingest=` partition (staged, crash-safe, replay-idempotent).
     */
@@ -59,7 +54,7 @@ object AnnIndexStream {
     // like a replay and silently no-op (the IncrDedupStream rule).
     // Single-writer, like the streaming checkpoint.
     val tag =
-      if (batchId >= 0) tagOf(queryId, batchId)
+      if (batchId >= 0) DeltaStore.tagOf(queryId, batchId)
       else s"direct_${Fs.listDirs(dataDir(storeDir), conf).length}"
     val dest = s"${dataDir(storeDir)}/ingest=$tag"
     if (Fs.exists(dest, conf)) return // re-delivered batch: directory IS the marker
@@ -283,13 +278,7 @@ object AnnIndexStream {
   def run(items: DataFrame, idCol: String, vecCol: String,
           centroids: DataFrame, storeDir: String, checkpointDir: String,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    items.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, idCol, vecCol, centroids, storeDir,
-          batchId, ReplayGuard.streamingQueryId(batch))
-      }
-      .start()
+    ReplayGuard.drain(items, checkpointDir, trigger) { (batch, batchId, qid) =>
+      applyBatch(batch, idCol, vecCol, centroids, storeDir, batchId, qid)
+    }
 }

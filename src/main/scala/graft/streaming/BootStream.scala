@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.core.Fs
 import graft.llm.Bootstrap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -8,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Continuously-maintained Poisson-bootstrap state: each micro-batch's
   * rows fold into a persistent per-(group, replicate) frame of
-  * (n_eff, wsum) resample sums, promoted with the crash-safe swap —
+  * (n_eff, wsum) resample sums through [[ReplayGuard.fold]] —
   * the always-on error bar. A release gate reads the CURRENT
   * confidence interval for any tracked corpus mean without a corpus
   * pass: the state is groups × b rows, the batch cost is the batch.
@@ -23,47 +22,29 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * The id-keyed weights also make the fold growth-stable: re-ingesting
   * history cannot re-weight old rows differently.
   *
-  * Replay safety is [[ReplayGuard]]'s (queryId, batchId) marker, the
-  * SketchStream protocol: cell addition is not idempotent, so a
-  * replayed foreachBatch batch is skipped, while a fresh queryId
-  * (checkpoint relocated, ids restarting at 0) re-keys and folds.
+  * Replay and crash safety are [[ReplayGuard.fold]]'s: cell addition
+  * is not idempotent, so its marker skips a replayed batch.
   */
 object BootStream {
 
-  /** Last batchId folded into `statePath`; -1 when missing. */
-  def lastAppliedBatchId(statePath: String,
-                         conf: org.apache.hadoop.conf.Configuration): Long =
-    ReplayGuard.read(statePath, conf).map(_._2).getOrElse(-1L)
-
   /** Fold one batch of (idCol, valueCol, groupCols...) rows into the
-    * replicate-sum state at `statePath` (missing state = empty).
-    * Staging write + crash-safe swap, materialized BEFORE the swap.
+    * replicate-sum state at `statePath` (missing state = empty) through
+    * [[ReplayGuard.fold]].
     * `b` and the column set must be stable across batches — the state
     * schema pins them; a mismatched fold fails on the union.
     */
   def applyBatch(batch: DataFrame, idCol: String, valueCol: String, b: Int,
                  statePath: String, groupCols: Seq[String] = Nil,
-                 batchId: Long = -1L, queryId: String = ""): Unit = {
-    val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val marker = ReplayGuard.read(statePath, conf)
-    if (ReplayGuard.alreadyApplied(marker, queryId, batchId)) return
-    val cells = Bootstrap.replicateStats(batch, idCol, Seq(valueCol), b,
-      groupCols)
-    val keys = (groupCols :+ "rep").map(col)
-    val merged =
-      if (Fs.exists(statePath, conf))
-        spark.read.parquet(statePath).unionByName(cells)
-          .groupBy(keys: _*)
-          .agg(sum(col("n_eff")).as("n_eff"),
-            sum(col(s"wsum_$valueCol")).as(s"wsum_$valueCol"))
-      else cells
-    val staging = s"$statePath.staging"
-    merged.write.mode("overwrite").parquet(staging)
-    ReplayGuard.stamp(staging, conf, marker, queryId, batchId)
-    if (Fs.exists(statePath, conf)) Fs.swapInPlace(statePath, staging, conf)
-    else Fs.rename(staging, statePath, conf)
-  }
+                 batchId: Long = -1L, queryId: String = ""): Unit =
+    ReplayGuard.fold(batch.sparkSession, statePath, batchId, queryId) { prior =>
+      val cells = Bootstrap.replicateStats(batch, idCol, Seq(valueCol), b,
+        groupCols)
+      val keys = (groupCols :+ "rep").map(col)
+      prior.fold(cells)(_.unionByName(cells)
+        .groupBy(keys: _*)
+        .agg(sum(col("n_eff")).as("n_eff"),
+          sum(col(s"wsum_$valueCol")).as(s"wsum_$valueCol")))
+    }
 
   /** The current bootstrap CI of the tracked mean from the persisted
     * replicate sums — [[Bootstrap.percentileCI]] over the groups × b
@@ -89,13 +70,7 @@ object BootStream {
           statePath: String, checkpoint: String,
           groupCols: Seq[String] = Nil,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, idCol, valueCol, b, statePath, groupCols,
-          batchId, ReplayGuard.streamingQueryId(batch))
-      }
-      .start()
+    ReplayGuard.drain(rows, checkpoint, trigger) { (batch, batchId, qid) =>
+      applyBatch(batch, idCol, valueCol, b, statePath, groupCols, batchId, qid)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.{Fs, Merge}
+import graft.core.Merge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,9 +16,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * for one key; applying them all would make merge order ambiguous),
   * (2) Merge.upsert into the current snapshot — one anti join, change
   * set broadcast when small, (3) write the new snapshot to a staging
-  * dir and promote it with the crash-safe [[Fs.swapInPlace]] protocol
-  * (readers never observe a half-written snapshot; a crash mid-swap
-  * leaves a restorable backup).
+  * dir and promote it through [[ReplayGuard.fold]] (readers never
+  * observe a half-written snapshot; the next batch restores a snapshot
+  * left behind by a crash mid-swap).
   *
   * Batch-vs-stream parity: on a single batch over an empty base the
   * result is exactly "latest non-deleted change per key" — what the
@@ -42,24 +42,19 @@ object CdcApply {
   }
 
   /** Apply one resolved batch to the snapshot at `basePath` (missing
-    * base = empty). Staging write + crash-safe swap.
+    * base = empty) through [[ReplayGuard.fold]] without a marker: the
+    * keyed latest-wins upsert is idempotent, so a replay converges.
     */
   def applyBatch(spark: SparkSession, batch: DataFrame, basePath: String,
                  keys: Seq[String], tsCol: String, idCol: String,
                  deleteCol: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val resolved = latestChanges(batch, keys, tsCol, idCol)
-    val merged =
-      if (Fs.exists(basePath, conf)) {
-        val base = spark.read.parquet(basePath)
+    ReplayGuard.fold(spark, basePath, -1L, "") {
+      case Some(base) =>
         Merge.upsert(base, resolved, keys, deleteCol = Some(deleteCol))
-      } else resolved.filter(!coalesce(col(deleteCol), lit(false)))
-        .drop(deleteCol)
-    val staging = s"$basePath.staging"
-    // materialize BEFORE the swap: merged lazily reads the live base
-    merged.write.mode("overwrite").parquet(staging)
-    if (Fs.exists(basePath, conf)) Fs.swapInPlace(basePath, staging, conf)
-    else Fs.rename(staging, basePath, conf)
+      case None =>
+        resolved.filter(!coalesce(col(deleteCol), lit(false))).drop(deleteCol)
+    }
   }
 
   /** Wire a change stream into the snapshot: foreachBatch + the apply
@@ -71,13 +66,8 @@ object CdcApply {
           keys: Seq[String], tsCol: String, idCol: String,
           deleteCol: String,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch.sparkSession, batch, basePath, keys, tsCol, idCol,
-          deleteCol)
-      }
-      .start()
+    ReplayGuard.drain(changes, checkpointDir, trigger) { (batch, _, _) =>
+      applyBatch(batch.sparkSession, batch, basePath, keys, tsCol, idCol,
+        deleteCol)
+    }
 }

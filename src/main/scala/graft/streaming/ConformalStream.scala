@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.core.Fs
 import graft.llm.RankStats
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -24,47 +23,30 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * domain — the InfoStream vocabulary class, far below corpus-sized;
   * quantize scores at the call site (the RankStats long contract).
   *
-  * Replay safety is [[ReplayGuard]]'s (queryId, batchId) marker:
-  * cell addition is not idempotent, so a replayed foreachBatch batch
-  * is skipped, while a fresh queryId re-keys and folds.
+  * Replay and crash safety are [[ReplayGuard.fold]]'s: cell addition
+  * is not idempotent, so its marker skips a replayed batch.
   */
 object ConformalStream {
 
-  /** Last batchId folded into `statePath`; -1 when missing. */
-  def lastAppliedBatchId(statePath: String,
-                         conf: org.apache.hadoop.conf.Configuration): Long =
-    ReplayGuard.read(statePath, conf).map(_._2).getOrElse(-1L)
-
   /** Fold one batch of (groupCol, valueCol) calibration rows into the
-    * cell state at `statePath` (missing state = empty). Staging write
-    * + crash-safe swap, materialized BEFORE the swap.
+    * cell state at `statePath` (missing state = empty) through
+    * [[ReplayGuard.fold]].
     */
   def applyBatch(batch: DataFrame, groupCol: String, valueCol: String,
                  statePath: String,
-                 batchId: Long = -1L, queryId: String = ""): Unit = {
-    val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val marker = ReplayGuard.read(statePath, conf)
-    if (ReplayGuard.alreadyApplied(marker, queryId, batchId)) return
-    val cells = batch.select(
-      when(col(groupCol).isNull,
-        raise_error(lit(s"ConformalStream: NULL group in $groupCol")))
-        .otherwise(col(groupCol)).cast("string").as("_g"),
-      when(col(valueCol).isNull,
-        raise_error(lit(s"ConformalStream: NULL value in $valueCol")))
-        .otherwise(col(valueCol)).cast("long").as("_v"))
-      .groupBy("_g", "_v").agg(count(lit(1)).as("_n"))
-    val merged =
-      if (Fs.exists(statePath, conf))
-        spark.read.parquet(statePath).unionByName(cells)
-          .groupBy("_g", "_v").agg(sum(col("_n")).as("_n"))
-      else cells
-    val staging = s"$statePath.staging"
-    merged.write.mode("overwrite").parquet(staging)
-    ReplayGuard.stamp(staging, conf, marker, queryId, batchId)
-    if (Fs.exists(statePath, conf)) Fs.swapInPlace(statePath, staging, conf)
-    else Fs.rename(staging, statePath, conf)
-  }
+                 batchId: Long = -1L, queryId: String = ""): Unit =
+    ReplayGuard.fold(batch.sparkSession, statePath, batchId, queryId) { prior =>
+      val cells = batch.select(
+        when(col(groupCol).isNull,
+          raise_error(lit(s"ConformalStream: NULL group in $groupCol")))
+          .otherwise(col(groupCol)).cast("string").as("_g"),
+        when(col(valueCol).isNull,
+          raise_error(lit(s"ConformalStream: NULL value in $valueCol")))
+          .otherwise(col(valueCol)).cast("long").as("_v"))
+        .groupBy("_g", "_v").agg(count(lit(1)).as("_n"))
+      prior.fold(cells)(_.unionByName(cells)
+        .groupBy("_g", "_v").agg(sum(col("_n")).as("_n")))
+    }
 
   /** The current per-group conformal threshold from the persisted
     * cells — [[RankStats.conformalQuantileFromCells]].
@@ -81,13 +63,7 @@ object ConformalStream {
   def run(rows: DataFrame, groupCol: String, valueCol: String,
           statePath: String, checkpoint: String,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, groupCol, valueCol, statePath,
-          batchId, ReplayGuard.streamingQueryId(batch))
-      }
-      .start()
+    ReplayGuard.drain(rows, checkpoint, trigger) { (batch, batchId, qid) =>
+      applyBatch(batch, groupCol, valueCol, statePath, batchId, qid)
+    }
 }

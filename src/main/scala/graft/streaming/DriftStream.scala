@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.core.Fs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -15,9 +14,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * streamable: the baseline fixes (mn, width, nBins) once, so each
   * micro-batch's bin counts are a pure map-side projection that folds
   * into the current grid by ADDITION — a commutative monoid, so any
-  * batching is bit-identical to one-shot counting, and the
-  * [[ReplayGuard]] marker plus crash-safe swap give the same
-  * at-least-once safety as [[SketchStream]]. The PSI read recomputes
+  * batching is bit-identical to one-shot counting, and
+  * [[ReplayGuard.fold]] gives the same at-least-once safety as
+  * [[SketchStream]]. The PSI read recomputes
   * from the two tiny grids (nBins rows each) on demand.
   */
 object DriftStream {
@@ -73,31 +72,20 @@ object DriftStream {
   }
 
   /** Fold one batch's bin counts into the current grid (addition —
-    * monoid), with the SketchStream replay marker + crash-safe swap.
+    * monoid) through [[ReplayGuard.fold]].
     * The grid geometry (mn, width, nBins) comes from the baseline file,
     * never from the caller — a mismatched nBins cannot skew the clamp.
     */
   def applyBatch(batch: DataFrame, valueCol: String, baselinePath: String,
                  currentPath: String,
-                 batchId: Long = -1L, queryId: String = ""): Unit = {
-    val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val marker = ReplayGuard.read(currentPath, conf)
-    if (ReplayGuard.alreadyApplied(marker, queryId, batchId)) return
-    val (mn, w, nBins) = bounds(spark, baselinePath)
-    val g = binned(batch, valueCol, mn, w, nBins)
-      .groupBy("bin").agg(count(lit(1)).as("cnt"))
-    val merged =
-      if (Fs.exists(currentPath, conf))
-        spark.read.parquet(currentPath).unionByName(g)
-          .groupBy("bin").agg(sum(col("cnt")).as("cnt"))
-      else g
-    val staging = s"$currentPath.staging"
-    merged.write.mode("overwrite").parquet(staging)
-    ReplayGuard.stamp(staging, conf, marker, queryId, batchId)
-    if (Fs.exists(currentPath, conf)) Fs.swapInPlace(currentPath, staging, conf)
-    else Fs.rename(staging, currentPath, conf)
-  }
+                 batchId: Long = -1L, queryId: String = ""): Unit =
+    ReplayGuard.fold(batch.sparkSession, currentPath, batchId, queryId) { prior =>
+      val (mn, w, nBins) = bounds(batch.sparkSession, baselinePath)
+      val g = binned(batch, valueCol, mn, w, nBins)
+        .groupBy("bin").agg(count(lit(1)).as("cnt"))
+      prior.fold(g)(_.unionByName(g)
+        .groupBy("bin").agg(sum(col("cnt")).as("cnt")))
+    }
 
   /** The current drift reading: PSI of the maintained grid vs the
     * baseline (psiDrift's add-one smoothing and round-6 contract),
@@ -170,13 +158,7 @@ object DriftStream {
   def run(items: DataFrame, valueCol: String, baselinePath: String,
           currentPath: String, checkpointDir: String,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    items.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, valueCol, baselinePath, currentPath,
-          batchId, ReplayGuard.streamingQueryId(batch))
-      }
-      .start()
+    ReplayGuard.drain(items, checkpointDir, trigger) { (batch, batchId, qid) =>
+      applyBatch(batch, valueCol, baselinePath, currentPath, batchId, qid)
+    }
 }

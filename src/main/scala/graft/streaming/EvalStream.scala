@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.core.Fs
 import graft.llm.Evals
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -8,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 /** Continuously-maintained calibration state: each micro-batch's
   * (confidence, label) stream folds into a persistent per-bin integer
   * cell frame ([[Evals.calibrationCells]] merged by per-bin addition),
-  * promoted with the crash-safe swap — the always-on reliability
+  * promoted through [[ReplayGuard.fold]] — the always-on reliability
   * monitor for a quality/reward scorer in a live curation pipeline.
   *
   * Exactness across batchings: the cells are a commutative monoid, so
@@ -19,41 +18,22 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (the groupBy collapses per partition before the exchange) and the
   * persistent state is nBins rows at ANY corpus scale.
   *
-  * Replay safety is [[ReplayGuard]]'s (queryId, batchId) marker, the
-  * SketchStream protocol: cell addition is not idempotent, so a
-  * replayed foreachBatch batch is skipped, while a fresh queryId
-  * (checkpoint relocated, ids restarting at 0) re-keys and folds.
+  * Replay and crash safety are [[ReplayGuard.fold]]'s: cell addition
+  * is not idempotent, so its marker skips a replayed batch.
   */
 object EvalStream {
 
-  /** Last batchId folded into `statePath`; -1 when missing. */
-  def lastAppliedBatchId(statePath: String,
-                         conf: org.apache.hadoop.conf.Configuration): Long =
-    ReplayGuard.read(statePath, conf).map(_._2).getOrElse(-1L)
-
   /** Fold one batch of (confMilliCol, labelCol) rows into the per-bin
-    * state at `statePath` (missing state = empty). Staging write +
-    * crash-safe swap, materialized BEFORE the swap (the merged frame
-    * lazily reads the live state it replaces).
+    * state at `statePath` (missing state = empty) through
+    * [[ReplayGuard.fold]].
     */
   def applyBatch(batch: DataFrame, confMilliCol: String, labelCol: String,
                  statePath: String, nBins: Int = 10,
-                 batchId: Long = -1L, queryId: String = ""): Unit = {
-    val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val marker = ReplayGuard.read(statePath, conf)
-    if (ReplayGuard.alreadyApplied(marker, queryId, batchId)) return
-    val cells = Evals.calibrationCells(batch, confMilliCol, labelCol, nBins)
-    val merged =
-      if (Fs.exists(statePath, conf))
-        Evals.calibrationMerge(spark.read.parquet(statePath), cells)
-      else cells
-    val staging = s"$statePath.staging"
-    merged.write.mode("overwrite").parquet(staging)
-    ReplayGuard.stamp(staging, conf, marker, queryId, batchId)
-    if (Fs.exists(statePath, conf)) Fs.swapInPlace(statePath, staging, conf)
-    else Fs.rename(staging, statePath, conf)
-  }
+                 batchId: Long = -1L, queryId: String = ""): Unit =
+    ReplayGuard.fold(batch.sparkSession, statePath, batchId, queryId) { prior =>
+      val cells = Evals.calibrationCells(batch, confMilliCol, labelCol, nBins)
+      prior.fold(cells)(Evals.calibrationMerge(_, cells))
+    }
 
   /** The current reliability diagram + ECE from the persisted cells. */
   def readBins(spark: org.apache.spark.sql.SparkSession,
@@ -66,13 +46,9 @@ object EvalStream {
   def run(scored: DataFrame, confMilliCol: String, labelCol: String,
           statePath: String, checkpoint: String,
           nBins: Int = 10): StreamingQuery =
-    scored.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    ReplayGuard.drain(scored, checkpoint, Trigger.AvailableNow()) {
+      (batch, batchId, qid) =>
         applyBatch(batch, confMilliCol, labelCol, statePath, nBins,
-          batchId, ReplayGuard.streamingQueryId(batch))
-      }
-      .start()
+          batchId, qid)
+    }
 }

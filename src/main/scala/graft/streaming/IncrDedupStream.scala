@@ -162,14 +162,8 @@ object IncrDedupStream {
           numHashes: Int = 8, rowsPerBand: Int = 4, k: Int = 3,
           minMatches: Int = 6,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, idCol, textCol, storeDir, numHashes,
-          rowsPerBand, k, minMatches, batchId,
-          ReplayGuard.streamingQueryId(batch))
-      }
-      .start()
+    ReplayGuard.drain(docs, checkpointDir, trigger) { (batch, batchId, qid) =>
+      applyBatch(batch, idCol, textCol, storeDir, numHashes,
+        rowsPerBand, k, minMatches, batchId, qid)
+    }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.core.Fs
 import graft.llm.InfoStats
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -8,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 /** Continuously-maintained per-slice token distribution: each
   * micro-batch's documents fold into a persistent (slice, token, cnt)
   * cell frame ([[InfoStats.tokenCells]] merged by per-cell addition),
-  * promoted with the crash-safe swap — one maintained state serving
+  * promoted through [[ReplayGuard.fold]] — one maintained state serving
   * BOTH always-on vocabulary reads: per-slice diversity
   * ([[InfoStats.tokenDiversityFromCells]] — entropy/TTR/Simpson, the
   * template-spam monitor) and per-slice JSD against the complement
@@ -24,42 +23,23 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * is vocabulary-sized — the [[AnnIndexStream]] store class, far below
   * corpus-sized.
   *
-  * Replay safety is [[ReplayGuard]]'s (queryId, batchId) marker, the
-  * SketchStream protocol: cell addition is not idempotent, so a
-  * replayed foreachBatch batch is skipped, while a fresh queryId
-  * (checkpoint relocated, ids restarting at 0) re-keys and folds.
+  * Replay and crash safety are [[ReplayGuard.fold]]'s: cell addition
+  * is not idempotent, so its marker skips a replayed batch.
   */
 object InfoStream {
 
-  /** Last batchId folded into `statePath`; -1 when missing. */
-  def lastAppliedBatchId(statePath: String,
-                         conf: org.apache.hadoop.conf.Configuration): Long =
-    ReplayGuard.read(statePath, conf).map(_._2).getOrElse(-1L)
-
   /** Fold one batch of (sliceCol, textCol) documents into the cell
-    * state at `statePath` (missing state = empty). Staging write +
-    * crash-safe swap, materialized BEFORE the swap (the merged frame
-    * lazily reads the live state it replaces).
+    * state at `statePath` (missing state = empty) through
+    * [[ReplayGuard.fold]].
     */
   def applyBatch(batch: DataFrame, sliceCol: String, textCol: String,
                  statePath: String,
-                 batchId: Long = -1L, queryId: String = ""): Unit = {
-    val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val marker = ReplayGuard.read(statePath, conf)
-    if (ReplayGuard.alreadyApplied(marker, queryId, batchId)) return
-    val cells = InfoStats.tokenCells(batch, sliceCol, textCol,
-      "InfoStream.applyBatch")
-    val merged =
-      if (Fs.exists(statePath, conf))
-        InfoStats.tokenCellsMerge(spark.read.parquet(statePath), cells)
-      else cells
-    val staging = s"$statePath.staging"
-    merged.write.mode("overwrite").parquet(staging)
-    ReplayGuard.stamp(staging, conf, marker, queryId, batchId)
-    if (Fs.exists(statePath, conf)) Fs.swapInPlace(statePath, staging, conf)
-    else Fs.rename(staging, statePath, conf)
-  }
+                 batchId: Long = -1L, queryId: String = ""): Unit =
+    ReplayGuard.fold(batch.sparkSession, statePath, batchId, queryId) { prior =>
+      val cells = InfoStats.tokenCells(batch, sliceCol, textCol,
+        "InfoStream.applyBatch")
+      prior.fold(cells)(InfoStats.tokenCellsMerge(_, cells))
+    }
 
   /** The current per-slice diversity profile from the persisted cells. */
   def readDiversity(spark: org.apache.spark.sql.SparkSession,
@@ -79,13 +59,7 @@ object InfoStream {
   def run(docs: DataFrame, sliceCol: String, textCol: String,
           statePath: String, checkpoint: String,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, sliceCol, textCol, statePath,
-          batchId, ReplayGuard.streamingQueryId(batch))
-      }
-      .start()
+    ReplayGuard.drain(docs, checkpoint, trigger) { (batch, batchId, qid) =>
+      applyBatch(batch, sliceCol, textCol, statePath, batchId, qid)
+    }
 }

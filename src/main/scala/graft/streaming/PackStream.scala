@@ -152,13 +152,8 @@ object PackStream {
   def run(docs: DataFrame, idCol: String, lenCol: String, srcCol: String,
           storeDir: String, checkpointDir: String, capacity: Long,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, idCol, lenCol, srcCol, storeDir, capacity,
-          batchId, ReplayGuard.streamingQueryId(batch))
-      }
-      .start()
+    ReplayGuard.drain(docs, checkpointDir, trigger) { (batch, batchId, qid) =>
+      applyBatch(batch, idCol, lenCol, srcCol, storeDir, capacity,
+        batchId, qid)
+    }
 }

@@ -2,37 +2,54 @@ package graft.streaming
 
 import graft.core.Fs
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** The replay-marker protocol for foreachBatch sinks that maintain a
-  * READ-MODIFY-WRITE store — state the fold rewrites in place, like the
-  * CMS grid ([[SketchStream]]), where a replay would double-apply:
-  * a `_graft_batch_id` marker file INSIDE the store directory records
-  * the last `(queryId, batchId)` folded in. The underscore prefix makes
-  * it invisible to the parquet reader (the `_SUCCESS` convention), and
-  * living inside the directory means [[Fs.swapInPlace]] promotes the
-  * marker and the state it describes in the SAME atomic rename.
+/** The one read-modify-write protocol for foreachBatch sinks that
+  * maintain a store the fold rewrites in place — the CMS grid
+  * ([[SketchStream]]), the cell states of the other marker folds, the
+  * [[TopKStream]] candidate table and the [[CdcApply]] snapshot. Every
+  * fold goes through [[fold]]:
+  *
+  *   1. [[Fs.recoverSwap]] repairs a swap that died between its two
+  *      renames (`<state>` missing, `<state>_old` holding the data), so
+  *      the fold never mistakes a crashed swap for an empty store;
+  *   2. the replay marker is read, and a replayed batch is skipped;
+  *   3. the prior state (None when the store is new) feeds the caller's
+  *      `next`, whose result is written to `<state>.staging` — BEFORE
+  *      the swap, since `next` lazily reads the live state it replaces;
+  *   4. the staging directory is stamped and promoted with
+  *      [[Fs.promote]] (swap when the store exists, rename otherwise).
+  *
+  * The marker is a `_graft_batch_id` file INSIDE the store directory
+  * recording the last `(queryId, batchId)` folded in. The underscore
+  * prefix makes it invisible to the parquet reader (the `_SUCCESS`
+  * convention), and living inside the directory means the swap promotes
+  * the marker and the state it describes in the SAME atomic rename.
   *
   * Why both ids (the txnAppId+version pattern for idempotent
   * foreachBatch sinks): foreachBatch is at-least-once — a crash between
   * the store swap and the streaming checkpoint commit REPLAYS the
-  * batch, and non-idempotent folds (cell addition, index append) would
-  * double-apply, so a batch with `batchId <=` the recorded one under
-  * the SAME queryId is skipped. But if the checkpoint is deleted or
-  * relocated while the store is kept (a routine ops event), batchIds
-  * restart at 0 under a NEW queryId — skipping on the bare id would
-  * silently drop every new batch until the ids caught up. A mismatched
-  * queryId therefore folds (and re-keys the marker to the new query).
+  * batch, and non-idempotent folds (cell addition) would double-apply,
+  * so a batch with `batchId <=` the recorded one under the SAME queryId
+  * is skipped. But if the checkpoint is deleted or relocated while the
+  * store is kept (a routine ops event), batchIds restart at 0 under a
+  * NEW queryId — skipping on the bare id would silently drop every new
+  * batch until the ids caught up. A mismatched queryId therefore folds
+  * (and re-keys the marker to the new query). `batchId = -1` (direct
+  * callers, and the idempotent keyed folds — TopKStream's candidates,
+  * CdcApply's upsert) always folds and carries an existing marker
+  * through the swap unchanged.
   *
   * APPEND-shaped stores don't need this: [[IncrDedupStream]] keys each
   * batch's delta directory by (queryId, batchId) and recomputes-then-
-  * overwrites on replay — idempotent by naming, no marker. Reach for
-  * the marker only when the fold genuinely rewrites shared state.
+  * overwrites on replay — idempotent by naming, no marker. They share
+  * only the stream wiring, [[drain]].
   */
 object ReplayGuard {
 
   /** Marker file name inside the store directory. */
-  val MarkerName = "_graft_batch_id"
+  private val MarkerName = "_graft_batch_id"
 
   /** Parse the marker into (queryId, batchId). Two formats:
     *  - v2 `"<queryId>:<batchId>"`; queryId may be empty (direct batch
@@ -42,7 +59,7 @@ object ReplayGuard {
     *    callers that never pass a queryId.
     * None when the store is missing or untracked.
     */
-  def read(storeDir: String, conf: Configuration): Option[(String, Long)] =
+  private def read(storeDir: String, conf: Configuration): Option[(String, Long)] =
     Fs.readText(s"$storeDir/$MarkerName", conf).map { txt =>
       val s = txt.trim
       s.lastIndexOf(':') match {
@@ -51,12 +68,18 @@ object ReplayGuard {
       }
     }
 
+  /** Last batchId folded into the store at `storeDir`; -1 when the store
+    * is missing or predates batch tracking.
+    */
+  def lastAppliedBatchId(storeDir: String, conf: Configuration): Long =
+    read(storeDir, conf).map(_._2).getOrElse(-1L)
+
   /** True when this (queryId, batchId) is already folded into the store
     * the marker was read from — i.e. the batch is a replay to skip.
     * Always false for direct calls (batchId < 0).
     */
-  def alreadyApplied(marker: Option[(String, Long)],
-                     queryId: String, batchId: Long): Boolean =
+  private def alreadyApplied(marker: Option[(String, Long)],
+                             queryId: String, batchId: Long): Boolean =
     batchId >= 0 && marker.exists { case (qid, bid) =>
       qid == queryId && batchId <= bid
     }
@@ -66,14 +89,49 @@ object ReplayGuard {
     * for direct folds (batchId < 0) so replay protection survives
     * interleaved direct calls.
     */
-  def stamp(stagingDir: String, conf: Configuration,
-            existing: Option[(String, Long)],
-            queryId: String, batchId: Long): Unit =
+  private def stamp(stagingDir: String, conf: Configuration,
+                    existing: Option[(String, Long)],
+                    queryId: String, batchId: Long): Unit =
     if (batchId >= 0)
       Fs.writeText(s"$stagingDir/$MarkerName", s"$queryId:$batchId", conf)
     else existing.foreach { case (qid, bid) =>
       Fs.writeText(s"$stagingDir/$MarkerName", s"$qid:$bid", conf)
     }
+
+  /** Fold one batch into the parquet store at `path` (see the object
+    * doc for the steps). `next` maps the prior state (None when the
+    * store does not exist yet) to the new state; it is not called for a
+    * replayed batch.
+    */
+  def fold(spark: SparkSession, path: String, batchId: Long, queryId: String)
+          (next: Option[DataFrame] => DataFrame): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    Fs.recoverSwap(path, conf)
+    val marker = read(path, conf)
+    if (alreadyApplied(marker, queryId, batchId)) return
+    val prior =
+      if (Fs.exists(path, conf)) Some(spark.read.parquet(path)) else None
+    val staging = s"$path.staging"
+    next(prior).write.mode("overwrite").parquet(staging)
+    stamp(staging, conf, marker, queryId, batchId)
+    Fs.promote(staging, path, conf)
+  }
+
+  /** Wire a stream into a sink: one foreachBatch query on `checkpoint`
+    * under `trigger` (`Trigger.AvailableNow` drains what exists and
+    * stops; a processing-time trigger keeps it always-on), handing each
+    * batch to `apply` with its batchId and [[streamingQueryId]].
+    */
+  def drain(stream: DataFrame, checkpoint: String, trigger: Trigger)
+           (apply: (DataFrame, Long, String) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        apply(batch, batchId, streamingQueryId(batch))
+      }
+      .start()
 
   /** The streaming queryId for a foreachBatch batch frame: stable
     * across restarts from the same checkpoint (persisted in its

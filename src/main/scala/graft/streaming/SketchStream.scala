@@ -1,14 +1,13 @@
 package graft.streaming
 
-import graft.core.Fs
 import graft.llm.Sketch
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Continuously-maintained count-min sketch: each micro-batch's key
   * stream folds into a persistent depth×width counter grid by
-  * cell-wise addition ([[Sketch.cmsMerge]]), promoted with the
-  * crash-safe swap protocol — the always-on frequency/heavy-hitter
+  * cell-wise addition ([[Sketch.cmsMerge]]) through
+  * [[ReplayGuard.fold]] — the always-on frequency/heavy-hitter
   * service over an unbounded token stream.
   *
   * Exactness across batchings: the CMS is a commutative monoid, so the
@@ -27,54 +26,27 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object SketchStream {
 
-  /** Last batchId folded into the grid at `gridPath`; -1 when the grid
-    * is missing or predates batch tracking. Marker protocol (format,
-    * replay semantics, queryId keying) lives in [[ReplayGuard]].
-    */
-  def lastAppliedBatchId(gridPath: String,
-                         conf: org.apache.hadoop.conf.Configuration): Long =
-    ReplayGuard.read(gridPath, conf).map(_._2).getOrElse(-1L)
-
-  /** Fold one batch into the grid at `gridPath` (missing grid = empty).
-    * Staging write + crash-safe swap, materializing BEFORE the swap —
-    * the merged frame lazily reads the live grid it is about to
-    * replace.
+  /** Fold one batch into the grid at `gridPath` (missing grid = empty)
+    * through [[ReplayGuard.fold]]: crash recovery, the replay marker,
+    * staging write and swap.
     *
     * At-least-once safety: foreachBatch can REPLAY a batch (crash
     * between the swap and the streaming checkpoint commit), and
     * cell-wise addition is not idempotent — a replay would double-count.
-    * So when `batchId >= 0` the (queryId, id) pair is recorded in the
-    * grid directory (same swap, so grid+marker move atomically) and a
-    * batch is skipped only when BOTH the recorded queryId matches AND
-    * its id is <= the recorded one — the txnAppId+version pattern for
-    * idempotent foreachBatch sinks. Keying on the queryId matters: if
-    * the checkpoint is deleted/relocated while the grid is kept (a
-    * routine ops event), batchIds restart at 0 under a NEW queryId, and
-    * skipping on the bare id would silently drop every new batch until
-    * the ids caught up — data loss with no error. A mismatched queryId
-    * therefore folds (and re-keys the marker to the new query).
+    * So a streaming batch (`batchId >= 0`) is recorded in the grid's
+    * (queryId, batchId) marker and skipped on replay; see
+    * [[ReplayGuard]] for why the queryId is part of the key.
     * `batchId = -1` (direct/batch callers) keeps the unconditional
     * fold, but PRESERVES an existing marker through the swap so replay
     * protection survives interleaved direct folds.
     */
   def applyBatch(batch: DataFrame, keyCol: String, gridPath: String,
                  depth: Int = 4, width: Int = 256,
-                 batchId: Long = -1L, queryId: String = ""): Unit = {
-    val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val marker = ReplayGuard.read(gridPath, conf)
-    if (ReplayGuard.alreadyApplied(marker, queryId, batchId)) return
-    val g = Sketch.cmsCounters(batch, keyCol, depth, width)
-    val merged =
-      if (Fs.exists(gridPath, conf))
-        Sketch.cmsMerge(spark.read.parquet(gridPath), g)
-      else g
-    val staging = s"$gridPath.staging"
-    merged.write.mode("overwrite").parquet(staging)
-    ReplayGuard.stamp(staging, conf, marker, queryId, batchId)
-    if (Fs.exists(gridPath, conf)) Fs.swapInPlace(gridPath, staging, conf)
-    else Fs.rename(staging, gridPath, conf)
-  }
+                 batchId: Long = -1L, queryId: String = ""): Unit =
+    ReplayGuard.fold(batch.sparkSession, gridPath, batchId, queryId) { prior =>
+      val g = Sketch.cmsCounters(batch, keyCol, depth, width)
+      prior.fold(g)(Sketch.cmsMerge(_, g))
+    }
 
   /** Wire a key stream into the grid: foreachBatch + the fold above.
     * `Trigger.AvailableNow` drains what exists and stops (batch-refresh
@@ -83,13 +55,7 @@ object SketchStream {
   def run(items: DataFrame, keyCol: String, gridPath: String,
           checkpointDir: String, depth: Int = 4, width: Int = 256,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    items.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, keyCol, gridPath, depth, width, batchId,
-          ReplayGuard.streamingQueryId(batch))
-      }
-      .start()
+    ReplayGuard.drain(items, checkpointDir, trigger) { (batch, batchId, qid) =>
+      applyBatch(batch, keyCol, gridPath, depth, width, batchId, qid)
+    }
 }

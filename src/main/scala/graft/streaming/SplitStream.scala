@@ -204,14 +204,8 @@ object SplitStream {
           splits: Seq[(String, Double)], numHashes: Int = 8,
           rowsPerBand: Int = 4, k: Int = 3, minMatches: Int = 6,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, idCol, textCol, storeDir, splits, batchId,
-          ReplayGuard.streamingQueryId(batch), numHashes, rowsPerBand,
-          k, minMatches)
-      }
-      .start()
+    ReplayGuard.drain(docs, checkpointDir, trigger) { (batch, batchId, qid) =>
+      applyBatch(batch, idCol, textCol, storeDir, splits, batchId, qid,
+        numHashes, rowsPerBand, k, minMatches)
+    }
 }

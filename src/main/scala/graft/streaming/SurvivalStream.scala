@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.core.Fs
 import graft.llm.Survival
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -21,46 +20,29 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * distinct-duration domain — grid-bounded by the caller's
   * quantization (hours/days), never subject-count-sized.
   *
-  * Replay safety is [[ReplayGuard]]'s (queryId, batchId) marker: cell
-  * addition is not idempotent, so a replayed foreachBatch batch is
-  * skipped, while a fresh queryId re-keys and folds. A subject must
-  * arrive in exactly ONE batch (it is one observation); late
+  * Replay and crash safety are [[ReplayGuard.fold]]'s: cell addition
+  * is not idempotent, so its marker skips a replayed batch. A subject
+  * must arrive in exactly ONE batch (it is one observation); late
   * RE-observations of the same subject are the caller's dedup problem,
   * as in every keyed-append stream here.
   */
 object SurvivalStream {
 
-  /** Last batchId folded into `statePath`; -1 when missing. */
-  def lastAppliedBatchId(statePath: String,
-                         conf: org.apache.hadoop.conf.Configuration): Long =
-    ReplayGuard.read(statePath, conf).map(_._2).getOrElse(-1L)
-
   /** Fold one batch of (durationCol, eventCol) subject rows into the
-    * cell state at `statePath` (missing state = empty). Staging write
-    * + crash-safe swap; the duration/event contracts are batch
+    * cell state at `statePath` (missing state = empty) through
+    * [[ReplayGuard.fold]]; the duration/event contracts are batch
     * [[Survival.kaplanMeier]]'s, raised naming THIS entry point.
     */
   def applyBatch(batch: DataFrame, durationCol: String, eventCol: String,
                  statePath: String,
-                 batchId: Long = -1L, queryId: String = ""): Unit = {
-    val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val marker = ReplayGuard.read(statePath, conf)
-    if (ReplayGuard.alreadyApplied(marker, queryId, batchId)) return
-    val cells = Survival.cells(batch, durationCol, eventCol,
-      "survivalStream")
-    val merged =
-      if (Fs.exists(statePath, conf))
-        spark.read.parquet(statePath).unionByName(cells)
-          .groupBy("t")
-          .agg(sum(col("d")).as("d"), sum(col("c")).as("c"))
-      else cells
-    val staging = s"$statePath.staging"
-    merged.write.mode("overwrite").parquet(staging)
-    ReplayGuard.stamp(staging, conf, marker, queryId, batchId)
-    if (Fs.exists(statePath, conf)) Fs.swapInPlace(statePath, staging, conf)
-    else Fs.rename(staging, statePath, conf)
-  }
+                 batchId: Long = -1L, queryId: String = ""): Unit =
+    ReplayGuard.fold(batch.sparkSession, statePath, batchId, queryId) { prior =>
+      val cells = Survival.cells(batch, durationCol, eventCol,
+        "survivalStream")
+      prior.fold(cells)(_.unionByName(cells)
+        .groupBy("t")
+        .agg(sum(col("d")).as("d"), sum(col("c")).as("c")))
+    }
 
   /** The current Kaplan–Meier curve from the persisted cells —
     * [[Survival.kaplanMeierFromCells]].
@@ -77,13 +59,7 @@ object SurvivalStream {
   def run(rows: DataFrame, durationCol: String, eventCol: String,
           statePath: String, checkpoint: String,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, durationCol, eventCol, statePath,
-          batchId, ReplayGuard.streamingQueryId(batch))
-      }
-      .start()
+    ReplayGuard.drain(rows, checkpoint, trigger) { (batch, batchId, qid) =>
+      applyBatch(batch, durationCol, eventCol, statePath, batchId, qid)
+    }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.core.Fs
 import graft.llm.Sketch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,7 +15,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *      inherits its replay marker and crash-safe swap);
   *   2. re-estimate (stored candidates ∪ batch's distinct keys)
   *      against the UPDATED grid and keep the `candidateCap` best by
-  *      (estimate desc, key asc) — written with the same swap.
+  *      (estimate desc, key asc) — written through the same
+  *      [[ReplayGuard.fold]], without a marker.
   *
   * Replay safety needs NO second marker: the grid fold skips a
   * replayed batch, so the candidate refresh re-runs as a pure function
@@ -41,23 +41,20 @@ object TopKStream {
                  batchId: Long = -1L, queryId: String = ""): Unit = {
     require(candidateCap >= 1, s"candidateCap must be >= 1: $candidateCap")
     val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
     SketchStream.applyBatch(batch, keyCol, gridPath, depth, width,
       batchId, queryId)
-    val grid = spark.read.parquet(gridPath)
-    val stored =
-      if (Fs.exists(candPath, conf))
-        spark.read.parquet(candPath).select(col(keyCol))
-      else batch.select(col(keyCol)).limit(0)
-    val probe = stored.unionByName(batch.select(col(keyCol)))
-      .filter(col(keyCol).isNotNull).distinct()
-    val next = Sketch.cmsEstimate(grid, probe, keyCol, depth, width)
-      .orderBy(col("est").desc, col(keyCol).asc)
-      .limit(candidateCap)
-    val staging = s"$candPath.staging"
-    next.write.mode("overwrite").parquet(staging)
-    if (Fs.exists(candPath, conf)) Fs.swapInPlace(candPath, staging, conf)
-    else Fs.rename(staging, candPath, conf)
+    // no marker on the candidates (batchId -1): the refresh is a pure
+    // function of the grid, so a replay rewrites the identical table
+    ReplayGuard.fold(spark, candPath, -1L, "") { prior =>
+      val stored = prior.fold(batch.select(col(keyCol)).limit(0))(
+        _.select(col(keyCol)))
+      val probe = stored.unionByName(batch.select(col(keyCol)))
+        .filter(col(keyCol).isNotNull).distinct()
+      Sketch.cmsEstimate(spark.read.parquet(gridPath), probe, keyCol,
+        depth, width)
+        .orderBy(col("est").desc, col(keyCol).asc)
+        .limit(candidateCap)
+    }
   }
 
   /** The current top-k view over the maintained candidate table. */
@@ -72,13 +69,8 @@ object TopKStream {
           candPath: String, checkpointDir: String,
           candidateCap: Int = 32, depth: Int = 4, width: Int = 256,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    items.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, keyCol, gridPath, candPath, candidateCap,
-          depth, width, batchId, ReplayGuard.streamingQueryId(batch))
-      }
-      .start()
+    ReplayGuard.drain(items, checkpointDir, trigger) { (batch, batchId, qid) =>
+      applyBatch(batch, keyCol, gridPath, candPath, candidateCap,
+        depth, width, batchId, qid)
+    }
 }

@@ -30,4 +30,48 @@ class FsSpec extends SparkSpec {
     Fs.delete(s"${dir.getPath}/_marker", conf)
     assert(Fs.readText(s"${dir.getPath}/_marker", conf) === None)
   }
+
+  private def dirWith(root: java.io.File, name: String, marker: String): String = {
+    val d = s"${root.getPath}/$name"
+    Fs.writeText(s"$d/m", marker, spark.sparkContext.hadoopConfiguration)
+    d
+  }
+
+  test("recoverSwap: live missing, _old present (crash between the swap's " +
+      "renames) restores _old as live") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = java.nio.file.Files.createTempDirectory("fs_recover").toFile
+    val live = s"${root.getPath}/t"
+    Fs.recoverSwap(live, conf) // nothing to recover: a no-op
+    assert(!Fs.exists(live, conf))
+    dirWith(root, "t_old", "before-crash")
+    Fs.recoverSwap(live, conf)
+    assert(Fs.readText(s"$live/m", conf) === Some("before-crash"))
+    assert(!Fs.exists(s"${live}_old", conf))
+    // a swap on the recovered path replaces it normally
+    dirWith(root, "t_next", "next")
+    Fs.swapInPlace(live, s"${root.getPath}/t_next", conf)
+    assert(Fs.readText(s"$live/m", conf) === Some("next"))
+    assert(!Fs.exists(s"${live}_old", conf))
+  }
+
+  test("recoverSwap: live and a stale _old both present (swap finished, " +
+      "cleanup did not) deletes _old and keeps live; the next swap does " +
+      "not nest into it") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = java.nio.file.Files.createTempDirectory("fs_stale").toFile
+    val live = dirWith(root, "t", "current")
+    dirWith(root, "t_old", "stale")
+    Fs.recoverSwap(live, conf)
+    assert(Fs.readText(s"$live/m", conf) === Some("current"))
+    assert(!Fs.exists(s"${live}_old", conf))
+    // the same guard runs inside swapInPlace: with a stale _old in place
+    // the swap still promotes the new directory and leaves no _old
+    dirWith(root, "t_old", "stale")
+    dirWith(root, "t_next", "next")
+    Fs.swapInPlace(live, s"${root.getPath}/t_next", conf)
+    assert(Fs.readText(s"$live/m", conf) === Some("next"))
+    assert(!Fs.exists(s"${live}_old", conf))
+    assert(Fs.list(live, conf).forall(!_.isDirectory), "swap nested a directory")
+  }
 }

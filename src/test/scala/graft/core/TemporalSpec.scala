@@ -162,7 +162,7 @@ class TemporalSpec extends SparkSpec {
     assert(out === Map(10L -> Some(100L), 11L -> None))
   }
 
-  test("asofJoinDirected: backward with no tolerance matches asofJoin exactly") {
+  test("asofJoinDirected: backward equals a latest-prior lookup") {
     val ev = graft.core.Tables(spark, "/root/testdata/sf0.001").events
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
@@ -170,11 +170,26 @@ class TemporalSpec extends SparkSpec {
       .groupBy(col("user_id"), col("ts"))
       .agg(max(col("event_id")).as("view_id"))
       .withColumn("vts", col("ts"))
-    val a = Temporal.asofJoin(purchases, views, Seq("user_id"), "ts",
-      Seq("view_id", "vts"))
-    val b = Temporal.asofJoinDirected(purchases, views, Seq("user_id"), "ts",
-      Seq("view_id", "vts"), Temporal.AsofDirection.Backward)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    val got = Temporal.asofJoinDirected(purchases, views, Seq("user_id"), "ts",
+        Seq("view_id", "vts"), Temporal.AsofDirection.Backward)
+      .select(col("purchase_id").cast("long"), col("view_id").cast("long"))
+      .as[(Long, Option[Long])].collect().toMap
+    // reference (PropertySpec's shape): per purchase, the view of the
+    // same user with the latest ts at or before it; no view → None
+    def micros(df: org.apache.spark.sql.DataFrame, c: String*) =
+      df.select(c.map(col(_).cast("long")) :+
+          unix_micros(col("ts")).as("us"): _*)
+        .as[(Long, Long, Option[Long])].collect()
+    val viewsByUser = micros(views, "view_id", "user_id")
+      .collect { case (v, u, Some(t)) => (u, t, v) }.groupBy(_._1)
+    val expected = micros(purchases, "purchase_id", "user_id").map {
+      case (p, u, t) =>
+        p -> t.flatMap(pt => viewsByUser.getOrElse(u, Array.empty)
+          .filter(_._2 <= pt).maxByOption(_._2).map(_._3))
+    }.toMap
+    assert(expected.values.exists(_.isDefined) &&
+      expected.values.exists(_.isEmpty), "fixture must cover match and miss")
+    assert(got === expected)
   }
 
   test("as-of null timestamps: right never matches, left gets null payload") {

@@ -299,7 +299,7 @@ class PipelineSpec extends SparkSpec {
       writeFile(new java.io.File(parent, "FAC1"),
         "biometric_0_20250103141949_decrypted.json",
         """[{"id": 1, "uuid": "u1", "match_type": "m"}]""")
-      cfg0.copy(autoCompactLogs = auto, logCompactMinFiles = 1)
+      cfg0.copy(logCompactMinFiles = if (auto) 1 else Int.MaxValue)
     }
     val (on, off) = (fixture(true), fixture(false))
     // 3 churning runs: each re-seeds the file Ready, so every run

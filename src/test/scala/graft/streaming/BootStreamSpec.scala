@@ -38,7 +38,7 @@ class BootStreamSpec extends SparkSpec {
       queryId = "q1")
     assert(spark.read.parquet(st).agg(sum("n_eff")).head()
       .getLong(0) === once)
-    assert(BootStream.lastAppliedBatchId(st,
+    assert(ReplayGuard.lastAppliedBatchId(st,
       spark.sparkContext.hadoopConfiguration) === 3L)
     BootStream.applyBatch(rows, "id", "v", b = 8, st, batchId = 3L,
       queryId = "q2")

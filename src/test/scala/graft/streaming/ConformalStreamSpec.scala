@@ -38,7 +38,7 @@ class ConformalStreamSpec extends SparkSpec {
       queryId = "q1")
     assert(spark.read.parquet(st).agg(sum("_n")).head()
       .getLong(0) === once)
-    assert(ConformalStream.lastAppliedBatchId(st,
+    assert(ReplayGuard.lastAppliedBatchId(st,
       spark.sparkContext.hadoopConfiguration) === 5L)
     val ex = intercept[Exception] {
       ConformalStream.applyBatch(

@@ -53,7 +53,7 @@ class EvalStreamSpec extends SparkSpec {
     // a direct (batchId = -1) fold is unconditional and must not
     // disturb the marker
     EvalStream.applyBatch(Seq((950, 0)).toDF("c", "y"), "c", "y", state)
-    assert(EvalStream.lastAppliedBatchId(state,
+    assert(ReplayGuard.lastAppliedBatchId(state,
       spark.sparkContext.hadoopConfiguration) === 0L)
     val cells = spark.read.parquet(state).orderBy("bin")
       .collect().map(r => (r.getAs[Long]("bin"), r.getAs[Long]("n"),

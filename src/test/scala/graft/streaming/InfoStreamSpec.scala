@@ -47,7 +47,7 @@ class InfoStreamSpec extends SparkSpec {
       queryId = "q1")
     assert(spark.read.parquet(st).agg(sum("cnt")).head()
       .getLong(0) === once)
-    assert(InfoStream.lastAppliedBatchId(st,
+    assert(ReplayGuard.lastAppliedBatchId(st,
       spark.sparkContext.hadoopConfiguration) === 7L)
     // a relocated checkpoint restarts ids under a new queryId: fold
     InfoStream.applyBatch(docs, "s", "text", st, batchId = 7L,

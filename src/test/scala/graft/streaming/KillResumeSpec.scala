@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import graft.llm.Sketch
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 /** Kill-and-resume proof for the stateful streaming sinks: a query is
@@ -16,6 +17,11 @@ import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
   * The engine really replays: the offset WAL records a batch before
   * foreachBatch runs, the commit log only after it returns, so the
   * injected throw leaves the batch pending for the restart.
+  *
+  * The second crash point is INSIDE the store swap, between its two
+  * renames (`<state>` missing, `<state>_old` holding the prior state):
+  * re-driving the batch must restore `_old` before it folds, or the
+  * history before the crash is lost without an error.
   */
 class KillResumeSpec extends SparkSpec {
   import spark.implicits._
@@ -55,7 +61,7 @@ class KillResumeSpec extends SparkSpec {
     intercept[StreamingQueryException] { q1.awaitTermination() }
     // the marker identity must be the real streaming queryId, not ""
     assert(qids.stream().allMatch(q => q.nonEmpty))
-    assert(SketchStream.lastAppliedBatchId(grid,
+    assert(ReplayGuard.lastAppliedBatchId(grid,
       spark.sparkContext.hadoopConfiguration) === 1L)
 
     // run 2: same checkpoint — the engine replays batch 1 (the marker
@@ -154,5 +160,59 @@ class KillResumeSpec extends SparkSpec {
     val got = spark.read.parquet(base).select("key", "v")
       .orderBy("key").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(got === Seq(("b", 20L), ("c", 3L)))
+  }
+
+  /** The mid-swap crash: the fold of the batch after b1 staged its new
+    * state, renamed `<state>` to `<state>_old` and died before promoting
+    * the staging directory — `<state>` is missing and `_old` holds b1.
+    */
+  private def crashMidSwap(state: String, staged: DataFrame): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    staged.write.mode("overwrite").parquet(s"$state.staging")
+    graft.core.Fs.rename(state, s"${state}_old", conf)
+  }
+
+  test("SketchStream: crash between the swap's renames; re-driving the " +
+      "batch and folding the next equals the one-shot grid") {
+    val root = java.nio.file.Files.createTempDirectory("midswap_cms").toFile
+    val grid = s"${root.getPath}/grid"
+    val b1 = Seq("x", "y").toDF("k")
+    val b2 = Seq("x", "z").toDF("k")
+    val b3 = Seq("y", "y").toDF("k")
+    SketchStream.applyBatch(b1, "k", grid, batchId = 0L, queryId = "q")
+    crashMidSwap(grid, Sketch.cmsMerge(spark.read.parquet(grid),
+      Sketch.cmsCounters(b2, "k")))
+    SketchStream.applyBatch(b2, "k", grid, batchId = 1L, queryId = "q")
+    SketchStream.applyBatch(b3, "k", grid, batchId = 2L, queryId = "q")
+    val streamed = spark.read.parquet(grid)
+      .orderBy("seed", "bucket").collect().toSeq
+    val oneShot = Sketch.cmsCounters(b1.union(b2).union(b3), "k")
+      .orderBy("seed", "bucket").collect().toSeq
+    assert(streamed === oneShot)
+  }
+
+  test("CdcApply: crash between the swap's renames; re-driving the batch " +
+      "and applying the next equals the one-shot snapshot") {
+    val root = java.nio.file.Files.createTempDirectory("midswap_cdc").toFile
+    val base = s"${root.getPath}/base"
+    def changes(rows: (String, String, Long, Boolean, Long)*): DataFrame =
+      rows.toDF("key", "ts", "id", "deleted", "v")
+        .withColumn("ts", col("ts").cast("timestamp"))
+    val b1 = changes(("a", "2024-01-01 00:00:00", 1L, false, 1L),
+      ("b", "2024-01-01 00:00:01", 2L, false, 2L))
+    val b2 = changes(("b", "2024-01-02 00:00:00", 3L, false, 20L),
+      ("c", "2024-01-02 00:00:01", 4L, false, 3L))
+    val b3 = changes(("c", "2024-01-03 00:00:00", 5L, true, 0L),
+      ("d", "2024-01-03 00:00:01", 6L, false, 4L))
+    def apply(b: DataFrame): Unit =
+      CdcApply.applyBatch(spark, b, base, Seq("key"), "ts", "id", "deleted")
+    apply(b1)
+    crashMidSwap(base, spark.read.parquet(base))
+    apply(b2)
+    apply(b3)
+    val got = spark.read.parquet(base).select("key", "v")
+      .orderBy("key").as[(String, Long)].collect().toSeq
+    // a comes from b1 alone: lost if the re-driven b2 ignored base_old
+    assert(got === Seq(("a", 1L), ("b", 20L), ("d", 4L)))
   }
 }

@@ -51,7 +51,7 @@ class SketchStreamSpec extends SparkSpec {
     // checkpoint commit): must be a no-op, addition is not idempotent
     SketchStream.applyBatch(Seq("a", "b").toDF("k"), "k", grid, batchId = 0L)
     SketchStream.applyBatch(Seq("a").toDF("k"), "k", grid, batchId = 1L)
-    assert(SketchStream.lastAppliedBatchId(grid,
+    assert(ReplayGuard.lastAppliedBatchId(grid,
       spark.sparkContext.hadoopConfiguration) === 1L)
     val est = Sketch.cmsEstimate(spark.read.parquet(grid),
         Seq("a", "b").toDF("k"), "k")
@@ -92,7 +92,7 @@ class SketchStreamSpec extends SparkSpec {
     SketchStream.applyBatch(Seq("a").toDF("k"), "k", grid, batchId = 3L)
     // interleaved direct/batch fold must not erase the recorded id...
     SketchStream.applyBatch(Seq("b").toDF("k"), "k", grid)
-    assert(SketchStream.lastAppliedBatchId(grid, conf) === 3L)
+    assert(ReplayGuard.lastAppliedBatchId(grid, conf) === 3L)
     // ...so an at-least-once replay of batch 3 is still a no-op
     SketchStream.applyBatch(Seq("a").toDF("k"), "k", grid, batchId = 3L)
     val est = Sketch.cmsEstimate(spark.read.parquet(grid),

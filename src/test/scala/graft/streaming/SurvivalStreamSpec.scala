@@ -41,7 +41,7 @@ class SurvivalStreamSpec extends SparkSpec {
       queryId = "q1")
     assert(spark.read.parquet(st)
       .agg(sum(col("d") + col("c"))).head().getLong(0) === once)
-    assert(SurvivalStream.lastAppliedBatchId(st,
+    assert(ReplayGuard.lastAppliedBatchId(st,
       spark.sparkContext.hadoopConfiguration) === 3L)
     val ex = intercept[Exception] {
       SurvivalStream.applyBatch(Seq((1L, 7L)).toDF("t", "e"), "t", "e", st)
