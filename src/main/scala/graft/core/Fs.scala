@@ -16,6 +16,12 @@ import org.apache.hadoop.fs.{FileStatus, Path}
   * All calls are driver-side, O(listing) metadata RPCs — bulk data never
   * moves through this class. For worker-side fan-out over many paths use
   * Pipeline's parallelized probe instead.
+  *
+  * It is also the one home of the staged-write-then-swap protocol that
+  * stands in for a transaction over a parquet directory: every rewrite
+  * (the stream folds, log and staging-table compaction, the delta
+  * stores, the ANN index) goes through [[replace]], and every writer
+  * that appends into such a directory calls [[recoverSwap]] first.
   */
 object Fs {
 
@@ -68,8 +74,8 @@ object Fs {
   /** Checked rename (move): `FileSystem.rename` signals failure — missing
     * source, existing destination, cross-filesystem move — by returning
     * false rather than throwing, which lets a half-done directory swap
-    * pass silently. Callers that need move-or-die (LogStore.compact's
-    * swap protocol) use this wrapper, which throws on false.
+    * pass silently. Callers that need move-or-die (the swap behind
+    * [[replace]]) use this wrapper, which throws on false.
     */
   def rename(src: String, dst: String, conf: Configuration): Unit = {
     val s = new Path(src)
@@ -77,6 +83,17 @@ object Fs {
     if (!s.getFileSystem(conf).rename(s, d))
       throw new java.io.IOException(s"rename $src -> $dst failed")
   }
+
+  /** The one monitor over every swap in this process: [[recoverSwap]]
+    * and the renames of [[replace]] hold it, so a recovery in one thread
+    * never runs inside the window between another thread's two renames
+    * (it would restore `_old` into the gap, and the swap's next rename
+    * would nest the new directory inside it), and two recoveries of one
+    * directory never both act. The staged writes run outside it.
+    * Cross-process concurrency is out of contract: one writing driver
+    * per directory.
+    */
+  private val swapLock = new Object
 
   /** Resolve what a swap that died part-way left behind, before anyone
     * reads or writes `live`. [[swapInPlace]] moves `live` → `_old`,
@@ -91,17 +108,27 @@ object Fs {
     *    silently NESTS the source as a child (and returns true), so a
     *    stale `_old` would turn the next swap's checked rename into a
     *    silent nest.
-    * A no-op when no `_old` exists. Single-writer, like the swap.
+    * A no-op when no `_old` exists. Every writer that appends into a
+    * directory [[replace]] rewrites calls this first.
     */
-  def recoverSwap(live: String, conf: Configuration): Unit = {
-    val old = live + "_old"
-    if (exists(old, conf)) {
-      if (exists(live, conf)) {
-        if (!delete(old, conf, recursive = true))
-          throw new java.io.IOException(
-            s"swap of $live: could not clear stale $old")
-      } else rename(old, live, conf)
+  def recoverSwap(live: String, conf: Configuration): Unit =
+    swapLock.synchronized {
+      val old = live + "_old"
+      if (exists(old, conf)) {
+        if (exists(live, conf)) {
+          if (!delete(old, conf, recursive = true))
+            throw new java.io.IOException(
+              s"swap of $live: could not clear stale $old")
+        } else rename(old, live, conf)
+      }
     }
+
+  /** Whether `live` exists once [[recoverSwap]] has run: the existence
+    * probe for a directory that [[replace]] rewrites.
+    */
+  def existsRecovered(live: String, conf: Configuration): Boolean = {
+    recoverSwap(live, conf)
+    exists(live, conf)
   }
 
   /** Crash-safe in-place directory replacement: [[recoverSwap]] first,
@@ -111,30 +138,48 @@ object Fs {
     * two renames is repaired by the next [[recoverSwap]] on the same
     * path. All Hadoop FS, object-store portable.
     */
-  def swapInPlace(live: String, compacted: String, conf: Configuration): Unit = {
-    val old = live + "_old"
-    recoverSwap(live, conf)
-    rename(live, old, conf)
-    try rename(compacted, live, conf)
-    catch {
-      case e: java.io.IOException =>
-        rename(old, live, conf) // restore: live path never stays missing
+  private[core] def swapInPlace(live: String, compacted: String,
+                                conf: Configuration): Unit =
+    swapLock.synchronized {
+      val old = live + "_old"
+      recoverSwap(live, conf)
+      rename(live, old, conf)
+      try rename(compacted, live, conf)
+      catch {
+        case e: java.io.IOException =>
+          rename(old, live, conf) // restore: live path never stays missing
+          throw new java.io.IOException(
+            s"swap of $live failed, original directory restored", e)
+      }
+      if (!delete(old, conf, recursive = true))
         throw new java.io.IOException(
-          s"swap of $live failed, original directory restored", e)
+          s"swap of $live completed but $old could not be removed " +
+            "(next swap would treat it as stale)")
+      ()
     }
-    if (!delete(old, conf, recursive = true))
-      throw new java.io.IOException(
-        s"swap of $live completed but $old could not be removed " +
-          "(next swap would treat it as stale)")
-    ()
-  }
 
-  /** Make `staging` the directory at `live`: [[swapInPlace]] when `live`
-    * exists, a checked [[rename]] when it does not (the first write).
+  /** The one staged rewrite of a directory: [[recoverSwap]] on `live`,
+    * delete `<live>.staging` (a crashed rewrite's leftover would
+    * otherwise ride this swap into `live`), `write` the new content into
+    * `<live>.staging`, then make it `live` ([[swapInPlace]], or a
+    * rename on the first write). A reader never sees a partial rewrite;
+    * `live` is briefly missing between the swap's two renames, and
+    * [[existsRecovered]] waits that window out on the monitor. A `write`
+    * that throws leaves `live` untouched. `write` may read `live` lazily: nothing replaces
+    * it until `write` returns. Returns what `write` returns.
+    * Single-writer per `live`.
     */
-  def promote(staging: String, live: String, conf: Configuration): Unit =
-    if (exists(live, conf)) swapInPlace(live, staging, conf)
-    else rename(staging, live, conf)
+  def replace[A](live: String, conf: Configuration)(write: String => A): A = {
+    recoverSwap(live, conf)
+    val staging = s"$live.staging"
+    delete(staging, conf, recursive = true)
+    val out = write(staging)
+    swapLock.synchronized {
+      if (exists(live, conf)) swapInPlace(live, staging, conf)
+      else rename(staging, live, conf)
+    }
+    out
+  }
 
   /** Write a small text marker (overwrite). Underscore-prefixed names
     * (`_graft_batch_id`) are invisible to Spark's parquet reader — the

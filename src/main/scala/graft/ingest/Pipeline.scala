@@ -200,24 +200,30 @@ object Pipeline {
       // S8/S9 sink: parquet warehouse by default; JDBC escape hatch when
       // cfg.jdbcUrl is set (the reference's actual data plane)
       def writeOut(df: org.apache.spark.sql.DataFrame, table: String): Unit =
-        (cfg.jdbcUrl, cfg.partitionStagingBy, cfg.facilityId) match {
-          case (Some(url), _, _) =>
+        cfg.jdbcUrl match {
+          case Some(url) =>
             df.write.mode("append").format("jdbc")
               .option("url", url).option("dbtable", table)
               .options(cfg.jdbcOptions).save()
-          case (None, Some(c), Some(fac)) =>
-            // facility-isolated layout: a facility-scoped run writes
-            // STRAIGHT into its own partition directory, so concurrent
-            // facility claims never share an output dir (two Spark write
-            // jobs into one directory race on `_temporary`). Readers of
-            // the table root recover the column via partition discovery.
-            df.drop(c).write.mode("append")
-              .parquet(s"${cfg.warehouseDir}/$table/$c=$fac")
-          case (None, Some(c), None) =>
-            df.write.mode("append").partitionBy(c)
-              .parquet(s"${cfg.warehouseDir}/$table")
-          case (None, None, _) =>
-            df.write.mode("append").parquet(s"${cfg.warehouseDir}/$table")
+          case None =>
+            val root = s"${cfg.warehouseDir}/$table"
+            // a staging compaction that died mid-swap left the table in
+            // <table>_old: restore it, or this append recreates the table
+            // with only its own rows and the next compaction deletes _old
+            graft.core.Fs.recoverSwap(root, spark.sparkContext.hadoopConfiguration)
+            (cfg.partitionStagingBy, cfg.facilityId) match {
+              case (Some(c), Some(fac)) =>
+                // facility-isolated layout: a facility-scoped run writes
+                // STRAIGHT into its own partition directory, so concurrent
+                // facility claims never share an output dir (two Spark write
+                // jobs into one directory race on `_temporary`). Readers of
+                // the table root recover the column via partition discovery.
+                df.drop(c).write.mode("append").parquet(s"$root/$c=$fac")
+              case (Some(c), None) =>
+                df.write.mode("append").partitionBy(c).parquet(root)
+              case (None, _) =>
+                df.write.mode("append").parquet(root)
+            }
         }
 
       // cache the PARENT frame once: valid/bad are complementary filters

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.streaming.DeltaStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -211,11 +212,11 @@ object DedupIndex {
   // Incremental pair-store lifecycle (r12 verdict, Missing #2): a
   // corpus APPEND folds new pairs in O(batch-neighborhood) instead of
   // forcing a full writePairStore rebuild. Layout under `storeDir`
-  // (the graft.streaming.DeltaStore protocol — _SUCCESS-gated
+  // (the DeltaStore protocol — _SUCCESS-gated
   // committed reads, tag = transaction id, staged+swapped compaction):
-  //   shingles/ingest_batch=<tag>/  (id, s)      distinct shingles
-  //   sigs/ingest_batch=<tag>/      (id, mh1..N) MinHash signatures
-  //   pairs/ingest_batch=<tag>/     (id1, id2, jaccard_n, jaccard_d)
+  //   shingles/  (id, s)      distinct shingles, one delta per tag
+  //   sigs/      (id, mh1..N) MinHash signatures, one delta per tag
+  //   pairs/     (id1, id2, jaccard_n, jaccard_d), one delta per tag
   // Each batch emits EXACTLY the verified pairs whose later-ingested
   // member is in the batch (within-batch pairs + batch-vs-prior
   // pairs), so the union of committed pair deltas is row-identical to
@@ -270,7 +271,7 @@ object DedupIndex {
         graft.core.Fs.mkdirs(storeDir, conf)
         writeMeta(spark, storeDir, numHashes, rowsPerBand, k)
     }
-    val tag = graft.streaming.DeltaStore.tagOf(queryId, seq)
+    val tag = DeltaStore.tagOf(queryId, seq)
     val sets = DedupOps.shingleSet(batch, idCol, textCol, k).cache()
     val aggs = (1 to numHashes).map(i =>
       min(md5(concat(lit(s"$i|"), col("s")))).as(s"mh$i"))
@@ -284,7 +285,7 @@ object DedupIndex {
     // The strict < also self-excludes our own tag on the replay path;
     // uncommitted partials are out via the _SUCCESS gate.
     def prior(path: String, template: DataFrame): DataFrame =
-      graft.streaming.DeltaStore.readCommitted(template, path)
+      DeltaStore.readCommitted(template, path)
         .filter(col("ingest_batch").startsWith("compacted_") ||
           coalesce(substring_index(col("ingest_batch"), "_", -1)
             .cast("long") < lit(seq), lit(false)))
@@ -329,12 +330,9 @@ object DedupIndex {
     // orphaned sigs/shingle deltas for the tag, which the replay's
     // same-tag overwrite heals.
     try {
-      sets.write.mode("overwrite")
-        .parquet(s"${shinglesPath(storeDir)}/ingest_batch=$tag")
-      sigs.write.mode("overwrite")
-        .parquet(s"${sigsPath(storeDir)}/ingest_batch=$tag")
-      pairsDelta.write.mode("overwrite")
-        .parquet(s"${pairsPath(storeDir)}/ingest_batch=$tag")
+      DeltaStore.write(sets, shinglesPath(storeDir), tag)
+      DeltaStore.write(sigs, sigsPath(storeDir), tag)
+      DeltaStore.write(pairsDelta, pairsPath(storeDir), tag)
     } finally {
       pairsDelta.unpersist(); sigs.unpersist(); sets.unpersist()
     }
@@ -360,7 +358,7 @@ object DedupIndex {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("jaccard_d",
           org.apache.spark.sql.types.LongType))))
-    val df = graft.streaming.DeltaStore
+    val df = DeltaStore
       .readCommitted(template, pairsPath(storeDir)).drop("ingest_batch")
     readMeta(spark, storeDir) match {
       case Some((nh, rpb, _)) =>
@@ -388,12 +386,13 @@ object DedupIndex {
     */
   def compactPairStore(spark: SparkSession, storeDir: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val pairTags = graft.streaming.DeltaStore
-      .committedDirs(pairsPath(storeDir), conf).map(tagOfDir).toSet
+    val pairTags = DeltaStore
+      .committedDirs(pairsPath(storeDir), conf)
+      .map(DeltaStore.tagOfDir).toSet
     Seq(sigsPath(storeDir), shinglesPath(storeDir)).foreach { p =>
-      graft.streaming.DeltaStore.committedDirs(p, conf)
+      DeltaStore.committedDirs(p, conf)
         .filter { d =>
-          val t = tagOfDir(d)
+          val t = DeltaStore.tagOfDir(d)
           !t.startsWith("compacted_") && !pairTags.contains(t)
         }
         .foreach(d => graft.core.Fs.delete(d, conf, recursive = true))
@@ -403,13 +402,10 @@ object DedupIndex {
     // sigs/shingles still hold raw tags — the next run's orphan sweep
     // would see those raw tags missing from the compacted pairs tag
     // set and wrongly sweep legitimate prior state.
-    graft.streaming.DeltaStore.compactWith(spark, shinglesPath(storeDir))(identity)
-    graft.streaming.DeltaStore.compactWith(spark, sigsPath(storeDir))(identity)
-    graft.streaming.DeltaStore.compactWith(spark, pairsPath(storeDir))(identity)
+    DeltaStore.compactWith(spark, shinglesPath(storeDir))(identity)
+    DeltaStore.compactWith(spark, sigsPath(storeDir))(identity)
+    DeltaStore.compactWith(spark, pairsPath(storeDir))(identity)
   }
-
-  private def tagOfDir(dir: String): String =
-    dir.substring(dir.lastIndexOf("ingest_batch=") + "ingest_batch=".length)
 
   /** Split-leakage audit from a pair index — semantics of
     * [[DedupOps.splitLeakage]]: duplicate pairs whose id-hash split

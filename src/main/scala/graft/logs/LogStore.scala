@@ -1,5 +1,6 @@
 package graft.logs
 
+import graft.core.Fs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,7 +31,9 @@ final case class LogStore(spark: SparkSession, dir: String) {
     * Spark write jobs into one table directory (their `_temporary`
     * staging dirs would collide, and an append could land rows in a
     * directory compact is about to delete). Control-plane writes are
-    * tiny, so serializing them costs microseconds per claim.
+    * tiny, so serializing them costs microseconds per claim. Readers do
+    * not take it: a swap's renames and every recovery share [[Fs]]'s
+    * own monitor.
     *
     * Cross-PROCESS concurrency is out of contract: one writing driver
     * per log directory (the reference's cron-style deployment). Multiple
@@ -52,7 +55,7 @@ final case class LogStore(spark: SparkSession, dir: String) {
   def append(table: String, rows: DataFrame): Long = writeLock.synchronized {
     // a compact that died mid-swap left the rows in `<table>_old`:
     // restore them before appending, or the next compact deletes them
-    graft.core.Fs.recoverSwap(path(table), spark.sparkContext.hadoopConfiguration)
+    Fs.recoverSwap(path(table), spark.sparkContext.hadoopConfiguration)
     val v = LogStore.nextVersion()
     rows.coalesce(1).withColumn("_version_ts", lit(v))
       .write.mode("append").parquet(path(table))
@@ -60,17 +63,11 @@ final case class LogStore(spark: SparkSession, dir: String) {
   }
 
   /** True when the table has rows on disk. A missing directory may be a
-    * [[compact]] that died between its renames: under the write lock
-    * (never while a compact is mid-swap) [[graft.core.Fs.recoverSwap]]
+    * [[compact]] that died between its renames: [[Fs.existsRecovered]]
     * restores `<table>_old` first, so readers never see an empty log.
     */
-  def exists(table: String): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    graft.core.Fs.exists(path(table), conf) || writeLock.synchronized {
-      graft.core.Fs.recoverSwap(path(table), conf)
-      graft.core.Fs.exists(path(table), conf)
-    }
-  }
+  def exists(table: String): Boolean =
+    Fs.existsRecovered(path(table), spark.sparkContext.hadoopConfiguration)
 
   /** Raw append history (all versions). */
   def history(table: String): DataFrame = spark.read.parquet(path(table))
@@ -128,37 +125,29 @@ final case class LogStore(spark: SparkSession, dir: String) {
   def update(table: String, rows: DataFrame): Long = append(table, rows)
 
   /** Compact a log table to its current versions (bounds window input;
-    * run periodically like the reference's dedup DELETE).
-    *
-    * Swap protocol (crash-safe): write `_compacted`, then
-    * [[graft.core.Fs.swapInPlace]] — checked Hadoop-FS renames with
-    * restore-on-failure, so the one operation that bounds the MVCC
-    * window runs against HDFS/S3/file:// like every other
-    * metadata-plane call, and a half-done swap can never pass
-    * unnoticed (`Fs.rename` throws on the silent false
-    * `FileSystem.rename` would otherwise return). A process that dies
-    * between the swap's renames is repaired by the next [[append]] or
-    * [[exists]].
+    * run periodically like the reference's dedup DELETE), through the
+    * crash-safe [[Fs.replace]]. A process that dies between the swap's
+    * renames is repaired by the next [[append]] or [[exists]].
     */
   def compact(table: String, keys: Seq[String],
               targetFileBytes: Long = 128L * 1024 * 1024): Unit =
       writeLock.synchronized {
     val conf = spark.sparkContext.hadoopConfiguration
-    // the rewrite must not explode into shuffle-parallelism part files:
-    // latest()'s window would otherwise leave ~shuffle.partitions files
-    // behind, permanently defeating compactIfNeeded's file-count fast
-    // path (r11 review finding). History bytes overestimate the
-    // current-rows size, so the target errs toward one file — right for
-    // control-plane tables (the data plane never goes through LogStore).
-    val bytes = graft.core.Fs.dataFileStats(path(table), conf).bytes
-    val nTarget =
-      math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    // written straight from the view: the overwrite target is the
-    // separate `_compacted` directory, so nothing reads what it replaces
-    latest(table, keys).withColumn("_version_ts", lit(LogStore.nextVersion()))
-      .coalesce(nTarget)
-      .write.mode("overwrite").parquet(path(table) + "_compacted")
-    graft.core.Fs.swapInPlace(path(table), path(table) + "_compacted", conf)
+    Fs.replace(path(table), conf) { staging =>
+      // the rewrite must not explode into shuffle-parallelism part files:
+      // latest()'s window would otherwise leave ~shuffle.partitions files
+      // behind, permanently defeating compactIfNeeded's file-count fast
+      // path (r11 review finding). History bytes overestimate the
+      // current-rows size, so the target errs toward one file — right for
+      // control-plane tables (the data plane never goes through LogStore).
+      val bytes = Fs.dataFileStats(path(table), conf).bytes
+      val nTarget =
+        math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+      latest(table, keys)
+        .withColumn("_version_ts", lit(LogStore.nextVersion()))
+        .coalesce(nTarget)
+        .write.mode("overwrite").parquet(staging)
+    }
   }
 
   /** Trigger-gated [[compact]] — the auto-compaction policy the MVCC
@@ -186,7 +175,7 @@ final case class LogStore(spark: SparkSession, dir: String) {
                       minFiles: Int = 64): Boolean = {
     val conf = spark.sparkContext.hadoopConfiguration
     if (!exists(table)) return false
-    val nFiles = graft.core.Fs.listFiles(path(table), conf)
+    val nFiles = Fs.listFiles(path(table), conf)
       .count(_.getPath.getName.endsWith(".parquet"))
     if (nFiles < minFiles) return false
     compact(table, keys)

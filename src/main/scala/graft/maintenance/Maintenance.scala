@@ -119,9 +119,9 @@ object Maintenance {
     * LogStore MVCC compaction. Rewrites the directory to
     * ≈`targetFileBytes` files (coalesce — a width reduction, no
     * shuffle), preserving a Hive-partitioned layout when `partitionBy`
-    * is set, then swaps in place with the crash-safe
-    * [[graft.core.Fs.swapInPlace]] protocol. Returns the file-count
-    * target it wrote with.
+    * is set, through the crash-safe [[graft.core.Fs.replace]] (ingest's
+    * appends recover a swap that died mid-way before they write).
+    * Returns the file-count target it wrote with.
     *
     * Like LogStore, cross-process concurrency is out of contract: run
     * it from the single maintenance driver (the reference's cron), not
@@ -131,14 +131,14 @@ object Maintenance {
                           partitionBy: Option[String] = None,
                           targetFileBytes: Long = 128L * 1024 * 1024): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val bytes = graft.core.Fs.dirBytesRecursive(tableDir, conf)
-    val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val df = spark.read.parquet(tableDir).coalesce(nFiles)
-    val writer = df.write.mode("overwrite")
-    partitionBy.fold(writer)(c => writer.partitionBy(c))
-      .parquet(tableDir + "_compacted")
-    graft.core.Fs.swapInPlace(tableDir, tableDir + "_compacted", conf)
-    nFiles
+    graft.core.Fs.replace(tableDir, conf) { staging =>
+      val bytes = graft.core.Fs.dirBytesRecursive(tableDir, conf)
+      val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+      val writer =
+        spark.read.parquet(tableDir).coalesce(nFiles).write.mode("overwrite")
+      partitionBy.fold(writer)(c => writer.partitionBy(c)).parquet(staging)
+      nFiles
+    }
   }
 
   /** Trigger-gated [[compactStagingTable]] — the steady-state policy
@@ -179,7 +179,7 @@ object Maintenance {
     val conf = spark.sparkContext.hadoopConfiguration
     tables.flatMap { t =>
       val dir = s"$warehouseDir/$t"
-      if (graft.core.Fs.exists(dir, conf))
+      if (graft.core.Fs.existsRecovered(dir, conf))
         Some(t -> compactStagingTable(spark, dir, partitionBy, targetFileBytes))
       else None
     }.toMap
@@ -201,7 +201,7 @@ object Maintenance {
     val conf = spark.sparkContext.hadoopConfiguration
     tables.flatMap { t =>
       val dir = s"$warehouseDir/$t"
-      if (!graft.core.Fs.exists(dir, conf)) None
+      if (!graft.core.Fs.existsRecovered(dir, conf)) None
       else compactStagingIfNeeded(spark, dir, partitionBy, targetFileBytes,
         maxFiles, fileRatio).map(t -> _)
     }.toMap

@@ -19,7 +19,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * its own `ingest=<queryId>_<batchId>` partition directory (staged
   * write + rename, crash-safe); an at-least-once re-delivery sees its
   * directory already present and no-ops — no marker file needed, the
-  * directory IS the marker.
+  * directory IS the marker. The maintenance ops ([[compact]], [[refit]],
+  * [[refitTwoLevel]], [[forget]]) rewrite `data/` through
+  * [[Fs.replace]], and [[applyBatch]] runs [[Fs.recoverSwap]] before it
+  * appends, so a rewrite that died mid-swap loses no batch.
   *
   * UPDATE CONTRACT: the store is append-only per id — re-ingesting an
   * id with the SAME embedding is harmless (search collapses the copies
@@ -49,6 +52,10 @@ object AnnIndexStream {
                  batchId: Long = -1L, queryId: String = ""): Unit = {
     val spark = batch.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
+    // a maintenance op that died mid-swap left the store in data_old:
+    // restore it first, or the batch lands alone in a fresh data/ and
+    // the next rewrite's recovery deletes data_old as stale
+    Fs.recoverSwap(dataDir(storeDir), conf)
     // direct (non-streaming) calls get a fresh counter tag — the fixed
     // "q_-1" tag would make every direct ingest after the first look
     // like a replay and silently no-op (the IncrDedupStream rule).
@@ -121,39 +128,41 @@ object AnnIndexStream {
   /** Fold the accumulated `ingest=` deltas into ONE partition — the
     * small-files countermeasure: every micro-batch adds up to
     * |cells| tiny files, and a long-lived stream would otherwise make
-    * each search open thousands of them per probed cell. Same
-    * crash-safe swap as [[IncrDedupStream.compact]] (staging write →
-    * [[Fs.swapInPlace]]); run it on maintenance cadence, single-writer
-    * (the same ownership rule as the streaming checkpoint). The
-    * compacted tag embeds the pre-compaction delta count so a replayed
-    * post-compaction batch still gets a fresh directory name.
+    * each search open thousands of them per probed cell. Run it on
+    * maintenance cadence, single-writer (the same ownership rule as the
+    * streaming checkpoint).
     */
-  def compact(spark: SparkSession, storeDir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
+  def compact(spark: SparkSession, storeDir: String): Unit =
+    liveStore(spark, storeDir).foreach { store =>
+      rewrite(spark, storeDir, "compacted", store.drop("ingest"))
+    }
+
+  /** The store's rows, once [[Fs.existsRecovered]] has restored a
+    * crashed swap; None when the store does not exist yet.
+    */
+  private def liveStore(spark: SparkSession,
+                        storeDir: String): Option[DataFrame] = {
     val data = dataDir(storeDir)
-    if (!Fs.exists(data, conf)) return
-    val n = Fs.listDirs(data, conf).length
-    val staging = stagingDir(data, conf)
-    spark.read.option("basePath", data).parquet(data)
-      .drop("ingest")
-      .repartition(col("cell")) // one file family per cell, not per task×cell
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$staging/ingest=compacted_$n")
-    Fs.swapInPlace(data, staging, conf)
+    if (!Fs.existsRecovered(data, spark.sparkContext.hadoopConfiguration)) None
+    else Some(spark.read.option("basePath", data).parquet(data))
   }
 
-  /** The one staging dir all maintenance ops share — DELETED before
-    * each use: compact/refit/forget each write a differently-named
-    * `ingest=` subdir, and `write.mode(overwrite)` clears only its own
-    * subdir, so a leftover from a CRASHED op (e.g. a refit that died
-    * before its swap) would otherwise ride the next op's swapInPlace
-    * into the live store — resurrecting rows a later forget removed.
+  /** Replace the store with ONE `ingest=<name>_<n>` partition of `rows`
+    * through [[Fs.replace]] — the crash-safe swap behind compact, refit,
+    * refitTwoLevel and forget, compacting as a side effect. `n` is the
+    * pre-rewrite delta count, so a replayed post-rewrite batch still
+    * gets a fresh directory name.
     */
-  private def stagingDir(data: String,
-      conf: org.apache.hadoop.conf.Configuration): String = {
-    val staging = s"$data.staging"
-    Fs.delete(staging, conf, recursive = true)
-    staging
+  private def rewrite(spark: SparkSession, storeDir: String, name: String,
+                      rows: DataFrame): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val data = dataDir(storeDir)
+    val n = Fs.listDirs(data, conf).length
+    Fs.replace(data, conf) { staging =>
+      rows.repartition(col("cell")) // one file family per cell, not per task×cell
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$staging/ingest=${name}_$n")
+    }
   }
 
   /** Refit-on-cadence: the centroids are frozen at fit time (the
@@ -163,7 +172,7 @@ object AnnIndexStream {
     * store ([[Ivf.fit]] — deterministic seeding + quantized-integer
     * means, so the result is identical to fitting the same corpus
     * directly) and rewrites the cell partitions in one crash-safe
-    * [[Fs.swapInPlace]], compacting as a side effect. Returns the new
+    * [[Fs.replace]], compacting as a side effect. Returns the new
     * centroids frame (None if the store doesn't exist yet) — the
     * caller MUST search with these from now on; the old centroids
     * frame no longer matches the store's cell labels.
@@ -177,33 +186,25 @@ object AnnIndexStream {
     * constant as the store grows).
     */
   def refit(spark: SparkSession, storeDir: String, idCol: String,
-            vecCol: String, k: Int = 16, iters: Int = 2): Option[DataFrame] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val data = dataDir(storeDir)
-    if (!Fs.exists(data, conf)) return None
-    val store = spark.read.option("basePath", data).parquet(data)
-    // cached: Ivf.fit makes ~4 driver-materializing passes (count,
-    // seeding, per-iteration means) and the staging write joins it
-    // again — without the cache each pass re-reads and re-aggregates
-    // every parquet delta, turning a one-scan refit into six scans
-    val corpus = store
-      .groupBy(col(idCol))
-      .agg(max(col(vecCol)).as(vecCol))
-      .cache()
-    val index = Ivf.fit(corpus, idCol, vecCol, k, iters)
-    val n = Fs.listDirs(data, conf).length
-    val staging = stagingDir(data, conf)
-    // same one-projection shape as applyBatch (flat argmax ≡ the
-    // index's own assignments frame — no join back onto the corpus)
-    Ivf.withCells(corpus, idCol, vecCol, index.centroids)
-      .repartition(col("cell")) // one file family per cell, not per task×cell
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$staging/ingest=refit_$n")
-    index.unpersist()
-    corpus.unpersist()
-    Fs.swapInPlace(data, staging, conf)
-    Some(index.centroids)
-  }
+            vecCol: String, k: Int = 16, iters: Int = 2): Option[DataFrame] =
+    liveStore(spark, storeDir).map { store =>
+      // cached: Ivf.fit makes ~4 driver-materializing passes (count,
+      // seeding, per-iteration means) and the staging write joins it
+      // again — without the cache each pass re-reads and re-aggregates
+      // every parquet delta, turning a one-scan refit into six scans
+      val corpus = store
+        .groupBy(col(idCol))
+        .agg(max(col(vecCol)).as(vecCol))
+        .cache()
+      val index = Ivf.fit(corpus, idCol, vecCol, k, iters)
+      // same one-projection shape as applyBatch (flat argmax ≡ the
+      // index's own assignments frame — no join back onto the corpus)
+      rewrite(spark, storeDir, "refit",
+        Ivf.withCells(corpus, idCol, vecCol, index.centroids))
+      index.unpersist()
+      corpus.unpersist()
+      index.centroids
+    }
 
   /** [[refit]] through the TWO-LEVEL sample-trained quantizer
     * ([[Ivf.fitTwoLevel]]) — the refit that still works when the store
@@ -219,29 +220,20 @@ object AnnIndexStream {
   def refitTwoLevel(spark: SparkSession, storeDir: String, idCol: String,
                     vecCol: String, targetCellSize: Int = 128,
                     iters: Int = 2, sampleCap: Int = 65536)
-      : Option[(DataFrame, DataFrame)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val data = dataDir(storeDir)
-    if (!Fs.exists(data, conf)) return None
-    val store = spark.read.option("basePath", data).parquet(data)
-    val corpus = store
-      .groupBy(col(idCol))
-      .agg(max(col(vecCol)).as(vecCol))
-      .cache()
-    val index = Ivf.fitTwoLevel(corpus, idCol, vecCol, targetCellSize,
-      iters, sampleCap)
-    val n = Fs.listDirs(data, conf).length
-    val staging = stagingDir(data, conf)
-    corpus.join(index.assignments, idCol)
-      .select(col(idCol), col(vecCol), col("cell"))
-      .repartition(col("cell")) // one file family per cell, not per task×cell
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$staging/ingest=refit2_$n")
-    index.unpersist()
-    corpus.unpersist()
-    Fs.swapInPlace(data, staging, conf)
-    Some((index.l1Centroids, index.centroids))
-  }
+      : Option[(DataFrame, DataFrame)] =
+    liveStore(spark, storeDir).map { store =>
+      val corpus = store
+        .groupBy(col(idCol))
+        .agg(max(col(vecCol)).as(vecCol))
+        .cache()
+      val index = Ivf.fitTwoLevel(corpus, idCol, vecCol, targetCellSize,
+        iters, sampleCap)
+      rewrite(spark, storeDir, "refit2", corpus.join(index.assignments, idCol)
+        .select(col(idCol), col(vecCol), col("cell")))
+      index.unpersist()
+      corpus.unpersist()
+      (index.l1Centroids, index.centroids)
+    }
 
   /** Right-to-be-forgotten propagation: rewrite the store WITHOUT the
     * given ids (anti-join), in one crash-safe swap — a deletion
@@ -252,27 +244,18 @@ object AnnIndexStream {
     * [[compact]].
     */
   def forget(spark: SparkSession, storeDir: String, idCol: String,
-             ids: DataFrame): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val data = dataDir(storeDir)
-    if (!Fs.exists(data, conf)) return 0L
-    val store = spark.read.option("basePath", data).parquet(data)
-    // the removed count is a SEMI join (matches only) — cheaper than
-    // counting the store before and after; and when nothing matches,
-    // the whole rewrite is skipped
-    val removed = store
-      .join(ids.select(col(idCol)), Seq(idCol), "left_semi").count()
-    if (removed == 0L) return 0L
-    val n = Fs.listDirs(data, conf).length
-    val staging = stagingDir(data, conf)
-    store.drop("ingest")
-      .join(ids.select(col(idCol)), Seq(idCol), "left_anti")
-      .repartition(col("cell")) // one file family per cell, not per task×cell
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$staging/ingest=forgotten_$n")
-    Fs.swapInPlace(data, staging, conf)
-    removed
-  }
+             ids: DataFrame): Long =
+    liveStore(spark, storeDir).fold(0L) { store =>
+      // the removed count is a SEMI join (matches only) — cheaper than
+      // counting the store before and after; and when nothing matches,
+      // the whole rewrite is skipped
+      val removed = store
+        .join(ids.select(col(idCol)), Seq(idCol), "left_semi").count()
+      if (removed > 0L)
+        rewrite(spark, storeDir, "forgotten", store.drop("ingest")
+          .join(ids.select(col(idCol)), Seq(idCol), "left_anti"))
+      removed
+    }
 
   /** Wire a vector stream into the store (foreachBatch). */
   def run(items: DataFrame, idCol: String, vecCol: String,

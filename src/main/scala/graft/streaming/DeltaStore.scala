@@ -9,11 +9,21 @@ import org.apache.spark.sql.functions.lit
   * `ingest_batch=<tag>/` parquet delta per batch, tag =
   * `<queryId>_<batchId>` (the transaction id — a replay self-excludes
   * its own tag and overwrites), committed-dirs-only reads, and a
-  * staged+swapped compaction. Extracted in r11 after the third store
-  * re-implemented it by hand (review finding: the copies were already
-  * drifting — the first-batch recovery wedge below existed in all
-  * three). private[graft] since r13: [[graft.llm.DedupIndex]]'s
-  * incremental pair store speaks the same protocol.
+  * compaction through [[Fs.replace]]. Extracted in r11 after the third
+  * store re-implemented it by hand (review finding: the copies were
+  * already drifting — the first-batch recovery wedge below existed in
+  * all three). private[graft] since r13: [[graft.llm.DedupIndex]]'s
+  * incremental pair store speaks the same protocol. This is the one
+  * module that spells the delta directory name: every delta is written
+  * by [[write]] and every tag read back by [[tagOfDir]].
+  *
+  * A compaction that died between its swap's renames leaves the store
+  * dir missing and its deltas in `<store>_old`. Every entry point that
+  * probes or appends to a store ([[committedDirs]], [[sweepUncommitted]],
+  * [[write]], and through them every read, tag mint and compaction)
+  * runs [[Fs.recoverSwap]] first, so no batch is judged against an
+  * empty store and no minted `direct_<n>` tag collides with a committed
+  * delta once `_old` comes back.
   */
 private[graft] object DeltaStore {
 
@@ -22,13 +32,28 @@ private[graft] object DeltaStore {
     s"${qid}_$batchId"
   }
 
+  private val Prefix = "ingest_batch="
+
+  /** The tag of a delta dir path (the inverse of [[write]]'s naming). */
+  def tagOfDir(dir: String): String =
+    dir.substring(dir.lastIndexOf(Prefix) + Prefix.length)
+
+  /** Write `df` as the delta `tag` of the store at `path` (overwrite:
+    * a replay rewrites its own delta in full), after [[Fs.recoverSwap]].
+    */
+  def write(df: DataFrame, path: String, tag: String): Unit = {
+    Fs.recoverSwap(path, df.sparkSession.sparkContext.hadoopConfiguration)
+    df.write.mode("overwrite").parquet(s"$path/$Prefix$tag")
+  }
+
   /** Delta dirs that finished their write (`_SUCCESS` present). */
   def committedDirs(path: String,
-                    conf: org.apache.hadoop.conf.Configuration): Seq[String] =
-    if (!Fs.exists(path, conf)) Seq.empty
-    else Fs.listDirs(path, conf)
+                    conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
+    Fs.recoverSwap(path, conf)
+    Fs.listDirs(path, conf)
       .filter(d => Fs.exists(s"${d.getPath.toString}/_SUCCESS", conf))
       .map(_.getPath.toString)
+  }
 
   /** All COMMITTED delta rows of a store dir as one frame, with
     * `ingest_batch` riding as the partition column; `template` (any
@@ -56,18 +81,28 @@ private[graft] object DeltaStore {
     * pre-write hygiene in the dedup/pack stores.
     */
   def sweepUncommitted(path: String,
-                       conf: org.apache.hadoop.conf.Configuration): Unit =
-    if (Fs.exists(path, conf))
-      Fs.listDirs(path, conf)
-        .filter(d => !Fs.exists(s"${d.getPath.toString}/_SUCCESS", conf))
-        .foreach(d => Fs.delete(d.getPath.toString, conf, recursive = true))
+                       conf: org.apache.hadoop.conf.Configuration): Unit = {
+    Fs.recoverSwap(path, conf)
+    Fs.listDirs(path, conf)
+      .filter(d => !Fs.exists(s"${d.getPath.toString}/_SUCCESS", conf))
+      .foreach(d => Fs.delete(d.getPath.toString, conf, recursive = true))
+  }
+
+  /** Committed deltas minus the caller's excluded tag: what
+    * [[compactWith]] folds and [[compactIfNeeded]] counts.
+    */
+  private def foldable(path: String, conf: org.apache.hadoop.conf.Configuration,
+                       excludeTag: Option[String]): Seq[String] =
+    committedDirs(path, conf).filterNot(d => excludeTag.contains(tagOfDir(d)))
 
   /** Absorb all committed deltas into ONE `ingest_batch=compacted_<n>`
-    * delta whose content is `fold` of their union — staged and swapped
-    * whole so readers never see partial compactions; uncommitted
-    * partials are discarded by the swap (their writer is dead;
-    * single-writer rule covers in-flight ones). Owning process only,
-    * between committed batches. No-op on an empty/absent store.
+    * delta whose content is `fold` of their union, written through
+    * [[Fs.replace]] so readers never see partial compactions and a
+    * crashed compaction's staged delta is cleared, not promoted beside
+    * the next one; uncommitted partials are discarded by the swap
+    * (their writer is dead; single-writer rule covers in-flight ones).
+    * Owning process only, between committed batches. No-op on an
+    * empty/absent store.
     *
     * `excludeTag`: a replaying batch's OWN committed-but-unacked delta
     * — it must not be baked into the compacted state (the batch is
@@ -82,17 +117,13 @@ private[graft] object DeltaStore {
                   excludeTag: Option[String] = None)
                  (fold: DataFrame => DataFrame): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    if (!Fs.exists(path, conf)) return
-    val nDirs = Fs.listDirs(path, conf).length
-    val dirs = committedDirs(path, conf)
-      .filterNot(d => excludeTag.exists(t =>
-        d.endsWith(s"/ingest_batch=$t")))
+    val dirs = foldable(path, conf, excludeTag)
     if (dirs.isEmpty) return
-    val staging = s"$path.staging"
-    fold(spark.read.parquet(dirs: _*))
-      .write.mode("overwrite")
-      .parquet(s"$staging/ingest_batch=compacted_$nDirs")
-    Fs.swapInPlace(path, staging, conf)
+    val nDirs = Fs.listDirs(path, conf).length
+    Fs.replace(path, conf) { staging =>
+      fold(spark.read.parquet(dirs: _*))
+        .write.mode("overwrite").parquet(s"$staging/${Prefix}compacted_$nDirs")
+    }
   }
 
   /** Trigger-gated [[compactWith]] — the auto-compaction policy that
@@ -113,12 +144,9 @@ private[graft] object DeltaStore {
   def compactIfNeeded(spark: SparkSession, path: String, minDeltas: Int,
                       excludeTag: Option[String] = None)
                      (fold: DataFrame => DataFrame): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (minDeltas <= 0 || !Fs.exists(path, conf)) return false
-    val foldable = committedDirs(path, conf)
-      .filterNot(d => excludeTag.exists(t =>
-        d.endsWith(s"/ingest_batch=$t")))
-    if (foldable.length < minDeltas) return false
+    if (minDeltas <= 0 ||
+        foldable(path, spark.sparkContext.hadoopConfiguration, excludeTag)
+          .length < minDeltas) return false
     compactWith(spark, path, excludeTag)(fold)
     true
   }

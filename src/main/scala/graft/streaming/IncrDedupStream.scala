@@ -15,12 +15,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * joins against the index), never corpus-text-sized.
   *
   * Store layout under `storeDir`:
-  *  - `index/ingest_batch=<queryId>_<batchId>/` — one immutable
-  *    signature DELTA per accepted batch (partition-style naming, so a
-  *    plain parquet read of `index/` reassembles the whole index with
-  *    `ingest_batch` as a column). Appending a delta is O(batch); a
-  *    full-index rewrite per fold (the [[SketchStream]] swap protocol)
-  *    would be O(corpus) per batch — correct, but dead at scale. The
+  *  - `index/` — a [[DeltaStore]]: one immutable signature DELTA per
+  *    accepted batch, tagged `<queryId>_<batchId>` (partition-style
+  *    naming, so a plain parquet read of `index/` reassembles the whole
+  *    index with `ingest_batch` as a column). Appending a delta is
+  *    O(batch); a full-index rewrite per fold (the [[SketchStream]] swap
+  *    protocol) would be O(corpus) per batch — correct, but dead at scale. The
   *    CMS grid genuinely needs read-modify-write (cell addition touches
   *    the whole grid); the index does not, deltas suffice.
   *  - `verdicts/batch=<id>/` — per-batch verdict log (doc_id, verdict,
@@ -130,20 +130,18 @@ object IncrDedupStream {
       if (batchId >= 0)
         verdicts.write.mode("overwrite")
           .parquet(verdictsPath(storeDir, batchId))
-      IncrementalDedup.survivorIndex(bidx, verdicts, idCol)
-        .write.mode("overwrite")
-        .parquet(s"$idx/ingest_batch=$tag")
+      DeltaStore.write(IncrementalDedup.survivorIndex(bidx, verdicts, idCol),
+        idx, tag)
     } finally {
       verdicts.unpersist()
       bidx.unpersist()
     }
   }
 
-  /** Absorb all deltas into one (`ingest_batch=compacted_<n>`) — the
+  /** Absorb all deltas into one (tagged `compacted_<n>`) — the
     * small-file maintenance pass; run it from the owning process
-    * between committed batches. The combined delta is staged and the
-    * index directory swapped whole, so readers never see a partial
-    * compaction.
+    * between committed batches ([[DeltaStore.compactWith]], through
+    * [[graft.core.Fs.replace]]).
     */
   def compact(spark: org.apache.spark.sql.SparkSession,
               storeDir: String): Unit =

@@ -16,9 +16,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * O(corpus) every time.
   *
   * Store layout under `storeDir` (the [[IncrDedupStream]] protocol):
-  *  - `totals/ingest_batch=<queryId>_<batchId>/` — one immutable
-  *    (source, bsum) delta per batch; the live per-source totals are
-  *    the sum over deltas. Appending is O(|sources in batch|).
+  *  - `totals/` — a [[DeltaStore]]: one immutable (source, bsum) delta
+  *    per batch, tagged `<queryId>_<batchId>`; the live per-source
+  *    totals are the sum over deltas. Appending is O(|sources in batch|).
   *  - `layout/batch=<id>/` — per-doc stream positions for that batch,
   *    overwrite-idempotent, keyed by batchId alone (same caveat as
   *    IncrDedupStream's verdicts: archive before a checkpoint reset).
@@ -123,8 +123,8 @@ object PackStream {
     try {
       if (batchId >= 0)
         layout.write.mode("overwrite").parquet(layoutPath(storeDir, batchId))
-      base.groupBy("src").agg(sum("_len").as("bsum"))
-        .write.mode("overwrite").parquet(s"$tot/ingest_batch=$tag")
+      DeltaStore.write(base.groupBy("src").agg(sum("_len").as("bsum")),
+        tot, tag)
     } finally {
       base.unpersist()
       ()

@@ -11,15 +11,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * [[TopKStream]] candidate table and the [[CdcApply]] snapshot. Every
   * fold goes through [[fold]]:
   *
-  *   1. [[Fs.recoverSwap]] repairs a swap that died between its two
-  *      renames (`<state>` missing, `<state>_old` holding the data), so
-  *      the fold never mistakes a crashed swap for an empty store;
+  *   1. [[Fs.existsRecovered]] repairs a swap that died between its two
+  *      renames, so the fold never mistakes a crashed swap for an empty
+  *      store;
   *   2. the replay marker is read, and a replayed batch is skipped;
   *   3. the prior state (None when the store is new) feeds the caller's
-  *      `next`, whose result is written to `<state>.staging` — BEFORE
-  *      the swap, since `next` lazily reads the live state it replaces;
-  *   4. the staging directory is stamped and promoted with
-  *      [[Fs.promote]] (swap when the store exists, rename otherwise).
+  *      `next`, and [[Fs.replace]] writes the result, stamps it and
+  *      swaps it in (`next` lazily reads the live state it replaces,
+  *      which `replace` leaves in place until the write returns).
   *
   * The marker is a `_graft_batch_id` file INSIDE the store directory
   * recording the last `(queryId, batchId)` folded in. The underscore
@@ -89,13 +88,13 @@ object ReplayGuard {
     * for direct folds (batchId < 0) so replay protection survives
     * interleaved direct calls.
     */
-  private def stamp(stagingDir: String, conf: Configuration,
+  private def stamp(staging: String, conf: Configuration,
                     existing: Option[(String, Long)],
                     queryId: String, batchId: Long): Unit =
     if (batchId >= 0)
-      Fs.writeText(s"$stagingDir/$MarkerName", s"$queryId:$batchId", conf)
+      Fs.writeText(s"$staging/$MarkerName", s"$queryId:$batchId", conf)
     else existing.foreach { case (qid, bid) =>
-      Fs.writeText(s"$stagingDir/$MarkerName", s"$qid:$bid", conf)
+      Fs.writeText(s"$staging/$MarkerName", s"$qid:$bid", conf)
     }
 
   /** Fold one batch into the parquet store at `path` (see the object
@@ -106,15 +105,14 @@ object ReplayGuard {
   def fold(spark: SparkSession, path: String, batchId: Long, queryId: String)
           (next: Option[DataFrame] => DataFrame): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    Fs.recoverSwap(path, conf)
+    val live = Fs.existsRecovered(path, conf)
     val marker = read(path, conf)
     if (alreadyApplied(marker, queryId, batchId)) return
-    val prior =
-      if (Fs.exists(path, conf)) Some(spark.read.parquet(path)) else None
-    val staging = s"$path.staging"
-    next(prior).write.mode("overwrite").parquet(staging)
-    stamp(staging, conf, marker, queryId, batchId)
-    Fs.promote(staging, path, conf)
+    val prior = if (live) Some(spark.read.parquet(path)) else None
+    Fs.replace(path, conf) { staging =>
+      next(prior).write.mode("overwrite").parquet(staging)
+      stamp(staging, conf, marker, queryId, batchId)
+    }
   }
 
   /** Wire a stream into a sink: one foreachBatch query on `checkpoint`

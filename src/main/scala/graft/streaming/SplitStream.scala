@@ -18,10 +18,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Store layout under `storeDir` (the [[IncrDedupStream]] delta
   * protocol):
-  *  - `sigs/ingest_batch=<tag>/` — one immutable signature delta per
-  *    batch (EVERY batch doc, duplicates included: any assigned doc is
-  *    a legal attachment point for future near-dups).
-  *  - `assign/ingest_batch=<tag>/` — this batch's assignment rows:
+  *  - `sigs/` — one immutable signature delta per batch (EVERY batch
+  *    doc, duplicates included: any assigned doc is a legal attachment
+  *    point for future near-dups).
+  *  - `assign/` — one delta per batch holding its assignment rows:
   *    (doc_id, cluster_id, cluster_seq, split, seq) for every batch doc
   *    plus re-pointed rows for existing docs whose cluster merged. The
   *    live view is latest-`seq`-wins per doc ([[assignments]]).
@@ -140,10 +140,8 @@ object SplitStream {
     val rows = IncrementalSplit.assignBatch(bidx, priorSigs, priorAssign,
       idCol, splits, seq, numHashes, rowsPerBand, minMatches).cache()
     try {
-      rows.write.mode("overwrite")
-        .parquet(s"${assignPath(storeDir)}/ingest_batch=$tag")
-      bidx.write.mode("overwrite")
-        .parquet(s"${sigsPath(storeDir)}/ingest_batch=$tag")
+      DeltaStore.write(rows, assignPath(storeDir), tag)
+      DeltaStore.write(bidx, sigsPath(storeDir), tag)
     } finally {
       rows.unpersist()
       bidx.unpersist()
@@ -177,7 +175,7 @@ object SplitStream {
   }
 
   /** Absorb the assign deltas and the sigs deltas each into one
-    * `ingest_batch=compacted_<n>` delta — the small-file maintenance
+    * `compacted_<n>` delta — the small-file maintenance
     * pass; owning process only, between committed batches. Committed
     * deltas only (the r10 partial-delta-baking lesson), staged and
     * swapped whole. The fold is IDENTITY on both stores: per-doc

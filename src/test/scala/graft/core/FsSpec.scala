@@ -74,4 +74,58 @@ class FsSpec extends SparkSpec {
     assert(!Fs.exists(s"${live}_old", conf))
     assert(Fs.list(live, conf).forall(!_.isDirectory), "swap nested a directory")
   }
+
+  /** Visible entries of `dir` (the local FS keeps `.crc` side files). */
+  private def names(dir: String): Set[String] =
+    Fs.list(dir, spark.sparkContext.hadoopConfiguration)
+      .map(_.getPath.getName).filterNot(_.startsWith(".")).toSet
+
+  test("replace clears a stale <live>.staging before write runs") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = java.nio.file.Files.createTempDirectory("fs_replace").toFile
+    val live = dirWith(root, "t", "current")
+    // a crashed rewrite's leftover, in a subdir a writer that overwrites
+    // only its own subdir would not clear
+    Fs.writeText(s"$live.staging/left/m", "stale", conf)
+    Fs.replace(live, conf) { staging =>
+      assert(!Fs.exists(staging, conf), "stale staging dir not cleared")
+      Fs.writeText(s"$staging/n", "next", conf)
+    }
+    assert(names(live) === Set("n"))
+    assert(!Fs.exists(s"$live.staging", conf) && !Fs.exists(s"${live}_old", conf))
+  }
+
+  test("replace: a write that throws leaves live untouched") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = java.nio.file.Files.createTempDirectory("fs_replace_fail").toFile
+    val live = dirWith(root, "t", "current")
+    val e = intercept[IllegalStateException] {
+      Fs.replace(live, conf) { staging =>
+        Fs.writeText(s"$staging/m", "half-written", conf)
+        throw new IllegalStateException("write died")
+      }
+    }
+    assert(e.getMessage === "write died")
+    assert(Fs.readText(s"$live/m", conf) === Some("current"))
+    assert(names(live) === Set("m") && !Fs.exists(s"${live}_old", conf))
+  }
+
+  test("two threads recovering one crashed swap: one restore, neither " +
+      "throws, no _old nested inside live") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try (1 to 40).foreach { round =>
+      val root = java.nio.file.Files.createTempDirectory("fs_race").toFile
+      val live = s"${root.getPath}/t"
+      dirWith(root, "t_old", s"round-$round")
+      val gate = new java.util.concurrent.CyclicBarrier(2)
+      val calls = Seq.fill(2)(pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = { gate.await(); Fs.recoverSwap(live, conf) }
+      }))
+      calls.foreach(_.get()) // rethrows what either thread threw
+      assert(Fs.readText(s"$live/m", conf) === Some(s"round-$round"))
+      assert(!Fs.exists(s"${live}_old", conf))
+      assert(names(live) === Set("m"), "an _old was nested inside live")
+    } finally pool.shutdown()
+  }
 }

@@ -258,6 +258,32 @@ class PipelineSpec extends SparkSpec {
     assert(back.collect().head.getAs[String]("stg_datim_id") === "FACP")
   }
 
+  test("a staging compaction that died between its renames loses no row: " +
+      "the next run's append restores <table>_old before it writes") {
+    val (cfg, parent) = setup()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fac = new java.io.File(parent, "FAC1")
+    writeFile(fac, "biometric_0_20250103141949_decrypted.json",
+      """[{"id": 1, "uuid": "u1"}, {"id": 2, "uuid": "u2"}]""")
+    seedSync(cfg, Seq(syncRow(1L, "FAC1", "biometric_0_20250103141949.json")))
+    assert(Pipeline.run(spark, cfg).recordsIngested === 2)
+    // the crash (KillResumeSpec.crashMidSwap's shape): compactStagingTable
+    // staged its rewrite, renamed the table to <table>_old and died
+    // before promoting the staging dir
+    val table = s"${cfg.warehouseDir}/stg_biometric"
+    spark.read.parquet(table).write.mode("overwrite").parquet(s"$table.staging")
+    graft.core.Fs.rename(table, s"${table}_old", conf)
+    writeFile(fac, "biometric_1_20250104141949_decrypted.json",
+      """[{"id": 3, "uuid": "u3"}]""")
+    seedSync(cfg, Seq(syncRow(2L, "FAC1", "biometric_1_20250104141949.json")))
+    assert(Pipeline.run(spark, cfg).recordsIngested === 1)
+    graft.maintenance.Maintenance.compactStagingTable(spark, table)
+    assert(spark.read.parquet(table)
+      .select(org.apache.spark.sql.functions.col("id").cast("long"))
+      .as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+    assert(!graft.core.Fs.exists(s"${table}_old", conf))
+  }
+
   test("requeue: failed file returns to Ready and the next run re-ingests it") {
     import org.apache.spark.sql.functions.col
     val (cfg, parent) = setup()

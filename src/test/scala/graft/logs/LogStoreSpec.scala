@@ -107,7 +107,7 @@ class LogStoreSpec extends SparkSpec {
     def view = store.latestOrEmpty("t", Seq("id"), schema)
       .orderBy("id").as[(Long, String)].collect().toSeq
     // the crash window: compact renamed t -> t_old, then died before
-    // promoting t_compacted. A read comes first here...
+    // promoting t.staging. A read comes first here...
     graft.core.Fs.rename(t, tOld, conf)
     assert(view === Seq((1L, "a2"), (2L, "b")))
     store.compact("t", Seq("id"))

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.llm.Sketch
+import graft.llm.{Ivf, Sketch}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 /** Kill-and-resume proof for the stateful streaming sinks: a query is
@@ -21,7 +21,9 @@ import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
   * The second crash point is INSIDE the store swap, between its two
   * renames (`<state>` missing, `<state>_old` holding the prior state):
   * re-driving the batch must restore `_old` before it folds, or the
-  * history before the crash is lost without an error.
+  * history before the crash is lost without an error. The same holds
+  * for the append-shaped stores, whose compactions swap: the next
+  * delta must land in the restored store.
   */
 class KillResumeSpec extends SparkSpec {
   import spark.implicits._
@@ -162,13 +164,15 @@ class KillResumeSpec extends SparkSpec {
     assert(got === Seq(("b", 20L), ("c", 3L)))
   }
 
-  /** The mid-swap crash: the fold of the batch after b1 staged its new
-    * state, renamed `<state>` to `<state>_old` and died before promoting
-    * the staging directory — `<state>` is missing and `_old` holds b1.
+  /** The mid-swap crash: a rewrite of `<state>` staged its new content
+    * (at `<state>.staging<sub>`), renamed `<state>` to `<state>_old` and
+    * died before promoting the staging directory — `<state>` is missing
+    * and `_old` holds everything before the crash.
     */
-  private def crashMidSwap(state: String, staged: DataFrame): Unit = {
+  private def crashMidSwap(state: String, staged: DataFrame,
+                           sub: String = ""): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    staged.write.mode("overwrite").parquet(s"$state.staging")
+    staged.write.mode("overwrite").parquet(s"$state.staging$sub")
     graft.core.Fs.rename(state, s"${state}_old", conf)
   }
 
@@ -214,5 +218,96 @@ class KillResumeSpec extends SparkSpec {
       .orderBy("key").as[(String, Long)].collect().toSeq
     // a comes from b1 alone: lost if the re-driven b2 ignored base_old
     assert(got === Seq(("a", 1L), ("b", 20L), ("d", 4L)))
+  }
+
+  private def packLayout(store: String): Seq[(String, Long, Long, Long)] =
+    spark.read.option("basePath", s"$store/layout")
+      .parquet(s"$store/layout/batch=*")
+      .select(col("source"), col("doc_id"), col("n_tokens"), col("start_off"))
+      .as[(String, Long, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
+
+  private def packTotals(store: String): Seq[(String, Long)] =
+    spark.read.parquet(PackStream.totalsPath(store))
+      .groupBy("src").agg(sum("bsum")).as[(String, Long)]
+      .collect().sortBy(_._1).toSeq
+
+  private def packBatch(i: Long): DataFrame =
+    Seq((i, "a", 3L), (100L + i, "b", 2L)).toDF("doc_id", "source", "n")
+
+  /** The compaction PackStream.compact would stage over `store`. */
+  private def packCompacted(store: String): DataFrame =
+    spark.read.parquet(PackStream.totalsPath(store))
+      .groupBy("src").agg(sum("bsum").as("bsum"))
+
+  test("PackStream: crash between a compaction's renames; the next two " +
+      "batches extend the restored totals like the one-shot run") {
+    val root = java.nio.file.Files.createTempDirectory("midswap_pack").toFile
+    val (store, oneShot) = (s"${root.getPath}/store", s"${root.getPath}/one")
+    def apply(at: String, b: DataFrame, i: Long): Unit =
+      PackStream.applyBatch(b, "doc_id", "n", "source", at, 4L, i, "q")
+    apply(store, packBatch(0L), 0L)
+    apply(store, packBatch(1L), 1L)
+    crashMidSwap(PackStream.totalsPath(store), packCompacted(store),
+      "/ingest_batch=compacted_2")
+    apply(store, packBatch(2L), 2L)
+    apply(store, packBatch(3L), 3L)
+    apply(oneShot, (0L to 3L).map(packBatch).reduce(_ union _), 0L)
+    assert(packLayout(store) === packLayout(oneShot))
+    assert(packTotals(store) === Seq(("a", 12L), ("b", 8L)))
+    assert(packTotals(store) === packTotals(oneShot))
+  }
+
+  test("PackStream: a direct call after a crashed compaction swap mints a " +
+      "fresh tag instead of overwriting the committed direct_0") {
+    val root = java.nio.file.Files.createTempDirectory("midswap_direct").toFile
+    val store = s"${root.getPath}/store"
+    val tot = PackStream.totalsPath(store)
+    def direct(i: Long): Unit = PackStream.applyBatch(packBatch(i),
+      "doc_id", "n", "source", store, 4L)
+    direct(0L)
+    direct(1L)
+    crashMidSwap(tot, packCompacted(store), "/ingest_batch=compacted_2")
+    direct(2L)
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(graft.core.Fs.listDirs(tot, conf).map(_.getPath.getName).sorted ===
+      Seq("ingest_batch=direct_0", "ingest_batch=direct_1",
+        "ingest_batch=direct_2"))
+    assert(spark.read.parquet(s"$tot/ingest_batch=direct_0")
+      .as[(String, Long)].collect().sortBy(_._1).toSeq ===
+      Seq(("a", 3L), ("b", 2L)))
+    assert(packTotals(store) === Seq(("a", 9L), ("b", 6L)))
+  }
+
+  test("AnnIndexStream: crash between a compaction's renames; the next " +
+      "batch lands in the restored store and search equals the crash-free " +
+      "store's") {
+    val root = java.nio.file.Files.createTempDirectory("midswap_ann").toFile
+    val (store, clean) = (s"${root.getPath}/store", s"${root.getPath}/clean")
+    val corpus = (1L to 24L).map { i =>
+      val base = if (i % 2 == 0) Seq(10f, 0f, 0f, 1f) else Seq(0f, 10f, 1f, 0f)
+      (i, base.zipWithIndex.map { case (v, d) => v + ((i * 7 + d) % 5) * 0.1f })
+    }.toDF("vec_id", "embedding")
+    val index = Ivf.fit(corpus, "vec_id", "embedding", k = 2, iters = 1)
+    def part(lo: Long, hi: Long) =
+      corpus.filter(col("vec_id") >= lo && col("vec_id") <= hi)
+    def ingest(at: String, b: DataFrame, i: Long): Unit =
+      AnnIndexStream.applyBatch(b, "vec_id", "embedding", index.centroids,
+        at, batchId = i, queryId = "q")
+    Seq(store, clean).foreach { at =>
+      ingest(at, part(1L, 8L), 0L)
+      ingest(at, part(9L, 16L), 1L)
+    }
+    val data = s"$store/data"
+    crashMidSwap(data, spark.read.parquet(data).drop("ingest"),
+      "/ingest=compacted_2")
+    Seq(store, clean).foreach(ingest(_, part(17L, 24L), 2L))
+    def top(at: String): Seq[(Long, Long, Int)] =
+      AnnIndexStream.search(spark, at, index.centroids,
+          corpus.filter(col("vec_id") <= 4L), "vec_id", "embedding",
+          k = 3, nprobe = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
+        .sorted.toSeq
+    assert(top(clean).size === 12)
+    assert(top(store) === top(clean))
   }
 }

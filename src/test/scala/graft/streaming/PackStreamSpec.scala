@@ -126,4 +126,28 @@ class PackStreamSpec extends SparkSpec {
       "doc_id", "n", "source", store, 3L, 3L, "q")
     assert(layout(store).collect { case ("a", 200L, _, off) => off }.head === 9L)
   }
+
+  test("a compaction that died before its swap leaves a staged delta that " +
+      "the next compaction clears instead of promoting it twice") {
+    val dir = java.nio.file.Files.createTempDirectory("pack_stale").toFile
+    val (store, clean) = (s"${dir.getPath}/store", s"${dir.getPath}/clean")
+    def apply(at: String, i: Long): Unit = PackStream.applyBatch(
+      Seq((i, "a", 3L), (100L + i, "b", 2L)).toDF("doc_id", "source", "n"),
+      "doc_id", "n", "source", at, 10L, i, "q")
+    def totals(at: String): Seq[(String, Long)] =
+      spark.read.parquet(PackStream.totalsPath(at))
+        .groupBy("src").agg(sum("bsum")).as[(String, Long)]
+        .collect().sortBy(_._1).toSeq
+    Seq(store, clean).foreach { at => apply(at, 0L); apply(at, 1L) }
+    // the crash: a compaction wrote its committed staged delta over the
+    // two deltas, then died before its swap
+    val tot = PackStream.totalsPath(store)
+    spark.read.parquet(tot).groupBy("src").agg(sum("bsum").as("bsum"))
+      .write.mode("overwrite").parquet(s"$tot.staging/ingest_batch=compacted_2")
+    Seq(store, clean).foreach { at => apply(at, 2L); PackStream.compact(spark, at) }
+    assert(totals(clean) === Seq(("a", 9L), ("b", 6L)))
+    assert(totals(store) === totals(clean))
+    Seq(store, clean).foreach(apply(_, 3L))
+    assert(layout(store) === layout(clean))
+  }
 }
