@@ -56,6 +56,20 @@ object Fs {
   def listDirs(dir: String, conf: Configuration): Seq[FileStatus] =
     list(dir, conf).filter(_.isDirectory)
 
+  /** The table directories under a warehouse `dir`: its subdirectories
+    * minus hidden names (a leading `.` or `_`), so a swap's siblings
+    * ([[oldDir]], [[stagingDir]]) and Spark's bookkeeping dirs are never
+    * taken for tables.
+    */
+  def listTables(dir: String, conf: Configuration): Seq[FileStatus] =
+    listDirs(dir, conf).filterNot(d => hidden(d.getPath.getName))
+
+  /** Spark's hidden-path rule: names starting with `_` or `.` are not
+    * data (`_SUCCESS`, `_temporary`, a swap's siblings).
+    */
+  private def hidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".")
+
   def listFiles(dir: String, conf: Configuration): Seq[FileStatus] =
     list(dir, conf).filter(_.isFile)
 
@@ -84,10 +98,29 @@ object Fs {
       throw new java.io.IOException(s"rename $src -> $dst failed")
   }
 
+  /** Where a swap of `live` parks the previous content between its two
+    * renames: `.<name>.old` beside `live`. The leading dot keeps every
+    * sibling out of the names a table, a store or a delta can take (a
+    * staging table named from an uploaded `*_old_*` file included) and
+    * out of Spark's file listings.
+    */
+  private[graft] def oldDir(live: String): String = sibling(live, "old")
+
+  /** Where [[replace]] writes the new content of `live`:
+    * `.<name>.staging` beside it.
+    */
+  private[graft] def stagingDir(live: String): String = sibling(live, "staging")
+
+  private def sibling(live: String, kind: String): String = {
+    val path = live.stripSuffix("/")
+    val cut = path.lastIndexOf('/') + 1
+    s"${path.take(cut)}.${path.drop(cut)}.$kind"
+  }
+
   /** The one monitor over every swap in this process: [[recoverSwap]]
     * and the renames of [[replace]] hold it, so a recovery in one thread
     * never runs inside the window between another thread's two renames
-    * (it would restore `_old` into the gap, and the swap's next rename
+    * (it would restore [[oldDir]] into the gap, and the swap's next rename
     * would nest the new directory inside it), and two recoveries of one
     * directory never both act. The staged writes run outside it.
     * Cross-process concurrency is out of contract: one writing driver
@@ -96,24 +129,24 @@ object Fs {
   private val swapLock = new Object
 
   /** Resolve what a swap that died part-way left behind, before anyone
-    * reads or writes `live`. [[swapInPlace]] moves `live` → `_old`,
-    * then the new directory → `live`, then deletes `_old`:
-    *  - `live` missing, `_old` present: the process died between the two
-    *    renames and only `_old` holds the data → restore it. Without
+    * reads or writes `live`. [[swapInPlace]] moves `live` → `old`
+    * ([[oldDir]]), then the new directory → `live`, then deletes `old`:
+    *  - `live` missing, `old` present: the process died between the two
+    *    renames and only `old` holds the data → restore it. Without
     *    this, the next writer sees "no state", writes its batch alone,
-    *    and the swap after that deletes `_old` as stale — all history
+    *    and the swap after that deletes `old` as stale — all history
     *    lost without an error;
-    *  - both present: the swap completed but `_old` was not removed →
+    *  - both present: the swap completed but `old` was not removed →
     *    delete it. `FileSystem.rename` into an existing directory
     *    silently NESTS the source as a child (and returns true), so a
-    *    stale `_old` would turn the next swap's checked rename into a
+    *    stale `old` would turn the next swap's checked rename into a
     *    silent nest.
-    * A no-op when no `_old` exists. Every writer that appends into a
+    * A no-op when no `old` exists. Every writer that appends into a
     * directory [[replace]] rewrites calls this first.
     */
   def recoverSwap(live: String, conf: Configuration): Unit =
     swapLock.synchronized {
-      val old = live + "_old"
+      val old = oldDir(live)
       if (exists(old, conf)) {
         if (exists(live, conf)) {
           if (!delete(old, conf, recursive = true))
@@ -132,16 +165,17 @@ object Fs {
   }
 
   /** Crash-safe in-place directory replacement: [[recoverSwap]] first,
-    * then move `live` → `_old` (checked), move `compacted` → `live`
-    * (checked; on failure `_old` is restored so the live path never
-    * stays missing), then delete `_old` (checked). A crash between the
-    * two renames is repaired by the next [[recoverSwap]] on the same
-    * path. All Hadoop FS, object-store portable.
+    * then move `live` → [[oldDir]] (checked), move `compacted` → `live`
+    * (checked; on failure the old content is restored so the live path
+    * never stays missing), then delete the old content (checked). A
+    * crash between the two renames is repaired by the next
+    * [[recoverSwap]] on the same path. All Hadoop FS, object-store
+    * portable.
     */
   private[core] def swapInPlace(live: String, compacted: String,
                                 conf: Configuration): Unit =
     swapLock.synchronized {
-      val old = live + "_old"
+      val old = oldDir(live)
       recoverSwap(live, conf)
       rename(live, old, conf)
       try rename(compacted, live, conf)
@@ -159,10 +193,10 @@ object Fs {
     }
 
   /** The one staged rewrite of a directory: [[recoverSwap]] on `live`,
-    * delete `<live>.staging` (a crashed rewrite's leftover would
+    * delete [[stagingDir]] (a crashed rewrite's leftover would
     * otherwise ride this swap into `live`), `write` the new content into
-    * `<live>.staging`, then make it `live` ([[swapInPlace]], or a
-    * rename on the first write). A reader never sees a partial rewrite;
+    * it, then make it `live` ([[swapInPlace]], or a rename on the first
+    * write). A reader never sees a partial rewrite;
     * `live` is briefly missing between the swap's two renames, and
     * [[existsRecovered]] waits that window out on the monitor. A `write`
     * that throws leaves `live` untouched. `write` may read `live` lazily: nothing replaces
@@ -171,7 +205,7 @@ object Fs {
     */
   def replace[A](live: String, conf: Configuration)(write: String => A): A = {
     recoverSwap(live, conf)
-    val staging = s"$live.staging"
+    val staging = stagingDir(live)
     delete(staging, conf, recursive = true)
     val out = write(staging)
     swapLock.synchronized {
@@ -258,7 +292,7 @@ object Fs {
       // write's _temporary tree or a streaming sink's _spark_metadata
       // holds real-looking files that are NOT table data — counting
       // them would fire compaction triggers on healthy tables
-      if (name.startsWith("_") || name.startsWith(".")) acc
+      if (hidden(name)) acc
       else if (s.isDirectory) {
         val sub = dataFileStats(s.getPath.toString, conf)
         DataFileStats(acc.files + sub.files, acc.bytes + sub.bytes)

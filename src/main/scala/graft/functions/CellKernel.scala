@@ -9,19 +9,34 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Squared-L2 distances of one (sub)vector against a codebook group of
-  * an executor-broadcast [[CellTable]], in one primitive loop: the
-  * [[CellSims]] sibling behind [[graft.llm.Quant]]'s PQ training and
-  * encode argmin (`dists[j] = Σ (vec[i] − c_j[i])²`, the same
-  * left-to-right fold as the `zip_with` subDist; CellKernelsSpec pins
-  * the parity).
+/** Scores of one vector against a centroid group of an
+  * executor-broadcast [[CellTable]], in one primitive loop: the per-row
+  * kernel behind every centroid assignment in [[graft.llm.Ivf]] (cosine,
+  * plan name `cell_sims`) and [[graft.llm.Quant]]'s PQ codes (squared
+  * L2, plan name `cell_dists`).
+  *
+  * For a row `(vec, grp)` the result is
+  * `struct(cells: array<int>, sims|dists: array<double>)` over the
+  * group's entries, computed by [[CellTable.Group.scores]]. Every fold
+  * runs left-to-right in double exactly like the
+  * `aggregate(zip_with(...))` built-in formulations ([[graft.llm.Ann.dot]]
+  * and the PQ `subDist`), so the downstream round(·, 9) fold sees
+  * bit-identical inputs (CellKernelsSpec pins the parity against the
+  * broadcast-join argmax and the `zip_with` distance).
   *
   * Null semantics: null vector or null element → null; a centroid whose
-  * length mismatches → that entry null; a group id absent from the
-  * table → null.
+  * length mismatches the vector → that entry's score is null; a group id
+  * absent from the table → null.
+  *
+  * Why an expression and not `aggregate` over the centroids: HOF lambdas
+  * evaluate interpreted per ELEMENT and re-evaluate embedded subtrees
+  * per reference (measured 13× slower than a broadcast-join assign).
+  * This kernel is one compiled k·d loop per row; the argmax/argmin stays
+  * in (cheap, scalar) SQL so the round/tiebreak semantics are Spark's
+  * own. The plan carries only the broadcast handle.
   */
-case class CellDists(left: Expression, right: Expression,
-                     table: Broadcast[CellTable])
+case class CellKernel(left: Expression, right: Expression,
+                      table: Broadcast[CellTable], metric: CellTable.Metric)
   extends BinaryExpression with CodegenFallback {
 
   private def elemType: DataType =
@@ -35,14 +50,14 @@ case class CellDists(left: Expression, right: Expression,
     if (vecOk(left.dataType) && right.dataType == IntegerType)
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      "cell_dists expects (array<float>|array<double>, int), got " +
+      s"$prettyName expects (array<float>|array<double>, int), got " +
         s"${left.dataType.sql}, ${right.dataType.sql}")
   }
 
   override def dataType: DataType = StructType(Seq(
     StructField("cells", ArrayType(IntegerType, containsNull = false),
       nullable = false),
-    StructField("dists", ArrayType(DoubleType, containsNull = true),
+    StructField(metric.field, ArrayType(DoubleType, containsNull = true),
       nullable = false)))
 
   override def nullable: Boolean = true
@@ -53,7 +68,6 @@ case class CellDists(left: Expression, right: Expression,
     groups.get(grpAny.asInstanceOf[Int]) match {
       case None => null
       case Some(g) =>
-        val cents = g.cents
         val v = vecAny.asInstanceOf[ArrayData]
         val n = v.numElements()
         var i = 0
@@ -65,21 +79,7 @@ case class CellDists(left: Expression, right: Expression,
           x(i) = if (isF) v.getFloat(i).toDouble else v.getDouble(i)
           i += 1
         }
-        val k = cents.length
-        val dists = new Array[Any](k)
-        var j = 0
-        while (j < k) {
-          val c = cents(j)
-          if (c.length != n) dists(j) = null
-          else {
-            var s = 0.0
-            var t = 0
-            while (t < n) { val d = x(t) - c(t); s += d * d; t += 1 }
-            dists(j) = s
-          }
-          j += 1
-        }
-        InternalRow(g.cells, new GenericArrayData(dists))
+        InternalRow(g.cells, new GenericArrayData(g.scores(x, metric)))
     }
   }
 
@@ -87,14 +87,15 @@ case class CellDists(left: Expression, right: Expression,
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 
-  override def prettyName: String = "cell_dists"
+  override def prettyName: String = metric.kernel
 }
 
-object CellDists {
+object CellKernel {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
-  /** Column API. */
-  def dists(vec: Column, grp: Column, table: Broadcast[CellTable]): Column =
-    ColumnBridge.column(CellDists(
-      ColumnBridge.expression(vec), ColumnBridge.expression(grp), table))
+  /** Column API: `metric` scores of `vec` against group `grp`. */
+  def column(vec: Column, grp: Column, table: Broadcast[CellTable],
+             metric: CellTable.Metric): Column =
+    ColumnBridge.column(CellKernel(
+      ColumnBridge.expression(vec), ColumnBridge.expression(grp), table, metric))
 }

@@ -4,11 +4,11 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 
-/** The centroid table behind [[CellSims]] and [[CellDists]], already in
-  * the form the kernels read. For each group id (level-1 cell for the
-  * two-level leaf assign, subspace for PQ, 0 for a flat quantizer) it
-  * holds the group's cell ids ascending, their centroids as primitive
-  * arrays and each centroid's l2 norm.
+/** The centroid table behind [[CellKernel]], already in the form the
+  * kernel reads. For each group id (level-1 cell for the two-level leaf
+  * assign, subspace for PQ, 0 for a flat quantizer) it holds the group's
+  * cell ids ascending, their centroids as primitive arrays and each
+  * centroid's l2 norm.
   *
   * The table reaches the executors as a [[Broadcast]] value, like the
   * [[SetOverlapBroadcast]] set and the [[BloomProbeBroadcast]] filter:
@@ -18,15 +18,30 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
   * of any size takes this one path.
   *
   * A table built with [[CellTable.apply]] and never broadcast serves the
-  * driver-side assignment of a sample-trained quantizer
-  * ([[graft.llm.Ivf.fitTwoLevel]]); it runs the same [[CellTable.Group.sims]]
-  * loop as the kernel, so both sides see bit-identical similarities.
+  * driver-side Lloyd sweeps of every quantizer ([[graft.llm.Ivf.fit]],
+  * [[graft.llm.Ivf.fitTwoLevel]], [[graft.llm.Quant.pqFit]]); they run
+  * the same [[CellTable.Group.scores]] loop as the kernel, so both sides
+  * see bit-identical scores.
   */
 final class CellTable private (
     private[graft] val groups: Map[Int, CellTable.Group])
   extends Serializable
 
 object CellTable {
+
+  /** How a vector is scored against a centroid, and which score wins
+    * the assignment: `kernel` is the [[CellKernel]] plan name, `field`
+    * its score array, `highestWins` the direction of the fold over
+    * round(score, 9).
+    */
+  sealed abstract class Metric(val kernel: String, val field: String,
+                               val highestWins: Boolean) extends Serializable
+
+  /** Cosine similarity; the highest wins (the IVF quantizers). */
+  case object Cosine extends Metric("cell_sims", "sims", highestWins = true)
+
+  /** Squared L2 distance; the lowest wins (the PQ codebooks). */
+  case object SquaredL2 extends Metric("cell_dists", "dists", highestWins = false)
 
   /** One group: shared immutable cell-id ArrayData (every result row
     * reuses it), centroids, and their norms.
@@ -36,17 +51,19 @@ object CellTable {
       val cents: Array[Array[Double]],
       val norms: Array[Double]) extends Serializable {
 
-    /** Cosine similarity of `x` against each of the group's centroids, in
-      * cell order: `Σ x[i]·c[i] / (‖x‖ · ‖c‖)`, every fold left-to-right
-      * in double exactly like [[graft.llm.Ann.dot]] and
-      * [[graft.llm.Ann.l2norm]]. A centroid whose length differs from
-      * `x` gets a null entry.
+    /** `metric` scores of `x` against each of the group's centroids, in
+      * cell order, every fold left-to-right in double: the cosine
+      * `Σ x[i]·c[i] / (‖x‖ · ‖c‖)` exactly like [[graft.llm.Ann.dot]] and
+      * [[graft.llm.Ann.l2norm]], the squared L2 `Σ (x[i] − c[i])²`
+      * exactly like the PQ `zip_with` distance. A centroid whose length
+      * differs from `x` gets a null entry.
       */
-    def sims(x: Array[Double]): Array[Any] = {
+    def scores(x: Array[Double], metric: Metric): Array[Any] = {
       val n = x.length
+      val cosine = metric == Cosine
       var vnAcc = 0.0
       var i = 0
-      while (i < n) { vnAcc += x(i) * x(i); i += 1 }
+      if (cosine) while (i < n) { vnAcc += x(i) * x(i); i += 1 }
       val vn = math.sqrt(vnAcc)
       val k = cents.length
       val out = new Array[Any](k)
@@ -57,8 +74,13 @@ object CellTable {
         else {
           var s = 0.0
           var t = 0
-          while (t < n) { s += x(t) * c(t); t += 1 }
-          out(j) = s / (vn * norms(j))
+          if (cosine) {
+            while (t < n) { s += x(t) * c(t); t += 1 }
+            out(j) = s / (vn * norms(j))
+          } else {
+            while (t < n) { val d = x(t) - c(t); s += d * d; t += 1 }
+            out(j) = s
+          }
         }
         j += 1
       }
@@ -84,15 +106,4 @@ object CellTable {
   def broadcast(spark: SparkSession,
                 rows: Seq[(Int, Int, Seq[Double])]): Broadcast[CellTable] =
     spark.sparkContext.broadcast(apply(rows))
-
-  /** [[broadcast]] for a frame that is collected inside `f` (a Lloyd
-    * step): the table is destroyed as soon as `f` returns instead of
-    * waiting for the ContextCleaner, so an iterative fit holds one
-    * table at a time.
-    */
-  def scoped[T](spark: SparkSession, rows: Seq[(Int, Int, Seq[Double])])
-               (f: Broadcast[CellTable] => T): T = {
-    val table = broadcast(spark, rows)
-    try f(table) finally table.destroy()
-  }
 }

@@ -193,10 +193,7 @@ object Pipeline {
             .drop("_corrupt_record")
         case None => JsonSource.readInferred(spark, paths)
       }
-      val withProv = Stages.stampProvenanceFromPath(
-        Stages.emptyToNull(
-          Stages.entityTransforms(stagingTable, cfg.registry)(
-            Stages.dropAllNull(raw))), loadTime)
+      val withProv = Stages.prepareEntity(stagingTable, cfg.registry, loadTime)(raw)
       // S8/S9 sink: parquet warehouse by default; JDBC escape hatch when
       // cfg.jdbcUrl is set (the reference's actual data plane)
       def writeOut(df: org.apache.spark.sql.DataFrame, table: String): Unit =
@@ -208,8 +205,9 @@ object Pipeline {
           case None =>
             val root = s"${cfg.warehouseDir}/$table"
             // a staging compaction that died mid-swap left the table in
-            // <table>_old: restore it, or this append recreates the table
-            // with only its own rows and the next compaction deletes _old
+            // Fs.oldDir(root): restore it, or this append recreates the
+            // table with only its own rows and the next compaction
+            // deletes the old content
             graft.core.Fs.recoverSwap(root, spark.sparkContext.hadoopConfiguration)
             (cfg.partitionStagingBy, cfg.facilityId) match {
               case (Some(c), Some(fac)) =>

@@ -102,6 +102,17 @@ object Stages {
       .fold(nested)(maskFlat(nested, _))
   }
 
+  /** The per-entity transform chain of a raw JSON read, the one both
+    * ingest paths ([[Pipeline]] and [[graft.streaming.StreamIngest]])
+    * run: [[dropAllNull]] (before anything adds a column), the entity's
+    * [[entityTransforms]] (column exclusion, nested and flat PII
+    * masking), [[emptyToNull]], then [[stampProvenanceFromPath]].
+    */
+  def prepareEntity(stagingTable: String, reg: SchemaRegistry.EntityRegistry,
+                    loadTime: java.sql.Timestamp)(raw: DataFrame): DataFrame =
+    stampProvenanceFromPath(
+      emptyToNull(entityTransforms(stagingTable, reg)(dropAllNull(raw))), loadTime)
+
   // ---- F8: date-column detection + validation split ----
 
   /** Date columns by naming convention: `date_*` or `*_date`

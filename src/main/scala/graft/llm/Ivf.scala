@@ -1,8 +1,9 @@
 package graft.llm
 
-import graft.functions.{CellSims, CellTable}
+import graft.functions.{CellKernel, CellTable}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) ANN index: a coarse k-means quantizer partitions
@@ -11,12 +12,12 @@ import org.apache.spark.sql.functions._
   * alternative to the hyperplane-LSH path in [[Ann]] — better when the
   * corpus has natural cluster structure, at the cost of a training pass.
   *
-  * Scale: the flat [[fit]] trains on the whole corpus, `iters` passes of
-  * (broadcast k centroids → map-side nearest-cell assign → groupBy-cell
-  * average). The two-level [[fitTwoLevel]] trains on a bounded md5-stride
-  * sample collected once to the driver (up to 2·sampleCap − 1 vectors)
-  * and runs every Lloyd sweep there; only its final assignment touches
-  * the corpus. Search touches ~nprobe/k of the corpus. Centroids are
+  * Scale: both fits — the flat [[fit]] and the two-level [[fitTwoLevel]]
+  * — train on a bounded md5-stride sample collected once to the driver
+  * (up to 2·65,536 − 1 vectors by default; the whole corpus below that)
+  * and run every Lloyd sweep there ([[lloyd]], which also trains
+  * [[Quant.pqFit]]'s codebooks); only the final assignment touches the
+  * corpus. Search touches ~nprobe/k of the corpus. Centroids are
   * dimension-sized (k·d doubles) — always broadcastable.
   *
   * Fully deterministic, including across engines:
@@ -43,45 +44,42 @@ object Ivf {
 
   private val Quantum = 1000000.0 // centroid-mean quantization (1e-6)
 
+  private[llm] val SampleCap = 65536 // default training-sample bound
+
   // -------------------------------------------------------------------
-  // Centroid assignment, one path for every quantizer size. Each Lloyd
-  // loop materializes its centroids on the driver anyway (lineage
-  // truncation), so they reach the executors as a broadcast
-  // [[CellTable]] and the argmax is ONE projection: a [[CellSims]]
-  // kernel (the Ann.dot fold, compiled) plus a scalar fold over
-  // round(sim, 9), ties to the lowest cell (the ascending fold keeps the
-  // first best — exactly max_by on (sim, -cell)), NaN ranking greatest
-  // like Spark's double ordering. No join, no argmax Exchange, and the
-  // plan carries only the broadcast handle, so the task binary stays
-  // the same size however large k·d grows. The fused Lloyd step below
-  // also needs no join back onto the corpus: each iteration is one
-  // corpus pass with one aggregation exchange.
+  // Centroid assignment, one path for every quantizer. Training leaves
+  // its centroids on the driver, so they reach the executors as a
+  // broadcast [[CellTable]] and the assignment is ONE projection: a
+  // [[CellKernel]] (the Ann.dot fold, or the squared-L2 fold for PQ,
+  // compiled) plus a scalar fold over round(score, 9). No join, no
+  // argmax Exchange, and the plan carries only the broadcast handle, so
+  // the task binary stays the same size however large k·d grows.
   // -------------------------------------------------------------------
 
-  /** The shared argmax fold over a [[CellSims]] result
-    * (`struct(cells, sims)` — the per-group similarities, computed in
-    * one compiled loop): highest round(sim, 9), ties to the FIRST
-    * (lowest-cell) entry; NaN sims adopt over non-NaN (Spark's double
-    * ordering ranks NaN greatest); all-null sims yield null like
-    * max_by over null orderings. `cs` MUST be an attribute column —
-    * its two getField references would otherwise re-run the kernel.
+  /** The one argmax/argmin fold over a [[CellKernel]] result
+    * (`struct(cells, scores)`, the per-group scores computed in one
+    * compiled loop): the best round(score, 9) by `metric`, highest for
+    * cosine and lowest for squared L2, ties to the FIRST (lowest-cell)
+    * entry; comparisons follow Spark's double ordering (NaN ranks
+    * greatest, so it wins an argmax and loses an argmin); null scores
+    * never win, and all-null scores yield null like max_by/min_by over
+    * null orderings. `cs` MUST be an attribute column: its two getField
+    * references would otherwise re-run the kernel.
     */
-  private def argmaxFold(cs: Column): Column = {
+  private def bestCell(cs: Column, metric: CellTable.Metric): Column = {
     // CleanupAliases strips names inside lambda bodies, so both structs
-    // carry Spark's positional names: col1 = sim, col2 = cell
+    // carry Spark's positional names: col1 = score, col2 = cell
     def s(acc: Column) = acc.getField("col1")
     def c(acc: Column) = acc.getField("col2")
     aggregate(
-      zip_with(cs.getField("cells"), cs.getField("sims"),
+      zip_with(cs.getField("cells"), cs.getField(metric.field),
         (cc, ss) => struct(round(ss, 9), cc)
           .cast("struct<col1:double,col2:int>")),
       struct(lit(null).cast("double"), lit(null).cast("int")),
       (acc, p) => {
-        val sim = p.getField("col1")
-        val adopt = (c(acc).isNull && sim.isNotNull) ||
-          sim > s(acc) ||
-          (isnan(sim) && !isnan(s(acc)))
-        when(adopt, p).otherwise(acc)
+        val v = p.getField("col1")
+        val wins = if (metric.highestWins) v > s(acc) else v < s(acc)
+        when((c(acc).isNull && v.isNotNull) || wins, p).otherwise(acc)
       },
       acc => c(acc))
   }
@@ -90,48 +88,21 @@ object Ivf {
   private def flat(cents: Seq[(Int, Seq[Double])]): Seq[(Int, Int, Seq[Double])] =
     cents.map { case (cell, c) => (0, cell, c) }
 
-  /** Nearest centroid per row: adds `cellCol`, the argmax over the
-    * centroid group `grp` of `table`, as an ATTRIBUTE (an expression in
-    * the same select as a downstream posexplode would land in the
-    * Project ABOVE the Generate and re-run the kernel once per exploded
-    * element). Rows with no argmax are dropped: a null vector, a null
-    * element, a group absent from the table, or an empty group.
+  /** Nearest centroid per row by `metric`: adds `cellCol`, the best cell
+    * over the centroid group `grp` of `table`, as an ATTRIBUTE (an
+    * expression in the same select as a downstream posexplode would
+    * land in the Project ABOVE the Generate and re-run the kernel once
+    * per exploded element). Rows with no best cell are dropped: a null
+    * vector, a null element, a group absent from the table, or an empty
+    * group.
     */
   private[llm] def labelCells(df: DataFrame, vecCol: String, grp: Column,
-                         table: Broadcast[CellTable],
-                         cellCol: String): DataFrame =
-    df.withColumn("_cs", CellSims.sims(col(vecCol), grp, table))
-      .withColumn(cellCol, argmaxFold(col("_cs")))
+                              table: Broadcast[CellTable], cellCol: String,
+                              metric: CellTable.Metric = CellTable.Cosine): DataFrame =
+    df.withColumn("_cs", CellKernel.column(col(vecCol), grp, table, metric))
+      .withColumn(cellCol, bestCell(col("_cs"), metric))
       .filter(col(cellCol).isNotNull)
       .drop("_cs")
-
-  /** Per-cell quantized mean vectors (`cell`, `centroid`) of a labelled
-    * frame: exact integer sums of floor(v·10⁶), one double division —
-    * identical for any partitioning / aggregation order.
-    */
-  private[llm] def cellMeans(labelled: DataFrame, keys: Seq[String],
-                        vecCol: String): DataFrame =
-    labelled
-      .select(keys.map(col) :+ posexplode(col(vecCol)).as(Seq("i", "v")): _*)
-      .groupBy((keys :+ "i").map(col): _*)
-      .agg((sum(floor(col("v").cast("double") * lit(Quantum)).cast("long"))
-        .cast("double") / (lit(Quantum) * count(lit(1)))).as("m"))
-      .groupBy(keys.map(col): _*)
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
-        x => x.getField("m")).as("centroid"))
-
-  /** One fused Lloyd sweep: assign (projection) + quantized-mean
-    * recompute in ONE corpus pass with a single aggregation exchange —
-    * returns the new centroid rows densely renumbered in cell order.
-    */
-  private def lloydStep(df: DataFrame, vecCol: String,
-                        cents: Seq[(Int, Seq[Double])]): IndexedSeq[(Int, Seq[Double])] =
-    CellTable.scoped(df.sparkSession, flat(cents)) { table =>
-      cellMeans(labelCells(df, vecCol, lit(0), table, "cell"), Seq("cell"), vecCol)
-        .orderBy("cell").select("centroid")
-        .collect().toIndexedSeq.zipWithIndex
-        .map { case (r, i) => (i, r.getSeq[Double](0)) }
-    }
 
   /** The first four hex digits of md5(id) as an integer: the portable
     * hash-stride key behind seeding and sampling.
@@ -139,57 +110,28 @@ object Ivf {
   private def hex4(id: Column): Column =
     conv(substring(md5(id.cast("string")), 1, 4), 16, 10).cast("long")
 
-  /** Train: deterministic seeding (an md5-strided sample — no global
-    * window/sort over the corpus, and portable to any engine with md5)
-    * then `iters` Lloyd iterations ([[fitCentroidRows]]), then one
-    * assignment pass over the corpus, cached as the index's
-    * `assignments`.
+  /** Train on the driver over the md5-stride sample ([[trainFlat]]:
+    * seeds, then `iters` Lloyd sweeps), then one assignment pass over
+    * the corpus, cached as the index's `assignments`. Below
+    * 2·65,536 rows the sample is the whole corpus; past that it holds
+    * at most 131,071 vectors, as in [[fitTwoLevel]]. A fit costs a
+    * count and the sample collect, whatever `iters` is.
     */
   def fit(df: DataFrame, idCol: String, vecCol: String,
           k: Int = 16, iters: Int = 2): Index = {
     val spark = df.sparkSession
-    val rows = fitCentroidRows(df, idCol, vecCol, k, iters)
-    val asg = labelCells(df, vecCol, lit(0),
-        CellTable.broadcast(spark, flat(rows)), "cell")
+    val sample = collectSample(df, idCol, vecCol,
+      sampleStride(df.count(), SampleCap))(hostVec)
+    val rows = trainFlat(sample, k, iters, s"fit: a seed $vecCol")
+    val asg = labelCells(df, vecCol, lit(0), CellTable.broadcast(spark, rows), "cell")
       .select(col(idCol), col("cell"))
-    Index(toCentroidDf(spark, rows), asg.cache())
+    Index(toCentroidDf(spark, rows.map { case (_, cell, c) => (cell, c) }), asg.cache())
   }
 
   private def toCentroidDf(spark: SparkSession,
                            rows: Seq[(Int, Seq[Double])]): DataFrame = {
     import spark.implicits._
     rows.toDF("cell", "centroid")
-  }
-
-  /** The Lloyd training pass alone — seed + `iters` iterations —
-    * returning the driver-side centroid rows without assigning (or
-    * caching) the corpus. [[fit]] layers the final assignment on top;
-    * [[fitTwoLevel]] runs the same recipe on the driver over its
-    * collected sample. Centroids are k·d doubles, so
-    * each iteration ([[lloydStep]]) materializes them to the driver:
-    * this truncates the lineage (otherwise iteration i's plan
-    * re-executes every previous one) and keeps the per-iteration cost
-    * at exactly one corpus pass.
-    */
-  private def fitCentroidRows(df: DataFrame, idCol: String, vecCol: String,
-                              k: Int, iters: Int): IndexedSeq[(Int, Seq[Double])] = {
-    val n = df.count()
-    // expect ~4k survivors from the md5 stride, keep the k smallest ids
-    // (TakeOrderedAndProject — no global sort materialization)
-    val stride = math.max(1L, n / math.max(1, 4 * k))
-    var cents: IndexedSeq[(Int, Seq[Double])] = df
-      .filter(hex4(col(idCol)) % stride === 0)
-      .orderBy(col(idCol)).limit(k)
-      .select(transform(col(vecCol), x => x.cast("double")).as("centroid"))
-      .collect().toIndexedSeq.zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Double](0)) }
-
-    var it = 0
-    while (it < iters) {
-      cents = lloydStep(df, vecCol, cents)
-      it += 1
-    }
-    cents
   }
 
   // -------------------------------------------------------------------
@@ -226,25 +168,20 @@ object Ivf {
 
   /** Train a two-level index sized for the corpus: leaf-cell count
     * k = max(4, n/targetCellSize) split as k1 = ⌈√k⌉ top cells ×
-    * k2 = ⌈k/k1⌉ sub-cells. Level 1 is the [[fitCentroidRows]] recipe
-    * on a hash-stride sample; level 2 runs the same Lloyd rules per
-    * level-1 cell over the sample members (seeds: the k2 lowest-id
-    * members; assign: argmax over the OWN cell's sub-centroids,
-    * round(sim,9) + lowest-sub tiebreak; means: quantized integer sums;
-    * dead subs renumbered per cell). A level-1 cell that ends up with no
-    * sample members keeps its level-1 centroid as its sole leaf, so
-    * every corpus vector always finds a leaf.
+    * k2 = ⌈k/k1⌉ sub-cells. Level 1 is the flat [[fit]]'s training
+    * ([[trainFlat]]); level 2 runs the same Lloyd rules per level-1
+    * cell over the sample members (seeds: the k2 lowest-id members;
+    * assign: argmax over the OWN cell's sub-centroids, round(sim,9) +
+    * lowest-sub tiebreak; means: quantized integer sums; dead subs
+    * renumbered per cell). A level-1 cell that ends up with no sample
+    * members keeps its level-1 centroid as its sole leaf, so every
+    * corpus vector always finds a leaf.
     *
-    * All of the training runs on the driver: the sample is collected
-    * once ([[collectSample]]) and every sweep is a loop over primitive
-    * arrays ([[hostLloydStep]]), so a fit costs a count, one sample
-    * collect and the final assignment, whatever `iters` is. The sample
-    * stride ss = max(1, n/sampleCap) rounds down, so the sample holds
-    * about n/ss ≤ 2·sampleCap − 1 vectors (md5 spreads the ids evenly),
-    * and the driver holds all of it while training: at the default
-    * 131,071 vectors, about 64 MB of doubles at d = 64. A stride past
-    * the hex4 range (ss > 65,535) is refused ([[sampleStride]]). The
-    * corpus is touched by the final assignment alone: two chained
+    * All of the training runs on the driver, over one sample collect
+    * ([[collectSample]] at stride max(1, n/sampleCap); a stride past
+    * the hex4 range is refused, [[sampleStride]]), so a fit costs a
+    * count, the collect and the final assignment, whatever `iters` is.
+    * The corpus is touched by the final assignment alone: two chained
     * projections (level-1 cell, then leaf within it), cached lazily.
     */
   def fitTwoLevel(df: DataFrame, idCol: String, vecCol: String,
@@ -258,20 +195,8 @@ object Ivf {
     val k = math.max(4L, n / targetCellSize)
     val k1 = math.ceil(math.sqrt(k.toDouble)).toInt
     val k2 = ((k + k1 - 1) / k1).toInt
-    val sample = collectSample(df, idCol, vecCol, sampleStride(n, sampleCap))
-
-    // level 1, all in group 0: seeds are the k1 lowest-id rows on the
-    // sample's own 4-per-cell stride, as in fitCentroidRows
-    val stride = math.max(1L, sample.length / math.max(1, 4 * k1))
-    var l1Rows: IndexedSeq[(Int, Int, Seq[Double])] = sample.iterator
-      .filter(_._1 % stride == 0).take(k1).zipWithIndex
-      .map { case ((_, x), i) =>
-        require(x != null, s"fitTwoLevel: a seed $vecCol is null or holds a null")
-        (0, i, x.toSeq)
-      }.toIndexedSeq
-    val asL1 = sample.map { case (_, x) => (0, x) }
-    var it = 0
-    while (it < iters) { l1Rows = hostLloydStep(l1Rows, asL1); it += 1 }
+    val sample = collectSample(df, idCol, vecCol, sampleStride(n, sampleCap))(hostVec)
+    val l1Rows = trainFlat(sample, k1, iters, s"fitTwoLevel: a seed $vecCol")
     val l1Table = CellTable(l1Rows)
 
     // level 2: each sample member, in id order, grouped by its level-1
@@ -279,13 +204,11 @@ object Ivf {
     val members = sample.flatMap { case (_, x) =>
       nearestCell(l1Table, 0, x).map(l1 => (l1, x))
     }
-    var subRows: IndexedSeq[(Int, Int, Seq[Double])] =
+    val subRows = lloyd(
       members.groupBy(_._1).toIndexedSeq.sortBy(_._1).flatMap {
         case (l1, ms) => ms.take(k2).zipWithIndex
           .map { case ((_, x), sub) => (l1, sub, x.toSeq) }
-      }
-    it = 0
-    while (it < iters) { subRows = hostLloydStep(subRows, members); it += 1 }
+      }, members, iters, CellTable.Cosine)
 
     // fallback: a level-1 cell with no surviving subs keeps its own
     // centroid as the single leaf — total coverage for the full assign
@@ -311,14 +234,17 @@ object Ivf {
   }
 
   // -------------------------------------------------------------------
-  // Driver-side training over a collected sample. Each piece mirrors a
-  // distributed one bit for bit, so a sample-trained quantizer equals
-  // the one the same Lloyd recipe would fit through Spark:
+  // Driver-side training over a collected sample: the one Lloyd
+  // implementation behind the flat fit, both levels of the two-level
+  // fit and the PQ codebooks. Each piece keeps the rules the Spark
+  // training these replaced ran, bit for bit (the test tree keeps that
+  // training as LloydReference):
   //  - hostVec is the vector as labelCells reads it (null vector or null
-  //    element: no argmax);
-  //  - nearestCell is argmaxFold over the same CellTable.Group.sims loop
-  //    the CellSims kernel runs;
-  //  - hostMeans is cellMeans: Σ floor(v·10⁶) as Long, one division.
+  //    element: no best cell);
+  //  - nearestCell is bestCell over the same CellTable.Group.scores loop
+  //    the CellKernel runs;
+  //  - hostMeans is the per-cell quantized mean: Σ floor(v·10⁶) as Long,
+  //    one division.
   // -------------------------------------------------------------------
 
   /** A collected `array<double>` as the driver-side training holds it:
@@ -336,24 +262,49 @@ object Ivf {
   private[llm] def sampleStride(n: Long, sampleCap: Int): Long = {
     val ss = math.max(1L, n / sampleCap)
     require(ss <= 65535L,
-      s"fitTwoLevel: $n rows at sampleCap $sampleCap give sample stride " +
-        s"$ss > 65535, past the hex4 range; raise sampleCap to >= ${n / 65536 + 1}")
+      s"$n rows at sampleCap $sampleCap give sample stride $ss > 65535, " +
+        s"past the hex4 range; a sampleCap >= ${n / 65536 + 1} keeps it inside")
     ss
   }
 
   /** The md5-stride sample of `df` — rows whose hex4 (the first four hex
     * digits of md5(id) as an integer) is a multiple of `ss` — collected
-    * in id order as (hex4, vector). One exchange into a single sorted
-    * partition: the same ascending id order as orderBy, without its
-    * range-bounds sampling job.
+    * in id order as (hex4, `vec` of the vector cast to array<double>).
+    * One exchange into a single sorted partition: the same ascending id
+    * order as orderBy, without its range-bounds sampling job. With
+    * ss = max(1, n/cap) it holds about n/ss ≤ 2·cap − 1 vectors (md5
+    * spreads the ids evenly), all of them on the driver while training:
+    * at the default cap, 131,071 vectors, about 64 MB of doubles at
+    * d = 64.
     */
-  private def collectSample(df: DataFrame, idCol: String, vecCol: String,
-                            ss: Long): IndexedSeq[(Long, Array[Double])] =
+  private[llm] def collectSample[T](df: DataFrame, idCol: String, vecCol: String, ss: Long)
+                                   (vec: scala.collection.Seq[java.lang.Double] => T)
+      : IndexedSeq[(Long, T)] =
     df.filter(hex4(col(idCol)) % ss === 0)
       .repartition(1).sortWithinPartitions(col(idCol))
       .select(hex4(col(idCol)), col(vecCol).cast("array<double>"))
       .collect().toIndexedSeq
-      .map(r => (r.getLong(0), hostVec(r.getSeq[java.lang.Double](1))))
+      .map(r => (r.getLong(0), vec(r.getSeq[java.lang.Double](1))))
+
+  /** The k seeds of a sample in id order: the lowest-id members whose
+    * hex4 is a multiple of the sample's own stride max(1, |sample|/4k),
+    * about four candidates per cell spread by md5.
+    */
+  private[llm] def seeds[T](sample: IndexedSeq[(Long, T)], k: Int): IndexedSeq[T] = {
+    val stride = math.max(1L, sample.length / math.max(1, 4 * k))
+    sample.iterator.filter(_._1 % stride == 0).take(k).map(_._2).toIndexedSeq
+  }
+
+  /** A flat cosine quantizer trained on a sample, as `(0, cell,
+    * centroid)` rows: [[seeds]], then `iters` [[lloyd]] sweeps. A seed
+    * that is null or holds a null is refused (`seed` names it).
+    */
+  private def trainFlat(sample: IndexedSeq[(Long, Array[Double])], k: Int,
+                        iters: Int, seed: String): IndexedSeq[(Int, Int, Seq[Double])] =
+    lloyd(seeds(sample, k).zipWithIndex.map { case (x, i) =>
+        require(x != null, s"$seed is null or holds a null")
+        (0, i, x.toSeq)
+      }, sample.map { case (_, x) => (0, x) }, iters, CellTable.Cosine)
 
   /** Spark's round(d, 9) for a double: HALF_UP on the decimal form of
     * `d`; NaN and infinities pass through.
@@ -363,25 +314,27 @@ object Ivf {
     else java.math.BigDecimal.valueOf(d)
       .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** [[argmaxFold]] on the driver: over the group's sims in cell order,
-    * highest round(sim, 9), ties to the lowest cell, NaN greatest, null
-    * sims skipped. None where [[labelCells]] drops the row: a null
-    * vector, a group absent from the table, or no non-null sim.
+  /** [[bestCell]] on the driver: over the group's scores in cell order,
+    * the best round(score, 9) by `metric` under Spark's double ordering
+    * (NaN greatest), ties to the lowest cell, null scores skipped. None
+    * where [[labelCells]] drops the row: a null vector, a group absent
+    * from the table, or no non-null score.
     */
-  private[llm] def nearestCell(table: CellTable, grp: Int,
-                               x: Array[Double]): Option[Int] =
+  private[llm] def nearestCell(table: CellTable, grp: Int, x: Array[Double],
+                               metric: CellTable.Metric = CellTable.Cosine): Option[Int] =
     if (x == null) None
     else table.groups.get(grp).flatMap { g =>
-      val sims = g.sims(x)
+      val scores = g.scores(x, metric)
       var best = -1
-      var bestSim = 0.0
+      var bestScore = 0.0
       var j = 0
-      while (j < sims.length) {
-        if (sims(j) != null) {
-          val s = round9(sims(j).asInstanceOf[Double])
-          if (best < 0 || (if (s.isNaN) !bestSim.isNaN else s > bestSim)) {
+      while (j < scores.length) {
+        if (scores(j) != null) {
+          val s = round9(scores(j).asInstanceOf[Double])
+          val cmp = SQLOrderingUtil.compareDoubles(s, bestScore)
+          if (best < 0 || (if (metric.highestWins) cmp > 0 else cmp < 0)) {
             best = j
-            bestSim = s
+            bestScore = s
           }
         }
         j += 1
@@ -389,10 +342,10 @@ object Ivf {
       if (best < 0) None else Some(g.cells.getInt(best))
     }
 
-  /** [[cellMeans]] on the driver: per key, per position, Σ floor(v·10⁶)
+  /** The per-cell quantized means: per key, per position, Σ floor(v·10⁶)
     * as Long over the members long enough to have that position,
-    * divided once by 10⁶·count. A key whose members are all empty
-    * vectors yields no row, as posexplode yields none.
+    * divided once by 10⁶·count, so the result is independent of member
+    * order. A key whose members are all empty vectors yields no mean.
     */
   private[llm] def hostMeans[K](labelled: Iterable[(K, Array[Double])]): Map[K, Seq[Double]] =
     labelled.groupBy(_._1).flatMap { case (key, ms) =>
@@ -411,24 +364,32 @@ object Ivf {
       else Some(key -> Array.tabulate(len)(i => sums(i).toDouble / (Quantum * cnts(i))).toSeq)
     }
 
-  /** One Lloyd sweep on the driver over `(group, cell, centroid)` rows:
-    * each `(group, vector)` member takes its group's [[nearestCell]],
-    * each cell with members becomes their [[hostMeans]], and surviving
-    * cells are renumbered densely per group in cell order. With one
-    * group this is [[lloydStep]]; with the level-1 cells as groups it is
-    * the per-cell level-2 sweep.
+  /** The one Lloyd sweep, over `(group, cell, centroid)` rows: each
+    * `(group, vector)` member takes its group's [[nearestCell]] by
+    * `metric`, each cell with members becomes their [[hostMeans]], and
+    * surviving cells are renumbered densely per group in cell order.
+    * One group is a flat quantizer; the level-1 cells as groups are the
+    * two-level fit's level 2; the subspaces as groups are the PQ
+    * codebooks.
     */
   private def hostLloydStep(cents: IndexedSeq[(Int, Int, Seq[Double])],
-                            members: IndexedSeq[(Int, Array[Double])]): IndexedSeq[(Int, Int, Seq[Double])] = {
+                            members: IndexedSeq[(Int, Array[Double])],
+                            metric: CellTable.Metric): IndexedSeq[(Int, Int, Seq[Double])] = {
     val table = CellTable(cents)
     val means = hostMeans(members.flatMap { case (g, x) =>
-      nearestCell(table, g, x).map(cell => ((g, cell), x))
+      nearestCell(table, g, x, metric).map(cell => ((g, cell), x))
     })
     means.toIndexedSeq.groupBy(_._1._1).toIndexedSeq.sortBy(_._1).flatMap {
       case (g, rows) => rows.sortBy(_._1._2).zipWithIndex
         .map { case ((_, m), sub) => (g, sub, m) }
     }
   }
+
+  /** `iters` [[hostLloydStep]] sweeps from the seed rows `cents`. */
+  private[llm] def lloyd(cents: IndexedSeq[(Int, Int, Seq[Double])],
+                         members: IndexedSeq[(Int, Array[Double])], iters: Int,
+                         metric: CellTable.Metric): IndexedSeq[(Int, Int, Seq[Double])] =
+    (0 until iters).foldLeft(cents)((c, _) => hostLloydStep(c, members, metric))
 
   /** [[knnGraph]] over a two-level index: probe nprobe1 level-1 cells
     * (round(sim,9) + lowest-l1 tiebreak), rank only THEIR leaves for
@@ -452,52 +413,22 @@ object Ivf {
       df, idCol, labelCol, k)
 
   /** Corpus-as-queries candidate generator over a two-level index:
-    * level-1 probe ranks k1 centroids, leaf probe ranks only the
-    * probed cells' leaves, then the same shuffle cell equi-join as
-    * [[probeCandidates]] (never a probe-side broadcast of the corpus).
-    * Leaf probe cells are distinct and members hold one leaf, so each
-    * (q, c) pair still arises exactly once.
+    * the [[probeTwoLevel]] probe, then the same shuffle cell equi-join
+    * as [[probeCandidates]] (never a probe-side broadcast of the
+    * corpus). Leaf probe cells are distinct and members hold one leaf,
+    * so each (q, c) pair still arises exactly once.
     */
   private def probeCandidates2(df: DataFrame, index: Index2, idCol: String,
                                vecCol: String, nprobe: Int,
-                               nprobe1: Int): DataFrame = {
-    val l1b = broadcast(index.l1Centroids
-      .withColumn("_cn", Ann.l2norm(col("centroid"))))
-    val wq1 = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("_sim").desc, col("l1").asc)
-    val p1 = df
-      .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-        Ann.l2norm(col(vecCol)).as("q_nrm"))
-      .join(l1b)
-      .withColumn("_sim", round(
-        Ann.dot(col("q_vec"), col("centroid")) / (col("q_nrm") * col("_cn")), 9))
-      .withColumn("_rn", row_number().over(wq1))
-      .filter(col("_rn") <= nprobe1)
-      .select(col("q_id"), col("q_vec"), col("q_nrm"), col("l1"))
-    val leafB = broadcast(index.centroids
-      .withColumn("_cn", Ann.l2norm(col("centroid"))))
-    val wq2 = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("_sim").desc, col("cell").asc)
-    val probed = p1.join(leafB, "l1")
-      .withColumn("_sim", round(
-        Ann.dot(col("q_vec"), col("centroid")) / (col("q_nrm") * col("_cn")), 9))
-      .withColumn("_rn", row_number().over(wq2))
-      .filter(col("_rn") <= nprobe)
-      .select(col("q_id"), col("q_vec"), col("q_nrm"), col("cell"))
-    val corpus = df.join(index.assignments, idCol)
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
-        Ann.l2norm(col(vecCol)).as("c_nrm"), col("cell"))
-    corpus.join(probed, Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cosine", round(
-        Ann.dot(col("q_vec"), col("c_vec")) / (col("q_nrm") * col("c_nrm")), 4))
-      .select("q_id", "c_id", "cosine")
-  }
+                               nprobe1: Int): DataFrame =
+    cellCandidates(corpusSide(df, index.assignments, idCol, vecCol),
+      probeTwoLevel(df, index.l1Centroids, index.centroids, idCol, vecCol,
+        nprobe, nprobe1))
 
   /** Public face of the nearest-centroid assignment — (idCol, cell),
     * one row per vector, the same argmax rule as training. The
     * centroids frame is collected to the driver and broadcast as the
-    * [[CellSims]] table; the assignment is one projection over `df`.
+    * [[CellKernel]] table; the assignment is one projection over `df`.
     */
   def assignCells(df: DataFrame, idCol: String, vecCol: String,
                   centroids: DataFrame): DataFrame =
@@ -525,12 +456,9 @@ object Ivf {
     * are computed once per vector side, never per candidate pair.
     */
   def topK(df: DataFrame, queries: DataFrame, index: Index,
-           idCol: String, vecCol: String, k: Int, nprobe: Int = 4): DataFrame = {
-    val corpus = df.join(index.assignments, idCol)
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
-        Ann.l2norm(col(vecCol)).as("c_nrm"), col("cell"))
-    topKAgainst(corpus, queries, index.centroids, idCol, vecCol, k, nprobe)
-  }
+           idCol: String, vecCol: String, k: Int, nprobe: Int = 4): DataFrame =
+    topKAgainst(corpusSide(df, index.assignments, idCol, vecCol), queries,
+      index.centroids, idCol, vecCol, k, nprobe)
 
   /** The ONE implementation of the probe + exact re-rank rules
     * (round(sim,9) + cell tiebreak; round(cos,4) + id tiebreak;
@@ -543,37 +471,19 @@ object Ivf {
   private[graft] def topKAgainst(corpus: DataFrame, queries: DataFrame,
                                  centroids: DataFrame, idCol: String,
                                  vecCol: String, k: Int,
-                                 nprobe: Int): DataFrame = {
-    val cents = broadcast(centroids
-      .withColumn("_cn", Ann.l2norm(col("centroid"))))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("_sim").desc, col("cell").asc)
-    val probed = queries
-      .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-        Ann.l2norm(col(vecCol)).as("q_nrm"))
-      .join(cents)
-      .withColumn("_sim", round(
-        Ann.dot(col("q_vec"), col("centroid")) / (col("q_nrm") * col("_cn")), 9))
-      .withColumn("_rn", row_number().over(wq))
-      .filter(col("_rn") <= nprobe)
-      .select(col("q_id"), col("q_vec"), col("q_nrm"), col("cell"))
-    rerankProbed(corpus, probed, k)
-  }
+                                 nprobe: Int): DataFrame =
+    rerankProbed(corpus, probeFlat(queries, centroids, idCol, vecCol, nprobe), k)
 
-  /** [[topK]] over a two-level index: the [[probeCandidates2]]
-    * two-stage probe (nprobe1 level-1 cells, nprobe leaves ranked over
-    * only those cells' leaves — O(√k) per query instead of k) feeding
-    * the SAME candidate dedup + exact re-rank tail as the flat search.
+  /** [[topK]] over a two-level index: the [[probeTwoLevel]] two-stage
+    * probe (nprobe1 level-1 cells, nprobe leaves ranked over only those
+    * cells' leaves — O(√k) per query instead of k) feeding the SAME
+    * candidate dedup + exact re-rank tail as the flat search.
     */
   def topK(df: DataFrame, queries: DataFrame, index: Index2,
            idCol: String, vecCol: String, k: Int, nprobe: Int,
-           nprobe1: Int): DataFrame = {
-    val corpus = df.join(index.assignments, idCol)
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
-        Ann.l2norm(col(vecCol)).as("c_nrm"), col("cell"))
-    topKAgainst2(corpus, queries, index.l1Centroids, index.centroids,
-      idCol, vecCol, k, nprobe, nprobe1)
-  }
+           nprobe1: Int): DataFrame =
+    topKAgainst2(corpusSide(df, index.assignments, idCol, vecCol), queries,
+      index.l1Centroids, index.centroids, idCol, vecCol, k, nprobe, nprobe1)
 
   /** The two-level analogue of [[topKAgainst]] against an arbitrary
     * prepared corpus frame `(c_id, c_vec, c_nrm, cell)` — shared by
@@ -584,32 +494,60 @@ object Ivf {
                                   l1Centroids: DataFrame,
                                   leafCentroids: DataFrame, idCol: String,
                                   vecCol: String, k: Int, nprobe: Int,
-                                  nprobe1: Int): DataFrame = {
-    val l1b = broadcast(l1Centroids
+                                  nprobe1: Int): DataFrame =
+    rerankProbed(corpus, probeTwoLevel(queries, l1Centroids, leafCentroids,
+      idCol, vecCol, nprobe, nprobe1), k)
+
+  /** The ONE per-query probe behind every search and candidate face:
+    * each query `(q_id, q_vec, q_nrm)` meets the broadcast centroids
+    * (only those agreeing on the `on` columns, when given) and keeps its
+    * `n` nearest by round(cosine, 9) desc, then `key` asc — the training
+    * argmax rule. Returns `(q_id, q_vec, q_nrm, key)`.
+    */
+  private def probe(queries: DataFrame, centroids: DataFrame, key: String,
+                    n: Int, on: Seq[String] = Nil): DataFrame = {
+    val cents = broadcast(centroids
       .withColumn("_cn", Ann.l2norm(col("centroid"))))
-    val wq1 = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("_sim").desc, col("l1").asc)
-    val p1 = queries
-      .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-        Ann.l2norm(col(vecCol)).as("q_nrm"))
-      .join(l1b)
+    val wq = org.apache.spark.sql.expressions.Window
+      .partitionBy("q_id").orderBy(col("_sim").desc, col(key).asc)
+    (if (on.isEmpty) queries.join(cents) else queries.join(cents, on))
       .withColumn("_sim", round(
         Ann.dot(col("q_vec"), col("centroid")) / (col("q_nrm") * col("_cn")), 9))
-      .withColumn("_rn", row_number().over(wq1))
-      .filter(col("_rn") <= nprobe1)
-      .select(col("q_id"), col("q_vec"), col("q_nrm"), col("l1"))
-    val leafB = broadcast(leafCentroids
-      .withColumn("_cn", Ann.l2norm(col("centroid"))))
-    val wq2 = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("_sim").desc, col("cell").asc)
-    val probed = p1.join(leafB, "l1")
-      .withColumn("_sim", round(
-        Ann.dot(col("q_vec"), col("centroid")) / (col("q_nrm") * col("_cn")), 9))
-      .withColumn("_rn", row_number().over(wq2))
-      .filter(col("_rn") <= nprobe)
-      .select(col("q_id"), col("q_vec"), col("q_nrm"), col("cell"))
-    rerankProbed(corpus, probed, k)
+      .withColumn("_rn", row_number().over(wq))
+      .filter(col("_rn") <= n)
+      .select(col("q_id"), col("q_vec"), col("q_nrm"), col(key))
   }
+
+  /** Queries as [[probe]] reads them: `(q_id, q_vec, q_nrm)`. */
+  private def querySide(queries: DataFrame, idCol: String,
+                        vecCol: String): DataFrame =
+    queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
+      Ann.l2norm(col(vecCol)).as("q_nrm"))
+
+  /** A corpus joined to its cell assignments, as the re-rank reads it:
+    * `(c_id, c_vec, c_nrm, cell)`.
+    */
+  private def corpusSide(df: DataFrame, assignments: DataFrame, idCol: String,
+                         vecCol: String): DataFrame =
+    df.join(assignments, idCol)
+      .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
+        Ann.l2norm(col(vecCol)).as("c_nrm"), col("cell"))
+
+  /** The flat probe: each query's `nprobe` nearest cells. */
+  private[llm] def probeFlat(queries: DataFrame, centroids: DataFrame,
+                             idCol: String, vecCol: String,
+                             nprobe: Int): DataFrame =
+    probe(querySide(queries, idCol, vecCol), centroids, "cell", nprobe)
+
+  /** The two-level probe: each query's `nprobe1` nearest level-1 cells,
+    * then its `nprobe` nearest leaves among only those cells' leaves.
+    */
+  private def probeTwoLevel(queries: DataFrame, l1Centroids: DataFrame,
+                            leafCentroids: DataFrame, idCol: String,
+                            vecCol: String, nprobe: Int,
+                            nprobe1: Int): DataFrame =
+    probe(probe(querySide(queries, idCol, vecCol), l1Centroids, "l1", nprobe1),
+      leafCentroids, "cell", nprobe, Seq("l1"))
 
   /** The ONE candidate-join + dedup + exact-re-rank tail behind every
     * per-query search face (flat, two-level, streaming store), against
@@ -755,27 +693,18 @@ object Ivf {
     * cells) with the exact re-rank cosine.
     */
   private def probeCandidates(df: DataFrame, index: Index, idCol: String,
-                              vecCol: String, nprobe: Int): DataFrame = {
-    val cents = broadcast(index.centroids
-      .withColumn("_cn", Ann.l2norm(col("centroid"))))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("_sim").desc, col("cell").asc)
-    val probed = df
-      .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-        Ann.l2norm(col(vecCol)).as("q_nrm"))
-      .join(cents)
-      .withColumn("_sim", round(
-        Ann.dot(col("q_vec"), col("centroid")) / (col("q_nrm") * col("_cn")), 9))
-      .withColumn("_rn", row_number().over(wq))
-      .filter(col("_rn") <= nprobe)
-      .select(col("q_id"), col("q_vec"), col("q_nrm"), col("cell"))
-    val corpus = df.join(index.assignments, idCol)
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
-        Ann.l2norm(col(vecCol)).as("c_nrm"), col("cell"))
+                              vecCol: String, nprobe: Int): DataFrame =
+    cellCandidates(corpusSide(df, index.assignments, idCol, vecCol),
+      probeFlat(df, index.centroids, idCol, vecCol, nprobe))
+
+  /** The candidate tail of the corpus-as-queries faces: probed queries
+    * meet their cells' members through a plain shuffle equi-join, self
+    * pairs dropped, with the exact round(cos, 4) re-rank cosine.
+    */
+  private def cellCandidates(corpus: DataFrame, probed: DataFrame): DataFrame =
     corpus.join(probed, Seq("cell"))
       .filter(col("q_id") =!= col("c_id"))
       .withColumn("cosine", round(
         Ann.dot(col("q_vec"), col("c_vec")) / (col("q_nrm") * col("c_nrm")), 4))
       .select("q_id", "c_id", "cosine")
-  }
 }

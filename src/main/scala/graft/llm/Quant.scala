@@ -1,7 +1,6 @@
 package graft.llm
 
-import graft.functions.{CellDists, CellTable}
-import org.apache.spark.broadcast.Broadcast
+import graft.functions.CellTable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -61,18 +60,23 @@ object Quant {
   // ---------------------------------------------------------------------
   // Product quantization (PQ) — the billion-scale ANN compression: the
   // vector splits into `m` contiguous subspaces, each subspace gets its
-  // own k-centroid codebook (per-subspace Lloyd, the Ivf recipe), and a
-  // vector stores only its m one-byte-ish cell ids — d·4 bytes become m.
-  // Query scoring is ADC (asymmetric distance computation): the query
-  // precomputes its distance to every codebook centroid (m·k doubles,
-  // broadcast), and a candidate's distance is m table lookups summed —
-  // no float vector is ever touched at scan time.
+  // own k-centroid codebook, and a vector stores only its m
+  // one-byte-ish cell ids — d·4 bytes become m. Query scoring is ADC
+  // (asymmetric distance computation): the query precomputes its
+  // distance to every codebook centroid (m·k doubles, broadcast), and a
+  // candidate's distance is m table lookups summed — no float vector is
+  // ever touched at scan time.
   //
-  // Determinism, the Ivf contract: md5-stride seeding with the k
-  // smallest surviving ids, quantized-integer centroid means,
-  // round(dist, 9) + cell tiebreak on every argmin, dense per-subspace
-  // cell renumbering — the whole fit+encode+search replays as unrolled
-  // SQL (q_ann_pq_codes / q_ann_pq_topk).
+  // The codebooks train like the Ivf quantizers, by the same driver-side
+  // Lloyd (Ivf.lloyd) over the same md5-stride sample, with the
+  // subspaces as groups and squared L2 as the metric; encoding is the
+  // Ivf one-projection assignment over a broadcast CellTable (a
+  // `cell_dists` kernel plus the shared fold). Determinism, the Ivf
+  // contract: md5-stride seeding with the k smallest surviving ids,
+  // quantized-integer centroid means, round(dist, 9) + lowest-cell
+  // tiebreak on every argmin, dense per-subspace cell renumbering — the
+  // whole fit+encode+search replays as unrolled SQL (q_ann_pq_codes /
+  // q_ann_pq_topk).
   // ---------------------------------------------------------------------
 
   /** One row per (vector, subspace) with the sliced subvector. */
@@ -90,53 +94,15 @@ object Quant {
         (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
       lit(0.0d), (acc, x) => acc + x), 9)
 
-  // -------------------------------------------------------------------
-  // Codebook assignment, the Ivf recipe: codebooks are m·k rows and
-  // driver-side by contract, so they reach the executors as a broadcast
-  // CellTable (group = subspace) and the argmin is ONE projection — a
-  // CellDists kernel (compiled Σ(x−y)² loop, bit-identical to subDist's
-  // zip_with fold) plus a cheap scalar fold replicating min_by on
-  // (round(d,9), cell): lowest distance, ties to the lowest cell (the
-  // ascending fold keeps the first best), NaN never beating a real
-  // distance, all-null → null. No join, no groupBy(id, sub) Exchange
-  // per training pass, and only the broadcast handle in the plan.
-  // -------------------------------------------------------------------
-
-  private def argminFold(cd: Column): Column = {
-    // CleanupAliases strips names inside lambdas — positional names
-    def dBest(acc: Column) = acc.getField("col1")
-    def c(acc: Column) = acc.getField("col2")
-    aggregate(
-      zip_with(cd.getField("cells"), cd.getField("dists"),
-        (cc, dd) => struct(round(dd, 9), cc)
-          .cast("struct<col1:double,col2:int>")),
-      struct(lit(null).cast("double"), lit(null).cast("int")),
-      (acc, p) => {
-        val d = p.getField("col1")
-        val adopt = (c(acc).isNull && d.isNotNull) ||
-          d < dBest(acc) ||
-          (isnan(dBest(acc)) && !isnan(d))
-        when(adopt, p).otherwise(acc)
-      },
-      acc => c(acc))
-  }
-
-  /** Nearest codebook cell per (vector, subspace) row of a [[subframe]]:
-    * adds `cell` as an ATTRIBUTE before any downstream explode (the
-    * Ivf.labelCells Generate-projection rule). A subvector with a null
-    * element has no argmin and gets no row, so its vector gets no code
-    * for that subspace.
-    */
-  private def nearestCodes(sf: DataFrame, table: Broadcast[CellTable]): DataFrame =
-    sf.withColumn("_cd", CellDists.dists(col("subvec"), col("sub"), table))
-      .withColumn("cell", argminFold(col("_cd")))
-      .filter(col("cell").isNotNull)
-      .drop("_cd")
-
   /** Train the m per-subspace codebooks: (sub, cell, centroid) — m·k
-    * rows, always broadcastable. Same seeding and per-iteration
-    * driver materialization as Ivf.fit (lineage truncation; one corpus
-    * pass per iteration).
+    * rows, always broadcastable. The training runs on the driver over
+    * the md5-stride sample, exactly as [[Ivf.fit]] does: seeds are the
+    * k lowest-id sample members on the sample's own stride, each split
+    * into its m subvectors, and every sweep is [[Ivf.lloyd]] with the
+    * subspaces as groups. A member's subvector that holds a null drops
+    * only that subspace's member; a seed that is null or holds a null
+    * is refused. A fit costs a dimension probe, a count and one sample
+    * collect, whatever `iters` is.
     */
   def pqFit(df: DataFrame, idCol: String, vecCol: String,
             m: Int = 4, k: Int = 16, iters: Int = 2): DataFrame = {
@@ -147,47 +113,30 @@ object Quant {
       .headOption.map(_.getInt(0)).getOrElse(0)
     require(dim > 0 && dim % m == 0, s"dim $dim must divide into $m subspaces")
     val w = dim / m
-    val n = df.count()
-    val stride = math.max(1L, n / math.max(1, 4 * k))
-    val seeds = df
-      .filter(conv(substring(md5(col(idCol).cast("string")), 1, 4), 16, 10)
-        .cast("long") % stride === 0)
-      .orderBy(col(idCol)).limit(k)
-      .select(transform(col(vecCol), x => x.cast("double")).as("v"))
-      .collect().map(_.getSeq[Double](0))
-    var cents: Seq[(Int, Int, Seq[Double])] = for {
-      s <- 0 until m
-      (vec, c) <- seeds.zipWithIndex
-    } yield (s, c, vec.slice(s * w, (s + 1) * w))
-    val sf = subframe(df, idCol, vecCol, m, w)
-    var it = 0
-    while (it < iters) {
-      // fused assign + quantized-mean recompute: one corpus pass per
-      // iteration, one aggregation Exchange
-      val rec = CellTable.scoped(spark, cents) { table =>
-        nearestCodes(sf, table)
-          .select(col("sub"), col("cell"),
-            posexplode(col("subvec")).as(Seq("j", "v")))
-          .groupBy("sub", "cell", "j")
-          .agg((sum(floor(col("v").cast("double") * lit(1000000.0d)).cast("long"))
-            .cast("double") / (lit(1000000.0d) * count(lit(1)))).as("mn"))
-          .collect()
-      }
-      cents = rec.groupBy(_.getInt(0)).toSeq.flatMap { case (s, rs) =>
-        rs.groupBy(_.getInt(1)).toSeq.sortBy(_._1).zipWithIndex.map {
-          case ((_, crs), denseCell) =>
-            (s, denseCell,
-              crs.sortBy(_.getInt(2)).map(_.getDouble(3)).toIndexedSeq)
-        }
-      }
-      it += 1
+    // each sample row as its m subvectors (null where the vector is)
+    val sample = Ivf.collectSample(df, idCol, vecCol,
+        Ivf.sampleStride(df.count(), Ivf.SampleCap)) { v =>
+      Array.tabulate(m)(s =>
+        if (v == null) null else Ivf.hostVec(v.slice(s * w, (s + 1) * w)))
     }
-    cents.toDF("sub", "cell", "centroid")
+    val seeds = Ivf.seeds(sample, k)
+    val cents = for {
+      s <- 0 until m
+      (subs, c) <- seeds.zipWithIndex
+    } yield {
+      require(subs(s) != null, s"pqFit: a seed $vecCol is null or holds a null")
+      (s, c, subs(s).toSeq)
+    }
+    val members = sample.flatMap { case (_, subs) => subs.indices.map(s => (s, subs(s))) }
+    Ivf.lloyd(cents, members, iters, CellTable.SquaredL2)
+      .toDF("sub", "cell", "centroid")
   }
 
   /** Encode: each vector's m codebook cells, ordered by subspace. The
     * codebooks are collected once and broadcast; the argmin is one
-    * projection, then one groupBy(id) Exchange.
+    * projection ([[Ivf.labelCells]], group = subspace, squared L2),
+    * then one groupBy(id) Exchange. A subvector with a null element has
+    * no argmin, so its vector gets no code for that subspace.
     */
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
                codebooks: DataFrame, m: Int): DataFrame = {
@@ -198,7 +147,8 @@ object Quant {
     val rows = codebooks.select(col("sub"), col("cell"), col("centroid"))
       .collect().toIndexedSeq
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-    nearestCodes(sf, CellTable.broadcast(df.sparkSession, rows))
+    Ivf.labelCells(sf, "subvec", col("sub"), CellTable.broadcast(df.sparkSession, rows),
+        "cell", CellTable.SquaredL2)
       .groupBy(col(idCol))
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("cell")))),
         x => x.getField("cell")).as("codes"))
@@ -219,18 +169,7 @@ object Quant {
     val dim = queries.select(size(col(vecCol)).as("d")).limit(1).collect()
       .headOption.map(_.getInt(0)).getOrElse(0)
     require(dim > 0 && dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val icents = broadcast(index.centroids
-      .withColumn("_cn", Ann.l2norm(col("centroid"))))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("_sim").desc, col("cell").asc)
-    val probed = queries
-      .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-        Ann.l2norm(col(vecCol)).as("q_nrm"))
-      .join(icents)
-      .withColumn("_sim", round(
-        Ann.dot(col("q_vec"), col("centroid")) / (col("q_nrm") * col("_cn")), 9))
-      .withColumn("_rn", row_number().over(wq))
-      .filter(col("_rn") <= nprobe)
+    val probed = Ivf.probeFlat(queries, index.centroids, idCol, vecCol, nprobe)
       .select(col("q_id"), col("cell"))
     val cand = probed
       .join(index.assignments.select(col(idCol).as("c_id"), col("cell")),
@@ -287,21 +226,10 @@ object Quant {
       .headOption.map(_.getInt(0)).getOrElse(0)
     require(dim > 0 && dim % m == 0, s"dim $dim must divide into $m subspaces")
     val w = dim / m
-    val icents = broadcast(index.centroids
-      .withColumn("_cn", Ann.l2norm(col("centroid"))))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("_sim").desc, col("cell").asc)
-    val probed = queries
-      .select(col(idCol).as("q_id"), col(vecCol).as("_qv"),
-        Ann.l2norm(col(vecCol)).as("_qn"))
-      .join(icents)
-      .withColumn("_sim", round(
-        Ann.dot(col("_qv"), col("centroid")) / (col("_qn") * col("_cn")), 9))
-      .withColumn("_rn", row_number().over(wq))
-      .filter(col("_rn") <= nprobe)
-      .select(col("q_id"), col("cell"), col("_qv"))
+    val probed = Ivf.probeFlat(queries, index.centroids, idCol, vecCol, nprobe)
+      .select(col("q_id"), col("cell"), col("q_vec"))
     val qres = probed.join(broadcast(index.centroids), "cell")
-      .withColumn("_qres", zip_with(col("_qv"), col("centroid"),
+      .withColumn("_qres", zip_with(col("q_vec"), col("centroid"),
         (x, y) => x.cast("double") - y))
       .select(col("q_id"), col("cell").as("ivf_cell"), col("_qres"))
     val qsub = qres

@@ -53,7 +53,7 @@ final case class LogStore(spark: SparkSession, dir: String) {
     * the file count over a long history.
     */
   def append(table: String, rows: DataFrame): Long = writeLock.synchronized {
-    // a compact that died mid-swap left the rows in `<table>_old`:
+    // a compact that died mid-swap left the rows in Fs.oldDir(table):
     // restore them before appending, or the next compact deletes them
     Fs.recoverSwap(path(table), spark.sparkContext.hadoopConfiguration)
     val v = LogStore.nextVersion()
@@ -64,7 +64,7 @@ final case class LogStore(spark: SparkSession, dir: String) {
 
   /** True when the table has rows on disk. A missing directory may be a
     * [[compact]] that died between its renames: [[Fs.existsRecovered]]
-    * restores `<table>_old` first, so readers never see an empty log.
+    * restores [[Fs.oldDir]] first, so readers never see an empty log.
     */
   def exists(table: String): Boolean =
     Fs.existsRecovered(path(table), spark.sparkContext.hadoopConfiguration)

@@ -222,7 +222,7 @@ object Maintenance {
   def quarantineTables(warehouseDir: String,
                        conf: org.apache.hadoop.conf.Configuration =
                          sessionHadoopConf): Seq[String] =
-    graft.core.Fs.listDirs(warehouseDir, conf)
+    graft.core.Fs.listTables(warehouseDir, conf)
       .map(_.getPath.getName)
       .filter(_.endsWith("_bad_dates"))
       .sorted

@@ -84,14 +84,16 @@ object Reports {
       .orderBy("table_name")
 
   /** O2 + F12: table sizes, biggest first (table_sizes.sql:1-11) —
-    * file-system bytes per staging table dir with pretty-printed size.
+    * file-system bytes per staging table dir with pretty-printed size
+    * ([[graft.core.Fs.listTables]]: a crashed rewrite's hidden siblings
+    * are not tables).
     * Hadoop FS listings, so the same report runs on HDFS/object stores.
     */
   def tableSizes(warehouseDir: String, spark: org.apache.spark.sql.SparkSession,
                  topK: Int = 100): DataFrame = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    val rows = graft.core.Fs.listDirs(warehouseDir, conf).map { d =>
+    val rows = graft.core.Fs.listTables(warehouseDir, conf).map { d =>
       (d.getPath.getName, graft.core.Fs.dirBytes(d.getPath.toString, conf))
     }
     rows.toDF("table_name", "total_bytes")

@@ -52,9 +52,9 @@ object AnnIndexStream {
                  batchId: Long = -1L, queryId: String = ""): Unit = {
     val spark = batch.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
-    // a maintenance op that died mid-swap left the store in data_old:
-    // restore it first, or the batch lands alone in a fresh data/ and
-    // the next rewrite's recovery deletes data_old as stale
+    // a maintenance op that died mid-swap left the store in
+    // Fs.oldDir(data): restore it first, or the batch lands alone in a
+    // fresh data/ and the next rewrite's recovery deletes it as stale
     Fs.recoverSwap(dataDir(storeDir), conf)
     // direct (non-streaming) calls get a fresh counter tag — the fixed
     // "q_-1" tag would make every direct ingest after the first look
@@ -188,10 +188,9 @@ object AnnIndexStream {
   def refit(spark: SparkSession, storeDir: String, idCol: String,
             vecCol: String, k: Int = 16, iters: Int = 2): Option[DataFrame] =
     liveStore(spark, storeDir).map { store =>
-      // cached: Ivf.fit makes ~4 driver-materializing passes (count,
-      // seeding, per-iteration means) and the staging write joins it
-      // again — without the cache each pass re-reads and re-aggregates
-      // every parquet delta, turning a one-scan refit into six scans
+      // cached: Ivf.fit reads it twice (the count and the training-
+      // sample collect) and the staging write once more — without the
+      // cache each read re-reads and re-aggregates every parquet delta
       val corpus = store
         .groupBy(col(idCol))
         .agg(max(col(vecCol)).as(vecCol))

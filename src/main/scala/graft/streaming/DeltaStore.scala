@@ -18,12 +18,12 @@ import org.apache.spark.sql.functions.lit
   * by [[write]] and every tag read back by [[tagOfDir]].
   *
   * A compaction that died between its swap's renames leaves the store
-  * dir missing and its deltas in `<store>_old`. Every entry point that
+  * dir missing and its deltas in [[Fs.oldDir]]. Every entry point that
   * probes or appends to a store ([[committedDirs]], [[sweepUncommitted]],
   * [[write]], and through them every read, tag mint and compaction)
   * runs [[Fs.recoverSwap]] first, so no batch is judged against an
   * empty store and no minted `direct_<n>` tag collides with a committed
-  * delta once `_old` comes back.
+  * delta once the old content comes back.
   */
 private[graft] object DeltaStore {
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ingest.Stages
+import graft.model.SchemaRegistry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -19,19 +20,23 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamIngest {
 
-  /** File-source stream of JSON sync files for one entity glob, with the
-    * same transform stages as the batch pipeline (empty→null, provenance
-    * from path, date-validity flag).
+  /** File-source stream of JSON sync files for one entity glob, feeding
+    * `stagingTable`: the same transform chain as the batch pipeline
+    * ([[Stages.prepareEntity]]: all-null rows dropped, the entity's
+    * column exclusion and PII masking from [[SchemaRegistry.default]],
+    * empty→null, provenance from the path). It adds no date-validity
+    * split: a drain writes bad-date rows where the batch pipeline
+    * quarantines them.
     */
   def entityStream(spark: SparkSession, schema: StructType, pathGlob: String,
-                   maxFilesPerTrigger: Int = 1000): DataFrame = {
+                   stagingTable: String, maxFilesPerTrigger: Int = 1000): DataFrame = {
     val raw = spark.readStream
       .schema(schema)
       .option("multiLine", "true")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(pathGlob)
     val loadTime = new java.sql.Timestamp(System.currentTimeMillis())
-    Stages.stampProvenanceFromPath(Stages.emptyToNull(raw), loadTime)
+    Stages.prepareEntity(stagingTable, SchemaRegistry.default, loadTime)(raw)
   }
 
   /** Drain-then-exit run to a parquet sink (the cron-equivalent batch):

@@ -31,8 +31,11 @@ class FsSpec extends SparkSpec {
     assert(Fs.readText(s"${dir.getPath}/_marker", conf) === None)
   }
 
-  private def dirWith(root: java.io.File, name: String, marker: String): String = {
-    val d = s"${root.getPath}/$name"
+  private def dirWith(root: java.io.File, name: String, marker: String): String =
+    plant(s"${root.getPath}/$name", marker)
+
+  /** A directory `d` holding the marker file `m`. */
+  private def plant(d: String, marker: String): String = {
     Fs.writeText(s"$d/m", marker, spark.sparkContext.hadoopConfiguration)
     d
   }
@@ -44,15 +47,15 @@ class FsSpec extends SparkSpec {
     val live = s"${root.getPath}/t"
     Fs.recoverSwap(live, conf) // nothing to recover: a no-op
     assert(!Fs.exists(live, conf))
-    dirWith(root, "t_old", "before-crash")
+    plant(Fs.oldDir(live), "before-crash")
     Fs.recoverSwap(live, conf)
     assert(Fs.readText(s"$live/m", conf) === Some("before-crash"))
-    assert(!Fs.exists(s"${live}_old", conf))
+    assert(!Fs.exists(Fs.oldDir(live), conf))
     // a swap on the recovered path replaces it normally
     dirWith(root, "t_next", "next")
     Fs.swapInPlace(live, s"${root.getPath}/t_next", conf)
     assert(Fs.readText(s"$live/m", conf) === Some("next"))
-    assert(!Fs.exists(s"${live}_old", conf))
+    assert(!Fs.exists(Fs.oldDir(live), conf))
   }
 
   test("recoverSwap: live and a stale _old both present (swap finished, " +
@@ -61,17 +64,17 @@ class FsSpec extends SparkSpec {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = java.nio.file.Files.createTempDirectory("fs_stale").toFile
     val live = dirWith(root, "t", "current")
-    dirWith(root, "t_old", "stale")
+    plant(Fs.oldDir(live), "stale")
     Fs.recoverSwap(live, conf)
     assert(Fs.readText(s"$live/m", conf) === Some("current"))
-    assert(!Fs.exists(s"${live}_old", conf))
-    // the same guard runs inside swapInPlace: with a stale _old in place
-    // the swap still promotes the new directory and leaves no _old
-    dirWith(root, "t_old", "stale")
+    assert(!Fs.exists(Fs.oldDir(live), conf))
+    // the same guard runs inside swapInPlace: with a stale old sibling in
+    // place the swap still promotes the new directory and leaves none
+    plant(Fs.oldDir(live), "stale")
     dirWith(root, "t_next", "next")
     Fs.swapInPlace(live, s"${root.getPath}/t_next", conf)
     assert(Fs.readText(s"$live/m", conf) === Some("next"))
-    assert(!Fs.exists(s"${live}_old", conf))
+    assert(!Fs.exists(Fs.oldDir(live), conf))
     assert(Fs.list(live, conf).forall(!_.isDirectory), "swap nested a directory")
   }
 
@@ -86,13 +89,13 @@ class FsSpec extends SparkSpec {
     val live = dirWith(root, "t", "current")
     // a crashed rewrite's leftover, in a subdir a writer that overwrites
     // only its own subdir would not clear
-    Fs.writeText(s"$live.staging/left/m", "stale", conf)
+    Fs.writeText(s"${Fs.stagingDir(live)}/left/m", "stale", conf)
     Fs.replace(live, conf) { staging =>
       assert(!Fs.exists(staging, conf), "stale staging dir not cleared")
       Fs.writeText(s"$staging/n", "next", conf)
     }
     assert(names(live) === Set("n"))
-    assert(!Fs.exists(s"$live.staging", conf) && !Fs.exists(s"${live}_old", conf))
+    assert(!Fs.exists(Fs.stagingDir(live), conf) && !Fs.exists(Fs.oldDir(live), conf))
   }
 
   test("replace: a write that throws leaves live untouched") {
@@ -107,7 +110,7 @@ class FsSpec extends SparkSpec {
     }
     assert(e.getMessage === "write died")
     assert(Fs.readText(s"$live/m", conf) === Some("current"))
-    assert(names(live) === Set("m") && !Fs.exists(s"${live}_old", conf))
+    assert(names(live) === Set("m") && !Fs.exists(Fs.oldDir(live), conf))
   }
 
   test("two threads recovering one crashed swap: one restore, neither " +
@@ -117,15 +120,15 @@ class FsSpec extends SparkSpec {
     try (1 to 40).foreach { round =>
       val root = java.nio.file.Files.createTempDirectory("fs_race").toFile
       val live = s"${root.getPath}/t"
-      dirWith(root, "t_old", s"round-$round")
+      plant(Fs.oldDir(live), s"round-$round")
       val gate = new java.util.concurrent.CyclicBarrier(2)
       val calls = Seq.fill(2)(pool.submit(new java.util.concurrent.Callable[Unit] {
         def call(): Unit = { gate.await(); Fs.recoverSwap(live, conf) }
       }))
       calls.foreach(_.get()) // rethrows what either thread threw
       assert(Fs.readText(s"$live/m", conf) === Some(s"round-$round"))
-      assert(!Fs.exists(s"${live}_old", conf))
-      assert(names(live) === Set("m"), "an _old was nested inside live")
+      assert(!Fs.exists(Fs.oldDir(live), conf))
+      assert(names(live) === Set("m"), "an old sibling was nested inside live")
     } finally pool.shutdown()
   }
 }

@@ -29,8 +29,8 @@ class CellKernelsSpec extends SparkSpec {
 
     val table = CellTable.broadcast(spark,
       cents.map { case (cell, c) => (0, cell, c) })
-    val cs = CellSims.sims(col("vec"), lit(0), table)
-    // the same fold Ivf.argmaxFold uses (private there; shape replicated)
+    val cs = CellKernel.column(col("vec"), lit(0), table, CellTable.Cosine)
+    // the fold Ivf.bestCell runs for cosine (private there; shape replicated)
     val got = df.withColumn("_cs", cs)
       .select(col("id"),
         aggregate(
@@ -57,7 +57,7 @@ class CellKernelsSpec extends SparkSpec {
         (3L, null.asInstanceOf[Array[Float]], 0))
       .toDF("id", "vec", "grp")
     val got = df.select(col("id"),
-        CellSims.sims(col("vec"), col("grp"), table).as("cs"))
+        CellKernel.column(col("vec"), col("grp"), table, CellTable.Cosine).as("cs"))
       .collect().map(r => r.getLong(0) -> r.isNullAt(1)).toMap
     assert(got === Map(1L -> false, 2L -> true, 3L -> true))
   }
@@ -76,7 +76,7 @@ class CellKernelsSpec extends SparkSpec {
         lit(0.0d), (acc, x) => acc + x).as(s"d$i")
     }
     val rows = df
-      .withColumn("_cd", CellDists.dists(col("vec"), lit(0), table))
+      .withColumn("_cd", CellKernel.column(col("vec"), lit(0), table, CellTable.SquaredL2))
       .select(col("_cd.dists").as("dists") +: refCols: _*)
       .collect()
     rows.foreach { r =>
@@ -112,7 +112,7 @@ class CellKernelsSpec extends SparkSpec {
 
 object CellKernelsSpec {
 
-  /** The broadcast-join argmax the [[CellSims]] path is checked against:
+  /** The broadcast-join argmax the `cell_sims` path is checked against:
     * every (vector, centroid) pair, round(sim, 9), then max_by on
     * (sim, -cell), so ties go to the lowest cell. With `on`, only pairs
     * that agree on those columns meet (the two-level leaf rule: a
@@ -131,7 +131,7 @@ object CellKernelsSpec {
         struct(col("_sim"), (-col("cell")).as("_nc"))).as("cell"))
   }
 
-  /** The broadcast-join argmin the [[CellDists]] PQ path is checked
+  /** The broadcast-join argmin the `cell_dists` PQ path is checked
     * against: per (vector, subspace) row of `sf` (`sub`, `subvec`),
     * round(Σ(x−c)², 9) against every codebook cell of that subspace,
     * min_by on (dist, cell).

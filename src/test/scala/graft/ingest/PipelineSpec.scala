@@ -268,11 +268,12 @@ class PipelineSpec extends SparkSpec {
     seedSync(cfg, Seq(syncRow(1L, "FAC1", "biometric_0_20250103141949.json")))
     assert(Pipeline.run(spark, cfg).recordsIngested === 2)
     // the crash (KillResumeSpec.crashMidSwap's shape): compactStagingTable
-    // staged its rewrite, renamed the table to <table>_old and died
+    // staged its rewrite, renamed the table to its old sibling and died
     // before promoting the staging dir
     val table = s"${cfg.warehouseDir}/stg_biometric"
-    spark.read.parquet(table).write.mode("overwrite").parquet(s"$table.staging")
-    graft.core.Fs.rename(table, s"${table}_old", conf)
+    spark.read.parquet(table).write.mode("overwrite")
+      .parquet(graft.core.Fs.stagingDir(table))
+    graft.core.Fs.rename(table, graft.core.Fs.oldDir(table), conf)
     writeFile(fac, "biometric_1_20250104141949_decrypted.json",
       """[{"id": 3, "uuid": "u3"}]""")
     seedSync(cfg, Seq(syncRow(2L, "FAC1", "biometric_1_20250104141949.json")))
@@ -281,7 +282,31 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(table)
       .select(org.apache.spark.sql.functions.col("id").cast("long"))
       .as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
-    assert(!graft.core.Fs.exists(s"${table}_old", conf))
+    assert(!graft.core.Fs.exists(graft.core.Fs.oldDir(table), conf))
+  }
+
+  test("a staging table named like a swap sibling survives the next " +
+      "ingest into its namesake table") {
+    // an uploaded patient_person_old_* file stages into
+    // stg_patient_person_old; the next append into stg_patient_person
+    // recovers its swap first, and must not take that table for its
+    // crashed swap's leftover (restore it, or delete it as stale)
+    val (cfg, parent) = setup()
+    val fac = new java.io.File(parent, "FAC1")
+    writeFile(fac, "patient_person_old_0_20250103141949_decrypted.json",
+      """[{"id": 1, "uuid": "u1"}, {"id": 2, "uuid": "u2"}]""")
+    seedSync(cfg, Seq(syncRow(1L, "FAC1", "patient_person_old_0_20250103141949.json")))
+    assert(Pipeline.run(spark, cfg).recordsIngested === 2)
+    writeFile(fac, "patient_person_0_20250104141949_decrypted.json",
+      """[{"id": 3, "uuid": "u3"}]""")
+    seedSync(cfg, Seq(syncRow(2L, "FAC1", "patient_person_0_20250104141949.json")))
+    assert(Pipeline.run(spark, cfg).recordsIngested === 1)
+    def ids(table: String): Seq[Long] =
+      spark.read.parquet(s"${cfg.warehouseDir}/$table")
+        .select(org.apache.spark.sql.functions.col("id").cast("long"))
+        .as[Long].collect().sorted.toSeq
+    assert(ids("stg_patient_person_old") === Seq(1L, 2L))
+    assert(ids("stg_patient_person") === Seq(3L))
   }
 
   test("requeue: failed file returns to Ready and the next run re-ingests it") {

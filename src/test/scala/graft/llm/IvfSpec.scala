@@ -234,7 +234,7 @@ class IvfSpec extends SparkSpec {
   private def assertSameFit(df: DataFrame, targetCellSize: Int,
                             iters: Int = 2): Ivf.Index2 = {
     val got = Ivf.fitTwoLevel(df, "vec_id", "embedding", targetCellSize, iters)
-    val ref = IvfTwoLevelReference.fitTwoLevel(df, "vec_id", "embedding",
+    val ref = LloydReference.fitTwoLevel(df, "vec_id", "embedding",
       targetCellSize, iters)
     try assert(snapshot(got) === snapshot(ref))
     finally got.unpersist()
@@ -306,7 +306,7 @@ class IvfSpec extends SparkSpec {
       (0, Seq(0.3, -0.7)),
       (1, Seq(-0.123456789, 2.5, -3.0000001)),
       (2, Seq.empty[Double]))
-    val viaSpark = Ivf.cellMeans(labelled.toDF("cell", "vec"), Seq("cell"), "vec")
+    val viaSpark = LloydReference.cellMeans(labelled.toDF("cell", "vec"), Seq("cell"), "vec")
       .collect().map(r => r.getInt(0) -> bits(r.getSeq[Double](1))).toMap
     val viaHost = Ivf.hostMeans(labelled.map { case (c, v) => (c, v.toArray) })
       .map { case (c, m) => c -> bits(m) }
@@ -386,5 +386,66 @@ class IvfSpec extends SparkSpec {
     assert(e.getMessage.contains("65536 > 65535"), e.getMessage)
     // a larger cap brings the same corpus back inside the range
     assert(Ivf.sampleStride(lastOk + 1L, 65537) === 65535L)
+  }
+
+  // ---- driver-side flat training ------------------------------------
+
+  /** Both frames of a flat index, collected in key order, with the
+    * centroids as raw double bits.
+    */
+  private def snapshot(ix: Ivf.Index) = (
+    ix.centroids.schema, ix.assignments.schema,
+    ix.centroids.orderBy("cell").collect().toSeq
+      .map(r => (r.getInt(0), bits(r.getSeq[Double](1)))),
+    ix.assignments.orderBy(ix.assignments.columns.head).collect().toSeq)
+
+  private def assertSameFlatFit(df: DataFrame, k: Int, iters: Int = 2): Ivf.Index = {
+    val got = Ivf.fit(df, "vec_id", "embedding", k, iters)
+    val ref = LloydReference.fit(df, "vec_id", "embedding", k, iters)
+    try assert(snapshot(got) === snapshot(ref))
+    finally got.unpersist()
+    ref
+  }
+
+  test("flat fit ≡ the distributed reference on sf0.001 embeddings") {
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    assertSameFlatFit(emb, k = 8).unpersist()
+    assertSameFlatFit(emb, k = 24, iters = 3).unpersist()
+  }
+
+  test("flat fit ≡ the distributed reference on adversarial vectors: " +
+    "ties after round(·, 9), a dead cell, zero and NaN vectors") {
+    def f(xs: Double*): Seq[java.lang.Float] = xs.map(x => Float.box(x.toFloat))
+    // seeds are ids 0-4 (stride 1 at this size): cell 3 duplicates
+    // cell 2, so it dies in the first sweep; cell 4 ties cell 2 after
+    // round(·, 9) for (0, 0, 1); (1, 1, 0) and its multiples tie cells
+    // 0 and 1 exactly; id 10 is a zero vector and id 11 holds a NaN
+    val emb = Seq(
+      (0L, f(1, 0, 0)), (1L, f(0, 1, 0)), (2L, f(0, 0, 1)), (3L, f(0, 0, 1)),
+      (4L, f(0, 1e-5, 1)), (5L, f(1, 1, 0)), (6L, f(2, 2, 0)), (7L, f(0, 0, 2)),
+      (8L, f(0.9, 0.1, 0.2)), (9L, f(0.1, 0.8, 0.3)), (10L, f(0, 0, 0)),
+      (11L, f(Double.NaN, 1, 0)), (12L, f(3, 3, 0)), (13L, f(0, 0.2, 1)))
+      .toDF("vec_id", "embedding")
+    val ref = assertSameFlatFit(emb, k = 5)
+    try {
+      assert(ref.centroids.count() < 5, "the duplicate seed's cell died")
+      val cells = ref.assignments.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      assert(cells(5L) === cells(6L) && cells.size === 14)
+    } finally ref.unpersist()
+    assertSameFlatFit(emb, k = 5, iters = 0).unpersist()
+  }
+
+  test("flat fit ≡ the distributed reference on an empty corpus") {
+    val emb = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+    val ref = assertSameFlatFit(emb, k = 4)
+    try assert(ref.centroids.isEmpty && ref.assignments.isEmpty)
+    finally ref.unpersist()
+  }
+
+  test("job budget: a flat fit on sf0.001 starts at most 4 Spark jobs") {
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val (index, jobs) = countJobs(Ivf.fit(emb, "vec_id", "embedding", k = 8))
+    index.unpersist()
+    assert(jobs <= 4, s"$jobs Spark jobs for one flat fit")
   }
 }

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class QuantSpec extends SparkSpec {
@@ -143,5 +144,66 @@ class QuantSpec extends SparkSpec {
       brute.get((q, c)).foreach(b => assert(b === adc, s"adc drift for ($q,$c)"))
       assert(cells.contains(c))
     }
+  }
+
+  // ---- driver-side codebook training --------------------------------
+
+  /** A codebook frame's schema and its rows in (sub, cell) order, with
+    * the centroids as raw double bits.
+    */
+  private def snapshot(books: DataFrame) = (books.schema,
+    books.collect().toSeq
+      .map(r => (r.getInt(0), r.getInt(1),
+        r.getSeq[Double](2).map(java.lang.Double.doubleToRawLongBits)))
+      .sortBy(t => (t._1, t._2)))
+
+  private def assertSamePq(df: DataFrame, m: Int, k: Int, iters: Int): Unit =
+    assert(snapshot(Quant.pqFit(df, "vec_id", "embedding", m, k, iters)) ===
+      snapshot(LloydReference.pqFit(df, "vec_id", "embedding", m, k, iters)))
+
+  test("pqFit ≡ the distributed reference on sf0.001 embeddings") {
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    assertSamePq(emb, m = 2, k = 8, iters = 2)
+    assertSamePq(emb, m = 4, k = 16, iters = 1)
+  }
+
+  test("pqFit ≡ the distributed reference on adversarial vectors: ties " +
+    "after round(·, 9), dead cells, zero and NaN vectors, a null element") {
+    def f(xs: Any*): Seq[java.lang.Float] = xs.map {
+      case null => null
+      case x: Double => Float.box(x.toFloat)
+      case x: Int => Float.box(x.toFloat)
+    }
+    // seeds are ids 0-3 (stride 1 at this size). Subspace 0: seed 2
+    // duplicates seed 1, so its cell dies; (1, 0) ties seeds 0 and 1
+    // exactly, (0, 0) ties seeds 0 and 3 after round(·, 9). Subspace 1:
+    // seed 2 duplicates seed 0. Id 5 is a zero vector, id 6 holds a NaN
+    // in subspace 0, id 7 a null in subspace 0 only.
+    val emb = Seq(
+      (0L, f(0, 0, 5, 5)), (1L, f(2, 0, -1, -2)), (2L, f(2, 0, 5, 5)),
+      (3L, f(0, 1e-5, 3, 3)), (4L, f(1, 0, 4, 4)), (5L, f(0, 0, 0, 0)),
+      (6L, f(Double.NaN, 1, -1, -2)), (7L, f(1, null, 5, 6)),
+      (8L, f(3, 0, -1, -1)), (9L, f(1, 0, 2, 2)))
+      .toDF("vec_id", "embedding")
+    assertSamePq(emb, m = 2, k = 4, iters = 2)
+    assertSamePq(emb, m = 2, k = 4, iters = 0)
+    val books = Quant.pqFit(emb, "vec_id", "embedding", m = 2, k = 4, iters = 1)
+    assert(books.filter(col("sub") === 0).count() < 4, "a dead cell in subspace 0")
+  }
+
+  test("pqFit and the distributed reference refuse an empty corpus alike") {
+    val emb = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+    val got = intercept[IllegalArgumentException](
+      Quant.pqFit(emb, "vec_id", "embedding", m = 2, k = 4))
+    val ref = intercept[IllegalArgumentException](
+      LloydReference.pqFit(emb, "vec_id", "embedding", m = 2, k = 4))
+    assert(got.getMessage === ref.getMessage)
+  }
+
+  test("job budget: pqFit on sf0.001 starts at most 5 Spark jobs") {
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val (books, jobs) = countJobs(Quant.pqFit(emb, "vec_id", "embedding", m = 2, k = 8))
+    assert(books.count() > 0)
+    assert(jobs <= 5, s"$jobs Spark jobs for one pqFit")
   }
 }

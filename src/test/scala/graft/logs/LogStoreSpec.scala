@@ -99,15 +99,16 @@ class LogStoreSpec extends SparkSpec {
       "or an append restores <table>_old before the next compact") {
     val conf = spark.sparkContext.hadoopConfiguration
     val store = freshStore()
-    val (t, tOld) = (s"${store.dir}/t", s"${store.dir}/t_old")
+    val t = s"${store.dir}/t"
+    val tOld = graft.core.Fs.oldDir(t)
     store.append("t", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     store.update("t", Seq((1L, "a2")).toDF("id", "v"))
     val schema = new org.apache.spark.sql.types.StructType()
       .add("id", "long").add("v", "string")
     def view = store.latestOrEmpty("t", Seq("id"), schema)
       .orderBy("id").as[(Long, String)].collect().toSeq
-    // the crash window: compact renamed t -> t_old, then died before
-    // promoting t.staging. A read comes first here...
+    // the crash window: compact renamed t to its old sibling, then died
+    // before promoting its staging dir. A read comes first here...
     graft.core.Fs.rename(t, tOld, conf)
     assert(view === Seq((1L, "a2"), (2L, "b")))
     store.compact("t", Seq("id"))

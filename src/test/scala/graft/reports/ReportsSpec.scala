@@ -94,4 +94,21 @@ class ReportsSpec extends SparkSpec {
     assert(out.head.getLong(1) > 0)
     assert(out.head.getString(2).matches("[0-9.]+ (B|KB|MB|GB)"))
   }
+
+  test("tableSizes and quarantineTables never list a crashed rewrite's " +
+      "siblings as tables") {
+    import graft.core.Fs
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh_sib_").toFile
+    val rows = Seq((1L, "x")).toDF("id", "v")
+    Seq("stg_a", "stg_a_bad_dates").foreach { t =>
+      val live = s"${wh.getPath}/$t"
+      rows.write.parquet(live)
+      rows.write.parquet(Fs.oldDir(live))
+      rows.write.parquet(Fs.stagingDir(live))
+    }
+    assert(Reports.tableSizes(wh.getPath, spark).collect().map(_.getString(0)).toSet ===
+      Set("stg_a", "stg_a_bad_dates"))
+    assert(graft.maintenance.Maintenance.quarantineTables(wh.getPath) ===
+      Seq("stg_a_bad_dates"))
+  }
 }

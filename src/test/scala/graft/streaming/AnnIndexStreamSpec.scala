@@ -118,7 +118,7 @@ class AnnIndexStreamSpec extends SparkSpec {
   }
 
   test("a crashed op's leftover staging dir cannot ride a later op's swap") {
-    // regression: compact/refit/forget share $data.staging; overwrite
+    // regression: compact/refit/forget share one staging dir; overwrite
     // mode clears only the writer's OWN ingest= subdir, so a subdir
     // left by a crashed refit used to be swapped live by the next
     // forget — resurrecting rows the forget was removing
@@ -133,7 +133,7 @@ class AnnIndexStreamSpec extends SparkSpec {
         Ivf.assignCells(corpus, "vec_id", "embedding", index.centroids), "vec_id")
       .select(col("vec_id"), col("embedding"), col("cell"))
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$store/data.staging/ingest=refit_99")
+      .parquet(s"${graft.core.Fs.stagingDir(s"$store/data")}/ingest=refit_99")
     val removed = AnnIndexStream.forget(spark, store, "vec_id",
       Seq(5L, 6L).toDF("vec_id"))
     assert(removed === 2L)

@@ -19,8 +19,8 @@ import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
   * injected throw leaves the batch pending for the restart.
   *
   * The second crash point is INSIDE the store swap, between its two
-  * renames (`<state>` missing, `<state>_old` holding the prior state):
-  * re-driving the batch must restore `_old` before it folds, or the
+  * renames (`<state>` missing, `Fs.oldDir(<state>)` holding the prior
+  * state): re-driving the batch must restore it before it folds, or the
   * history before the crash is lost without an error. The same holds
   * for the append-shaped stores, whose compactions swap: the next
   * delta must land in the restored store.
@@ -165,15 +165,16 @@ class KillResumeSpec extends SparkSpec {
   }
 
   /** The mid-swap crash: a rewrite of `<state>` staged its new content
-    * (at `<state>.staging<sub>`), renamed `<state>` to `<state>_old` and
-    * died before promoting the staging directory — `<state>` is missing
-    * and `_old` holds everything before the crash.
+    * (at `Fs.stagingDir(<state>)<sub>`), renamed `<state>` to
+    * `Fs.oldDir(<state>)` and died before promoting the staging
+    * directory — `<state>` is missing and the old sibling holds
+    * everything before the crash.
     */
   private def crashMidSwap(state: String, staged: DataFrame,
                            sub: String = ""): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    staged.write.mode("overwrite").parquet(s"$state.staging$sub")
-    graft.core.Fs.rename(state, s"${state}_old", conf)
+    staged.write.mode("overwrite").parquet(graft.core.Fs.stagingDir(state) + sub)
+    graft.core.Fs.rename(state, graft.core.Fs.oldDir(state), conf)
   }
 
   test("SketchStream: crash between the swap's renames; re-driving the " +
@@ -216,7 +217,7 @@ class KillResumeSpec extends SparkSpec {
     apply(b3)
     val got = spark.read.parquet(base).select("key", "v")
       .orderBy("key").as[(String, Long)].collect().toSeq
-    // a comes from b1 alone: lost if the re-driven b2 ignored base_old
+    // a comes from b1 alone: lost if the re-driven b2 ignored the old sibling
     assert(got === Seq(("a", 1L), ("b", 20L), ("d", 4L)))
   }
 

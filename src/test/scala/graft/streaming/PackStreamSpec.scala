@@ -143,7 +143,7 @@ class PackStreamSpec extends SparkSpec {
     // two deltas, then died before its swap
     val tot = PackStream.totalsPath(store)
     spark.read.parquet(tot).groupBy("src").agg(sum("bsum").as("bsum"))
-      .write.mode("overwrite").parquet(s"$tot.staging/ingest_batch=compacted_2")
+      .write.mode("overwrite").parquet(s"${graft.core.Fs.stagingDir(tot)}/ingest_batch=compacted_2")
     Seq(store, clean).foreach { at => apply(at, 2L); PackStream.compact(spark, at) }
     assert(totals(clean) === Seq(("a", 9L), ("b", 6L)))
     assert(totals(store) === totals(clean))

@@ -106,7 +106,7 @@ class SketchStreamSpec extends SparkSpec {
     val grid = s"${dir.getPath}/grid"
     SketchStream.applyBatch(Seq("a", "b").toDF("k"), "k", grid)
     SketchStream.applyBatch(Seq("a").toDF("k"), "k", grid)
-    assert(!new java.io.File(s"$grid.staging").exists())
+    assert(!new java.io.File(graft.core.Fs.stagingDir(grid)).exists())
     val est = Sketch.cmsEstimate(spark.read.parquet(grid),
         Seq("a", "b").toDF("k"), "k")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -20,7 +20,7 @@ class StreamIngestSpec extends SparkSpec {
     val ckpt = new java.io.File(root, "ckpt").getPath
 
     val stream = StreamIngest.entityStream(spark, schema,
-      s"${root.getPath}/in/*/patient_person_*.json")
+      s"${root.getPath}/in/*/patient_person_*.json", "stg_patient_person")
     assert(stream.isStreaming)
     val q1 = StreamIngest.drainToParquet(stream, out, ckpt)
     q1.awaitTermination(60000)
@@ -35,7 +35,7 @@ class StreamIngestSpec extends SparkSpec {
     // second drain with same checkpoint: no new files → no new rows
     val q2 = StreamIngest.drainToParquet(
       StreamIngest.entityStream(spark, schema,
-        s"${root.getPath}/in/*/patient_person_*.json"), out, ckpt)
+        s"${root.getPath}/in/*/patient_person_*.json", "stg_patient_person"), out, ckpt)
     q2.awaitTermination(60000)
     assert(spark.read.parquet(out).count() === 2)
 
@@ -45,9 +45,29 @@ class StreamIngestSpec extends SparkSpec {
       """[{"id": 3, "uuid": "u3", "visit_date": "2024-01-03"}]""")
     val q3 = StreamIngest.drainToParquet(
       StreamIngest.entityStream(spark, schema,
-        s"${root.getPath}/in/*/patient_person_*.json"), out, ckpt)
+        s"${root.getPath}/in/*/patient_person_*.json", "stg_patient_person"), out, ckpt)
     q3.awaitTermination(60000)
     assert(spark.read.parquet(out).count() === 3)
+  }
+
+  test("the stream runs the batch pipeline's entity chain: PII masked, " +
+      "all-null records dropped") {
+    val root = java.nio.file.Files.createTempDirectory("graft_stream_pii_").toFile
+    val in = new java.io.File(root, "in/FAC1"); in.mkdirs()
+    java.nio.file.Files.writeString(
+      new java.io.File(in, "patient_person_0_20250101000000_decrypted.json").toPath,
+      """[{"id": 1, "first_name": "Ada", "visit_date": "2024-01-01"},
+        | {}]""".stripMargin)
+    val piiSchema = schema.add("first_name", StringType)
+    val q = StreamIngest.drainToParquet(
+      StreamIngest.entityStream(spark, piiSchema,
+        s"${root.getPath}/in/*/patient_person_*.json", "stg_patient_person"),
+      new java.io.File(root, "out").getPath, new java.io.File(root, "ckpt").getPath)
+    q.awaitTermination(60000)
+    val got = spark.read.parquet(new java.io.File(root, "out").getPath).collect()
+    assert(got.length === 1, "the all-null record was dropped")
+    assert(got.head.getAs[String]("first_name") === graft.ingest.Stages.Mask)
+    assert(got.head.getAs[String]("stg_datim_id") === "FAC1")
   }
 
   test("windowed counts bucket by event-time hour") {
