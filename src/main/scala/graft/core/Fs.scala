@@ -263,19 +263,6 @@ object Fs {
       new org.apache.spark.util.SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration))
 
-  /** Total bytes of the files directly under `dir`. */
-  def dirBytes(dir: String, conf: Configuration): Long =
-    listFiles(dir, conf).map(_.getLen).sum
-
-  /** Total bytes under `dir`, descending into subdirectories (the
-    * partitioned-table layout). Driver-side metadata RPCs, O(listing).
-    */
-  def dirBytesRecursive(dir: String, conf: Configuration): Long =
-    list(dir, conf).map { s =>
-      if (s.isDirectory) dirBytesRecursive(s.getPath.toString, conf)
-      else s.getLen
-    }.sum
-
   final case class DataFileStats(files: Long, bytes: Long)
 
   /** Count + bytes of the DATA files under `dir` (recursive), skipping
@@ -298,4 +285,11 @@ object Fs {
         DataFileStats(acc.files + sub.files, acc.bytes + sub.bytes)
       } else DataFileStats(acc.files + 1, acc.bytes + s.getLen)
     }
+
+  /** Files a rewrite of `bytes` should write at ≈`targetFileBytes`
+    * each: the ceiling, never fewer than one. The compactions size
+    * their rewrites and their triggers by it over [[dataFileStats]].
+    */
+  def targetFileCount(bytes: Long, targetFileBytes: Long): Long =
+    math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
 }

@@ -79,11 +79,18 @@ object Quant {
   // q_ann_pq_topk).
   // ---------------------------------------------------------------------
 
-  /** One row per (vector, subspace) with the sliced subvector. */
-  private def subframe(df: DataFrame, idCol: String, vecCol: String,
-                       m: Int, w: Int): DataFrame =
-    df.select(col(idCol), col(vecCol))
-      .withColumn("sub", explode(sequence(lit(0), lit(m - 1))))
+  /** Subvector width: the first row's dimension split into `m`
+    * subspaces (one probe job). */
+  private def subWidth(df: DataFrame, vecCol: String, m: Int): Int = {
+    val dim = df.select(size(col(vecCol)).as("d")).limit(1).collect()
+      .headOption.map(_.getInt(0)).getOrElse(0)
+    require(dim > 0 && dim % m == 0, s"dim $dim must divide into $m subspaces")
+    dim / m
+  }
+
+  /** One row per (row, subspace) with the sliced subvector `subvec`. */
+  private def subframe(df: DataFrame, vecCol: String, m: Int, w: Int): DataFrame =
+    df.withColumn("sub", explode(sequence(lit(0), lit(m - 1))))
       .withColumn("subvec", slice(col(vecCol), col("sub") * w + 1, lit(w)))
 
   /** Squared L2 between the subvector and a codebook centroid,
@@ -109,10 +116,7 @@ object Quant {
     val spark = df.sparkSession
     import spark.implicits._
     require(m >= 1 && k >= 1 && iters >= 0, "bad pq parameters")
-    val dim = df.select(size(col(vecCol)).as("d")).limit(1).collect()
-      .headOption.map(_.getInt(0)).getOrElse(0)
-    require(dim > 0 && dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val w = dim / m
+    val w = subWidth(df, vecCol, m)
     // each sample row as its m subvectors (null where the vector is)
     val sample = Ivf.collectSample(df, idCol, vecCol,
         Ivf.sampleStride(df.count(), Ivf.SampleCap)) { v =>
@@ -140,10 +144,8 @@ object Quant {
     */
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
                codebooks: DataFrame, m: Int): DataFrame = {
-    val dim = df.select(size(col(vecCol)).as("d")).limit(1).collect()
-      .headOption.map(_.getInt(0)).getOrElse(0)
-    require(dim > 0 && dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val sf = subframe(df, idCol, vecCol, m, dim / m)
+    val sf = subframe(df.select(col(idCol), col(vecCol)), vecCol, m,
+      subWidth(df, vecCol, m))
     val rows = codebooks.select(col("sub"), col("cell"), col("centroid"))
       .collect().toIndexedSeq
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
@@ -166,33 +168,16 @@ object Quant {
                 queries: DataFrame, index: Ivf.Index,
                 idCol: String, vecCol: String, topK: Int, m: Int,
                 nprobe: Int = 2): DataFrame = {
-    val dim = queries.select(size(col(vecCol)).as("d")).limit(1).collect()
-      .headOption.map(_.getInt(0)).getOrElse(0)
-    require(dim > 0 && dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val probed = Ivf.probeFlat(queries, index.centroids, idCol, vecCol, nprobe)
+    val w = subWidth(queries, vecCol, m)
+    val cand = Ivf.probeFlat(queries, index.centroids, idCol, vecCol, nprobe)
       .select(col("q_id"), col("cell"))
-    val cand = probed
       .join(index.assignments.select(col(idCol).as("c_id"), col("cell")),
         Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
       .select("q_id", "c_id")
-    val qsub = subframe(
-      queries.select(col(idCol).as("q_id"), col(vecCol)), "q_id", vecCol,
-      m, dim / m)
-    val table = qsub.join(broadcast(codebooks), "sub")
-      .select(col("q_id"), col("sub"), col("cell").as("pcell"),
-        subDist(col("subvec"), col("centroid")).as("_qd"))
-    val codeRows = encoded.select(col(idCol).as("c_id"),
-      posexplode(col("codes")).as(Seq("sub", "pcell")))
-    val wnd = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("adc").asc, col("c_id").asc)
-    cand.join(codeRows, "c_id")
-      .join(broadcast(table), Seq("q_id", "sub", "pcell"))
-      .groupBy("q_id", "c_id")
-      .agg(round(sum(col("_qd")), 6).as("adc"))
-      .withColumn("rn", row_number().over(wnd))
-      .filter(col("rn") <= topK)
-      .select(col("q_id"), col("c_id"), col("adc"), col("rn"))
+      .join(encoded.select(col(idCol).as("c_id"),
+        posexplode(col("codes")).as(Seq("sub", "pcell"))), "c_id")
+    adcTopK(queries.select(col(idCol).as("q_id"), col(vecCol).as("qv")),
+      Seq("q_id"), cand, codebooks, m, w, topK)
   }
 
   /** Residual view for TRUE IVFPQ: each vector minus its assigned
@@ -222,37 +207,19 @@ object Quant {
                         queries: DataFrame, index: Ivf.Index,
                         idCol: String, vecCol: String, topK: Int, m: Int,
                         nprobe: Int = 2): DataFrame = {
-    val dim = queries.select(size(col(vecCol)).as("d")).limit(1).collect()
-      .headOption.map(_.getInt(0)).getOrElse(0)
-    require(dim > 0 && dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val w = dim / m
-    val probed = Ivf.probeFlat(queries, index.centroids, idCol, vecCol, nprobe)
+    val w = subWidth(queries, vecCol, m)
+    val qres = Ivf.probeFlat(queries, index.centroids, idCol, vecCol, nprobe)
       .select(col("q_id"), col("cell"), col("q_vec"))
-    val qres = probed.join(broadcast(index.centroids), "cell")
-      .withColumn("_qres", zip_with(col("q_vec"), col("centroid"),
-        (x, y) => x.cast("double") - y))
-      .select(col("q_id"), col("cell").as("ivf_cell"), col("_qres"))
-    val qsub = qres
-      .withColumn("sub", explode(sequence(lit(0), lit(m - 1))))
-      .withColumn("subvec", slice(col("_qres"), col("sub") * w + 1, lit(w)))
-    val table = qsub.join(broadcast(codebooks), "sub")
-      .select(col("q_id"), col("ivf_cell"), col("sub"),
-        col("cell").as("pcell"),
-        subDist(col("subvec"), col("centroid")).as("_qd"))
-    val codeRows = encodedRes
+      .join(broadcast(index.centroids), "cell")
+      .select(col("q_id"), col("cell").as("ivf_cell"),
+        zip_with(col("q_vec"), col("centroid"),
+          (x, y) => x.cast("double") - y).as("qv"))
+    val cand = encodedRes
       .join(index.assignments.select(col(idCol),
         col("cell").as("ivf_cell")), idCol)
       .select(col(idCol).as("c_id"), col("ivf_cell"),
         posexplode(col("codes")).as(Seq("sub", "pcell")))
-    val wnd = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("adc").asc, col("c_id").asc)
-    codeRows.join(broadcast(table), Seq("ivf_cell", "sub", "pcell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .groupBy("q_id", "c_id")
-      .agg(round(sum(col("_qd")), 6).as("adc"))
-      .withColumn("rn", row_number().over(wnd))
-      .filter(col("rn") <= topK)
-      .select(col("q_id"), col("c_id"), col("adc"), col("rn"))
+    adcTopK(qres, Seq("ivf_cell"), cand, codebooks, m, w, topK)
   }
 
   /** ADC top-k: queries precompute (sub, cell) → distance tables
@@ -263,20 +230,31 @@ object Quant {
   def pqTopK(encoded: DataFrame, codebooks: DataFrame,
              queries: DataFrame, idCol: String, vecCol: String,
              topK: Int, m: Int): DataFrame = {
-    val dim = queries.select(size(col(vecCol)).as("d")).limit(1).collect()
-      .headOption.map(_.getInt(0)).getOrElse(0)
-    require(dim > 0 && dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val qsub = subframe(
-      queries.select(col(idCol).as("q_id"), col(vecCol)), "q_id", vecCol,
-      m, dim / m)
-    val table = qsub.join(broadcast(codebooks), "sub")
-      .select(col("q_id"), col("sub"), col("cell"),
-        subDist(col("subvec"), col("centroid")).as("_qd"))
-    val codeRows = encoded.select(col(idCol).as("c_id"),
-      posexplode(col("codes")).as(Seq("sub", "cell")))
+    val cand = encoded.select(col(idCol).as("c_id"),
+      posexplode(col("codes")).as(Seq("sub", "pcell")))
+    adcTopK(queries.select(col(idCol).as("q_id"), col(vecCol).as("qv")),
+      Seq.empty, cand, codebooks, m, subWidth(queries, vecCol, m), topK)
+  }
+
+  /** The ADC scorer of every PQ search. `qside` holds `q_id`, the
+    * query-side `keys` and the vector `qv` its distance tables come
+    * from; the tables — (q_id, keys, sub, pcell) → round(L2², 9), m·k
+    * rows per query side — are broadcast and joined to the candidates'
+    * code rows `cand` (`c_id`, `keys`, `sub`, `pcell`) on keys, sub and
+    * pcell. A candidate scores round(Σ, 6) over its m lookups; the top
+    * `topK` per query rank adc asc, c_id asc, never the query itself.
+    */
+  private def adcTopK(qside: DataFrame, keys: Seq[String], cand: DataFrame,
+                      codebooks: DataFrame, m: Int, w: Int,
+                      topK: Int): DataFrame = {
+    val table = subframe(qside, "qv", m, w)
+      .join(broadcast(codebooks), "sub")
+      .select((("q_id" +: keys).distinct :+ "sub").map(col) ++
+        Seq(col("cell").as("pcell"),
+          subDist(col("subvec"), col("centroid")).as("_qd")): _*)
     val wnd = org.apache.spark.sql.expressions.Window
       .partitionBy("q_id").orderBy(col("adc").asc, col("c_id").asc)
-    codeRows.join(broadcast(table), Seq("sub", "cell"))
+    cand.join(broadcast(table), keys ++ Seq("sub", "pcell"))
       .filter(col("q_id") =!= col("c_id"))
       .groupBy("q_id", "c_id")
       .agg(round(sum(col("_qd")), 6).as("adc"))

@@ -140,9 +140,8 @@ final case class LogStore(spark: SparkSession, dir: String) {
       // path (r11 review finding). History bytes overestimate the
       // current-rows size, so the target errs toward one file — right for
       // control-plane tables (the data plane never goes through LogStore).
-      val bytes = Fs.dataFileStats(path(table), conf).bytes
-      val nTarget =
-        math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+      val nTarget = Fs.targetFileCount(
+        Fs.dataFileStats(path(table), conf).bytes, targetFileBytes).toInt
       latest(table, keys)
         .withColumn("_version_ts", lit(LogStore.nextVersion()))
         .coalesce(nTarget)

@@ -132,8 +132,8 @@ object Maintenance {
                           targetFileBytes: Long = 128L * 1024 * 1024): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
     graft.core.Fs.replace(tableDir, conf) { staging =>
-      val bytes = graft.core.Fs.dirBytesRecursive(tableDir, conf)
-      val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+      val nFiles = graft.core.Fs.targetFileCount(
+        graft.core.Fs.dataFileStats(tableDir, conf).bytes, targetFileBytes).toInt
       val writer =
         spark.read.parquet(tableDir).coalesce(nFiles).write.mode("overwrite")
       partitionBy.fold(writer)(c => writer.partitionBy(c)).parquet(staging)
@@ -159,8 +159,7 @@ object Maintenance {
                              fileRatio: Double = 4.0): Option[Int] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val stats = graft.core.Fs.dataFileStats(tableDir, conf)
-    val targetFiles =
-      math.max(1L, (stats.bytes + targetFileBytes - 1) / targetFileBytes)
+    val targetFiles = graft.core.Fs.targetFileCount(stats.bytes, targetFileBytes)
     if (stats.files <= maxFiles || stats.files < fileRatio * targetFiles) None
     else Some(compactStagingTable(spark, tableDir, partitionBy, targetFileBytes))
   }

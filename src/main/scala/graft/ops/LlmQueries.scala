@@ -29,6 +29,23 @@ object LlmQueries {
 
   private def tb(s: SparkSession, dir: String) = Tables(s, dir)
 
+  /** `orders` with a 16-sample PCM16 mono WAV per row in `payload`:
+    * sample i is (o_orderkey * 7 + i * 13) % 65536, behind the
+    * canonical 44-byte header (RIFF size 68, fmt 16/PCM/1ch/8kHz/16bit,
+    * data size 32) — all little-endian.
+    */
+  private def synthWav(s: SparkSession, dir: String): DataFrame = {
+    val headerHex = "52494646" + "44000000" + "57415645" +
+      "666d7420" + "10000000" + "0100" + "0100" + "401f0000" +
+      "803e0000" + "0200" + "1000" + "64617461" + "20000000"
+    val sampleHex = (0 until 16).map { i =>
+      val v = s"((o_orderkey * 7 + $i * 13) % 65536)"
+      concat(hexByte(expr(s"$v % 256")), hexByte(expr(s"$v div 256")))
+    }
+    tb(s, dir).orders
+      .withColumn("payload", unhex(concat((lit(headerHex) +: sampleHex): _*)))
+  }
+
   /** Shared dup-pair store: the verified LSH+Jaccard pair index over
     * `documents` is materialized ONCE per corpus dir per JVM
     * ([[graft.llm.DedupIndex.writePairStore]]) and every dup-family
@@ -361,7 +378,7 @@ object LlmQueries {
     * symmetric edge closure → min-reachable-id components in `comp`.
     */
   private val ccCteChain =
-    """bands AS MATERIALIZED (
+    s"""bands AS MATERIALIZED (
       |  SELECT doc_id, 0 AS band_id, md5(mh1||mh2||mh3||mh4) AS band_key FROM sigs
       |  UNION ALL
       |  SELECT doc_id, 1 AS band_id, md5(mh5||mh6||mh7||mh8) AS band_key FROM sigs),
@@ -380,14 +397,7 @@ object LlmQueries {
       |  JOIN sizes s1 ON s1.doc_id = p.id1
       |  JOIN sizes s2 ON s2.doc_id = p.id2
       |  WHERE coalesce(i.n, 0) * 10 >= (s1.sz + s2.sz - coalesce(i.n, 0)) * 8),
-      |nodes AS (SELECT id1 AS id FROM dups UNION SELECT id2 FROM dups),
-      |sym AS (SELECT id1 AS src, id2 AS dst FROM dups
-      |        UNION ALL SELECT id2, id1 FROM dups),
-      |reach AS (
-      |  SELECT id, id AS r FROM nodes
-      |  UNION
-      |  SELECT s.dst AS id, rc.r FROM reach rc JOIN sym s ON s.src = rc.id),
-      |comp AS MATERIALIZED (SELECT id, min(r) AS component FROM reach GROUP BY id)""".stripMargin
+      |${OracleSql.ccComponents("dups", materialized = true)}""".stripMargin
 
   /** BPE oracle CTE generators (graft.llm.Bpe): the corpus word-count
     * base (rows of (word, wcount, pos, tok), `</w>`-terminated chars),
@@ -480,6 +490,184 @@ object LlmQueries {
        |         SELECT vec_id, sub, cell,
        |                row_number() OVER (PARTITION BY vec_id, sub ORDER BY d, cell) AS rn
        |         FROM ${p}af_d) WHERE rn = 1)""".stripMargin
+
+  /** The IVFPQ oracles' coarse quantizer: the flat IVF fit under
+    * `i`-prefixed names without MATERIALIZED (`ic2` centroids, `iaf`
+    * assignment) plus the 5 queries' 2-cell probe `iprobes`.
+    */
+  private lazy val ivfpqCoarseCtes: String =
+    s"""WITH e AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
+       |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
+       |vn AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
+       |iparams AS (SELECT greatest(1, count(*) // 64) AS stride FROM embeddings),
+       |iseed AS (SELECT vec_id
+       |  FROM (SELECT vec_id, md5(CAST(vec_id AS VARCHAR)) AS h FROM embeddings), iparams
+       |  WHERE ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
+       |       + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
+       |       + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
+       |       + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) % stride = 0
+       |  ORDER BY vec_id LIMIT 16),
+       |ic0 AS (SELECT dense_rank() OVER (ORDER BY s.vec_id) - 1 AS cell, e.i, e.v AS m
+       |        FROM iseed s JOIN e ON e.vec_id = s.vec_id),
+       |${ivfAssign("ic0", "ia1")},
+       |${ivfRecompute("ia1", "ic1")},
+       |${ivfAssign("ic1", "ia2")},
+       |${ivfRecompute("ia2", "ic2")},
+       |${ivfAssign("ic2", "iaf")},
+       |${ivfAssign("ic2", "iprobes", where = "AND e.vec_id < 5", limit = 2)}""".stripMargin
+
+  /** Top 3 of `sc(q_id, c_id, adc)` per query, adc then c_id — the
+    * ranking rule of every PQ search (graft.llm.Quant).
+    */
+  private lazy val adcTop3Tail: String =
+    """SELECT q_id, c_id, adc, CAST(rn AS BIGINT) AS rn FROM (
+      |  SELECT q_id, c_id, adc,
+      |         row_number() OVER (PARTITION BY q_id ORDER BY adc, c_id) AS rn
+      |  FROM sc) WHERE rn <= 3 ORDER BY q_id, rn""".stripMargin
+
+  /** The count-min sketch replay of Sketch.cmsCounters over the corpus
+    * tokens — 4 md5 rows × 256 cells in `counters` — and the cells of
+    * the 12 probe tokens in `pe`.
+    */
+  private lazy val cmsGridCtes: String =
+    s"""WITH probes(tok) AS (VALUES ('the'),('a'),('fast'),('slow'),('data'),('row'),
+       |                            ('table'),('join'),('window'),('batch'),('spark'),('stream')),
+       |toks AS (SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS t
+       |         FROM documents),
+       |seeds AS (SELECT unnest([0, 1, 2, 3]) AS seed),
+       |cells AS (SELECT seed, ${duckBucket("CAST(seed AS VARCHAR) || '|' || t")} % 256 AS bucket
+       |          FROM toks, seeds),
+       |counters AS (SELECT seed, bucket, CAST(count(*) AS BIGINT) AS cnt
+       |             FROM cells GROUP BY seed, bucket),
+       |pe AS (SELECT tok, seed, ${duckBucket("CAST(seed AS VARCHAR) || '|' || tok")} % 256 AS bucket
+       |       FROM probes, seeds)""".stripMargin
+
+  /** Winnowing fingerprints (8-char grams, window 4) as distinct
+    * `sel(doc_id, fp)` rows — TextAnalysis.winnow's replay.
+    */
+  private lazy val winnowSelCtes: String =
+    """WITH d AS (SELECT doc_id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS nm FROM documents),
+      |g AS (SELECT doc_id, nm, len(nm) AS n FROM d WHERE len(nm) >= 8),
+      |hp AS (SELECT doc_id, i, substr(md5(substr(nm, CAST(i AS INTEGER), 8)), 1, 8) AS h, n - 7 AS ng
+      |       FROM (SELECT doc_id, nm, n, unnest(range(1, n - 6)) AS i FROM g)),
+      |wm AS (SELECT doc_id, i, ng,
+      |              min(h) OVER (PARTITION BY doc_id ORDER BY i
+      |                           ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
+      |       FROM hp),
+      |sel AS (SELECT DISTINCT doc_id, fp FROM wm WHERE i <= greatest(1, ng - 3))""".stripMargin
+
+  /** Per-label centroids from quantized-integer means (`cm`, norms in
+    * `cn`), vector norms (`vn`) and member-to-own-centroid dots
+    * (`dots`) — shared by the cohesion and the outlier reports.
+    */
+  private lazy val labelCentroidCtes: String =
+    """WITH e AS (SELECT vec_id, label, generate_subscripts(embedding, 1) AS i,
+      |                  CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
+      |cm AS (SELECT label, i,
+      |         CAST(sum(CAST(floor(v * 1000000.0) AS BIGINT)) AS DOUBLE)
+      |           / (1000000.0 * count(*)) AS m
+      |       FROM e GROUP BY label, i),
+      |cn AS (SELECT label, sqrt(sum(m * m)) AS cnrm FROM cm GROUP BY label),
+      |vn AS (SELECT vec_id, sqrt(sum(v * v)) AS vnrm FROM e GROUP BY vec_id),
+      |dots AS (SELECT e.vec_id, e.label, sum(e.v * cm.m) AS dot
+      |         FROM e JOIN cm ON cm.label = e.label AND cm.i = e.i
+      |         GROUP BY e.vec_id, e.label)""".stripMargin
+
+  /** LSH bucket ids per (vector, table) from the md5 hyperplanes in
+    * `signs` (which the caller defines, with its own table width).
+    */
+  private lazy val lshBucketCtes: String =
+    """e AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
+      |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
+      |dots AS (
+      |  SELECT e.vec_id, s.table_id, s.bit_pos, sum(e.v * s.sign) AS dot_j
+      |  FROM e JOIN signs s ON s.i = e.i GROUP BY e.vec_id, s.table_id, s.bit_pos),
+      |buckets AS (
+      |  SELECT vec_id, table_id,
+      |    CAST(sum(CASE WHEN dot_j > 0 THEN 1 ELSE 0 END * CAST(round(pow(2, bit_pos)) AS BIGINT)) AS BIGINT) AS bucket
+      |  FROM dots GROUP BY vec_id, table_id)""".stripMargin
+
+  /** Multi-table LSH candidates (corpus-sized signature width, as
+    * DedupOps.deriveBits) verified by exact cosine in `cos(id1, id2,
+    * cosine)` — the embedding near-dup replay.
+    */
+  private lazy val lshNearDupCtes: String =
+    s"""WITH params AS (
+       |  SELECT CAST(greatest(1, (
+       |    SELECT count(*) FROM (SELECT unnest(range(1, 17)) AS b)
+       |    WHERE (CAST(1 AS BIGINT) << b) * 64 <= (SELECT count(*) FROM embeddings)
+       |  )) AS INTEGER) AS bits),
+       |signs AS (
+       |  SELECT j, CAST(j // bits AS INTEGER) AS table_id, j % bits AS bit_pos, i,
+       |    CASE WHEN (strpos('0123456789abcdef',
+       |           substr(md5(CAST(j AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 1)) - 1) % 2 = 0
+       |         THEN 1.0 ELSE -1.0 END AS sign
+       |  FROM (SELECT unnest(range(0, 4 * bits)) AS j, bits FROM params)
+       |  CROSS JOIN (SELECT unnest(range(1, 65)) AS i)),
+       |$lshBucketCtes,
+       |pairs AS (
+       |  SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
+       |  FROM buckets a JOIN buckets b ON a.table_id = b.table_id AND a.bucket = b.bucket
+       |  WHERE a.vec_id < b.vec_id),
+       |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
+       |cos AS (
+       |  SELECT p.id1, p.id2, round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
+       |  FROM pairs p
+       |  JOIN e a ON a.vec_id = p.id1 JOIN e b ON b.vec_id = p.id2 AND b.i = a.i
+       |  JOIN norms na ON na.vec_id = p.id1 JOIN norms nb ON nb.vec_id = p.id2
+       |  GROUP BY p.id1, p.id2)""".stripMargin
+
+  /** The perceptual-hash sketch: `src` (the corpus plus single-byte-edit
+    * copies of every tenth doc at id + 100000) and its 4×16-bit average
+    * hash `sk(doc_id, ph0..ph3)`.
+    */
+  private lazy val phashSketchCtes: String =
+    """src AS (
+      |  SELECT doc_id, text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 100000, substr(text,1,10) || 'Z' || substr(text,12)
+      |  FROM documents WHERE doc_id % 10 = 0),
+      |h AS (SELECT doc_id, hex(encode(text)) AS hx, octet_length(encode(text)) AS n
+      |      FROM src WHERE octet_length(encode(text)) > 0),
+      |b AS (SELECT doc_id, j,
+      |        (strpos('0123456789ABCDEF', substr(hx, CAST((j*n) // 64 AS INTEGER)*2+1, 1)) - 1) * 16
+      |      + (strpos('0123456789ABCDEF', substr(hx, CAST((j*n) // 64 AS INTEGER)*2+2, 1)) - 1) AS bv
+      |      FROM (SELECT doc_id, hx, n, unnest(range(0, 64)) AS j FROM h)),
+      |t AS (SELECT doc_id, sum(bv) AS total FROM b GROUP BY doc_id),
+      |ch AS (SELECT b.doc_id, CAST(b.j // 16 AS INTEGER) AS c,
+      |         CAST(sum(CASE WHEN b.bv * 64 > t.total THEN 1::BIGINT << CAST(b.j % 16 AS INTEGER) ELSE 0 END) AS BIGINT) AS v
+      |       FROM b JOIN t USING (doc_id) GROUP BY b.doc_id, b.j // 16),
+      |sk AS (SELECT doc_id,
+      |         max(CASE WHEN c=0 THEN v END) AS ph0, max(CASE WHEN c=1 THEN v END) AS ph1,
+      |         max(CASE WHEN c=2 THEN v END) AS ph2, max(CASE WHEN c=3 THEN v END) AS ph3
+      |       FROM ch GROUP BY doc_id)""".stripMargin
+
+  /** 8×8 average hash of a rule-valued gray grid over `part`: `gv` is
+    * the pixel rule in p_partkey and the grid index j (x = j % 8,
+    * y = j // 8); bits above the mean pack into four 16-bit words.
+    */
+  private def aHashOracle(gv: String): String =
+    s"""WITH g AS (
+       |  SELECT p_partkey AS id, j,
+       |         $gv AS gv
+       |  FROM part CROSS JOIN (SELECT unnest(range(0, 64)) AS j)),
+       |t AS (SELECT id, sum(gv) AS tot FROM g GROUP BY id),
+       |b AS (SELECT g.id, g.j,
+       |             CASE WHEN g.gv * 64 > t.tot THEN 1 ELSE 0 END AS bit
+       |      FROM g JOIN t USING (id))
+       |SELECT id,
+       |  CAST(sum(bit * (1 << CAST(j % 16 AS INTEGER))) FILTER (j // 16 = 0) AS BIGINT) AS ph0,
+       |  CAST(sum(bit * (1 << CAST(j % 16 AS INTEGER))) FILTER (j // 16 = 1) AS BIGINT) AS ph1,
+       |  CAST(sum(bit * (1 << CAST(j % 16 AS INTEGER))) FILTER (j // 16 = 2) AS BIGINT) AS ph2,
+       |  CAST(sum(bit * (1 << CAST(j % 16 AS INTEGER))) FILTER (j // 16 = 3) AS BIGINT) AS ph3
+       |FROM b GROUP BY id ORDER BY id""".stripMargin
+
+  /** The select items `s0..s7`: per-stripe sums of `v`, the stripe
+    * being `pos` — Multimodal.decodeStripeSums' output columns.
+    */
+  private def stripeSums(pos: String, v: String): String =
+    (0 until 8).map(i => s"  CAST(sum(CASE WHEN $pos = $i THEN $v END) AS BIGINT) AS s$i")
+      .mkString(",\n")
 
   /** DuckDB face of Sampling.hashBucket / blockedPairs' sub-hash: the
     * first 4 md5 hex digits of the id as an integer in [0, 65536).
@@ -700,9 +888,8 @@ object LlmQueries {
        |        JOIN w1 w ON w.component = c.component
        |        WHERE a.cluster_id <> w.wcid OR a.split <> w.wsplit)""".stripMargin
 
-  // the full IVF replay (seed, 2 k-means iterations, probe, exact
-  // re-rank) -- shared by q_ann_ivf_topk and q_stream_ann_index, whose
-  // cell-partitioned store fold must reproduce exactly this result
+  // the flat IVF fit replay (seed, 2 k-means iterations): `e`, `vn`,
+  // the centroids `c2` and the final assignment `af`
   private lazy val ivfFitCtes: String =
     s"""WITH e AS MATERIALIZED (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
          |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
@@ -723,27 +910,82 @@ object LlmQueries {
          |${ivfRecompute("a2", "c2")},
          |${ivfAssign("c2", "af")}""".stripMargin
 
-  // the full IVF replay continued: probe + exact re-rank
-  private lazy val ivfTopkOracleSql: String =
+  /** Fit + per-query probe (`nprobe` cells of the queries `where`
+    * selects) + candidate dedup + exact re-rank cosine, ending with
+    * `cosT(q_id, c_id, cosine)` — the flat search every IVF face shares.
+    */
+  private def ivfCosCtes(where: String, nprobe: Int, cosT: String): String =
     s"""$ivfFitCtes,
-         |${ivfAssign("c2", "probes", where = "AND e.vec_id < 10", limit = 4)},
-         |cands AS (
-         |  SELECT DISTINCT p.vec_id AS q_id, a.vec_id AS c_id
-         |  FROM probes p JOIN af a ON a.cell = p.cell
-         |  WHERE a.vec_id <> p.vec_id),
-         |cos AS (
-         |  SELECT p.q_id, p.c_id,
-         |         round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
-         |  FROM cands p
-         |  JOIN e a ON a.vec_id = p.q_id JOIN e b ON b.vec_id = p.c_id AND b.i = a.i
-         |  JOIN vn na ON na.vec_id = p.q_id JOIN vn nb ON nb.vec_id = p.c_id
-         |  GROUP BY p.q_id, p.c_id),
-         |ranked AS (
-         |  SELECT q_id, c_id, cosine,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
-         |  FROM cos)
-         |SELECT q_id, c_id, cosine, CAST(rn AS BIGINT) AS rn
-         |FROM ranked WHERE rn <= 3 ORDER BY q_id, rn""".stripMargin
+       |${ivfAssign("c2", "probes", where = where, limit = nprobe)},
+       |cands AS (
+       |  SELECT DISTINCT p.vec_id AS q_id, a.vec_id AS c_id
+       |  FROM probes p JOIN af a ON a.cell = p.cell
+       |  WHERE a.vec_id <> p.vec_id),
+       |$cosT AS (
+       |  SELECT p.q_id, p.c_id,
+       |         round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
+       |  FROM cands p
+       |  JOIN e a ON a.vec_id = p.q_id JOIN e b ON b.vec_id = p.c_id AND b.i = a.i
+       |  JOIN vn na ON na.vec_id = p.q_id JOIN vn nb ON nb.vec_id = p.c_id
+       |  GROUP BY p.q_id, p.c_id)""".stripMargin
+
+  /** Top 3 of `cos` per query, cosine desc then c_id. */
+  private lazy val cosTop3Tail: String =
+    """ranked AS (
+      |  SELECT q_id, c_id, cosine,
+      |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
+      |  FROM cos)
+      |SELECT q_id, c_id, cosine, CAST(rn AS BIGINT) AS rn
+      |FROM ranked WHERE rn <= 3 ORDER BY q_id, rn""".stripMargin
+
+  /** Top 2 different-label neighbours per query out of `cos`: the label
+    * mismatch filters before the rank window.
+    */
+  private lazy val hardNegTail: String =
+    """lab AS (SELECT vec_id, label FROM embeddings),
+      |neg AS (
+      |  SELECT c.q_id, la.label AS q_label, c.c_id, lb.label AS c_label, c.cosine
+      |  FROM cos c JOIN lab la ON la.vec_id = c.q_id
+      |  JOIN lab lb ON lb.vec_id = c.c_id
+      |  WHERE la.label IS DISTINCT FROM lb.label),
+      |ranked AS (
+      |  SELECT q_id, q_label, c_id, c_label, cosine,
+      |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
+      |  FROM neg)
+      |SELECT q_id, q_label, c_id, c_label, cosine, CAST(rn AS BIGINT) AS rn
+      |FROM ranked WHERE rn <= 2 ORDER BY q_id, rn""".stripMargin
+
+  /** The search shared by q_ann_ivf_topk and its streaming faces
+    * (q_stream_ann_index, q_stream_ann_refit): 10 queries, nprobe 4.
+    */
+  private lazy val ivfTopkOracleSql: String =
+    s"""${ivfCosCtes("AND e.vec_id < 10", 4, "cos")},
+       |$cosTop3Tail""".stripMargin
+
+  /** The 10 queries' IVF (nprobe 2) top-k beside their brute-force
+    * top-k, both ranked cosine desc then c_id: the approximate list is
+    * the CTE that `approx` opens, the exact one the CTE that `exact`
+    * opens, each with its own select list over `rn <= k`.
+    */
+  private def ivfVsExactCtes(approx: String, exact: String, k: Int): String =
+    s"""${ivfCosCtes("AND e.vec_id < 10", 2, "cosiv")},
+       |$approx FROM (
+       |  SELECT q_id, c_id,
+       |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
+       |  FROM cosiv) WHERE rn <= $k),
+       |bq AS (SELECT vec_id AS q_id FROM embeddings WHERE vec_id < 10),
+       |ball AS (
+       |  SELECT bq.q_id, e2.vec_id AS c_id,
+       |         round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
+       |  FROM bq JOIN (SELECT DISTINCT vec_id FROM embeddings) e2
+       |    ON e2.vec_id <> bq.q_id
+       |  JOIN e a ON a.vec_id = bq.q_id JOIN e b ON b.vec_id = e2.vec_id AND b.i = a.i
+       |  JOIN vn na ON na.vec_id = bq.q_id JOIN vn nb ON nb.vec_id = e2.vec_id
+       |  GROUP BY bq.q_id, e2.vec_id),
+       |$exact FROM (
+       |  SELECT q_id, c_id,
+       |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
+       |  FROM ball) WHERE rn <= $k)""".stripMargin
 
   val all: Map[String, Q] = Map(
 
@@ -1415,17 +1657,7 @@ object LlmQueries {
     //      one-sided guarantee). Fully deterministic — the oracle
     //      replays the same md5 cells in SQL. ----
     "q_llm_cms_counts" -> Q(
-      s"""WITH probes(tok) AS (VALUES ('the'),('a'),('fast'),('slow'),('data'),('row'),
-        |                            ('table'),('join'),('window'),('batch'),('spark'),('stream')),
-        |toks AS (SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS t
-        |         FROM documents),
-        |seeds AS (SELECT unnest([0, 1, 2, 3]) AS seed),
-        |cells AS (SELECT seed, ${duckBucket("CAST(seed AS VARCHAR) || '|' || t")} % 256 AS bucket
-        |          FROM toks, seeds),
-        |counters AS (SELECT seed, bucket, CAST(count(*) AS BIGINT) AS cnt
-        |             FROM cells GROUP BY seed, bucket),
-        |pe AS (SELECT tok, seed, ${duckBucket("CAST(seed AS VARCHAR) || '|' || tok")} % 256 AS bucket
-        |       FROM probes, seeds),
+      s"""$cmsGridCtes,
         |est AS (SELECT tok, CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS est
         |        FROM pe LEFT JOIN counters c USING (seed, bucket) GROUP BY tok),
         |ex AS (SELECT t AS tok, CAST(count(*) AS BIGINT) AS n_exact
@@ -1482,17 +1714,7 @@ object LlmQueries {
     //      the one-shot SQL replay — the monoid-merge exactness
     //      guarantee. Micro-batch wiring is SketchStreamSpec's job. ----
     "q_stream_cms" -> Q(
-      s"""WITH probes(tok) AS (VALUES ('the'),('a'),('fast'),('slow'),('data'),('row'),
-        |                            ('table'),('join'),('window'),('batch'),('spark'),('stream')),
-        |toks AS (SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS t
-        |         FROM documents),
-        |seeds AS (SELECT unnest([0, 1, 2, 3]) AS seed),
-        |cells AS (SELECT seed, ${duckBucket("CAST(seed AS VARCHAR) || '|' || t")} % 256 AS bucket
-        |          FROM toks, seeds),
-        |counters AS (SELECT seed, bucket, CAST(count(*) AS BIGINT) AS cnt
-        |             FROM cells GROUP BY seed, bucket),
-        |pe AS (SELECT tok, seed, ${duckBucket("CAST(seed AS VARCHAR) || '|' || tok")} % 256 AS bucket
-        |       FROM probes, seeds)
+      s"""$cmsGridCtes
         |SELECT pe.tok AS token, CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS est
         |FROM pe LEFT JOIN counters c USING (seed, bucket)
         |GROUP BY pe.tok ORDER BY token""".stripMargin) { (s, dir) =>
@@ -1886,15 +2108,7 @@ object LlmQueries {
     // The oracle computes window minima with a window frame; the engine
     // uses pure map-side array algebra (no shuffle) — same semantics.
     "q_llm_winnow" -> Q(
-      """WITH d AS (SELECT doc_id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS nm FROM documents),
-        |g AS (SELECT doc_id, nm, len(nm) AS n FROM d WHERE len(nm) >= 8),
-        |hp AS (SELECT doc_id, i, substr(md5(substr(nm, CAST(i AS INTEGER), 8)), 1, 8) AS h, n - 7 AS ng
-        |       FROM (SELECT doc_id, nm, n, unnest(range(1, n - 6)) AS i FROM g)),
-        |wm AS (SELECT doc_id, i, ng,
-        |              min(h) OVER (PARTITION BY doc_id ORDER BY i
-        |                           ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-        |       FROM hp),
-        |sel AS (SELECT DISTINCT doc_id, fp FROM wm WHERE i <= greatest(1, ng - 3))
+      s"""$winnowSelCtes
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fps, min(fp) AS fp_min, max(fp) AS fp_max,
         |       md5(string_agg(fp, ',' ORDER BY fp)) AS fp_checksum
         |FROM sel GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
@@ -1907,15 +2121,7 @@ object LlmQueries {
     //      (df > 64: dup-cluster/boilerplate signal, and the quadratic
     //      hot keys) excluded before the self-join ----
     "q_llm_winnow_overlap" -> Q(
-      """WITH d AS (SELECT doc_id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS nm FROM documents),
-        |g AS (SELECT doc_id, nm, len(nm) AS n FROM d WHERE len(nm) >= 8),
-        |hp AS (SELECT doc_id, i, substr(md5(substr(nm, CAST(i AS INTEGER), 8)), 1, 8) AS h, n - 7 AS ng
-        |       FROM (SELECT doc_id, nm, n, unnest(range(1, n - 6)) AS i FROM g)),
-        |wm AS (SELECT doc_id, i, ng,
-        |              min(h) OVER (PARTITION BY doc_id ORDER BY i
-        |                           ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-        |       FROM hp),
-        |sel AS (SELECT DISTINCT doc_id, fp FROM wm WHERE i <= greatest(1, ng - 3)),
+      s"""$winnowSelCtes,
         |rare AS (SELECT fp FROM sel GROUP BY fp HAVING count(*) <= 64),
         |flt AS (SELECT s.doc_id, s.fp FROM sel s JOIN rare r ON r.fp = s.fp)
         |SELECT a.doc_id AS id1, b.doc_id AS id2, CAST(count(*) AS BIGINT) AS shared_fps
@@ -1930,7 +2136,7 @@ object LlmQueries {
     //      exact dedup → benchmark decontamination; doc_id % 41 = 0
     //      plays the benchmark, as in q_llm_decontaminate) ----
     "q_llm_curation_e2e" -> Q(
-      """WITH swl(sl, w) AS (VALUES ('en','the'),('en','a'),('en','fast'),('en','slow'),
+      raw"""WITH swl(sl, w) AS (VALUES ('en','the'),('en','a'),('en','fast'),('en','slow'),
         |  ('es','data'),('es','row'),('fr','table'),('fr','join'),
         |  ('de','window'),('de','batch'),('zh','spark'),('zh','stream')),
         |toks AS MATERIALIZED (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS t
@@ -1941,15 +2147,7 @@ object LlmQueries {
         |win AS MATERIALIZED (SELECT doc_id FROM (SELECT doc_id, sl, row_number() OVER (PARTITION BY doc_id ORDER BY lc DESC, sl) AS rn FROM lv)
         |        WHERE rn = 1 AND sl = 'en'),
         |sh2 AS MATERIALIZED (SELECT doc_id, sum(lc) AS sw_hits FROM lv GROUP BY doc_id),
-        |gate AS (SELECT d.doc_id, d.text
-        |         FROM documents d
-        |         JOIN win ON win.doc_id = d.doc_id
-        |         JOIN ta ON ta.doc_id = d.doc_id
-        |         LEFT JOIN sh2 ON sh2.doc_id = d.doc_id
-        |         WHERE d.doc_id % 41 <> 0
-        |           AND NOT (ta.top_token_n * 5 >= ta.n_tokens)
-        |           AND ta.n_tokens + 2 * coalesce(sh2.sw_hits, 0)
-        |               - 3 * len(regexp_extract_all(lower(d.text), '[^a-z0-9\s]')) >= 0),
+        |${OracleSql.curationGate},
         |ded AS (SELECT min(doc_id) AS doc_id FROM gate GROUP BY md5(text)),
         |btoks AS (SELECT list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS ts
         |          FROM documents WHERE doc_id % 41 = 0),
@@ -2136,17 +2334,7 @@ object LlmQueries {
     // ---- per-label centroid cohesion: mean member-to-centroid cosine,
     //      centroid from the quantized-integer means above ----
     "q_emb_label_cohesion" -> Q(
-      """WITH e AS (SELECT vec_id, label, generate_subscripts(embedding, 1) AS i,
-        |                  CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-        |cm AS (SELECT label, i,
-        |         CAST(sum(CAST(floor(v * 1000000.0) AS BIGINT)) AS DOUBLE)
-        |           / (1000000.0 * count(*)) AS m
-        |       FROM e GROUP BY label, i),
-        |cn AS (SELECT label, sqrt(sum(m * m)) AS cnrm FROM cm GROUP BY label),
-        |vn AS (SELECT vec_id, sqrt(sum(v * v)) AS vnrm FROM e GROUP BY vec_id),
-        |dots AS (SELECT e.vec_id, e.label, sum(e.v * cm.m) AS dot
-        |         FROM e JOIN cm ON cm.label = e.label AND cm.i = e.i
-        |         GROUP BY e.vec_id, e.label),
+      s"""$labelCentroidCtes,
         |cs AS (SELECT d.label, d.dot / (vn.vnrm * cn.cnrm) AS c
         |       FROM dots d JOIN vn ON vn.vec_id = d.vec_id
         |       JOIN cn ON cn.label = d.label)
@@ -2161,17 +2349,7 @@ object LlmQueries {
     //      (same quantized-integer centroid as cohesion), flagged under
     //      0.0 on the 4-decimal rounded value ----
     "q_emb_outliers" -> Q(
-      """WITH e AS (SELECT vec_id, label, generate_subscripts(embedding, 1) AS i,
-        |                  CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-        |cm AS (SELECT label, i,
-        |         CAST(sum(CAST(floor(v * 1000000.0) AS BIGINT)) AS DOUBLE)
-        |           / (1000000.0 * count(*)) AS m
-        |       FROM e GROUP BY label, i),
-        |cn AS (SELECT label, sqrt(sum(m * m)) AS cnrm FROM cm GROUP BY label),
-        |vn AS (SELECT vec_id, sqrt(sum(v * v)) AS vnrm FROM e GROUP BY vec_id),
-        |dots AS (SELECT e.vec_id, e.label, sum(e.v * cm.m) AS dot
-        |         FROM e JOIN cm ON cm.label = e.label AND cm.i = e.i
-        |         GROUP BY e.vec_id, e.label)
+      s"""$labelCentroidCtes
         |SELECT d.vec_id, d.label,
         |       round(d.dot / (vn.vnrm * cn.cnrm), 4) AS cos_centroid,
         |       round(d.dot / (vn.vnrm * cn.cnrm), 4) < 0.0 AS is_outlier
@@ -3370,38 +3548,7 @@ object LlmQueries {
     //      width is corpus-sized exactly like DedupOps.deriveBits:
     //      floor(log2(n/64)) clamped to [1,16], by integer shifts. ----
     "q_llm_embedding_near_dup" -> Q(
-      """WITH params AS (
-        |  SELECT CAST(greatest(1, (
-        |    SELECT count(*) FROM (SELECT unnest(range(1, 17)) AS b)
-        |    WHERE (CAST(1 AS BIGINT) << b) * 64 <= (SELECT count(*) FROM embeddings)
-        |  )) AS INTEGER) AS bits),
-        |signs AS (
-        |  SELECT j, CAST(j // bits AS INTEGER) AS table_id, j % bits AS bit_pos, i,
-        |    CASE WHEN (strpos('0123456789abcdef',
-        |           substr(md5(CAST(j AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 1)) - 1) % 2 = 0
-        |         THEN 1.0 ELSE -1.0 END AS sign
-        |  FROM (SELECT unnest(range(0, 4 * bits)) AS j, bits FROM params)
-        |  CROSS JOIN (SELECT unnest(range(1, 65)) AS i)),
-        |e AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-        |dots AS (
-        |  SELECT e.vec_id, s.table_id, s.bit_pos, sum(e.v * s.sign) AS dot_j
-        |  FROM e JOIN signs s ON s.i = e.i GROUP BY e.vec_id, s.table_id, s.bit_pos),
-        |buckets AS (
-        |  SELECT vec_id, table_id,
-        |    CAST(sum(CASE WHEN dot_j > 0 THEN 1 ELSE 0 END * CAST(round(pow(2, bit_pos)) AS BIGINT)) AS BIGINT) AS bucket
-        |  FROM dots GROUP BY vec_id, table_id),
-        |pairs AS (
-        |  SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM buckets a JOIN buckets b ON a.table_id = b.table_id AND a.bucket = b.bucket
-        |  WHERE a.vec_id < b.vec_id),
-        |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
-        |cos AS (
-        |  SELECT p.id1, p.id2, round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
-        |  FROM pairs p
-        |  JOIN e a ON a.vec_id = p.id1 JOIN e b ON b.vec_id = p.id2 AND b.i = a.i
-        |  JOIN norms na ON na.vec_id = p.id1 JOIN norms nb ON nb.vec_id = p.id2
-        |  GROUP BY p.id1, p.id2)
+      s"""$lshNearDupCtes
         |SELECT id1, id2, cosine FROM cos WHERE cosine >= 0.4
         |ORDER BY id1, id2""".stripMargin) { (s, dir) =>
       DedupOps.embeddingNearDups(tb(s, dir).embeddings, "vec_id", "embedding",
@@ -3417,38 +3564,7 @@ object LlmQueries {
     //      driver's convention); same LSH+verify stack as
     //      q_llm_embedding_near_dup, then two id-keyed lang joins ----
     "q_llm_crosslingual_dup" -> Q(
-      """WITH params AS (
-        |  SELECT CAST(greatest(1, (
-        |    SELECT count(*) FROM (SELECT unnest(range(1, 17)) AS b)
-        |    WHERE (CAST(1 AS BIGINT) << b) * 64 <= (SELECT count(*) FROM embeddings)
-        |  )) AS INTEGER) AS bits),
-        |signs AS (
-        |  SELECT j, CAST(j // bits AS INTEGER) AS table_id, j % bits AS bit_pos, i,
-        |    CASE WHEN (strpos('0123456789abcdef',
-        |           substr(md5(CAST(j AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 1)) - 1) % 2 = 0
-        |         THEN 1.0 ELSE -1.0 END AS sign
-        |  FROM (SELECT unnest(range(0, 4 * bits)) AS j, bits FROM params)
-        |  CROSS JOIN (SELECT unnest(range(1, 65)) AS i)),
-        |e AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-        |dots AS (
-        |  SELECT e.vec_id, s.table_id, s.bit_pos, sum(e.v * s.sign) AS dot_j
-        |  FROM e JOIN signs s ON s.i = e.i GROUP BY e.vec_id, s.table_id, s.bit_pos),
-        |buckets AS (
-        |  SELECT vec_id, table_id,
-        |    CAST(sum(CASE WHEN dot_j > 0 THEN 1 ELSE 0 END * CAST(round(pow(2, bit_pos)) AS BIGINT)) AS BIGINT) AS bucket
-        |  FROM dots GROUP BY vec_id, table_id),
-        |pairs AS (
-        |  SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM buckets a JOIN buckets b ON a.table_id = b.table_id AND a.bucket = b.bucket
-        |  WHERE a.vec_id < b.vec_id),
-        |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
-        |cos AS (
-        |  SELECT p.id1, p.id2, round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
-        |  FROM pairs p
-        |  JOIN e a ON a.vec_id = p.id1 JOIN e b ON b.vec_id = p.id2 AND b.i = a.i
-        |  JOIN norms na ON na.vec_id = p.id1 JOIN norms nb ON nb.vec_id = p.id2
-        |  GROUP BY p.id1, p.id2),
+      s"""$lshNearDupCtes,
         |nd AS (SELECT id1, id2, cosine FROM cos WHERE cosine >= 0.3)
         |SELECT nd.id1, nd.id2, nd.cosine,
         |       d1.lang AS group1, d2.lang AS group2
@@ -3469,21 +3585,13 @@ object LlmQueries {
     //      — multi-table buckets → candidate join → cosine re-rank — is
     //      SQL-expressible; recall vs brute force asserted in AnnSpec ----
     "q_ann_lsh_topk" -> Q(
-      """WITH signs AS (
+      s"""WITH signs AS (
         |  SELECT j, CAST(j // 4 AS INTEGER) AS table_id, j % 4 AS bit_pos, i,
         |    CASE WHEN (strpos('0123456789abcdef',
         |           substr(md5(CAST(j AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 1)) - 1) % 2 = 0
         |         THEN 1.0 ELSE -1.0 END AS sign
         |  FROM (SELECT unnest(range(0, 16)) AS j) CROSS JOIN (SELECT unnest(range(1, 65)) AS i)),
-        |e AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-        |dots AS (
-        |  SELECT e.vec_id, s.table_id, s.bit_pos, sum(e.v * s.sign) AS dot_j
-        |  FROM e JOIN signs s ON s.i = e.i GROUP BY e.vec_id, s.table_id, s.bit_pos),
-        |buckets AS (
-        |  SELECT vec_id, table_id,
-        |    CAST(sum(CASE WHEN dot_j > 0 THEN 1 ELSE 0 END * CAST(round(pow(2, bit_pos)) AS BIGINT)) AS BIGINT) AS bucket
-        |  FROM dots GROUP BY vec_id, table_id),
+        |$lshBucketCtes,
         |cands AS (
         |  SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS c_id
         |  FROM buckets q JOIN buckets c ON c.table_id = q.table_id AND c.bucket = q.bucket
@@ -3495,12 +3603,7 @@ object LlmQueries {
         |  JOIN e a ON a.vec_id = p.q_id JOIN e b ON b.vec_id = p.c_id AND b.i = a.i
         |  JOIN norms na ON na.vec_id = p.q_id JOIN norms nb ON nb.vec_id = p.c_id
         |  GROUP BY p.q_id, p.c_id),
-        |ranked AS (
-        |  SELECT q_id, c_id, cosine,
-        |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
-        |  FROM cos)
-        |SELECT q_id, c_id, cosine, CAST(rn AS BIGINT) AS rn
-        |FROM ranked WHERE rn <= 3 ORDER BY q_id, rn""".stripMargin) { (s, dir) =>
+        |$cosTop3Tail""".stripMargin) { (s, dir) =>
       val emb = tb(s, dir).embeddings
       Ann.annTopKLsh(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", 3)
         .withColumn("rn", col("rn").cast("long"))
@@ -3526,7 +3629,7 @@ object LlmQueries {
     //      a cell-partitioned store in 3 micro-batches (frozen
     //      centroids; ingest=dir-as-marker idempotency), then search
     //      probes 4 cells with DPP pruning the store's partitions.
-    //      Must reproduce q_ann_ivf_topk EXACTLY — same oracle SQL. ----
+    //      Gated by q_ann_ivf_topk's `ivfTopkOracleSql`. ----
     "q_stream_ann_index" -> Q(ivfTopkOracleSql) { (s, dir) =>
       val emb = tb(s, dir).embeddings
       val index = Ivf.fit(emb, "vec_id", "embedding", k = 16, iters = 2)
@@ -3550,8 +3653,8 @@ object LlmQueries {
     //      fits fresh centroids over the accumulated store and
     //      rewrites the cell partitions in place. Ivf.fit is
     //      deterministic (md5 seeding, quantized-integer means), so
-    //      post-refit search must reproduce q_ann_ivf_topk EXACTLY —
-    //      same oracle SQL, which knows nothing of the stale start. ----
+    //      post-refit search is gated by q_ann_ivf_topk's
+    //      `ivfTopkOracleSql`, which knows nothing of the stale start. ----
     "q_stream_ann_refit" -> Q(ivfTopkOracleSql) { (s, dir) =>
       val emb = tb(s, dir).embeddings
       val stale = Ivf.fit(emb.filter(col("vec_id") % 3 === 0),
@@ -3600,24 +3703,7 @@ object LlmQueries {
     //      mean member-to-centroid cosine — the skew/coherence report
     //      behind the choice of k ----
     "q_ann_cluster_stats" -> Q(
-      s"""WITH e AS MATERIALIZED (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-         |vn AS MATERIALIZED (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
-         |params AS (SELECT greatest(1, count(*) // 64) AS stride FROM embeddings),
-         |seed AS MATERIALIZED (SELECT vec_id
-         |  FROM (SELECT vec_id, md5(CAST(vec_id AS VARCHAR)) AS h FROM embeddings), params
-         |  WHERE ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
-         |       + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
-         |       + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-         |       + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) % stride = 0
-         |  ORDER BY vec_id LIMIT 16),
-         |c0 AS MATERIALIZED (SELECT dense_rank() OVER (ORDER BY s.vec_id) - 1 AS cell, e.i, e.v AS m
-         |       FROM seed s JOIN e ON e.vec_id = s.vec_id),
-         |${ivfAssign("c0", "a1")},
-         |${ivfRecompute("a1", "c1")},
-         |${ivfAssign("c1", "a2")},
-         |${ivfRecompute("a2", "c2")},
-         |${ivfAssign("c2", "af")},
+      s"""$ivfFitCtes,
          |cn2 AS (SELECT cell, sqrt(sum(m*m)) AS cnrm FROM c2 GROUP BY cell),
          |dots AS (SELECT a.vec_id, a.cell, sum(e.v * c.m) AS dot
          |         FROM af a JOIN e ON e.vec_id = a.vec_id
@@ -3640,42 +3726,8 @@ object LlmQueries {
     //      Shuffle cell join (never a probe-side broadcast of the
     //      corpus); oracle unrolls the identical fit + probe + re-rank. ----
     "q_ann_knn_graph" -> Q(
-      s"""WITH e AS MATERIALIZED (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-         |vn AS MATERIALIZED (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
-         |params AS (SELECT greatest(1, count(*) // 64) AS stride FROM embeddings),
-         |seed AS MATERIALIZED (SELECT vec_id
-         |  FROM (SELECT vec_id, md5(CAST(vec_id AS VARCHAR)) AS h FROM embeddings), params
-         |  WHERE ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
-         |       + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
-         |       + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-         |       + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) % stride = 0
-         |  ORDER BY vec_id LIMIT 16),
-         |c0 AS MATERIALIZED (SELECT dense_rank() OVER (ORDER BY s.vec_id) - 1 AS cell, e.i, e.v AS m
-         |       FROM seed s JOIN e ON e.vec_id = s.vec_id),
-         |${ivfAssign("c0", "a1")},
-         |${ivfRecompute("a1", "c1")},
-         |${ivfAssign("c1", "a2")},
-         |${ivfRecompute("a2", "c2")},
-         |${ivfAssign("c2", "af")},
-         |${ivfAssign("c2", "probes", limit = 2)},
-         |cands AS (
-         |  SELECT DISTINCT p.vec_id AS q_id, a.vec_id AS c_id
-         |  FROM probes p JOIN af a ON a.cell = p.cell
-         |  WHERE a.vec_id <> p.vec_id),
-         |cos AS (
-         |  SELECT p.q_id, p.c_id,
-         |         round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
-         |  FROM cands p
-         |  JOIN e a ON a.vec_id = p.q_id JOIN e b ON b.vec_id = p.c_id AND b.i = a.i
-         |  JOIN vn na ON na.vec_id = p.q_id JOIN vn nb ON nb.vec_id = p.c_id
-         |  GROUP BY p.q_id, p.c_id),
-         |ranked AS (
-         |  SELECT q_id, c_id, cosine,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
-         |  FROM cos)
-         |SELECT q_id, c_id, cosine, CAST(rn AS BIGINT) AS rn
-         |FROM ranked WHERE rn <= 3 ORDER BY q_id, rn""".stripMargin) { (s, dir) =>
+      s"""${ivfCosCtes("", 2, "cos")},
+         |$cosTop3Tail""".stripMargin) { (s, dir) =>
       val emb = tb(s, dir).embeddings
       val index = Ivf.fit(emb, "vec_id", "embedding", k = 16, iters = 2)
       Ivf.knnGraph(emb, index, "vec_id", "embedding",
@@ -3690,48 +3742,8 @@ object LlmQueries {
     //      mismatch filters before the rank so same-label near
     //      neighbors can't crowd negatives out ----
     "q_emb_hard_negatives" -> Q(
-      s"""WITH e AS MATERIALIZED (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-         |vn AS MATERIALIZED (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
-         |params AS (SELECT greatest(1, count(*) // 64) AS stride FROM embeddings),
-         |seed AS MATERIALIZED (SELECT vec_id
-         |  FROM (SELECT vec_id, md5(CAST(vec_id AS VARCHAR)) AS h FROM embeddings), params
-         |  WHERE ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
-         |       + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
-         |       + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-         |       + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) % stride = 0
-         |  ORDER BY vec_id LIMIT 16),
-         |c0 AS MATERIALIZED (SELECT dense_rank() OVER (ORDER BY s.vec_id) - 1 AS cell, e.i, e.v AS m
-         |       FROM seed s JOIN e ON e.vec_id = s.vec_id),
-         |${ivfAssign("c0", "a1")},
-         |${ivfRecompute("a1", "c1")},
-         |${ivfAssign("c1", "a2")},
-         |${ivfRecompute("a2", "c2")},
-         |${ivfAssign("c2", "af")},
-         |${ivfAssign("c2", "probes", limit = 2)},
-         |cands AS (
-         |  SELECT DISTINCT p.vec_id AS q_id, a.vec_id AS c_id
-         |  FROM probes p JOIN af a ON a.cell = p.cell
-         |  WHERE a.vec_id <> p.vec_id),
-         |cos AS (
-         |  SELECT p.q_id, p.c_id,
-         |         round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
-         |  FROM cands p
-         |  JOIN e a ON a.vec_id = p.q_id JOIN e b ON b.vec_id = p.c_id AND b.i = a.i
-         |  JOIN vn na ON na.vec_id = p.q_id JOIN vn nb ON nb.vec_id = p.c_id
-         |  GROUP BY p.q_id, p.c_id),
-         |lab AS (SELECT vec_id, label FROM embeddings),
-         |neg AS (
-         |  SELECT c.q_id, la.label AS q_label, c.c_id, lb.label AS c_label, c.cosine
-         |  FROM cos c JOIN lab la ON la.vec_id = c.q_id
-         |  JOIN lab lb ON lb.vec_id = c.c_id
-         |  WHERE la.label IS DISTINCT FROM lb.label),
-         |ranked AS (
-         |  SELECT q_id, q_label, c_id, c_label, cosine,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
-         |  FROM neg)
-         |SELECT q_id, q_label, c_id, c_label, cosine, CAST(rn AS BIGINT) AS rn
-         |FROM ranked WHERE rn <= 2 ORDER BY q_id, rn""".stripMargin) { (s, dir) =>
+      s"""${ivfCosCtes("", 2, "cos")},
+         |$hardNegTail""".stripMargin) { (s, dir) =>
       val emb = tb(s, dir).embeddings
       val index = Ivf.fit(emb, "vec_id", "embedding", k = 16, iters = 2)
       Ivf.hardNegatives(emb, index, "vec_id", "embedding", "label",
@@ -3751,12 +3763,7 @@ object LlmQueries {
     "q_ann_knn_graph_scaled" -> Q(
       s"""$ivf2FitCtes,
          |$ivf2ProbeCtes,
-         |ranked AS (
-         |  SELECT q_id, c_id, cosine,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
-         |  FROM cos)
-         |SELECT q_id, c_id, cosine, CAST(rn AS BIGINT) AS rn
-         |FROM ranked WHERE rn <= 3 ORDER BY q_id, rn""".stripMargin) { (s, dir) =>
+         |$cosTop3Tail""".stripMargin) { (s, dir) =>
       val emb = tb(s, dir).embeddings
       val index = Ivf.fitTwoLevel(emb, "vec_id", "embedding",
         targetCellSize = 128, iters = 2)
@@ -3804,9 +3811,9 @@ object LlmQueries {
     // ---- streaming ANN store refit through the two-level quantizer
     //      (AnnIndexStream.refitTwoLevel): the store accumulates under
     //      a STALE flat quantizer, refitTwoLevel retrains on the
-    //      sample and rewrites the leaf partitions; searchTwoLevel
-    //      must then reproduce q_ann_ivf2_topk EXACTLY — same oracle
-    //      SQL, which knows nothing of the stale start ----
+    //      sample and rewrites the leaf partitions; searchTwoLevel is
+    //      then gated by q_ann_ivf2_topk's `ivf2TopkOracleSql`, which
+    //      knows nothing of the stale start ----
     "q_stream_ann2_refit" -> Q(ivf2TopkOracleSql) { (s, dir) =>
       val emb = tb(s, dir).embeddings
       val stale = Ivf.fit(emb.filter(col("vec_id") % 3 === 0),
@@ -3836,18 +3843,7 @@ object LlmQueries {
     "q_emb_hard_negatives_scaled" -> Q(
       s"""$ivf2FitCtes,
          |$ivf2ProbeCtes,
-         |lab AS (SELECT vec_id, label FROM embeddings),
-         |neg AS (
-         |  SELECT c.q_id, la.label AS q_label, c.c_id, lb.label AS c_label, c.cosine
-         |  FROM cos c JOIN lab la ON la.vec_id = c.q_id
-         |  JOIN lab lb ON lb.vec_id = c.c_id
-         |  WHERE la.label IS DISTINCT FROM lb.label),
-         |ranked AS (
-         |  SELECT q_id, q_label, c_id, c_label, cosine,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
-         |  FROM neg)
-         |SELECT q_id, q_label, c_id, c_label, cosine, CAST(rn AS BIGINT) AS rn
-         |FROM ranked WHERE rn <= 2 ORDER BY q_id, rn""".stripMargin) { (s, dir) =>
+         |$hardNegTail""".stripMargin) { (s, dir) =>
       val emb = tb(s, dir).embeddings
       val index = Ivf.fitTwoLevel(emb, "vec_id", "embedding",
         targetCellSize = 128, iters = 2)
@@ -3861,53 +3857,8 @@ object LlmQueries {
     //      the IVF nprobe=2 result against the exact brute-force top-3
     //      — the evaluation face every ANN knob is tuned by ----
     "q_ann_recall" -> Q(
-      s"""WITH e AS MATERIALIZED (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-         |vn AS MATERIALIZED (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
-         |params AS (SELECT greatest(1, count(*) // 64) AS stride FROM embeddings),
-         |seed AS MATERIALIZED (SELECT vec_id
-         |  FROM (SELECT vec_id, md5(CAST(vec_id AS VARCHAR)) AS h FROM embeddings), params
-         |  WHERE ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
-         |       + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
-         |       + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-         |       + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) % stride = 0
-         |  ORDER BY vec_id LIMIT 16),
-         |c0 AS MATERIALIZED (SELECT dense_rank() OVER (ORDER BY s.vec_id) - 1 AS cell, e.i, e.v AS m
-         |       FROM seed s JOIN e ON e.vec_id = s.vec_id),
-         |${ivfAssign("c0", "a1")},
-         |${ivfRecompute("a1", "c1")},
-         |${ivfAssign("c1", "a2")},
-         |${ivfRecompute("a2", "c2")},
-         |${ivfAssign("c2", "af")},
-         |${ivfAssign("c2", "probes", where = "AND e.vec_id < 10", limit = 2)},
-         |cands AS (
-         |  SELECT DISTINCT p.vec_id AS q_id, a.vec_id AS c_id
-         |  FROM probes p JOIN af a ON a.cell = p.cell
-         |  WHERE a.vec_id <> p.vec_id),
-         |cosiv AS (
-         |  SELECT p.q_id, p.c_id,
-         |         round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
-         |  FROM cands p
-         |  JOIN e a ON a.vec_id = p.q_id JOIN e b ON b.vec_id = p.c_id AND b.i = a.i
-         |  JOIN vn na ON na.vec_id = p.q_id JOIN vn nb ON nb.vec_id = p.c_id
-         |  GROUP BY p.q_id, p.c_id),
-         |aprx AS (SELECT q_id, c_id FROM (
-         |  SELECT q_id, c_id,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
-         |  FROM cosiv) WHERE rn <= 3),
-         |bq AS (SELECT vec_id AS q_id FROM embeddings WHERE vec_id < 10),
-         |ball AS (
-         |  SELECT bq.q_id, e2.vec_id AS c_id,
-         |         round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
-         |  FROM bq JOIN (SELECT DISTINCT vec_id FROM embeddings) e2
-         |    ON e2.vec_id <> bq.q_id
-         |  JOIN e a ON a.vec_id = bq.q_id JOIN e b ON b.vec_id = e2.vec_id AND b.i = a.i
-         |  JOIN vn na ON na.vec_id = bq.q_id JOIN vn nb ON nb.vec_id = e2.vec_id
-         |  GROUP BY bq.q_id, e2.vec_id),
-         |exact AS (SELECT q_id, c_id FROM (
-         |  SELECT q_id, c_id,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
-         |  FROM ball) WHERE rn <= 3),
+      s"""${ivfVsExactCtes("aprx AS (SELECT q_id, c_id",
+           "exact AS (SELECT q_id, c_id", 3)},
          |hits AS (SELECT a.q_id, CAST(count(*) AS BIGINT) AS n_hits
          |         FROM aprx a JOIN exact x ON x.q_id = a.q_id AND x.c_id = a.c_id
          |         GROUP BY a.q_id),
@@ -3959,10 +3910,7 @@ object LlmQueries {
          |       FROM af JOIN qt ON qt.sub = af.sub AND qt.cell = af.cell
          |       WHERE af.vec_id <> qt.q_id
          |       GROUP BY qt.q_id, af.vec_id)
-         |SELECT q_id, c_id, adc, CAST(rn AS BIGINT) AS rn FROM (
-         |  SELECT q_id, c_id, adc,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY adc, c_id) AS rn
-         |  FROM sc) WHERE rn <= 3 ORDER BY q_id, rn""".stripMargin) { (s, dir) =>
+         |$adcTop3Tail""".stripMargin) { (s, dir) =>
       val emb = tb(s, dir).embeddings
       val books = Quant.pqFit(emb, "vec_id", "embedding", m = 2, k = 8, iters = 1)
       val codes = Quant.pqEncode(emb, "vec_id", "embedding", books, m = 2)
@@ -3976,25 +3924,7 @@ object LlmQueries {
     //      candidates, PQ codes pay the ADC lookups — the two trained
     //      structures composed; oracle unrolls BOTH fits ----
     "q_ann_ivfpq_topk" -> Q(
-      s"""WITH e AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-         |vn AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
-         |iparams AS (SELECT greatest(1, count(*) // 64) AS stride FROM embeddings),
-         |iseed AS (SELECT vec_id
-         |  FROM (SELECT vec_id, md5(CAST(vec_id AS VARCHAR)) AS h FROM embeddings), iparams
-         |  WHERE ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
-         |       + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
-         |       + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-         |       + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) % stride = 0
-         |  ORDER BY vec_id LIMIT 16),
-         |ic0 AS (SELECT dense_rank() OVER (ORDER BY s.vec_id) - 1 AS cell, e.i, e.v AS m
-         |        FROM iseed s JOIN e ON e.vec_id = s.vec_id),
-         |${ivfAssign("ic0", "ia1")},
-         |${ivfRecompute("ia1", "ic1")},
-         |${ivfAssign("ic1", "ia2")},
-         |${ivfRecompute("ia2", "ic2")},
-         |${ivfAssign("ic2", "iaf")},
-         |${ivfAssign("ic2", "iprobes", where = "AND e.vec_id < 5", limit = 2)},
+      s"""$ivfpqCoarseCtes,
          |${pqChain(8, "pq")},
          |cand AS (SELECT DISTINCT p.vec_id AS q_id, a.vec_id AS c_id
          |         FROM iprobes p JOIN iaf a ON a.cell = p.cell
@@ -4009,10 +3939,7 @@ object LlmQueries {
          |       FROM cand cn JOIN pqaf a ON a.vec_id = cn.c_id
          |       JOIN qt ON qt.q_id = cn.q_id AND qt.sub = a.sub AND qt.cell = a.cell
          |       GROUP BY cn.q_id, cn.c_id)
-         |SELECT q_id, c_id, adc, CAST(rn AS BIGINT) AS rn FROM (
-         |  SELECT q_id, c_id, adc,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY adc, c_id) AS rn
-         |  FROM sc) WHERE rn <= 3 ORDER BY q_id, rn""".stripMargin) { (s, dir) =>
+         |$adcTop3Tail""".stripMargin) { (s, dir) =>
       val emb = tb(s, dir).embeddings
       val index = Ivf.fit(emb, "vec_id", "embedding", k = 16, iters = 2)
       val books = Quant.pqFit(emb, "vec_id", "embedding", m = 2, k = 8, iters = 1)
@@ -4028,25 +3955,7 @@ object LlmQueries {
     //      computed per probed cell from the query's own residual —
     //      the full FAISS recipe, both fits + residual view unrolled ----
     "q_ann_ivfpq_residual" -> Q(
-      s"""WITH e AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-         |vn AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
-         |iparams AS (SELECT greatest(1, count(*) // 64) AS stride FROM embeddings),
-         |iseed AS (SELECT vec_id
-         |  FROM (SELECT vec_id, md5(CAST(vec_id AS VARCHAR)) AS h FROM embeddings), iparams
-         |  WHERE ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
-         |       + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
-         |       + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-         |       + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) % stride = 0
-         |  ORDER BY vec_id LIMIT 16),
-         |ic0 AS (SELECT dense_rank() OVER (ORDER BY s.vec_id) - 1 AS cell, e.i, e.v AS m
-         |        FROM iseed s JOIN e ON e.vec_id = s.vec_id),
-         |${ivfAssign("ic0", "ia1")},
-         |${ivfRecompute("ia1", "ic1")},
-         |${ivfAssign("ic1", "ia2")},
-         |${ivfRecompute("ia2", "ic2")},
-         |${ivfAssign("ic2", "iaf")},
-         |${ivfAssign("ic2", "iprobes", where = "AND e.vec_id < 5", limit = 2)},
+      s"""$ivfpqCoarseCtes,
          |eres AS (SELECT e.vec_id, e.i, e.v - c.m AS v
          |         FROM e JOIN iaf a ON a.vec_id = e.vec_id
          |         JOIN ic2 c ON c.cell = a.cell AND c.i = e.i),
@@ -4066,10 +3975,7 @@ object LlmQueries {
          |       JOIN qt ON qt.ivf_cell = ia.cell AND qt.sub = a.sub AND qt.cell = a.cell
          |       WHERE a.vec_id <> qt.q_id
          |       GROUP BY qt.q_id, a.vec_id)
-         |SELECT q_id, c_id, adc, CAST(rn AS BIGINT) AS rn FROM (
-         |  SELECT q_id, c_id, adc,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY adc, c_id) AS rn
-         |  FROM sc) WHERE rn <= 3 ORDER BY q_id, rn""".stripMargin) { (s, dir) =>
+         |$adcTop3Tail""".stripMargin) { (s, dir) =>
       val emb = tb(s, dir).embeddings
       val index = Ivf.fit(emb, "vec_id", "embedding", k = 16, iters = 2)
       val res = Quant.residuals(emb, index, "vec_id", "embedding")
@@ -4085,53 +3991,8 @@ object LlmQueries {
     //      recall@3 — IVF list vs exact, linear gains k+1−exact_rank,
     //      log2 discount, round-6 compare ----
     "q_ann_ndcg" -> Q(
-      s"""WITH e AS MATERIALIZED (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-         |vn AS MATERIALIZED (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
-         |params AS (SELECT greatest(1, count(*) // 64) AS stride FROM embeddings),
-         |seed AS MATERIALIZED (SELECT vec_id
-         |  FROM (SELECT vec_id, md5(CAST(vec_id AS VARCHAR)) AS h FROM embeddings), params
-         |  WHERE ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
-         |       + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
-         |       + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-         |       + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) % stride = 0
-         |  ORDER BY vec_id LIMIT 16),
-         |c0 AS MATERIALIZED (SELECT dense_rank() OVER (ORDER BY s.vec_id) - 1 AS cell, e.i, e.v AS m
-         |       FROM seed s JOIN e ON e.vec_id = s.vec_id),
-         |${ivfAssign("c0", "a1")},
-         |${ivfRecompute("a1", "c1")},
-         |${ivfAssign("c1", "a2")},
-         |${ivfRecompute("a2", "c2")},
-         |${ivfAssign("c2", "af")},
-         |${ivfAssign("c2", "probes", where = "AND e.vec_id < 10", limit = 2)},
-         |cands AS (
-         |  SELECT DISTINCT p.vec_id AS q_id, a.vec_id AS c_id
-         |  FROM probes p JOIN af a ON a.cell = p.cell
-         |  WHERE a.vec_id <> p.vec_id),
-         |cosiv AS (
-         |  SELECT p.q_id, p.c_id,
-         |         round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
-         |  FROM cands p
-         |  JOIN e a ON a.vec_id = p.q_id JOIN e b ON b.vec_id = p.c_id AND b.i = a.i
-         |  JOIN vn na ON na.vec_id = p.q_id JOIN vn nb ON nb.vec_id = p.c_id
-         |  GROUP BY p.q_id, p.c_id),
-         |aprx AS (SELECT q_id, c_id, rn FROM (
-         |  SELECT q_id, c_id,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
-         |  FROM cosiv) WHERE rn <= 3),
-         |bq AS (SELECT vec_id AS q_id FROM embeddings WHERE vec_id < 10),
-         |ball AS (
-         |  SELECT bq.q_id, e2.vec_id AS c_id,
-         |         round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
-         |  FROM bq JOIN (SELECT DISTINCT vec_id FROM embeddings) e2
-         |    ON e2.vec_id <> bq.q_id
-         |  JOIN e a ON a.vec_id = bq.q_id JOIN e b ON b.vec_id = e2.vec_id AND b.i = a.i
-         |  JOIN vn na ON na.vec_id = bq.q_id JOIN vn nb ON nb.vec_id = e2.vec_id
-         |  GROUP BY bq.q_id, e2.vec_id),
-         |exact AS (SELECT q_id, c_id, 4 - rn AS gain FROM (
-         |  SELECT q_id, c_id,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
-         |  FROM ball) WHERE rn <= 3),
+      s"""${ivfVsExactCtes("aprx AS (SELECT q_id, c_id, rn",
+           "exact AS (SELECT q_id, c_id, 4 - rn AS gain", 3)},
          |dcg AS (SELECT a.q_id, sum(x.gain / log2(a.rn + 1)) AS dcg
          |        FROM aprx a JOIN exact x ON x.q_id = a.q_id AND x.c_id = a.c_id
          |        GROUP BY a.q_id),
@@ -4215,53 +4076,8 @@ object LlmQueries {
     },
 
     "q_ann_rrf" -> Q(
-      s"""WITH e AS MATERIALIZED (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-         |vn AS MATERIALIZED (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
-         |params AS (SELECT greatest(1, count(*) // 64) AS stride FROM embeddings),
-         |seed AS MATERIALIZED (SELECT vec_id
-         |  FROM (SELECT vec_id, md5(CAST(vec_id AS VARCHAR)) AS h FROM embeddings), params
-         |  WHERE ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
-         |       + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
-         |       + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-         |       + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) % stride = 0
-         |  ORDER BY vec_id LIMIT 16),
-         |c0 AS MATERIALIZED (SELECT dense_rank() OVER (ORDER BY s.vec_id) - 1 AS cell, e.i, e.v AS m
-         |       FROM seed s JOIN e ON e.vec_id = s.vec_id),
-         |${ivfAssign("c0", "a1")},
-         |${ivfRecompute("a1", "c1")},
-         |${ivfAssign("c1", "a2")},
-         |${ivfRecompute("a2", "c2")},
-         |${ivfAssign("c2", "af")},
-         |${ivfAssign("c2", "probes", where = "AND e.vec_id < 10", limit = 2)},
-         |cands AS (
-         |  SELECT DISTINCT p.vec_id AS q_id, a.vec_id AS c_id
-         |  FROM probes p JOIN af a ON a.cell = p.cell
-         |  WHERE a.vec_id <> p.vec_id),
-         |cosiv AS (
-         |  SELECT p.q_id, p.c_id,
-         |         round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
-         |  FROM cands p
-         |  JOIN e a ON a.vec_id = p.q_id JOIN e b ON b.vec_id = p.c_id AND b.i = a.i
-         |  JOIN vn na ON na.vec_id = p.q_id JOIN vn nb ON nb.vec_id = p.c_id
-         |  GROUP BY p.q_id, p.c_id),
-         |l1 AS (SELECT q_id, c_id, rn FROM (
-         |  SELECT q_id, c_id,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
-         |  FROM cosiv) WHERE rn <= 5),
-         |bq AS (SELECT vec_id AS q_id FROM embeddings WHERE vec_id < 10),
-         |ball AS (
-         |  SELECT bq.q_id, e2.vec_id AS c_id,
-         |         round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
-         |  FROM bq JOIN (SELECT DISTINCT vec_id FROM embeddings) e2
-         |    ON e2.vec_id <> bq.q_id
-         |  JOIN e a ON a.vec_id = bq.q_id JOIN e b ON b.vec_id = e2.vec_id AND b.i = a.i
-         |  JOIN vn na ON na.vec_id = bq.q_id JOIN vn nb ON nb.vec_id = e2.vec_id
-         |  GROUP BY bq.q_id, e2.vec_id),
-         |l2 AS (SELECT q_id, c_id, rn FROM (
-         |  SELECT q_id, c_id,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
-         |  FROM ball) WHERE rn <= 5),
+      s"""${ivfVsExactCtes("l1 AS (SELECT q_id, c_id, rn",
+           "l2 AS (SELECT q_id, c_id, rn", 5)},
          |contrib AS (
          |  SELECT q_id, c_id, 1000000000000 // (60 + rn) AS c FROM l1
          |  UNION ALL SELECT q_id, c_id, 1000000000000 // (60 + rn) FROM l2),
@@ -4281,29 +4097,12 @@ object LlmQueries {
         .orderBy("q_id", "fused_rank")
     },
 
-    // ---- SemDeDup-style semantic dedup: IVF k-means cells (same
-    //      deterministic fit as q_ann_ivf_topk, oracle unrolls the 2
-    //      Lloyd iterations) → within-cell cosine ≥ τ → drop every
+    // ---- SemDeDup-style semantic dedup: IVF k-means cells (the
+    //      `ivfFitCtes` replay of q_ann_ivf_topk's fit) → within-cell
+    //      cosine ≥ τ → drop every
     //      vector with a smaller-id near neighbor ----
     "q_llm_semantic_dedup" -> Q(
-      s"""WITH e AS MATERIALIZED (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-         |             CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-         |vn AS MATERIALIZED (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
-         |params AS (SELECT greatest(1, count(*) // 64) AS stride FROM embeddings),
-         |seed AS MATERIALIZED (SELECT vec_id
-         |  FROM (SELECT vec_id, md5(CAST(vec_id AS VARCHAR)) AS h FROM embeddings), params
-         |  WHERE ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
-         |       + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
-         |       + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
-         |       + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) % stride = 0
-         |  ORDER BY vec_id LIMIT 16),
-         |c0 AS MATERIALIZED (SELECT dense_rank() OVER (ORDER BY s.vec_id) - 1 AS cell, e.i, e.v AS m
-         |       FROM seed s JOIN e ON e.vec_id = s.vec_id),
-         |${ivfAssign("c0", "a1")},
-         |${ivfRecompute("a1", "c1")},
-         |${ivfAssign("c1", "a2")},
-         |${ivfRecompute("a2", "c2")},
-         |${ivfAssign("c2", "af")},
+      s"""$ivfFitCtes,
          |pairs AS (SELECT a.vec_id AS id1, b.vec_id AS id2
          |          FROM af a JOIN af b ON b.cell = a.cell AND a.vec_id < b.vec_id),
          |cos AS (SELECT p.id1, p.id2,
@@ -4421,25 +4220,7 @@ object LlmQueries {
     //      their aHash distance; the Spark side goes through pigeonhole
     //      buckets, the oracle through the naive all-pairs join. ----
     "q_mm_phash_near_dup" -> Q(
-      """WITH src AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000, substr(text,1,10) || 'Z' || substr(text,12)
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |h AS (SELECT doc_id, hex(encode(text)) AS hx, octet_length(encode(text)) AS n
-        |      FROM src WHERE octet_length(encode(text)) > 0),
-        |b AS (SELECT doc_id, j,
-        |        (strpos('0123456789ABCDEF', substr(hx, CAST((j*n) // 64 AS INTEGER)*2+1, 1)) - 1) * 16
-        |      + (strpos('0123456789ABCDEF', substr(hx, CAST((j*n) // 64 AS INTEGER)*2+2, 1)) - 1) AS bv
-        |      FROM (SELECT doc_id, hx, n, unnest(range(0, 64)) AS j FROM h)),
-        |t AS (SELECT doc_id, sum(bv) AS total FROM b GROUP BY doc_id),
-        |ch AS (SELECT b.doc_id, CAST(b.j // 16 AS INTEGER) AS c,
-        |         CAST(sum(CASE WHEN b.bv * 64 > t.total THEN 1::BIGINT << CAST(b.j % 16 AS INTEGER) ELSE 0 END) AS BIGINT) AS v
-        |       FROM b JOIN t USING (doc_id) GROUP BY b.doc_id, b.j // 16),
-        |sk AS (SELECT doc_id,
-        |         max(CASE WHEN c=0 THEN v END) AS ph0, max(CASE WHEN c=1 THEN v END) AS ph1,
-        |         max(CASE WHEN c=2 THEN v END) AS ph2, max(CASE WHEN c=3 THEN v END) AS ph3
-        |       FROM ch GROUP BY doc_id)
+      s"""WITH $phashSketchCtes
         |SELECT a.doc_id AS id1, b.doc_id AS id2,
         |       CAST(bit_count(xor(a.ph0,b.ph0))+bit_count(xor(a.ph1,b.ph1))
         |           +bit_count(xor(a.ph2,b.ph2))+bit_count(xor(a.ph3,b.ph3)) AS BIGINT) AS hamming
@@ -4462,37 +4243,12 @@ object LlmQueries {
     //      connected components → canonical per cluster; the oracle
     //      replays the components as a recursive CTE ----
     "q_mm_image_dedup" -> Q(
-      """WITH RECURSIVE src AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000, substr(text,1,10) || 'Z' || substr(text,12)
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |h AS (SELECT doc_id, hex(encode(text)) AS hx, octet_length(encode(text)) AS n
-        |      FROM src WHERE octet_length(encode(text)) > 0),
-        |b AS (SELECT doc_id, j,
-        |        (strpos('0123456789ABCDEF', substr(hx, CAST((j*n) // 64 AS INTEGER)*2+1, 1)) - 1) * 16
-        |      + (strpos('0123456789ABCDEF', substr(hx, CAST((j*n) // 64 AS INTEGER)*2+2, 1)) - 1) AS bv
-        |      FROM (SELECT doc_id, hx, n, unnest(range(0, 64)) AS j FROM h)),
-        |t AS (SELECT doc_id, sum(bv) AS total FROM b GROUP BY doc_id),
-        |ch AS (SELECT b.doc_id, CAST(b.j // 16 AS INTEGER) AS c,
-        |         CAST(sum(CASE WHEN b.bv * 64 > t.total THEN 1::BIGINT << CAST(b.j % 16 AS INTEGER) ELSE 0 END) AS BIGINT) AS v
-        |       FROM b JOIN t USING (doc_id) GROUP BY b.doc_id, b.j // 16),
-        |sk AS (SELECT doc_id,
-        |         max(CASE WHEN c=0 THEN v END) AS ph0, max(CASE WHEN c=1 THEN v END) AS ph1,
-        |         max(CASE WHEN c=2 THEN v END) AS ph2, max(CASE WHEN c=3 THEN v END) AS ph3
-        |       FROM ch GROUP BY doc_id),
+      s"""WITH RECURSIVE $phashSketchCtes,
         |prs AS (SELECT a.doc_id AS id1, b.doc_id AS id2
         |        FROM sk a JOIN sk b ON a.doc_id < b.doc_id
         |        WHERE bit_count(xor(a.ph0,b.ph0))+bit_count(xor(a.ph1,b.ph1))
         |             +bit_count(xor(a.ph2,b.ph2))+bit_count(xor(a.ph3,b.ph3)) <= 3),
-        |nodes AS (SELECT id1 AS id FROM prs UNION SELECT id2 FROM prs),
-        |sym AS (SELECT id1 AS src, id2 AS dst FROM prs
-        |        UNION ALL SELECT id2, id1 FROM prs),
-        |reach AS (
-        |  SELECT id, id AS r FROM nodes
-        |  UNION
-        |  SELECT s.dst AS id, rc.r FROM reach rc JOIN sym s ON s.src = rc.id),
-        |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id)
+        |${OracleSql.ccComponents("prs", materialized = false)}
         |SELECT src.doc_id, CAST(coalesce(c.component, src.doc_id) AS BIGINT) AS component,
         |       coalesce(c.component, src.doc_id) = src.doc_id AS is_canonical
         |FROM src LEFT JOIN comp c ON c.id = src.doc_id
@@ -4547,7 +4303,7 @@ object LlmQueries {
     //      parse bug can't pass — CodecsSpec pins the parser against
     //      handcrafted fixed binaries (incl. extra chunks). ----
     "q_mm_wav_decode" -> Q(
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT o_orderkey AS id, i,
         |         (o_orderkey * 7 + i * 13) % 65536 AS v
         |  FROM orders CROSS JOIN (SELECT unnest(range(0, 16)) AS i)),
@@ -4555,27 +4311,9 @@ object LlmQueries {
         |             CASE WHEN v < 32768 THEN v ELSE 65536 - v END AS av
         |      FROM s)
         |SELECT id, CAST(76 AS BIGINT) AS byte_len,
-        |  CAST(sum(CASE WHEN j = 0 THEN av END) AS BIGINT) AS s0,
-        |  CAST(sum(CASE WHEN j = 1 THEN av END) AS BIGINT) AS s1,
-        |  CAST(sum(CASE WHEN j = 2 THEN av END) AS BIGINT) AS s2,
-        |  CAST(sum(CASE WHEN j = 3 THEN av END) AS BIGINT) AS s3,
-        |  CAST(sum(CASE WHEN j = 4 THEN av END) AS BIGINT) AS s4,
-        |  CAST(sum(CASE WHEN j = 5 THEN av END) AS BIGINT) AS s5,
-        |  CAST(sum(CASE WHEN j = 6 THEN av END) AS BIGINT) AS s6,
-        |  CAST(sum(CASE WHEN j = 7 THEN av END) AS BIGINT) AS s7
+        |${stripeSums("j", "av")}
         |FROM a GROUP BY id ORDER BY id""".stripMargin) { (s, dir) =>
-      // canonical 44-byte PCM16 mono header: RIFF size 68, fmt 16/PCM/
-      // 1ch/8kHz/16bit, data size 32 (16 samples) — all little-endian
-      val headerHex = "52494646" + "44000000" + "57415645" +
-        "666d7420" + "10000000" + "0100" + "0100" + "401f0000" +
-        "803e0000" + "0200" + "1000" + "64617461" + "20000000"
-      val sampleHex = (0 until 16).map { i =>
-        val v = s"((o_orderkey * 7 + $i * 13) % 65536)"
-        concat(hexByte(expr(s"$v % 256")), hexByte(expr(s"$v div 256")))
-      }
-      val wav = tb(s, dir).orders
-        .withColumn("payload", unhex(concat((lit(headerHex) +: sampleHex): _*)))
-      Multimodal.decodeStripeSums(wav, "o_orderkey",
+      Multimodal.decodeStripeSums(synthWav(s, dir), "o_orderkey",
           codec = graft.llm.Codecs.WavCodec)
         .withColumnRenamed("o_orderkey", "id")
         .orderBy("id")
@@ -4587,20 +4325,7 @@ object LlmQueries {
     //      the actual bytes and hashes DECODED pixels, DuckDB
     //      recomputes grid/mean/bits from the rule. ----
     "q_mm_bmp_ahash" -> Q(
-      """WITH g AS (
-        |  SELECT p_partkey AS id, j,
-        |         (p_partkey * 3 + (j % 8) * 7 + (j // 8) * 11) % 256 AS gv
-        |  FROM part CROSS JOIN (SELECT unnest(range(0, 64)) AS j)),
-        |t AS (SELECT id, sum(gv) AS tot FROM g GROUP BY id),
-        |b AS (SELECT g.id, g.j,
-        |             CASE WHEN g.gv * 64 > t.tot THEN 1 ELSE 0 END AS bit
-        |      FROM g JOIN t USING (id))
-        |SELECT id,
-        |  CAST(sum(bit * (1 << CAST(j % 16 AS INTEGER))) FILTER (j // 16 = 0) AS BIGINT) AS ph0,
-        |  CAST(sum(bit * (1 << CAST(j % 16 AS INTEGER))) FILTER (j // 16 = 1) AS BIGINT) AS ph1,
-        |  CAST(sum(bit * (1 << CAST(j % 16 AS INTEGER))) FILTER (j // 16 = 2) AS BIGINT) AS ph2,
-        |  CAST(sum(bit * (1 << CAST(j % 16 AS INTEGER))) FILTER (j // 16 = 3) AS BIGINT) AS ph3
-        |FROM b GROUP BY id ORDER BY id""".stripMargin) { (s, dir) =>
+      aHashOracle("(p_partkey * 3 + (j % 8) * 7 + (j // 8) * 11) % 256")) { (s, dir) =>
       // 54-byte header: BM, file size 246, data offset 54, info 40,
       // 8x8, 1 plane, 24 bpp, BI_RGB, 16 zero tail bytes — then 8
       // bottom-up rows (rowBytes 24, no padding) of BGR triples
@@ -4630,20 +4355,13 @@ object LlmQueries {
     //      byte_len is dropped: the compressed container size is
     //      content-dependent, not rule-derivable. ----
     "q_mm_png_decode" -> Q(
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT p_partkey AS id, x.i AS x, y.i AS y,
         |         (p_partkey * 5 + x.i * 3 + y.i * 11) % 256 AS gv
         |  FROM part CROSS JOIN (SELECT unnest(range(0, 8)) AS i) x
         |            CROSS JOIN (SELECT unnest(range(0, 8)) AS i) y)
         |SELECT id,
-        |  CAST(sum(CASE WHEN x = 0 THEN gv END) AS BIGINT) AS s0,
-        |  CAST(sum(CASE WHEN x = 1 THEN gv END) AS BIGINT) AS s1,
-        |  CAST(sum(CASE WHEN x = 2 THEN gv END) AS BIGINT) AS s2,
-        |  CAST(sum(CASE WHEN x = 3 THEN gv END) AS BIGINT) AS s3,
-        |  CAST(sum(CASE WHEN x = 4 THEN gv END) AS BIGINT) AS s4,
-        |  CAST(sum(CASE WHEN x = 5 THEN gv END) AS BIGINT) AS s5,
-        |  CAST(sum(CASE WHEN x = 6 THEN gv END) AS BIGINT) AS s6,
-        |  CAST(sum(CASE WHEN x = 7 THEN gv END) AS BIGINT) AS s7
+        |${stripeSums("x", "gv")}
         |FROM g GROUP BY id ORDER BY id""".stripMargin) { (s, dir) =>
       // stripe j of pixel k = y*8+x is k % 8 = x for an 8-wide image,
       // so the oracle groups the rule by column
@@ -4667,23 +4385,10 @@ object LlmQueries {
     //      classification robust to any quality-1.0 rounding (measured
     //      0 for this DCT-sparse pattern). ----
     "q_mm_jpeg_ahash" -> Q(
-      """WITH g AS (
-        |  SELECT p_partkey AS id, j,
-        |         32 + 192 * ((p_partkey + (j % 8) + (j // 8)) % 2) AS gv
-        |  FROM part CROSS JOIN (SELECT unnest(range(0, 64)) AS j)),
-        |t AS (SELECT id, sum(gv) AS tot FROM g GROUP BY id),
-        |b AS (SELECT g.id, g.j,
-        |             CASE WHEN g.gv * 64 > t.tot THEN 1 ELSE 0 END AS bit
-        |      FROM g JOIN t USING (id))
-        |SELECT id,
-        |  CAST(sum(bit * (1 << CAST(j % 16 AS INTEGER))) FILTER (j // 16 = 0) AS BIGINT) AS ph0,
-        |  CAST(sum(bit * (1 << CAST(j % 16 AS INTEGER))) FILTER (j // 16 = 1) AS BIGINT) AS ph1,
-        |  CAST(sum(bit * (1 << CAST(j % 16 AS INTEGER))) FILTER (j // 16 = 2) AS BIGINT) AS ph2,
-        |  CAST(sum(bit * (1 << CAST(j % 16 AS INTEGER))) FILTER (j // 16 = 3) AS BIGINT) AS ph3
-        |FROM b GROUP BY id ORDER BY id""".stripMargin) { (s, dir) =>
+      aHashOracle("32 + 192 * ((p_partkey + (j % 8) + (j // 8)) % 2)")) { (s, dir) =>
       // 8x8 image → 8x8 grid resample is the identity, so grid index
-      // j maps to pixel (x=j%8, y=j//8) and the oracle shares
-      // q_mm_bmp_ahash's grid/mean/bit algebra
+      // j maps to pixel (x=j%8, y=j//8) and both faces register
+      // aHashOracle's grid/mean/bit algebra
       val jpg = Multimodal.synthImages(tb(s, dir).part, "p_partkey",
         w = 8, h = 8, jpeg = true) { (id, x, y) =>
         (32 + 192 * ((id + x + y) % 2)).toInt
@@ -4728,20 +4433,13 @@ object LlmQueries {
     //      lossless, so thumb pixel (x,y) = source (2x,2y) and DuckDB
     //      recomputes the sums from the composed rule alone. ----
     "q_mm_thumbnail" -> Q(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT p_partkey AS id, x.i AS x,
         |         (p_partkey * 3 + 14 * x.i + 10 * y.i) % 256 AS gv
         |  FROM part CROSS JOIN (SELECT unnest(range(0, 8)) AS i) x
         |            CROSS JOIN (SELECT unnest(range(0, 8)) AS i) y)
         |SELECT id,
-        |  CAST(sum(CASE WHEN x = 0 THEN gv END) AS BIGINT) AS s0,
-        |  CAST(sum(CASE WHEN x = 1 THEN gv END) AS BIGINT) AS s1,
-        |  CAST(sum(CASE WHEN x = 2 THEN gv END) AS BIGINT) AS s2,
-        |  CAST(sum(CASE WHEN x = 3 THEN gv END) AS BIGINT) AS s3,
-        |  CAST(sum(CASE WHEN x = 4 THEN gv END) AS BIGINT) AS s4,
-        |  CAST(sum(CASE WHEN x = 5 THEN gv END) AS BIGINT) AS s5,
-        |  CAST(sum(CASE WHEN x = 6 THEN gv END) AS BIGINT) AS s6,
-        |  CAST(sum(CASE WHEN x = 7 THEN gv END) AS BIGINT) AS s7
+        |${stripeSums("x", "gv")}
         |FROM t GROUP BY id ORDER BY id""".stripMargin) { (s, dir) =>
       // source rule (id*3 + x*7 + y*5) % 256 on 16x16; the 8x8 NN
       // resample reads source (2x, 2y), so the composed thumb rule is
@@ -4833,16 +4531,7 @@ object LlmQueries {
         |       CAST(max(av) AS BIGINT) AS max_abs,
         |       max(av) < 3000 AS is_silent
         |FROM a GROUP BY id, frame_idx ORDER BY id, frame_idx""".stripMargin) { (s, dir) =>
-      val headerHex = "52494646" + "44000000" + "57415645" +
-        "666d7420" + "10000000" + "0100" + "0100" + "401f0000" +
-        "803e0000" + "0200" + "1000" + "64617461" + "20000000"
-      val sampleHex = (0 until 16).map { i =>
-        val v = s"((o_orderkey * 7 + $i * 13) % 65536)"
-        concat(hexByte(expr(s"$v % 256")), hexByte(expr(s"$v div 256")))
-      }
-      val wav = tb(s, dir).orders
-        .withColumn("payload", unhex(concat((lit(headerHex) +: sampleHex): _*)))
-      Multimodal.wavFrameEnergy(wav, "o_orderkey", frameSamples = 4)
+      Multimodal.wavFrameEnergy(synthWav(s, dir), "o_orderkey", frameSamples = 4)
         .withColumnRenamed("o_orderkey", "id")
         .withColumn("is_silent", col("max_abs") < 3000)
         .orderBy("id", "frame_idx")

@@ -4,6 +4,7 @@ import graft.core.Tables
 import graft.ingest.Pipeline
 import graft.logs.LogStore
 import graft.maintenance.Maintenance
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end ingestion benchmark query: materializes a reference-shaped
@@ -21,6 +22,54 @@ import org.apache.spark.sql.functions._
   */
 object PipelineQueries {
 
+  /** Lands the first 300 documents as a reference-shaped facility tree
+    * under a fresh scratch root — one facility per source, 20 docs per
+    * sync file, each record's created_date from `createdDate` — registers
+    * every file Ready in a fresh `sync_file` log and runs one Pipeline
+    * batch over them. Returns the log store and the run's result.
+    */
+  private def ingestDocCorpus(s: SparkSession, dir: String,
+      scratchPrefix: String, createdDate: Column): (LogStore, Pipeline.RunResult) = {
+    import s.implicits._
+    val docs = Tables(s, dir).documents.filter(col("doc_id") < 300)
+    val root = Scratch.dir(scratchPrefix)
+    val parent = new java.io.File(root, "temp")
+    // one facility per source; 20 docs per sync file; files named by
+    // the reference convention <entity>_<batch>_<ts>_decrypted.json
+    val rows = docs
+      .select(col("source"), (col("doc_id") / 20).cast("int").as("file_no"),
+        to_json(struct(col("doc_id").as("id"), col("text"), col("lang"),
+          col("n_chars"), createdDate.as("created_date"))).as("j"))
+      .collect()
+    val syncRows = rows.groupBy(r => (r.getString(0), r.getInt(1))).toSeq
+      .sortBy(_._1).zipWithIndex.map { case (((fac, fileNo), rs), i) =>
+        val enc = s"doc_corpus_${fileNo}_2024050100${"%04d".format(i)}.json"
+        val dec = graft.model.FileName.decryptedName(enc)
+        val d = new java.io.File(parent, fac); d.mkdirs()
+        java.nio.file.Files.writeString(new java.io.File(d, dec).toPath,
+          rs.map(_.getString(2)).mkString("[\n", ",\n", "\n]"))
+        (i.toLong, fac, enc, dec, graft.model.SyncState.Ready,
+          java.sql.Timestamp.valueOf("2025-02-01 00:00:00"),
+          java.sql.Timestamp.valueOf("2025-02-01 10:00:00"),
+          null.asInstanceOf[java.sql.Timestamp],
+          null.asInstanceOf[java.sql.Timestamp],
+          null.asInstanceOf[String], null.asInstanceOf[String],
+          null.asInstanceOf[String], null.asInstanceOf[Integer],
+          null.asInstanceOf[String])
+      }
+    val store = LogStore(s, new java.io.File(root, "logs").getPath)
+    store.append("sync_file", syncRows.toDF(
+      "id", "facility_id", "file_name", "decrypted_file_name", "processed",
+      "create_date", "modified_date", "ingest_start_time", "ingest_end_time",
+      "ingest_file_name", "ingest_table_name", "ingest_status_check",
+      "json_rec_count", "ingest_error_message"))
+    val cfg = Pipeline.Config(
+      parentDir = parent.getPath,
+      warehouseDir = new java.io.File(root, "warehouse").getPath,
+      logStore = store)
+    (store, Pipeline.run(s, cfg))
+  }
+
   val all: Map[String, Q] = Map(
     "q_pipeline_ingest_e2e" -> Q(
       """WITH grp AS (
@@ -37,46 +86,7 @@ object PipelineQueries {
         |SELECT file_name, facility_id, 'success' AS load_status_check,
         |       CAST(n AS BIGINT) AS json_rec_count
         |FROM named ORDER BY facility_id, file_name""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val docs = Tables(s, dir).documents.filter(col("doc_id") < 300)
-      val root = Scratch.dir("graft_e2e_")
-      val parent = new java.io.File(root, "temp")
-
-      // one facility per source; 20 docs per sync file; files named by
-      // the reference convention <entity>_<batch>_<ts>_decrypted.json
-      val rows = docs
-        .select(col("source"), (col("doc_id") / 20).cast("int").as("file_no"),
-          to_json(struct(col("doc_id").as("id"), col("text"), col("lang"),
-            col("n_chars"), lit("2024-05-01").as("created_date"))).as("j"))
-        .collect()
-      val syncRows = rows.groupBy(r => (r.getString(0), r.getInt(1))).toSeq
-        .sortBy(_._1).zipWithIndex.map { case (((fac, fileNo), rs), i) =>
-          val enc = s"doc_corpus_${fileNo}_2024050100${"%04d".format(i)}.json"
-          val dec = graft.model.FileName.decryptedName(enc)
-          val d = new java.io.File(parent, fac); d.mkdirs()
-          java.nio.file.Files.writeString(new java.io.File(d, dec).toPath,
-            rs.map(_.getString(2)).mkString("[\n", ",\n", "\n]"))
-          (i.toLong, fac, enc, dec, graft.model.SyncState.Ready,
-            java.sql.Timestamp.valueOf("2025-02-01 00:00:00"),
-            java.sql.Timestamp.valueOf("2025-02-01 10:00:00"),
-            null.asInstanceOf[java.sql.Timestamp],
-            null.asInstanceOf[java.sql.Timestamp],
-            null.asInstanceOf[String], null.asInstanceOf[String],
-            null.asInstanceOf[String], null.asInstanceOf[Integer],
-            null.asInstanceOf[String])
-        }
-      val store = LogStore(s, new java.io.File(root, "logs").getPath)
-      store.append("sync_file", syncRows.toDF(
-        "id", "facility_id", "file_name", "decrypted_file_name", "processed",
-        "create_date", "modified_date", "ingest_start_time", "ingest_end_time",
-        "ingest_file_name", "ingest_table_name", "ingest_status_check",
-        "json_rec_count", "ingest_error_message"))
-
-      val cfg = Pipeline.Config(
-        parentDir = parent.getPath,
-        warehouseDir = new java.io.File(root, "warehouse").getPath,
-        logStore = store)
-      val result = Pipeline.run(s, cfg)
+      val (store, result) = ingestDocCorpus(s, dir, "graft_e2e_", lit("2024-05-01"))
       require(result.filesIngested > 0 && result.recordsIngested > 0,
         s"pipeline ingested nothing: $result")
       store.history("file_ingestion_log")
@@ -108,44 +118,8 @@ object PipelineQueries {
         |  CAST(CASE WHEN has_bad = 1 THEN 1 ELSE 2 END AS INTEGER) AS processed,
         |  CASE WHEN has_bad = 1 THEN NULL ELSE 'success' END AS ingest_status_check
         |FROM named ORDER BY facility_id, file_name""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val docs = Tables(s, dir).documents.filter(col("doc_id") < 300)
-      val root = Scratch.dir("graft_rq_e2e_")
-      val parent = new java.io.File(root, "temp")
-      val rows = docs
-        .select(col("source"), (col("doc_id") / 20).cast("int").as("file_no"),
-          to_json(struct(col("doc_id").as("id"), col("text"), col("lang"),
-            col("n_chars"),
-            when(col("doc_id") % 37 === 0, lit("not-a-date"))
-              .otherwise(lit("2024-05-01")).as("created_date"))).as("j"))
-        .collect()
-      val syncRows = rows.groupBy(r => (r.getString(0), r.getInt(1))).toSeq
-        .sortBy(_._1).zipWithIndex.map { case (((fac, fileNo), rs), i) =>
-          val enc = s"doc_corpus_${fileNo}_2024050100${"%04d".format(i)}.json"
-          val dec = graft.model.FileName.decryptedName(enc)
-          val d = new java.io.File(parent, fac); d.mkdirs()
-          java.nio.file.Files.writeString(new java.io.File(d, dec).toPath,
-            rs.map(_.getString(2)).mkString("[\n", ",\n", "\n]"))
-          (i.toLong, fac, enc, dec, graft.model.SyncState.Ready,
-            java.sql.Timestamp.valueOf("2025-02-01 00:00:00"),
-            java.sql.Timestamp.valueOf("2025-02-01 10:00:00"),
-            null.asInstanceOf[java.sql.Timestamp],
-            null.asInstanceOf[java.sql.Timestamp],
-            null.asInstanceOf[String], null.asInstanceOf[String],
-            null.asInstanceOf[String], null.asInstanceOf[Integer],
-            null.asInstanceOf[String])
-        }
-      val store = LogStore(s, new java.io.File(root, "logs").getPath)
-      store.append("sync_file", syncRows.toDF(
-        "id", "facility_id", "file_name", "decrypted_file_name", "processed",
-        "create_date", "modified_date", "ingest_start_time", "ingest_end_time",
-        "ingest_file_name", "ingest_table_name", "ingest_status_check",
-        "json_rec_count", "ingest_error_message"))
-      val cfg = Pipeline.Config(
-        parentDir = parent.getPath,
-        warehouseDir = new java.io.File(root, "warehouse").getPath,
-        logStore = store)
-      val result = Pipeline.run(s, cfg)
+      val (store, result) = ingestDocCorpus(s, dir, "graft_rq_e2e_",
+        when(col("doc_id") % 37 === 0, lit("not-a-date")).otherwise(lit("2024-05-01")))
       require(result.filesFailed > 0, s"fixture produced no failures: $result")
       val n = Maintenance.requeueSyncFailures(store, lit(true))
       require(n == result.filesFailed, s"requeued $n of ${result.filesFailed}")

@@ -114,6 +114,26 @@ object PreferenceQueries {
        |        LEFT JOIN wins w ON w.id = i.id)""".stripMargin
   }
 
+  /** Per-bin reliability cells of `p(c, y)` — c in milli-confidence,
+    * y the 0/1 label — and each bin's share of the ECE: the oracle tail
+    * of calibrationBins and of its streaming fold.
+    */
+  private lazy val calibrationBinsTail: String =
+    """g AS (SELECT least(c * 10 // 1000, 9) AS bin,
+      |             CAST(count(*) AS BIGINT) AS n,
+      |             CAST(sum(c) AS BIGINT) AS conf_sum_milli,
+      |             CAST(sum(y) AS BIGINT) AS n_pos
+      |      FROM p GROUP BY 1),
+      |t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM g)
+      |SELECT CAST(bin AS BIGINT) AS bin, n, conf_sum_milli, n_pos,
+      |  round(CAST(conf_sum_milli AS DOUBLE) / (n * 1000.0), 6) AS avg_conf,
+      |  round(CAST(n_pos AS DOUBLE) / n, 6) AS accuracy,
+      |  round(CAST(n AS DOUBLE) / total
+      |        * abs(CAST(n_pos AS DOUBLE) / n
+      |              - CAST(conf_sum_milli AS DOUBLE) / (n * 1000.0)), 6)
+      |    AS ece_contrib
+      |FROM g, t ORDER BY bin""".stripMargin
+
   val all: Map[String, Q] = Map(
 
     // ---- chosen/rejected pair construction (Preference.pairs): one
@@ -436,24 +456,11 @@ object PreferenceQueries {
     //      so per-bin |acc − conf| gaps stay small but non-zero; the
     //      ece_contrib column sums to the headline ECE ----
     "q_eval_calibration" -> Q(
-      """WITH p AS (SELECT (event_id * 37) % 1000 AS c,
+      s"""WITH p AS (SELECT (event_id * 37) % 1000 AS c,
         |             CASE WHEN (event_id * 911) % 1000 < (event_id * 37) % 1000
         |                  THEN 1 ELSE 0 END AS y
         |           FROM events),
-        |g AS (SELECT least(c * 10 // 1000, 9) AS bin,
-        |             CAST(count(*) AS BIGINT) AS n,
-        |             CAST(sum(c) AS BIGINT) AS conf_sum_milli,
-        |             CAST(sum(y) AS BIGINT) AS n_pos
-        |      FROM p GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM g)
-        |SELECT CAST(bin AS BIGINT) AS bin, n, conf_sum_milli, n_pos,
-        |  round(CAST(conf_sum_milli AS DOUBLE) / (n * 1000.0), 6) AS avg_conf,
-        |  round(CAST(n_pos AS DOUBLE) / n, 6) AS accuracy,
-        |  round(CAST(n AS DOUBLE) / total
-        |        * abs(CAST(n_pos AS DOUBLE) / n
-        |              - CAST(conf_sum_milli AS DOUBLE) / (n * 1000.0)), 6)
-        |    AS ece_contrib
-        |FROM g, t ORDER BY bin""".stripMargin) { (s, dir) =>
+        |$calibrationBinsTail""".stripMargin) { (s, dir) =>
       val scored = tb(s, dir).events.select(
         expr("(event_id * 37) % 1000").as("c"),
         when(expr("(event_id * 911) % 1000") < expr("(event_id * 37) % 1000"),
@@ -464,28 +471,15 @@ object PreferenceQueries {
     // ---- the STREAMING face of calibration (EvalStream): the per-bin
     //      integer cells fold through a 3-way batch split with the
     //      ReplayGuard swap protocol and must STILL equal the one-shot
-    //      SQL replay — the cells are a commutative monoid, so
-    //      micro-batching introduces zero approximation. Micro-batch
-    //      wiring is EvalStreamSpec's job. ----
+    //      `calibrationBinsTail` replay — the cells are a commutative
+    //      monoid, so micro-batching introduces zero approximation.
+    //      Micro-batch wiring is EvalStreamSpec's job. ----
     "q_stream_calibration" -> Q(
-      """WITH p AS (SELECT event_id, (event_id * 37) % 1000 AS c,
+      s"""WITH p AS (SELECT event_id, (event_id * 37) % 1000 AS c,
         |             CASE WHEN (event_id * 911) % 1000 < (event_id * 37) % 1000
         |                  THEN 1 ELSE 0 END AS y
         |           FROM events),
-        |g AS (SELECT least(c * 10 // 1000, 9) AS bin,
-        |             CAST(count(*) AS BIGINT) AS n,
-        |             CAST(sum(c) AS BIGINT) AS conf_sum_milli,
-        |             CAST(sum(y) AS BIGINT) AS n_pos
-        |      FROM p GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM g)
-        |SELECT CAST(bin AS BIGINT) AS bin, n, conf_sum_milli, n_pos,
-        |  round(CAST(conf_sum_milli AS DOUBLE) / (n * 1000.0), 6) AS avg_conf,
-        |  round(CAST(n_pos AS DOUBLE) / n, 6) AS accuracy,
-        |  round(CAST(n AS DOUBLE) / total
-        |        * abs(CAST(n_pos AS DOUBLE) / n
-        |              - CAST(conf_sum_milli AS DOUBLE) / (n * 1000.0)), 6)
-        |    AS ece_contrib
-        |FROM g, t ORDER BY bin""".stripMargin) { (s, dir) =>
+        |$calibrationBinsTail""".stripMargin) { (s, dir) =>
       val tmp = Scratch.dir("graft_evalstream_")
       val statePath = s"${tmp.getPath}/calib"
       val scored = tb(s, dir).events.select(

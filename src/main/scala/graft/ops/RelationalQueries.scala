@@ -35,27 +35,20 @@ object RelationalQueries {
   //      direction is one body and one DuckDB oracle shared by two
   //      registered names; the q_evt_asof_native* names stay registered
   //      so the query set and its oracles are unchanged. ----
-  private val asofBackwardSql =
+  private val asofPurchaseViewCtes =
     """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
       |           FROM events WHERE event_type = 'purchase'),
       |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS vts, max(event_id) AS view_id
-      |      FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
+      |      FROM events WHERE event_type = 'view' GROUP BY user_id, ts)""".stripMargin
+  private def asofOneSidedSql(cmp: String): String =
+    s"""$asofPurchaseViewCtes
       |SELECT p.purchase_id, p.user_id, p.pts, v.view_id, v.vts
-      |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts >= v.vts
+      |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts $cmp v.vts
       |ORDER BY p.purchase_id""".stripMargin
-  private val asofForwardSql =
-    """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
-      |           FROM events WHERE event_type = 'purchase'),
-      |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS vts, max(event_id) AS view_id
-      |      FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
-      |SELECT p.purchase_id, p.user_id, p.pts, v.view_id, v.vts
-      |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts <= v.vts
-      |ORDER BY p.purchase_id""".stripMargin
+  private val asofBackwardSql = asofOneSidedSql(">=")
+  private val asofForwardSql = asofOneSidedSql("<=")
   private val asofNearestSql =
-    """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
-      |           FROM events WHERE event_type = 'purchase'),
-      |v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS vts, max(event_id) AS view_id
-      |      FROM events WHERE event_type = 'view' GROUP BY user_id, ts),
+    s"""$asofPurchaseViewCtes,
       |b AS (SELECT p.purchase_id, v.view_id AS bid, v.vts AS bts
       |      FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.pts >= v.vts),
       |f AS (SELECT p.purchase_id, v.view_id AS fid, v.vts AS fts
@@ -93,6 +86,76 @@ object RelationalQueries {
         col("view_id"), col("vts"))
       .orderBy("purchase_id")
   }
+
+  /** The customer → supplier order graph, one distinct edge per
+    * (o_custkey, l_suppkey + 1000000) — the graph operators' fixture.
+    */
+  private def custSuppEdges(t: Tables): DataFrame =
+    t.orders
+      .join(t.lineitem, col("l_orderkey") === col("o_orderkey"))
+      .select(col("o_custkey").as("src"),
+        (col("l_suppkey") + lit(1000000L)).as("dst"))
+      .distinct()
+
+  /** Daily OHLC bars per user — open/close by exact (ts, event_id)
+    * order; `nCol` names the row count, which the one-shot and the
+    * mergeable faces name differently.
+    */
+  private def ohlcOracle(nCol: String): String =
+    s"""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value
+       |           FROM events),
+       |r AS (SELECT user_id, date_trunc('day', ts) AS bucket, value,
+       |        row_number() OVER (PARTITION BY user_id, date_trunc('day', ts)
+       |          ORDER BY epoch_us(ts), event_id) AS rn_a,
+       |        row_number() OVER (PARTITION BY user_id, date_trunc('day', ts)
+       |          ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn_z
+       |      FROM e)
+       |SELECT user_id, bucket,
+       |       round(max(CASE WHEN rn_a = 1 THEN value END), 6) AS open,
+       |       round(max(value), 6) AS high,
+       |       round(min(value), 6) AS low,
+       |       round(max(CASE WHEN rn_z = 1 THEN value END), 6) AS close,
+       |       CAST(count(*) AS BIGINT) AS $nCol
+       |FROM r GROUP BY user_id, bucket
+       |ORDER BY user_id, bucket""".stripMargin
+
+  /** Per-user events in (ts, event_id) order with millis-scaled values
+    * and their rank — the seed of the fixed-point recurrences (EWMA,
+    * CUSUM) that follow it under WITH RECURSIVE.
+    */
+  private val fixedPointBase =
+    """WITH RECURSIVE base AS (
+      |  SELECT user_id, event_id,
+      |         epoch_us(CAST(ts AS TIMESTAMP)) AS tus,
+      |         CAST(round(value * 1000) AS BIGINT) AS vmillis,
+      |         row_number() OVER (PARTITION BY user_id
+      |                            ORDER BY ts, event_id) AS rn
+      |  FROM events)""".stripMargin
+
+  /** The zero-filled daily grid of ⌊value·10⁶⌋ sums per user and its
+    * centered 7-day moving window (`tr`: wsum, wn) — the shared front
+    * of the seasonal decomposition and its anomaly flags.
+    */
+  private val seasonalTrendCtes =
+    """WITH agg AS (SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+      |                    CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT) AS sv
+      |             FROM events GROUP BY 1, 2),
+      |sp AS (SELECT user_id, min(day) AS d0, max(day) AS d1 FROM agg GROUP BY user_id),
+      |cal AS (SELECT user_id, CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day FROM sp),
+      |grid AS (SELECT c.user_id, c.day, coalesce(a.sv, 0) AS value_u
+      |         FROM cal c LEFT JOIN agg a ON a.user_id = c.user_id AND a.day = c.day),
+      |tr AS (SELECT user_id, day, value_u,
+      |         sum(value_u) OVER (PARTITION BY user_id ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS wsum,
+      |         count(*) OVER (PARTITION BY user_id ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS wn
+      |       FROM grid)""".stripMargin
+
+  /** Priority totals over `orders` — the oracle of both text-format
+    * roundtrips (CSV and JSONL), whose content must survive encoding.
+    */
+  private val priorityTotalsOracle =
+    """SELECT o_orderpriority AS priority, CAST(count(*) AS BIGINT) AS n,
+      |       round(sum(o_totalprice), 2) AS total
+      |FROM orders GROUP BY 1 ORDER BY priority""".stripMargin
 
   val all: Map[String, Q] = Map(
 
@@ -733,22 +796,7 @@ object RelationalQueries {
     //      close of the event value stream — one partial/final
     //      aggregate, open/close by exact (ts, id) min_by/max_by ----
     "q_evt_ohlc" -> Q(
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value
-        |           FROM events),
-        |r AS (SELECT user_id, date_trunc('day', ts) AS bucket, value,
-        |        row_number() OVER (PARTITION BY user_id, date_trunc('day', ts)
-        |          ORDER BY epoch_us(ts), event_id) AS rn_a,
-        |        row_number() OVER (PARTITION BY user_id, date_trunc('day', ts)
-        |          ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn_z
-        |      FROM e)
-        |SELECT user_id, bucket,
-        |       round(max(CASE WHEN rn_a = 1 THEN value END), 6) AS open,
-        |       round(max(value), 6) AS high,
-        |       round(min(value), 6) AS low,
-        |       round(max(CASE WHEN rn_z = 1 THEN value END), 6) AS close,
-        |       CAST(count(*) AS BIGINT) AS n_events
-        |FROM r GROUP BY user_id, bucket
-        |ORDER BY user_id, bucket""".stripMargin) { (s, dir) =>
+      ohlcOracle("n_events")) { (s, dir) =>
       graft.core.Temporal.ohlcBars(tb(s, dir).events, "user_id", "ts",
           "value", "event_id", bucket = "day")
         .select(col("user_id"), col("bucket"),
@@ -827,13 +875,7 @@ object RelationalQueries {
     //      Temporal.ewma stays for production use (TemporalSpec
     //      property-tests it vs brute force). ----
     "q_evt_ewma" -> Q(
-      """WITH RECURSIVE base AS (
-        |  SELECT user_id, event_id,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) AS tus,
-        |         CAST(round(value * 1000) AS BIGINT) AS vmillis,
-        |         row_number() OVER (PARTITION BY user_id
-        |                            ORDER BY ts, event_id) AS rn
-        |  FROM events),
+      s"""$fixedPointBase,
         |r AS (
         |  SELECT user_id, event_id, tus, vmillis, rn, vmillis AS ewma_millis
         |  FROM base WHERE rn = 1
@@ -1014,20 +1056,13 @@ object RelationalQueries {
     //      record; the oracle replays the same graph with a recursive
     //      CTE. Singletons are their own entity. ----
     "q_er_entities" -> Q(
-      """WITH RECURSIVE k AS (SELECT c_custkey AS id, c_name AS nm, substr(c_name, 1, 16) AS blk
+      s"""WITH RECURSIVE k AS (SELECT c_custkey AS id, c_name AS nm, substr(c_name, 1, 16) AS blk
         |                     FROM customer),
         |dups AS (SELECT a.id AS id1, b.id AS id2
         |         FROM k a JOIN k b ON a.blk = b.blk AND a.id < b.id
         |         WHERE abs(len(a.nm) - len(b.nm)) <= 1
         |           AND levenshtein(a.nm, b.nm) <= 1),
-        |nodes AS (SELECT id1 AS id FROM dups UNION SELECT id2 FROM dups),
-        |sym AS (SELECT id1 AS src, id2 AS dst FROM dups
-        |        UNION ALL SELECT id2, id1 FROM dups),
-        |reach AS (
-        |  SELECT id, id AS r FROM nodes
-        |  UNION
-        |  SELECT s.dst AS id, rc.r FROM reach rc JOIN sym s ON s.src = rc.id),
-        |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id)
+        |${OracleSql.ccComponents("dups", materialized = false)}
         |SELECT k.id, CAST(coalesce(c.component, k.id) AS BIGINT) AS entity_id,
         |       coalesce(c.component, k.id) = k.id AS is_canonical
         |FROM k LEFT JOIN comp c ON c.id = k.id
@@ -1120,9 +1155,7 @@ object RelationalQueries {
     //      reference's own export format, S7): content must survive the
     //      text encoding exactly for integer/string/decimal columns ----
     "q_fmt_csv_roundtrip" -> Q(
-      """SELECT o_orderpriority AS priority, CAST(count(*) AS BIGINT) AS n,
-        |       round(sum(o_totalprice), 2) AS total
-        |FROM orders GROUP BY 1 ORDER BY priority""".stripMargin) { (s, dir) =>
+      priorityTotalsOracle) { (s, dir) =>
       val tmp = Scratch.dir("graft_csv_")
       val csvPath = s"${tmp.getPath}/orders_csv"
       val src = tb(s, dir).orders
@@ -1138,9 +1171,7 @@ object RelationalQueries {
     //      format (one JSON record per line; writeShards' json face):
     //      numeric/string content must survive the text encoding ----
     "q_fmt_jsonl_roundtrip" -> Q(
-      """SELECT o_orderpriority AS priority, CAST(count(*) AS BIGINT) AS n,
-        |       round(sum(o_totalprice), 2) AS total
-        |FROM orders GROUP BY 1 ORDER BY priority""".stripMargin) { (s, dir) =>
+      priorityTotalsOracle) { (s, dir) =>
       val tmp = Scratch.dir("graft_jsonl_")
       val jsonPath = s"${tmp.getPath}/orders_jsonl"
       val src = tb(s, dir).orders
@@ -1156,22 +1187,7 @@ object RelationalQueries {
     //      open/close carried as struct min/max monoids — two
     //      event-parity shards merge to the exact one-shot bars ----
     "q_incr_ohlc" -> Q(
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value
-        |           FROM events),
-        |r AS (SELECT user_id, date_trunc('day', ts) AS bucket, value,
-        |        row_number() OVER (PARTITION BY user_id, date_trunc('day', ts)
-        |          ORDER BY epoch_us(ts), event_id) AS rn_a,
-        |        row_number() OVER (PARTITION BY user_id, date_trunc('day', ts)
-        |          ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn_z
-        |      FROM e)
-        |SELECT user_id, bucket,
-        |       round(max(CASE WHEN rn_a = 1 THEN value END), 6) AS open,
-        |       round(max(value), 6) AS high,
-        |       round(min(value), 6) AS low,
-        |       round(max(CASE WHEN rn_z = 1 THEN value END), 6) AS close,
-        |       CAST(count(*) AS BIGINT) AS n
-        |FROM r GROUP BY user_id, bucket
-        |ORDER BY user_id, bucket""".stripMargin) { (s, dir) =>
+      ohlcOracle("n")) { (s, dir) =>
       val ev = tb(s, dir).events
         .withColumn("bucket", date_trunc("day", col("ts")))
         .withColumn("tsu", unix_micros(col("ts")))
@@ -1434,33 +1450,12 @@ object RelationalQueries {
     //      days of signup, NO error between view and purchase, bot cap
     //      50 relevant events/user (prefix in (ts, type) order) ----
     "q_evt_seq_match" -> Q(
-      """WITH rel0 AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
+      s"""WITH rel0 AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
         |                     row_number() OVER (PARTITION BY user_id ORDER BY ts, event_type) AS rn
         |              FROM events
         |              WHERE event_type IN ('signup','view','purchase','error')),
         |rel AS (SELECT user_id, ts, event_type FROM rel0 WHERE rn <= 50),
-        |s1 AS (SELECT user_id, min(ts) AS t1 FROM rel
-        |       WHERE event_type = 'signup' GROUP BY user_id),
-        |s2 AS (SELECT r.user_id, min(r.ts) AS t2
-        |       FROM rel r JOIN s1 ON s1.user_id = r.user_id
-        |       WHERE r.event_type = 'view'
-        |         AND epoch_us(r.ts) > epoch_us(s1.t1)
-        |         AND epoch_us(r.ts) <= epoch_us(s1.t1) + 604800000000
-        |       GROUP BY r.user_id),
-        |s3r AS (SELECT r.user_id, min(r.ts) AS t3
-        |        FROM rel r JOIN s2 ON s2.user_id = r.user_id
-        |                   JOIN s1 ON s1.user_id = r.user_id
-        |        WHERE r.event_type = 'purchase'
-        |          AND epoch_us(r.ts) > epoch_us(s2.t2)
-        |          AND epoch_us(r.ts) <= epoch_us(s1.t1) + 604800000000
-        |        GROUP BY r.user_id),
-        |nneg AS (SELECT s2.user_id, count(n.ts) AS n
-        |         FROM s2 JOIN s3r ON s3r.user_id = s2.user_id
-        |         LEFT JOIN rel n ON n.user_id = s2.user_id
-        |              AND n.event_type = 'error'
-        |              AND epoch_us(n.ts) > epoch_us(s2.t2)
-        |              AND epoch_us(n.ts) < epoch_us(s3r.t3)
-        |         GROUP BY s2.user_id),
+        |${OracleSql.seqChainCtes},
         |fin AS (SELECT s1.user_id, s1.t1, s2.t2,
         |               CASE WHEN coalesce(nneg.n, 0) > 0 THEN NULL ELSE s3r.t3 END AS t3
         |        FROM s1 LEFT JOIN s2 ON s2.user_id = s1.user_id
@@ -1555,11 +1550,7 @@ object RelationalQueries {
         |       FROM n LEFT JOIN c5 c ON c.id = n.id)
         |SELECT id, pr AS rank_micro FROM r5 ORDER BY id""".stripMargin) { (s, dir) =>
       val t = tb(s, dir)
-      val e0 = t.orders
-        .join(t.lineitem, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + lit(1000000L)).as("dst"))
-        .distinct()
+      val e0 = custSuppEdges(t)
       val sym = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
       graft.llm.DupGraph.pageRank(sym, iterations = 5).orderBy("id")
     },
@@ -1610,13 +1601,7 @@ object RelationalQueries {
     //      slack 5.0 / threshold 200.0 as millis. Temporal.cusum
     //      (doubles) stays for sub-milli scales, property-tested. ----
     "q_evt_cusum" -> Q(
-      """WITH RECURSIVE base AS (
-        |  SELECT user_id, event_id,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) AS tus,
-        |         CAST(round(value * 1000) AS BIGINT) AS vmillis,
-        |         row_number() OVER (PARTITION BY user_id
-        |                            ORDER BY ts, event_id) AS rn
-        |  FROM events),
+      s"""$fixedPointBase,
         |r AS (
         |  SELECT user_id, event_id, tus, vmillis, rn,
         |         GREATEST(0, vmillis - 50000 - 5000) AS cusum_hi,
@@ -1667,17 +1652,7 @@ object RelationalQueries {
     //      calendar-aware anomaly pre-step, bit-identical cross-engine.
     //      One per-entity rows-frame window + one phase aggregate. ----
     "q_evt_seasonal" -> Q(
-      """WITH agg AS (SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |                    CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT) AS sv
-        |             FROM events GROUP BY 1, 2),
-        |sp AS (SELECT user_id, min(day) AS d0, max(day) AS d1 FROM agg GROUP BY user_id),
-        |cal AS (SELECT user_id, CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day FROM sp),
-        |grid AS (SELECT c.user_id, c.day, coalesce(a.sv, 0) AS value_u
-        |         FROM cal c LEFT JOIN agg a ON a.user_id = c.user_id AND a.day = c.day),
-        |tr AS (SELECT user_id, day, value_u,
-        |         sum(value_u) OVER (PARTITION BY user_id ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS wsum,
-        |         count(*) OVER (PARTITION BY user_id ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS wn
-        |       FROM grid),
+      s"""$seasonalTrendCtes,
         |det AS (SELECT user_id, day, value_u, wsum // wn AS trend,
         |               value_u - (wsum // wn) AS det,
         |               ((datediff('day', DATE '1970-01-01', day) % 7) + 7) % 7 AS phase
@@ -1816,11 +1791,7 @@ object RelationalQueries {
         |FROM deg JOIN nd USING (id)
         |GROUP BY 1 ORDER BY deg_bin""".stripMargin) { (s, dir) =>
       val t = tb(s, dir)
-      val e0 = t.orders
-        .join(t.lineitem, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + lit(1000000L)).as("dst"))
-        .distinct()
+      val e0 = custSuppEdges(t)
       graft.llm.DupGraph.degreeProfile(e0).orderBy("deg_bin")
     },
 
@@ -1853,17 +1824,7 @@ object RelationalQueries {
     //      integer residuals), so Mondays being Mondays never pages.
     //      Pure composition of two already-oracled operators. ----
     "q_evt_seasonal_anomaly" -> Q(
-      """WITH agg AS (SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |                    CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT) AS sv
-        |             FROM events GROUP BY 1, 2),
-        |sp AS (SELECT user_id, min(day) AS d0, max(day) AS d1 FROM agg GROUP BY user_id),
-        |cal AS (SELECT user_id, CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day FROM sp),
-        |grid AS (SELECT c.user_id, c.day, coalesce(a.sv, 0) AS value_u
-        |         FROM cal c LEFT JOIN agg a ON a.user_id = c.user_id AND a.day = c.day),
-        |tr AS (SELECT user_id, day, value_u,
-        |         sum(value_u) OVER (PARTITION BY user_id ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS wsum,
-        |         count(*) OVER (PARTITION BY user_id ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS wn
-        |       FROM grid),
+      s"""$seasonalTrendCtes,
         |det AS (SELECT user_id, day, value_u, value_u - (wsum // wn) AS det,
         |               ((datediff('day', DATE '1970-01-01', day) % 7) + 7) % 7 AS phase
         |        FROM tr),
@@ -2002,11 +1963,7 @@ object RelationalQueries {
         |       FROM n LEFT JOIN c3 c ON c.id = n.id)
         |SELECT id, pr AS rank_micro FROM r3 ORDER BY id""".stripMargin) { (s, dir) =>
       val t = tb(s, dir)
-      val e0 = t.orders
-        .join(t.lineitem, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + lit(1000000L)).as("dst"))
-        .distinct()
+      val e0 = custSuppEdges(t)
       val sym = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
       val seeds = t.customer.filter(col("c_custkey") % 100 === 0)
         .select(col("c_custkey").as("id"))
@@ -2032,11 +1989,7 @@ object RelationalQueries {
         |SELECT id, CAST(min(dd) AS BIGINT) AS dist
         |FROM reach GROUP BY id ORDER BY id""".stripMargin) { (s, dir) =>
       val t = tb(s, dir)
-      val e0 = t.orders
-        .join(t.lineitem, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + lit(1000000L)).as("dst"))
-        .distinct()
+      val e0 = custSuppEdges(t)
       val sources = t.customer.filter(col("c_custkey") % 100 === 0)
         .select(col("c_custkey").as("id"))
       graft.llm.DupGraph.bfsDistances(e0, sources, maxHops = 3).orderBy("id")
@@ -2069,11 +2022,7 @@ object RelationalQueries {
         |       FROM l2 p LEFT JOIN w3 w ON w.id = p.id AND w.rn = 1)
         |SELECT id, lbl AS community FROM l3 ORDER BY id""".stripMargin) { (s, dir) =>
       val t = tb(s, dir)
-      val e0 = t.orders
-        .join(t.lineitem, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + lit(1000000L)).as("dst"))
-        .distinct()
+      val e0 = custSuppEdges(t)
       graft.llm.DupGraph.labelPropagation(e0, iterations = 3).orderBy("id")
     },
 
@@ -2100,11 +2049,7 @@ object RelationalQueries {
         |SELECT s AS id, CAST(count(*) AS BIGINT) AS deg FROM e3
         |GROUP BY s ORDER BY id""".stripMargin) { (s, dir) =>
       val t = tb(s, dir)
-      val e0 = t.orders
-        .join(t.lineitem, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + lit(1000000L)).as("dst"))
-        .distinct()
+      val e0 = custSuppEdges(t)
       graft.llm.DupGraph.kCore(e0, k = 45, rounds = 3).orderBy("id")
     },
 

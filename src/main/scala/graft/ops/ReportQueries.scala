@@ -201,31 +201,10 @@ object ReportQueries {
     // (signup → view → purchase within 7 days, no error between view
     // and purchase). Cross-micro-batch emission is SequenceStreamSpec's.
     "q_stream_seq_match" -> Q(
-      """WITH rel AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type
+      s"""WITH rel AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type
         |             FROM events
         |             WHERE event_type IN ('signup','view','purchase','error')),
-        |s1 AS (SELECT user_id, min(ts) AS t1 FROM rel
-        |       WHERE event_type = 'signup' GROUP BY user_id),
-        |s2 AS (SELECT r.user_id, min(r.ts) AS t2
-        |       FROM rel r JOIN s1 ON s1.user_id = r.user_id
-        |       WHERE r.event_type = 'view'
-        |         AND epoch_us(r.ts) > epoch_us(s1.t1)
-        |         AND epoch_us(r.ts) <= epoch_us(s1.t1) + 604800000000
-        |       GROUP BY r.user_id),
-        |s3r AS (SELECT r.user_id, min(r.ts) AS t3
-        |        FROM rel r JOIN s2 ON s2.user_id = r.user_id
-        |                   JOIN s1 ON s1.user_id = r.user_id
-        |        WHERE r.event_type = 'purchase'
-        |          AND epoch_us(r.ts) > epoch_us(s2.t2)
-        |          AND epoch_us(r.ts) <= epoch_us(s1.t1) + 604800000000
-        |        GROUP BY r.user_id),
-        |nneg AS (SELECT s2.user_id, count(n.ts) AS n
-        |         FROM s2 JOIN s3r ON s3r.user_id = s2.user_id
-        |         LEFT JOIN rel n ON n.user_id = s2.user_id
-        |              AND n.event_type = 'error'
-        |              AND epoch_us(n.ts) > epoch_us(s2.t2)
-        |              AND epoch_us(n.ts) < epoch_us(s3r.t3)
-        |         GROUP BY s2.user_id)
+        |${OracleSql.seqChainCtes}
         |SELECT s1.user_id, epoch_us(s1.t1) AS t1_us,
         |       epoch_us(s2.t2) AS t2_us, epoch_us(s3r.t3) AS t3_us
         |FROM s1 JOIN s2 ON s2.user_id = s1.user_id
@@ -349,7 +328,7 @@ object ReportQueries {
     // causal streaming order) → per-hash (min id, count). Cross-batch
     // state behavior is covered by CurateStreamSpec.
     "q_stream_curation" -> Q(
-      """WITH swl(sl, w) AS (VALUES ('en','the'),('en','a'),('en','fast'),('en','slow'),
+      raw"""WITH swl(sl, w) AS (VALUES ('en','the'),('en','a'),('en','fast'),('en','slow'),
         |  ('es','data'),('es','row'),('fr','table'),('fr','join'),
         |  ('de','window'),('de','batch'),('zh','spark'),('zh','stream')),
         |toks AS (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS t
@@ -360,15 +339,7 @@ object ReportQueries {
         |win AS (SELECT doc_id FROM (SELECT doc_id, sl, row_number() OVER (PARTITION BY doc_id ORDER BY lc DESC, sl) AS rn FROM lv)
         |        WHERE rn = 1 AND sl = 'en'),
         |sh2 AS (SELECT doc_id, sum(lc) AS sw_hits FROM lv GROUP BY doc_id),
-        |gate AS (SELECT d.doc_id, d.text
-        |         FROM documents d
-        |         JOIN win ON win.doc_id = d.doc_id
-        |         JOIN ta ON ta.doc_id = d.doc_id
-        |         LEFT JOIN sh2 ON sh2.doc_id = d.doc_id
-        |         WHERE d.doc_id % 41 <> 0
-        |           AND NOT (ta.top_token_n * 5 >= ta.n_tokens)
-        |           AND ta.n_tokens + 2 * coalesce(sh2.sw_hits, 0)
-        |               - 3 * len(regexp_extract_all(lower(d.text), '[^a-z0-9\s]')) >= 0),
+        |${OracleSql.curationGate},
         |btoks AS (SELECT list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS ts
         |          FROM documents WHERE doc_id % 41 = 0),
         |bsh AS (SELECT DISTINCT array_to_string(ts[i:i+2], ' ') AS s

@@ -40,6 +40,79 @@ object StatsQueries {
        |        CAST(coalesce(sum(nb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS pb
        |      FROM vc)""".stripMargin
 
+  /** Per-slice token cells `st(s, t, c)` over `documents`, the slice
+    * being column `slice` — the state InfoStats and InfoStream read.
+    */
+  private def tokenCellCtes(slice: String): String =
+    s"""WITH tk AS (SELECT $slice AS s,
+       |              unnest(list_filter(string_split_regex(lower(text), '\\s+'),
+       |                                 x -> x <> '')) AS t
+       |            FROM documents),
+       |st AS (SELECT s, t, count(*) AS c FROM tk GROUP BY s, t)""".stripMargin
+
+  /** Entropy / TTR / unbiased Simpson per `slice` (tokenDiversityBySlice
+    * and its streaming read).
+    */
+  private def tokenDiversityOracle(slice: String): String =
+    s"""${tokenCellCtes(slice)},
+       |a AS (SELECT s, CAST(sum(c) AS BIGINT) AS n_tokens,
+       |             CAST(count(*) AS BIGINT) AS n_types,
+       |             sum(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))) AS slc,
+       |             CAST(sum(c * (c - 1)) AS DOUBLE) AS rep2
+       |      FROM st GROUP BY s)
+       |SELECT s AS slice, n_tokens, n_types,
+       |  round(CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS ttr,
+       |  round(ln(CAST(n_tokens AS DOUBLE)) - slc / CAST(n_tokens AS DOUBLE), 6) + 0.0 AS entropy,
+       |  CASE WHEN n_tokens > 1
+       |       THEN round(rep2 / (CAST(n_tokens AS DOUBLE) * (CAST(n_tokens AS DOUBLE) - 1.0)), 9)
+       |  END AS simpson
+       |FROM a ORDER BY slice""".stripMargin
+
+  /** Per-source token JSD against the rest of the corpus — the one-shot
+    * oracle shared by q_stat_token_jsd and q_stream_token_jsd, whose
+    * cell fold must replay it bit-identically.
+    */
+  private def tokenJsdOracle: String =
+    s"""${tokenCellCtes("source")},
+       |g AS (SELECT t, CAST(sum(c) AS BIGINT) AS gc FROM st GROUP BY t),
+       |ns AS (SELECT s, CAST(sum(c) AS BIGINT) AS n_s FROM st GROUP BY s),
+       |tot AS (SELECT CAST(sum(gc) AS BIGINT) AS tt FROM g),
+       |f AS (SELECT st.s, ns.n_s, tot.tt - ns.n_s AS n_rest,
+       |             g.gc - st.c AS qc,
+       |             CAST(st.c AS DOUBLE) / CAST(ns.n_s AS DOUBLE) AS p,
+       |             CASE WHEN tot.tt - ns.n_s > 0
+       |                  THEN CAST(g.gc - st.c AS DOUBLE) / CAST(tot.tt - ns.n_s AS DOUBLE)
+       |                  ELSE 0.0 END AS q
+       |      FROM st JOIN g USING (t) JOIN ns USING (s) CROSS JOIN tot),
+       |a AS (SELECT s, n_s, n_rest,
+       |             sum(p * ln(2.0 * p / (p + q))
+       |                 + CASE WHEN qc > 0 THEN q * ln(2.0 * q / (p + q))
+       |                        ELSE 0.0 END) AS sf,
+       |             CAST(sum(qc) AS BIGINT) AS qseen
+       |      FROM f GROUP BY s, n_s, n_rest)
+       |SELECT s AS slice, n_s, n_rest,
+       |  CASE WHEN n_rest > 0
+       |       THEN round((sf + ln(2.0) * (1.0 - CAST(qseen AS DOUBLE)
+       |                                         / CAST(n_rest AS DOUBLE))) / 2.0, 6) + 0.0
+       |  END AS jsd
+       |FROM a ORDER BY slice""".stripMargin
+
+  /** Per-user pre/post sums of ⌊value·1000⌋ around 2024-01-08 (`x`,
+    * `y`) with the user-parity arm — the panel of the CUPED and
+    * difference-in-differences faces.
+    */
+  private def prePostArms(s: SparkSession, dir: String): DataFrame =
+    tb(s, dir).events.filter(col("value").isNotNull)
+      .select(col("user_id"),
+        floor(col("value") * lit(1000.0d)).cast("long").as("vm"),
+        (col("ts") < lit("2024-01-08").cast("timestamp")).as("pre"))
+      .groupBy("user_id")
+      .agg(coalesce(sum(when(col("pre"), col("vm"))), lit(0L)).as("x"),
+        coalesce(sum(when(!col("pre"), col("vm"))), lit(0L)).as("y"))
+      .withColumn("arm",
+        when(pmod(col("user_id"), lit(2)) === 0, "arm_a")
+          .otherwise("arm_b"))
+
   val all: Map[String, Q] = Map(
 
     // ---- Mann–Whitney U (RankStats.mannWhitney): are English docs
@@ -504,23 +577,7 @@ object StatsQueries {
     //      SAME maintained cell state as q_stream_token_jsd, read
     //      through the diversity finisher — one state, two monitors ----
     "q_stream_token_diversity" -> Q(
-      """WITH tk AS (SELECT source AS s,
-        |              unnest(list_filter(string_split_regex(lower(text), '\s+'),
-        |                                 x -> x <> '')) AS t
-        |            FROM documents),
-        |st AS (SELECT s, t, count(*) AS c FROM tk GROUP BY s, t),
-        |a AS (SELECT s, CAST(sum(c) AS BIGINT) AS n_tokens,
-        |             CAST(count(*) AS BIGINT) AS n_types,
-        |             sum(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))) AS slc,
-        |             CAST(sum(c * (c - 1)) AS DOUBLE) AS rep2
-        |      FROM st GROUP BY s)
-        |SELECT s AS slice, n_tokens, n_types,
-        |  round(CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS ttr,
-        |  round(ln(CAST(n_tokens AS DOUBLE)) - slc / CAST(n_tokens AS DOUBLE), 6) + 0.0 AS entropy,
-        |  CASE WHEN n_tokens > 1
-        |       THEN round(rep2 / (CAST(n_tokens AS DOUBLE) * (CAST(n_tokens AS DOUBLE) - 1.0)), 9)
-        |  END AS simpson
-        |FROM a ORDER BY slice""".stripMargin) { (s, dir) =>
+      tokenDiversityOracle("source")) { (s, dir) =>
       val tmp = Scratch.dir("graft_infodiv_")
       val statePath = s"${tmp.getPath}/token_cells"
       val docs = tb(s, dir).documents.select("doc_id", "source", "text")
@@ -574,23 +631,7 @@ object StatsQueries {
     //      or high Simpson flags template spam; the Simpson numerator
     //      Σ c(c−1) is exact integer algebra on both sides ----
     "q_stat_token_diversity" -> Q(
-      """WITH tk AS (SELECT lang AS s,
-        |              unnest(list_filter(string_split_regex(lower(text), '\s+'),
-        |                                 x -> x <> '')) AS t
-        |            FROM documents),
-        |st AS (SELECT s, t, count(*) AS c FROM tk GROUP BY s, t),
-        |a AS (SELECT s, CAST(sum(c) AS BIGINT) AS n_tokens,
-        |             CAST(count(*) AS BIGINT) AS n_types,
-        |             sum(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))) AS slc,
-        |             CAST(sum(c * (c - 1)) AS DOUBLE) AS rep2
-        |      FROM st GROUP BY s)
-        |SELECT s AS slice, n_tokens, n_types,
-        |  round(CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS ttr,
-        |  round(ln(CAST(n_tokens AS DOUBLE)) - slc / CAST(n_tokens AS DOUBLE), 6) + 0.0 AS entropy,
-        |  CASE WHEN n_tokens > 1
-        |       THEN round(rep2 / (CAST(n_tokens AS DOUBLE) * (CAST(n_tokens AS DOUBLE) - 1.0)), 9)
-        |  END AS simpson
-        |FROM a ORDER BY slice""".stripMargin) { (s, dir) =>
+      tokenDiversityOracle("lang")) { (s, dir) =>
       graft.llm.InfoStats.tokenDiversityBySlice(
         tb(s, dir).documents, "lang", "text").orderBy("slice")
     },
@@ -601,33 +642,7 @@ object StatsQueries {
     //      not contain fold into the closed-form complement-mass term
     //      instead of a |tokens|×|slices| grid ----
     "q_stat_token_jsd" -> Q(
-      """WITH tk AS (SELECT source AS s,
-        |              unnest(list_filter(string_split_regex(lower(text), '\s+'),
-        |                                 x -> x <> '')) AS t
-        |            FROM documents),
-        |st AS (SELECT s, t, count(*) AS c FROM tk GROUP BY s, t),
-        |g AS (SELECT t, CAST(sum(c) AS BIGINT) AS gc FROM st GROUP BY t),
-        |ns AS (SELECT s, CAST(sum(c) AS BIGINT) AS n_s FROM st GROUP BY s),
-        |tot AS (SELECT CAST(sum(gc) AS BIGINT) AS tt FROM g),
-        |f AS (SELECT st.s, ns.n_s, tot.tt - ns.n_s AS n_rest,
-        |             g.gc - st.c AS qc,
-        |             CAST(st.c AS DOUBLE) / CAST(ns.n_s AS DOUBLE) AS p,
-        |             CASE WHEN tot.tt - ns.n_s > 0
-        |                  THEN CAST(g.gc - st.c AS DOUBLE) / CAST(tot.tt - ns.n_s AS DOUBLE)
-        |                  ELSE 0.0 END AS q
-        |      FROM st JOIN g USING (t) JOIN ns USING (s) CROSS JOIN tot),
-        |a AS (SELECT s, n_s, n_rest,
-        |             sum(p * ln(2.0 * p / (p + q))
-        |                 + CASE WHEN qc > 0 THEN q * ln(2.0 * q / (p + q))
-        |                        ELSE 0.0 END) AS sf,
-        |             CAST(sum(qc) AS BIGINT) AS qseen
-        |      FROM f GROUP BY s, n_s, n_rest)
-        |SELECT s AS slice, n_s, n_rest,
-        |  CASE WHEN n_rest > 0
-        |       THEN round((sf + ln(2.0) * (1.0 - CAST(qseen AS DOUBLE)
-        |                                         / CAST(n_rest AS DOUBLE))) / 2.0, 6) + 0.0
-        |  END AS jsd
-        |FROM a ORDER BY slice""".stripMargin) { (s, dir) =>
+      tokenJsdOracle) { (s, dir) =>
       graft.llm.InfoStats.tokenJsdBySlice(
         tb(s, dir).documents, "source", "text").orderBy("slice")
     },
@@ -635,36 +650,10 @@ object StatsQueries {
     // ---- streaming token JSD (InfoStream): the per-slice vocabulary
     //      state folds incrementally — (slice, token, cnt) cells are a
     //      commutative monoid, so a 3-way split replays bit-identical
-    //      to the one-shot oracle; the maintained state serves both the
-    //      JSD and diversity reads ----
+    //      to q_stat_token_jsd and registers its `tokenJsdOracle`; the
+    //      maintained state serves both the JSD and diversity reads ----
     "q_stream_token_jsd" -> Q(
-      """WITH tk AS (SELECT source AS s,
-        |              unnest(list_filter(string_split_regex(lower(text), '\s+'),
-        |                                 x -> x <> '')) AS t
-        |            FROM documents),
-        |st AS (SELECT s, t, count(*) AS c FROM tk GROUP BY s, t),
-        |g AS (SELECT t, CAST(sum(c) AS BIGINT) AS gc FROM st GROUP BY t),
-        |ns AS (SELECT s, CAST(sum(c) AS BIGINT) AS n_s FROM st GROUP BY s),
-        |tot AS (SELECT CAST(sum(gc) AS BIGINT) AS tt FROM g),
-        |f AS (SELECT st.s, ns.n_s, tot.tt - ns.n_s AS n_rest,
-        |             g.gc - st.c AS qc,
-        |             CAST(st.c AS DOUBLE) / CAST(ns.n_s AS DOUBLE) AS p,
-        |             CASE WHEN tot.tt - ns.n_s > 0
-        |                  THEN CAST(g.gc - st.c AS DOUBLE) / CAST(tot.tt - ns.n_s AS DOUBLE)
-        |                  ELSE 0.0 END AS q
-        |      FROM st JOIN g USING (t) JOIN ns USING (s) CROSS JOIN tot),
-        |a AS (SELECT s, n_s, n_rest,
-        |             sum(p * ln(2.0 * p / (p + q))
-        |                 + CASE WHEN qc > 0 THEN q * ln(2.0 * q / (p + q))
-        |                        ELSE 0.0 END) AS sf,
-        |             CAST(sum(qc) AS BIGINT) AS qseen
-        |      FROM f GROUP BY s, n_s, n_rest)
-        |SELECT s AS slice, n_s, n_rest,
-        |  CASE WHEN n_rest > 0
-        |       THEN round((sf + ln(2.0) * (1.0 - CAST(qseen AS DOUBLE)
-        |                                         / CAST(n_rest AS DOUBLE))) / 2.0, 6) + 0.0
-        |  END AS jsd
-        |FROM a ORDER BY slice""".stripMargin) { (s, dir) =>
+      tokenJsdOracle) { (s, dir) =>
       val tmp = Scratch.dir("graft_infostream_")
       val statePath = s"${tmp.getPath}/token_cells"
       val docs = tb(s, dir).documents.select("doc_id", "source", "text")
@@ -892,16 +881,7 @@ object StatsQueries {
         |          * (CAST(a.sum_x AS DOUBLE) / CAST(a.n AS DOUBLE)
         |             - CAST(p.sx AS DOUBLE) / CAST(p.n0 AS DOUBLE)), 6) AS mean_adj
         |FROM a, p ORDER BY a.arm""".stripMargin) { (s, dir) =>
-      val per = tb(s, dir).events.filter(col("value").isNotNull)
-        .select(col("user_id"),
-          floor(col("value") * lit(1000.0d)).cast("long").as("vm"),
-          (col("ts") < lit("2024-01-08").cast("timestamp")).as("pre"))
-        .groupBy("user_id")
-        .agg(coalesce(sum(when(col("pre"), col("vm"))), lit(0L)).as("x"),
-          coalesce(sum(when(!col("pre"), col("vm"))), lit(0L)).as("y"))
-        .withColumn("arm",
-          when(pmod(col("user_id"), lit(2)) === 0, "arm_a")
-            .otherwise("arm_b"))
+      val per = prePostArms(s, dir)
       RankStats.cupedAdjust(per, "x", "y", "arm")
         .select(col("arm"), col("n"), col("sum_x"), col("sum_y"),
           round(col("mean_y"), 6).as("mean_y"),
@@ -1003,16 +983,7 @@ object StatsQueries {
         |                      / CAST(t0.n AS DOUBLE)) END, 6) AS z
         |FROM (SELECT * FROM a WHERE t = 1) t1, (SELECT * FROM a WHERE t = 0) t0""".stripMargin) {
       (s, dir) =>
-        val per = tb(s, dir).events.filter(col("value").isNotNull)
-          .select(col("user_id"),
-            floor(col("value") * lit(1000.0d)).cast("long").as("vm"),
-            (col("ts") < lit("2024-01-08").cast("timestamp")).as("pre"))
-          .groupBy("user_id")
-          .agg(coalesce(sum(when(col("pre"), col("vm"))), lit(0L)).as("x"),
-            coalesce(sum(when(!col("pre"), col("vm"))), lit(0L)).as("y"))
-          .withColumn("arm",
-            when(pmod(col("user_id"), lit(2)) === 0, "arm_a")
-              .otherwise("arm_b"))
+        val per = prePostArms(s, dir)
         RankStats.diffInDiff(per, "x", "y", "arm", "arm_a")
           .select(col("n_t"), col("n_c"),
             round(col("mean_diff_t"), 6).as("mean_diff_t"),
@@ -1737,12 +1708,27 @@ object StatsQueries {
         when(col("tp").isNotNull, 1L).otherwise(0L).as("ev"))
   }
 
+  /** Product-limit survival over `(t, d, n_risk)` rows: 0 from the
+    * first time all at risk fail, else exp Σ ln((n − d)/n) up to t —
+    * the select item `survival` shared by the Kaplan–Meier curve and
+    * the competing-risks all-cause curve.
+    */
+  private def productLimitSurvival: String =
+    """  CASE WHEN max(CASE WHEN d = n_risk THEN 1 ELSE 0 END)
+      |            OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1
+      |  THEN 0.0
+      |  ELSE exp(sum(CASE WHEN d > 0 AND d < n_risk
+      |                THEN ln(CAST(n_risk - d AS DOUBLE)) - ln(CAST(n_risk AS DOUBLE))
+      |                ELSE 0.0 END)
+      |           OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+      |  END AS survival""".stripMargin
+
   /** The KM curve over `subj` as CTE bodies `km0`/`km1`/`km` —
     * `km(t, d, c, n_risk, survival)` with survival UNROUNDED (each
     * consumer rounds at its own output).
     */
   private def kmCurveCte: String =
-    """km0 AS (SELECT dur_h AS t, CAST(sum(ev) AS BIGINT) AS d,
+    s"""km0 AS (SELECT dur_h AS t, CAST(sum(ev) AS BIGINT) AS d,
       |               CAST(count(*) - sum(ev) AS BIGINT) AS c,
       |               CAST(count(*) AS BIGINT) AS n_at
       |        FROM subj GROUP BY dur_h),
@@ -1751,14 +1737,7 @@ object StatsQueries {
       |               - coalesce(sum(n_at) OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS n_risk
       |        FROM km0),
       |km AS (SELECT t, d, c, n_risk,
-      |  CASE WHEN max(CASE WHEN d = n_risk THEN 1 ELSE 0 END)
-      |            OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1
-      |  THEN 0.0
-      |  ELSE exp(sum(CASE WHEN d > 0 AND d < n_risk
-      |                THEN ln(CAST(n_risk - d AS DOUBLE)) - ln(CAST(n_risk AS DOUBLE))
-      |                ELSE 0.0 END)
-      |           OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-      |  END AS survival
+      |$productLimitSurvival
       |FROM km1)""".stripMargin
 
   /** The one-shot Kaplan–Meier oracle, shared by q_evt_kaplan_meier
@@ -1974,7 +1953,7 @@ object StatsQueries {
     * its variance cannot drift apart.
     */
   private def cifGridCtes: String =
-    """cr0 AS (SELECT dur_h AS t,
+    s"""cr0 AS (SELECT dur_h AS t,
       |          CAST(sum(CASE WHEN cause > 0 THEN 1 ELSE 0 END) AS BIGINT) AS d,
       |          CAST(sum(CASE WHEN cause = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c,
       |          CAST(count(*) AS BIGINT) AS n_at
@@ -1984,14 +1963,7 @@ object StatsQueries {
       |               - coalesce(sum(n_at) OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS n_risk
       |        FROM cr0),
       |crs AS (SELECT t, d, n_risk,
-      |  CASE WHEN max(CASE WHEN d = n_risk THEN 1 ELSE 0 END)
-      |            OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1
-      |  THEN 0.0
-      |  ELSE exp(sum(CASE WHEN d > 0 AND d < n_risk
-      |                THEN ln(CAST(n_risk - d AS DOUBLE)) - ln(CAST(n_risk AS DOUBLE))
-      |                ELSE 0.0 END)
-      |           OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-      |  END AS survival
+      |$productLimitSurvival
       |FROM cr1),
       |crl AS (SELECT t, d AS d_all, n_risk,
       |          coalesce(lag(survival) OVER (ORDER BY t), 1.0) AS s_prev

@@ -84,8 +84,10 @@ object Reports {
       .orderBy("table_name")
 
   /** O2 + F12: table sizes, biggest first (table_sizes.sql:1-11) —
-    * file-system bytes per staging table dir with pretty-printed size
-    * ([[graft.core.Fs.listTables]]: a crashed rewrite's hidden siblings
+    * data-file bytes per staging table dir, partition dirs included,
+    * with pretty-printed size ([[graft.core.Fs.dataFileStats]]: checksums,
+    * markers and a crashed write's `_temporary` tree are not data;
+    * [[graft.core.Fs.listTables]]: a crashed rewrite's hidden siblings
     * are not tables).
     * Hadoop FS listings, so the same report runs on HDFS/object stores.
     */
@@ -94,7 +96,7 @@ object Reports {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
     val rows = graft.core.Fs.listTables(warehouseDir, conf).map { d =>
-      (d.getPath.getName, graft.core.Fs.dirBytes(d.getPath.toString, conf))
+      (d.getPath.getName, graft.core.Fs.dataFileStats(d.getPath.toString, conf).bytes)
     }
     rows.toDF("table_name", "total_bytes")
       .withColumn("pretty_size", graft.ingest.Stages.prettySize(col("total_bytes")))

@@ -117,6 +117,28 @@ class MaintenanceSpec extends SparkSpec {
     assert(swept === Map("stg_t" -> 1))
   }
 
+  test("staging compaction sizes its rewrite by data files: a crashed " +
+      "write's _temporary part does not raise the file count") {
+    val root = java.nio.file.Files.createTempDirectory("graft_stgtmp_").toFile
+    root.deleteOnExit()
+    val table = new java.io.File(root, "stg_t").getPath
+    (1 to 3).foreach(i =>
+      Seq((i.toLong, s"v$i")).toDF("id", "v")
+        .coalesce(1).write.mode("append").parquet(table))
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val dataBytes = walk(new java.io.File(table))
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    // a crashed writer's leftover attempt file, as large as the target
+    val attempt = new java.io.File(table, "_temporary/0/_temporary/attempt_0")
+    attempt.mkdirs()
+    java.nio.file.Files.write(new java.io.File(attempt, "part-00000.parquet").toPath,
+      new Array[Byte](dataBytes.toInt))
+    assert(Maintenance.compactStagingTable(spark, table,
+      targetFileBytes = dataBytes) === 1)
+    assert(spark.read.parquet(table).count() === 3)
+  }
+
   test("trigger-gated staging compaction: K fragmenting runs fire the sweep, " +
       "query results are invariant, a healthy table costs no rewrite") {
     val root = java.nio.file.Files.createTempDirectory("graft_stgauto_").toFile

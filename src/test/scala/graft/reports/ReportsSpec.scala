@@ -95,6 +95,21 @@ class ReportsSpec extends SparkSpec {
     assert(out.head.getString(2).matches("[0-9.]+ (B|KB|MB|GB)"))
   }
 
+  test("tableSizes counts a partitioned table's data files, not its markers") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh_part_").toFile
+    val table = s"${wh.getPath}/stg_p"
+    Seq((1L, "FAC1"), (2L, "FAC2"), (3L, "FAC2")).toDF("id", "fac")
+      .write.partitionBy("fac").parquet(table)
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val parquetBytes = walk(new java.io.File(table))
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    assert(parquetBytes > 0)
+    val out = Reports.tableSizes(wh.getPath, spark).collect()
+    assert(out.map(r => r.getString(0) -> r.getLong(1)).toSeq ===
+      Seq("stg_p" -> parquetBytes))
+  }
+
   test("tableSizes and quarantineTables never list a crashed rewrite's " +
       "siblings as tables") {
     import graft.core.Fs
