@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -380,56 +380,6 @@ object Temporal {
           .otherwise(col("_vsum") / (lit(1000.0) * col("n_events"))).as("twa"))
   }
 
-  // public: encoder codegen (SpecificSafeProjection) cannot construct
-  // private classes
-  final case class EwmaIn(entity: String, id: Long, tus: Long, value: Double)
-  final case class EwmaOut(entity: String, id: Long, tus: Long,
-                           value: Double, ewma: Double)
-
-  /** Per-entity exponentially weighted moving average over the
-    * event-time-ordered stream: `ewma_i = α·v_i + (1−α)·ewma_{i−1}`,
-    * seeded with the first value — the standard smoothing for
-    * irregular telemetry (no fixed frame captures it: every output
-    * depends on the ENTIRE prefix).
-    *
-    * Implementation: one groupByKey shuffle on the entity, then an
-    * O(n log n) in-memory sort + O(n) scan per entity via
-    * flatMapGroups. The closed form `Σ α(1−α)^{n−i} v_i` as window
-    * algebra would need (1−α)^{-i} intermediaries that overflow double
-    * past ~1500 events, so the recurrence scan is both the fast AND
-    * the safe shape. Per-entity history must fit one task — the same
-    * contract as the sessionize/sequence family; apply
-    * `Sessionize.capUserEvents` upstream for bot-tail entities.
-    *
-    * No cross-engine oracle (the recurrence over doubles accumulates
-    * engine-specific rounding through pow-free chains); correctness is
-    * property-tested against a driver-side brute force (TemporalSpec).
-    * Entity keys travel as strings — lossless for numeric ids, same
-    * contract as SequenceStream.
-    */
-  def ewma(events: DataFrame, entityCol: String, tsCol: String,
-           idCol: String, valueCol: String, alpha: Double): DataFrame = {
-    require(alpha > 0 && alpha <= 1, "alpha must be in (0, 1]")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(
-        col(entityCol).cast("string").as("entity"),
-        col(idCol).cast("long").as("id"),
-        unix_micros(col(tsCol)).as("tus"),
-        col(valueCol).cast("double").as("value"))
-      .as[EwmaIn]
-      .groupByKey(_.entity)
-      .flatMapGroups { (_, it) =>
-        val evs = it.toArray.sortBy(e => (e.tus, e.id))
-        var acc = Double.NaN
-        evs.iterator.map { e =>
-          acc = if (acc.isNaN) e.value else alpha * e.value + (1 - alpha) * acc
-          EwmaOut(e.entity, e.id, e.tus, e.value, acc)
-        }
-      }
-      .toDF(entityCol, idCol, "tus", valueCol, "ewma")
-  }
-
   /** Per-entity inter-arrival statistics: gap (event-to-event delay)
     * count, min, max in exact integer MICROS plus the interpolated
     * median — the heartbeat profile behind bot detection, SLA
@@ -452,13 +402,75 @@ object Temporal {
         round(percentile(col("gap"), lit(0.5)), 4).as("gap_median"))
   }
 
-  /** cusum consumes ewma's exact input row shape — one class, not two
-    * field-for-field duplicates (the FixedIn precedent).
+  // public: encoder codegen (SpecificSafeProjection) cannot construct
+  // private classes
+  final case class FixedIn(entity: String, id: Long, tus: Long, vmillis: Long)
+  final case class EwmaFixedOut(entity: String, id: Long, tus: Long,
+                                vmillis: Long, ewma_millis: Long)
+  final case class CusumFixedOut(entity: String, id: Long, tus: Long,
+                                 vmillis: Long, cusum_hi: Long, cusum_lo: Long,
+                                 alarm: Boolean)
+
+  /** The shared execution of the fixed-point recurrences: values
+    * scaled to millis (`round(v·1000)`, exact for 2-decimal telemetry),
+    * one groupByKey shuffle on the entity, then an O(n log n) in-memory
+    * sort by (time, id) per entity handed to the O(n) `scan`. A
+    * recurrence's every output depends on the ENTIRE prefix, so no
+    * fixed window frame captures it. Per-entity history must fit one
+    * task — the same contract as the sessionize/sequence family; apply
+    * `Sessionize.capUserEvents` upstream for bot-tail entities. Entity
+    * keys travel as strings — lossless for numeric ids, same contract
+    * as SequenceStream.
     */
-  type CusumIn = EwmaIn
-  final case class CusumOut(entity: String, id: Long, tus: Long,
-                            value: Double, cusum_hi: Double, cusum_lo: Double,
-                            alarm: Boolean)
+  private def scanEntities[T: Encoder](events: DataFrame, entityCol: String,
+                                       tsCol: String, idCol: String,
+                                       valueCol: String)(
+      scan: Array[FixedIn] => Iterator[T]): Dataset[T] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events.select(
+        col(entityCol).cast("string").as("entity"),
+        col(idCol).cast("long").as("id"),
+        unix_micros(col(tsCol)).as("tus"),
+        round(col(valueCol).cast("double") * 1000).cast("long").as("vmillis"))
+      .as[FixedIn]
+      .groupByKey(_.entity)
+      .flatMapGroups((_, it) => scan(it.toArray.sortBy(e => (e.tus, e.id))))
+  }
+
+  /** Per-entity exponentially weighted moving average over the
+    * event-time-ordered stream, in exact integer fixed-point: the
+    * α=num/den recurrence kept in Longs with one truncating division
+    * per step, seeded with the first value:
+    *
+    *   e_i = (num·v_i + (den−num)·e_{i−1}) div den
+    *
+    * Every step is integer arithmetic, so the result is BIT-IDENTICAL
+    * across engines and hash-compares against its oracle (a double
+    * recurrence accumulates engine-specific rounding; same trick as
+    * [[timeWeightedAvg]]). Envelope: non-negative values (trunc ==
+    * floor, matching SQL `//`), and den·v_millis < 2^63. Execution:
+    * [[scanEntities]].
+    */
+  def ewmaFixed(events: DataFrame, entityCol: String, tsCol: String,
+                idCol: String, valueCol: String,
+                alphaNum: Long = 2L, alphaDen: Long = 10L): DataFrame = {
+    require(alphaNum > 0 && alphaNum <= alphaDen, "need 0 < num <= den")
+    val spark = events.sparkSession
+    import spark.implicits._
+    scanEntities(events, entityCol, tsCol, idCol, valueCol) { evs =>
+      // explicit seeded flag, NOT an acc<0 sentinel: with negative
+      // values the sentinel re-seeds at every step and the "ewma"
+      // silently echoes the raw series
+      var seeded = false
+      var acc = 0L
+      evs.iterator.map { e =>
+        acc = if (!seeded) { seeded = true; e.vmillis }
+              else (alphaNum * e.vmillis + (alphaDen - alphaNum) * acc) / alphaDen
+        EwmaFixedOut(e.entity, e.id, e.tus, e.vmillis, acc)
+      }
+    }.toDF(entityCol, idCol, "tus", "vmillis", "ewma_millis")
+  }
 
   /** Tabular CUSUM changepoint detection (Page 1954), per entity: the
     * classic one-sided cumulative sums
@@ -468,94 +480,9 @@ object Temporal {
     *
     * with `alarm` once either side exceeds `threshold` — detects a
     * sustained mean shift of ≳ slack long before any fixed-window
-    * average moves. Sequential recurrence, so the same execution
-    * contract as [[ewma]]: sort-by-(time, id) inside mapGroups with the
-    * documented per-entity bound (no oracle — double recurrences
-    * accumulate engine-specific rounding; TemporalSpec property-tests
-    * against the brute-force recurrence).
-    */
-  def cusum(events: DataFrame, entityCol: String, tsCol: String,
-            idCol: String, valueCol: String, target: Double,
-            slack: Double, threshold: Double): DataFrame = {
-    require(slack >= 0 && threshold > 0, "slack >= 0, threshold > 0")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(
-        col(entityCol).cast("string").as("entity"),
-        col(idCol).cast("long").as("id"),
-        unix_micros(col(tsCol)).as("tus"),
-        col(valueCol).cast("double").as("value"))
-      .as[CusumIn]
-      .groupByKey(_.entity)
-      .flatMapGroups { (_, it) =>
-        val evs = it.toArray.sortBy(e => (e.tus, e.id))
-        var hi = 0.0
-        var lo = 0.0
-        evs.iterator.map { e =>
-          hi = math.max(0.0, hi + (e.value - target - slack))
-          lo = math.max(0.0, lo + (target - e.value - slack))
-          CusumOut(e.entity, e.id, e.tus, e.value, hi, lo,
-            hi > threshold || lo > threshold)
-        }
-      }
-      .toDF(entityCol, idCol, "tus", valueCol, "cusum_hi", "cusum_lo", "alarm")
-  }
-
-  final case class FixedIn(entity: String, id: Long, tus: Long, vmillis: Long)
-  final case class EwmaFixedOut(entity: String, id: Long, tus: Long,
-                                vmillis: Long, ewma_millis: Long)
-  final case class CusumFixedOut(entity: String, id: Long, tus: Long,
-                                 vmillis: Long, cusum_hi: Long, cusum_lo: Long,
-                                 alarm: Boolean)
-
-  /** [[ewma]] in exact integer fixed-point: values scaled to millis
-    * (`round(v·1000)`, exact for 2-decimal telemetry) and the α=num/den
-    * recurrence kept in Longs with one truncating division per step:
-    *
-    *   e_i = (num·v_i + (den−num)·e_{i−1}) div den
-    *
-    * Every step is integer arithmetic, so the result is BIT-IDENTICAL
-    * across engines — this is the oracle-able face of the EWMA (the
-    * double variant accumulates engine-specific rounding and can't be
-    * hash-compared; same trick as [[timeWeightedAvg]]). Envelope:
-    * non-negative values (trunc == floor, matching SQL `//`), and
-    * den·v_millis < 2^63. Execution contract identical to [[ewma]]:
-    * one groupByKey on the entity, sort + O(n) scan per group.
-    */
-  def ewmaFixed(events: DataFrame, entityCol: String, tsCol: String,
-                idCol: String, valueCol: String,
-                alphaNum: Long = 2L, alphaDen: Long = 10L): DataFrame = {
-    require(alphaNum > 0 && alphaNum <= alphaDen, "need 0 < num <= den")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(
-        col(entityCol).cast("string").as("entity"),
-        col(idCol).cast("long").as("id"),
-        unix_micros(col(tsCol)).as("tus"),
-        round(col(valueCol).cast("double") * 1000).cast("long").as("vmillis"))
-      .as[FixedIn]
-      .groupByKey(_.entity)
-      .flatMapGroups { (_, it) =>
-        val evs = it.toArray.sortBy(e => (e.tus, e.id))
-        // explicit seeded flag, NOT an acc<0 sentinel: with negative
-        // values the sentinel re-seeds at every step and the "ewma"
-        // silently echoes the raw series
-        var seeded = false
-        var acc = 0L
-        evs.iterator.map { e =>
-          acc = if (!seeded) { seeded = true; e.vmillis }
-                else (alphaNum * e.vmillis + (alphaDen - alphaNum) * acc) / alphaDen
-          EwmaFixedOut(e.entity, e.id, e.tus, e.vmillis, acc)
-        }
-      }
-      .toDF(entityCol, idCol, "tus", "vmillis", "ewma_millis")
-  }
-
-  /** [[cusum]] in exact integer fixed-point: values/target/slack/
-    * threshold in millis, and the Page recurrences are pure Long
-    * add-and-clamp — no division at all, so cross-engine bit-identical
-    * (the oracle-able face of CUSUM; the double variant stays for
-    * callers with sub-milli scales).
+    * average moves. Values/target/slack/threshold are in millis and the
+    * recurrences are pure Long add-and-clamp — no division at all, so
+    * cross-engine bit-identical. Execution: [[scanEntities]].
     */
   def cusumFixed(events: DataFrame, entityCol: String, tsCol: String,
                  idCol: String, valueCol: String, targetMillis: Long,
@@ -563,25 +490,16 @@ object Temporal {
     require(slackMillis >= 0 && thresholdMillis > 0, "slack >= 0, threshold > 0")
     val spark = events.sparkSession
     import spark.implicits._
-    events.select(
-        col(entityCol).cast("string").as("entity"),
-        col(idCol).cast("long").as("id"),
-        unix_micros(col(tsCol)).as("tus"),
-        round(col(valueCol).cast("double") * 1000).cast("long").as("vmillis"))
-      .as[FixedIn]
-      .groupByKey(_.entity)
-      .flatMapGroups { (_, it) =>
-        val evs = it.toArray.sortBy(e => (e.tus, e.id))
-        var hi = 0L
-        var lo = 0L
-        evs.iterator.map { e =>
-          hi = math.max(0L, hi + (e.vmillis - targetMillis - slackMillis))
-          lo = math.max(0L, lo + (targetMillis - e.vmillis - slackMillis))
-          CusumFixedOut(e.entity, e.id, e.tus, e.vmillis, hi, lo,
-            hi > thresholdMillis || lo > thresholdMillis)
-        }
+    scanEntities(events, entityCol, tsCol, idCol, valueCol) { evs =>
+      var hi = 0L
+      var lo = 0L
+      evs.iterator.map { e =>
+        hi = math.max(0L, hi + (e.vmillis - targetMillis - slackMillis))
+        lo = math.max(0L, lo + (targetMillis - e.vmillis - slackMillis))
+        CusumFixedOut(e.entity, e.id, e.tus, e.vmillis, hi, lo,
+          hi > thresholdMillis || lo > thresholdMillis)
       }
-      .toDF(entityCol, idCol, "tus", "vmillis", "cusum_hi", "cusum_lo", "alarm")
+    }.toDF(entityCol, idCol, "tus", "vmillis", "cusum_hi", "cusum_lo", "alarm")
   }
 
   /** Calendar resample with gap-fill: per entity, daily (count, sum)

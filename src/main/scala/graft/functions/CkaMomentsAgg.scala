@@ -5,7 +5,6 @@ import java.math.BigInteger
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -26,7 +25,7 @@ import org.apache.spark.sql.types._
   * round(,6) in SQL. Summation order of the (already-double) cell
   * terms differs from the hash-aggregate plan's partial-merge order —
   * both are absorbed by the round(,6) contract (the linearCka
-  * scaladoc's stance). Update/merge use
+  * scaladoc's stance). The [[ExactMomentsAgg]] buffer uses
   * addExact/multiplyExact, so integer overflow fails LOUDLY like the
   * ANSI decimal path instead of wrapping.
   *
@@ -42,12 +41,12 @@ case class CkaMomentsAgg(
     sx: IndexedSeq[Long], sy: IndexedSeq[Long],
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends ExactMomentsAgg {
 
   private def triLen(d: Int) = d * (d + 1) / 2
   // buffer layout: [0] = n rows, then xy sums (i-major dx·dy), then
   // xx upper-triangle (i ≤ j, row-major), then yy upper-triangle
-  private def bufLen = 1 + dimX * dimY + triLen(dimX) + triLen(dimY)
+  protected def bufLen: Int = 1 + dimX * dimY + triLen(dimX) + triLen(dimY)
 
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -66,27 +65,12 @@ case class CkaMomentsAgg(
     else TypeCheckResult.TypeCheckSuccess
   }
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](bufLen)
-
   override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
     val xa = qx.eval(input)
     val ya = qy.eval(input)
     if (xa == null || ya == null) return buffer
-    // null-element scan before toLongArray — same loud-failure stance
-    // as TriMomentsAgg (r14 advice: UnsafeArrayData reads nulls as 0)
-    def checkNoNulls(a: ArrayData, which: String): Unit = {
-      var i = 0
-      while (i < a.numElements()) {
-        if (a.isNullAt(i)) throw new IllegalStateException(
-          s"cka_moments: null element at index $i of $which")
-        i += 1
-      }
-    }
-    val xad = xa.asInstanceOf[ArrayData]
-    val yad = ya.asInstanceOf[ArrayData]
-    checkNoNulls(xad, "x"); checkNoNulls(yad, "y")
-    val x = xad.toLongArray()
-    val y = yad.toLongArray()
+    val x = ExactMomentsAgg.longs(xa.asInstanceOf[ArrayData], "cka_moments", "x")
+    val y = ExactMomentsAgg.longs(ya.asInstanceOf[ArrayData], "cka_moments", "y")
     if (x.length != dimX || y.length != dimY)
       throw new IllegalStateException(
         s"cka_moments: vector lengths (${x.length}, ${y.length}) != dims ($dimX, $dimY)")
@@ -102,35 +86,8 @@ case class CkaMomentsAgg(
       }
       i += 1
     }
-    i = 0
-    while (i < dimX) {
-      val xi = x(i)
-      var j = i
-      while (j < dimX) {
-        buffer(p) = Math.addExact(buffer(p), Math.multiplyExact(xi, x(j)))
-        p += 1; j += 1
-      }
-      i += 1
-    }
-    i = 0
-    while (i < dimY) {
-      val yi = y(i)
-      var j = i
-      while (j < dimY) {
-        buffer(p) = Math.addExact(buffer(p), Math.multiplyExact(yi, y(j)))
-        p += 1; j += 1
-      }
-      i += 1
-    }
-    buffer
-  }
-
-  override def merge(buffer: Array[Long], other: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < bufLen) {
-      buffer(i) = Math.addExact(buffer(i), other(i))
-      i += 1
-    }
+    ExactMomentsAgg.addUpperTriangle(buffer,
+      ExactMomentsAgg.addUpperTriangle(buffer, p, x), y)
     buffer
   }
 
@@ -183,22 +140,9 @@ case class CkaMomentsAgg(
     InternalRow(n, hxy, hxx, hyy)
   }
 
-  override def serialize(buffer: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(buffer.length * 8)
-    bb.asLongBuffer().put(buffer)
-    bb.array()
-  }
-
-  override def deserialize(storageFormat: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](storageFormat.length / 8)
-    java.nio.ByteBuffer.wrap(storageFormat).asLongBuffer().get(out)
-    out
-  }
-
   override def dataType: DataType = StructType(Seq(
     StructField("n", LongType), StructField("hxy", DoubleType),
     StructField("hxx", DoubleType), StructField("hyy", DoubleType)))
-  override def nullable: Boolean = true
   override def children: Seq[Expression] = Seq(qx, qy)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =

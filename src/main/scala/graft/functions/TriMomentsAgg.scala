@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -13,8 +12,8 @@ import org.apache.spark.sql.types._
   * of [[graft.llm.EmbeddingOps.secondMoments]]'s d(d+1)/2-struct
   * per-row explode into a decimal hash aggregate (the
   * [[CkaMomentsAgg]] recipe: a primitive multiply-add loop per row
-  * over an exact Long buffer; addExact/multiplyExact fail loudly on
-  * overflow where decimal had silent headroom). Rows with a null
+  * over an [[ExactMomentsAgg]] buffer, which fails loudly on overflow
+  * where decimal had silent headroom). Rows with a null
   * array contribute nothing (explode-of-null semantics); zero
   * contributing rows → null (the caller filters to an empty frame,
   * matching the aggregate-over-empty-explode shape). A length
@@ -24,9 +23,9 @@ case class TriMomentsAgg(
     q: Expression, dim: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends ExactMomentsAgg {
 
-  private def bufLen = 1 + dim * (dim + 1) / 2
+  protected def bufLen: Int = 1 + dim * (dim + 1) / 2
 
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -39,47 +38,16 @@ case class TriMomentsAgg(
     }
   }
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](bufLen)
-
   override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
     val xa = q.eval(input)
     if (xa == null) return buffer
-    val ad = xa.asInstanceOf[ArrayData]
-    // toLongArray on UnsafeArrayData copies raw memory, reading null
-    // elements as 0 SILENTLY — scan first so the loud-failure contract
-    // (addExact/multiplyExact) also covers null-element vectors (r14
-    // advice)
-    var ni = 0
-    while (ni < ad.numElements()) {
-      if (ad.isNullAt(ni)) throw new IllegalStateException(
-        s"tri_moments: null element at index $ni (elements must be non-null)")
-      ni += 1
-    }
-    val x = ad.toLongArray()
+    val x = ExactMomentsAgg.longs(xa.asInstanceOf[ArrayData], "tri_moments",
+      "the vector")
     if (x.length != dim)
       throw new IllegalStateException(
         s"tri_moments: vector length ${x.length} != dim $dim")
     buffer(0) = Math.addExact(buffer(0), 1L)
-    var p = 1
-    var i = 0
-    while (i < dim) {
-      val xi = x(i)
-      var j = i
-      while (j < dim) {
-        buffer(p) = Math.addExact(buffer(p), Math.multiplyExact(xi, x(j)))
-        p += 1; j += 1
-      }
-      i += 1
-    }
-    buffer
-  }
-
-  override def merge(buffer: Array[Long], other: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < bufLen) {
-      buffer(i) = Math.addExact(buffer(i), other(i))
-      i += 1
-    }
+    ExactMomentsAgg.addUpperTriangle(buffer, 1, x)
     buffer
   }
 
@@ -89,22 +57,9 @@ case class TriMomentsAgg(
       new GenericArrayData(java.util.Arrays.copyOfRange(buffer, 1, bufLen)))
   }
 
-  override def serialize(buffer: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(buffer.length * 8)
-    bb.asLongBuffer().put(buffer)
-    bb.array()
-  }
-
-  override def deserialize(storageFormat: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](storageFormat.length / 8)
-    java.nio.ByteBuffer.wrap(storageFormat).asLongBuffer().get(out)
-    out
-  }
-
   override def dataType: DataType = StructType(Seq(
     StructField("n", LongType),
     StructField("sums", ArrayType(LongType, containsNull = false))))
-  override def nullable: Boolean = true
   override def children: Seq[Expression] = Seq(q)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =

@@ -276,10 +276,11 @@ object Pipeline {
         // may already have appended staging rows, and only the log/sync
         // writes below make those appends idempotent for the rerun. The
         // failed entity's files log as failed and re-ingest next run; if
-        // its own staging append partially landed before the crash, the
-        // W1 latest-wins views + dedupStaging are the documented
-        // recovery — the same (smaller) window the reference's
-        // non-transactional to_sql→log sequence has per file.
+        // its own staging append partially landed before the crash,
+        // nothing removes those rows — staging is plain appended parquet
+        // and no pass dedups it, so the rerun appends them again. That
+        // is the same window the reference's non-transactional
+        // to_sql→log sequence has per file (ROADMAP Direction 4).
         scala.util.Try(processEntity(t, fs)).recover {
           case e: Throwable =>
             val msg = Option(e.getMessage).getOrElse(e.getClass.getName)

@@ -42,13 +42,24 @@ object Ann {
                  vecCol: String, k: Int): DataFrame = {
     // norms are per-vector: compute them once per side BEFORE the join,
     // not per (q, c) pair after it (|Q|·|C| re-computations saved)
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-      l2norm(col(vecCol)).as("q_nrm"))
-    val c = corpus.select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
-      l2norm(col(vecCol)).as("c_nrm"))
-    val scored = c.join(broadcast(q), col("q_id") =!= col("c_id"))
-      .withColumn("cosine", round(
-        dot(col("q_vec"), col("c_vec")) / (col("q_nrm") * col("c_nrm")), 4))
+    val q = normed(queries, idCol, vecCol, "q")
+    val c = normed(corpus, idCol, vecCol, "c")
+    cosineRank(c.join(broadcast(q), col("q_id") =!= col("c_id")), k)
+  }
+
+  /** (<p>_id, <p>_vec, <p>_nrm): one side of a cosine scoring join. */
+  private def normed(df: DataFrame, idCol: String, vecCol: String,
+                     p: String): DataFrame =
+    df.select(col(idCol).as(s"${p}_id"), col(vecCol).as(s"${p}_vec"),
+      l2norm(col(vecCol)).as(s"${p}_nrm"))
+
+  /** The shared rank tail of [[cosineTopK]] and [[annTopKLsh]]: scores
+    * each [[normed]] (q, c) pair by round(cosine, 4) and keeps the top
+    * k per query (id tiebreak), as (q_id, c_id, cosine, rn).
+    */
+  private def cosineRank(pairs: DataFrame, k: Int): DataFrame = {
+    val scored = pairs.withColumn("cosine", round(
+      dot(col("q_vec"), col("c_vec")) / (col("q_nrm") * col("c_nrm")), 4))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("q_id").orderBy(col("cosine").desc, col("c_id").asc)
     scored.withColumn("rn", row_number().over(w))
@@ -135,30 +146,21 @@ object Ann {
         col("sign").cast("long")).as("proj"))
   }
 
-  /** 8-bit LSH bucket per vector: bucket = Σ_j [dot(v, h_j) > 0]·2^j.
-    * One posexplode + broadcast join + two aggregations — map-side heavy,
-    * shuffles only (id, j) partials.
+  /** 8-bit LSH bucket per vector: bucket = Σ_j [dot(v, h_j) > 0]·2^j —
+    * the one-table [[lshBucketsMulti]] (same planes, same bit weights).
     */
   def lshBuckets(df: DataFrame, idCol: String, vecCol: String,
-                 dim: Int = 64, bits: Int = 8): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val signs = hyperplaneSigns(dim, bits).toDF("j", "i", "sign")
-    df.select(col(idCol), posexplode(col(vecCol)).as(Seq("p", "v")))
-      .withColumn("i", col("p") + 1).drop("p")
-      .join(broadcast(signs), "i")
-      .groupBy(col(idCol), col("j"))
-      .agg(sum(col("v").cast("double") * col("sign")).as("dot_j"))
-      .withColumn("bit", when(col("dot_j") > 0, 1L).otherwise(0L))
-      .groupBy(col(idCol))
-      .agg(sum(col("bit") * pow(lit(2.0), col("j")).cast("long")).as("bucket"))
-  }
+                 dim: Int = 64, bits: Int = 8): DataFrame =
+    lshBucketsMulti(df, idCol, vecCol, dim, bits, tables = 1)
+      .drop("table_id")
 
   /** Multi-table LSH buckets: `tables` independent signatures of `bits`
     * hyperplanes each (hyperplane j of table t is global plane
     * t*bits + j). Output one row per (id, table_id). Shorter signatures +
     * OR across tables is the standard recall lever: single-probe match
     * probability per table is p^bits, overall 1-(1-p^bits)^tables.
+    * One posexplode + broadcast join + two aggregations — map-side
+    * heavy, shuffles only (id, j) partials.
     */
   def lshBucketsMulti(df: DataFrame, idCol: String, vecCol: String,
                       dim: Int = 64, bits: Int = 4, tables: Int = 4): DataFrame = {
@@ -197,20 +199,9 @@ object Ann {
       .join(broadcast(qb), Seq("table_id", "bucket"))
       .filter(col("q_id") =!= col("c_id"))
       .select("q_id", "c_id").dropDuplicates("q_id", "c_id")
-    val qVecs = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-      l2norm(col(vecCol)).as("q_nrm"))
-    val cVecs = df.select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
-      l2norm(col(vecCol)).as("c_nrm"))
-    val scored = cands
-      .join(broadcast(qVecs), "q_id")
-      .join(cVecs, "c_id")
-      .withColumn("cosine", round(
-        dot(col("q_vec"), col("c_vec")) / (col("q_nrm") * col("c_nrm")), 4))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("cosine").desc, col("c_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"), col("cosine"), col("rn"))
+    cosineRank(cands
+      .join(broadcast(normed(queries, idCol, vecCol, "q")), "q_id")
+      .join(normed(df, idCol, vecCol, "c"), "c_id"), k)
   }
 
   /** Retrieval-quality evaluation: per-query recall@k of an approximate

@@ -17,11 +17,11 @@ import org.apache.spark.sql.functions._
   * before a single GPU spins up.
   *
   * Scale posture: the concat layout needs a GLOBAL prefix sum, which a
-  * naive `Window.orderBy` computes on ONE task. [[withStreamOffsets]]
-  * instead runs the classic two-level scan: per-block sums (one keyed
-  * shuffle), a window over the |corpus|/blockSize-row block-summary
-  * frame, then per-block intra-window partials — every data-sized step
-  * is keyed on the block id, so 100 TB packs with the same plan shape.
+  * naive `Window.orderBy` computes on ONE task. Every prefix here —
+  * stream offsets, per-bucket bin ranks, shard ranks — is instead the
+  * one two-level [[prefixScan]], which [[RankStats]] and [[Survival]]
+  * share: every data-sized step is keyed on the block id, so 100 TB
+  * packs with the same plan shape.
   */
 object Packing {
 
@@ -32,7 +32,7 @@ object Packing {
     *
     * `idCol` must be numeric and unique; blocks are `id div blockSize`
     * — monotonic in id, so block ranges tile the global order without
-    * requiring dense ids. Two-level scan (see object doc). The summary
+    * requiring dense ids; the offsets are one [[prefixScan]]. The summary
     * frame holds span(ids)/blockSize rows, NOT |ids|/blockSize: for a
     * SPARSE id space (composite sort keys) size blockSize to the span,
     * or use [[rankShards]]/[[binPack]], whose span-scaled blocking
@@ -49,22 +49,8 @@ object Packing {
       .withColumn("_len", col(lenCol).cast("long"))
       .filter(col("_len") > 0L)
       .withColumn("_blk", expr(s"_id div $blockSize"))
-    val blkSums = base.groupBy("_blk").agg(sum("_len").as("_bsum"))
-    // deliberate global window over BLOCK SUMMARIES, not data rows —
-    // span(ids)/blockSize rows (≈|ids|/blockSize only for DENSE ids;
-    // see the scaladoc's sparse-key caveat)
-    val wBlk = Window.orderBy("_blk")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = blkSums
-      .select(col("_blk"),
-        coalesce(sum("_bsum").over(wBlk), lit(0L)).as("_boff"))
-    val wIn = Window.partitionBy("_blk").orderBy("_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    base
-      .join(broadcast(offsets), Seq("_blk"))
-      .withColumn("start_off",
-        col("_boff") + coalesce(sum("_len").over(wIn), lit(0L)))
-      .drop("_blk", "_boff")
+    prefixScan(base, Nil, "_id", Seq("_len"))
+      .withColumnRenamed("_pre__len", "start_off")
   }
 
   /** Concat-and-chunk layout: the corpus as one token stream cut into
@@ -215,22 +201,74 @@ object Packing {
       .drop("_lo", "_bw")
   }
 
+  /** The one bounded two-level exclusive prefix scan — ranking a corpus
+    * without a one-task global sort. `blocked` carries `_blk`, a block
+    * id monotonic in `orderCol` ([[withBoundedBlocks]], or a dense
+    * `id div blockSize`); for each measure m it adds `_pre_<m>` = Σ m
+    * over the rows of the same `keys` that come earlier in `orderCol`
+    * order (a constant-1 measure is the 0-based rank for a unique
+    * order). Per-(keys, block) sums take one keyed shuffle; the
+    * across-block offsets are a window over that (keys × blocks)-row
+    * summary frame only; the in-block partials are a window
+    * partitioned by (keys, block). The offsets join back by broadcast
+    * for a global scan (empty `keys`) and by a keyed shuffle join
+    * otherwise: a LEFT join, so no row is dropped and the optimizer
+    * infers no not-null filter onto `blocked` (one would fork its plan
+    * from the summary's — measured at two more jobs in [[binPack]]);
+    * `innerJoin` lets the planner build either side instead (measured
+    * at one stage fewer in [[RankStats.groupedQuantiles]]); for
+    * non-NULL keys and blocks both joins give the same rows.
+    * `withSuccessor` adds `_nextV`, the key's next `orderCol` value
+    * (lead within the block, stitched from the next block's minimum;
+    * NULL on the key's last row). Drops `_blk`.
+    */
+  private[llm] def prefixScan(blocked: DataFrame, keys: Seq[String],
+                              orderCol: String, measures: Seq[String],
+                              withSuccessor: Boolean = false,
+                              innerJoin: Boolean = false): DataFrame = {
+    val blkKeys = keys :+ "_blk"
+    val aggs = measures.map(m => sum(col(m)).as(s"_bs_$m")) ++
+      (if (withSuccessor) Seq(min(orderCol).as("_bmin")) else Nil)
+    val summary = blocked.groupBy(blkKeys.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+    val byKey =
+      if (keys.isEmpty) Window.orderBy("_blk")
+      else Window.partitionBy(keys.map(col): _*).orderBy("_blk")
+    val offs = summary.select(blkKeys.map(col) ++
+      measures.map(m => coalesce(sum(col(s"_bs_$m")).over(
+        byKey.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+        .as(s"_bo_$m")) ++
+      (if (withSuccessor)
+        Seq(lead(col("_bmin"), 1).over(byKey).as("_nextBlockMin"))
+      else Nil): _*)
+    val inBlk = Window.partitionBy(blkKeys.map(col): _*).orderBy(orderCol)
+    val joined =
+      if (keys.isEmpty) blocked.join(broadcast(offs), Seq("_blk"))
+      else blocked.join(offs, blkKeys, if (innerJoin) "inner" else "left")
+    val pre = measures.foldLeft(joined) { (d, m) =>
+      d.withColumn(s"_pre_$m", col(s"_bo_$m") + coalesce(sum(col(m)).over(
+        inBlk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    }
+    val stitched =
+      if (withSuccessor)
+        pre.withColumn("_nextV", coalesce(lead(col(orderCol), 1).over(inBlk),
+          col("_nextBlockMin"))).drop("_nextBlockMin")
+      else pre
+    stitched.drop("_blk" +: measures.map(m => s"_bo_$m"): _*)
+  }
+
   /** No-split bin packing, power-of-two length buckets: docs keep their
     * boundaries (SFT/eval batching), each bin holds
     * k = max(1, capacity div 2^(lb+1)) docs of bucket
     * lb = ⌊log₂ len⌋ — k docs of length < 2^(lb+1) always fit, so the
     * capacity guarantee is structural, not checked per bin.
     *
-    * Scale posture: the per-bucket rank is the SAME two-level scan as
-    * [[withStreamOffsets]], sub-sharded on [[withBoundedBlocks]] of the
+    * Scale posture: the per-bucket rank is a bucket-keyed
+    * [[prefixScan]] of a constant 1 over [[withBoundedBlocks]] of the
     * id — a plain ROW_NUMBER over PARTITION BY len_bucket has at most
     * ~log₂(capacity)+2 partitions, and a corpus dominated by one length
     * bucket (the realistic token-length distribution) would sort that
-    * whole bucket on a single task (r10 ADVICE). Per (bucket, block)
-    * everything is keyed; the only windows run over the
-    * (buckets × ≤maxBlocks)-row block-summary frame, partitioned by
-    * bucket, and the corpus-sized frame sorts only within (bucket,
-    * block).
+    * whole bucket on a single task (r10 ADVICE).
     *
     * Per doc: (id, len, len_bucket, bin_idx, fits). Docs with
     * len > capacity can never pack — they get len_bucket = -1,
@@ -250,28 +288,15 @@ object Packing {
         .filter(col("_len") > 0L)
         .withColumn("len_bucket",
           when(col("_len") > capacity, lit(-1L))
-            .otherwise(expr("length(bin(_len)) - 1").cast("long"))),
+            .otherwise(expr("length(bin(_len)) - 1").cast("long")))
+        .withColumn("_one", lit(1L)),
       "_id", maxBlocks)
-    // two-level per-bucket rank: exclusive count of earlier blocks in
-    // the same bucket + intra-(bucket, block) row_number. Equal to
-    // ROW_NUMBER over (PARTITION BY len_bucket ORDER BY _id) - 1
-    // because blocks tile the id order (withBoundedBlocks is monotonic
-    // in the key). The summary window input is the aggregate frame.
-    val blkCounts = base.filter(col("len_bucket") =!= -1L)
-      .groupBy("len_bucket", "_blk").agg(count(lit(1)).as("_bc"))
-    val wb = Window.partitionBy("len_bucket").orderBy("_blk")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = blkCounts.select(col("len_bucket"), col("_blk"),
-      coalesce(sum("_bc").over(wb), lit(0L)).as("_boff"))
-    val wIn = Window.partitionBy("len_bucket", "_blk").orderBy("_id")
-    base
-      .join(offs, Seq("len_bucket", "_blk"), "left") // -1 bucket: no offs row
-      .withColumn("_rk",
-        coalesce(col("_boff"), lit(0L)) + row_number().over(wIn) - 1L)
+    // _pre__one = ROW_NUMBER over (PARTITION BY len_bucket ORDER BY _id) - 1
+    prefixScan(base, Seq("len_bucket"), "_id", Seq("_one"))
       .withColumn("bin_idx",
         when(col("len_bucket") === -1L, lit(0L))
           .otherwise(expr(
-            s"""_rk div greatest(1L, $capacity div shiftleft(cast(1 as bigint),
+            s"""_pre__one div greatest(1L, $capacity div shiftleft(cast(1 as bigint),
                |          cast(len_bucket + 1 as int)))""".stripMargin)))
       .select(col(idCol), col("_len").as("len"), col("len_bucket"),
         col("bin_idx"), (col("len_bucket") =!= -1L).as("fits"))
@@ -282,9 +307,9 @@ object Packing {
     * within ±1 — the ORDERED complement of Sampling.writeShards' hash
     * shards (training wants shuffled; curriculum export, merge-joinable
     * deliveries, and zone-map-prunable layouts want sorted). Exact
-    * global rank via the two-level scan over [[withBoundedBlocks]] of
-    * the key, so no one-task window and no repartitionByRange sampling
-    * nondeterminism: shard = rank·numShards div n, bit-stable across
+    * global rank via a [[prefixScan]] of a constant 1 over
+    * [[withBoundedBlocks]] of the key, so no one-task window and no
+    * repartitionByRange sampling nondeterminism: shard = rank·numShards div n, bit-stable across
     * runs and engines.
     *
     * Unlike [[withStreamOffsets]]' dense-id `div blockSize` tiling, the
@@ -299,15 +324,13 @@ object Packing {
     * one key (only when id < 2³² at EVERY corpus size — a re-keyed or
     * grown id space silently overflows the shift), or — the safe,
     * scale-proof form — pass the unique id as `tieCols`: the rank
-    * decomposes into A = rows with a strictly smaller key (block
-    * offsets + a per-block DISTINCT-KEY prefix, so a hot key
-    * contributes ONE summary row, never a one-task sort of its whole
-    * group — the r11 review hazard) plus B = the row's position inside
-    * its equal-key group (the binPack sub-block idiom: global tie
-    * blocks, per-(key, tie-block) counts, ≤maxBlocks summary rows per
-    * key, final row_number inside (key, tie-block) — a modal key's
-    * group sorts spread across its tie blocks). No range constraint on
-    * the tie column at all. Returns the input + (rank, shard).
+    * decomposes into A = rows with a strictly smaller key (a global
+    * scan over the DISTINCT-KEY counts, so a hot key contributes ONE
+    * row, never a one-task sort of its whole group — the r11 review
+    * hazard) plus B = the row's position inside its equal-key group (a
+    * key-keyed scan over global tie blocks: ≤maxBlocks summary rows per
+    * key, so a modal key's group sorts spread across its tie blocks).
+    * No range constraint on the tie column at all. Returns the input + (rank, shard).
     */
   def rankShards(df: DataFrame, keyCol: String, numShards: Int,
                  maxBlocks: Long = 1L << 20,
@@ -318,56 +341,23 @@ object Packing {
         "(compose further ties upstream)")
     val ranked = tieCols match {
       case Nil =>
-        val base = withBoundedBlocks(df, keyCol, maxBlocks)
-        val blkCounts = base.groupBy("_blk").agg(count(lit(1)).as("_bc"))
-        // global window over the ≤maxBlocks-row BLOCK SUMMARY frame only
-        val wb = Window.orderBy("_blk")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offs = blkCounts.select(col("_blk"),
-          coalesce(sum("_bc").over(wb), lit(0L)).as("_boff"))
-        val wIn = Window.partitionBy("_blk").orderBy(col(keyCol))
-        base
-          .join(broadcast(offs), Seq("_blk"))
-          .withColumn("rank", col("_boff") + row_number().over(wIn) - 1L)
-          .drop("_blk", "_boff")
+        prefixScan(withBoundedBlocks(df.withColumn("_one", lit(1L)), keyCol,
+          maxBlocks), Nil, keyCol, Seq("_one"))
+          .withColumnRenamed("_pre__one", "rank").drop("_one")
       case Seq(tie) =>
-        val base = withBoundedBlocks(
-          withBoundedBlocks(df, tie, maxBlocks, as = "_tblk"),
-          keyCol, maxBlocks)
-        // A: rows with strictly smaller key = earlier-key-block counts
-        // (disjoint ordered ranges) + within-block prefix over the
-        // DISTINCT-KEY summary (a hot key is one row here)
-        val blkCounts = base.groupBy("_blk").agg(count(lit(1)).as("_bc"))
-        val wb = Window.orderBy("_blk")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val boff = blkCounts.select(col("_blk"),
-          coalesce(sum("_bc").over(wb), lit(0L)).as("_boff"))
-        val keyCounts = base.groupBy(col("_blk"), col(keyCol))
-          .agg(count(lit(1)).as("_kc"))
-        val wk = Window.partitionBy("_blk").orderBy(col(keyCol))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val aFrame = keyCounts
-          .withColumn("_kpre", coalesce(sum("_kc").over(wk), lit(0L)))
-          .join(broadcast(boff), Seq("_blk"))
-          .select(col(keyCol), (col("_boff") + col("_kpre")).as("_arank"))
-        // B: position inside the equal-key group by tie — global tie
-        // blocks tile the tie order, so per-key tie-block counts give
-        // the prefix and the final row_number sorts only (key, tblk)
-        val tCounts = base.groupBy(col(keyCol), col("_tblk"))
-          .agg(count(lit(1)).as("_tc"))
-        val wt = Window.partitionBy(col(keyCol)).orderBy(col("_tblk"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val toff = tCounts
-          .withColumn("_toff", coalesce(sum("_tc").over(wt), lit(0L)))
-          .select(col(keyCol), col("_tblk"), col("_toff"))
-        val wIn = Window.partitionBy(col(keyCol), col("_tblk"))
-          .orderBy(col(tie))
-        base
-          .join(toff, Seq(keyCol, "_tblk"))
-          .join(aFrame, Seq(keyCol))
-          .withColumn("rank",
-            col("_arank") + col("_toff") + row_number().over(wIn) - 1L)
-          .drop("_blk", "_tblk", "_toff", "_arank")
+        // A: rows with a strictly smaller key, scanned over the
+        // DISTINCT-KEY counts (a hot key is one row here)
+        val below = prefixScan(withBoundedBlocks(df, keyCol, maxBlocks)
+            .groupBy(col("_blk"), col(keyCol)).agg(count(lit(1)).as("_kc")),
+            Nil, keyCol, Seq("_kc"))
+          .select(col(keyCol), col("_pre__kc").as("_arank"))
+        // B: the row's place inside its equal-key group, a key-keyed
+        // scan over global tie blocks (a modal key spreads over them)
+        prefixScan(withBoundedBlocks(df.withColumn("_one", lit(1L)), tie,
+          maxBlocks), Seq(keyCol), tie, Seq("_one"))
+          .join(below, Seq(keyCol))
+          .withColumn("rank", col("_arank") + col("_pre__one"))
+          .drop("_one", "_pre__one", "_arank")
     }
     val n = ranked.agg(count(lit(1)).as("_n"))
     ranked.crossJoin(broadcast(n))

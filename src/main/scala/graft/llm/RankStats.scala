@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Packing.{prefixScan, withBoundedBlocks}
 
 /** Exact nonparametric distribution-comparison statistics at corpus
   * scale: tie-averaged ranks, the two-sample Mann–Whitney U and
@@ -18,10 +19,9 @@ import org.apache.spark.sql.functions._
   * frame, never a per-row global sort. Ranks/ECDFs need a global
   * ordered prefix sum, which a naive `Window.orderBy` computes on ONE
   * task over the whole corpus; instead the per-value counts (one keyed
-  * shuffle, map-side combined) run the Packing two-level scan — span-
-  * scaled value blocks, a window over the ≤ maxBlocks-row block-summary
-  * frame, then per-block prefixes over distinct values — so a hot value
-  * is ONE row and the plan shape survives 100 TB. Exactness: ranks are
+  * shuffle, map-side combined) run [[Packing.prefixScan]] over
+  * span-scaled value blocks ([[Packing.withBoundedBlocks]]) — so a hot
+  * value is ONE row and the plan shape survives 100 TB. Exactness: ranks are
   * kept in 2× integer units (a tie-averaged rank is always a multiple
   * of ½), ECDF deviations in n_a·n_b integer units, and the cubic tie
   * terms in decimal(38,0) — every headline double is derived from exact
@@ -39,30 +39,6 @@ object RankStats {
   private def checkedLong(c: Column, op: String, what: String): Column =
     when(c.isNull, raise_error(lit(s"$op: NULL $what"))).otherwise(c)
       .cast("long")
-
-  /** Exclusive global prefix sums of `measures` over `vc` (one row per
-    * distinct `_v`) in `_v` order, as `_pre_<m>`: the two-level scan of
-    * [[Packing.withStreamOffsets]], run over the distinct-value frame.
-    */
-  private[llm] def withValuePrefixes(vc: DataFrame, measures: Seq[String],
-                                maxBlocks: Long): DataFrame = {
-    val base = Packing.withBoundedBlocks(vc, "_v", maxBlocks)
-    val blk = base.groupBy("_blk")
-      .agg(measures.map(m => sum(col(m)).as(s"_bs_$m")).head,
-        measures.map(m => sum(col(m)).as(s"_bs_$m")).tail: _*)
-    // global window over the ≤ maxBlocks-row block-summary frame only
-    val wb = Window.orderBy("_blk")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = blk.select(col("_blk") +:
-      measures.map(m =>
-        coalesce(sum(col(s"_bs_$m")).over(wb), lit(0L)).as(s"_bo_$m")): _*)
-    val wIn = Window.partitionBy("_blk").orderBy("_v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    measures.foldLeft(base.join(broadcast(offs), Seq("_blk"))) { (d, m) =>
-      d.withColumn(s"_pre_$m",
-        col(s"_bo_$m") + coalesce(sum(col(m)).over(wIn), lit(0L)))
-    }.drop("_blk" +: measures.map(m => s"_bo_$m"): _*)
-  }
 
   /** Named-overflow long cast for a decimal rank-sum aggregate: rank
     * sums reach N(N+1) and silently wrap a non-ANSI Long past ~3×10⁹
@@ -93,51 +69,6 @@ object RankStats {
           "quantize coarser"))))
       .otherwise(t).cast("decimal(12,0)")
 
-  /** Key-partitioned exclusive prefix sums of `measures` over `kv` (one
-    * row per (key, distinct `_v`)) in `_v` order, as `_pre_<m>`: the
-    * [[withValuePrefixes]] two-level scan with every window partitioned
-    * by `keyCol` — value blocks are shared across keys (one span pass),
-    * block summaries are (keys × ≤ maxBlocks) rows, and a hot key
-    * spreads over its value blocks instead of single-tasking. With
-    * `withSuccessor`, each row also gets `_nextV` = the key's next
-    * distinct value (lead within the block, stitched across the
-    * boundary from the next block's per-key minimum — NULL on the
-    * key's last value). The shared engine behind [[ksPerSlice]],
-    * [[wassersteinByKey]] and [[groupedQuantiles]].
-    */
-  private[llm] def keyedPrefixes(kv: DataFrame, keyCol: String,
-                            measures: Seq[String], maxBlocks: Long,
-                            withSuccessor: Boolean = false): DataFrame = {
-    val base = Packing.withBoundedBlocks(kv, "_v", maxBlocks)
-    val blkAggs = measures.map(m => sum(col(m)).as(s"_bs_$m")) ++
-      (if (withSuccessor) Seq(min("_v").as("_bmin")) else Nil)
-    val blk = base.groupBy(keyCol, "_blk").agg(blkAggs.head, blkAggs.tail: _*)
-    val wb = Window.partitionBy(keyCol).orderBy("_blk")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wbLead = Window.partitionBy(keyCol).orderBy("_blk")
-    val offs = blk.select(Seq(col(keyCol), col("_blk")) ++
-      measures.map(m =>
-        coalesce(sum(col(s"_bs_$m")).over(wb), lit(0L)).as(s"_bo_$m")) ++
-      (if (withSuccessor)
-        Seq(lead(col("_bmin"), 1).over(wbLead).as("_nextBlockMin"))
-      else Nil): _*)
-    val wIn = Window.partitionBy(keyCol, "_blk").orderBy("_v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wLead = Window.partitionBy(keyCol, "_blk").orderBy("_v")
-    val pre = measures.foldLeft(base.join(offs, Seq(keyCol, "_blk"))) {
-      (d, m) =>
-        d.withColumn(s"_pre_$m",
-          col(s"_bo_$m") + coalesce(sum(col(m)).over(wIn), lit(0L)))
-    }
-    val stitched =
-      if (withSuccessor)
-        pre.withColumn("_nextV",
-          coalesce(lead(col("_v"), 1).over(wLead), col("_nextBlockMin")))
-          .drop("_nextBlockMin")
-      else pre
-    stitched.drop("_blk" +: measures.map(m => s"_bo_$m"): _*)
-  }
-
   /** Tie-averaged ranks in 2× integer units, one row per DISTINCT
     * value: (value, n, rank2) with rank2 = 2·(count below) + n + 1 —
     * every element of the value's tie group shares it, and
@@ -151,7 +82,8 @@ object RankStats {
       .select(checkedLong(col(valueCol), "avgRanks2", s"value in $valueCol")
         .as("_v"))
       .groupBy("_v").agg(count(lit(1)).as("_n"))
-    withValuePrefixes(vc, Seq("_n"), maxBlocks)
+    prefixScan(withBoundedBlocks(vc, "_v", maxBlocks), Nil,
+      "_v", Seq("_n"))
       .select(col("_v").as("value"), col("_n").as("n"),
         (lit(2L) * col("_pre__n") + col("_n") + 1L).as("rank2"))
   }
@@ -192,7 +124,8 @@ object RankStats {
       .agg(sum(when(col("_g") === col("group_a"), 1L).otherwise(0L))
         .as("_na"),
         sum(when(col("_g") === col("group_b"), 1L).otherwise(0L)).as("_nb"))
-    withValuePrefixes(vc, Seq("_na", "_nb"), maxBlocks)
+    prefixScan(withBoundedBlocks(vc, "_v", maxBlocks), Nil,
+      "_v", Seq("_na", "_nb"))
       .crossJoin(broadcast(hdr))
   }
 
@@ -371,7 +304,7 @@ object RankStats {
     // span-scaled (sparse when the grid is), and the probe expansion
     // below pays one row per earlier id — rank over the ≤ maxBlocks
     // block-summary frame so it pays per present block only
-    val blocked = Packing.withBoundedBlocks(cells, "_x", maxBlocks)
+    val blocked = withBoundedBlocks(cells, "_x", maxBlocks)
     val blkIds = blocked.select("_blk").distinct()
       .withColumn("_bid",
         row_number().over(Window.orderBy("_blk")).cast("long") - 1L)
@@ -482,7 +415,8 @@ object RankStats {
         raise_error(lit(s"mannWhitneyPerSlice: NULL slice in $sliceCol")))
         .otherwise(col(sliceCol)).cast("string").as("_s"))
     val vc = rows.groupBy("_v").agg(count(lit(1)).as("_n"))
-    val ranked = withValuePrefixes(vc, Seq("_n"), maxBlocks)
+    val ranked = prefixScan(withBoundedBlocks(vc, "_v", maxBlocks), Nil,
+      "_v", Seq("_n"))
       .select(col("_v"),
         (lit(2L) * col("_pre__n") + col("_n") + 1L).as("_rank2"))
     val globals = vc.agg(sum("_n").as("_tot"),
@@ -637,7 +571,7 @@ object RankStats {
     * targeting models that plain AUC can't give (it scores outcomes,
     * not incremental effect). One row per distinct score with
     * cumulative-from-the-top treated/control counts and conversions
-    * (exact integers through [[withValuePrefixes]]' two-level scan on
+    * (exact integers through the two-level [[Packing.prefixScan]] on
     * the NEGATED score — descending order for free), the cumulative
     * per-head `uplift` = y_t/n_t − y_c/n_c, and `qini` = y_t −
     * y_c·n_t/n_c (incremental conversions at treated scale). Score is
@@ -663,7 +597,8 @@ object RankStats {
         sum(lit(1L) - col("_t")).as("_nc"),
         sum(col("_t") * col("_y")).as("_yt"),
         sum((lit(1L) - col("_t")) * col("_y")).as("_yc"))
-    withValuePrefixes(vc, Seq("_nt", "_nc", "_yt", "_yc"), maxBlocks)
+    prefixScan(withBoundedBlocks(vc, "_v", maxBlocks), Nil,
+      "_v", Seq("_nt", "_nc", "_yt", "_yc"))
       .select((-col("_v")).as("score"),
         (col("_pre__nt") + col("_nt")).as("n_t"),
         (col("_pre__nc") + col("_nc")).as("n_c"),
@@ -864,8 +799,8 @@ object RankStats {
     // the grid-bounded cumulative frame — a rows.agg(count) here would
     // re-scan the corpus (and re-run the raise_error checks) for one
     // number (r11 session-5 review finding)
-    val cum = withValuePrefixes(vc, Seq("_nt", "_nc", "_yt", "_yc"),
-      maxBlocks)
+    val cum = prefixScan(withBoundedBlocks(vc, "_v", maxBlocks), Nil,
+      "_v", Seq("_nt", "_nc", "_yt", "_yc"))
       .select(col("_v").as("day"),
         (col("_pre__nt") + col("_nt")).as("n_t"),
         (col("_pre__nc") + col("_nc")).as("n_c"),
@@ -911,12 +846,14 @@ object RankStats {
         .otherwise(col(sliceCol)).cast("string").as("_s"))
     // global per-value prefix (combined distribution)
     val vc = rows.groupBy("_v").agg(count(lit(1)).as("_n"))
-    val g = withValuePrefixes(vc, Seq("_n"), maxBlocks)
+    val g = prefixScan(withBoundedBlocks(vc, "_v", maxBlocks), Nil,
+      "_v", Seq("_n"))
       .select(col("_v"), col("_n").as("_ng"), col("_pre__n").as("_pg"))
     val tot = vc.agg(sum("_n").as("_tot"))
     // per-slice per-value prefix: the same two-level scan, slice-keyed
     val sv = rows.groupBy("_s", "_v").agg(count(lit(1)).as("_nsv"))
-    val pre = keyedPrefixes(sv, "_s", Seq("_nsv"), maxBlocks)
+    val pre = prefixScan(withBoundedBlocks(sv, "_v", maxBlocks),
+      Seq("_s"), "_v", Seq("_nsv"))
     val nS = sv.groupBy("_s").agg(sum("_nsv").as("n_s"))
     pre.join(g, Seq("_v")).join(broadcast(nS), Seq("_s"))
       .crossJoin(broadcast(tot))
@@ -1021,7 +958,7 @@ object RankStats {
     * with a single distinct value (a constant metric is w1 = 0 drift,
     * not an absent row).
     *
-    * Scale posture: the [[keyedPrefixes]] two-level scan with the
+    * Scale posture: the key-keyed [[Packing.prefixScan]] with the
     * successor stitch, key-partitioned throughout. Exact-integer
     * domain: n_a·n_b ≤ 10¹⁸−1 per key (the ECDF deviation's
     * decimal(18,0) cast — a loud error past it, never a NULL-skipped
@@ -1055,8 +992,8 @@ object RankStats {
             lit(" is missing one of the two groups"))))
           .otherwise(col("_kna")).as("n_a"),
         col("n_b"))
-    val segs = keyedPrefixes(kv, "_k", Seq("_na", "_nb"), maxBlocks,
-      withSuccessor = true)
+    val segs = prefixScan(withBoundedBlocks(kv, "_v", maxBlocks),
+      Seq("_k"), "_v", Seq("_na", "_nb"), withSuccessor = true)
       .filter(col("_nextV").isNotNull) // each key's last value: no segment
     val sums = segs.join(kt, Seq("_k"))
       // dev ≤ n_a·n_b: the decimal(18,0) cast is exact only below
@@ -1106,15 +1043,26 @@ object RankStats {
     require(qMillis.nonEmpty, "exactQuantiles: empty quantile list")
     require(qMillis.forall(q => q >= 0L && q <= 1000L),
       s"exactQuantiles: q outside [0, 1000] milli: $qMillis")
-    val spark = df.sparkSession
-    import spark.implicits._
     val vc = df
       .select(checkedLong(col(valueCol), "exactQuantiles",
         s"value in $valueCol").as("_v"))
       .groupBy("_v").agg(count(lit(1)).as("_n"))
-    val pre = withValuePrefixes(vc, Seq("_n"), maxBlocks)
+    pickQuantiles(vc, vc.agg(sum("_n").as("_tot")), qMillis, maxBlocks)
+  }
+
+  /** The type-1 lower pick of [[exactQuantiles]] and
+    * [[weightedQuantiles]] over a distinct-value mass frame (_v, _n)
+    * and its one-row total `_tot`: per q, the smallest value whose
+    * inclusive cumulative mass reaches ⌈q·_tot/1000⌉.
+    */
+  private def pickQuantiles(vc: DataFrame, tot: DataFrame,
+                            qMillis: Seq[Long],
+                            maxBlocks: Long): DataFrame = {
+    val spark = vc.sparkSession
+    import spark.implicits._
+    val pre = prefixScan(withBoundedBlocks(vc, "_v", maxBlocks), Nil,
+      "_v", Seq("_n"))
       .withColumn("_cum", col("_pre__n") + col("_n"))
-    val tot = vc.agg(sum("_n").as("_tot"))
     val qs = qMillis.distinct.sorted.toDF("q_milli")
       .crossJoin(broadcast(tot))
       // ceil(q·n/1000) without doubles; q = 0 → rank 1 (the minimum)
@@ -1144,8 +1092,6 @@ object RankStats {
     require(qMillis.nonEmpty, "weightedQuantiles: empty quantile list")
     require(qMillis.forall(q => q >= 0L && q <= 1000L),
       s"weightedQuantiles: q outside [0, 1000] milli: $qMillis")
-    val spark = df.sparkSession
-    import spark.implicits._
     val rows = df.select(
       checkedLong(col(valueCol), "weightedQuantiles",
         s"value in $valueCol").as("_v"),
@@ -1161,8 +1107,6 @@ object RankStats {
       .agg(sum(col("_w").cast("decimal(20,0)")).as("_nd"))
       .filter(col("_nd") > 0).select(col("_v"),
         col("_nd").cast("long").as("_n"))
-    val pre = withValuePrefixes(vc, Seq("_n"), maxBlocks)
-      .withColumn("_cum", col("_pre__n") + col("_n"))
     val tot = rows.agg(sum(col("_w").cast("decimal(20,0)")).as("_td"))
       .select(when(col("_td") > lit(Long.MaxValue / 1000L)
         .cast("decimal(20,0)"),
@@ -1170,22 +1114,15 @@ object RankStats {
           "2^63/1000 — the q*W rank product would overflow Long; " +
           "rescale the weights")))
         .otherwise(col("_td")).cast("long").as("_tot"))
-    val qs = qMillis.distinct.sorted.toDF("q_milli")
-      .crossJoin(broadcast(tot))
-      .withColumn("target_rank",
-        greatest(expr("(q_milli * _tot + 999) div 1000"), lit(1L)))
-    pre.join(broadcast(qs), col("_cum") >= col("target_rank"))
-      .groupBy("q_milli", "target_rank")
-      .agg(min("_v").as("value"))
-      .orderBy("q_milli")
+    pickQuantiles(vc, tot, qMillis, maxBlocks)
   }
 
   /** Exact per-group quantiles, same contract as [[exactQuantiles]]
     * (type-1 lower, q in milli-units, q = 0 pins the group minimum),
     * one row per (group, q): the "median and p90 length per source"
     * table, exact at any scale. Per-(group, value) counts take one
-    * keyed shuffle; the per-group prefix is the [[keyedPrefixes]]
-    * two-level scan (a hot group spreads over its value blocks);
+    * keyed shuffle; the per-group prefix is the group-keyed
+    * [[Packing.prefixScan]] (a hot group spreads over its value blocks);
     * targets join back on the GROUP key (equi join +
     * a cumulative-count filter), so no nested-loop anywhere.
     */
@@ -1204,7 +1141,8 @@ object RankStats {
         raise_error(lit(s"groupedQuantiles: NULL group in $groupCol")))
         .otherwise(col(groupCol)).cast("string").as("_g"))
     val gv = rows.groupBy("_g", "_v").agg(count(lit(1)).as("_n"))
-    val cum = keyedPrefixes(gv, "_g", Seq("_n"), maxBlocks)
+    val cum = prefixScan(withBoundedBlocks(gv, "_v", maxBlocks),
+      Seq("_g"), "_v", Seq("_n"), innerJoin = true)
       .withColumn("_cum", col("_pre__n") + col("_n"))
     val gTot = gv.groupBy("_g").agg(sum("_n").as("_tot"))
     val qs = qMillis.distinct.sorted.toDF("q_milli")
@@ -1231,7 +1169,7 @@ object RankStats {
     * treat NULL as "everything conforms", never as zero.
     *
     * Scale posture: per-group order statistic through the
-    * [[keyedPrefixes]] two-level scan over the DISTINCT-value frame —
+    * group-keyed [[Packing.prefixScan]] over the DISTINCT-value frame —
     * a `row_number` window would sort a hot group on one task.
     * Integer index rule (p·(n+1) + 999) div 1000, the percentileCI
     * stance: no float ceil near an integer boundary.
@@ -1260,7 +1198,8 @@ object RankStats {
                                  maxBlocks: Long = 1L << 20): DataFrame = {
     require(alphaPermille > 0 && alphaPermille < 1000,
       s"alphaPermille must be in (0, 1000), got $alphaPermille")
-    val cum = keyedPrefixes(gv, "_g", Seq("_n"), maxBlocks)
+    val cum = prefixScan(withBoundedBlocks(gv, "_v", maxBlocks),
+      Seq("_g"), "_v", Seq("_n"))
       .withColumn("_cum", col("_pre__n") + col("_n"))
     val targets = gv.groupBy("_g").agg(sum("_n").as("n_cal"))
       .withColumn("target_rank",
@@ -1283,7 +1222,7 @@ object RankStats {
     * mapping frame — values-sized, join it back to rows on the pair
     * key; emitting per-row output here would shuffle the corpus twice.
     *
-    * Scale: the [[keyedPrefixes]] two-level scan, never a per-group
+    * Scale: the group-keyed [[Packing.prefixScan]], never a per-group
     * sort; all integers until the caller divides.
     */
   def ecdfNormalize(df: DataFrame, valueCol: String, groupCol: String,
@@ -1295,7 +1234,8 @@ object RankStats {
         raise_error(lit(s"ecdfNormalize: NULL group in $groupCol")))
         .otherwise(col(groupCol)).cast("string").as("_g"))
     val gv = rows.groupBy("_g", "_v").agg(count(lit(1)).as("_n"))
-    val cum = keyedPrefixes(gv, "_g", Seq("_n"), maxBlocks)
+    val cum = prefixScan(withBoundedBlocks(gv, "_v", maxBlocks),
+      Seq("_g"), "_v", Seq("_n"))
       .withColumn("_cum", col("_pre__n") + col("_n"))
     val gTot = gv.groupBy("_g").agg(sum("_n").as("_tot"))
     cum.join(gTot, Seq("_g"))

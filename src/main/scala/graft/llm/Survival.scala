@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Packing.{prefixScan, withBoundedBlocks}
 
 /** Time-to-event (survival) analysis over right-censored durations: the
   * Kaplan–Meier product-limit curve and the two-group log-rank test —
@@ -15,10 +16,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: both estimators reduce the corpus to ONE keyed
   * aggregate over distinct durations (map-side combined), then run all
-  * risk-set prefixes through [[RankStats.withValuePrefixes]]'s two-level
-  * block scan — no per-subject global sort anywhere. The only global
-  * window rides the distinct-duration frame, which the quantization
-  * contract bounds by the time grid (hours/days), not the corpus.
+  * risk-set prefixes through the two-level [[Packing.prefixScan]] — no
+  * per-subject global sort anywhere. The only global window rides the
+  * distinct-duration frame, which the quantization contract bounds by
+  * the time grid (hours/days), not the corpus.
   *
   * Exactness: risk sets, death and censor counts are exact BIGINT
   * prefix algebra; the survival curve and the log-rank moments are the
@@ -97,9 +98,9 @@ object Survival {
     * events yet — ln Ŝ = 0, θ undefined; R's `survival` NAs the same
     * rows). Windows optionally partition by `partitionCols` — the ONE
     * shared home for all the subtle guards, so the grouped and global
-    * curves cannot drift (the keyedPrefixes-vs-withValuePrefixes
-    * generalization stance). Callers that select only the point curve
-    * pay nothing: Catalyst prunes the unused CI expressions.
+    * curves cannot drift (the keyed-vs-global [[Packing.prefixScan]]
+    * stance). Callers that select only the point curve pay nothing:
+    * Catalyst prunes the unused CI expressions.
     */
   private def withSurvival(pre: DataFrame,
                            partitionCols: Seq[String]): DataFrame = {
@@ -151,7 +152,7 @@ object Survival {
     val vc = cellsDf.select(col("t").as("_v"), col("d").as("_d"),
       (col("d") + col("c")).as("_n"))
     val total = vc.agg(coalesce(sum("_n"), lit(0L)).as("_total"))
-    RankStats.withValuePrefixes(vc, Seq("_n"), maxBlocks)
+    prefixScan(withBoundedBlocks(vc, "_v", maxBlocks), Nil, "_v", Seq("_n"))
       .crossJoin(broadcast(total))
       .select(col("_v").as("t"), col("_d").as("d"),
         (col("_n") - col("_d")).as("c"),
@@ -378,9 +379,9 @@ object Survival {
   /** Per-group Kaplan–Meier curves in ONE pass — the side-by-side
     * view behind every A/B survival plot ([[logRank]] gives the test,
     * this gives the curves). Cells aggregate per (group, duration);
-    * risk-set prefixes ride [[RankStats.keyedPrefixes]] (value blocks
-    * shared across groups — a hot group spreads over its duration
-    * blocks instead of single-tasking); survival windows are
+    * risk-set prefixes ride the group-keyed [[Packing.prefixScan]]
+    * (value blocks shared across groups — a hot group spreads over its
+    * duration blocks instead of single-tasking); survival windows are
     * partitioned by group over the grid-bounded curve frame. Output:
     * (grp, t, n_risk, d, c, survival) with the same semantics as
     * [[kaplanMeier]] per group.
@@ -398,7 +399,8 @@ object Survival {
     val kv = rows.groupBy("_g", "_v")
       .agg(sum("_e").as("_d"), count(lit(1)).as("_n"))
     val totals = kv.groupBy("_g").agg(sum("_n").as("_total"))
-    val pre = RankStats.keyedPrefixes(kv, "_g", Seq("_n"), maxBlocks)
+    val pre = prefixScan(withBoundedBlocks(kv, "_v", maxBlocks), Seq("_g"),
+      "_v", Seq("_n"))
       .join(broadcast(totals), Seq("_g"))
       .select(col("_g").as("grp"), col("_v").as("t"), col("_d").as("d"),
         (col("_n") - col("_d")).as("c"),
@@ -448,156 +450,225 @@ object Survival {
     * in ONE pass to the (t, x) cell grid (duration × quantized
     * covariate, both caller-quantized — the RankStats long contract),
     * which is COLLECTED (grid-bounded, the linearCka bounded-collect
-    * stance) and Newton–Raphson runs on the driver: per event time,
-    * the risk set's Σe^{βx}, Σxe^{βx}, Σx²e^{βx} fold from a running
-    * per-x count array swept over t descending (O(times·gridX) per
-    * iteration), β ← β + U/I from score U(β) = Σ(s_t − d_t·R1/R) and
-    * information I(β) = Σ d_t(R2/R − (R1/R)²). Newton converges to a
-    * fixed point, so cross-engine summation-order drift dies at the
-    * answer (round(,6) in the query). Output: one row (n, n_events,
-    * beta, se = 1/√I(β̂), z = β/se); beta is NULL when the covariate
-    * is constant on every risk set (I = 0 — nothing to estimate),
-    * when any sweep goes non-finite (complete separation overflowing
-    * e^{βx}), or when the closing Newton step is still material after
-    * the iteration budget (non-converged fit, never a silent guess).
+    * stance) and Newton–Raphson runs on the driver ([[CoxGrid]]): per
+    * event time, the risk set's Σe^{βx}, Σxe^{βx}, Σx²e^{βx} fold from a
+    * running per-x count array swept over t descending
+    * (O(times·gridX) per iteration), β ← β + U/I from score
+    * U(β) = Σ(s_t − d_t·R1/R) and information I(β) = Σ d_t(R2/R −
+    * (R1/R)²). Newton converges to a fixed point, so cross-engine
+    * summation-order drift dies at the answer (round(,6) in the query).
+    * Output: one row (n, n_events, beta, se = 1/√I(β̂), z = β/se); beta
+    * is NULL when the covariate is constant on every risk set (I = 0 —
+    * nothing to estimate), when any sweep goes non-finite (complete
+    * separation overflowing e^{βx}), or when the closing Newton step is
+    * still material after the iteration budget (non-converged fit,
+    * never a silent guess).
     */
   def coxPh(df: DataFrame, durationCol: String, eventCol: String,
             xCol: String, iterations: Int = 8,
             maxCells: Int = 1 << 20): DataFrame = {
-    val op = "coxPh"
-    require(iterations >= 1 && iterations <= 50,
-      s"iterations must be in [1, 50], got $iterations")
-    require(maxCells >= 1, s"maxCells must be positive, got $maxCells")
+    val grid = coxGrid(df, durationCol, eventCol, Seq(xCol), iterations,
+      maxCells, "coxPh")
     val spark = df.sparkSession
-    val rows = df.select(
-      checkedDuration(col(durationCol), op).as("_v"),
-      checkedEvent(col(eventCol), op).as("_e"),
-      when(col(xCol).isNull, raise_error(lit(s"$op: NULL covariate")))
-        .otherwise(col(xCol)).cast("long").as("_x"))
-    // the bounded-collect GUARD, not just a stance: un-quantized
-    // durations/covariates make the cell grid corpus-sized and the
-    // collect a silent driver OOM — limit+count fails loudly instead
-    val cells = rows.groupBy("_v", "_x")
-      .agg(count(lit(1)).as("_n"), sum("_e").as("_d"))
-      .limit(maxCells + 1)
-      .collect()
-      .map(r => (r.getAs[Long]("_v"), r.getAs[Long]("_x"),
-        r.getAs[Long]("_n"), r.getAs[Long]("_d")))
-    require(cells.length <= maxCells,
-      s"$op: the (duration x covariate) grid exceeds maxCells=$maxCells" +
-        " - quantize coarser (the RankStats long contract)")
-    val n = cells.map(_._3).sum
-    val nEvents = cells.map(_._4).sum
-    val grid = new Cox1Grid(cells)
     import spark.implicits._
     val (b, se, z) = grid.fit(iterations) match {
       case None => (None, None, None)
-      case Some((beta, info)) =>
-        val s = 1.0 / math.sqrt(info)
-        (Some(beta), Some(s), Some(beta / s))
+      case Some((beta, s)) =>
+        (Some(beta(0)), Some(s(0)), Some(beta(0) / s(0)))
     }
-    Seq((n, nEvents, b, se, z))
+    Seq((grid.n, grid.nEvents, b, se, z))
       .toDF("n", "n_events", "beta", "se", "z")
   }
 
-  /** The driver-side (t, x) cell-grid machinery shared by [[coxPh]]
-    * and [[schoenfeldPh]] — per-x running risk counts swept over
-    * distinct t DESCENDING so each time's risk set is the suffix;
-    * Newton on the Breslow partial likelihood. Extracted in r13 when
-    * the Schoenfeld diagnostic needed the same sweep at β̂.
+  /** The checked (t, x₁..x_p) cell grid behind all four Cox faces: ONE
+    * corpus pass to per-cell (n, d) counts, then the bounded-collect
+    * GUARD, not just a stance — un-quantized durations/covariates make
+    * the grid corpus-sized and the collect a silent driver OOM, so
+    * limit+count fails loudly instead.
     */
-  private final class Cox1Grid(cells: Array[(Long, Long, Long, Long)]) {
+  private def coxGrid(df: DataFrame, durationCol: String, eventCol: String,
+                      xCols: Seq[String], iterations: Int, maxCells: Int,
+                      op: String): CoxGrid = {
+    require(iterations >= 1 && iterations <= 50,
+      s"iterations must be in [1, 50], got $iterations")
+    require(maxCells >= 1, s"maxCells must be positive, got $maxCells")
+    val xs = xCols.indices.map(j => s"_x$j")
+    val rows = df.select(Seq(
+      checkedDuration(col(durationCol), op).as("_v"),
+      checkedEvent(col(eventCol), op).as("_e")) ++
+      xCols.zip(xs).map { case (c, x) =>
+        when(col(c).isNull, raise_error(lit(s"$op: NULL covariate in $c")))
+          .otherwise(col(c)).cast("long").as(x)
+      }: _*)
+    val cells = rows.groupBy(("_v" +: xs).map(col): _*)
+      .agg(count(lit(1)).as("_n"), sum("_e").as("_d"))
+      .limit(maxCells + 1)
+      .collect()
+      .map(r => (r.getAs[Long]("_v"), xs.map(r.getAs[Long]).toVector,
+        r.getAs[Long]("_n"), r.getAs[Long]("_d")))
+    require(cells.length <= maxCells,
+      s"$op: the (duration x covariates) grid exceeds maxCells=" +
+        s"$maxCells - quantize coarser (the RankStats long contract)")
+    new CoxGrid(cells, xCols.size)
+  }
+
+  private def finite(xs: Double*): Boolean =
+    xs.forall(java.lang.Double.isFinite)
+
+  /** The driver-side (t, x) cell grid over p ∈ {1, 2} covariates shared
+    * by [[coxPh]], [[coxPh2]] and their Schoenfeld diagnostics: per-x
+    * running risk counts swept over distinct t DESCENDING so each
+    * time's risk set is the suffix; Newton on the Breslow partial
+    * likelihood with the exact p×p information solve.
+    */
+  private final class CoxGrid(cells: Array[(Long, Vector[Long], Long, Long)],
+                              p: Int) {
+    require(p == 1 || p == 2, s"CoxGrid solves 1 or 2 covariates, got $p")
+    import scala.math.Ordering.Implicits.seqOrdering
     private val xs = cells.map(_._2).distinct.sorted
     private val xIdx = xs.zipWithIndex.toMap
     private val times = cells.map(_._1).distinct.sorted(Ordering[Long].reverse)
     private val byT = cells.groupBy(_._1)
+    val n: Long = cells.map(_._3).sum
+    val nEvents: Long = cells.map(_._4).sum
 
-    /** Score U(β) and information I(β) in one descending-t sweep over
-      * the cells, maintaining the per-x risk counts as the suffix.
+    /** One descending-t sweep at β, per-x risk counts maintained as the
+      * suffix: calls `f(t, d_t, s_t, R, R1, R2)` at each event time, s_t
+      * the observed event-covariate totals, R = Σ risk·e^{β·x},
+      * R1_j = Σ x_j·risk·e^{β·x} and R2_jl (l ≥ j) = Σ x_j·x_l·risk·e^{β·x}.
       */
-    def sweep(beta: Double): (Double, Double) = {
+    private def sweep(beta: Array[Double])(f: (Long, Long, Array[Long],
+        Double, Array[Double], Array[Array[Double]]) => Unit): Unit = {
       val riskByX = new Array[Double](xs.length)
-      var u = 0.0
-      var i2 = 0.0
       times.foreach { t =>
         val here = byT(t)
         here.foreach(c => riskByX(xIdx(c._2)) += c._3.toDouble)
         val dT = here.map(_._4).sum
         if (dT > 0) {
-          val sT = here.map(c => c._2 * c._4).sum.toDouble
-          var r = 0.0; var r1 = 0.0; var r2 = 0.0
+          val s = Array.tabulate(p)(j => here.map(c => c._2(j) * c._4).sum)
+          var r = 0.0
+          val r1 = new Array[Double](p)
+          val r2 = Array.ofDim[Double](p, p)
           var k = 0
           while (k < xs.length) {
-            val w = riskByX(k) * math.exp(beta * xs(k))
-            r += w; r1 += xs(k) * w; r2 += xs(k).toDouble * xs(k) * w
+            val x = xs(k)
+            var eta = 0.0
+            for (j <- 0 until p) eta += beta(j) * x(j)
+            val w = riskByX(k) * math.exp(eta)
+            r += w
+            for (j <- 0 until p) {
+              r1(j) += x(j) * w
+              for (l <- j until p) r2(j)(l) += x(j).toDouble * x(l) * w
+            }
             k += 1
           }
-          u += sT - dT * r1 / r
-          i2 += dT * (r2 / r - (r1 / r) * (r1 / r))
+          f(t, dT, s, r, r1, r2)
         }
       }
-      (u, i2)
     }
 
-    /** Per-event-time stats at β, ascending t: (t, d_t, s_t, x̄(β,t))
-      * with x̄ the risk-set-weighted covariate mean R1/R — the pieces
-      * of the aggregated (Breslow) Schoenfeld residual s_t − d_t·x̄.
+    /** Score U(β) = Σ(s_t − d_t·R1/R) and information
+      * I(β) = Σ d_t(R2/R − R1R1ᵀ/R²), upper triangle.
       */
-    def eventStats(beta: Double): Seq[(Long, Long, Long, Double)] = {
-      val riskByX = new Array[Double](xs.length)
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Long, Double)]
-      times.foreach { t =>
-        val here = byT(t)
-        here.foreach(c => riskByX(xIdx(c._2)) += c._3.toDouble)
-        val dT = here.map(_._4).sum
-        if (dT > 0) {
-          val sT = here.map(c => c._2 * c._4).sum
-          var r = 0.0; var r1 = 0.0
-          var k = 0
-          while (k < xs.length) {
-            val w = riskByX(k) * math.exp(beta * xs(k))
-            r += w; r1 += xs(k) * w
-            k += 1
-          }
-          out += ((t, dT, sT, r1 / r))
+    private def scoreInfo(beta: Array[Double])
+        : (Array[Double], Array[Array[Double]]) = {
+      val u = new Array[Double](p)
+      val info = Array.ofDim[Double](p, p)
+      sweep(beta) { (_, dT, s, r, r1, r2) =>
+        for (j <- 0 until p) {
+          u(j) += s(j) - dT * r1(j) / r
+          for (l <- j until p)
+            info(j)(l) += dT * (r2(j)(l) / r - (r1(j) / r) * (r1(l) / r))
         }
       }
-      out.sortBy(_._1).toSeq
+      (u, info)
     }
 
-    /** Newton fit: Some((β̂, I(β̂))) iff converged within the budget
-      * (closing step ≤ 1e-8·(1+|β̂|)); None on a degenerate/non-finite
-      * sweep (constant covariate, complete separation) or a still-
-      * material closing step — never a silently-wrong point estimate.
+    /** The Newton step I⁻¹U and se_j = √((I⁻¹)_jj) — u/I and 1/√I for
+      * one covariate, the closed-form 2×2 inverse for two; None when U
+      * or I is non-finite or I is singular/non-PD (a constant or
+      * collinear covariate).
       */
-    def fit(iterations: Int): Option[(Double, Double)] = {
-      var beta = 0.0
+    private def solve(ui: (Array[Double], Array[Array[Double]]))
+        : Option[(Array[Double], Array[Double])] = {
+      val (u, i) = ui
+      if (p == 1) {
+        val i11 = i(0)(0)
+        if (!finite(u(0), i11) || i11 <= 0.0) None
+        else Some((Array(u(0) / i11), Array(1.0 / math.sqrt(i11))))
+      } else {
+        val (i11, i12, i22) = (i(0)(0), i(0)(1), i(1)(1))
+        val det = i11 * i22 - i12 * i12
+        if (!finite(u(0), u(1), i11, i12, i22, det) || det <= 0.0) None
+        else Some((Array((i22 * u(0) - i12 * u(1)) / det,
+            (i11 * u(1) - i12 * u(0)) / det),
+          Array(math.sqrt(i22 / det), math.sqrt(i11 / det))))
+      }
+    }
+
+    /** Newton fit: Some((β̂, se)) iff converged within the budget
+      * (closing step component-wise ≤ 1e-8·(1+|β̂_j|)), se from the
+      * CLOSING sweep's information (the oracle's final evaluation
+      * mirrors this extra sweep). None on a degenerate/non-finite sweep
+      * (constant covariate, complete separation — a monotone likelihood
+      * walks β to ±inf and e^{βx} overflows) or a still-material closing
+      * step — never a silently-wrong point estimate.
+      */
+    def fit(iterations: Int): Option[(Array[Double], Array[Double])] = {
+      val beta = new Array[Double](p)
       var it = 0
       var degenerate = false
       while (it < iterations && !degenerate) {
-        val (u, i2) = sweep(beta)
-        // monotone likelihood (complete separation) walks beta to ±inf
-        // and exp(beta*x) overflows — a non-finite sweep or step must
-        // land in the NULL branch, never a silently-wrong (beta, se, z)
-        if (!java.lang.Double.isFinite(u) || !java.lang.Double.isFinite(i2)
-            || i2 <= 0.0) degenerate = true
-        else {
-          beta += u / i2
-          if (!java.lang.Double.isFinite(beta)) degenerate = true
+        solve(scoreInfo(beta)) match {
+          case None => degenerate = true
+          case Some((step, _)) =>
+            for (j <- 0 until p) beta(j) += step(j)
+            if (!beta.forall(java.lang.Double.isFinite)) degenerate = true
         }
         it += 1
       }
-      // se from the information AT the converged beta (the oracle's
-      // final evaluation mirrors this extra sweep); a closing Newton
-      // step still material vs the tolerance means the iteration budget
-      // did NOT converge — distinguishable as NULL, not returned as a
-      // point estimate
-      val (uF, info) = if (degenerate) (0.0, 0.0) else sweep(beta)
-      val converged = !degenerate && java.lang.Double.isFinite(uF) &&
-        java.lang.Double.isFinite(info) && info > 0.0 &&
-        math.abs(uF / info) <= 1e-8 * (1.0 + math.abs(beta))
-      if (converged) Some((beta, info)) else None
+      if (degenerate) None
+      else solve(scoreInfo(beta)).collect {
+        case (step, se) if (0 until p).forall(j =>
+            math.abs(step(j)) <= 1e-8 * (1.0 + math.abs(beta(j)))) =>
+          (beta, se)
+      }
+    }
+
+    /** The aggregated (Breslow-tie) Schoenfeld residuals at β, one row
+      * per event time ascending: (t, d_t, and per covariate j the triple
+      * (s_j,t, x̄_j(β,t) = R1_j/R, resid_j(t) = s_j,t − d_t·x̄_j)), plus
+      * per covariate the OLS slope and Pearson correlation of resid_j on
+      * t (NULL under < 2 event times or zero time variance; the corr
+      * also under zero residual variance).
+      */
+    def schoenfeld(beta: Array[Double]): (Seq[(Long, Long,
+        Seq[(Long, Double, Double)])], Seq[(Option[Double], Option[Double])]) = {
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Seq[(Long, Double, Double)])]
+      sweep(beta) { (t, dT, s, r, r1, _) =>
+        out += ((t, dT, (0 until p).map { j =>
+          val xbar = r1(j) / r
+          (s(j), xbar, s(j) - dT * xbar)
+        }))
+      }
+      val resid = out.sortBy(_._1).toSeq
+      val m = resid.length.toDouble
+      val ts = resid.map(_._1.toDouble)
+      val st = ts.sum
+      val stt = resid.map(r => r._1.toDouble * r._1).sum
+      val vt = m * stt - st * st
+      def trend(rs: Seq[Double]): (Option[Double], Option[Double]) = {
+        val sr = rs.sum
+        val srr = rs.map(r => r * r).sum
+        val str = ts.zip(rs).map(p => p._1 * p._2).sum
+        val vr = m * srr - sr * sr
+        val cov = m * str - st * sr
+        (if (m >= 2.0 && vt > 0.0) Some(cov / vt) else None,
+          if (m >= 2.0 && vt > 0.0 && vr > 0.0)
+            Some(cov / math.sqrt(vt * vr)) else None)
+      }
+      (resid, (0 until p).map(j => trend(resid.map(_._3(j)._3))))
     }
   }
 
@@ -622,52 +693,16 @@ object Survival {
   def schoenfeldPh(df: DataFrame, durationCol: String, eventCol: String,
                    xCol: String, iterations: Int = 8,
                    maxCells: Int = 1 << 20): DataFrame = {
-    val op = "schoenfeldPh"
-    require(iterations >= 1 && iterations <= 50,
-      s"iterations must be in [1, 50], got $iterations")
-    require(maxCells >= 1, s"maxCells must be positive, got $maxCells")
+    val grid = coxGrid(df, durationCol, eventCol, Seq(xCol), iterations,
+      maxCells, "schoenfeldPh")
     val spark = df.sparkSession
-    val rows = df.select(
-      checkedDuration(col(durationCol), op).as("_v"),
-      checkedEvent(col(eventCol), op).as("_e"),
-      when(col(xCol).isNull, raise_error(lit(s"$op: NULL covariate")))
-        .otherwise(col(xCol)).cast("long").as("_x"))
-    val cells = rows.groupBy("_v", "_x")
-      .agg(count(lit(1)).as("_n"), sum("_e").as("_d"))
-      .limit(maxCells + 1)
-      .collect()
-      .map(r => (r.getAs[Long]("_v"), r.getAs[Long]("_x"),
-        r.getAs[Long]("_n"), r.getAs[Long]("_d")))
-    require(cells.length <= maxCells,
-      s"$op: the (duration x covariate) grid exceeds maxCells=$maxCells" +
-        " - quantize coarser (the RankStats long contract)")
-    val grid = new Cox1Grid(cells)
     import spark.implicits._
-    val out: Seq[(Long, Long, Long, Double, Double, Option[Double],
-        Option[Double])] =
-      grid.fit(iterations) match {
-        case None => Seq.empty
-        case Some((beta, _)) =>
-          val stats = grid.eventStats(beta)
-          val resid = stats.map { case (t, d, s, xbar) =>
-            (t, d, s, xbar, s - d * xbar)
-          }
-          val m = resid.length.toDouble
-          val st = resid.map(_._1.toDouble).sum
-          val sr = resid.map(_._5).sum
-          val stt = resid.map(r => r._1.toDouble * r._1).sum
-          val srr = resid.map(r => r._5 * r._5).sum
-          val str = resid.map(r => r._1 * r._5).sum
-          val vt = m * stt - st * st
-          val vr = m * srr - sr * sr
-          val cov = m * str - st * sr
-          val slope = if (m >= 2.0 && vt > 0.0) Some(cov / vt) else None
-          val corr = if (m >= 2.0 && vt > 0.0 && vr > 0.0)
-            Some(cov / math.sqrt(vt * vr)) else None
-          resid.map { case (t, d, s, xbar, r) =>
-            (t, d, s, xbar, r, slope, corr)
-          }
+    val out = grid.fit(iterations).toSeq.flatMap { case (beta, _) =>
+      val (resid, Seq((slope, corr))) = grid.schoenfeld(beta)
+      resid.map { case (t, d, Seq((s, xbar, r))) =>
+        (t, d, s, xbar, r, slope, corr)
       }
+    }
     out.toDF("t", "d", "s_obs", "xbar", "resid", "slope", "corr")
   }
 
@@ -690,170 +725,19 @@ object Survival {
   def coxPh2(df: DataFrame, durationCol: String, eventCol: String,
              x1Col: String, x2Col: String, iterations: Int = 8,
              maxCells: Int = 1 << 20): DataFrame = {
-    val op = "coxPh2"
-    require(iterations >= 1 && iterations <= 50,
-      s"iterations must be in [1, 50], got $iterations")
-    require(maxCells >= 1, s"maxCells must be positive, got $maxCells")
+    val grid = coxGrid(df, durationCol, eventCol, Seq(x1Col, x2Col),
+      iterations, maxCells, "coxPh2")
     val spark = df.sparkSession
-    def checkedX(c: String): Column =
-      when(col(c).isNull, raise_error(lit(s"$op: NULL covariate in $c")))
-        .otherwise(col(c)).cast("long")
-    val rows = df.select(
-      checkedDuration(col(durationCol), op).as("_v"),
-      checkedEvent(col(eventCol), op).as("_e"),
-      checkedX(x1Col).as("_x1"), checkedX(x2Col).as("_x2"))
-    // the bounded-collect GUARD (the coxPh stance): un-quantized
-    // inputs make the grid corpus-sized and the collect a driver OOM
-    val cells = rows.groupBy("_v", "_x1", "_x2")
-      .agg(count(lit(1)).as("_n"), sum("_e").as("_d"))
-      .limit(maxCells + 1)
-      .collect()
-      .map(r => (r.getAs[Long]("_v"),
-        (r.getAs[Long]("_x1"), r.getAs[Long]("_x2")),
-        r.getAs[Long]("_n"), r.getAs[Long]("_d")))
-    require(cells.length <= maxCells,
-      s"$op: the (duration x covariates) grid exceeds maxCells=" +
-        s"$maxCells - quantize coarser (the RankStats long contract)")
-    val n = cells.map(_._3).sum
-    val nEvents = cells.map(_._4).sum
-    val grid = new Cox2Grid(cells)
     import spark.implicits._
+    val none = None: Option[Double]
     val out = grid.fit(iterations) match {
-      case None =>
-        (n, nEvents, None: Option[Double], None: Option[Double],
-          None: Option[Double], None: Option[Double],
-          None: Option[Double], None: Option[Double])
-      case Some((b1, b2, se1, se2)) =>
-        (n, nEvents, Some(b1), Some(se1), Some(b1 / se1),
-          Some(b2), Some(se2), Some(b2 / se2))
+      case None => (grid.n, grid.nEvents, none, none, none, none, none, none)
+      case Some((b, se)) =>
+        (grid.n, grid.nEvents, Some(b(0)), Some(se(0)), Some(b(0) / se(0)),
+          Some(b(1)), Some(se(1)), Some(b(1) / se(1)))
     }
     Seq(out).toDF("n", "n_events", "beta1", "se1", "z1", "beta2",
       "se2", "z2")
-  }
-
-  /** The driver-side (t, x1, x2) cell-grid machinery shared by
-    * [[coxPh2]] and [[schoenfeldPh2]] — the [[Cox1Grid]] design lifted
-    * to the vector case: per-(x1,x2) running risk counts swept over
-    * distinct t DESCENDING, Newton with the closed-form 2×2
-    * information solve. Extracted in r14 when the two-covariate
-    * Schoenfeld diagnostic needed the same sweep at β̂.
-    */
-  private final class Cox2Grid(cells: Array[(Long, (Long, Long), Long,
-      Long)]) {
-    private val xs = cells.map(_._2).distinct.sorted
-    private val xIdx = xs.zipWithIndex.toMap
-    private val times = cells.map(_._1).distinct.sorted(Ordering[Long].reverse)
-    private val byT = cells.groupBy(_._1)
-
-    /** (u1, u2, i11, i12, i22) in one descending-t sweep, per-(x1,x2)
-      * risk counts maintained as the suffix.
-      */
-    def sweep(b1: Double, b2: Double): (Double, Double, Double, Double,
-        Double) = {
-      val riskByX = new Array[Double](xs.length)
-      var u1 = 0.0; var u2 = 0.0
-      var i11 = 0.0; var i12 = 0.0; var i22 = 0.0
-      times.foreach { t =>
-        val here = byT(t)
-        here.foreach(c => riskByX(xIdx(c._2)) += c._3.toDouble)
-        val dT = here.map(_._4).sum
-        if (dT > 0) {
-          val s1 = here.map(c => c._2._1 * c._4).sum.toDouble
-          val s2 = here.map(c => c._2._2 * c._4).sum.toDouble
-          var r = 0.0; var ra = 0.0; var rb = 0.0
-          var raa = 0.0; var rab = 0.0; var rbb = 0.0
-          var k = 0
-          while (k < xs.length) {
-            val (x1, x2) = xs(k)
-            val w = riskByX(k) * math.exp(b1 * x1 + b2 * x2)
-            r += w; ra += x1 * w; rb += x2 * w
-            raa += x1.toDouble * x1 * w
-            rab += x1.toDouble * x2 * w
-            rbb += x2.toDouble * x2 * w
-            k += 1
-          }
-          u1 += s1 - dT * ra / r
-          u2 += s2 - dT * rb / r
-          i11 += dT * (raa / r - (ra / r) * (ra / r))
-          i12 += dT * (rab / r - (ra / r) * (rb / r))
-          i22 += dT * (rbb / r - (rb / r) * (rb / r))
-        }
-      }
-      (u1, u2, i11, i12, i22)
-    }
-
-    /** Per-event-time stats at (β1, β2), ascending t:
-      * (t, d_t, s1_t, s2_t, x̄1(β,t), x̄2(β,t)) — the pieces of the
-      * per-covariate aggregated (Breslow) Schoenfeld residuals
-      * s_j,t − d_t·x̄_j.
-      */
-    def eventStats(b1: Double, b2: Double): Seq[(Long, Long, Long, Long,
-        Double, Double)] = {
-      val riskByX = new Array[Double](xs.length)
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Long, Long, Double, Double)]
-      times.foreach { t =>
-        val here = byT(t)
-        here.foreach(c => riskByX(xIdx(c._2)) += c._3.toDouble)
-        val dT = here.map(_._4).sum
-        if (dT > 0) {
-          val s1 = here.map(c => c._2._1 * c._4).sum
-          val s2 = here.map(c => c._2._2 * c._4).sum
-          var r = 0.0; var ra = 0.0; var rb = 0.0
-          var k = 0
-          while (k < xs.length) {
-            val (x1, x2) = xs(k)
-            val w = riskByX(k) * math.exp(b1 * x1 + b2 * x2)
-            r += w; ra += x1 * w; rb += x2 * w
-            k += 1
-          }
-          out += ((t, dT, s1, s2, ra / r, rb / r))
-        }
-      }
-      out.sortBy(_._1).toSeq
-    }
-
-    private def finite(xs: Double*): Boolean =
-      xs.forall(java.lang.Double.isFinite)
-
-    /** Newton fit: Some((β̂1, β̂2, se1, se2)) iff converged within the
-      * budget (closing step component-wise ≤ 1e-8·(1+|β̂_j|)), with
-      * se_j = √((I⁻¹)_jj) from the CLOSING sweep's information — the
-      * coxPh/oracle convention. None on a singular/non-PD information
-      * matrix, a non-finite sweep, or a still-material closing step.
-      */
-    def fit(iterations: Int): Option[(Double, Double, Double, Double)] = {
-      var b1 = 0.0; var b2 = 0.0
-      var it = 0
-      var degenerate = false
-      while (it < iterations && !degenerate) {
-        val (u1, u2, i11, i12, i22) = sweep(b1, b2)
-        val det = i11 * i22 - i12 * i12
-        if (!finite(u1, u2, i11, i12, i22, det) || det <= 0.0)
-          degenerate = true
-        else {
-          b1 += (i22 * u1 - i12 * u2) / det
-          b2 += (i11 * u2 - i12 * u1) / det
-          if (!finite(b1, b2)) degenerate = true
-        }
-        it += 1
-      }
-      // closing sweep at β̂ — se from THIS information (the coxPh/oracle
-      // convention) and the non-convergence check component-wise
-      val (uF1, uF2, fi11, fi12, fi22) =
-        if (degenerate) (0.0, 0.0, 0.0, 0.0, 0.0) else sweep(b1, b2)
-      val det = fi11 * fi22 - fi12 * fi12
-      val converged = !degenerate &&
-        finite(uF1, uF2, fi11, fi12, fi22, det) && det > 0.0 && {
-          val s1 = (fi22 * uF1 - fi12 * uF2) / det
-          val s2 = (fi11 * uF2 - fi12 * uF1) / det
-          math.abs(s1) <= 1e-8 * (1.0 + math.abs(b1)) &&
-            math.abs(s2) <= 1e-8 * (1.0 + math.abs(b2))
-        }
-      if (converged)
-        Some((b1, b2, math.sqrt(fi22 / det), math.sqrt(fi11 / det)))
-      else None
-    }
   }
 
   /** Proportional-hazards diagnostic for [[coxPh2]] — [[schoenfeldPh]]
@@ -865,64 +749,22 @@ object Survival {
     * across rows; NULL under < 2 event times or zero time variance) —
     * a time-varying effect on one covariate flags THAT covariate's
     * corr, not its partner's. Same (t, x1, x2) cell grid and bounded
-    * collect as [[coxPh2]] (shared [[Cox2Grid]]); ZERO rows when the
+    * collect as [[coxPh2]] (shared [[CoxGrid]]); ZERO rows when the
     * underlying fit did not converge.
     */
   def schoenfeldPh2(df: DataFrame, durationCol: String, eventCol: String,
                     x1Col: String, x2Col: String, iterations: Int = 8,
                     maxCells: Int = 1 << 20): DataFrame = {
-    val op = "schoenfeldPh2"
-    require(iterations >= 1 && iterations <= 50,
-      s"iterations must be in [1, 50], got $iterations")
-    require(maxCells >= 1, s"maxCells must be positive, got $maxCells")
+    val grid = coxGrid(df, durationCol, eventCol, Seq(x1Col, x2Col),
+      iterations, maxCells, "schoenfeldPh2")
     val spark = df.sparkSession
-    def checkedX(c: String): Column =
-      when(col(c).isNull, raise_error(lit(s"$op: NULL covariate in $c")))
-        .otherwise(col(c)).cast("long")
-    val rows = df.select(
-      checkedDuration(col(durationCol), op).as("_v"),
-      checkedEvent(col(eventCol), op).as("_e"),
-      checkedX(x1Col).as("_x1"), checkedX(x2Col).as("_x2"))
-    val cells = rows.groupBy("_v", "_x1", "_x2")
-      .agg(count(lit(1)).as("_n"), sum("_e").as("_d"))
-      .limit(maxCells + 1)
-      .collect()
-      .map(r => (r.getAs[Long]("_v"),
-        (r.getAs[Long]("_x1"), r.getAs[Long]("_x2")),
-        r.getAs[Long]("_n"), r.getAs[Long]("_d")))
-    require(cells.length <= maxCells,
-      s"$op: the (duration x covariates) grid exceeds maxCells=" +
-        s"$maxCells - quantize coarser (the RankStats long contract)")
-    val grid = new Cox2Grid(cells)
     import spark.implicits._
-    val out: Seq[(Long, Long, Long, Double, Double, Long, Double, Double,
-        Option[Double], Option[Double], Option[Double], Option[Double])] =
-      grid.fit(iterations) match {
-      case None => Seq.empty
-      case Some((b1, b2, _, _)) =>
-        val stats = grid.eventStats(b1, b2)
-        val resid = stats.map { case (t, d, s1, s2, xb1, xb2) =>
-          (t, d, s1, xb1, s1 - d * xb1, s2, xb2, s2 - d * xb2)
-        }
-        val m = resid.length.toDouble
-        val st = resid.map(_._1.toDouble).sum
-        val stt = resid.map(r => r._1.toDouble * r._1).sum
-        val vt = m * stt - st * st
-        def trend(rs: Seq[Double]): (Option[Double], Option[Double]) = {
-          val sr = rs.sum
-          val srr = rs.map(r => r * r).sum
-          val str = resid.map(_._1.toDouble).zip(rs).map(p => p._1 * p._2).sum
-          val vr = m * srr - sr * sr
-          val cov = m * str - st * sr
-          (if (m >= 2.0 && vt > 0.0) Some(cov / vt) else None,
-            if (m >= 2.0 && vt > 0.0 && vr > 0.0)
-              Some(cov / math.sqrt(vt * vr)) else None)
-        }
-        val (slope1, corr1) = trend(resid.map(_._5))
-        val (slope2, corr2) = trend(resid.map(_._8))
-        resid.map { case (t, d, s1, xb1, r1, s2, xb2, r2) =>
-          (t, d, s1, xb1, r1, s2, xb2, r2, slope1, corr1, slope2, corr2)
-        }
+    val out = grid.fit(iterations).toSeq.flatMap { case (beta, _) =>
+      val (resid, Seq((slope1, corr1), (slope2, corr2))) =
+        grid.schoenfeld(beta)
+      resid.map { case (t, d, Seq((s1, xb1, r1), (s2, xb2, r2))) =>
+        (t, d, s1, xb1, r1, s2, xb2, r2, slope1, corr1, slope2, corr2)
+      }
     }
     out.toDF("t", "d", "s1_obs", "xbar1", "resid1", "s2_obs", "xbar2",
       "resid2", "slope1", "corr1", "slope2", "corr2")
@@ -957,7 +799,8 @@ object Survival {
           .as("_da"),
         sum(when(col("_g") === col("group_b"), col("_e")).otherwise(0L))
           .as("_db"))
-    val pre = RankStats.withValuePrefixes(vc, Seq("_na", "_nb"), maxBlocks)
+    val pre = prefixScan(withBoundedBlocks(vc, "_v", maxBlocks), Nil, "_v",
+      Seq("_na", "_nb"))
       .crossJoin(broadcast(hdr))
     val n1 = (col("n_a") - col("_pre__na")).cast("double")
     val n2 = (col("n_b") - col("_pre__nb")).cast("double")

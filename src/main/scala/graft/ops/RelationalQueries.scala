@@ -871,9 +871,7 @@ object RelationalQueries {
     //      (Temporal.ewmaFixed): millis-scaled values and a truncating
     //      integer division per step make the recurrence bit-identical
     //      across engines, so the oracle is a DuckDB RECURSIVE CTE
-    //      replaying the same integer recurrence. The double-precision
-    //      Temporal.ewma stays for production use (TemporalSpec
-    //      property-tests it vs brute force). ----
+    //      replaying the same integer recurrence. ----
     "q_evt_ewma" -> Q(
       s"""$fixedPointBase,
         |r AS (
@@ -1598,8 +1596,7 @@ object RelationalQueries {
     //      (Temporal.cusumFixed): millis-scaled Page recurrences are
     //      pure add-and-clamp (no division), so the DuckDB RECURSIVE
     //      CTE oracle replays them bit-identically. target 50.0 /
-    //      slack 5.0 / threshold 200.0 as millis. Temporal.cusum
-    //      (doubles) stays for sub-milli scales, property-tested. ----
+    //      slack 5.0 / threshold 200.0 as millis. ----
     "q_evt_cusum" -> Q(
       s"""$fixedPointBase,
         |r AS (

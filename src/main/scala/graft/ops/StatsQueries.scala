@@ -1357,8 +1357,9 @@ object StatsQueries {
 
     // ---- per-arm Kaplan–Meier curves (Survival.kaplanMeierByGroup):
     //      the side-by-side survival plot behind the q_evt_logrank
-    //      test — risk prefixes via keyedPrefixes (duration blocks
-    //      shared across arms), survival windows partitioned by arm ----
+    //      test — risk prefixes via the arm-keyed prefixScan (duration
+    //      blocks shared across arms), survival windows partitioned by
+    //      arm ----
     "q_evt_km_by_group" -> Q(
       s"""WITH $survivalSubjectsCte,
         |g AS (SELECT dur_h, ev,

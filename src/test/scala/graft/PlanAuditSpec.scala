@@ -691,7 +691,8 @@ class PlanAuditSpec extends SparkSpec {
 
   test("RankStats rides the distinct-value two-level scan: single-partition " +
     "exchanges feed aggregates only, and no global window sees raw rows") {
-    // mannWhitney/ksTest/spearman rank a corpus without one-task sorts:
+    // mannWhitney/ksTest/spearman (and binPack's bucket ranks, the
+    // per-group KM risk sets) rank a corpus without one-task sorts:
     // the ordered prefix runs over per-value counts blocked by
     // withBoundedBlocks, so every unpartitioned exchange/window input
     // must be an aggregate (block- or value-summary) frame
@@ -717,7 +718,12 @@ class PlanAuditSpec extends SparkSpec {
             maxBlocks = 64L),
           graft.llm.RankStats.exactQuantiles(
             Tables(spark, sfDir).documents.select("n_chars"),
-            "n_chars", Seq(500L, 900L), maxBlocks = 64L))) {
+            "n_chars", Seq(500L, 900L), maxBlocks = 64L),
+          graft.llm.Packing.binPack(Tables(spark, sfDir).documents,
+            "doc_id", "n_chars", capacity = 2048L, maxBlocks = 64L),
+          graft.llm.Survival.kaplanMeierByGroup(
+            docs.withColumn("e", col("doc_id") % 2L), "n_chars", "e",
+            "lang", maxBlocks = 64L))) {
         val plan = out.queryExecution.executedPlan
         val single = plan.collect {
           case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec

@@ -411,34 +411,6 @@ class TemporalSpec extends SparkSpec {
       s"range join must stay an equi join:\n$plan")
   }
 
-  test("ewma matches the driver-side recurrence on random data, seeded at first value") {
-    val rnd = new scala.util.Random(7)
-    val alpha = 0.3
-    val ev = (1 to 300).map { i =>
-      (rnd.nextInt(4).toLong, i.toLong,
-        new java.sql.Timestamp(1700000000000L + rnd.nextInt(10000) * 1000L),
-        rnd.nextDouble() * 100)
-    }
-    val df = ev.toDF("user_id", "event_id", "ts", "value")
-    val got = Temporal.ewma(df, "user_id", "ts", "event_id", "value", alpha)
-      .select(col("user_id").cast("long"), col("event_id"), col("ewma"))
-      .as[(Long, Long, Double)].collect()
-      .map { case (u, id, e) => (u, id) -> e }.toMap
-    // brute force: same (ts, id) order, same recurrence, plain Scala
-    val want = ev.groupBy(_._1).flatMap { case (u, evs) =>
-      val sorted = evs.sortBy(e => (e._3.getTime, e._2))
-      var acc = Double.NaN
-      sorted.map { e =>
-        acc = if (acc.isNaN) e._4 else alpha * e._4 + (1 - alpha) * acc
-        (u, e._2) -> acc
-      }
-    }
-    assert(got.size === want.size)
-    want.foreach { case (k, w) =>
-      assert(math.abs(got(k) - w) < 1e-12, s"$k: ${got(k)} vs $w")
-    }
-  }
-
   test("ewmaFixed matches the driver-side integer recurrence exactly") {
     val rnd = new scala.util.Random(11)
     val ev = (1 to 300).map { i =>
@@ -573,28 +545,6 @@ class TemporalSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
     assert(got === Map(1L -> (2L, 1000000L, 3000000L, 2000000.0)))
-  }
-
-  test("cusum: sustained shift alarms, stable series stays quiet, matches brute force") {
-    // target 10, slack 1, threshold 5; values: stable at 10 then jump to 14
-    val vals = Seq(10.0, 10.5, 9.5, 14.0, 14.0, 14.0, 14.0)
-    val ev = vals.zipWithIndex.map { case (v, i) =>
-      (1L, ts(f"2024-01-01 00:00:${i}%02d"), i.toLong, v) }
-      .toDF("user_id", "ts", "event_id", "value")
-    val got = Temporal.cusum(ev, "user_id", "ts", "event_id", "value",
-        target = 10.0, slack = 1.0, threshold = 5.0)
-      .orderBy("event_id")
-      .collect().map(r => (r.getDouble(4), r.getDouble(5), r.getBoolean(6)))
-    // brute-force replay
-    var hi = 0.0; var lo = 0.0
-    val want = vals.map { v =>
-      hi = math.max(0.0, hi + (v - 10.0 - 1.0))
-      lo = math.max(0.0, lo + (10.0 - v - 1.0))
-      (hi, lo, hi > 5.0 || lo > 5.0)
-    }
-    assert(got.toSeq === want)
-    // stable prefix quiet, sustained +4 shift alarms by the 6th sample
-    assert(!got(2)._3 && got(5)._3)
   }
 
   test("resampleDaily: contiguous per-entity grid, silent days zero-filled") {

@@ -258,6 +258,34 @@ class PackingSpec extends SparkSpec {
     assert(got.map(_._3) === rows.indices.map(_.toLong))
   }
 
+  test("prefixScan equals a driver-side running sum: global, keyed and " +
+      "withSuccessor, on a sparse key at maxBlocks = 4 with one hot key " +
+      "spanning several blocks") {
+    val rnd = new scala.util.Random(11)
+    // values ~10^6 apart (sparse), unique across keys; "hot" holds most rows
+    val rows = (0 until 60).map { i =>
+      val k = if (i % 5 == 0) "b" else if (i % 7 == 0) "c" else "hot"
+      (k, i.toLong * 1000003L - 7L, (rnd.nextInt(9) + 1).toLong)
+    }
+    val blocked = Packing.withBoundedBlocks(rows.toDF("k", "_v", "m"), "_v", 4L)
+    assert(blocked.filter(col("k") === "hot").select("_blk").distinct()
+      .count() >= 3, "the hot key must span several blocks")
+    // exclusive running sum of m in _v order, and the next _v, per group
+    def running(g: Seq[(String, Long, Long)]): Map[Long, (Long, Option[Long])] = {
+      val s = g.sortBy(_._2)
+      s.indices.map(i =>
+        s(i)._2 -> ((s.take(i).map(_._3).sum, s.lift(i + 1).map(_._2)))).toMap
+    }
+    val global = Packing.prefixScan(blocked, Nil, "_v", Seq("m"))
+      .select("_v", "_pre_m").as[(Long, Long)].collect().toMap
+    assert(global === running(rows).map { case (v, (pre, _)) => v -> pre })
+    val keyed = Packing.prefixScan(blocked, Seq("k"), "_v", Seq("m"),
+        withSuccessor = true)
+      .select("_v", "_pre_m", "_nextV").as[(Long, Long, Option[Long])]
+      .collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(keyed === rows.groupBy(_._1).values.flatMap(running).toMap)
+  }
+
   test("withBoundedBlocks raises on a key span that overflows Long " +
       "(sentinel keys), instead of silently mis-blocking") {
     val df = Seq(Long.MinValue, 0L, 42L).toDF("k")
