@@ -159,7 +159,7 @@ object Bench {
         runs += tag -> Sample((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9,
           gcNow() - g0, peakMb, Work(), Work())
       } catch { case e: Throwable =>
-        err = Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(300))
+        err = Some(graft.ingest.Stages.errorText(e).take(300))
       }
       GraftSession.releaseAll(spark)
     }
@@ -301,7 +301,7 @@ object Bench {
       "q_ann_ivf_topk", "q_llm_lang_id", "q_mm_decode_features",
       "q_stream_sessionize", "q_llm_curation_e2e", "q_llm_winnow",
       "q_llm_simhash_near_dup", "q_llm_dup_ngrams", "q_llm_tfidf_keywords",
-      "q_evt_asof_join", "q_evt_asof_native", "q_evt_range_join",
+      "q_evt_asof_join", "q_evt_range_join",
       "q_evt_seq_match")
     // an error or a setup flag is never hidden by the headline filter
     println("{" + line(results.filter(r =>

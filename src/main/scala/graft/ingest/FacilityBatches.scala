@@ -104,9 +104,10 @@ object FacilityBatches {
         FacilityOutcome(fac, ok = true, Some(r), None)
       } catch {
         case e: Exception =>
+          val error = Some(Stages.errorText(e))
           ack(store, table, store.latest(table, Seq("facility_id")), fac,
-            ok = false, Some(e.getMessage))
-          FacilityOutcome(fac, ok = false, None, Option(e.getMessage))
+            ok = false, error)
+          FacilityOutcome(fac, ok = false, None, error)
       }
     FanOut.run(claimed, parallelism)(runOne)
   }

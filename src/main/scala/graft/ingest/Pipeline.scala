@@ -283,9 +283,9 @@ object Pipeline {
         // to_sql→log sequence has per file (ROADMAP Direction 4).
         scala.util.Try(processEntity(t, fs)).recover {
           case e: Throwable =>
-            val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
             (fs.map { case (r, _) =>
-              fileKey(r) -> (("failed", 0L, s"entity job failed: $msg"))
+              fileKey(r) -> (("failed", 0L,
+                s"entity job failed: ${Stages.errorText(e)}"))
             }.toMap, 0L, 0L)
         }.get
       }

@@ -21,9 +21,7 @@ object Stages {
   def emptyToNull(df: DataFrame): DataFrame = {
     val cols = df.schema.fields.map {
       case f if f.dataType == StringType =>
-        val c = col(f.name)
-        when(trim(c) === "" || trim(c) === "null", lit(null: String))
-          .otherwise(c).as(f.name)
+        emptyToNullCol(col(f.name)).as(f.name)
       case f => col(f.name)
     }
     df.select(cols.toIndexedSeq: _*)
@@ -102,9 +100,8 @@ object Stages {
       .fold(nested)(maskFlat(nested, _))
   }
 
-  /** The per-entity transform chain of a raw JSON read, the one both
-    * ingest paths ([[Pipeline]] and [[graft.streaming.StreamIngest]])
-    * run: [[dropAllNull]] (before anything adds a column), the entity's
+  /** The per-entity transform chain of a raw JSON read, the one
+    * [[Pipeline]] runs: [[dropAllNull]] (before anything adds a column), the entity's
     * [[entityTransforms]] (column exclusion, nested and flat PII
     * masking), [[emptyToNull]], then [[stampProvenanceFromPath]].
     */
@@ -170,21 +167,12 @@ object Stages {
   }
 
   // ---- F11: provenance stamping (file_loader.py:630-633) ----
-  /** `stg_load_time` is a literal captured once per batch — NOT
-    * current_timestamp() per row (file_loader.py:555 takes one
-    * datetime.now() per file).
-    */
-  def stampProvenance(df: DataFrame, batchId: String, loadTime: java.sql.Timestamp,
-                      fileName: String, datimId: String): DataFrame =
-    df.withColumn("stg_batch_id", lit(batchId))
-      .withColumn("stg_load_time", lit(loadTime))
-      .withColumn("stg_file_name", lit(fileName))
-      .withColumn("stg_datim_id", lit(datimId))
-
   /** Column-expression provenance for bulk per-entity reads: derive the
     * per-file values from `input_file_name()` instead of a driver-side
     * loop — the 100 TB shape (SURVEY §7.4.6): one scan per entity, not
-    * one job per file.
+    * one job per file. `stg_load_time` is a literal captured once per
+    * batch — NOT current_timestamp() per row (file_loader.py:555 takes
+    * one datetime.now() per file).
     */
   def stampProvenanceFromPath(df: DataFrame, loadTime: java.sql.Timestamp): DataFrame = {
     val path = input_file_name()
@@ -220,6 +208,12 @@ object Stages {
       .replace("stg_", "")
       .take(maxLen)
   }
+
+  /** The text a failure logs: its message, or its class name when it
+    * has none (a NullPointerException, say).
+    */
+  def errorText(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName)
 
   /** 10k-char truncation applied at sync-log write (file_loader.py:189). */
   def truncateForSyncLog(msg: String): String = msg.take(10000)

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.core.Checked
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -88,10 +89,6 @@ object Bootstrap {
     s"(CASE $whens ELSE ${ts.size} END)"
   }
 
-  private def checkedLong(c: Column, op: String, what: String): Column =
-    when(c.isNull, raise_error(lit(s"$op: NULL $what"))).otherwise(c)
-      .cast("long")
-
   /** Per-replicate weighted sums: one row per (groupCols..., rep) with
     * `n_eff` (Σ weight — the replicate's resample size) and `wsum_<v>`
     * (Σ weight·value, decimal(38,0)-exact) for every value column.
@@ -121,7 +118,7 @@ object Bootstrap {
     val keyed = src
       .select((groupCols :+ idCol).map(col) ++
         valueCols.map(v =>
-          checkedLong(col(v), "replicateStats", s"value $v").as(v)): _*)
+          Checked.long(col(v), "replicateStats", s"value $v").as(v)): _*)
       .crossJoin(reps)
       // r14: fused native weight kernel — same md5/bucket/threshold
       // math as poissonWeight(replicateBucket(...)) (BootstrapSpec pins

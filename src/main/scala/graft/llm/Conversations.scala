@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.core.Checked
 import graft.streaming.Sessionize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -55,9 +56,8 @@ object Conversations {
     // tell "first turn" from "all preceding lens NULL", so a silent
     // NULL would collapse offsets onto earlier turns and corrupt the
     // loss mask (r12 review finding; the checkedLong stance)
-    val checkedLen = when(col(lenCol).isNull,
-      raise_error(lit(s"sftMaskLayout: NULL length in $lenCol")))
-      .otherwise(col(lenCol)).cast("long")
+    val checkedLen = Checked.long(col(lenCol), "sftMaskLayout",
+      s"length in $lenCol")
     turns(events, userCol, tsCol, idCol, gapMicros)
       .withColumn(lenCol, checkedLen)
       .withColumn("start_off",

@@ -140,16 +140,21 @@ object DedupIndex {
     * `jaccard_n` (when the sidecar is present) so [[thresholded]] can
     * refuse under-floor requests.
     */
-  def readPairs(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    readMeta(spark, path) match {
+  def readPairs(spark: SparkSession, path: String): DataFrame =
+    withRecallFloor(spark.read.parquet(path), readMeta(spark, path))
+
+  /** `df` with the recall floor of the LSH parameters in `meta` attached
+    * to `jaccard_n` as column metadata; `df` as is without them.
+    */
+  private def withRecallFloor(df: DataFrame,
+                              meta: Option[(Int, Int, Int)]): DataFrame =
+    meta match {
       case Some((nh, rpb, _)) =>
         val m = new org.apache.spark.sql.types.MetadataBuilder()
           .putDouble(FloorKey, recallFloor(nh, rpb)).build()
         df.withColumn("jaccard_n", col("jaccard_n").as("jaccard_n", m))
       case None => df
     }
-  }
 
   /** Cross-source duplication matrix from a pair index — semantics of
     * [[DedupOps.dupSourceMatrix]], minus the chain re-run. NULL
@@ -358,15 +363,9 @@ object DedupIndex {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("jaccard_d",
           org.apache.spark.sql.types.LongType))))
-    val df = DeltaStore
-      .readCommitted(template, pairsPath(storeDir)).drop("ingest_batch")
-    readMeta(spark, storeDir) match {
-      case Some((nh, rpb, _)) =>
-        val m = new org.apache.spark.sql.types.MetadataBuilder()
-          .putDouble(FloorKey, recallFloor(nh, rpb)).build()
-        df.withColumn("jaccard_n", col("jaccard_n").as("jaccard_n", m))
-      case None => df
-    }
+    withRecallFloor(DeltaStore
+      .readCommitted(template, pairsPath(storeDir)).drop("ingest_batch"),
+      readMeta(spark, storeDir))
   }
 
   /** Absorb each sub-store's committed deltas into one compacted delta

@@ -79,6 +79,26 @@ object DupGraph {
       (c, () => { c.unpersist(); () })
     }
 
+  /** Sets `checkpointDir` as the checkpoint directory when given; true
+    * when it is, so rounds checkpoint reliably (see the durability note
+    * above).
+    */
+  private def checkpointing(edges: DataFrame,
+                            checkpointDir: Option[String]): Boolean = {
+    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
+    checkpointDir.isDefined
+  }
+
+  /** `edges` as an undirected simple graph (a, b): self loops dropped,
+    * each remaining edge in both directions, once.
+    */
+  private def undirected(edges: DataFrame, src: String,
+                         dst: String): DataFrame = {
+    val e0 = edges.select(col(src).as("a"), col(dst).as("b"))
+      .filter(col("a") =!= col("b"))
+    e0.union(e0.select(col("b").as("a"), col("a").as("b"))).distinct()
+  }
+
   /** Connected components of the undirected pair graph. Input: one row
     * per edge (src, dst). Output: (id, component) for every endpoint,
     * component = min id reachable. Deterministic for any partitioning.
@@ -87,8 +107,7 @@ object DupGraph {
   def connectedComponents(edges: DataFrame, src: String = "id1",
                           dst: String = "id2", maxIter: Int = 20,
                           checkpointDir: Option[String] = None): DataFrame = {
-    val reliable = checkpointDir.isDefined
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
+    val reliable = checkpointing(edges, checkpointDir)
     // materialize the edge list ONCE before fanning out: the union below
     // references it twice and every round joins it — without the eager
     // checkpoint an expensive upstream DAG (e.g. the whole MinHash-LSH
@@ -349,8 +368,7 @@ object DupGraph {
                            checkpointDir: Option[String]): DataFrame = {
     require(iterations >= 1 && dampNum >= 0 && dampDen > 0 && dampNum <= dampDen,
       s"bad pageRank config: iterations=$iterations damping=$dampNum/$dampDen")
-    val reliable = checkpointDir.isDefined
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
+    val reliable = checkpointing(edges, checkpointDir)
     val teleport = 1000000L - (dampNum * 1000000L) / dampDen
     val e0 = edges.select(col(src).as("s"), col(dst).as("d")).distinct()
     val outdeg = e0.groupBy("s").agg(count(lit(1)).as("od"))
@@ -409,14 +427,10 @@ object DupGraph {
                    idCol: String = "id", maxHops: Int = 3,
                    checkpointDir: Option[String] = None): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0: $maxHops")
-    val reliable = checkpointDir.isDefined
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    val e0 = edges.select(col(src).as("a"), col(dst).as("b"))
-      .filter(col("a") =!= col("b"))
+    val reliable = checkpointing(edges, checkpointDir)
     // laid out on the per-round join key b (see staticFrame)
-    val (sym, releaseSym) = staticFrame(
-      e0.union(e0.select(col("b").as("a"), col("a").as("b"))).distinct(),
-      "b", reliable)
+    val (sym, releaseSym) =
+      staticFrame(undirected(edges, src, dst), "b", reliable)
     var dist = ckpt(sources.select(col(idCol).as("id")).distinct()
       .select(col("id"), lit(0L).as("dist")), reliable)
     for (_ <- 1 to maxHops) {
@@ -455,14 +469,10 @@ object DupGraph {
                        dst: String = "dst", iterations: Int = 3,
                        checkpointDir: Option[String] = None): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
-    val reliable = checkpointDir.isDefined
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    val e0 = edges.select(col(src).as("a"), col(dst).as("b"))
-      .filter(col("a") =!= col("b"))
+    val reliable = checkpointing(edges, checkpointDir)
     // laid out on the per-sweep join key b (see staticFrame)
-    val (sym, releaseSym) = staticFrame(
-      e0.union(e0.select(col("b").as("a"), col("a").as("b"))).distinct(),
-      "b", reliable)
+    val (sym, releaseSym) =
+      staticFrame(undirected(edges, src, dst), "b", reliable)
     var labels = ckpt(sym.select(col("a").as("id")).distinct()
       .select(col("id"), col("id").as("lbl")), reliable)
     val w = org.apache.spark.sql.expressions.Window
@@ -510,13 +520,8 @@ object DupGraph {
             checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val reliable = checkpointDir.isDefined
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    val e0 = edges.select(col(src).as("a"), col(dst).as("b"))
-      .filter(col("a") =!= col("b"))
-    var cur = ckpt(
-      e0.union(e0.select(col("b").as("a"), col("a").as("b"))).distinct(),
-      reliable)
+    val reliable = checkpointing(edges, checkpointDir)
+    var cur = ckpt(undirected(edges, src, dst), reliable)
     for (_ <- 1 to rounds) {
       val alive = cur.groupBy("a").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("a"))
@@ -551,15 +556,12 @@ object DupGraph {
     */
   def degreeProfile(edges: DataFrame, src: String = "src",
                     dst: String = "dst"): DataFrame = {
-    val e0 = edges.select(col(src).as("a"), col(dst).as("b"))
-      .filter(col("a") =!= col("b"))
     // sym feeds both the degree aggregate and the neighbor join, and
     // deg feeds the join plus the final profile — cached so the
     // upstream edge derivation (q_graph_degree_profile's orders ⋈
     // lineitem distinct) runs once, not four times (recomputable,
     // unlike a checkpoint)
-    val sym = e0.union(e0.select(col("b").as("a"), col("a").as("b"))).distinct()
-      .cache()
+    val sym = undirected(edges, src, dst).cache()
     val deg = sym.groupBy("a").agg(count(lit(1)).as("deg")).cache()
     val nbr = sym
       .join(deg.select(col("a").as("b"), col("deg").as("_dd")), Seq("b"))

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.core.Checked
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -33,10 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object InfoStats {
 
-  private def checkedCat(c: Column, op: String, what: String): Column =
-    when(c.isNull, raise_error(lit(s"$op: NULL $what"))).otherwise(c)
-      .cast("string")
-
   /** c·ln c with c an exact count (c ≥ 1, so no 0·ln 0 guard needed on
     * observed cells).
     */
@@ -60,8 +57,8 @@ object InfoStats {
     */
   def mutualInformation(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val rows = df.select(
-      checkedCat(col(aCol), "mutualInformation", s"value in $aCol").as("a"),
-      checkedCat(col(bCol), "mutualInformation", s"value in $bCol").as("b"))
+      Checked.label(col(aCol), "mutualInformation", s"value in $aCol").as("a"),
+      Checked.label(col(bCol), "mutualInformation", s"value in $bCol").as("b"))
     val cells = rows.groupBy("a", "b").agg(count(lit(1)).as("c"))
     val sAb = cells.agg(sum(cLnC(col("c"))).as("s_ab"), sum("c").as("n"))
     val sA = cells.groupBy("a").agg(sum("c").as("_r"))
@@ -97,7 +94,7 @@ object InfoStats {
     */
   def tokenCells(df: DataFrame, sliceCol: String, textCol: String,
                  op: String = "tokenCells"): DataFrame =
-    df.select(checkedCat(col(sliceCol), op, s"slice in $sliceCol")
+    df.select(Checked.label(col(sliceCol), op, s"slice in $sliceCol")
       .as("slice"),
       TextAnalysis.tokens(col(textCol)).as("_ts"))
       .select(col("slice"), explode(col("_ts")).as("token"))
@@ -275,7 +272,7 @@ object InfoStats {
   def concentrationProfile(df: DataFrame, catCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val counts = df
-      .select(checkedCat(col(catCol), "concentrationProfile",
+      .select(Checked.label(col(catCol), "concentrationProfile",
         s"value in $catCol").as("_d"))
       .groupBy("_d").agg(count(lit(1)).as("_c"))
     val ranked = counts.withColumn("_i",
@@ -315,7 +312,7 @@ object InfoStats {
   def essWeights(df: DataFrame, groupCol: String,
                  weightCol: String): DataFrame = {
     val rows = df.select(
-      checkedCat(col(groupCol), "essWeights", s"group in $groupCol")
+      Checked.label(col(groupCol), "essWeights", s"group in $groupCol")
         .as("_g"),
       when(col(weightCol).isNull || col(weightCol) < 0,
         raise_error(concat(lit(s"essWeights: NULL or negative weight in " +

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.core.Checked
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -34,11 +35,6 @@ import Packing.{prefixScan, withBoundedBlocks}
   * explicitly instead of trusting float equality; NULLs raise.
   */
 object RankStats {
-
-  /** Null-checked long cast: NULL raises with the op + column named. */
-  private def checkedLong(c: Column, op: String, what: String): Column =
-    when(c.isNull, raise_error(lit(s"$op: NULL $what"))).otherwise(c)
-      .cast("long")
 
   /** Named-overflow long cast for a decimal rank-sum aggregate: rank
     * sums reach N(N+1) and silently wrap a non-ANSI Long past ~3×10⁹
@@ -79,7 +75,7 @@ object RankStats {
   def avgRanks2(df: DataFrame, valueCol: String,
                 maxBlocks: Long = 1L << 20): DataFrame = {
     val vc = df
-      .select(checkedLong(col(valueCol), "avgRanks2", s"value in $valueCol")
+      .select(Checked.long(col(valueCol), "avgRanks2", s"value in $valueCol")
         .as("_v"))
       .groupBy("_v").agg(count(lit(1)).as("_n"))
     prefixScan(withBoundedBlocks(vc, "_v", maxBlocks), Nil,
@@ -114,10 +110,8 @@ object RankStats {
                                groupCol: String, op: String,
                                maxBlocks: Long): DataFrame = {
     val rows = df.select(
-      checkedLong(col(valueCol), op, s"value in $valueCol").as("_v"),
-      when(col(groupCol).isNull,
-        raise_error(lit(s"$op: NULL group in $groupCol")))
-        .otherwise(col(groupCol)).cast("string").as("_g"))
+      Checked.long(col(valueCol), op, s"value in $valueCol").as("_v"),
+      Checked.label(col(groupCol), op, s"group in $groupCol").as("_g"))
     val hdr = twoGroupHeader(rows)
     val vc = rows.crossJoin(broadcast(hdr))
       .groupBy("_v")
@@ -229,8 +223,8 @@ object RankStats {
   def spearman(df: DataFrame, xCol: String, yCol: String,
                maxBlocks: Long = 1L << 20): DataFrame = {
     val rows = df.select(
-      checkedLong(col(xCol), "spearman", s"value in $xCol").as("_x"),
-      checkedLong(col(yCol), "spearman", s"value in $yCol").as("_y"))
+      Checked.long(col(xCol), "spearman", s"value in $xCol").as("_x"),
+      Checked.long(col(yCol), "spearman", s"value in $yCol").as("_y"))
     // per-ROW tie share: a value with t rows contributes t²−1 on each
     // of them, so the row sum is Σ t·(t²−1) = Σ(t³−t) — exact integer
     // algebra, no division. decimal(12,0) factors keep the product
@@ -297,8 +291,8 @@ object RankStats {
                  maxBlocks: Long = 1024L): DataFrame = {
     val op = "kendallTau"
     val rows = df.select(
-      checkedLong(col(xCol), op, s"value in $xCol").as("_x"),
-      checkedLong(col(yCol), op, s"value in $yCol").as("_y"))
+      Checked.long(col(xCol), op, s"value in $xCol").as("_x"),
+      Checked.long(col(yCol), op, s"value in $yCol").as("_y"))
     val cells = rows.groupBy("_x", "_y").agg(count(lit(1)).as("_n"))
     // dense-rank the PRESENT x blocks: withBoundedBlocks ids are
     // span-scaled (sparse when the grid is), and the probe expansion
@@ -409,11 +403,10 @@ object RankStats {
                           sliceCol: String,
                           maxBlocks: Long = 1L << 20): DataFrame = {
     val rows = df.select(
-      checkedLong(col(valueCol), "mannWhitneyPerSlice",
+      Checked.long(col(valueCol), "mannWhitneyPerSlice",
         s"value in $valueCol").as("_v"),
-      when(col(sliceCol).isNull,
-        raise_error(lit(s"mannWhitneyPerSlice: NULL slice in $sliceCol")))
-        .otherwise(col(sliceCol)).cast("string").as("_s"))
+      Checked.label(col(sliceCol), "mannWhitneyPerSlice",
+        s"slice in $sliceCol").as("_s"))
     val vc = rows.groupBy("_v").agg(count(lit(1)).as("_n"))
     val ranked = prefixScan(withBoundedBlocks(vc, "_v", maxBlocks), Nil,
       "_v", Seq("_n"))
@@ -531,11 +524,9 @@ object RankStats {
     val op = "cupedAdjust"
     val dec = "decimal(38,0)"
     val rows = df.select(
-      checkedLong(col(xCol), op, s"value in $xCol").as("_x"),
-      checkedLong(col(yCol), op, s"value in $yCol").as("_y"),
-      when(col(armCol).isNull,
-        raise_error(lit(s"$op: NULL arm in $armCol")))
-        .otherwise(col(armCol)).cast("string").as("_arm"))
+      Checked.long(col(xCol), op, s"value in $xCol").as("_x"),
+      Checked.long(col(yCol), op, s"value in $yCol").as("_y"),
+      Checked.label(col(armCol), op, s"arm in $armCol").as("_arm"))
     val pooled = rows.agg(
       count(lit(1)).as("_n"),
       sum("_x").as("_sx"), sum("_y").as("_sy"),
@@ -565,6 +556,42 @@ object RankStats {
       .drop("_n", "_sx")
   }
 
+  /** 1 for a treated row (`armCol` equals `treatLabel`), 0 for
+    * control; a NULL arm raises.
+    */
+  private def treatedFlag(armCol: String, treatLabel: String,
+                          op: String): Column =
+    when(col(armCol).isNull,
+      raise_error(lit(s"$op: NULL arm in $armCol")))
+      .otherwise((col(armCol) === treatLabel).cast("long"))
+
+  /** Per distinct ascending key `v`, the cumulative treated/control
+    * counts and conversions through it: (_v, n_t, n_c, y_t, y_c), exact
+    * integers through the two-level [[Packing.prefixScan]]. y must be
+    * 0 or 1.
+    */
+  private def armOutcomePrefixes(df: DataFrame, v: Column, armCol: String,
+                                 treatLabel: String, yCol: String,
+                                 op: String, maxBlocks: Long): DataFrame = {
+    val rows = df.select(v.as("_v"),
+      treatedFlag(armCol, treatLabel, op).as("_t"),
+      when(col(yCol).isNull || (col(yCol) =!= 0 && col(yCol) =!= 1),
+        raise_error(concat(lit(s"$op: outcome must be 0 or 1, got "),
+          coalesce(col(yCol).cast("string"), lit("NULL")))))
+        .otherwise(col(yCol)).cast("long").as("_y"))
+    val vc = rows.groupBy("_v")
+      .agg(sum("_t").as("_nt"), sum(lit(1L) - col("_t")).as("_nc"),
+        sum(col("_t") * col("_y")).as("_yt"),
+        sum((lit(1L) - col("_t")) * col("_y")).as("_yc"))
+    prefixScan(withBoundedBlocks(vc, "_v", maxBlocks), Nil,
+      "_v", Seq("_nt", "_nc", "_yt", "_yc"))
+      .select(col("_v"),
+        (col("_pre__nt") + col("_nt")).as("n_t"),
+        (col("_pre__nc") + col("_nc")).as("n_c"),
+        (col("_pre__yt") + col("_yt")).as("y_t"),
+        (col("_pre__yc") + col("_yc")).as("y_c"))
+  }
+
   /** Uplift (Qini) curve over a targeting score: walk the population
     * from best-scored down and ask "how many EXTRA conversions has
     * treatment bought so far?" — the model-quality view for uplift /
@@ -583,27 +610,11 @@ object RankStats {
                   treatLabel: String, yCol: String,
                   maxBlocks: Long = 1L << 20): DataFrame = {
     val op = "upliftCurve"
-    val rows = df.select(
-      checkedLong(col(scoreCol), op, s"value in $scoreCol").as("_s"),
-      when(col(armCol).isNull,
-        raise_error(lit(s"$op: NULL arm in $armCol")))
-        .otherwise((col(armCol) === treatLabel).cast("long")).as("_t"),
-      when(col(yCol).isNull || (col(yCol) =!= 0 && col(yCol) =!= 1),
-        raise_error(concat(lit(s"$op: outcome must be 0 or 1, got "),
-          coalesce(col(yCol).cast("string"), lit("NULL")))))
-        .otherwise(col(yCol)).cast("long").as("_y"))
-    val vc = rows.groupBy((-col("_s")).as("_v"))
-      .agg(sum("_t").as("_nt"),
-        sum(lit(1L) - col("_t")).as("_nc"),
-        sum(col("_t") * col("_y")).as("_yt"),
-        sum((lit(1L) - col("_t")) * col("_y")).as("_yc"))
-    prefixScan(withBoundedBlocks(vc, "_v", maxBlocks), Nil,
-      "_v", Seq("_nt", "_nc", "_yt", "_yc"))
-      .select((-col("_v")).as("score"),
-        (col("_pre__nt") + col("_nt")).as("n_t"),
-        (col("_pre__nc") + col("_nc")).as("n_c"),
-        (col("_pre__yt") + col("_yt")).as("y_t"),
-        (col("_pre__yc") + col("_yc")).as("y_c"))
+    armOutcomePrefixes(df,
+      -Checked.long(col(scoreCol), op, s"value in $scoreCol"),
+      armCol, treatLabel, yCol, op, maxBlocks)
+      .select((-col("_v")).as("score"), col("n_t"), col("n_c"), col("y_t"),
+        col("y_c"))
       .withColumn("uplift",
         when(col("n_t") > 0L && col("n_c") > 0L,
           col("y_t").cast("double") / col("n_t").cast("double") -
@@ -631,11 +642,9 @@ object RankStats {
     val op = "diffInDiff"
     val dec = "decimal(38,0)"
     val rows = df.select(
-      (checkedLong(col(postCol), op, s"value in $postCol") -
-        checkedLong(col(preCol), op, s"value in $preCol")).as("_d"),
-      when(col(armCol).isNull,
-        raise_error(lit(s"$op: NULL arm in $armCol")))
-        .otherwise((col(armCol) === treatLabel).cast("long")).as("_t"))
+      (Checked.long(col(postCol), op, s"value in $postCol") -
+        Checked.long(col(preCol), op, s"value in $preCol")).as("_d"),
+      treatedFlag(armCol, treatLabel, op).as("_t"))
     // ONE conditional aggregate pivots both arms (the stratifiedAte
     // shape — the filtered-sides crossJoin cost two corpus scans); an
     // EMPTY arm has no contrast and raises loudly (the twoGroupHeader
@@ -699,13 +708,9 @@ object RankStats {
     val op = "stratifiedAte"
     val dec = "decimal(38,0)"
     val rows = df.select(
-      when(col(stratumCol).isNull,
-        raise_error(lit(s"$op: NULL stratum in $stratumCol")))
-        .otherwise(col(stratumCol)).cast("string").as("_s"),
-      when(col(armCol).isNull,
-        raise_error(lit(s"$op: NULL arm in $armCol")))
-        .otherwise((col(armCol) === treatLabel).cast("long")).as("_t"),
-      checkedLong(col(yCol), op, s"value in $yCol").as("_y"))
+      Checked.label(col(stratumCol), op, s"stratum in $stratumCol").as("_s"),
+      treatedFlag(armCol, treatLabel, op).as("_t"),
+      Checked.long(col(yCol), op, s"value in $yCol").as("_y"))
     val cells = rows.groupBy("_s", "_t")
       .agg(count(lit(1)).as("_n"), sum("_y").as("_sy"),
         sum(col("_y").cast(dec) * col("_y").cast(dec)).as("_syy"))
@@ -782,30 +787,14 @@ object RankStats {
                          cObf: Double = 2.7969,
                          maxBlocks: Long = 1L << 20): DataFrame = {
     val op = "sequentialBoundary"
-    val rows = df.select(
-      checkedLong(col(dayCol), op, s"value in $dayCol").as("_v"),
-      when(col(armCol).isNull,
-        raise_error(lit(s"$op: NULL arm in $armCol")))
-        .otherwise((col(armCol) === treatLabel).cast("long")).as("_t"),
-      when(col(yCol).isNull || (col(yCol) =!= 0 && col(yCol) =!= 1),
-        raise_error(concat(lit(s"$op: outcome must be 0 or 1, got "),
-          coalesce(col(yCol).cast("string"), lit("NULL")))))
-        .otherwise(col(yCol)).cast("long").as("_y"))
-    val vc = rows.groupBy("_v")
-      .agg(sum("_t").as("_nt"), sum(lit(1L) - col("_t")).as("_nc"),
-        sum(col("_t") * col("_y")).as("_yt"),
-        sum((lit(1L) - col("_t")) * col("_y")).as("_yc"))
     // total units = the LAST day's cumulative count: one window over
     // the grid-bounded cumulative frame — a rows.agg(count) here would
     // re-scan the corpus (and re-run the raise_error checks) for one
     // number (r11 session-5 review finding)
-    val cum = prefixScan(withBoundedBlocks(vc, "_v", maxBlocks), Nil,
-      "_v", Seq("_nt", "_nc", "_yt", "_yc"))
-      .select(col("_v").as("day"),
-        (col("_pre__nt") + col("_nt")).as("n_t"),
-        (col("_pre__nc") + col("_nc")).as("n_c"),
-        (col("_pre__yt") + col("_yt")).as("y_t"),
-        (col("_pre__yc") + col("_yc")).as("y_c"))
+    val cum = armOutcomePrefixes(df,
+      Checked.long(col(dayCol), op, s"value in $dayCol"),
+      armCol, treatLabel, yCol, op, maxBlocks)
+      .withColumnRenamed("_v", "day")
       .withColumn("_nAll",
         max(col("n_t") + col("n_c")).over(
           Window.rowsBetween(Window.unboundedPreceding,
@@ -839,11 +828,9 @@ object RankStats {
   def ksPerSlice(df: DataFrame, valueCol: String, sliceCol: String,
                  maxBlocks: Long = 1L << 20): DataFrame = {
     val rows = df.select(
-      checkedLong(col(valueCol), "ksPerSlice", s"value in $valueCol")
+      Checked.long(col(valueCol), "ksPerSlice", s"value in $valueCol")
         .as("_v"),
-      when(col(sliceCol).isNull,
-        raise_error(lit(s"ksPerSlice: NULL slice in $sliceCol")))
-        .otherwise(col(sliceCol)).cast("string").as("_s"))
+      Checked.label(col(sliceCol), "ksPerSlice", s"slice in $sliceCol").as("_s"))
     // global per-value prefix (combined distribution)
     val vc = rows.groupBy("_v").agg(count(lit(1)).as("_n"))
     val g = prefixScan(withBoundedBlocks(vc, "_v", maxBlocks), Nil,
@@ -968,14 +955,11 @@ object RankStats {
                        groupCol: String,
                        maxBlocks: Long = 1L << 20): DataFrame = {
     val rows = df.select(
-      when(col(keyCol).isNull,
-        raise_error(lit(s"wassersteinByKey: NULL key in $keyCol")))
-        .otherwise(col(keyCol)).cast("string").as("_k"),
-      checkedLong(col(valueCol), "wassersteinByKey",
+      Checked.label(col(keyCol), "wassersteinByKey", s"key in $keyCol").as("_k"),
+      Checked.long(col(valueCol), "wassersteinByKey",
         s"value in $valueCol").as("_v"),
-      when(col(groupCol).isNull,
-        raise_error(lit(s"wassersteinByKey: NULL group in $groupCol")))
-        .otherwise(col(groupCol)).cast("string").as("_g"))
+      Checked.label(col(groupCol), "wassersteinByKey",
+        s"group in $groupCol").as("_g"))
     val hdr = twoGroupHeader(rows).select("group_a", "group_b")
     val kv = rows.crossJoin(broadcast(hdr))
       .groupBy("_k", "_v")
@@ -1044,7 +1028,7 @@ object RankStats {
     require(qMillis.forall(q => q >= 0L && q <= 1000L),
       s"exactQuantiles: q outside [0, 1000] milli: $qMillis")
     val vc = df
-      .select(checkedLong(col(valueCol), "exactQuantiles",
+      .select(Checked.long(col(valueCol), "exactQuantiles",
         s"value in $valueCol").as("_v"))
       .groupBy("_v").agg(count(lit(1)).as("_n"))
     pickQuantiles(vc, vc.agg(sum("_n").as("_tot")), qMillis, maxBlocks)
@@ -1093,7 +1077,7 @@ object RankStats {
     require(qMillis.forall(q => q >= 0L && q <= 1000L),
       s"weightedQuantiles: q outside [0, 1000] milli: $qMillis")
     val rows = df.select(
-      checkedLong(col(valueCol), "weightedQuantiles",
+      Checked.long(col(valueCol), "weightedQuantiles",
         s"value in $valueCol").as("_v"),
       when(col(weightCol).isNull || col(weightCol) < 0,
         raise_error(concat(
@@ -1135,11 +1119,10 @@ object RankStats {
     val spark = df.sparkSession
     import spark.implicits._
     val rows = df.select(
-      checkedLong(col(valueCol), "groupedQuantiles",
+      Checked.long(col(valueCol), "groupedQuantiles",
         s"value in $valueCol").as("_v"),
-      when(col(groupCol).isNull,
-        raise_error(lit(s"groupedQuantiles: NULL group in $groupCol")))
-        .otherwise(col(groupCol)).cast("string").as("_g"))
+      Checked.label(col(groupCol), "groupedQuantiles",
+        s"group in $groupCol").as("_g"))
     val gv = rows.groupBy("_g", "_v").agg(count(lit(1)).as("_n"))
     val cum = prefixScan(withBoundedBlocks(gv, "_v", maxBlocks),
       Seq("_g"), "_v", Seq("_n"), innerJoin = true)
@@ -1180,11 +1163,10 @@ object RankStats {
     require(alphaPermille > 0 && alphaPermille < 1000,
       s"alphaPermille must be in (0, 1000), got $alphaPermille")
     val rows = cal.select(
-      checkedLong(col(valueCol), "conformalQuantile",
+      Checked.long(col(valueCol), "conformalQuantile",
         s"value in $valueCol").as("_v"),
-      when(col(groupCol).isNull,
-        raise_error(lit(s"conformalQuantile: NULL group in $groupCol")))
-        .otherwise(col(groupCol)).cast("string").as("_g"))
+      Checked.label(col(groupCol), "conformalQuantile",
+        s"group in $groupCol").as("_g"))
     val gv = rows.groupBy("_g", "_v").agg(count(lit(1)).as("_n"))
     conformalQuantileFromCells(gv, alphaPermille, maxBlocks)
   }
@@ -1228,11 +1210,10 @@ object RankStats {
   def ecdfNormalize(df: DataFrame, valueCol: String, groupCol: String,
                     maxBlocks: Long = 1L << 20): DataFrame = {
     val rows = df.select(
-      checkedLong(col(valueCol), "ecdfNormalize",
+      Checked.long(col(valueCol), "ecdfNormalize",
         s"value in $valueCol").as("_v"),
-      when(col(groupCol).isNull,
-        raise_error(lit(s"ecdfNormalize: NULL group in $groupCol")))
-        .otherwise(col(groupCol)).cast("string").as("_g"))
+      Checked.label(col(groupCol), "ecdfNormalize",
+        s"group in $groupCol").as("_g"))
     val gv = rows.groupBy("_g", "_v").agg(count(lit(1)).as("_n"))
     val cum = prefixScan(withBoundedBlocks(gv, "_v", maxBlocks),
       Seq("_g"), "_v", Seq("_n"))
@@ -1255,11 +1236,10 @@ object RankStats {
   def conformalCoverage(test: DataFrame, qhats: DataFrame,
                         valueCol: String, groupCol: String): DataFrame = {
     val t = test.select(
-      checkedLong(col(valueCol), "conformalCoverage",
+      Checked.long(col(valueCol), "conformalCoverage",
         s"value in $valueCol").as("_v"),
-      when(col(groupCol).isNull,
-        raise_error(lit(s"conformalCoverage: NULL group in $groupCol")))
-        .otherwise(col(groupCol)).cast("string").as("grp"))
+      Checked.label(col(groupCol), "conformalCoverage",
+        s"group in $groupCol").as("grp"))
     t.join(broadcast(qhats), Seq("grp"))
       .groupBy(col("grp"), col("n_cal"), col("target_rank"), col("qhat"))
       .agg(count(lit(1)).as("n_test"),
@@ -1283,7 +1263,7 @@ object RankStats {
   def hillAlpha(df: DataFrame, valueCol: String, xmin: Long): DataFrame = {
     require(xmin >= 1L, s"xmin must be positive, got $xmin")
     val vc = df
-      .select(checkedLong(col(valueCol), "hillAlpha",
+      .select(Checked.long(col(valueCol), "hillAlpha",
         s"value in $valueCol").as("_v"))
       .filter(col("_v") >= xmin)
       .groupBy("_v").agg(count(lit(1)).as("_c"))
@@ -1309,8 +1289,8 @@ object RankStats {
     * assumed instead of ranks.
     */
   def pairedT(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val d = checkedLong(col(aCol), "pairedT", s"value in $aCol") -
-      checkedLong(col(bCol), "pairedT", s"value in $bCol")
+    val d = Checked.long(col(aCol), "pairedT", s"value in $aCol") -
+      Checked.long(col(bCol), "pairedT", s"value in $bCol")
     val agg = df.select(d.as("_d")).agg(
       count(lit(1)).as("n"), sum("_d").as("sum_d"),
       sum(col("_d").cast("decimal(18,0)") * col("_d").cast("decimal(18,0)"))
@@ -1335,8 +1315,8 @@ object RankStats {
     */
   def wilcoxonSignedRank(df: DataFrame, aCol: String, bCol: String,
                          maxBlocks: Long = 1L << 20): DataFrame = {
-    val d = checkedLong(col(aCol), "wilcoxonSignedRank", s"value in $aCol") -
-      checkedLong(col(bCol), "wilcoxonSignedRank", s"value in $bCol")
+    val d = Checked.long(col(aCol), "wilcoxonSignedRank", s"value in $aCol") -
+      Checked.long(col(bCol), "wilcoxonSignedRank", s"value in $bCol")
     val nz = df.select(d.as("_d")).filter(col("_d") =!= 0L)
       .select(col("_d"), abs(col("_d")).as("_ad"))
     // per-ROW tie share (the spearman idiom): each of a tie group's t
@@ -1384,10 +1364,8 @@ object RankStats {
     */
   def chi2Cells(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val rows = df.select(
-      when(col(aCol).isNull, raise_error(lit(s"chi2Cells: NULL in $aCol")))
-        .otherwise(col(aCol)).cast("string").as("a"),
-      when(col(bCol).isNull, raise_error(lit(s"chi2Cells: NULL in $bCol")))
-        .otherwise(col(bCol)).cast("string").as("b"))
+      Checked.label(col(aCol), "chi2Cells", s"in $aCol").as("a"),
+      Checked.label(col(bCol), "chi2Cells", s"in $bCol").as("b"))
     val ra = rows.groupBy("a").agg(count(lit(1)).as("r_tot"))
     val cb = rows.groupBy("b").agg(count(lit(1)).as("c_tot"))
     val nf = rows.agg(count(lit(1)).as("_n0"))

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.core.Checked
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -75,9 +76,8 @@ object Sampling {
                    splits: Seq[(String, Double)]): DataFrame = {
     val cell = df
       .select(splitLabel(col(idCol), splits).as("split"),
-        when(col(labelCol).isNull,
-          raise_error(lit(s"splitBalance: NULL label in $labelCol")))
-          .otherwise(col(labelCol)).cast("string").as("label"))
+        Checked.label(col(labelCol), "splitBalance",
+          s"label in $labelCol").as("label"))
       .groupBy("split", "label").agg(count(lit(1)).as("n"))
     val wS = Window.partitionBy("split")
     val wL = Window.partitionBy("label")

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Checked
 import Packing.{prefixScan, withBoundedBlocks}
 
 /** Time-to-event (survival) analysis over right-censored durations: the
@@ -376,6 +377,15 @@ object Survival {
           .as("rmst"))
   }
 
+  /** Checked (_v duration, _e event, _g group label) rows. */
+  private def groupedRows(df: DataFrame, durationCol: String,
+                          eventCol: String, groupCol: String,
+                          op: String): DataFrame =
+    df.select(
+      checkedDuration(col(durationCol), op).as("_v"),
+      checkedEvent(col(eventCol), op).as("_e"),
+      Checked.label(col(groupCol), op, s"group in $groupCol").as("_g"))
+
   /** Per-group Kaplan–Meier curves in ONE pass — the side-by-side
     * view behind every A/B survival plot ([[logRank]] gives the test,
     * this gives the curves). Cells aggregate per (group, duration);
@@ -390,12 +400,7 @@ object Survival {
                          eventCol: String, groupCol: String,
                          maxBlocks: Long = 1L << 20): DataFrame = {
     val op = "kaplanMeierByGroup"
-    val rows = df.select(
-      checkedDuration(col(durationCol), op).as("_v"),
-      checkedEvent(col(eventCol), op).as("_e"),
-      when(col(groupCol).isNull,
-        raise_error(lit(s"$op: NULL group in $groupCol")))
-        .otherwise(col(groupCol)).cast("string").as("_g"))
+    val rows = groupedRows(df, durationCol, eventCol, groupCol, op)
     val kv = rows.groupBy("_g", "_v")
       .agg(sum("_e").as("_d"), count(lit(1)).as("_n"))
     val totals = kv.groupBy("_g").agg(sum("_n").as("_total"))
@@ -497,8 +502,7 @@ object Survival {
       checkedDuration(col(durationCol), op).as("_v"),
       checkedEvent(col(eventCol), op).as("_e")) ++
       xCols.zip(xs).map { case (c, x) =>
-        when(col(c).isNull, raise_error(lit(s"$op: NULL covariate in $c")))
-          .otherwise(col(c)).cast("long").as(x)
+        Checked.long(col(c), op, s"covariate in $c").as(x)
       }: _*)
     val cells = rows.groupBy(("_v" +: xs).map(col): _*)
       .agg(count(lit(1)).as("_n"), sum("_e").as("_d"))
@@ -783,12 +787,7 @@ object Survival {
   def logRank(df: DataFrame, durationCol: String, eventCol: String,
               groupCol: String, maxBlocks: Long = 1L << 20): DataFrame = {
     val op = "logRank"
-    val rows = df.select(
-      checkedDuration(col(durationCol), op).as("_v"),
-      checkedEvent(col(eventCol), op).as("_e"),
-      when(col(groupCol).isNull,
-        raise_error(lit(s"$op: NULL group in $groupCol")))
-        .otherwise(col(groupCol)).cast("string").as("_g"))
+    val rows = groupedRows(df, durationCol, eventCol, groupCol, op)
     val hdr = RankStats.twoGroupHeader(rows)
     val vc = rows.crossJoin(broadcast(hdr))
       .groupBy("_v")

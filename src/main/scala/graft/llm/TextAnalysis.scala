@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.core.Checked
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1208,9 +1209,7 @@ object TextAnalysis {
     // there rather than the 2000 the 2-byte empty-deflate would imply
     // (which would out-noise every real document)
     val rdd = df
-      .select(when(col(idCol).isNull,
-        raise_error(lit(s"compressionRatio: NULL id in $idCol")))
-        .otherwise(col(idCol)).cast("long"),
+      .select(Checked.long(col(idCol), "compressionRatio", s"id in $idCol"),
         col(textCol).cast("string"))
       .rdd
       .mapPartitions { it =>
@@ -1359,9 +1358,7 @@ object TextAnalysis {
     // the checkedLong stance: a NULL doc id would silently form a NULL
     // block that sorts first in the cumulative window and skew the fit
     val base = df.select(
-      when(col(idCol).isNull,
-        raise_error(lit(s"heapsFit: NULL doc id in $idCol")))
-        .otherwise(col(idCol)).cast("long").as("_id"),
+      Checked.long(col(idCol), "heapsFit", s"doc id in $idCol").as("_id"),
       col(textCol).as("_text"))
     val stats = base.agg(min(col("_id")).as("_lo"),
         max(col("_id")).as("_hi"))

@@ -156,24 +156,6 @@ object SchemaRegistry {
     } finally in.close()
   }
 
-  /** PG catalog type name → Spark type (file_loader.py:562-580 analog). */
-  def pgToSpark(pgType: String): DataType = pgType.toLowerCase match {
-    case "smallint"                    => ShortType
-    case "integer"                     => IntegerType
-    case "bigint"                      => LongType
-    case "numeric"                     => DecimalType(38, 18)
-    case "real"                        => FloatType
-    case "double precision"            => DoubleType
-    case "boolean"                     => BooleanType
-    case "date"                        => DateType
-    case "timestamp without time zone" => TimestampNTZType
-    case "timestamp with time zone"    => TimestampType
-    case "bytea"                       => BinaryType
-    case t if t.startsWith("character") || t == "text" || t == "uuid" ||
-      t == "jsonb" => StringType
-    case _ => StringType // reference default: file_loader.py:580
-  }
-
   /** Provenance columns appended to every ingested row
     * (file_loader.py:630-633).
     */

@@ -329,19 +329,26 @@ object LlmQueries {
        |  SELECT DISTINCT p.q_id, a.vec_id AS c_id
        |  FROM pleafq p JOIN caf a ON a.cell = p.cell
        |  WHERE a.vec_id <> p.q_id),
-       |cosq AS (
-       |  SELECT p.q_id, p.c_id,
-       |         round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
-       |  FROM candsq p
-       |  JOIN e a ON a.vec_id = p.q_id JOIN e b ON b.vec_id = p.c_id AND b.i = a.i
-       |  JOIN vn na ON na.vec_id = p.q_id JOIN vn nb ON nb.vec_id = p.c_id
-       |  GROUP BY p.q_id, p.c_id),
+       |${rerankCos("cosq", "candsq")},
        |ranked AS (
        |  SELECT q_id, c_id, cosine,
        |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
        |  FROM cosq)
        |SELECT q_id, c_id, cosine, CAST(rn AS BIGINT) AS rn
        |FROM ranked WHERE rn <= 3 ORDER BY q_id, rn""".stripMargin
+
+  /** The exact re-rank cosine `cosT(q_id, c_id, cosine)` of the
+    * candidate pairs in `cands`, over the exploded vectors `e` and their
+    * norms `vn`.
+    */
+  private def rerankCos(cosT: String, cands: String): String =
+    s"""$cosT AS (
+       |  SELECT p.q_id, p.c_id,
+       |         round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
+       |  FROM $cands p
+       |  JOIN e a ON a.vec_id = p.q_id JOIN e b ON b.vec_id = p.c_id AND b.i = a.i
+       |  JOIN vn na ON na.vec_id = p.q_id JOIN vn nb ON nb.vec_id = p.c_id
+       |  GROUP BY p.q_id, p.c_id)""".stripMargin
 
   /** Two-level probe + candidate tail shared by the scaled graph
     * queries: nprobe1=2 level-1 cells per query, nprobe=2 leaves
@@ -364,13 +371,7 @@ object LlmQueries {
        |  SELECT DISTINCT p.q_id, a.vec_id AS c_id
        |  FROM pleaf p JOIN caf a ON a.cell = p.cell
        |  WHERE a.vec_id <> p.q_id),
-       |cos AS (
-       |  SELECT p.q_id, p.c_id,
-       |         round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
-       |  FROM cands p
-       |  JOIN e a ON a.vec_id = p.q_id JOIN e b ON b.vec_id = p.c_id AND b.i = a.i
-       |  JOIN vn na ON na.vec_id = p.q_id JOIN vn nb ON nb.vec_id = p.c_id
-       |  GROUP BY p.q_id, p.c_id)""".stripMargin
+       |${rerankCos("cos", "cands")}""".stripMargin
 
   /** Shared connected-components oracle chain (requires `sh` from
     * [[shingleCte]] and `sigs` from `sigSelect` in scope, under WITH
@@ -378,19 +379,7 @@ object LlmQueries {
     * symmetric edge closure → min-reachable-id components in `comp`.
     */
   private val ccCteChain =
-    s"""bands AS MATERIALIZED (
-      |  SELECT doc_id, 0 AS band_id, md5(mh1||mh2||mh3||mh4) AS band_key FROM sigs
-      |  UNION ALL
-      |  SELECT doc_id, 1 AS band_id, md5(mh5||mh6||mh7||mh8) AS band_key FROM sigs),
-      |cand AS MATERIALIZED (
-      |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-      |  FROM bands a JOIN bands b ON a.band_id = b.band_id AND a.band_key = b.band_key
-      |  WHERE a.doc_id < b.doc_id),
-      |sizes AS MATERIALIZED (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-      |inter AS MATERIALIZED (
-      |  SELECT p.id1, p.id2, count(*) AS n
-      |  FROM cand p JOIN sh a ON a.doc_id = p.id1 JOIN sh b ON b.doc_id = p.id2 AND b.s = a.s
-      |  GROUP BY p.id1, p.id2),
+    s"""${bandsPairsInter("cand")},
       |dups AS MATERIALIZED (
       |  SELECT p.id1, p.id2 FROM cand p
       |  LEFT JOIN inter i ON i.id1 = p.id1 AND i.id2 = p.id2
@@ -617,26 +606,33 @@ object LlmQueries {
        |  JOIN norms na ON na.vec_id = p.id1 JOIN norms nb ON nb.vec_id = p.id2
        |  GROUP BY p.id1, p.id2)""".stripMargin
 
-  /** The perceptual-hash sketch: `src` (the corpus plus single-byte-edit
-    * copies of every tenth doc at id + 100000) and its 4×16-bit average
-    * hash `sk(doc_id, ph0..ph3)`.
+  /** The 4×16-bit average hash of the bytes of `h(doc_id, hx, n)`: 64
+    * nearest-neighbour byte samples `b`, their `t`otal, and the chunks
+    * `ch(doc_id, c, v)` whose bits mark the samples above the mean.
     */
-  private lazy val phashSketchCtes: String =
-    """src AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 100000, substr(text,1,10) || 'Z' || substr(text,12)
-      |  FROM documents WHERE doc_id % 10 = 0),
-      |h AS (SELECT doc_id, hex(encode(text)) AS hx, octet_length(encode(text)) AS n
-      |      FROM src WHERE octet_length(encode(text)) > 0),
-      |b AS (SELECT doc_id, j,
+  private lazy val aHashChunksCtes: String =
+    """b AS (SELECT doc_id, j,
       |        (strpos('0123456789ABCDEF', substr(hx, CAST((j*n) // 64 AS INTEGER)*2+1, 1)) - 1) * 16
       |      + (strpos('0123456789ABCDEF', substr(hx, CAST((j*n) // 64 AS INTEGER)*2+2, 1)) - 1) AS bv
       |      FROM (SELECT doc_id, hx, n, unnest(range(0, 64)) AS j FROM h)),
       |t AS (SELECT doc_id, sum(bv) AS total FROM b GROUP BY doc_id),
       |ch AS (SELECT b.doc_id, CAST(b.j // 16 AS INTEGER) AS c,
       |         CAST(sum(CASE WHEN b.bv * 64 > t.total THEN 1::BIGINT << CAST(b.j % 16 AS INTEGER) ELSE 0 END) AS BIGINT) AS v
-      |       FROM b JOIN t USING (doc_id) GROUP BY b.doc_id, b.j // 16),
+      |       FROM b JOIN t USING (doc_id) GROUP BY b.doc_id, b.j // 16)""".stripMargin
+
+  /** The perceptual-hash sketch: `src` (the corpus plus single-byte-edit
+    * copies of every tenth doc at id + 100000) and its 4×16-bit average
+    * hash `sk(doc_id, ph0..ph3)`.
+    */
+  private lazy val phashSketchCtes: String =
+    s"""src AS (
+      |  SELECT doc_id, text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 100000, substr(text,1,10) || 'Z' || substr(text,12)
+      |  FROM documents WHERE doc_id % 10 = 0),
+      |h AS (SELECT doc_id, hex(encode(text)) AS hx, octet_length(encode(text)) AS n
+      |      FROM src WHERE octet_length(encode(text)) > 0),
+      |$aHashChunksCtes,
       |sk AS (SELECT doc_id,
       |         max(CASE WHEN c=0 THEN v END) AS ph0, max(CASE WHEN c=1 THEN v END) AS ph1,
       |         max(CASE WHEN c=2 THEN v END) AS ph2, max(CASE WHEN c=3 THEN v END) AS ph3
@@ -745,20 +741,21 @@ object LlmQueries {
     * review finding, the OracleSql.bktFromHex precedent). NOTE: the
     * margin `|` is already stripped by each query's outer stripMargin,
     * so this fragment must not start continuation lines with `|`.
+    * `pairs` names the candidate-pair CTE (`cand` in [[ccCteChain]]).
     */
-  private val bandsPairsInterCte: String =
-    """bands AS MATERIALIZED (
+  private def bandsPairsInter(pairs: String): String =
+    s"""bands AS MATERIALIZED (
       |  SELECT doc_id, 0 AS band_id, md5(mh1||mh2||mh3||mh4) AS band_key FROM sigs
       |  UNION ALL
       |  SELECT doc_id, 1 AS band_id, md5(mh5||mh6||mh7||mh8) AS band_key FROM sigs),
-      |pairs AS MATERIALIZED (
+      |$pairs AS MATERIALIZED (
       |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
       |  FROM bands a JOIN bands b ON a.band_id = b.band_id AND a.band_key = b.band_key
       |  WHERE a.doc_id < b.doc_id),
       |sizes AS MATERIALIZED (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
       |inter AS MATERIALIZED (
       |  SELECT p.id1, p.id2, count(*) AS n
-      |  FROM pairs p JOIN sh a ON a.doc_id = p.id1 JOIN sh b ON b.doc_id = p.id2 AND b.s = a.s
+      |  FROM $pairs p JOIN sh a ON a.doc_id = p.id1 JOIN sh b ON b.doc_id = p.id2 AND b.s = a.s
       |  GROUP BY p.id1, p.id2)""".stripMargin
 
   private val sigSelect =
@@ -778,7 +775,7 @@ object LlmQueries {
   private def dupMatrixOracle: String =
     s"""WITH $shingleCte,
        |sigs AS ($sigSelect),
-       |$bandsPairsInterCte,
+       |${bandsPairsInter("pairs")},
        |dup AS (
        |  SELECT p.id1, p.id2 FROM pairs p
        |  LEFT JOIN inter i ON i.id1 = p.id1 AND i.id2 = p.id2
@@ -800,7 +797,7 @@ object LlmQueries {
     * cluster_id) winner rule, and the mg1 migration rows. Ends with
     * CTEs `as0` (batch-0 assignments), `an1` (batch-1 rows), `mg1`
     * (re-pointed docs). NOTE: margins are this val's own stripMargin;
-    * interpolate like [[bandsPairsInterCte]].
+    * interpolate like [[bandsPairsInter]].
     */
   private def incrSplitFoldCtes(src: String = "documents"): String =
     s"""allidx AS MATERIALIZED (
@@ -921,13 +918,7 @@ object LlmQueries {
        |  SELECT DISTINCT p.vec_id AS q_id, a.vec_id AS c_id
        |  FROM probes p JOIN af a ON a.cell = p.cell
        |  WHERE a.vec_id <> p.vec_id),
-       |$cosT AS (
-       |  SELECT p.q_id, p.c_id,
-       |         round(sum(a.v * b.v) / (max(na.nrm) * max(nb.nrm)), 4) AS cosine
-       |  FROM cands p
-       |  JOIN e a ON a.vec_id = p.q_id JOIN e b ON b.vec_id = p.c_id AND b.i = a.i
-       |  JOIN vn na ON na.vec_id = p.q_id JOIN vn nb ON nb.vec_id = p.c_id
-       |  GROUP BY p.q_id, p.c_id)""".stripMargin
+       |${rerankCos(cosT, "cands")}""".stripMargin
 
   /** Top 3 of `cos` per query, cosine desc then c_id. */
   private lazy val cosTop3Tail: String =
@@ -962,6 +953,17 @@ object LlmQueries {
     s"""${ivfCosCtes("AND e.vec_id < 10", 4, "cos")},
        |$cosTop3Tail""".stripMargin
 
+  /** The flat IVF top-3 (16 cells, 2 iterations, nprobe 2) and the
+    * exact cosine top-3 of the queries vec_id < 10.
+    */
+  private def ivfVsExact(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val emb = tb(s, dir).embeddings
+    val queries = emb.filter(col("vec_id") < 10)
+    val index = Ivf.fit(emb, "vec_id", "embedding", k = 16, iters = 2)
+    (Ivf.topK(emb, queries, index, "vec_id", "embedding", k = 3, nprobe = 2),
+      Ann.cosineTopK(queries, emb, "vec_id", "embedding", 3))
+  }
+
   /** The 10 queries' IVF (nprobe 2) top-k beside their brute-force
     * top-k, both ranked cosine desc then c_id: the approximate list is
     * the CTE that `approx` opens, the exact one the CTE that `exact`
@@ -986,6 +988,49 @@ object LlmQueries {
        |  SELECT q_id, c_id,
        |         row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rn
        |  FROM ball) WHERE rn <= $k)""".stripMargin
+
+  /** The distinct (doc_id, t) whitespace tokens of every document. */
+  private lazy val docTokenSetCte: String =
+    """toks AS (
+      |  SELECT DISTINCT doc_id, t FROM (
+      |    SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS t
+      |    FROM documents))""".stripMargin
+
+  /** The exploded vectors `e`, their `norms`, and the raw `dots` of the
+    * queries (vec_id < 10) against every other vector.
+    */
+  private lazy val queryDotsCtes: String =
+    """e AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
+      |                  CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
+      |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
+      |dots AS (
+      |  SELECT a.vec_id AS q_id, b.vec_id AS c_id, sum(a.v * b.v) AS dot
+      |  FROM e a JOIN e b ON a.i = b.i AND a.vec_id < 10 AND b.vec_id <> a.vec_id
+      |  GROUP BY a.vec_id, b.vec_id)""".stripMargin
+
+  /** The incremental-dedup index `allidx`: every document's exact
+    * hash and MinHash signature, over [[shingleCte]] and `sigs`.
+    */
+  private lazy val incrIndexCtes: String =
+    s"""WITH $shingleCte,
+       |sigs AS MATERIALIZED ($sigSelect),
+       |allidx AS MATERIALIZED (
+       |  SELECT e.doc_id, md5(e.text) AS exact_h,
+       |    s.mh1, s.mh2, s.mh3, s.mh4, s.mh5, s.mh6, s.mh7, s.mh8
+       |  FROM documents e LEFT JOIN sigs s ON s.doc_id = e.doc_id)""".stripMargin
+
+  /** The curation cascade's token statistics over the token CTE `toks`
+    * and the stopword table `swl`: per-doc token counts `tc` and their
+    * totals `ta`, per-language stopword hits `lv`, the docs whose top
+    * language is English `win`, and the stopword hit totals `sh2`.
+    */
+  private lazy val curationTokenStats: String =
+    """tc AS MATERIALIZED (SELECT doc_id, t, count(*) AS c FROM toks GROUP BY doc_id, t),
+      |ta AS MATERIALIZED (SELECT doc_id, sum(c) AS n_tokens, max(c) AS top_token_n FROM tc GROUP BY doc_id),
+      |lv AS MATERIALIZED (SELECT tc.doc_id, swl.sl, sum(tc.c) AS lc FROM tc JOIN swl ON tc.t = swl.w GROUP BY tc.doc_id, swl.sl),
+      |win AS MATERIALIZED (SELECT doc_id FROM (SELECT doc_id, sl, row_number() OVER (PARTITION BY doc_id ORDER BY lc DESC, sl) AS rn FROM lv)
+      |        WHERE rn = 1 AND sl = 'en'),
+      |sh2 AS MATERIALIZED (SELECT doc_id, sum(lc) AS sw_hits FROM lv GROUP BY doc_id)""".stripMargin
 
   val all: Map[String, Q] = Map(
 
@@ -2141,12 +2186,7 @@ object LlmQueries {
         |  ('de','window'),('de','batch'),('zh','spark'),('zh','stream')),
         |toks AS MATERIALIZED (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS t
         |         FROM documents WHERE doc_id % 41 <> 0),
-        |tc AS MATERIALIZED (SELECT doc_id, t, count(*) AS c FROM toks GROUP BY doc_id, t),
-        |ta AS MATERIALIZED (SELECT doc_id, sum(c) AS n_tokens, max(c) AS top_token_n FROM tc GROUP BY doc_id),
-        |lv AS MATERIALIZED (SELECT tc.doc_id, swl.sl, sum(tc.c) AS lc FROM tc JOIN swl ON tc.t = swl.w GROUP BY tc.doc_id, swl.sl),
-        |win AS MATERIALIZED (SELECT doc_id FROM (SELECT doc_id, sl, row_number() OVER (PARTITION BY doc_id ORDER BY lc DESC, sl) AS rn FROM lv)
-        |        WHERE rn = 1 AND sl = 'en'),
-        |sh2 AS MATERIALIZED (SELECT doc_id, sum(lc) AS sw_hits FROM lv GROUP BY doc_id),
+        |$curationTokenStats,
         |${OracleSql.curationGate},
         |ded AS (SELECT min(doc_id) AS doc_id FROM gate GROUP BY md5(text)),
         |btoks AS (SELECT list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS ts
@@ -2179,18 +2219,13 @@ object LlmQueries {
     //      "where did my data go" admin report, same gate machinery,
     //      five aggregates unioned in stage order ----
     "q_llm_curation_funnel" -> Q(
-      """WITH swl(sl, w) AS (VALUES ('en','the'),('en','a'),('en','fast'),('en','slow'),
+      raw"""WITH swl(sl, w) AS (VALUES ('en','the'),('en','a'),('en','fast'),('en','slow'),
         |  ('es','data'),('es','row'),('fr','table'),('fr','join'),
         |  ('de','window'),('de','batch'),('zh','spark'),('zh','stream')),
         |corpus AS MATERIALIZED (SELECT doc_id, text FROM documents WHERE doc_id % 41 <> 0),
         |toks AS MATERIALIZED (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS t
         |         FROM corpus),
-        |tc AS MATERIALIZED (SELECT doc_id, t, count(*) AS c FROM toks GROUP BY doc_id, t),
-        |ta AS MATERIALIZED (SELECT doc_id, sum(c) AS n_tokens, max(c) AS top_token_n FROM tc GROUP BY doc_id),
-        |lv AS MATERIALIZED (SELECT tc.doc_id, swl.sl, sum(tc.c) AS lc FROM tc JOIN swl ON tc.t = swl.w GROUP BY tc.doc_id, swl.sl),
-        |win AS MATERIALIZED (SELECT doc_id FROM (SELECT doc_id, sl, row_number() OVER (PARTITION BY doc_id ORDER BY lc DESC, sl) AS rn FROM lv)
-        |        WHERE rn = 1 AND sl = 'en'),
-        |sh2 AS MATERIALIZED (SELECT doc_id, sum(lc) AS sw_hits FROM lv GROUP BY doc_id),
+        |$curationTokenStats,
         |flags AS MATERIALIZED (SELECT c.doc_id, c.text,
         |    CASE WHEN win.doc_id IS NOT NULL THEN 1 ELSE 0 END AS lang_ok,
         |    CASE WHEN coalesce(ta.n_tokens, 0) + 2 * coalesce(sh2.sw_hits, 0)
@@ -2636,7 +2671,7 @@ object LlmQueries {
     "q_llm_near_dup" -> Q(
       s"""WITH $shingleCte,
          |sigs AS ($sigSelect),
-         |$bandsPairsInterCte
+         |${bandsPairsInter("pairs")}
          |SELECT p.id1, p.id2,
          |  CAST(coalesce(i.n, 0) AS BIGINT) AS jaccard_n,
          |  CAST(s1.sz + s2.sz - coalesce(i.n, 0) AS BIGINT) AS jaccard_d,
@@ -2687,7 +2722,7 @@ object LlmQueries {
     "q_llm_split_leakage" -> Q(
       s"""WITH $shingleCte,
          |sigs AS ($sigSelect),
-         |$bandsPairsInterCte,
+         |${bandsPairsInter("pairs")},
          |dup AS (
          |  SELECT p.id1, p.id2,
          |    CAST(coalesce(i.n, 0) AS BIGINT) AS jaccard_n,
@@ -2867,12 +2902,7 @@ object LlmQueries {
     //      never re-reading corpus text. Within-batch dups fall to the
     //      keep-lowest-id rule. ----
     "q_llm_incr_dedup" -> Q(
-      s"""WITH $shingleCte,
-         |sigs AS MATERIALIZED ($sigSelect),
-         |allidx AS MATERIALIZED (
-         |  SELECT e.doc_id, md5(e.text) AS exact_h,
-         |    s.mh1, s.mh2, s.mh3, s.mh4, s.mh5, s.mh6, s.mh7, s.mh8
-         |  FROM documents e LEFT JOIN sigs s ON s.doc_id = e.doc_id),
+      s"""$incrIndexCtes,
          |idx AS (SELECT * FROM allidx WHERE doc_id % 10 <> 7),
          |bidx AS (SELECT * FROM allidx WHERE doc_id % 10 = 7),
          |exc AS (SELECT b.doc_id, min(i.doc_id) AS mec
@@ -2937,12 +2967,7 @@ object LlmQueries {
     //      Batch semantics ≠ one-shot: across batches only SURVIVORS
     //      kill; the oracle replays exactly that. ----
     "q_stream_incr_dedup" -> Q(
-      s"""WITH $shingleCte,
-         |sigs AS MATERIALIZED ($sigSelect),
-         |allidx AS MATERIALIZED (
-         |  SELECT e.doc_id, md5(e.text) AS exact_h,
-         |    s.mh1, s.mh2, s.mh3, s.mh4, s.mh5, s.mh6, s.mh7, s.mh8
-         |  FROM documents e LEFT JOIN sigs s ON s.doc_id = e.doc_id),
+      s"""$incrIndexCtes,
          |idx0 AS (SELECT * FROM allidx WHERE 1 = 0),
          |${incrRound(0)},
          |idx1 AS (SELECT * FROM surv0),
@@ -3268,10 +3293,7 @@ object LlmQueries {
 
     // ---- 16-bit SimHash ----
     "q_llm_simhash" -> Q(
-      """WITH toks AS (
-        |  SELECT DISTINCT doc_id, t FROM (
-        |    SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS t
-        |    FROM documents)),
+      raw"""WITH $docTokenSetCte,
         |bits AS (
         |  SELECT doc_id, i,
         |    sum(CASE WHEN (strpos('0123456789abcdef', substr(md5(t), i+1, 1)) - 1) % 2 = 0
@@ -3289,10 +3311,7 @@ object LlmQueries {
     //      pigeonhole chunk blocking (hamming<=3 forces a chunk match),
     //      bit_count(xor) verification — total recall, never all-pairs ----
     "q_llm_simhash_near_dup" -> Q(
-      """WITH toks AS (
-        |  SELECT DISTINCT doc_id, t FROM (
-        |    SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS t
-        |    FROM documents)),
+      raw"""WITH $docTokenSetCte,
         |bits AS (
         |  SELECT doc_id, i,
         |    sum(CASE WHEN (((strpos('0123456789abcdef', substr(md5(t), i // 4 + 1, 1)) - 1)
@@ -3324,13 +3343,7 @@ object LlmQueries {
 
     // ---- brute-force cosine top-k (queries vec_id<10, k=3) ----
     "q_ann_cosine_topk" -> Q(
-      """WITH e AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |                  CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-        |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
-        |dots AS (
-        |  SELECT a.vec_id AS q_id, b.vec_id AS c_id, sum(a.v * b.v) AS dot
-        |  FROM e a JOIN e b ON a.i = b.i AND a.vec_id < 10 AND b.vec_id <> a.vec_id
-        |  GROUP BY a.vec_id, b.vec_id),
+      raw"""WITH $queryDotsCtes,
         |scored AS (
         |  SELECT d.q_id, d.c_id, round(d.dot / (nq.nrm * nc.nrm), 4) AS cosine
         |  FROM dots d JOIN norms nq ON nq.vec_id = d.q_id JOIN norms nc ON nc.vec_id = d.c_id),
@@ -3387,13 +3400,7 @@ object LlmQueries {
     //      top-5 — the retrieval-eval companion to recall/nDCG when
     //      graded relevance is a class label, not an exact list ----
     "q_ann_mrr" -> Q(
-      """WITH e AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |                  CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-        |norms AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY vec_id),
-        |dots AS (
-        |  SELECT a.vec_id AS q_id, b.vec_id AS c_id, sum(a.v * b.v) AS dot
-        |  FROM e a JOIN e b ON a.i = b.i AND a.vec_id < 10 AND b.vec_id <> a.vec_id
-        |  GROUP BY a.vec_id, b.vec_id),
+      raw"""WITH $queryDotsCtes,
         |ranked AS (
         |  SELECT d.q_id, d.c_id,
         |         row_number() OVER (PARTITION BY d.q_id
@@ -3867,12 +3874,7 @@ object LlmQueries {
          |       CAST(coalesce(h.n_hits, 0) * 10000 // t.n_true AS BIGINT) AS recall_bp
          |FROM truth t LEFT JOIN hits h ON h.q_id = t.q_id
          |ORDER BY t.q_id""".stripMargin) { (s, dir) =>
-      val emb = tb(s, dir).embeddings
-      val queries = emb.filter(col("vec_id") < 10)
-      val index = Ivf.fit(emb, "vec_id", "embedding", k = 16, iters = 2)
-      val approx = Ivf.topK(emb, queries, index, "vec_id", "embedding",
-        k = 3, nprobe = 2)
-      val exact = Ann.cosineTopK(queries, emb, "vec_id", "embedding", 3)
+      val (approx, exact) = ivfVsExact(s, dir)
       Ann.recallAtK(approx, exact, 3).orderBy("q_id")
     },
 
@@ -4003,12 +4005,7 @@ object LlmQueries {
          |SELECT i.q_id, round(coalesce(d.dcg, 0) / i.idcg, 6) AS ndcg
          |FROM idcg i LEFT JOIN dcg d ON d.q_id = i.q_id
          |ORDER BY i.q_id""".stripMargin) { (s, dir) =>
-      val emb = tb(s, dir).embeddings
-      val queries = emb.filter(col("vec_id") < 10)
-      val index = Ivf.fit(emb, "vec_id", "embedding", k = 16, iters = 2)
-      val approx = Ivf.topK(emb, queries, index, "vec_id", "embedding",
-        k = 3, nprobe = 2)
-      val exact = Ann.cosineTopK(queries, emb, "vec_id", "embedding", 3)
+      val (approx, exact) = ivfVsExact(s, dir)
       Ann.ndcgAtK(approx, exact, 3).orderBy("q_id")
     },
 
@@ -4193,17 +4190,10 @@ object LlmQueries {
     //      nearest-neighbor resample, bit = pixel clears the mean
     //      (exact integers), packed as four 16-bit chunks ----
     "q_mm_ahash" -> Q(
-      """WITH h AS (SELECT doc_id, hex(encode(text)) AS hx,
+      s"""WITH h AS (SELECT doc_id, hex(encode(text)) AS hx,
         |                  octet_length(encode(text)) AS n
         |           FROM documents WHERE octet_length(encode(text)) > 0),
-        |b AS (SELECT doc_id, j,
-        |        (strpos('0123456789ABCDEF', substr(hx, CAST((j*n) // 64 AS INTEGER)*2+1, 1)) - 1) * 16
-        |      + (strpos('0123456789ABCDEF', substr(hx, CAST((j*n) // 64 AS INTEGER)*2+2, 1)) - 1) AS bv
-        |      FROM (SELECT doc_id, hx, n, unnest(range(0, 64)) AS j FROM h)),
-        |t AS (SELECT doc_id, sum(bv) AS total FROM b GROUP BY doc_id),
-        |ch AS (SELECT b.doc_id, CAST(b.j // 16 AS INTEGER) AS c,
-        |         CAST(sum(CASE WHEN b.bv * 64 > t.total THEN 1::BIGINT << CAST(b.j % 16 AS INTEGER) ELSE 0 END) AS BIGINT) AS v
-        |       FROM b JOIN t USING (doc_id) GROUP BY b.doc_id, b.j // 16)
+        |$aHashChunksCtes
         |SELECT doc_id,
         |  max(CASE WHEN c=0 THEN v END) AS ph0, max(CASE WHEN c=1 THEN v END) AS ph1,
         |  max(CASE WHEN c=2 THEN v END) AS ph2, max(CASE WHEN c=3 THEN v END) AS ph3

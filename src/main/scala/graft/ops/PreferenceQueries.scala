@@ -134,6 +134,18 @@ object PreferenceQueries {
       |    AS ece_contrib
       |FROM g, t ORDER BY bin""".stripMargin
 
+  /** The conversation oracles' sessionization: events `e` with their
+    * micros and content length, the previous event's micros `l`, and
+    * the 30-minute gap sessions `s(session_seq)`.
+    */
+  private lazy val conversationTurnsCtes: String =
+    """e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tus,
+      |                  length(coalesce(props, '')) AS len FROM events),
+      |l AS (SELECT *, lag(tus) OVER (PARTITION BY user_id ORDER BY tus, event_id) AS prev FROM e),
+      |s AS (SELECT *, sum(CASE WHEN prev IS NULL OR tus - prev > 1800000000 THEN 1 ELSE 0 END)
+      |        OVER (PARTITION BY user_id ORDER BY tus, event_id ROWS UNBOUNDED PRECEDING) AS session_seq
+      |      FROM l)""".stripMargin
+
   val all: Map[String, Q] = Map(
 
     // ---- chosen/rejected pair construction (Preference.pairs): one
@@ -346,12 +358,7 @@ object PreferenceQueries {
     //      rollup carries the alternation-violation count the
     //      instruction-data QA gate reads ----
     "q_conv_assemble" -> Q(
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tus,
-        |                  length(coalesce(props, '')) AS len FROM events),
-        |l AS (SELECT *, lag(tus) OVER (PARTITION BY user_id ORDER BY tus, event_id) AS prev FROM e),
-        |s AS (SELECT *, sum(CASE WHEN prev IS NULL OR tus - prev > 1800000000 THEN 1 ELSE 0 END)
-        |        OVER (PARTITION BY user_id ORDER BY tus, event_id ROWS UNBOUNDED PRECEDING) AS session_seq
-        |      FROM l),
+      s"""WITH $conversationTurnsCtes,
         |u AS (SELECT *, row_number() OVER (PARTITION BY user_id, session_seq ORDER BY tus, event_id) AS turn_idx,
         |        lag(event_type) OVER (PARTITION BY user_id, session_seq ORDER BY tus, event_id) AS prev_type
         |      FROM s)
@@ -377,12 +384,7 @@ object PreferenceQueries {
     //      tokens train — completion-only loss with purchase/signup
     //      standing in as the completion types ----
     "q_conv_sft_mask" -> Q(
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tus,
-        |                  length(coalesce(props, '')) AS len FROM events),
-        |l AS (SELECT *, lag(tus) OVER (PARTITION BY user_id ORDER BY tus, event_id) AS prev FROM e),
-        |s AS (SELECT *, sum(CASE WHEN prev IS NULL OR tus - prev > 1800000000 THEN 1 ELSE 0 END)
-        |        OVER (PARTITION BY user_id ORDER BY tus, event_id ROWS UNBOUNDED PRECEDING) AS session_seq
-        |      FROM l),
+      s"""WITH $conversationTurnsCtes,
         |u AS (SELECT *, row_number() OVER (PARTITION BY user_id, session_seq ORDER BY tus, event_id) AS turn_idx,
         |        coalesce(sum(len) OVER (PARTITION BY user_id, session_seq ORDER BY tus, event_id
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start_off

@@ -2,19 +2,18 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One registered engine query: the Spark implementation plus (when the
-  * semantics are ANSI-SQL-expressible) the DuckDB oracle equivalent the
-  * driver hash-compares against. Column names/aliases MUST match between
-  * the two (the compare sorts columns by name before hashing).
+/** One registered engine query: the Spark implementation plus the
+  * DuckDB oracle equivalent the correctness check hash-compares against.
+  * Column names/aliases MUST match between the two (the compare sorts
+  * columns by name before hashing).
   */
 final case class Q(
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object Q {
   def apply(oracle: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(fn, Some(oracle))
-  def sparkOnly(fn: (SparkSession, String) => DataFrame): Q = Q(fn, None)
+    Q(fn, oracle)
 }
 
 /** Scratch temp directories for fixture-building queries, with a REAL

@@ -31,10 +31,9 @@ object RelationalQueries {
 
   private def tb(s: SparkSession, dir: String) = Tables(s, dir)
 
-  // ---- the as-of faces: purchases matched to a user's views. Each
-  //      direction is one body and one DuckDB oracle shared by two
-  //      registered names; the q_evt_asof_native* names stay registered
-  //      so the query set and its oracles are unchanged. ----
+  // ---- the as-of faces: purchases matched to a user's views, one
+  //      body and one DuckDB oracle per direction (backward, forward,
+  //      nearest). ----
   private val asofPurchaseViewCtes =
     """WITH p AS (SELECT event_id AS purchase_id, user_id, CAST(ts AS TIMESTAMP) AS pts
       |           FROM events WHERE event_type = 'purchase'),
@@ -756,9 +755,6 @@ object RelationalQueries {
     //      DuckDB's native ASOF LEFT JOIN is the oracle. ----
     "q_evt_asof_join" -> Q(asofBackwardSql)(asofPurchaseViews(Backward)),
 
-    // ---- the same as-of join under a second registered name ----
-    "q_evt_asof_native" -> Q(asofBackwardSql)(asofPurchaseViews(Backward)),
-
     // ---- interval OVERLAP join (Temporal.intervalOverlapPairs):
     //      click-derived intervals × error-derived intervals per user,
     //      intervals from integer-exact event arithmetic; binned equi
@@ -831,13 +827,6 @@ object RelationalQueries {
     //      merge_asof direction='forward' face; DuckDB's ASOF accepts
     //      the mirrored inequality natively. ----
     "q_evt_asof_fwd" -> Q(asofForwardSql)(asofPurchaseViews(Forward)),
-
-    // ---- the FORWARD as-of under a second registered name ----
-    "q_evt_asof_native_fwd" -> Q(asofForwardSql)(asofPurchaseViews(Forward)),
-
-    // ---- the NEAREST as-of under a second registered name ----
-    "q_evt_asof_native_nearest" -> Q(asofNearestSql)(
-      asofPurchaseViews(Nearest, Some(asofNearestToleranceUs))),
 
     // ---- NEAREST as-of with tolerance (merge_asof direction='nearest',
     //      tolerance=2 days): closer of the backward/forward views, ties

@@ -3,13 +3,12 @@ package graft.ops
 import graft.core.Tables
 import graft.logs.AggregatedUpdates
 import graft.reports.Reports
-import graft.streaming.StreamIngest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Reports/monitoring module queries: the testdata tables are mapped to
   * control-plane shapes (orders → sync_file, events → batch logs) and
-  * fed through the REAL Reports/StreamIngest library functions, so the
+  * fed through the REAL Reports library functions, so the
   * DuckDB oracle validates the library code, not ad-hoc SQL.
   */
 object ReportQueries {
@@ -129,7 +128,7 @@ object ReportQueries {
         |  event_type, CAST(count(*) AS BIGINT) AS n
         |FROM events GROUP BY window_start, event_type
         |ORDER BY window_start, event_type""".stripMargin) { (s, dir) =>
-      StreamIngest.windowedCounts(tb(s, dir).events, "ts", "event_type")
+      Reports.windowedCounts(tb(s, dir).events, "ts", "event_type")
         .orderBy("window_start", "event_type")
     },
 

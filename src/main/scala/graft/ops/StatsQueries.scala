@@ -113,6 +113,21 @@ object StatsQueries {
         when(pmod(col("user_id"), lit(2)) === 0, "arm_a")
           .otherwise("arm_b"))
 
+  /** The documents' per-source token cells, folded by InfoStream in
+    * three doc_id % 3 batches into a fresh scratch state; its path.
+    */
+  private def tokenCellState(s: SparkSession, dir: String,
+                             prefix: String): String = {
+    val statePath = s"${Scratch.dir(prefix).getPath}/token_cells"
+    val docs = tb(s, dir).documents.select("doc_id", "source", "text")
+    (0 to 2).foreach { i =>
+      graft.streaming.InfoStream.applyBatch(
+        docs.filter(col("doc_id") % 3 === i), "source", "text",
+        statePath)
+    }
+    statePath
+  }
+
   val all: Map[String, Q] = Map(
 
     // ---- Mann–Whitney U (RankStats.mannWhitney): are English docs
@@ -578,14 +593,7 @@ object StatsQueries {
     //      through the diversity finisher — one state, two monitors ----
     "q_stream_token_diversity" -> Q(
       tokenDiversityOracle("source")) { (s, dir) =>
-      val tmp = Scratch.dir("graft_infodiv_")
-      val statePath = s"${tmp.getPath}/token_cells"
-      val docs = tb(s, dir).documents.select("doc_id", "source", "text")
-      (0 to 2).foreach { i =>
-        graft.streaming.InfoStream.applyBatch(
-          docs.filter(col("doc_id") % 3 === i), "source", "text",
-          statePath)
-      }
+      val statePath = tokenCellState(s, dir, "graft_infodiv_")
       graft.streaming.InfoStream.readDiversity(s, statePath)
         .orderBy("slice")
     },
@@ -654,14 +662,7 @@ object StatsQueries {
     //      maintained state serves both the JSD and diversity reads ----
     "q_stream_token_jsd" -> Q(
       tokenJsdOracle) { (s, dir) =>
-      val tmp = Scratch.dir("graft_infostream_")
-      val statePath = s"${tmp.getPath}/token_cells"
-      val docs = tb(s, dir).documents.select("doc_id", "source", "text")
-      (0 to 2).foreach { i =>
-        graft.streaming.InfoStream.applyBatch(
-          docs.filter(col("doc_id") % 3 === i), "source", "text",
-          statePath)
-      }
+      val statePath = tokenCellState(s, dir, "graft_infostream_")
       graft.streaming.InfoStream.readJsd(s, statePath).orderBy("slice")
     },
 
@@ -1585,14 +1586,7 @@ object StatsQueries {
     //      companion curve (a straight line = constant risk) ----
     "q_evt_nelson_aalen" -> Q(
       s"""WITH $survivalSubjectsCte,
-        |km0 AS (SELECT dur_h AS t, CAST(sum(ev) AS BIGINT) AS d,
-        |               CAST(count(*) - sum(ev) AS BIGINT) AS c,
-        |               CAST(count(*) AS BIGINT) AS n_at
-        |        FROM subj GROUP BY dur_h),
-        |km1 AS (SELECT t, d, c,
-        |          CAST((SELECT count(*) FROM subj)
-        |               - coalesce(sum(n_at) OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS n_risk
-        |        FROM km0)
+        |$kmRiskCte
         |SELECT t, n_risk, d, c,
         |  round(sum(CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE))
         |        OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) AS cum_hazard,
@@ -1724,19 +1718,25 @@ object StatsQueries {
       |           OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
       |  END AS survival""".stripMargin
 
-  /** The KM curve over `subj` as CTE bodies `km0`/`km1`/`km` —
-    * `km(t, d, c, n_risk, survival)` with survival UNROUNDED (each
-    * consumer rounds at its own output).
+  /** The risk sets over `subj` as CTE bodies `km0`/`km1`:
+    * `km1(t, d, c, n_risk)` per distinct duration.
     */
-  private def kmCurveCte: String =
-    s"""km0 AS (SELECT dur_h AS t, CAST(sum(ev) AS BIGINT) AS d,
+  private def kmRiskCte: String =
+    """km0 AS (SELECT dur_h AS t, CAST(sum(ev) AS BIGINT) AS d,
       |               CAST(count(*) - sum(ev) AS BIGINT) AS c,
       |               CAST(count(*) AS BIGINT) AS n_at
       |        FROM subj GROUP BY dur_h),
       |km1 AS (SELECT t, d, c,
       |          CAST((SELECT count(*) FROM subj)
       |               - coalesce(sum(n_at) OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS n_risk
-      |        FROM km0),
+      |        FROM km0)""".stripMargin
+
+  /** The KM curve over `subj` as CTE bodies `km0`/`km1`/`km` —
+    * `km(t, d, c, n_risk, survival)` with survival UNROUNDED (each
+    * consumer rounds at its own output).
+    */
+  private def kmCurveCte: String =
+    s"""$kmRiskCte,
       |km AS (SELECT t, d, c, n_risk,
       |$productLimitSurvival
       |FROM km1)""".stripMargin

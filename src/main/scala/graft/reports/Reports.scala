@@ -83,6 +83,20 @@ object Reports {
         unix_micros(col("max_end")) - unix_micros(col("min_start")))
       .orderBy("table_name")
 
+  /** Event-time windowed monitoring aggregate with a watermark: rows
+    * per (window, key) — the stg_monitoring group-counts over event
+    * time. Late rows beyond the watermark are dropped, bounding state
+    * when `df` streams.
+    */
+  def windowedCounts(df: DataFrame, tsCol: String, keyCol: String,
+                     window: String = "1 hour",
+                     watermark: String = "2 hours"): DataFrame =
+    df.withWatermark(tsCol, watermark)
+      .groupBy(org.apache.spark.sql.functions.window(col(tsCol), window)
+        .as("w"), col(keyCol))
+      .agg(count(lit(1)).as("n"))
+      .select(col("w.start").as("window_start"), col(keyCol), col("n"))
+
   /** O2 + F12: table sizes, biggest first (table_sizes.sql:1-11) —
     * data-file bytes per staging table dir, partition dirs included,
     * with pretty-printed size ([[graft.core.Fs.dataFileStats]]: checksums,

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Checked
 import graft.llm.RankStats
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -37,12 +38,10 @@ object ConformalStream {
                  batchId: Long = -1L, queryId: String = ""): Unit =
     ReplayGuard.fold(batch.sparkSession, statePath, batchId, queryId) { prior =>
       val cells = batch.select(
-        when(col(groupCol).isNull,
-          raise_error(lit(s"ConformalStream: NULL group in $groupCol")))
-          .otherwise(col(groupCol)).cast("string").as("_g"),
-        when(col(valueCol).isNull,
-          raise_error(lit(s"ConformalStream: NULL value in $valueCol")))
-          .otherwise(col(valueCol)).cast("long").as("_v"))
+        Checked.label(col(groupCol), "ConformalStream",
+          s"group in $groupCol").as("_g"),
+        Checked.long(col(valueCol), "ConformalStream",
+          s"value in $valueCol").as("_v"))
         .groupBy("_g", "_v").agg(count(lit(1)).as("_n"))
       prior.fold(cells)(_.unionByName(cells)
         .groupBy("_g", "_v").agg(sum(col("_n")).as("_n")))

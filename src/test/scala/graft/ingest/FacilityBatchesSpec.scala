@@ -161,4 +161,36 @@ class FacilityBatchesSpec extends SparkSpec {
     val next = FacilityBatches.claim(after).collect().map(_.getString(0))
     assert(next.toSeq === Seq("FAC2"))
   }
+
+  test("runClaimed: a failing facility is acked FAILED with its error text, and the loop goes on") {
+    val root = java.nio.file.Files.createTempDirectory("graft_fbfail_").toFile
+    val store = LogStore(spark, new java.io.File(root, "logs").getPath)
+    store.append("sync_file", Seq("FACA", "FACB").zipWithIndex.map { case (fac, i) =>
+      val enc = s"patient_visit_0_2025010100000$i.json"
+      (i.toLong + 1, fac, enc, graft.model.FileName.decryptedName(enc),
+        SyncState.Ready, ts("2025-02-01 00:00:00"), ts("2025-02-01 10:00:00"),
+        null.asInstanceOf[Timestamp], null.asInstanceOf[Timestamp],
+        null.asInstanceOf[String], null.asInstanceOf[String],
+        null.asInstanceOf[String], null.asInstanceOf[Integer],
+        null.asInstanceOf[String])
+    }.toDF("id", "facility_id", "file_name", "decrypted_file_name", "processed",
+      "create_date", "modified_date", "ingest_start_time", "ingest_end_time",
+      "ingest_file_name", "ingest_table_name", "ingest_status_check",
+      "json_rec_count", "ingest_error_message"))
+    // an unreadable ingestion log makes every claimed run throw
+    val log = new java.io.File(root, "logs/file_ingestion_log"); log.mkdirs()
+    java.nio.file.Files.writeString(
+      new java.io.File(log, "part-00000.parquet").toPath, "not parquet")
+    val cfg = Pipeline.Config(parentDir = new java.io.File(root, "temp").getPath,
+      warehouseDir = new java.io.File(root, "warehouse").getPath, logStore = store)
+
+    val outcomes = FacilityBatches.runClaimed(spark, cfg)
+    assert(outcomes.map(_.facilityId).sorted === Seq("FACA", "FACB"))
+    assert(outcomes.forall(o => !o.ok && o.result.isEmpty && o.error.isDefined))
+    val acked = store.latest("batch_facility_processing", Seq("facility_id"))
+      .collect().map(r => r.getAs[String]("facility_id") ->
+        ((r.getAs[String]("status"), r.getAs[String]("error_message"))))
+      .toMap
+    assert(acked === outcomes.map(o => o.facilityId -> (("FAILED", o.error.get))).toMap)
+  }
 }

@@ -458,8 +458,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("job budget: one two-entity micro-batch that compacts both logs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.graftbridge.ListenerBridge
     val (cfg0, parent) = setup()
     val cfg = cfg0.copy(logCompactMinFiles = 1)
     writeFile(new java.io.File(parent, "FAC1"),
@@ -472,20 +470,12 @@ class PipelineSpec extends SparkSpec {
       syncRow(1L, "FAC1", "biometric_0_20250103141949.json"),
       syncRow(2L, "FAC1", "hiv_enrollment_0_20250104000000.json")))
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    val sc = spark.sparkContext
-    ListenerBridge.drain(sc)
-    sc.addSparkListener(counter)
-    val res =
-      try { val r = Pipeline.run(spark, cfg); ListenerBridge.drain(sc); r }
-      finally sc.removeSparkListener(counter)
+    val (res, sites) = jobCallSites(Pipeline.run(spark, cfg))
     assert(res.filesIngested === 2)
     assert(cfg.logStore.history("sync_file").count() === 2, "sync_file was compacted")
-    assert(jobs.get <= PipelineJobBudget,
-      s"${jobs.get} Spark jobs for one micro-batch (budget $PipelineJobBudget)")
+    assert(sites.size <= PipelineJobBudget,
+      s"${sites.size} Spark jobs for one micro-batch (budget $PipelineJobBudget), " +
+        "by call site:\n" + sites.mkString("\n"))
   }
 
   test("worklist honors prefix split between main and DSD loaders (P5)") {

@@ -118,15 +118,25 @@ class StagesSpec extends SparkSpec {
   }
 
   test("F11: provenance stamping adds the four literal columns") {
+    val fac = new java.io.File(
+      java.nio.file.Files.createTempDirectory("graft_f11_").toFile, "FAC1")
+    fac.mkdirs()
+    val name = "patient_person_0_20250103141949_decrypted.json"
+    java.nio.file.Files.writeString(new java.io.File(fac, name).toPath,
+      """[{"v": "r1"}, {"v": "r2"}]""")
     val ts = java.sql.Timestamp.valueOf("2025-01-03 14:19:49")
-    val out = Stages.stampProvenance(Seq(("r1")).toDF("v"),
-      "20250103141949", ts, "patient_person_0_20250103141949_decrypted.json", "FAC1")
-    val r = out.collect().head
+    val out = Stages.stampProvenanceFromPath(
+      spark.read.option("multiLine", "true").json(fac.getPath), ts)
     assert(out.columns.toSeq === Seq("v", "stg_batch_id", "stg_load_time",
       "stg_file_name", "stg_datim_id"))
-    assert(r.getAs[String]("stg_batch_id") === "20250103141949")
-    assert(r.getAs[java.sql.Timestamp]("stg_load_time") === ts)
-    assert(r.getAs[String]("stg_datim_id") === "FAC1")
+    val rows = out.collect()
+    assert(rows.length === 2)
+    rows.foreach { r =>
+      assert(r.getAs[String]("stg_batch_id") === "20250103141949")
+      assert(r.getAs[java.sql.Timestamp]("stg_load_time") === ts)
+      assert(r.getAs[String]("stg_file_name") === name)
+      assert(r.getAs[String]("stg_datim_id") === "FAC1")
+    }
   }
 
   test("DSD nested payloads serialize to JSON strings, scalars untouched") {
@@ -153,5 +163,11 @@ class StagesSpec extends SparkSpec {
   test("F10: log id format") {
     val at = java.time.LocalDateTime.of(2025, 1, 3, 14, 19, 49)
     assert(Stages.logId("IPID", at) === "IPID_20250103_14_19")
+  }
+
+  test("errorText falls back to the class name when there is no message") {
+    assert(Stages.errorText(new RuntimeException("boom")) === "boom")
+    assert(Stages.errorText(new NullPointerException()) ===
+      "java.lang.NullPointerException")
   }
 }

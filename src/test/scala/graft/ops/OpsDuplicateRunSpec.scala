@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * style): every oracle fragment, fixture builder and closure step
   * under graft/ops is stated once — a private `lazy val` or `def` of
   * its file, or an [[OracleSql]] member when its users sit in different
-  * files — and every algorithm of the main tree has one home. A run of
-  * 8 or more consecutive code lines that repeats an earlier run fails
-  * here, naming both places. Lines compare after stripping leading
+  * files — and every algorithm, input guard and closure step of the
+  * main tree has one home. A run of 6 or more consecutive code lines
+  * that repeats an earlier run fails here, naming both places. Lines compare after stripping leading
   * whitespace; blank lines and comment lines (a line comment, a
   * block-comment opener or a `*` continuation) are skipped; a run must
   * also hold at least 200 characters, so stacks of short closers do
@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class OpsDuplicateRunSpec extends AnyFunSuite {
 
-  private val MinLines = 8
+  private val MinLines = 6
   private val MinChars = 200
 
   private final case class Line(file: String, no: Int, text: String)
@@ -30,7 +30,7 @@ class OpsDuplicateRunSpec extends AnyFunSuite {
     }
   }
 
-  /** Every maximal run of lines whose 8-line windows each occurred
+  /** Every maximal run of lines whose MinLines-line windows each occurred
     * earlier (in the given file order), with the place of its first
     * window's earlier occurrence.
     */
@@ -81,12 +81,12 @@ class OpsDuplicateRunSpec extends AnyFunSuite {
         s"state each once ($hint):\n" + report.mkString("\n"))
   }
 
-  test("no run of 8+ code lines repeats under graft/ops") {
+  test("no run of 6+ code lines repeats under graft/ops") {
     assertNoRepeats("src/main/scala/graft/ops",
       "a private lazy val/def, or OracleSql across files")
   }
 
-  test("no run of 8+ code lines repeats anywhere under src/main/scala") {
+  test("no run of 6+ code lines repeats anywhere under src/main/scala") {
     assertNoRepeats("src/main/scala",
       "one shared def beside its callers")
   }

@@ -2,6 +2,7 @@ package graft.reports
 
 import graft.SparkSpec
 import java.sql.Timestamp
+import org.apache.spark.sql.functions.col
 
 class ReportsSpec extends SparkSpec {
   import spark.implicits._
@@ -125,5 +126,22 @@ class ReportsSpec extends SparkSpec {
       Set("stg_a", "stg_a_bad_dates"))
     assert(graft.maintenance.Maintenance.quarantineTables(wh.getPath) ===
       Seq("stg_a_bad_dates"))
+  }
+
+  test("windowed counts bucket by event-time hour") {
+    val df = Seq(
+      ("2024-01-01 10:05:00", "click"),
+      ("2024-01-01 10:55:00", "click"),
+      ("2024-01-01 11:05:00", "click"),
+      ("2024-01-01 10:20:00", "view")
+    ).toDF("raw", "event_type")
+      .select(col("raw").cast("timestamp").as("ts"), col("event_type"))
+    val out = Reports.windowedCounts(df, "ts", "event_type")
+      .orderBy("window_start", "event_type").collect()
+    assert(out.map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2))).toSeq
+      === Seq(
+      ("2024-01-01 10:00:00.0", "click", 2L),
+      ("2024-01-01 10:00:00.0", "view", 1L),
+      ("2024-01-01 11:00:00.0", "click", 1L)))
   }
 }
